@@ -86,9 +86,12 @@ def _ensure_session_conf(spark: SparkSession) -> None:
     runtime-settable SQLConfs. Applied once per session (each conf.set
     is a Py4J round trip; table() runs on every query build).
     """
-    if spark.__dict__.get("_bdp_conf_done"):
+    from .sources.state import session_state
+
+    sess = session_state(spark)
+    if sess.conf_done:
         return
-    spark.__dict__["_bdp_conf_done"] = True
+    sess.conf_done = True
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -118,9 +121,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     _ensure_session_conf(spark)
-    cache: dict[tuple[str, str], DataFrame] = spark.__dict__.setdefault(
-        "_bdp_table_cache", {}
-    )
+    from .sources.state import session_state
+
+    cache = session_state(spark).tables
     cached = cache.get((sf_dir, name))
     if cached is not None:
         return cached
@@ -166,6 +169,8 @@ def bump_mutation_epoch(spark: SparkSession, sf_dir: str, *tables: str) -> None:
     only when its epoch moved, so the steady state pays zero catalog
     traffic per statement (round-9 review finding). Rolled back with
     the rest of the serving state by WarehouseTxn."""
-    ep: dict = spark.__dict__.setdefault("_bdp_mutation_epoch", {})
+    from .sources.state import warehouse
+
+    ep = warehouse(spark, sf_dir).mutation_epoch
     for t in tables:
-        ep[(sf_dir, t)] = ep.get((sf_dir, t), 0) + 1
+        ep[t] = ep.get(t, 0) + 1

@@ -190,22 +190,26 @@ class Engine:
         Engines sharing one session (getOrCreate reuses it) would
         otherwise silently serve each other's fixture data once the
         second one re-registered the same view names."""
-        if self.spark.__dict__.get("_bdp_views_for") != self.sf_dir:
+        from .sources.state import session_state
+
+        sess = session_state(self.spark)
+        if sess.views_for != self.sf_dir:
             register_views(self.spark, self.sf_dir)
-            self.spark.__dict__["_bdp_views_for"] = self.sf_dir
+            sess.views_for = self.sf_dir
+            # every fact view is the fixture again: no earlier
+            # registration is current, whatever its epoch record says
+            sess.fact_view_epoch.clear()
             # the engine now owns the maintained fact-view names (the
             # ownership ledger _ensure_current_views consults — a user
             # createOrReplaceTempView after this point takes the name
             # over and is never clobbered, same contract as dims)
-            ours: dict = self.spark.__dict__.setdefault("_bdp_fact_views", {})
-            ids: dict = self.spark.__dict__.setdefault("_bdp_fact_view_ids", {})
             for name in ("lineitem", "orders", "documents", "events"):
-                ours[name] = self.sf_dir
+                sess.fact_views[name] = self.sf_dir
                 # plan identity of OUR registration (canonicalized, so
                 # stable across lookups) — the takeover test compares
                 # against this, not column shape, so a user view with
                 # the fixture's exact columns is still detected
-                ids[name] = self.spark.table(name).semanticHash()
+                sess.fact_view_ids[name] = self.spark.table(name).semanticHash()
         # S22: snapshot reads. ``FOR SYSTEM_VERSION AS OF n`` (the
         # Delta/Iceberg spelling) pins the WHOLE statement to one
         # committed warehouse version — this engine's snapshots are
@@ -307,16 +311,16 @@ class Engine:
         — sql()'s 'routing can only change the plan, never the answer'
         invariant, extended across ingest.
 
-        Two gates (round-7 ADVICE): (1) re-pointing keys on the INGEST
-        ledger (_bdp_ingested, written by refresh_warehouse when a
+        Two gates (round-7 ADVICE): (1) re-pointing keys on the
+        warehouse's INGESTED set (written by refresh_warehouse when a
         delta is applied), not on mere layout deployment — a session
         that only ran routed queries keeps its routed=False A/B
         baselines on the fixture parquet; (2) the fact-view names have
-        the same ownership ledger as dims (_bdp_fact_views): a user's
+        the same ownership ledger as dims (SessionState.fact_views): a user's
         own temp view under one of these names always wins. Takeover is
         detected by PLAN IDENTITY (round-8 ADVICE item 3): the engine
         records the semanticHash of every view it registers
-        (_bdp_fact_view_ids), and a view whose current plan no longer
+        (SessionState.fact_view_ids), and a view whose current plan no longer
         matches — even one with the fixture's exact column set, e.g. a
         filtered copy — is ceded, never clobbered. Canonicalized plan
         hashes are stable across lookups, so an untouched engine view
@@ -325,11 +329,13 @@ class Engine:
         from .plans.routing import current_lineitem, current_orders
         from .schemas import FIXTURE_SCHEMAS
 
-        sd = self.spark.__dict__
-        ingested: set = sd.get("_bdp_ingested", set())
-        if not ingested:
+        from .sources.state import session_state, warehouse
+
+        sess = session_state(self.spark)
+        ws = warehouse(self.spark, self.sf_dir)
+        if not ws.ingested:
             return
-        ours: dict = sd.setdefault("_bdp_fact_views", {})
+        ours = sess.fact_views
         li_cols = tuple(FIXTURE_SCHEMAS["lineitem"].fieldNames())
         sources = {
             # lineitem re-projected to the FIXTURE schema: the bucketed
@@ -342,11 +348,10 @@ class Engine:
             "documents": lambda: current_documents(self.spark, self.sf_dir),
             "events": lambda: current_events(self.spark, self.sf_dir),
         }
-        ids: dict = sd.setdefault("_bdp_fact_view_ids", {})
-        epochs: dict = sd.get("_bdp_mutation_epoch", {})
-        seen: dict = sd.setdefault("_bdp_fact_view_epoch", {})
+        ids = sess.fact_view_ids
+        seen = sess.fact_view_epoch
         for name, open_current in sources.items():
-            if (self.sf_dir, name) not in ingested:
+            if name not in ws.ingested:
                 continue
             # epoch gate (round-9 review finding): re-register — and
             # pay the plan-identity check — only when a mutation
@@ -355,7 +360,7 @@ class Engine:
             # traffic; if a user took the name over meanwhile, we were
             # not going to touch it anyway, and the next mutation's
             # check cedes it properly.
-            cur_epoch = epochs.get((self.sf_dir, name), 0)
+            cur_epoch = ws.mutation_epoch.get(name, 0)
             if name in ours and seen.get(name) == (self.sf_dir, cur_epoch):
                 continue
             if self.spark.catalog.tableExists(name):
@@ -415,7 +420,9 @@ class Engine:
         # registration (the engine never re-asserts a name that
         # already resolves for this fixture). Dim REFRESHES keep
         # engine-owned views current (sources/corpus_cubes.py).
-        ours: dict = self.spark.__dict__.setdefault("_bdp_dim_views", {})
+        from .sources.state import session_state
+
+        ours = session_state(self.spark).dim_views
         for name, d in CORPUS_DIMS.items():
             if referenced is not None:
                 if name not in referenced:

@@ -859,7 +859,9 @@ def connected_components(
       each round's plan roots at the previous round's cached frame
       and the mid-round checkpoint, both constant-depth. The
       superseded round's cache is dropped once the next round's
-      checkpoint no longer depends on it.
+      checkpoint no longer depends on it, and the final round's once
+      the returned labels are checkpointed off it — a call leaves no
+      cached frame behind.
     """
     # Checkpoint edges BEFORE the reversal union: union branches don't
     # share work, so materializing the union directly would run the
@@ -917,7 +919,10 @@ def connected_components(
         labels = nl.select("doc_id", "lbl")
         if changed == 0:
             break
-    return labels.select("doc_id", F.col("lbl").alias("cluster_id"))
+    out = iter_checkpoint(labels.select("doc_id", F.col("lbl").alias("cluster_id")))
+    if prev_cached is not None:
+        prev_cached.unpersist()
+    return out
 
 
 _Q17_ORACLE = f"""

@@ -130,15 +130,17 @@ def r43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle's (SELECT n_nodes FROM n) scalar subquery.
     n_nodes = deg.count()
 
+    # an empty edge set has no node to rank: no iteration runs and the
+    # tail below yields an empty frame of the same columns
     ranks = iter_checkpoint(
         deg.select(
-            F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
+            F.col("src").alias("node"), F.lit(1.0 / max(n_nodes, 1)).alias("r")
         )
     )
     # (src, dst, outdeg), reused every iteration — checkpointed once
     # (round 13): the edges⋈deg join used to re-run per round.
     ed = iter_checkpoint(edges.join(deg, "src"))
-    for _ in range(_PR_ITERS):
+    for _ in range(_PR_ITERS if n_nodes else 0):
         contrib = ed.join(ranks, ed.src == ranks.node).select(
             "dst",
             # round_fp == DuckDB round(v,12) by construction (scaled

@@ -221,9 +221,9 @@ def current_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.retention import apply_tombstones
 
     from ..sources.snapshots import pinned_parquet
+    from ..sources.state import warehouse
 
-    memo = spark.__dict__.get("_bdp_docstore_memo", {})
-    path = memo.get(sf_dir)
+    path = warehouse(spark, sf_dir).docstore
     if path:
         # S22: inside a snapshot read, scan only the pinned commit's
         # files (document batches APPEND into this directory)
@@ -247,9 +247,9 @@ def current_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.retention import apply_event_watermark, event_watermark
 
     from ..sources.snapshots import pinned_parquet
+    from ..sources.state import warehouse
 
-    memo = spark.__dict__.get("_bdp_dated_events_memo", {})
-    path = memo.get(sf_dir)
+    path = warehouse(spark, sf_dir).dated_events
     if path:
         from ..sources.snapshots import layout_parquet
 

@@ -90,9 +90,9 @@ def current_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.retention import apply_tombstones
 
     from ..sources.snapshots import pinned_table
+    from ..sources.state import warehouse
 
-    memo = spark.__dict__.get("_bdp_bucketed_memo", {})
-    names = memo.get((sf_dir, _N_BUCKETS))
+    names = warehouse(spark, sf_dir).bucketed.get(_N_BUCKETS)
     if names:
         # inside a snapshot read, scan only the pinned commit's files
         # (the bucketed fact APPENDS batches into one directory)
@@ -109,9 +109,9 @@ def current_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.retention import apply_tombstones
 
     from ..sources.snapshots import pinned_table
+    from ..sources.state import warehouse
 
-    memo = spark.__dict__.get("_bdp_bucketed_memo", {})
-    names = memo.get((sf_dir, _N_BUCKETS))
+    names = warehouse(spark, sf_dir).bucketed.get(_N_BUCKETS)
     if names:
         df = pinned_table(spark, sf_dir, names[1]) or spark.table(names[1])
     else:

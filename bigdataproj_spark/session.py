@@ -69,8 +69,8 @@ def run_parallel(*thunks) -> list:
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         # .exception() BLOCKS until the thunk finishes — all of them

@@ -52,6 +52,7 @@ from ..catalog import pid_scratch, scratch_tag, table
 from ..functions import cents, isum_expr
 from ..registry import query
 from ..session import run_parallel
+from .state import deploy_name, warehouse
 
 _N_BUCKETS = 32
 _WH_ROOT = os.path.join(tempfile.gettempdir(), "bigdataproj_bucketed_wh")
@@ -159,7 +160,6 @@ def append_bucketed_orders(
     against the stored keys detects it); only a batch carrying an
     UPDATE pays the anti-join rewrite, published as a new bucketed
     VERSION with the same atomic memo swing the denorm refresh uses."""
-    memo_key = (sf_dir, _N_BUCKETS)
     _, od_name = bucketed_fact_tables(spark, sf_dir)
     stored = spark.table(od_name)
     delta_keys = delta_orders.select("o_orderkey")
@@ -192,14 +192,11 @@ def append_bucketed_orders(
     # versions key on the BASE table name (od_name is already a
     # versioned name after a prior upsert)
     base_name = f"orders_bkt_{tag}_{_N_BUCKETS}"
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(base_name, 0) + 1
-    versions[base_name] = v
-    new_name = f"{base_name}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_name = ws.publish(base_name)
     write_bucketed(merged, new_name, os.path.join(wh, new_name), "o_orderkey")
-    memo: dict = spark.__dict__["_bdp_bucketed_memo"]
-    li_name, _ = memo[memo_key]
-    memo[memo_key] = (li_name, new_name)
+    li_name, _ = ws.bucketed[_N_BUCKETS]
+    ws.bucketed[_N_BUCKETS] = (li_name, new_name)
     return new_name
 
 
@@ -288,25 +285,12 @@ def bucketed_fact_tables(
     cluster deployment runs the layout write once as a deploy step
     into the shared warehouse, not per session.
     """
+    ws = warehouse(spark, sf_dir)
+    if n_buckets in ws.bucketed:
+        return ws.bucketed[n_buckets]
     tag, wh = _layout_paths(sf_dir)
-    li_name = f"lineitem_bkt_{tag}_{n_buckets}"
-    od_name = f"orders_bkt_{tag}_{n_buckets}"
-    memo: dict[tuple[str, int], tuple[str, str]] = spark.__dict__.setdefault(
-        "_bdp_bucketed_memo", {}
-    )
-    key = (sf_dir, n_buckets)
-    if key in memo:
-        return memo[key]
-    if spark.__dict__.get("_bdp_as_of_active"):
-        # S22: a lazy deploy INSIDE a snapshot read must never write
-        # the live table names — saveAsTable overwrite would destroy
-        # the live layout's appended batches (sources/zorder.py has
-        # the probe note). The twin names land in the SWAPPED memo
-        # (discarded at exit; files are VACUUM orphans); content is
-        # epoch-correct because a missing memo means these facts were
-        # never ingested by that epoch.
-        li_name += "_asof"
-        od_name += "_asof"
+    li_name = deploy_name(spark, sf_dir, f"lineitem_bkt_{tag}_{n_buckets}")
+    od_name = deploy_name(spark, sf_dir, f"orders_bkt_{tag}_{n_buckets}")
     # The two deploy writes read disjoint immutable fixtures and write
     # disjoint tables — overlap them (round 13, guide §2.6): the orders
     # write's tasks back-fill executors the bigger lineitem write's
@@ -327,8 +311,8 @@ def bucketed_fact_tables(
             n_buckets,
         ),
     )
-    memo[key] = (li_name, od_name)
-    return memo[key]
+    ws.bucketed[n_buckets] = (li_name, od_name)
+    return li_name, od_name
 
 
 # Dimension attributes the denormalized orders table stores: the full
@@ -394,10 +378,9 @@ def order_revenue_projection(spark: SparkSession, sf_dir: str) -> tuple[str, str
     tag, wh = _layout_paths(sf_dir)
     roll_name = f"lineitem_rollup_{tag}_{_N_BUCKETS}"
     den_name = f"orders_denorm_{tag}_{_N_BUCKETS}"
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    key = ("order_revenue", sf_dir)
-    if key in memo:
-        return memo[key]
+    ws = warehouse(spark, sf_dir)
+    if "order_revenue" in ws.projections:
+        return ws.projections["order_revenue"]
     from .retention import apply_tombstones
 
     li_name, od_name = bucketed_fact_tables(spark, sf_dir)
@@ -423,8 +406,8 @@ def order_revenue_projection(spark: SparkSession, sf_dir: str) -> tuple[str, str
             denorm, den_name, os.path.join(wh, den_name), "o_orderkey"
         ),
     )
-    memo[key] = (roll_name, den_name)
-    return memo[key]
+    ws.projections["order_revenue"] = (roll_name, den_name)
+    return roll_name, den_name
 
 
 def refresh_order_revenue_rollup(
@@ -497,13 +480,10 @@ def refresh_order_revenue_rollup(
             + F.coalesce(F.col("d.n_items"), F.lit(0))
         ).alias("n_items"),
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(roll_name, 0) + 1
-    versions[roll_name] = v
-    new_name = f"{roll_name}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_name = ws.publish(roll_name)
     write_bucketed(merged, new_name, os.path.join(wh, new_name), "l_orderkey")
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    memo[("order_revenue", sf_dir)] = (new_name, den_name)
+    ws.projections["order_revenue"] = (new_name, den_name)
     return new_name, den_name
 
 
@@ -561,13 +541,10 @@ def refresh_orders_denorm(
         delta_orders.select("o_orderkey").distinct(), "o_orderkey", "left_anti"
     )
     merged = kept.unionByName(delta_denorm)
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(den_name, 0) + 1
-    versions[den_name] = v
-    new_name = f"{den_name}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_name = ws.publish(den_name)
     write_bucketed(merged, new_name, os.path.join(wh, new_name), "o_orderkey")
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    memo[("order_revenue", sf_dir)] = (roll_name, new_name)
+    ws.projections["order_revenue"] = (roll_name, new_name)
     return roll_name, new_name
 
 
@@ -586,10 +563,9 @@ def pricing_cube_table(spark: SparkSession, sf_dir: str) -> str:
     """
     tag, wh = _layout_paths(sf_dir)
     cube_name = f"lineitem_pricing_cube_{tag}"
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    key = ("pricing_cube", sf_dir)
-    if key in memo:
-        return memo[key]
+    ws = warehouse(spark, sf_dir)
+    if "pricing_cube" in ws.projections:
+        return ws.projections["pricing_cube"]
     from .retention import apply_tombstones
 
     li_name, _ = bucketed_fact_tables(spark, sf_dir)
@@ -602,7 +578,7 @@ def pricing_cube_table(spark: SparkSession, sf_dir: str) -> str:
     )
     path = os.path.join(wh, cube_name)
     cube.write.mode("overwrite").parquet(path)
-    memo[key] = path
+    ws.projections["pricing_cube"] = path
     return path
 
 
@@ -682,10 +658,9 @@ def star_date_cube_table(spark: SparkSession, sf_dir: str) -> str:
     exchange-free spine join plus one bounded aggregation."""
     tag, wh = _layout_paths(sf_dir)
     cube_name = f"star_date_cube_{tag}"
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    key = ("star_date_cube", sf_dir)
-    if key in memo:
-        return memo[key]
+    ws = warehouse(spark, sf_dir)
+    if "star_date_cube" in ws.projections:
+        return ws.projections["star_date_cube"]
     from .retention import apply_tombstones
 
     li_name, _ = bucketed_fact_tables(spark, sf_dir)
@@ -705,7 +680,7 @@ def star_date_cube_table(spark: SparkSession, sf_dir: str) -> str:
     )
     path = os.path.join(wh, cube_name)
     cube.write.mode("overwrite").parquet(path)
-    memo[key] = path
+    ws.projections["star_date_cube"] = path
     return path
 
 
@@ -734,10 +709,9 @@ def segment_cube_table(spark: SparkSession, sf_dir: str) -> str:
     plus one bounded aggregation."""
     tag, wh = _layout_paths(sf_dir)
     cube_name = f"segment_cube_{tag}"
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    key = ("segment_cube", sf_dir)
-    if key in memo:
-        return memo[key]
+    ws = warehouse(spark, sf_dir)
+    if "segment_cube" in ws.projections:
+        return ws.projections["segment_cube"]
     from .retention import apply_tombstones
 
     li_name, _ = bucketed_fact_tables(spark, sf_dir)
@@ -761,7 +735,7 @@ def segment_cube_table(spark: SparkSession, sf_dir: str) -> str:
     )
     path = os.path.join(wh, cube_name)
     cube.write.mode("overwrite").parquet(path)
-    memo[key] = path
+    ws.projections["segment_cube"] = path
     return path
 
 
@@ -799,13 +773,10 @@ def refresh_segment_cube(
     merged = _merge_cube_frames(
         versioned_parquet(spark, stored_path), delta_cube, keys
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(stored_path)
     merged.write.mode("overwrite").parquet(new_path)
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    memo[("segment_cube", sf_dir)] = new_path
+    ws.projections["segment_cube"] = new_path
     return new_path
 
 
@@ -893,13 +864,10 @@ def refresh_pricing_cube(
     merged = _merge_cube_frames(
         versioned_parquet(spark, stored_path), delta_cube, keys
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(stored_path)
     merged.write.mode("overwrite").parquet(new_path)
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    memo[("pricing_cube", sf_dir)] = new_path
+    ws.projections["pricing_cube"] = new_path
     return new_path
 
 
@@ -945,13 +913,10 @@ def refresh_star_date_cube(
         versioned_parquet(spark, stored_path), delta_cube, keys,
         _STAR_SKETCH_COLS,
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(stored_path)
     merged.write.mode("overwrite").parquet(new_path)
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    memo[("star_date_cube", sf_dir)] = new_path
+    ws.projections["star_date_cube"] = new_path
     return new_path
 
 

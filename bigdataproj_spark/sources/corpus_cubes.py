@@ -47,6 +47,7 @@ from ..catalog import table
 from ..functions import cents
 from ..operators.text import tokens
 from .bucketed import _layout_paths, merge_partial_frames  # noqa: F401 (re-exported)
+from .state import session_state, warehouse
 
 # ---------------------------------------------------------------------------
 # Stored-partial column contracts (one place per cube; deploy and
@@ -167,13 +168,10 @@ def refresh_sources_dim(
     if not fresh.take(1):
         return stored_path
     merged = stored.unionByName(fresh)
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(stored_path)
     merged.write.mode("overwrite").parquet(new_path)
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    memo[("sources_dim", sf_dir)] = new_path
+    ws.projections["sources_dim"] = new_path
     _refresh_dim_view(spark, sf_dir, "sources", new_path)
     return new_path
 
@@ -189,7 +187,7 @@ def _refresh_dim_view(spark, sf_dir: str, name: str, new_path: str) -> None:
     took the dim's name over AFTER the ledger entry (its live columns
     differ from the dim's contract) cedes ownership here too instead
     of being clobbered by a refresh that runs during Engine.ingest."""
-    ours: dict = spark.__dict__.get("_bdp_dim_views", {})
+    ours = session_state(spark).dim_views
     if ours.get(name) != sf_dir:
         return
     from ..plans.corpus_routing import CORPUS_DIMS
@@ -267,13 +265,10 @@ def refresh_event_types_dim(
     if not fresh.take(1):
         return stored_path
     merged = stored.unionByName(fresh)
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(stored_path)
     merged.write.mode("overwrite").parquet(new_path)
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    memo[("event_types_dim", sf_dir)] = new_path
+    ws.projections["event_types_dim"] = new_path
     _refresh_dim_view(spark, sf_dir, "event_types", new_path)
     return new_path
 
@@ -319,14 +314,13 @@ def _events_cube_aggs() -> list:
 def _deploy_cube(
     spark: SparkSession, sf_dir: str, memo_key: str, name: str, build
 ) -> str:
+    ws = warehouse(spark, sf_dir)
+    if memo_key in ws.projections:
+        return ws.projections[memo_key]
     tag, wh = _layout_paths(sf_dir)
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    key = (memo_key, sf_dir)
-    if key in memo:
-        return memo[key]
     path = os.path.join(wh, f"{name}_{tag}")
     build().write.mode("overwrite").parquet(path)
-    memo[key] = path
+    ws.projections[memo_key] = path
     return path
 
 
@@ -399,13 +393,10 @@ def _refresh_cube(
         versioned_parquet(spark, stored_path), delta_cube, keys,
         add_cols, min_cols, max_cols, sketch_cols,
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(stored_path)
     merged.write.mode("overwrite").parquet(new_path)
-    memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
-    memo[(memo_key, sf_dir)] = new_path
+    ws.projections[memo_key] = new_path
     return new_path
 
 

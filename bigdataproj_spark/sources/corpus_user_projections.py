@@ -52,6 +52,7 @@ from ..plans.corpus_routing import (
 )
 from .bucketed import _layout_paths
 from .corpus_cubes import merge_partial_frames
+from .state import warehouse
 
 
 @dataclass
@@ -84,8 +85,7 @@ class _CorpusUserProjection:
 
 
 def _catalog(spark: SparkSession, sf_dir: str) -> dict[str, _CorpusUserProjection]:
-    root: dict = spark.__dict__.setdefault("_bdp_corpus_user_projections", {})
-    return root.setdefault(sf_dir, {})
+    return warehouse(spark, sf_dir).corpus_user_projections
 
 
 def corpus_user_projections(
@@ -240,12 +240,11 @@ def deploy_corpus_projection(
 
     evict_versioned_scan(spark, path)  # redeploy overwrites the base path
 
-    cat = _catalog(spark, sf_dir)
-
     def _open(s: SparkSession, d: str) -> DataFrame:
         from .snapshots import versioned_parquet
 
-        return versioned_parquet(s, cat[name].path)  # current version (immutable path)
+        # the installed state's current version (an immutable path)
+        return versioned_parquet(s, _catalog(s, d)[name].path)
 
     proj = CorpusProjection(
         name=f"user:{name}",
@@ -259,7 +258,7 @@ def deploy_corpus_projection(
         open=_open,
         time_key=time_key,
     )
-    cat[name] = _CorpusUserProjection(
+    _catalog(spark, sf_dir)[name] = _CorpusUserProjection(
         name, table_name, tuple(keys), measures, time_key,
         tuple(dims_needed), path, path, proj,
     )
@@ -310,10 +309,7 @@ def refresh_corpus_projection(
         spark.read.parquet(u.path), delta_cube, tuple(group_cols),
         add, mins, maxs,
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(u.base_path, 0) + 1
-    versions[u.base_path] = v
-    new_path = f"{u.base_path}_v{v}"
+    new_path = warehouse(spark, sf_dir).publish(u.base_path)
     merged.write.mode("overwrite").parquet(new_path)
     u.path = new_path
     return new_path

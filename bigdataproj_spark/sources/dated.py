@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from .bucketed import _layout_paths
+from .state import deploy_name, warehouse
 
 _MONTH_FMT = "yyyy-MM"
 
@@ -100,23 +101,13 @@ def append_dated(
 def dated_lineitem(spark: SparkSession, sf_dir: str) -> str:
     """Deploy (memoized per session+fixture) the full-width lineitem
     layout partitioned by ship month, and return its path."""
+    ws = warehouse(spark, sf_dir)
+    if ws.dated is not None:
+        return ws.dated
     tag, wh = _layout_paths(sf_dir)
-    memo: dict = spark.__dict__.setdefault("_bdp_dated_memo", {})
-    if sf_dir in memo:
-        return memo[sf_dir]
-    path = os.path.join(wh, f"lineitem_dated_{tag}")
-    if spark.__dict__.get("_bdp_as_of_active"):
-        # S22: a lazy deploy INSIDE a snapshot read must never write
-        # the live layout path — overwrite mode would destroy the live
-        # layout's appended batches (found by direct probe: an
-        # as_of(0) scan wiped a post-ingest Z-order row). The twin
-        # path lands in the SWAPPED memo (discarded at exit; files are
-        # VACUUM orphans). Content is epoch-correct: a missing memo
-        # means this table was never ingested by that epoch, so the
-        # fixture IS the epoch's relation.
-        path += "_asof"
+    path = deploy_name(spark, sf_dir, os.path.join(wh, f"lineitem_dated_{tag}"))
     write_dated(table(spark, sf_dir, "lineitem"), path)
-    memo[sf_dir] = path
+    ws.dated = path
     return path
 
 
@@ -253,23 +244,13 @@ def append_dated_events(
 def dated_events(spark: SparkSession, sf_dir: str) -> str:
     """Deploy (memoized per session+fixture) the events layout
     partitioned by event day, and return its path."""
+    ws = warehouse(spark, sf_dir)
+    if ws.dated_events is not None:
+        return ws.dated_events
     tag, wh = _layout_paths(sf_dir)
-    memo: dict = spark.__dict__.setdefault("_bdp_dated_events_memo", {})
-    if sf_dir in memo:
-        return memo[sf_dir]
-    path = os.path.join(wh, f"events_dated_{tag}")
-    if spark.__dict__.get("_bdp_as_of_active"):
-        # S22: a lazy deploy INSIDE a snapshot read must never write
-        # the live layout path — overwrite mode would destroy the live
-        # layout's appended batches (found by direct probe: an
-        # as_of(0) scan wiped a post-ingest Z-order row). The twin
-        # path lands in the SWAPPED memo (discarded at exit; files are
-        # VACUUM orphans). Content is epoch-correct: a missing memo
-        # means this table was never ingested by that epoch, so the
-        # fixture IS the epoch's relation.
-        path += "_asof"
+    path = deploy_name(spark, sf_dir, os.path.join(wh, f"events_dated_{tag}"))
     write_dated_events(table(spark, sf_dir, "events"), path)
-    memo[sf_dir] = path
+    ws.dated_events = path
     return path
 
 

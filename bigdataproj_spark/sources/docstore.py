@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
 from .bucketed import _layout_paths
+from .state import deploy_name, warehouse
 
 
 def write_clustered_docs(
@@ -85,21 +86,11 @@ def append_clustered_docs(
 def clustered_documents(spark: SparkSession, sf_dir: str) -> str:
     """Deploy (memoized per session+fixture) the clustered documents
     layout and return its path."""
+    ws = warehouse(spark, sf_dir)
+    if ws.docstore is not None:
+        return ws.docstore
     tag, wh = _layout_paths(sf_dir)
-    memo: dict = spark.__dict__.setdefault("_bdp_docstore_memo", {})
-    if sf_dir in memo:
-        return memo[sf_dir]
-    path = os.path.join(wh, f"documents_clustered_{tag}")
-    if spark.__dict__.get("_bdp_as_of_active"):
-        # S22: a lazy deploy INSIDE a snapshot read must never write
-        # the live layout path — overwrite mode would destroy the live
-        # layout's appended batches (found by direct probe: an
-        # as_of(0) scan wiped a post-ingest Z-order row). The twin
-        # path lands in the SWAPPED memo (discarded at exit; files are
-        # VACUUM orphans). Content is epoch-correct: a missing memo
-        # means this table was never ingested by that epoch, so the
-        # fixture IS the epoch's relation.
-        path += "_asof"
+    path = deploy_name(spark, sf_dir, os.path.join(wh, f"documents_clustered_{tag}"))
     write_clustered_docs(table(spark, sf_dir, "documents"), path)
-    memo[sf_dir] = path
+    ws.docstore = path
     return path

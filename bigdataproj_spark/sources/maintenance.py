@@ -44,6 +44,7 @@ from .bucketed import (
 )
 from .corpus_cubes import refresh_docs_cube, refresh_events_cube
 from .dated import append_dated, append_dated_events, dated_events, dated_lineitem
+from .state import session_state, warehouse
 from .zorder import _ZORDER_COLS, append_zordered, zordered_lineitem
 
 
@@ -108,13 +109,13 @@ def _refresh_warehouse_body(
     # reading fixture parquet until an ingest genuinely changes data.
     from ..catalog import bump_mutation_epoch
 
-    ingested: set = spark.__dict__.setdefault("_bdp_ingested", set())
+    ws = warehouse(spark, sf_dir)
     for tname, delta in (
         ("lineitem", lineitem), ("orders", orders),
         ("documents", documents), ("events", events),
     ):
         if delta is not None:
-            ingested.add((sf_dir, tname))
+            ws.ingested.add(tname)
             bump_mutation_epoch(spark, sf_dir, tname)
     # S19: a TOMBSTONED key stays deleted — delta rows carrying one are
     # dropped from the batch BEFORE any layout sees them. Without this,
@@ -325,8 +326,6 @@ def _refresh_warehouse_body(
             star_date_cube_table,
         )
 
-        sd = spark.__dict__
-
         def _labeled(label: str, fn):
             def leg():
                 spark.sparkContext.setJobDescription(label)
@@ -334,18 +333,17 @@ def _refresh_warehouse_body(
 
             return leg
 
-        pmemo = sd.get("_bdp_projection_memo", {})
         deploys = []
         for memo_key, deploy in (
             ("pricing_cube", pricing_cube_table),
             ("star_date_cube", star_date_cube_table),
             ("segment_cube", segment_cube_table),
         ):
-            if (memo_key, sf_dir) not in pmemo:
+            if memo_key not in ws.projections:
                 deploys.append(_labeled(f"deploy: {memo_key}", lambda d=deploy: d(spark, sf_dir)))
-        if sf_dir not in sd.get("_bdp_zorder_memo", {}):
+        if ws.zorder is None:
             deploys.append(_labeled("deploy: zorder", lambda: zordered_lineitem(spark, sf_dir)))
-        if sf_dir not in sd.get("_bdp_dated_memo", {}):
+        if ws.dated is None:
             deploys.append(_labeled("deploy: dated", lambda: dated_lineitem(spark, sf_dir)))
         try:
             if deploys:
@@ -433,8 +431,7 @@ def _refresh_warehouse_body(
         from .corpus_cubes import docs_stats_cube_table, refresh_sources_dim
         from .docstore import append_clustered_docs, clustered_documents
 
-        sd = spark.__dict__
-        if ("docs_stats_cube", sf_dir) not in sd.get("_bdp_projection_memo", {}):
+        if "docs_stats_cube" not in ws.projections:
             docs_stats_cube_table(spark, sf_dir)
 
         def _leg_sources_dim() -> None:
@@ -464,10 +461,7 @@ def _refresh_warehouse_body(
             refresh_event_types_dim,
         )
 
-        sd = spark.__dict__
-        if ("events_hourly_cube", sf_dir) not in sd.get(
-            "_bdp_projection_memo", {}
-        ):
+        if "events_hourly_cube" not in ws.projections:
             events_hourly_cube_table(spark, sf_dir)
 
         def _leg_events_dim() -> None:
@@ -507,13 +501,6 @@ def _refresh_warehouse_body(
             ).items():
                 done[f"user:{name}"] = path
     return done
-
-
-def _next_version(spark: SparkSession, base: str) -> int:
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(("optimize", base), 0) + 1
-    versions[("optimize", base)] = v
-    return v
 
 
 def optimize_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, str]:
@@ -559,7 +546,7 @@ def optimize_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     from .snapshots import ensure_base, record_commit
     from .zorder import write_zordered
 
-    if spark.__dict__.get("_bdp_as_of_active"):
+    if session_state(spark).as_of is not None:
         raise ValueError(
             "the warehouse is read-only inside an AS OF snapshot read"
         )
@@ -567,18 +554,18 @@ def optimize_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, str]:
 
     tag, wh = _layout_paths(sf_dir)
     done: dict[str, str] = {}
-    sd = spark.__dict__
+    ws = warehouse(spark, sf_dir)
 
     # Only layouts DEPLOYED this session (serving memo present) are
     # rewritten — optimizing compacts append degradation; deploying a
     # pristine layout from the fixture just to rewrite it would be
     # several full-corpus passes for nothing (round-7 review finding).
-    if (sf_dir, _N_BUCKETS) in sd.get("_bdp_bucketed_memo", {}):
+    if _N_BUCKETS in ws.bucketed:
         # bucketed fact: rewrite current content, one sorted pass per
         # bucket
         li_name, od_name = bucketed_fact_tables(spark, sf_dir)
         base = li_name.split("_opt")[0]
-        new_li = f"{base}_opt{_next_version(spark, base)}"
+        new_li = ws.publish(base, "_opt")
         write_bucketed(
             apply_tombstones(
                 spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
@@ -591,18 +578,18 @@ def optimize_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             # rollup/denorm spine) — the row-level stores stop carrying
             # the dead orders' bytes
             od_base = od_name.split("_opt")[0].split("_v")[0]
-            new_od = f"{od_base}_opt{_next_version(spark, od_base)}"
+            new_od = ws.publish(od_base, "_opt")
             write_bucketed(
                 apply_tombstones(spark, sf_dir, "orders", spark.table(od_name)),
                 new_od, os.path.join(wh, new_od), "o_orderkey",
             )
             done["bucketed_orders"] = new_od
-        sd["_bdp_bucketed_memo"][(sf_dir, _N_BUCKETS)] = (new_li, new_od)
+        ws.bucketed[_N_BUCKETS] = (new_li, new_od)
         done["bucketed_lineitem"] = new_li
 
     if (
         tombstone_df(spark, sf_dir, "orders") is not None
-        and ("order_revenue", sf_dir) in sd.get("_bdp_projection_memo", {})
+        and "order_revenue" in ws.projections
     ):
         from .bucketed import order_revenue_projection
 
@@ -612,36 +599,36 @@ def optimize_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             (den_name, "o_orderkey", 1),
         ):
             obase = old.split("_opt")[0].split("_v")[0]
-            new = f"{obase}_opt{_next_version(spark, obase)}"
+            new = ws.publish(obase, "_opt")
             write_bucketed(
                 apply_tombstones(spark, sf_dir, "orders", spark.table(old), key),
                 new, os.path.join(wh, new), key,
             )
-            pair = list(sd["_bdp_projection_memo"][("order_revenue", sf_dir)])
+            pair = list(ws.projections["order_revenue"])
             pair[slot] = new
-            sd["_bdp_projection_memo"][("order_revenue", sf_dir)] = tuple(pair)
+            ws.projections["order_revenue"] = tuple(pair)
             done["order_rollup" if slot == 0 else "orders_denorm"] = new
 
-    if sf_dir in sd.get("_bdp_zorder_memo", {}):
+    if ws.zorder is not None:
         # Z-order: full recluster over base + appended deltas
         zp = zordered_lineitem(spark, sf_dir)
         zbase = os.path.join(wh, f"lineitem_zorder_{tag}")
-        new_z = f"{zbase}_opt{_next_version(spark, zbase)}"
+        new_z = ws.publish(zbase, "_opt")
         write_zordered(
             apply_tombstones(
                 spark, sf_dir, "orders", spark.read.parquet(zp), "l_orderkey"
             ),
             new_z, "l_partkey", "l_suppkey",
         )
-        sd["_bdp_zorder_memo"][sf_dir] = new_z
+        ws.zorder = new_z
         done["zorder_lineitem"] = new_z
 
     # dated layouts: re-partition + re-sort whole; the hive partition
     # column is re-derived by the writer, so drop the read-back copy
-    if sf_dir in sd.get("_bdp_dated_memo", {}):
+    if ws.dated is not None:
         dp = dated_lineitem(spark, sf_dir)
         dbase = os.path.join(wh, f"lineitem_dated_{tag}")
-        new_d = f"{dbase}_opt{_next_version(spark, dbase)}"
+        new_d = ws.publish(dbase, "_opt")
         write_dated(
             apply_tombstones(
                 spark, sf_dir, "orders",
@@ -649,25 +636,25 @@ def optimize_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             ),
             new_d,
         )
-        sd["_bdp_dated_memo"][sf_dir] = new_d
+        ws.dated = new_d
         done["dated_lineitem"] = new_d
 
-    if sf_dir in sd.get("_bdp_dated_events_memo", {}):
+    if ws.dated_events is not None:
         from .retention import apply_event_watermark
 
         ep = dated_events(spark, sf_dir)
         ebase = os.path.join(wh, f"events_dated_{tag}")
-        new_e = f"{ebase}_opt{_next_version(spark, ebase)}"
+        new_e = ws.publish(ebase, "_opt")
         write_dated_events(
             apply_event_watermark(
                 spark, sf_dir, spark.read.parquet(ep).drop("event_day_p")
             ),
             new_e,
         )
-        sd["_bdp_dated_events_memo"][sf_dir] = new_e
+        ws.dated_events = new_e
         done["dated_events"] = new_e
 
-    if sf_dir in sd.get("_bdp_docstore_memo", {}):
+    if ws.docstore is not None:
         # clustered documents: re-merge appended files back to the
         # globally-clustered form (the read-back lang partition column
         # feeds the writer's partitionBy directly)
@@ -675,14 +662,14 @@ def optimize_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, str]:
 
         cp = clustered_documents(spark, sf_dir)
         cbase = os.path.join(wh, f"documents_clustered_{tag}")
-        new_c = f"{cbase}_opt{_next_version(spark, cbase)}"
+        new_c = ws.publish(cbase, "_opt")
         write_clustered_docs(
             apply_tombstones(
                 spark, sf_dir, "documents", spark.read.parquet(cp)
             ),
             new_c,
         )
-        sd["_bdp_docstore_memo"][sf_dir] = new_c
+        ws.docstore = new_c
         done["clustered_documents"] = new_c
     # S22: optimize swings memos outside a txn; record its post-state
     # so time travel across the rewrite resolves the new versions
@@ -718,38 +705,24 @@ def gc_warehouse(
 
     Returns {"removed": n_entries, "bytes": total_bytes_freed}.
 
-    The LIVE set is assembled from the serving state itself, so a new
-    layout kind cannot be forgotten here silently as long as it serves
-    through the standard memos: projection memo paths (and the
-    rollup/denorm TABLE-NAME pairs), the bucketed table names, the
-    zorder/dated/docstore paths, both user-projection catalogs'
-    current paths, and the tombstone sets."""
+    The LIVE set is :meth:`WarehouseState.live_paths` of the serving
+    state and of every reachable ledger entry, so a new layout kind
+    cannot be forgotten here silently as long as it serves through a
+    WarehouseState field."""
     import os
     import shutil
 
     from .bucketed import _layout_paths
-    from .snapshots import prune_ledger, snapshot_live_entries
+    from .snapshots import prune_ledger
 
-    if spark.__dict__.get("_bdp_as_of_active"):
+    if session_state(spark).as_of is not None:
         raise ValueError(
             "the warehouse is read-only inside an AS OF snapshot read"
         )
     _tag, wh = _layout_paths(sf_dir)
     if not os.path.isdir(wh):
         return {"removed": 0, "bytes": 0}
-    sd = spark.__dict__
-    live: set[str] = set()
-
-    def _keep(entry) -> None:
-        if isinstance(entry, str):
-            # a path (basename lives directly under wh) or a table
-            # name (its external location is wh/<name> by the
-            # write_bucketed construction)
-            live.add(os.path.basename(os.path.normpath(entry)))
-        elif isinstance(entry, (tuple, list)):
-            for e in entry:
-                _keep(e)
-
+    ws = warehouse(spark, sf_dir)
     # S22 (time travel ⟷ VACUUM retention, Delta's contract): first
     # expire snapshot versions older than the window, then everything
     # a SURVIVING version references joins the live set — a reachable
@@ -757,33 +730,14 @@ def gc_warehouse(
     # default window of 0 the ledger clears and only the serving
     # state keeps files, exactly the eager-GC behavior.
     prune_ledger(spark, sf_dir, retain_seconds)
-    for snap_entry in snapshot_live_entries(spark, sf_dir):
-        _keep(snap_entry)
-
-    for memo_key in (
-        "_bdp_projection_memo",
-        "_bdp_zorder_memo",
-        "_bdp_dated_memo",
-        "_bdp_dated_events_memo",
-        "_bdp_docstore_memo",
-    ):
-        for k, v in (sd.get(memo_key) or {}).items():
-            # projection memo is keyed (name, sf_dir); the layout
-            # memos by sf_dir — filter to THIS fixture either way
-            key_dir = k[1] if isinstance(k, tuple) else k
-            if key_dir == sf_dir:
-                _keep(v)
-    # every bucket-count layout of THIS fixture (the bucket count is a
-    # public parameter and layouts of different counts coexist)
-    for (d, _n), names in (sd.get("_bdp_bucketed_memo") or {}).items():
-        if d == sf_dir:
-            _keep(names)
-    for root_key in ("_bdp_user_projections", "_bdp_corpus_user_projections"):
-        for u in (sd.get(root_key) or {}).get(sf_dir, {}).values():
-            _keep(u.path)
-    for (d, _t), path in (sd.get("_bdp_tombstones") or {}).items():
-        if d == sf_dir:
-            _keep(path)
+    # a path (basename lives directly under wh) or a table name (its
+    # external location is wh/<name> by the write_bucketed construction);
+    # a reachable commit's stored change deltas are live too
+    paths = list(ws.live_paths())
+    for e in ws.history.ledger:
+        paths += e["state"].live_paths()
+        paths += (e.get("cdf") or {}).values()
+    live = {os.path.basename(os.path.normpath(p)) for p in paths}
 
     import time
 
@@ -826,10 +780,4 @@ def gc_warehouse(
     # (round-10 VERDICT item 6): a long audit session stays bounded
     # by the REACHABLE versions, not by every version it ever read
     evict_pinned_memo(spark)
-    # Round 12: VACUUM removes superseded version DIRECTORIES; live
-    # versioned-scan memo entries (snapshots.versioned_parquet) for
-    # current paths stay valid (never pruned while reachable), but the
-    # clear is cheap insurance against any path-reuse interaction with
-    # restore/rollback counter resets — one re-listing per live path.
-    spark.__dict__.pop("_bdp_versioned_scan_memo", None)
     return {"removed": removed, "bytes": freed}

@@ -64,13 +64,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bucketed import _layout_paths
+from .state import session_state, warehouse
 
 # base table -> tombstone key column
 TOMBSTONE_KEYS = {"documents": "doc_id", "orders": "o_orderkey"}
-
-
-def _memo(spark: SparkSession) -> dict:
-    return spark.__dict__.setdefault("_bdp_tombstones", {})
 
 
 def tombstone_df(
@@ -80,7 +77,7 @@ def tombstone_df(
     Tombstone sets publish to NEW ``_v{n}`` paths (immutable once
     written), so the scan is memoized per path — this read sits on
     EVERY routed scan once a delete exists (apply_tombstones)."""
-    path = _memo(spark).get((sf_dir, table_name))
+    path = warehouse(spark, sf_dir).tombstones.get(table_name)
     if not path:
         return None
     from .snapshots import versioned_parquet
@@ -122,7 +119,7 @@ def _fresh_keys(
     already-tombstoned set, pinned eagerly. Computed OUTSIDE the
     transaction (round-9 review finding) so a re-issued delete — the
     documented-idempotent scheduled-retention case — discovers it is a
-    no-op before paying WarehouseTxn's snapshot (deepcopy + warehouse
+    no-op before paying WarehouseTxn's snapshot (state copy + warehouse
     file walk). A re-delete must not re-trigger group rebuilds."""
     key = TOMBSTONE_KEYS[table_name]
     stored = tombstone_df(spark, sf_dir, table_name)
@@ -140,12 +137,10 @@ def _publish_tombstones(
     merged = fresh if stored is None else stored.unionByName(fresh)
     tag, wh = _layout_paths(sf_dir)
     base = os.path.join(wh, f"tombstones_{table_name}_{tag}")
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(base, 0) + 1
-    versions[base] = v
-    new_path = f"{base}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(base)
     merged.write.mode("overwrite").parquet(new_path)
-    _memo(spark)[(sf_dir, table_name)] = new_path
+    ws.tombstones[table_name] = new_path
 
 
 def _splice_groups(
@@ -162,29 +157,26 @@ def _splice_groups(
     return kept.unionByName(recomputed)
 
 
-def _publish_user_version(spark: SparkSession, u, merged: DataFrame) -> str:
+def _publish_user_version(
+    spark: SparkSession, sf_dir: str, u, merged: DataFrame
+) -> str:
     """Publish a rebuilt USER-projection cube as a new version and
     swing the catalog entry's path — the one publish discipline for
     both user catalogs (lineitem star + corpus), shared with their
     refresh paths' version keying."""
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(u.base_path, 0) + 1
-    versions[u.base_path] = v
-    new_path = f"{u.base_path}_v{v}"
+    new_path = warehouse(spark, sf_dir).publish(u.base_path)
     merged.write.mode("overwrite").parquet(new_path)
     u.path = new_path
     return new_path
 
 
 def _publish_cube(
-    spark: SparkSession, memo_key: tuple, stored_path: str, merged: DataFrame
+    spark: SparkSession, sf_dir: str, name: str, merged: DataFrame
 ) -> str:
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(ws.projections[name])
     merged.write.mode("overwrite").parquet(new_path)
-    spark.__dict__.setdefault("_bdp_projection_memo", {})[memo_key] = new_path
+    ws.projections[name] = new_path
     return new_path
 
 
@@ -225,14 +217,14 @@ def delete_documents(spark: SparkSession, sf_dir: str, doc_ids) -> dict[str, str
         _publish_tombstones(spark, sf_dir, "documents", fresh)
         bump_mutation_epoch(spark, sf_dir, "documents")
         done: dict[str, str] = {}
-        sd = spark.__dict__
-        memo: dict = sd.get("_bdp_projection_memo", {})
+        ws = warehouse(spark, sf_dir)
+        memo = ws.projections
 
         # built-in doc-stats cube: affected (lang, source) groups
-        if ("docs_stats_cube", sf_dir) in memo:
+        if "docs_stats_cube" in memo:
             from .corpus_cubes import DOCS_CUBE_KEYS, _docs_cube_aggs
 
-            stored = spark.read.parquet(memo[("docs_stats_cube", sf_dir)])
+            stored = spark.read.parquet(memo["docs_stats_cube"])
             affected = deleted.select(*DOCS_CUBE_KEYS).distinct()
             remaining = (
                 current_documents(spark, sf_dir)  # tombstones now applied
@@ -245,8 +237,7 @@ def delete_documents(spark: SparkSession, sf_dir: str, doc_ids) -> dict[str, str
                 spark, stored, list(DOCS_CUBE_KEYS), affected, recomputed
             )
             done["docs_stats_cube"] = _publish_cube(
-                spark, ("docs_stats_cube", sf_dir),
-                memo[("docs_stats_cube", sf_dir)], merged,
+                spark, sf_dir, "docs_stats_cube", merged
             )
 
         # user corpus projections over documents: same affected-group
@@ -283,11 +274,11 @@ def delete_documents(spark: SparkSession, sf_dir: str, doc_ids) -> dict[str, str
             merged = _splice_groups(
                 spark, stored, group_cols, affected, remaining_cube
             )
-            done[f"user:{name}"] = _publish_user_version(spark, u, merged)
+            done[f"user:{name}"] = _publish_user_version(spark, sf_dir, u, merged)
 
         # verbatim views must re-point at the (now tombstone-aware)
         # current relation
-        sd.setdefault("_bdp_ingested", set()).add((sf_dir, "documents"))
+        ws.ingested.add("documents")
         return done
 
 
@@ -339,8 +330,8 @@ def delete_orders(spark: SparkSession, sf_dir: str, order_keys) -> dict[str, str
         _publish_tombstones(spark, sf_dir, "orders", fresh)
         bump_mutation_epoch(spark, sf_dir, "orders", "lineitem")
         done: dict[str, str] = {}
-        sd = spark.__dict__
-        memo: dict = sd.get("_bdp_projection_memo", {})
+        ws = warehouse(spark, sf_dir)
+        memo = ws.projections
 
         def _rebuild(memo_key: str, keys: tuple[str, ...], aggs, with_denorm):
             """Affected-group recompute for one lineitem cube. The
@@ -348,9 +339,9 @@ def delete_orders(spark: SparkSession, sf_dir: str, order_keys) -> dict[str, str
             columns at rest); star-keyed cubes resolve their per-order
             attributes through the stored denorm, same as the refresh
             delta path."""
-            if (memo_key, sf_dir) not in memo:
+            if memo_key not in memo:
                 return
-            stored = spark.read.parquet(memo[(memo_key, sf_dir)])
+            stored = spark.read.parquet(memo[memo_key])
             dead = deleted_li
             live = current_lineitem(spark, sf_dir)  # tombstones applied
             if with_denorm:
@@ -369,9 +360,7 @@ def delete_orders(spark: SparkSession, sf_dir: str, order_keys) -> dict[str, str
             merged = _splice_groups(
                 spark, stored, list(keys), affected, recomputed
             )
-            done[memo_key] = _publish_cube(
-                spark, (memo_key, sf_dir), memo[(memo_key, sf_dir)], merged
-            )
+            done[memo_key] = _publish_cube(spark, sf_dir, memo_key, merged)
 
         from .bucketed import (
             _SEGMENT_CUBE_KEYS,
@@ -413,11 +402,9 @@ def delete_orders(spark: SparkSession, sf_dir: str, order_keys) -> dict[str, str
             merged = _splice_groups(
                 spark, stored, list(u.keys), dead_cube_keys, live_cube
             )
-            done[f"user:{name}"] = _publish_user_version(spark, u, merged)
+            done[f"user:{name}"] = _publish_user_version(spark, sf_dir, u, merged)
 
-        ingested: set = sd.setdefault("_bdp_ingested", set())
-        ingested.add((sf_dir, "lineitem"))
-        ingested.add((sf_dir, "orders"))
+        ws.ingested.update(("lineitem", "orders"))
         return done
 
 
@@ -458,8 +445,7 @@ def reattribute_order_updates(
         order_revenue_projection,
     )
 
-    sd = spark.__dict__
-    memo: dict = sd.get("_bdp_projection_memo", {})
+    memo = warehouse(spark, sf_dir).projections
     keys = old_orders.select("o_orderkey")
     li = (
         current_lineitem(spark, sf_dir)
@@ -480,14 +466,14 @@ def reattribute_order_updates(
     new_den = denorm_join(spark, sf_dir, new_orders)
 
     def _rebuild(memo_key: str, cube_keys: tuple[str, ...], aggs):
-        if (memo_key, sf_dir) not in memo:
+        if memo_key not in memo:
             return
         from .snapshots import versioned_parquet
 
         spark.sparkContext.setJobDescription(f"reattribute: {memo_key}")
         # versioned_parquet: the stored cube path is immutable once
         # published and already memoized by the routed read path
-        stored = versioned_parquet(spark, memo[(memo_key, sf_dir)])
+        stored = versioned_parquet(spark, memo[memo_key])
         affected = (
             li.join(old_den, li.l_orderkey == old_den.o_orderkey)
             .select(*cube_keys)
@@ -509,9 +495,7 @@ def reattribute_order_updates(
         merged = _splice_groups(
             spark, stored, list(cube_keys), affected, recomputed
         )
-        done[memo_key] = _publish_cube(
-            spark, (memo_key, sf_dir), memo[(memo_key, sf_dir)], merged
-        )
+        done[memo_key] = _publish_cube(spark, sf_dir, memo_key, merged)
 
     # Round 13 (guide §2.6): the two cube rebuilds read only settled
     # state (the checkpointed affected lineitems, the post-upsert
@@ -560,7 +544,7 @@ def reattribute_order_updates(
         merged = _splice_groups(
             spark, stored, list(u.keys), affected, live_cube
         )
-        done[f"user:{name}"] = _publish_user_version(spark, u, merged)
+        done[f"user:{name}"] = _publish_user_version(spark, sf_dir, u, merged)
     return done
 
 
@@ -593,9 +577,7 @@ def clear_tombstones_after_rewrite(spark: SparkSession, sf_dir: str) -> None:
     been physically rewritten without the dead rows: the tombstone
     sets are no longer needed and every read path drops its
     anti-join."""
-    memo = _memo(spark)
-    for k in [k for k in memo if k[0] == sf_dir]:
-        memo.pop(k, None)
+    warehouse(spark, sf_dir).tombstones.clear()
 
 
 # ---------------------------------------------------------------------------
@@ -632,7 +614,7 @@ def _demo_corpus(
     tag, _wh = _layout_paths(sf_dir)
     sub = hashlib.md5(",".join(tables).encode() + demo.encode()).hexdigest()[:8]
     root = os.path.join(pid_scratch(_DEMO_ROOT), f"{tag}_{sub}")
-    memo: dict = spark.__dict__.setdefault("_bdp_retention_demo", {})
+    memo = session_state(spark).sandboxes
     key = (sf_dir, tables, demo)
     if key in memo:
         return memo[key]
@@ -837,14 +819,10 @@ def q09_sql_delete_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WATERMARK_BOUNDARY = re.compile(r"^\d{4}-\d{2}-\d{2}( \d{2}:00:00)?$")
 
 
-def _wm_memo(spark: SparkSession) -> dict:
-    return spark.__dict__.setdefault("_bdp_retention_watermarks", {})
-
-
 def event_watermark(spark: SparkSession, sf_dir: str) -> str | None:
     """The current events expiry cutoff ('YYYY-MM-DD HH:00:00'), or
     None when nothing has been expired."""
-    return _wm_memo(spark).get((sf_dir, "events"))
+    return warehouse(spark, sf_dir).watermarks.get("events")
 
 
 def apply_event_watermark(
@@ -896,7 +874,7 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
         raise ValueError(f"not a valid timestamp: {raw!r} ({e})") from e
     # monotone no-op check OUTSIDE the txn: a scheduled retention job
     # re-issuing an unchanged cutoff must not pay the txn's snapshot
-    current = _wm_memo(spark).get((sf_dir, "events"))
+    current = warehouse(spark, sf_dir).watermarks.get("events")
     if current is not None and current >= cutoff:
         return {}
     with WarehouseTxn(spark, sf_dir, note="expire events"):
@@ -915,21 +893,19 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
             ),
             "delete",
         )
-        _wm_memo(spark)[(sf_dir, "events")] = cutoff
+        ws = warehouse(spark, sf_dir)
+        ws.watermarks["events"] = cutoff
         bump_mutation_epoch(spark, sf_dir, "events")
         done: dict[str, str] = {}
-        sd = spark.__dict__
-        memo: dict = sd.get("_bdp_projection_memo", {})
 
         # hourly cube: stored-key filter == rebuild (hour boundary)
-        if ("events_hourly_cube", sf_dir) in memo:
-            stored = spark.read.parquet(memo[("events_hourly_cube", sf_dir)])
+        if "events_hourly_cube" in ws.projections:
+            stored = spark.read.parquet(ws.projections["events_hourly_cube"])
             kept = stored.filter(
                 F.col("event_hour") >= F.lit(cutoff).cast("timestamp")
             )
             done["events_hourly_cube"] = _publish_cube(
-                spark, ("events_hourly_cube", sf_dir),
-                memo[("events_hourly_cube", sf_dir)], kept,
+                spark, sf_dir, "events_hourly_cube", kept
             )
 
         # user event views: hour-keyed drop groups exactly; others
@@ -952,9 +928,9 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
                     CORPUS_TABLES["events"], u.keys, u.measures,
                     u.time_key, u.dims,
                 )
-            done[f"user:{name}"] = _publish_user_version(spark, u, merged)
+            done[f"user:{name}"] = _publish_user_version(spark, sf_dir, u, merged)
 
-        sd.setdefault("_bdp_ingested", set()).add((sf_dir, "events"))
+        ws.ingested.add("events")
         return done
 
 

@@ -1,133 +1,111 @@
 """S22: snapshot reads (time travel) — the reader-side counterpart of
 the warehouse's write-side discipline.
 
-Every layout in this engine publishes NEW versioned files and swings a
-session-scoped serving memo (the no-in-place-writes contract
-:mod:`~.txn` pins), and :func:`~.maintenance.gc_warehouse` got a
-Delta-style retention window in round 9 so superseded versions
-survive a configurable grace period. Those two facts together mean a
-PAST warehouse state is fully reconstructible from (a) the serving
-memos as they stood at that commit and (b) the files they referenced
-— which the GC window is keeping anyway. S22 just writes that down:
+Every layout publishes NEW versioned files (or appends new ones) and
+records them in its warehouse's :class:`~.state.WarehouseState` (the
+no-in-place-writes contract :mod:`~.txn` pins), and
+:func:`~.maintenance.gc_warehouse` keeps superseded versions for a
+configurable retention window. So a PAST warehouse state is fully
+reconstructible from (a) a copy of the WarehouseState as it stood at
+that commit and (b) the files it referenced. This module writes that
+down:
 
-- a **commit ledger**: after every committed warehouse mutation
-  (ingest / MERGE / UPDATE / DELETE / TTL expiry / OPTIMIZE),
-  :class:`~.txn.WarehouseTxn` appends a numbered snapshot of the
-  serving state — the SAME capture its rollback machinery already
-  takes on entry, plus the warehouse file LISTING (the metadata walk
-  the txn already pays once per batch) — O(#layouts + #files)
-  bookkeeping, no data I/O and no data-path cost;
-- an **``as_of`` read context**: swaps the session's serving state to
-  a ledger entry, re-points the engine-owned temp views, and restores
-  everything on exit — every read issued inside (routed, scan,
-  verbatim SQL) answers from the warehouse AS OF that commit. The
-  APPEND-style row stores (bucketed facts, clustered documents,
-  dated events/lineitem, Z-order) share directories across commits,
-  so their scans inside the block are restricted to the commit's
-  pinned file listing (:func:`pinned_parquet` / :func:`pinned_table`
-  — found as a real leak by direct probe: a row-level ``AS OF 1``
-  read served batch 2's appended rows while the cube-routed twin was
-  correct); the versioned layouts (cubes, rollup/denorm, user views,
-  tombstone sets) resolve through their memo paths alone;
+- a **commit ledger** (the state's shared :class:`~.state.History`):
+  after every committed mutation (ingest / MERGE / UPDATE / DELETE /
+  TTL expiry / OPTIMIZE / VACUUM) :func:`record_commit` appends a
+  numbered entry holding :meth:`WarehouseState.copy` plus the
+  warehouse's file LISTING — O(#layouts + #files) bookkeeping, no data
+  I/O;
+- an **``as_of`` read context**: pins the session to one warehouse's
+  commit, installs a copy of that entry's state, re-points the
+  engine-owned temp views, and on exit re-installs the live object
+  itself — every read of that warehouse issued inside (routed, scan,
+  verbatim SQL) answers as of the commit, while other warehouses keep
+  serving live. The APPEND-style row stores (bucketed facts, clustered
+  documents, dated events/lineitem, Z-order) share directories across
+  commits, so their scans inside the block are restricted to the
+  commit's pinned file listing (:func:`pinned_parquet` /
+  :func:`pinned_table`); the versioned layouts (cubes, rollup/denorm,
+  user views, tombstone sets) resolve through the state's paths alone;
+- **RESTORE** (:func:`restore_warehouse`): installs a copy of the
+  entry's state as the LIVE state and removes the undone commits'
+  files;
 - the **SQL spellings** ``... FOR SYSTEM_VERSION AS OF <n>``,
   ``DESCRIBE HISTORY``, and ``RESTORE TO VERSION AS OF <n>`` on the
   front door (engine.py / plans/ddl.py), following the Delta/Iceberg
-  convention users already know — with one deliberate strengthening:
-  this engine's snapshots are WAREHOUSE-WIDE, so a multi-table
-  statement reads ONE consistent commit across all its tables
-  (per-table ``AS OF`` versions that disagree are refused) — and one
-  deliberate divergence: RESTORE is the ROLLBACK verb (undone
-  commits' files are removed, history truncates in the original
-  numbering), because Delta's keep-forward restore would need a
-  file-granular manifest on every live scan (docs/DECISIONS.md).
+  convention — with one deliberate strengthening: a snapshot covers the
+  whole warehouse, so a multi-table statement reads ONE consistent
+  commit across all its tables (per-table ``AS OF`` versions that
+  disagree are refused) — and one deliberate divergence: RESTORE is the
+  ROLLBACK verb (undone commits' files are removed, history truncates
+  in the original numbering), because Delta's keep-forward restore
+  would need a file-granular manifest on every live scan
+  (docs/DECISIONS.md).
+
+AS OF, RESTORE and rollback are scoped to one warehouse; temp-view
+ownership is session-wide (temp views are session-global names), so
+the view ledgers live on :class:`~.state.SessionState` and are never
+copied.
 
 Time travel reaches exactly as far back as VACUUM retention allows —
 Delta's documented contract. ``gc_warehouse(retain_seconds=w)`` prunes
 ledger entries older than the window FIRST and then keeps every file a
 surviving entry references, so a reachable version can never lose its
 files; with the default ``retain_seconds=0`` the ledger is cleared and
-superseded files go, exactly today's eager-GC behavior.
+superseded files go.
 
-Scale posture: a ledger entry is a few dozen dict entries of
-paths/names — O(#layouts), independent of data size. ``as_of`` itself
-moves no data; the reads inside it run the same routed/pruned plans
-they always run, just through older memo pointers. The SQL spelling
-pins its result eagerly (``localCheckpoint``) because the restore on
-exit would invalidate a lazy VERBATIM plan over re-pointed temp
-views; for large row-level historical scans, use the ``as_of``
-context manager directly and consume the DataFrame inside it — the
-routed/scan relations resolve their file paths at plan time, so those
-handles stay valid after exit.
+Scale posture: a ledger entry is a few dozen paths/names —
+O(#layouts), independent of data size. ``as_of`` itself moves no data;
+the reads inside it run the same routed/pruned plans, through older
+paths. The SQL spelling pins its result eagerly (``localCheckpoint``)
+because the exit re-point would invalidate a lazy VERBATIM plan over
+re-pointed temp views; for large row-level historical scans, use the
+``as_of`` context manager directly and consume the DataFrame inside it
+— the routed/scan relations resolve their file paths at plan time, so
+those handles stay valid after exit.
 
 Mutations inside a snapshot read are refused (the warehouse is
-read-only as-of the past): WarehouseTxn's entry guard covers every
-DML/ingest path, and OPTIMIZE/VACUUM check the same flag.
+read-only as of the past): WarehouseTxn's entry guard covers every
+DML/ingest path, and OPTIMIZE/VACUUM check the same pin.
 """
 
 from __future__ import annotations
 
-import copy
 import time
 from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-_LEDGER_KEY = "_bdp_snapshots"
-_ACTIVE_KEY = "_bdp_as_of_active"
-
-# the serving-state dicts a commit snapshots — shared with WarehouseTxn
-# (one definition of "the serving state", two consumers)
-from .txn import _STATE_KEYS  # noqa: E402
-
-_USER_PROJ_ROOTS = ("_bdp_user_projections", "_bdp_corpus_user_projections")
+from .state import AsOf, WarehouseState, install, session_state, warehouse
+from .txn import repoint_dim_views, undo_files_since
 
 
 def _ledger(spark: SparkSession, sf_dir: str) -> list[dict[str, Any]]:
-    root: dict = spark.__dict__.setdefault(_LEDGER_KEY, {})
-    return root.setdefault(sf_dir, [])
+    return warehouse(spark, sf_dir).history.ledger
 
 
 def _capture(spark: SparkSession, sf_dir: str) -> dict[str, Any]:
-    """One commit's serving-state snapshot. ``state`` is a deepcopy of
-    the plain memo/ledger dicts; ``user_proj`` keeps the catalog
-    ENTRY OBJECTS by reference plus their current path — the router's
-    open() closures capture the per-fixture catalog dict by identity,
-    so as_of must splice the original objects back into that SAME
-    dict (txn rollback's discipline), not install copies.
+    """One commit's snapshot: a copy of the warehouse's serving state
+    and its file listing at the commit. The APPEND-style row stores
+    (bucketed facts, clustered documents, day-partitioned
+    events/lineitem, Z-order) share their directories across commits,
+    so the state alone does not pin their CONTENT — a snapshot read
+    restricts those scans to exactly this listing
+    (:func:`pinned_parquet`). The versioned layouts never need it:
+    their paths are immutable once written. At 100 TB the listing is
+    the batch's manifest, enumerable from version-/batch-suffixed
+    write paths without a tree walk."""
+    from .txn import listing
 
-    ``files`` is the warehouse's file listing at the commit: the
-    APPEND-style row stores (bucketed facts, clustered documents,
-    day-partitioned events/lineitem, Z-order) share their directories
-    across commits, so the memos alone do not pin their CONTENT — a
-    snapshot read restricts those scans to exactly this listing
-    (:func:`pinned_parquet`). The versioned layouts (cubes, rollup/
-    denorm, user views, tombstone sets) never need it — their memo
-    paths are immutable once written. At 100 TB the listing is the
-    batch's manifest, enumerable from version-/batch-suffixed write
-    paths without a tree walk — the same note as WarehouseTxn's
-    rollback listing."""
-    import os
-
-    from .bucketed import _layout_paths
-
-    sd = spark.__dict__
-    state = {k: copy.deepcopy(sd.get(k)) for k in _STATE_KEYS}
-    user_proj: dict[str, dict[str, tuple[Any, str]]] = {}
-    for root_key in _USER_PROJ_ROOTS:
-        cat = (sd.get(root_key) or {}).get(sf_dir, {})
-        user_proj[root_key] = {n: (u, u.path) for n, u in cat.items()}
-    from .txn import _walk_files
-
-    _tag, wh = _layout_paths(sf_dir)
-    files = frozenset(_walk_files(wh)) if os.path.isdir(wh) else frozenset()
-    return {"state": state, "user_proj": user_proj, "files": files}
+    return {"state": warehouse(spark, sf_dir).copy(), "files": listing(sf_dir)}
 
 
 def pinned_files(spark: SparkSession) -> frozenset[str] | None:
     """The active snapshot read's warehouse file listing, or None
-    outside an as_of block — ONE dict probe on the hot path."""
-    return spark.__dict__.get("_bdp_as_of_files")
+    outside an as_of block — one attribute probe on the hot path."""
+    pin = session_state(spark).as_of
+    return None if pin is None else pin.files
 
 
 def pinned_parquet(
@@ -156,7 +134,7 @@ def pinned_parquet(
     fs = pinned_files(spark)
     if fs is None:
         return None
-    memo: dict = spark.__dict__.setdefault("_bdp_pinned_scan_memo", {})
+    memo = session_state(spark).pinned_scans
     key = (path, fs)
     hit = memo.get(key)
     if hit is not None:
@@ -212,17 +190,18 @@ def versioned_parquet(spark: SparkSession, path: str) -> DataFrame:
     rollup/denorm, user projections, tombstone sets), memoized per
     (session, path) — round 12, guide §6 (file listing) + §1.2: every
     refresh of these layouts publishes a NEW ``_v{n}`` directory and
-    swings the projection memo, so a given path's contents never
+    swings the warehouse state's entry, so a given path's contents never
     change once written; yet each plan build re-ran file listing +
     parquet schema inference (30–80 ms per layout through Py4J) to
     re-derive a constant. Routed/SQL queries read 1–3 such layouts
     per build, so this was the dominant fixed cost of sub-second
     queries. Staleness cannot occur: a superseded or VACUUM-pruned
     path is never probed again (path resolution goes through the
-    projection memos, which WarehouseTxn rolls back as a unit), and
+    warehouse state), a path can only be reused after a copied state
+    is installed, which drops this memo (state.install), and
     append-style row stores (shared directories) must NOT use this —
     they take :func:`layout_parquet`, which memoizes only the schema."""
-    memo: dict = spark.__dict__.setdefault("_bdp_versioned_scan_memo", {})
+    memo = session_state(spark).versioned_scans
     hit = memo.get(path)
     if hit is None:
         hit = spark.read.parquet(path)
@@ -234,9 +213,9 @@ def evict_versioned_scan(spark: SparkSession, path: str) -> None:
     """Drop one :func:`versioned_parquet` memo entry. Needed exactly
     where a BASE path is legitimately overwritten in-session: a user
     projection redeploy (``deploy_projection`` with an existing name
-    writes the same ``user_proj_<name>_<tag>`` base path). WarehouseTxn
-    rollback clears the whole memo instead (txn.py)."""
-    (spark.__dict__.get("_bdp_versioned_scan_memo") or {}).pop(path, None)
+    writes the same ``user_proj_<name>_<tag>`` base path). Installing a
+    copied state clears the whole memo instead (state.install)."""
+    session_state(spark).versioned_scans.pop(path, None)
 
 
 def layout_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -251,7 +230,7 @@ def layout_parquet(spark: SparkSession, path: str) -> DataFrame:
     change the file set, and memoizing the DataFrame here would serve
     stale (or deleted) files — that is exactly why these directories
     are excluded from :func:`versioned_parquet`."""
-    memo: dict = spark.__dict__.setdefault("_bdp_layout_schema_memo", {})
+    memo = session_state(spark).layout_schemas
     s = memo.get(path)
     if s is None:
         s = spark.read.parquet(path).schema
@@ -266,14 +245,15 @@ def evict_pinned_memo(spark: SparkSession) -> int:
     memo grew O(#versions × #layouts) for the session's lifetime,
     holding plans for versions that could never be probed again). The
     memo is session-global, so reachability is checked across ALL
-    fixtures' ledgers. Returns how many entries were evicted."""
-    memo: dict = spark.__dict__.get("_bdp_pinned_scan_memo") or {}
+    warehouses' ledgers. Returns how many entries were evicted."""
+    sess = session_state(spark)
+    memo = sess.pinned_scans
     if not memo:
         return 0
-    reachable: set[frozenset] = set()
-    for led in (spark.__dict__.get(_LEDGER_KEY) or {}).values():
-        for e in led:
-            reachable.add(e["files"])
+    reachable = {
+        e["files"] for ws in sess.warehouses.values()
+        for e in ws.history.ledger
+    }
     dead = [k for k in memo if k[1] not in reachable]
     for k in dead:
         del memo[k]
@@ -315,12 +295,11 @@ def _next_seq(spark: SparkSession, sf_dir: str) -> int:
     "version 3" must either resolve to the state it always meant or
     error, never silently mean a different state. Gaps in DESCRIBE
     HISTORY therefore read as "undone by RESTORE or vacuumed" —
-    renumbering would read as nothing. (The counter is deliberately
-    NOT in WarehouseTxn's rollback set; rolled-back batches never
-    reach record_commit, so rollback needs nothing restored here.)"""
-    d: dict = spark.__dict__.setdefault("_bdp_snapshot_seq", {})
-    v = d.get(sf_dir, 0)
-    d[sf_dir] = v + 1
+    renumbering would read as nothing. (The counter lives in the
+    shared History, so installing an older state never rewinds it.)"""
+    h = warehouse(spark, sf_dir).history
+    v = h.seq
+    h.seq = v + 1
     return v
 
 
@@ -357,8 +336,8 @@ def record_commit(spark: SparkSession, sf_dir: str, note: str) -> None:
     conservative-correct posture. RESTORE commits stage the EMPTY
     set since round 12 — correct by construction under truncating
     restore (see restore_warehouse)."""
-    led = _ledger(spark, sf_dir)
-    pending = (spark.__dict__.get(_CDF_PENDING_KEY) or {}).pop(sf_dir, None)
+    h = warehouse(spark, sf_dir).history
+    pending, h.cdf_pending = h.cdf_pending, None
     entry = {
         "version": _next_seq(spark, sf_dir),
         "note": note,
@@ -367,7 +346,7 @@ def record_commit(spark: SparkSession, sf_dir: str, note: str) -> None:
     }
     if pending is not None:
         entry["cdf"] = pending
-    led.append(entry)
+    h.ledger.append(entry)
 
 
 def resolve_timestamp(spark: SparkSession, sf_dir: str, ts: str) -> int:
@@ -450,56 +429,26 @@ def prune_ledger(spark: SparkSession, sf_dir: str, retain_seconds: float) -> int
     return dropped
 
 
-def snapshot_live_entries(spark: SparkSession, sf_dir: str):
-    """Every path / table-name string a surviving ledger entry
-    references for THIS fixture — VACUUM's snapshot half of the live
-    set (the same memo walk gc_warehouse does over the serving
-    state, applied to each retained version's state)."""
-    out: list = []
-    for e in _ledger(spark, sf_dir):
-        state = e["state"]
-        for memo_key in (
-            "_bdp_projection_memo",
-            "_bdp_zorder_memo",
-            "_bdp_dated_memo",
-            "_bdp_dated_events_memo",
-            "_bdp_docstore_memo",
-        ):
-            for k, v in (state.get(memo_key) or {}).items():
-                key_dir = k[1] if isinstance(k, tuple) else k
-                if key_dir == sf_dir:
-                    out.append(v)
-        for (d, _n), names in (state.get("_bdp_bucketed_memo") or {}).items():
-            if d == sf_dir:
-                out.append(names)
-        for (d, _t), path in (state.get("_bdp_tombstones") or {}).items():
-            if d == sf_dir:
-                out.append(path)
-        for root_key in _USER_PROJ_ROOTS:
-            for _name, (_obj, path) in e["user_proj"][root_key].items():
-                out.append(path)
-        # S23b: a reachable commit's stored change deltas are live —
-        # once the entry leaves the ledger, its delta dirs are garbage
-        for p in (e.get("cdf") or {}).values():
-            out.append(p)
-    return out
-
-
-def _fact_view_names(spark: SparkSession, sf_dir: str) -> list[str]:
-    """The fact views the ENGINE currently owns and still controls —
-    computed against the LIVE ledgers before any swap, so a name the
-    user took over after the snapshot is never clobbered."""
-    sd = spark.__dict__
-    ours: dict = sd.get("_bdp_fact_views") or {}
-    ids: dict = sd.get("_bdp_fact_view_ids") or {}
+def _fact_view_names(
+    spark: SparkSession, sf_dir: str, other: WarehouseState
+) -> list[str]:
+    """The fact views the ENGINE owns for ``sf_dir`` and still
+    controls, whose relation can differ between the installed state and
+    ``other`` — computed before any swap, so a name the user took over
+    is never clobbered. A table ingested in NEITHER state reads the
+    immutable fixture on both sides; rebuilding its relation and plan
+    identity twice per block was the dominant as_of cost at scale
+    (measured 7.9 s/block at sf5 before this skip)."""
+    sess = session_state(spark)
+    changed = warehouse(spark, sf_dir).ingested | other.ingested
     names = []
     for name in ("lineitem", "orders", "documents", "events"):
-        if ours.get(name) != sf_dir:
+        if sess.fact_views.get(name) != sf_dir or name not in changed:
             continue
         try:
             if not spark.catalog.tableExists(name):
                 continue
-            rec = ids.get(name)
+            rec = sess.fact_view_ids.get(name)
             if rec is not None and spark.table(name).semanticHash() != rec:
                 continue  # taken over: theirs wins
         except Exception:
@@ -511,23 +460,17 @@ def _fact_view_names(spark: SparkSession, sf_dir: str) -> list[str]:
 def _repoint_views(
     spark: SparkSession, sf_dir: str, fact_names: list[str]
 ) -> None:
-    """Re-register the given engine-owned fact views (and every
-    engine-owned dim view) from the CURRENTLY ACTIVE serving state —
-    called after each state swap, both directions. Mirrors
-    Engine._ensure_current_views' relation choices and WarehouseTxn's
-    dim re-pointing, minus the takeover checks (the caller resolved
-    ownership against the live ledgers already)."""
+    """Re-register the given engine-owned fact views from the
+    warehouse's INSTALLED state — called after each install, both
+    directions. Mirrors Engine._ensure_current_views' relation choices,
+    minus the takeover checks (the caller resolved ownership first)."""
     from ..catalog import table
-    from ..plans.corpus_routing import (
-        CORPUS_DIMS,
-        current_documents,
-        current_events,
-    )
+    from ..plans.corpus_routing import current_documents, current_events
     from ..plans.routing import current_lineitem, current_orders
     from ..schemas import FIXTURE_SCHEMAS
 
-    sd = spark.__dict__
-    ingested: set = sd.get("_bdp_ingested") or set()
+    sess = session_state(spark)
+    ws = warehouse(spark, sf_dir)
     li_cols = tuple(FIXTURE_SCHEMAS["lineitem"].fieldNames())
     sources = {
         "lineitem": lambda: current_lineitem(spark, sf_dir).select(*li_cols),
@@ -535,52 +478,18 @@ def _repoint_views(
         "documents": lambda: current_documents(spark, sf_dir),
         "events": lambda: current_events(spark, sf_dir),
     }
-    ids: dict = sd.setdefault("_bdp_fact_view_ids", {})
-    seen: dict = sd.setdefault("_bdp_fact_view_epoch", {})
-    epochs: dict = sd.get("_bdp_mutation_epoch") or {}
     for name in fact_names:
         df = (
             sources[name]()
-            if (sf_dir, name) in ingested
+            if name in ws.ingested
             else table(spark, sf_dir, name)
         )
         df.createOrReplaceTempView(name)
-        ids[name] = spark.table(name).semanticHash()
-        seen[name] = (sf_dir, epochs.get((sf_dir, name), 0))
-    for name, owner_dir in (sd.get("_bdp_dim_views") or {}).items():
-        d = CORPUS_DIMS.get(name)
-        if d is not None:
-            try:
-                d.open(spark, owner_dir).createOrReplaceTempView(name)
-            except Exception:
-                pass
+        sess.fact_view_ids[name] = spark.table(name).semanticHash()
+        sess.fact_view_epoch[name] = (sf_dir, ws.mutation_epoch.get(name, 0))
 
 
-@contextmanager
-def as_of(spark: SparkSession, sf_dir: str, version: int):
-    """Read the warehouse as of a committed version. Every read built
-    AND consumed inside the block — routed, scan, or verbatim SQL —
-    answers from that commit; the live state is restored on exit.
-
-    The swapped-in state is a DEEPCOPY of the ledger entry, so a read
-    that lazily deploys a missing layout inside the block (writing a
-    new versioned dir and memoizing it) computes correctly FROM THE
-    SNAPSHOT STATE and its memo entry is discarded on exit; the files
-    it wrote become ordinary superseded-version orphans for VACUUM.
-
-    The whole SESSION's serving state is pinned while the block runs
-    (the memos are session dicts keyed by fixture) — the engine's
-    single-session execution model, same as WarehouseTxn's batches."""
-    sd = spark.__dict__
-    if sd.get("_bdp_txn_active"):
-        raise ValueError(
-            "cannot open a snapshot read inside a warehouse transaction"
-        )
-    if sd.get(_ACTIVE_KEY):
-        raise ValueError(
-            "snapshot reads do not nest — one AS OF version at a time "
-            "(the engine's snapshots are warehouse-wide)"
-        )
+def _reachable(spark: SparkSession, sf_dir: str, version: int) -> dict[str, Any]:
     led = _ledger(spark, sf_dir)
     entry = next((e for e in led if e["version"] == version), None)
     if entry is None:
@@ -592,91 +501,71 @@ def as_of(spark: SparkSession, sf_dir: str, version: int):
             "gc_warehouse(retain_seconds=...) controls how far back "
             "time travel reaches)"
         )
-    fact_names = _fact_view_names(spark, sf_dir)
-    live_state = {k: sd.get(k) for k in _STATE_KEYS}
-    # repoint only the views whose relation actually DIFFERS between
-    # the two states: a table ingested in NEITHER state reads the
-    # immutable fixture on both sides, and rebuilding its relation +
-    # plan identity twice per block is the dominant as_of cost at
-    # scale (measured 7.9 s/block at sf5 before this skip)
-    live_ing = live_state.get("_bdp_ingested") or set()
-    snap_ing = entry["state"].get("_bdp_ingested") or set()
-    fact_names = [
-        n for n in fact_names
-        if (sf_dir, n) in live_ing or (sf_dir, n) in snap_ing
-    ]
-    # if the engine's view registration first happens INSIDE the
-    # block, its ownership records land in the swapped (discarded)
-    # ledgers while the temp views themselves survive — restoring
-    # this marker forces a clean re-registration on the next
-    # statement instead of serving stale snapshot views forever
-    live_views_for = sd.get("_bdp_views_for")
-    live_proj: dict[str, dict[str, tuple[Any, str]]] = {}
-    for root_key in _USER_PROJ_ROOTS:
-        cat = (sd.get(root_key) or {}).get(sf_dir, {})
-        live_proj[root_key] = {n: (u, u.path) for n, u in cat.items()}
-    sd[_ACTIVE_KEY] = True
-    sd["_bdp_as_of_files"] = entry["files"]
+    return entry
+
+
+@contextmanager
+def as_of(spark: SparkSession, sf_dir: str, version: int):
+    """Read the warehouse as of a committed version. Every read of
+    ``sf_dir`` built AND consumed inside the block — routed, scan, or
+    verbatim SQL — answers from that commit; other warehouses keep
+    serving live, and the live state is re-installed on exit.
+
+    The installed state is a COPY of the ledger entry, so a read that
+    lazily deploys a missing layout inside the block computes it FROM
+    THE SNAPSHOT STATE and the entry is discarded on exit; the files it
+    wrote (``_asof`` twins, see state.deploy_name) become ordinary
+    VACUUM orphans."""
+    sess = session_state(spark)
+    if sess.txn_active:
+        raise ValueError(
+            "cannot open a snapshot read inside a warehouse transaction"
+        )
+    if sess.as_of is not None:
+        raise ValueError(
+            "snapshot reads do not nest — one AS OF version at a time "
+            "(a snapshot covers the whole warehouse)"
+        )
+    entry = _reachable(spark, sf_dir, version)
+    live = warehouse(spark, sf_dir)
+    fact_names = _fact_view_names(spark, sf_dir, entry["state"])
+    # if the engine's fixture views are first registered INSIDE the
+    # block, they describe the snapshot — restoring this marker forces
+    # a clean re-registration on the next statement
+    live_views_for = sess.views_for
     # the pinned version NUMBER rides along for consumers that need
-    # "head as of this read" (the CDC-view freshness gate checks
-    # whether any commit up to the pinned version is unconsumed —
-    # streaming/cdc.py cdc_view_fresh)
-    sd["_bdp_as_of_version"] = version
+    # "head as of this read" (streaming/cdc.py cdc_view_fresh)
+    sess.as_of = AsOf(sf_dir, entry["files"], version)
     try:
-        for k in _STATE_KEYS:
-            snap = entry["state"].get(k)
-            if snap is None:
-                sd.pop(k, None)
-            else:
-                sd[k] = copy.deepcopy(snap)
-        for root_key in _USER_PROJ_ROOTS:
-            cat = sd.setdefault(root_key, {}).setdefault(sf_dir, {})
-            cat.clear()
-            for name, (obj, path) in entry["user_proj"][root_key].items():
-                obj.path = path
-                cat[name] = obj
+        install(spark, entry["state"].copy())
         _repoint_views(spark, sf_dir, fact_names)
+        repoint_dim_views(spark, sf_dir)
         yield
     finally:
-        # the unpin + active-flag reset MUST survive any failure in
-        # the exit restore (round-9 ADVICE item 1): if the view
-        # re-point raises, a still-True flag would make every future
-        # mutation in the session refuse as "read-only inside an
-        # AS OF snapshot read" — the session would be stuck forever
+        # the unpin MUST survive any failure in the exit re-point
+        # (round-9 ADVICE item 1): a pin left set would make every
+        # future mutation in the session refuse as "read-only inside
+        # an AS OF snapshot read"
         try:
-            for k in _STATE_KEYS:
-                if live_state.get(k) is None:
-                    sd.pop(k, None)
-                else:
-                    sd[k] = live_state[k]
-            for root_key in _USER_PROJ_ROOTS:
-                cat = sd.setdefault(root_key, {}).setdefault(sf_dir, {})
-                cat.clear()
-                for name, (obj, path) in live_proj[root_key].items():
-                    obj.path = path
-                    cat[name] = obj
+            install(spark, live)  # still pinned: the live caches survive
             # unpin BEFORE the exit re-point: the restored live views
             # must scan the full directories, not the snapshot listing
-            sd.pop("_bdp_as_of_files", None)
-            sd.pop("_bdp_as_of_version", None)
+            sess.as_of = None
             _repoint_views(spark, sf_dir, fact_names)
-            if live_views_for is None:
-                sd.pop("_bdp_views_for", None)
-            else:
-                sd["_bdp_views_for"] = live_views_for
+            repoint_dim_views(spark, sf_dir)
+            sess.views_for = live_views_for
         finally:
-            sd.pop("_bdp_as_of_files", None)
-            sd.pop("_bdp_as_of_version", None)
-            sd[_ACTIVE_KEY] = False
+            sess.as_of = None
+
 
 def restore_warehouse(spark: SparkSession, sf_dir: str, version: int) -> None:
     """RESTORE — roll the LIVE warehouse back to a past committed
     version (the statement spelling is ``RESTORE TO VERSION AS OF
-    n``). The serving memos, tombstone sets, watermarks, ingest
-    ledger, and user-projection catalogs all return to that commit,
-    the engine-owned temp views re-point, every file the undone
-    commits wrote is removed, and history TRUNCATES to the restored
-    version plus one new commit recording the restore.
+    n``): a copy of the entry's state is installed (layouts, tombstone
+    sets, watermarks, ingest set, user-projection catalogs), every file
+    the undone commits wrote is removed, the engine-owned temp views
+    re-point, and history TRUNCATES to the restored version plus one
+    new commit recording the restore. Other warehouses are untouched.
 
     DELIBERATE divergence from Delta's RESTORE (which keeps the
     undone versions restorable-forward): this engine's append-style
@@ -696,118 +585,46 @@ def restore_warehouse(spark: SparkSession, sf_dir: str, version: int) -> None:
     an erroneous mutation. An erasure becomes FINAL once the
     pre-delete versions are gone — run VACUUM past the window (or
     with the default eager window) after a compliance delete."""
-    import os
-
-    from .bucketed import _layout_paths
-    from .txn import _walk_files
-
-    sd = spark.__dict__
-    if sd.get("_bdp_txn_active"):
+    sess = session_state(spark)
+    if sess.txn_active:
         raise ValueError("cannot RESTORE inside a warehouse transaction")
-    if sd.get(_ACTIVE_KEY):
+    if sess.as_of is not None:
         raise ValueError(
             "the warehouse is read-only inside an AS OF snapshot read"
         )
-    led = _ledger(spark, sf_dir)
-    entry = next((e for e in led if e["version"] == version), None)
-    if entry is None:
-        have = [e["version"] for e in led]
-        raise ValueError(
-            f"no reachable snapshot version {version} to restore "
-            f"(reachable: {have or 'none'}; versions expire with "
-            "VACUUM retention)"
-        )
+    entry = _reachable(spark, sf_dir, version)
     next_version = _next_seq(spark, sf_dir)
-    fact_names = _fact_view_names(spark, sf_dir)
-    live_ing = sd.get("_bdp_ingested") or set()
-    snap_ing = entry["state"].get("_bdp_ingested") or set()
-    fact_names = [
-        n for n in fact_names
-        if (sf_dir, n) in live_ing or (sf_dir, n) in snap_ing
-    ]
-    # 1. serving state back to the commit
-    for k in _STATE_KEYS:
-        snap = entry["state"].get(k)
-        if snap is None:
-            sd.pop(k, None)
-        else:
-            sd[k] = copy.deepcopy(snap)
-    for root_key in _USER_PROJ_ROOTS:
-        cat = sd.setdefault(root_key, {}).setdefault(sf_dir, {})
-        cat.clear()
-        for name, (obj, path) in entry["user_proj"][root_key].items():
-            obj.path = path
-            cat[name] = obj
-    # 2. remove every file the undone commits wrote (appends into
-    #    shared row-store dirs AND newer versioned dirs alike), then
-    #    drop now-empty dirs — WarehouseTxn._rollback's cleanup at
-    #    commit granularity
-    _tag, wh = _layout_paths(sf_dir)
-    if os.path.isdir(wh):
-        for f in _walk_files(wh) - set(entry["files"]):
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-        for dirpath, dirs, files in os.walk(wh, topdown=False):
-            if not dirs and not files and dirpath != wh:
-                try:
-                    os.rmdir(dirpath)
-                except OSError:
-                    pass
-    # 3. invalidate cached file listings of the restored bucketed
-    #    tables so reads re-list post-cleanup
-    for names in (sd.get("_bdp_bucketed_memo") or {}).values():
-        for name in names:
-            try:
-                spark.catalog.refreshTable(name)
-            except Exception:
-                pass
+    fact_names = _fact_view_names(spark, sf_dir, entry["state"])
+    install(spark, entry["state"].copy())
+    undo_files_since(spark, sf_dir, entry["files"])
     _repoint_views(spark, sf_dir, fact_names)
-    # 4. history truncates to the restored version; the restore itself
-    #    is the next commit in the ORIGINAL numbering
+    # history truncates to the restored version; the restore itself
+    # is the next commit in the ORIGINAL numbering
+    led = _ledger(spark, sf_dir)
     led[:] = [e for e in led if e["version"] <= version]
     led.append(
         {
             "version": next_version,
             "note": f"restore to {version}",
             "wall": time.time(),
-            # S23c (round 12, r11-VERDICT item 4 — resolved by
-            # analysis, not by the suggested mechanism): under this
-            # engine's TRUNCATING restore, the restore commit's state
-            # is byte-identical to its reachable predecessor's (the
+            # S23c (round 12, r11-VERDICT item 4): under this engine's
+            # TRUNCATING restore, the restore commit's state is
+            # byte-identical to its reachable predecessor's (the
             # restore target — the undone versions leave the ledger),
             # so per the feed's adjacent-reachable-version semantics
-            # its change set is EMPTY by construction. The suggested
-            # sign-flipped inverse deltas describe Delta's
-            # KEEP-FORWARD restore (pre-restore state still
-            # reachable); staging them here was implemented, and the
-            # fallback-equivalence gate correctly rejected it (the
-            # state diff vs the reachable predecessor is ∅; the
-            # versioned-DuckDB fuzzer model pins the same). Staging
-            # the empty set IS the change-sized read: O(1) per
-            # restore commit, replacing a full O(|state|) diff that
-            # always produced zero rows. docs/DECISIONS.md records
-            # the reasoning.
+            # its change set is EMPTY by construction. Sign-flipped
+            # inverse deltas would describe Delta's KEEP-FORWARD
+            # restore; staging them was implemented and the
+            # fallback-equivalence gate rejected it. Staging the empty
+            # set is O(1) per restore commit, replacing a full
+            # O(|state|) diff that always produced zero rows.
+            # docs/DECISIONS.md records the reasoning.
             "cdf": {},
             **_capture(spark, sf_dir),
         }
     )
     # the undone commits' pinned-scan plans can never be probed again
     evict_pinned_memo(spark)
-    # Round 12: RESTORE rolls _bdp_projection_versions back with the
-    # rest of the serving state, so a LATER mutation can re-publish a
-    # version PATH whose undone files the restore just removed — a
-    # live versioned-scan memo entry for that path would serve the
-    # dead listing (caught by TestRestore during this round's memo
-    # work). Same hazard class as WarehouseTxn rollback; same fix.
-    spark.__dict__.pop("_bdp_versioned_scan_memo", None)
-    # Round 13 (r12-ADVICE low): drop the append-layout SCHEMA memo
-    # too — cheap insurance in case a restore ever reverts to a
-    # differently-shaped layout (a contract violation today, but the
-    # un-memoized read would fail loudly where a stale schema would
-    # silently project).
-    spark.__dict__.pop("_bdp_layout_schema_memo", None)
 
 
 # ---------------------------------------------------------------------------
@@ -986,7 +803,6 @@ def q43_sql_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle, a storage swap exactly as the round-10 docstring promised.
 # ---------------------------------------------------------------------------
 
-_CDF_PENDING_KEY = "_bdp_cdf_pending"
 _CDF_NOOP_NOTES = ("base", "checkpoint", "optimize", "vacuum")
 
 
@@ -997,7 +813,9 @@ def mark_cdf_staged(spark: SparkSession, sf_dir: str) -> None:
     entry; its PRESENCE is the completeness contract table_changes
     trusts — a mutation path that cannot guarantee it simply never
     calls this, and its commits keep the state-diff fallback."""
-    spark.__dict__.setdefault(_CDF_PENDING_KEY, {}).setdefault(sf_dir, {})
+    h = warehouse(spark, sf_dir).history
+    if h.cdf_pending is None:
+        h.cdf_pending = {}
 
 
 def stage_changes(
@@ -1023,8 +841,8 @@ def stage_changes(
     staged files and the pending dict is cleared. The delta dirs are
     TOP-LEVEL warehouse entries (``cdf_<table>_<tag>_c<n>``) like
     every versioned layout, so VACUUM's basename-keyed live set
-    governs them: reachable commits keep theirs via
-    snapshot_live_entries, pruned commits' become ordinary garbage.
+    governs them: reachable commits keep theirs (gc_warehouse walks
+    the ledger), pruned commits' become ordinary garbage.
 
     Scale posture: one change-sized parquet write per (commit,
     table) — the documented O(|changes|) CDF storage cost, paid at
@@ -1038,7 +856,8 @@ def stage_changes(
     from .bucketed import _layout_paths
 
     mark_cdf_staged(spark, sf_dir)
-    pend: dict = spark.__dict__[_CDF_PENDING_KEY][sf_dir]
+    h = warehouse(spark, sf_dir).history
+    pend = h.cdf_pending
     schema = FIXTURE_SCHEMAS[table_name]
     if change_type is not None:
         df = df.withColumn("_change_type", F.lit(change_type))
@@ -1052,9 +871,8 @@ def stage_changes(
     path = pend.get(table_name)
     if path is None:
         tag, wh = _layout_paths(sf_dir)
-        seqs: dict = spark.__dict__.setdefault("_bdp_cdf_seq", {})
-        c = seqs.get(sf_dir, 0) + 1
-        seqs[sf_dir] = c
+        h.cdf_seq += 1
+        c = h.cdf_seq
         path = os.path.join(wh, f"cdf_{table_name}_{tag}_c{c}")
         # the counter is SESSION-scoped: a new session over the same
         # warehouse (crash before VACUUM collected the old session's
@@ -1183,7 +1001,7 @@ def table_changes(
             f"{sorted(openers)}; got {table_name!r} (dimension/fixture "
             "tables are immutable — they have no changes to feed)"
         )
-    if spark.__dict__.get(_ACTIVE_KEY):
+    if session_state(spark).as_of is not None:
         raise ValueError(
             "table_changes cannot run inside an AS OF snapshot read "
             "(it pins versions itself)"

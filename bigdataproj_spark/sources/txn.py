@@ -1,100 +1,66 @@
 """Warehouse-level refresh atomicity: ALL-OR-NOTHING ingest batches.
 
-Every individual layout refresh in this package is already atomic —
-aggregate projections publish a new version the serving memo swings to
-in one assignment, row-level appends become visible at Spark's job
-commit. What round 7 left open (round-7 VERDICT, item 2) is the
-WAREHOUSE level: :func:`~.maintenance.refresh_warehouse` applies ~12
-layout refreshes sequentially, so a failure mid-sequence used to leave
-the cubes describing "base + delta" while later layouts still
-described "base" — routed answers disagreed BY LAYOUT until a re-run,
-and re-running was not even safe (the additive cube merges would apply
-the delta twice).
+Every individual layout refresh is atomic on its own — aggregate
+projections publish a new version and swing their entry in the
+warehouse's :class:`~.state.WarehouseState` in one assignment,
+row-level appends become visible at Spark's job commit. The warehouse
+level is not: :func:`~.maintenance.refresh_warehouse` applies ~12
+layout refreshes in sequence, so a failure mid-sequence would leave the
+cubes describing "base + delta" while later layouts still describe
+"base", and a re-run would apply the additive cube merges twice.
 
-:class:`WarehouseTxn` closes that with the classic
-write-ahead-then-commit discipline, adapted to this engine's serving
-model (all routing state lives in session-scoped memo dicts; all
-layout bytes live under one per-fixture warehouse directory):
+:class:`WarehouseTxn` closes that with write-ahead-then-commit:
 
-- On entry it snapshots every serving memo/ledger (projection memos
-  and versions, the bucketed/zorder/dated/docstore layout memos, the
-  user-projection catalog's current paths, the ingest ledger, the
-  dim-view ownership ledger) plus the recursive FILE LISTING of the
-  fixture's warehouse directory.
-- The batch then runs exactly as before — later refreshes in the
-  sequence deliberately read EARLIER refreshes' new versions through
-  the memos (the dimension-first ordering refresh_warehouse encodes
-  requires it), and in the engine's single-session execution model no
-  query runs between those swings.
-- On ANY exception, rollback restores every memo to the pre-batch
-  epoch, deletes every file the failed batch wrote under the warehouse
-  directory (the local-filesystem equivalent of an object-store GC of
-  uncommitted data files — a table format keeps them unreachable
-  instead), refreshes the bucketed tables' file listings, and
-  re-points every ENGINE-OWNED dim temp view back at its pre-batch
-  version. The exception then propagates.
+- On entry it takes :meth:`WarehouseState.copy` of the warehouse's
+  serving state and the recursive file LISTING of its warehouse
+  directory (:func:`listing`).
+- The batch runs as before — later refreshes read earlier refreshes'
+  new versions through the live state (the dimension-first ordering
+  refresh_warehouse encodes needs that).
+- On ANY exception, rollback installs the entry copy
+  (:func:`~.state.install`, which also drops the scan caches) and
+  :func:`undo_files_since` puts the directory back: every file the
+  batch wrote is deleted (the local-filesystem equivalent of an
+  object-store GC of uncommitted data files), the bucketed tables'
+  listings are refreshed, and the engine-owned dim views of this
+  warehouse re-point at the restored versions. The exception then
+  propagates.
 
-The resulting contract, pinned by failure-injection tests in
-tests/test_maintenance.py: after a failed ingest, EVERY router, scan
-path, verbatim view, and user projection serves the pre-batch epoch —
-never a mix — and redelivering the same batch applies it exactly once
-(the rolled-back state has no memory of the failed attempt).
+Only the transaction's own warehouse goes back; other warehouses in
+the session, and the session-wide temp-view ownership, are untouched.
+After a failed ingest every router, scan path, verbatim view and user
+projection serves the pre-batch epoch — never a mix — and redelivering
+the batch applies it exactly once (tests/test_maintenance.py pins both
+with failure injection).
 
 Catalog-table residue: a failed batch may leave an orphan catalog
 entry for a versioned table name (saveAsTable registered it before the
 failure). Nothing resolves table names except through the restored
-memos, and a redelivered batch recreates the same versioned name with
-mode("overwrite"), so the orphan is inert — the same posture as the
-orphan parquet versions every refresh leaves for scheduled GC.
+state, and a redelivered batch recreates the same versioned name with
+mode("overwrite"), so the orphan is inert.
 
-At 100 TB the only thing that changes is the rollback's file cleanup:
-on an object store you would delete the uncommitted files by listing
-the batch's write paths (all version- or batch-suffixed, so they are
-enumerable without a full tree walk); the memo/ledger restore — the
-part that makes answers consistent — is O(#layouts) either way.
+At 100 TB only the file cleanup changes: on an object store you would
+delete the batch's uncommitted files by listing its write paths (all
+version- or batch-suffixed, so enumerable without a tree walk); the
+state restore is O(#layouts) either way.
 
 CONTRACT FOR NEW LAYOUTS — no in-place writes. Rollback restores the
-pre-batch epoch only because every layout in this package either
-publishes a NEW versioned directory (aggregate projections, user
-projections, dim snapshots) or APPENDS new files (bucketed/dated/
-clustered row stores, tombstone sets): a pre-batch file is never
-overwritten or truncated, so "delete files not in the entry listing +
-restore memos" is a complete undo. A layout that rewrote a file in
-place would silently break rollback — the entry listing has the path,
-so the mutated bytes would survive. tests/test_maintenance.py pins
-this mechanically: after a full ingest batch, every pre-batch file is
-byte-identical. If a future layout genuinely needs rewrite semantics,
-it must write a new version and swing a memo, like everything else.
+pre-batch epoch only because every layout either publishes a NEW
+versioned directory (:meth:`WarehouseState.publish`) or APPENDS new
+files: a pre-batch file is never overwritten or truncated, so "delete
+files not in the entry listing + install the entry state" is a
+complete undo. A layout that rewrote a file in place would silently
+break rollback. tests/test_maintenance.py pins this: after a full
+ingest batch, every pre-batch file is byte-identical.
 """
 
 from __future__ import annotations
 
-import copy
 import os
-from typing import Any
 
 from pyspark.sql import SparkSession
 
-# Serving-state session dicts snapshotted wholesale. Each maps simple
-# keys to paths/names/sets — one level of copy.deepcopy is cheap
-# (dozens of entries) and restores shared-nothing state.
-_STATE_KEYS = (
-    "_bdp_projection_memo",
-    "_bdp_projection_versions",
-    "_bdp_bucketed_memo",
-    "_bdp_zorder_memo",
-    "_bdp_dated_memo",
-    "_bdp_dated_events_memo",
-    "_bdp_docstore_memo",
-    "_bdp_ingested",
-    "_bdp_dim_views",
-    "_bdp_fact_views",
-    "_bdp_fact_view_ids",
-    "_bdp_fact_view_epoch",
-    "_bdp_mutation_epoch",
-    "_bdp_tombstones",
-    "_bdp_retention_watermarks",
-)
+from .state import WarehouseState, install, session_state, warehouse
 
 
 def _walk_files(root: str) -> set[str]:
@@ -105,14 +71,68 @@ def _walk_files(root: str) -> set[str]:
     return out
 
 
+def listing(sf_dir: str) -> frozenset[str]:
+    """Every file under the warehouse directory of ``sf_dir``."""
+    from .bucketed import _layout_paths
+
+    _tag, wh = _layout_paths(sf_dir)
+    return frozenset(_walk_files(wh)) if os.path.isdir(wh) else frozenset()
+
+
+def repoint_dim_views(spark: SparkSession, sf_dir: str) -> None:
+    """Re-register the engine-owned dim temp views of ``sf_dir`` from
+    its installed state."""
+    from ..plans.corpus_routing import CORPUS_DIMS
+
+    for name, owner in list(session_state(spark).dim_views.items()):
+        d = CORPUS_DIMS.get(name)
+        if owner == sf_dir and d is not None:
+            try:
+                d.open(spark, sf_dir).createOrReplaceTempView(name)
+            except Exception:
+                pass
+
+
+def undo_files_since(
+    spark: SparkSession, sf_dir: str, files: frozenset[str]
+) -> None:
+    """After an older state was installed: delete every file written
+    under the warehouse since ``files`` was listed (staged versions,
+    appends, committer temp dirs) and the directories left empty,
+    refresh the restored bucketed tables' cached listings, and re-point
+    the warehouse's engine-owned dim views."""
+    from .bucketed import _layout_paths
+
+    _tag, wh = _layout_paths(sf_dir)
+    if os.path.isdir(wh):
+        for f in _walk_files(wh) - files:
+            try:
+                os.remove(f)
+            except OSError:
+                pass
+        for dirpath, dirs, fs in os.walk(wh, topdown=False):
+            if not dirs and not fs and dirpath != wh:
+                try:
+                    os.rmdir(dirpath)
+                except OSError:
+                    pass
+    for names in warehouse(spark, sf_dir).bucketed.values():
+        for name in names:
+            try:
+                spark.catalog.refreshTable(name)
+            except Exception:
+                pass
+    repoint_dim_views(spark, sf_dir)
+
+
 class WarehouseTxn:
     """Context manager making one maintenance batch all-or-nothing.
 
     ``with WarehouseTxn(spark, sf_dir): <apply batch>`` — commit is a
-    no-op (the batch's own memo swings already published), rollback on
-    exception restores the pre-batch epoch everywhere. Reentrant use
-    (a batch step that itself opens a txn) is a no-op inner context:
-    the outermost txn owns the snapshot.
+    no-op (the batch's own swings already published), rollback on
+    exception restores the pre-batch epoch. Reentrant use (a batch
+    step that itself opens a txn) is a no-op inner context: the
+    outermost txn owns the snapshot.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str, note: str = "batch"):
@@ -120,54 +140,44 @@ class WarehouseTxn:
         self.sf_dir = sf_dir
         self.note = note
         self._outer = False
-        self._snap: dict[str, Any] = {}
-        self._files: set[str] | None = None
-        self._user_paths: dict[tuple[str, str], str] = {}
-        self._wh: str | None = None
+        self._snap: WarehouseState | None = None
+        self._files: frozenset[str] = frozenset()
 
     # -- lifecycle --------------------------------------------------------
     def __enter__(self) -> "WarehouseTxn":
-        sd = self.spark.__dict__
-        if sd.get("_bdp_as_of_active"):
+        sess = session_state(self.spark)
+        if sess.as_of is not None:
             raise ValueError(
                 "the warehouse is read-only inside an AS OF snapshot "
                 "read — run mutations outside the as_of block"
             )
-        if sd.get("_bdp_txn_active"):
+        if sess.txn_active:
             return self  # inner context: outermost txn owns the snapshot
         # S22: the first mutation against a warehouse records version 0
         # (the pre-any-mutation base) so time travel can reach it
         from .snapshots import ensure_base
 
         ensure_base(self.spark, self.sf_dir)
-        # Take the snapshot BEFORE claiming the active flag: if any part
-        # of it raises (deepcopy, layout-path resolution, the warehouse
-        # walk), the session must not be left with a dangling flag that
+        # Take the snapshot BEFORE claiming the active flag: if it
+        # raises, the session must not be left with a dangling flag that
         # turns every later txn into a rollback-less inner context.
-        for k in _STATE_KEYS:
-            self._snap[k] = copy.deepcopy(sd.get(k))
-        # user-projection catalogs (lineitem star + corpus): entries are
-        # mutable dataclasses whose .path swings on refresh; snapshot
-        # name->path (plus the key set, so a projection deployed
-        # mid-batch disappears on rollback)
-        for root_key in ("_bdp_user_projections", "_bdp_corpus_user_projections"):
-            for d, cat in sd.get(root_key, {}).items():
-                for name, u in cat.items():
-                    self._user_paths[(root_key, d, name)] = u.path
-        from .bucketed import _layout_paths
-
-        _tag, self._wh = _layout_paths(self.sf_dir)
-        self._files = _walk_files(self._wh) if os.path.isdir(self._wh) else set()
-        sd["_bdp_txn_active"] = True
+        self._snap = warehouse(self.spark, self.sf_dir).copy()
+        self._files = listing(self.sf_dir)
+        sess.txn_active = True
         self._outer = True
         return self
 
     def __exit__(self, exc_type, exc, tb) -> bool:
         if not self._outer:
             return False
-        self.spark.__dict__["_bdp_txn_active"] = False
+        session_state(self.spark).txn_active = False
         if exc_type is not None:
-            self._rollback()
+            # S23b: a failed batch's staged change deltas must not leak
+            # into the NEXT commit's ledger entry (their files go with
+            # the file cleanup)
+            self._snap.history.cdf_pending = None
+            install(self.spark, self._snap)
+            undo_files_since(self.spark, self.sf_dir, self._files)
         else:
             # S22: a committed batch is a numbered, time-travelable
             # version; a rolled-back one leaves no ledger entry
@@ -175,67 +185,3 @@ class WarehouseTxn:
 
             record_commit(self.spark, self.sf_dir, self.note)
         return False  # always propagate
-
-    # -- rollback ---------------------------------------------------------
-    def _rollback(self) -> None:
-        sd = self.spark.__dict__
-        # S23b: a failed batch's staged change deltas must not leak
-        # into the NEXT commit's ledger entry (their files go with the
-        # file cleanup below)
-        (sd.get("_bdp_cdf_pending") or {}).pop(self.sf_dir, None)
-        for k in _STATE_KEYS:
-            if self._snap.get(k) is None:
-                sd.pop(k, None)
-            else:
-                sd[k] = self._snap[k]
-        # user projections (both catalogs): drop mid-batch deploys,
-        # restore paths
-        for root_key in ("_bdp_user_projections", "_bdp_corpus_user_projections"):
-            root: dict = sd.get(root_key, {})
-            for d in list(root):
-                cat = root[d]
-                for name in list(cat):
-                    if (root_key, d, name) not in self._user_paths:
-                        del cat[name]
-                    else:
-                        cat[name].path = self._user_paths[(root_key, d, name)]
-        # Round 12: the live versioned-scan memo (snapshots.py
-        # versioned_parquet) keys on paths; rolling back
-        # _bdp_projection_versions means a later refresh can REUSE a
-        # version path whose files the cleanup below removes — a memo
-        # entry for such a path would serve the dead listing. Clearing
-        # the whole memo is cheap (it rebuilds lazily, one listing per
-        # live path) and removes the hazard class outright.
-        sd.pop("_bdp_versioned_scan_memo", None)
-        # delete every file the failed batch wrote under the warehouse
-        # (staged versions, half-applied appends, committer temp dirs)
-        if self._wh and os.path.isdir(self._wh):
-            for f in _walk_files(self._wh) - (self._files or set()):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-            for dirpath, dirs, files in os.walk(self._wh, topdown=False):
-                if not dirs and not files and dirpath != self._wh:
-                    try:
-                        os.rmdir(dirpath)
-                    except OSError:
-                        pass
-        # bucketed catalog tables: invalidate cached file listings for
-        # the (restored) current names so reads re-list post-cleanup
-        for names in (sd.get("_bdp_bucketed_memo") or {}).values():
-            for name in names:
-                try:
-                    self.spark.catalog.refreshTable(name)
-                except Exception:
-                    pass
-        # engine-owned dim temp views: re-point at the restored epoch
-        from ..plans.corpus_routing import CORPUS_DIMS
-
-        for name, owner_dir in (sd.get("_bdp_dim_views") or {}).items():
-            d = CORPUS_DIMS.get(name)
-            if d is not None:
-                try:
-                    d.open(self.spark, owner_dir).createOrReplaceTempView(name)
-                except Exception:
-                    pass

@@ -66,6 +66,7 @@ from ..plans.routing import (
 from ..catalog import table
 from .bucketed import _layout_paths, _lineitem_with_derived, bucketed_fact_tables
 from .corpus_cubes import merge_partial_frames
+from .state import warehouse
 
 # The bucketed fact's stored derived columns, per routable measure
 # (the same write-time contract _SPINE_INT_COLS documents).
@@ -112,8 +113,7 @@ class _UserProjection:
 
 
 def _catalog(spark: SparkSession, sf_dir: str) -> dict[str, _UserProjection]:
-    root: dict = spark.__dict__.setdefault("_bdp_user_projections", {})
-    return root.setdefault(sf_dir, {})
+    return warehouse(spark, sf_dir).user_projections
 
 
 def user_projections(spark: SparkSession, sf_dir: str) -> list[Projection]:
@@ -304,12 +304,11 @@ def deploy_projection(
 
     evict_versioned_scan(spark, path)  # redeploy overwrites the base path
 
-    cat = _catalog(spark, sf_dir)
-
     def _open(s: SparkSession, d: str) -> DataFrame:
         from .snapshots import versioned_parquet
 
-        return versioned_parquet(s, cat[name].path)  # current version (immutable path)
+        # the installed state's current version (an immutable path)
+        return versioned_parquet(s, _catalog(s, d)[name].path)
 
     proj = Projection(
         name=f"user:{name}",
@@ -329,7 +328,7 @@ def deploy_projection(
         part=part,
         supp=supp,
     )
-    cat[name] = _UserProjection(
+    _catalog(spark, sf_dir)[name] = _UserProjection(
         name, tuple(keys), tuple(measures), chain, path, path, proj,
         part=part, supp=supp,
     )
@@ -403,10 +402,7 @@ def refresh_projection(
     merged = merge_partial_frames(
         spark.read.parquet(u.path), delta_cube, u.keys, add, mins, maxs
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(u.base_path, 0) + 1
-    versions[u.base_path] = v
-    new_path = f"{u.base_path}_v{v}"
+    new_path = warehouse(spark, sf_dir).publish(u.base_path)
     merged.write.mode("overwrite").parquet(new_path)
     u.path = new_path
     return new_path

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..registry import query
 from .bucketed import _layout_paths
+from .state import deploy_name, warehouse
 
 _Z_BITS = 31  # interleaved bits per column; 2^31 covers key domains
 # far past any TPC-H scale (l_partkey ~2M at sf10, ~200M at sf1000);
@@ -169,28 +170,18 @@ def zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
     """Deploy (memoized per session+fixture) the lineitem layout
     Z-ordered on (l_partkey, l_suppkey) — the two-supplier-dimension
     query columns — and return its path."""
+    ws = warehouse(spark, sf_dir)
+    if ws.zorder is not None:
+        return ws.zorder
     tag, wh = _layout_paths(sf_dir)
-    memo: dict = spark.__dict__.setdefault("_bdp_zorder_memo", {})
-    if sf_dir in memo:
-        return memo[sf_dir]
-    path = os.path.join(wh, f"lineitem_zorder_{tag}")
-    if spark.__dict__.get("_bdp_as_of_active"):
-        # S22: a lazy deploy INSIDE a snapshot read must never write
-        # the live layout path — overwrite mode would destroy the live
-        # layout's appended batches (found by direct probe: an
-        # as_of(0) scan wiped a post-ingest Z-order row). The twin
-        # path lands in the SWAPPED memo (discarded at exit; files are
-        # VACUUM orphans). Content is epoch-correct: a missing memo
-        # means this table was never ingested by that epoch, so the
-        # fixture IS the epoch's relation.
-        path += "_asof"
+    path = deploy_name(spark, sf_dir, os.path.join(wh, f"lineitem_zorder_{tag}"))
     write_zordered(
         table(spark, sf_dir, "lineitem").select(*_ZORDER_COLS),
         path,
         "l_partkey",
         "l_suppkey",
     )
-    memo[sf_dir] = path
+    ws.zorder = path
     return path
 
 

@@ -177,14 +177,15 @@ def cdc_view_fresh(
     """Whether a CDC-maintained view version is CURRENT for reads:
     its recorded watermark covers every table-touching commit up to
     the read's head — the live ledger head normally, the pinned
-    version inside an ``as_of`` block (where the catalog path has
-    been spliced to that commit's published version). Commits the
+    version inside an ``as_of`` block of this warehouse (whose
+    installed catalog holds that commit's published version). Commits the
     consumer has not polled past that verifiably did not touch the
     view's table (other tables' ingests, OPTIMIZE, VACUUM) do not
     stale it. A pre-sidecar dir is never fresh (nothing records what
     it folded in). O(#reachable commits) dict work — no I/O beyond
     one small sidecar read."""
     from ..sources.snapshots import _commit_touches, _ledger
+    from ..sources.state import session_state
 
     w = _version_watermark(version_dir)
     if w is None:
@@ -192,8 +193,11 @@ def cdc_view_fresh(
     led = _ledger(spark, sf_dir)
     if not led:
         return True
-    pin = spark.__dict__.get("_bdp_as_of_version")
-    head = pin if pin is not None else led[-1]["version"]
+    pin = session_state(spark).as_of
+    if pin is not None and pin.sf_dir == sf_dir:
+        head = pin.version
+    else:
+        head = led[-1]["version"]
     return not any(
         w < e["version"] <= head and _commit_touches(e["note"], table)
         for e in led
@@ -481,13 +485,12 @@ class CdcProjectionConsumer:
             _CorpusUserProjection,
         )
 
-        cat = _catalog(self.spark, self.sf_dir)
         name = self.name
 
         def _open(s: SparkSession, d: str) -> DataFrame:
             from ..sources.snapshots import versioned_parquet
 
-            return versioned_parquet(s, cat[name].path)  # current version
+            return versioned_parquet(s, _catalog(s, d)[name].path)  # current version
 
         proj = CorpusProjection(
             name=f"user:{name}",
@@ -500,7 +503,7 @@ class CdcProjectionConsumer:
             count_star_col="cnt",
             open=_open,
         )
-        cat[name] = _CorpusUserProjection(
+        _catalog(self.spark, self.sf_dir)[name] = _CorpusUserProjection(
             name, self.table, self.keys, self.measures, None, (),
             path, self.table_dir, proj, maintained_by="cdc",
         )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from bigdataproj_spark.catalog import table
 from bigdataproj_spark.plans import physical_plan
+from bigdataproj_spark.sources.state import warehouse
 
 
 @pytest.fixture(scope="module")
@@ -146,7 +147,7 @@ def test_incremental_rollup_refresh_equals_rebuild(spark, sf_dir):
         # the synthetic delta is NOT fixture data: point the shared
         # session's memo back at the base projection so later tests
         # (e.g. the q39 oracle row) see the fixture-derived layout
-        spark.__dict__["_bdp_projection_memo"][("order_revenue", sf_dir)] = base
+        warehouse(spark, sf_dir).projections["order_revenue"] = base
 
 
 def test_incremental_cube_refresh_equals_rebuild(spark, sf_dir):
@@ -194,7 +195,7 @@ def test_incremental_cube_refresh_equals_rebuild(spark, sf_dir):
         assert pricing_cube_table(spark, sf_dir) == new_path
         load_all()["q46_bucketed_pricing"].build(spark, sf_dir)
     finally:
-        spark.__dict__["_bdp_projection_memo"][("pricing_cube", sf_dir)] = base
+        warehouse(spark, sf_dir).projections["pricing_cube"] = base
 
 
 def test_incremental_denorm_refresh_equals_rebuild(spark, sf_dir):
@@ -248,7 +249,7 @@ def test_incremental_denorm_refresh_equals_rebuild(spark, sf_dir):
         assert got.equals(expected[got.columns.tolist()])
         assert order_revenue_projection(spark, sf_dir)[1] == new_name
     finally:
-        spark.__dict__["_bdp_projection_memo"][("order_revenue", sf_dir)] = base
+        warehouse(spark, sf_dir).projections["order_revenue"] = base
 
 
 def test_incremental_star_date_cube_refresh_equals_rebuild(spark, sf_dir):
@@ -309,7 +310,7 @@ def test_incremental_star_date_cube_refresh_equals_rebuild(spark, sf_dir):
         assert star_date_cube_table(spark, sf_dir) == new_path
         load_all()["r85_routed_star_date"].build(spark, sf_dir)
     finally:
-        spark.__dict__["_bdp_projection_memo"][("star_date_cube", sf_dir)] = base
+        warehouse(spark, sf_dir).projections["star_date_cube"] = base
 
 
 def test_stream_ingest_maintains_pricing_cube(spark, sf_dir, tmp_path):

@@ -35,6 +35,7 @@ from bigdataproj_spark.plans.sqlfront import (
     parse_sql,
     route_sql,
 )
+from bigdataproj_spark.sources.state import warehouse
 from bigdataproj_spark.testing import compare_frames
 
 _FUZZ_SCALE = int(os.environ.get("FUZZ_SCALE", "1"))
@@ -429,7 +430,7 @@ def test_docs_cube_refresh_equals_rebuild(spark, sf_dir):
         # the memo now serves the refreshed version to the router
         assert docs_stats_cube_table(spark, sf_dir) == new_path
     finally:
-        spark.__dict__["_bdp_projection_memo"][("docs_stats_cube", sf_dir)] = base
+        warehouse(spark, sf_dir).projections["docs_stats_cube"] = base
 
 
 def test_events_cube_refresh_equals_rebuild(spark, sf_dir):
@@ -469,7 +470,7 @@ def test_events_cube_refresh_equals_rebuild(spark, sf_dir):
         assert got.equals(expected[got.columns.tolist()])
         assert events_hourly_cube_table(spark, sf_dir) == new_path
     finally:
-        spark.__dict__["_bdp_projection_memo"][("events_hourly_cube", sf_dir)] = base
+        warehouse(spark, sf_dir).projections["events_hourly_cube"] = base
 
 
 def test_corpus_sql_having_order_limit(spark, sf_dir, oracle):

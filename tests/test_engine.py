@@ -8,6 +8,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from bigdataproj_spark.engine import Engine
+from bigdataproj_spark.sources.state import session_state
 
 
 def test_sql_and_dataframe_agree(spark, sf_dir):
@@ -282,6 +283,57 @@ def test_reliable_checkpoint_mode_matches_local(tmp_path):
     assert "RELIABLE_OK" in proc.stdout, proc.stdout
 
 
+def test_connected_components_leaves_no_cached_frame(spark):
+    """A call must not leave a persisted frame behind: the returned
+    labels are checkpointed off the final round's cache, which is then
+    dropped. Local checkpoints also register as persistent RDDs; they
+    are the returned plan's lineage cut (released with it), so the
+    count below covers the cached frames only."""
+    from bigdataproj_spark.operators.dedup import connected_components
+
+    jsc = spark.sparkContext._jsc
+
+    def cached() -> int:
+        return sum(
+            1 for r in jsc.getPersistentRDDs().values()
+            if not r.rdd().isLocallyCheckpointed()
+        )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
+    )
+    before = cached()
+    got = {
+        (r.doc_id, r.cluster_id)
+        for r in connected_components(edges).collect()
+    }
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
+    assert cached() == before
+
+
+def test_run_parallel_with_no_thunks_returns_empty():
+    from bigdataproj_spark.session import run_parallel
+
+    assert run_parallel() == []
+
+
+def test_pagerank_on_empty_edge_set_returns_empty_frame(
+    spark, sf_dir, tmp_path
+):
+    """No edges means no node to rank: an empty frame with the query's
+    columns, not a ZeroDivisionError at plan build."""
+    from bigdataproj_spark.catalog import TABLES, table
+    from bigdataproj_spark.operators.graph import r43_graph_pagerank
+
+    for t in TABLES:
+        table(spark, sf_dir, t).limit(0).write.parquet(
+            str(tmp_path / f"{t}.parquet")
+        )
+    out = r43_graph_pagerank(spark, str(tmp_path))
+    assert out.columns == ["rank", "node", "node_type", "degree", "pagerank"]
+    assert out.count() == 0
+
+
 def test_asof_join_null_payload_not_torn(spark):
     """A NULL in one right-payload column must NOT be backfilled from
     an OLDER right row: the as-of match is one row, taken whole. (The
@@ -431,7 +483,7 @@ def test_verbatim_path_sees_ingested_corpus_and_user_views_win(
         assert [r.tag for r in got] == ["mine"]
     finally:
         spark.catalog.dropTempView("sources")
-        spark.__dict__.get("_bdp_dim_views", {}).pop("sources", None)
+        session_state(spark).dim_views.pop("sources", None)
 
 
 def test_same_shape_user_view_takeover_is_ceded(spark, sf_dir, tmp_path):
@@ -472,12 +524,13 @@ def test_same_shape_user_view_takeover_is_ceded(spark, sf_dir, tmp_path):
             "SELECT COUNT(*) AS n FROM documents", routed=False
         ).first()["n"]
         assert got2 == n_user
-        assert "documents" not in spark.__dict__.get("_bdp_fact_views", {})
+        assert "documents" not in session_state(spark).fact_views
     finally:
         spark.catalog.dropTempView("documents")
-        spark.__dict__.get("_bdp_fact_views", {}).pop("documents", None)
-        spark.__dict__.get("_bdp_fact_view_ids", {}).pop("documents", None)
-        spark.__dict__.pop("_bdp_views_for", None)
+        sess = session_state(spark)
+        sess.fact_views.pop("documents", None)
+        sess.fact_view_ids.pop("documents", None)
+        sess.views_for = None
 
 
 class TestExecuteScript:

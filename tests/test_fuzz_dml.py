@@ -893,13 +893,6 @@ def test_update_grammar_fuzz_matches_duckdb(spark, sf_dir, tmp_path, seed):
         )
 
 
-_SCAN_MEMO_KEYS = (
-    "_bdp_versioned_scan_memo",
-    "_bdp_layout_schema_memo",
-    "_bdp_pinned_scan_memo",
-)
-
-
 @pytest.mark.parametrize("seed", [37, 41])
 def test_scan_memo_never_serves_stale(
     spark, sf_dir, tmp_path, seed, monkeypatch
@@ -936,10 +929,15 @@ def test_scan_memo_never_serves_stale(
     def versions():
         return [e["version"] for e in _ledger(spark, eng.sf_dir)]
 
+    from bigdataproj_spark.sources.state import session_state
+
+    sess = session_state(spark)
+
     def check(label):
         memoized = [eng.sql(p).toPandas() for p in profiles]
-        for k in _SCAN_MEMO_KEYS:
-            spark.__dict__.pop(k, None)
+        # every scan memo dropped: versioned-scan, layout-schema, pinned
+        for memo in (sess.versioned_scans, sess.layout_schemas, sess.pinned_scans):
+            memo.clear()
         for i, p in enumerate(profiles):
             fresh = eng.sql(p).toPandas()
             compare_frames(memoized[i], fresh, f"{label} profile#{i}")

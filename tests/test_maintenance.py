@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from bigdataproj_spark.catalog import table
 from bigdataproj_spark.plans import physical_plan
 from bigdataproj_spark.sources.maintenance import refresh_warehouse
+from bigdataproj_spark.sources.state import warehouse
 
 
 def test_optimize_warehouse_restores_layouts_row_identically(spark, sf_dir, tmp_path):
@@ -496,7 +497,7 @@ def test_refresh_warehouse_failure_rolls_back_every_layout(
     assert not leftover, sorted(leftover)[:5]
     # S23b: the failed batch's staged change deltas must not leak into
     # the NEXT commit — pending cleared on rollback
-    assert sf_base not in (spark.__dict__.get("_bdp_cdf_pending") or {})
+    assert warehouse(spark, sf_base).history.cdf_pending is None
 
     # redelivery applies exactly once: every cube equals the same cube
     # deployed from scratch over the FULL corpus
@@ -504,7 +505,7 @@ def test_refresh_warehouse_failure_rolls_back_every_layout(
     refresh_warehouse(spark, sf_base, **b2)
     # ...and the redelivered commit's stored delta describes exactly
     # the b2 batch: the feed's insert counts per table equal the batch
-    led = spark.__dict__["_bdp_snapshots"][sf_base]
+    led = warehouse(spark, sf_base).history.ledger
     assert set(led[-1].get("cdf", {})) == set(b2)
     v_last = led[-1]["version"]
     from bigdataproj_spark.sources.snapshots import table_changes

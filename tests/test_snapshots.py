@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from bigdataproj_spark.catalog import TABLES, table
 from bigdataproj_spark.engine import Engine
+from bigdataproj_spark.sources.snapshots import _ledger
 
 _PROFILE = (
     "SELECT lang, CAST(SUM(n_chars) AS BIGINT) AS total_chars, "
@@ -233,9 +234,12 @@ class TestAsOfReads:
                     e.sql(_PROFILE).collect()
         finally:
             snap._repoint_views = real
-        sd = spark.__dict__
-        assert not sd.get("_bdp_as_of_active")
-        assert "_bdp_as_of_files" not in sd
+        from bigdataproj_spark.sources.state import session_state
+
+        # neither the read-only flag nor the pinned listing survives:
+        # both are the one AS OF pin
+        assert session_state(spark).as_of is None
+        assert snap.pinned_files(spark) is None
         # the session is NOT stuck: mutations still work
         out = e.sql("DELETE FROM documents WHERE doc_id IN (900000011)")
         assert out.collect()[0]["n_keys"] == 1
@@ -674,24 +678,25 @@ class TestAppendLayoutPinning:
         would serve post-commit rows. A path absent from the listing
         entirely (deployed inside the block) still reads live (None)."""
         from bigdataproj_spark.sources.snapshots import pinned_parquet
+        from bigdataproj_spark.sources.state import AsOf, session_state
 
         p = tmp_path / "layout"
         spark.range(5).selectExpr("id AS k").write.parquet(str(p))
-        sd = spark.__dict__
+        sess = session_state(spark)
         try:
             # marker-only under the pinned listing → empty, live schema
-            sd["_bdp_as_of_files"] = frozenset({str(p / "_SUCCESS")})
+            sess.as_of = AsOf(str(tmp_path), frozenset({str(p / "_SUCCESS")}), 0)
             df = pinned_parquet(spark, str(p))
             assert df is not None
             assert df.columns == ["k"]
             assert df.count() == 0
             # path absent from the listing → live read (None sentinel)
-            sd["_bdp_as_of_files"] = frozenset(
+            sess.as_of = AsOf(str(tmp_path), frozenset(
                 {str(tmp_path / "elsewhere" / "part-0.parquet")}
-            )
+            ), 0)
             assert pinned_parquet(spark, str(p)) is None
         finally:
-            sd.pop("_bdp_as_of_files", None)
+            sess.as_of = None
 
     def test_row_level_as_of_excludes_later_appends(
         self, spark, sf_dir, tmp_path
@@ -973,7 +978,7 @@ class TestTableChanges:
         e.sql(
             "DELETE FROM events WHERE ts < TIMESTAMP '2024-01-03 00:00:00'"
         )
-        led = spark.__dict__["_bdp_snapshots"][e.sf_dir]
+        led = _ledger(spark, e.sf_dir)
         # every mutation commit carries its staged delta
         assert all(
             "cdf" in en
@@ -1019,7 +1024,7 @@ class TestTableChanges:
             "INSERT INTO documents VALUES "
             "(900000412, 'x', 'en', 'src1', 1)"
         )  # v2: unrelated commit — must NOT re-report 900000411
-        led = spark.__dict__["_bdp_snapshots"][e.sf_dir]
+        led = _ledger(spark, e.sf_dir)
         v = led[-1]["version"]
         stripped = {
             en["version"]: en.pop("cdf") for en in led if "cdf" in en
@@ -1106,14 +1111,16 @@ class TestVersionMonotonicity:
                     "SELECT COUNT(*) AS n FROM documents "
                     "WHERE doc_id >= 900000000"
                 ).collect()
-        sd = spark.__dict__
+        from bigdataproj_spark.sources.state import session_state
+
+        sess = session_state(spark)
 
         def _dangling() -> list:
-            memo = sd.get("_bdp_pinned_scan_memo") or {}
+            memo = sess.pinned_scans
             reachable = {
                 en["files"]
-                for led in (sd.get("_bdp_snapshots") or {}).values()
-                for en in led
+                for ws in sess.warehouses.values()
+                for en in ws.history.ledger
             }
             return [k for k in memo if k[1] not in reachable]
 
@@ -1178,3 +1185,46 @@ class TestPairAppendPinning:
             ).select("l_orderkey").collect()
         )
         assert keys_live == [900000021, 900000022]
+
+
+class TestWarehouseIsolation:
+    """RESTORE, AS OF and rollback act on ONE warehouse: two sandboxes
+    in one session keep separate serving states and histories."""
+
+    _COUNT = "SELECT COUNT(*) AS n FROM documents"
+
+    def _pair(self, spark, sf_dir, tmp_path):
+        (tmp_path / "a").mkdir()
+        (tmp_path / "b").mkdir()
+        a = _sandbox(spark, sf_dir, tmp_path / "a")
+        b = _sandbox(spark, sf_dir, tmp_path / "b")
+        a.sql(
+            "INSERT INTO documents VALUES "
+            "(900000001, 'in a', 'en', 'src1', 4)"
+        )
+        v_a = a.history().collect()[-1].version
+        b.sql(
+            "INSERT INTO documents VALUES "
+            "(900000002, 'in b', 'en', 'src1', 4)"
+        )
+        return a, b, v_a
+
+    def test_restore_leaves_other_warehouse_alone(
+        self, spark, sf_dir, tmp_path
+    ):
+        a, b, v_a = self._pair(spark, sf_dir, tmp_path)
+        n_b = b.sql(self._COUNT).collect()[0].n
+        hist_b = [tuple(r) for r in b.history().collect()]
+        a.sql(f"RESTORE TO VERSION AS OF {v_a}")
+        assert b.sql(self._COUNT).collect()[0].n == n_b
+        assert b.sql(self._COUNT, routed=False).collect()[0].n == n_b
+        assert [tuple(r) for r in b.history().collect()] == hist_b
+
+    def test_as_of_leaves_other_warehouse_live(
+        self, spark, sf_dir, tmp_path
+    ):
+        a, b, v_a = self._pair(spark, sf_dir, tmp_path)
+        n_b = b.sql(self._COUNT).collect()[0].n
+        with a.as_of(v_a):
+            assert b.sql(self._COUNT).collect()[0].n == n_b
+        assert b.sql(self._COUNT).collect()[0].n == n_b

@@ -23,6 +23,7 @@ from bigdataproj_spark.plans.sqlfront import (
     parse_sql,
     route_sql,
 )
+from bigdataproj_spark.sources.state import warehouse
 from bigdataproj_spark.testing import compare_frames
 
 PRICING_SQL = f"""
@@ -496,7 +497,7 @@ def test_routed_answer_tracks_incremental_refresh(spark, sf_dir):
     finally:
         # the delta is synthetic, not fixture data: later tests must see
         # the fixture-derived cube again
-        spark.__dict__["_bdp_projection_memo"][("pricing_cube", sf_dir)] = base
+        warehouse(spark, sf_dir).projections["pricing_cube"] = base
 
 
 def test_engine_sql_routes_and_matches_verbatim(spark, sf_dir):

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdataproj_spark.catalog import table
+from bigdataproj_spark.sources.state import warehouse
 from bigdataproj_spark.streaming import replay
 
 
@@ -920,7 +921,7 @@ def test_cdc_watermark_resume_atomic_publish_and_stale_dir(
     # (a) stale delta dir at the path the FIRST staging will use
     tag, wh = _layout_paths(str(work))
     os.makedirs(wh, exist_ok=True)
-    c_next = spark.__dict__.get("_bdp_cdf_seq", {}).get(str(work), 0) + 1
+    c_next = warehouse(spark, str(work)).history.cdf_seq + 1
     stale = os.path.join(wh, f"cdf_documents_{tag}_c{c_next}")
     spark.createDataFrame(
         [(123456789, "junk from prior session", "xx", "src0", 23, "insert")],
