@@ -2377,9 +2377,11 @@ def _insert(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
 
     body = m.group("body").rstrip().rstrip(";")
     if re.match(r"^VALUES\b", body, re.IGNORECASE):
-        batch = spark.sql(
+        from ..session import one_split
+
+        batch = one_split(spark.sql(
             f"SELECT * FROM ({body}) AS _ins({', '.join(cols)})"
-        )
+        ))
     else:
         from ..engine import Engine
 
@@ -2403,8 +2405,10 @@ def _insert(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     # the batch BEFORE any memo swings: a self-referential INSERT INTO
     # t SELECT ... FROM t must read the pre-insert snapshot, not
     # observe the refresh re-pointing t mid-batch (the same
-    # eager-checkpoint discipline as the engine's other
-    # self-referential rewrites).
+    # checkpoint discipline as the engine's other self-referential
+    # rewrites). The checkpoint is lazy and the count right after it
+    # materializes it: one job, where an eager checkpoint plus the
+    # count ran two.
     from ..sources.retention import apply_event_watermark, apply_tombstones
 
     if table_name in ("documents", "orders"):
@@ -2415,10 +2419,10 @@ def _insert(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
         )
     elif table_name == "events":
         aligned = apply_event_watermark(spark, sf_dir, aligned)
-    aligned = aligned.localCheckpoint(eager=True)
+    aligned = aligned.localCheckpoint(eager=False)
+    n = aligned.count()
     from ..sources.maintenance import refresh_warehouse
 
-    n = aligned.count()
     done = refresh_warehouse(spark, sf_dir, **{table_name: aligned})
     return spark.createDataFrame(
         [(table_name, n, len(done))],

@@ -15,6 +15,7 @@ than hand-schedule.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,24 +63,99 @@ def run_parallel(*thunks) -> list:
     - every thunk is AWAITED before any exception re-raises, so a
       surrounding WarehouseTxn rollback can never race a still-running
       writer's files;
-    - job descriptions are thread-local, so thunks may label their own
-      jobs; the caller resets the main thread's label afterwards.
+    - each leg starts with the caller's job group, description and
+      tags (``inheritable_thread_target``), so ``cancelJobGroup`` and
+      per-statement job accounting see the legs' jobs; a leg may
+      relabel its own jobs, since each leg gets its own copy of the
+      caller's local properties (a lone thunk runs inline on the
+      caller's thread, so callers that label legs reset the label
+      afterwards);
+    - a failure re-raises the FIRST failed leg's exception, type
+      unchanged, with notes naming that leg and every sibling leg
+      that failed too.
 
     Returns the thunks' results in order.
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.errors import PySparkRuntimeError
+    from pyspark.util import inheritable_thread_target
+
     if len(thunks) <= 1:
         return [t() for t in thunks]
+    try:
+        # the default session when this thread has no active one: a
+        # leg's own thread (a nested run_parallel) has none
+        session = SparkSession.active()
+    except PySparkRuntimeError:  # no session at all: nothing to inherit
+        session = None
+    if session is not None:
+        # one wrap per leg: a wrap clones the caller's properties once,
+        # and legs sharing a clone would see each other's relabels
+        thunks = tuple(inheritable_thread_target(session)(t) for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         # .exception() BLOCKS until the thunk finishes — all of them
         # settle before any raise below
         errs = [f.exception() for f in futures]
-    for e in errs:
-        if e is not None:
-            raise e
+    failed = [(i, e) for i, e in enumerate(errs) if e is not None]
+    if failed:
+        i, first = failed[0]
+        first.add_note(f"run_parallel: leg {i} of {len(thunks)} failed")
+        for j, e in failed[1:]:
+            first.add_note(
+                f"run_parallel: leg {j} also failed: {type(e).__name__}: {e}"
+            )
+        raise first
     return [f.result() for f in futures]
+
+
+def fits_one_split(df: DataFrame) -> bool:
+    """True when ``df`` and everything it reads are no bigger than
+    Spark's minimum file split.
+
+    The sizes are Spark's own estimates, the analyzed plan's
+    ``sizeInBytes`` (the listed file bytes for a scan, the figure
+    broadcast decisions use), taken at the root AND summed over the
+    leaves: a projection scales the root estimate down by the ratio of
+    row widths, but ``coalesce(1)`` also collapses the scan under it
+    into one task, so a narrow select over a large file must not fit.
+    The minimum split is ``spark.sql.files.openCostInBytes`` (4 MB by
+    default), below which Spark never cuts a file split. A plan Spark
+    cannot size (an RDD, a Python data source) reports Long.MaxValue
+    and never fits."""
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    read = sum(leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size()))
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return max(plan.stats().sizeInBytes(), read) <= conf.filesOpenCostInBytes()
+
+
+def one_split(df: DataFrame) -> DataFrame:
+    """The engine-wide small-relation rule: a warehouse relation that
+    :func:`fits_one_split` is planned as ONE partition
+    (``coalesce(1)``: no shuffle, no sampling job). Aggregates, sorts
+    and windows above it need no exchange, since a single partition
+    satisfies every distribution, so a routed read of a small cube runs
+    one job of one task instead of a scan stage, a shuffle and a
+    result stage over a handful of tiny files. Larger relations come
+    back unchanged and keep their plans. Fixture tables (external
+    inputs) and bucketed catalog tables (whose bucket spec must
+    survive) do not go through it. docs/DECISIONS.md records the
+    threshold and the exemptions."""
+    return df.coalesce(1) if fits_one_split(df) else df
+
+
+def range_files(df: DataFrame, n_files: int, *cols: str) -> DataFrame:
+    """The layout writers' clustering: range-partition ``df`` into
+    ``n_files`` partitions on ``cols`` and sort each by ``cols``. Below
+    one split (:func:`fits_one_split`) the whole input is one sorted
+    partition instead, written as one file per partition directory:
+    no range-sampling job, no shuffle, and no reader task per tiny
+    file later."""
+    if fits_one_split(df):
+        return df.coalesce(1).sortWithinPartitions(*cols)
+    return df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
 
 
 def iter_checkpoint(df: DataFrame) -> DataFrame:
@@ -145,11 +221,26 @@ def get_spark(
     :func:`iter_checkpoint`.
     """
     resolved_master = master or default_master()
+    conf = _engine_conf(resolved_master)
+    conf.update(extra)
+    builder = SparkSession.builder.appName(app_name).master(resolved_master)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    _warn_codec_mismatch(spark, conf.get("spark.io.compression.codec"))
+    ckpt = checkpoint_dir or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if ckpt:
+        spark.sparkContext.setCheckpointDir(ckpt)
+    return spark
+
+
+def _engine_conf(resolved_master: str) -> dict[str, str]:
+    """The engine's session settings for ``resolved_master``, with the
+    SPARK_GRAFT_* / SPARK_* environment overrides applied."""
     _codec = os.environ.get(
         "SPARK_GRAFT_COMPRESSION",
         "off" if resolved_master.startswith("local") else "zstd",
     ).lower()
-    builder = SparkSession.builder.appName(app_name).master(resolved_master)
     # Scan-split sizing: the 128m default is right at every scale. The
     # fixture files are single parquet row groups, and a row group is
     # the unsplittable read unit — smaller split sizes only add empty
@@ -240,11 +331,23 @@ def get_spark(
         # (DuckDB truncates ns→µs the same way).
         "spark.sql.legacy.parquet.nanosAsLong": "true",
     }
-    conf.update(extra)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    ckpt = checkpoint_dir or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if ckpt:
-        spark.sparkContext.setCheckpointDir(ckpt)
-    return spark
+    return conf
+
+
+def _warn_codec_mismatch(spark: SparkSession, want: str | None) -> None:
+    """Warn when the session runs another block codec than the one
+    requested. ``spark.io.compression.codec`` is fixed when the
+    SparkContext starts, so ``getOrCreate`` on a running session keeps
+    the old codec and a SPARK_GRAFT_COMPRESSION override would
+    otherwise be a silent no-op. ``want`` None (compression "off")
+    requests nothing."""
+    if want is None:
+        return
+    got = spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4")
+    if got.lower() != want.lower():
+        warnings.warn(
+            f"the running SparkContext uses spark.io.compression.codec="
+            f"{got!r}, not the requested {want!r}: the codec is fixed at "
+            "context start, so stop the session to change it",
+            stacklevel=3,
+        )

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..session import range_files
 from .bucketed import _layout_paths
 from .state import deploy_name, warehouse
 
@@ -52,13 +53,16 @@ def write_dated(
     file's shipdate min/max tight for row-group skipping inside the
     month. ``row_group_bytes`` forces small parquet row groups for
     tests (scale-independent skip assertions); production keeps the
-    128 MB default."""
+    128 MB default. ``n_files`` is the file count above one split; a
+    smaller input is written as one file per month directory
+    (:func:`..session.range_files`)."""
     w = (
-        df.withColumn(
-            "ship_month", F.date_format(F.col("l_shipdate"), _MONTH_FMT)
+        range_files(
+            df.withColumn(
+                "ship_month", F.date_format(F.col("l_shipdate"), _MONTH_FMT)
+            ),
+            n_files, "ship_month", "l_shipdate",
         )
-        .repartitionByRange(n_files, "ship_month", "l_shipdate")
-        .sortWithinPartitions("ship_month", "l_shipdate")
         .write.mode("overwrite")
         .partitionBy("ship_month")
     )
@@ -83,13 +87,15 @@ def append_dated(
     own range). Re-running :func:`write_dated` over the union is the
     OPTIMIZE step that re-merges small files; a deployment runs it on
     a schedule, not per batch — same posture as
-    :func:`..zorder.recluster_zordered`."""
+    :func:`..zorder.recluster_zordered`. ``n_files`` applies above one
+    split, as in :func:`write_dated`."""
     w = (
-        df.withColumn(
-            "ship_month", F.date_format(F.col("l_shipdate"), _MONTH_FMT)
+        range_files(
+            df.withColumn(
+                "ship_month", F.date_format(F.col("l_shipdate"), _MONTH_FMT)
+            ),
+            n_files, "ship_month", "l_shipdate",
         )
-        .repartitionByRange(n_files, "ship_month", "l_shipdate")
-        .sortWithinPartitions("ship_month", "l_shipdate")
         .write.mode("append")
         .partitionBy("ship_month")
     )
@@ -206,11 +212,13 @@ def write_dated_events(
 ) -> None:
     """Write an events frame hive-partitioned by event day and
     range-sorted by exact ``ts`` within each partition — the day-grain
-    twin of :func:`write_dated` (same file-count and row-group knobs)."""
+    twin of :func:`write_dated` (same file-count and row-group knobs;
+    ``n_files`` applies above one split, one file per day below it)."""
     w = (
-        df.withColumn("event_day_p", F.date_format(F.col("ts"), _DAY_FMT))
-        .repartitionByRange(n_files, "event_day_p", "ts")
-        .sortWithinPartitions("event_day_p", "ts")
+        range_files(
+            df.withColumn("event_day_p", F.date_format(F.col("ts"), _DAY_FMT)),
+            n_files, "event_day_p", "ts",
+        )
         .write.mode("overwrite")
         .partitionBy("event_day_p")
     )
@@ -228,11 +236,13 @@ def append_dated_events(
     """Append an event batch to the day-partitioned layout — the
     streaming-ingest write shape (a micro-batch lands in today's
     directory as new ts-sorted files); same append-friendliness
-    argument as :func:`append_dated`."""
+    argument as :func:`append_dated`, and ``n_files`` applies above one
+    split."""
     w = (
-        df.withColumn("event_day_p", F.date_format(F.col("ts"), _DAY_FMT))
-        .repartitionByRange(n_files, "event_day_p", "ts")
-        .sortWithinPartitions("event_day_p", "ts")
+        range_files(
+            df.withColumn("event_day_p", F.date_format(F.col("ts"), _DAY_FMT)),
+            n_files, "event_day_p", "ts",
+        )
         .write.mode("append")
         .partitionBy("event_day_p")
     )

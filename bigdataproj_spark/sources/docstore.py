@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
+from ..session import range_files
 from .bucketed import _layout_paths
 from .state import deploy_name, warehouse
 
@@ -49,10 +50,11 @@ def write_clustered_docs(
     """Write a documents frame hive-partitioned by language and
     range-sorted by (source, n_chars) within each partition.
     ``row_group_bytes`` forces small row groups for scale-independent
-    skip assertions in tests; production keeps the 128 MB default."""
+    skip assertions in tests; production keeps the 128 MB default.
+    ``n_files`` is the file count above one split; a smaller input is
+    written as one file per language (:func:`..session.range_files`)."""
     w = (
-        df.repartitionByRange(n_files, "lang", "source", "n_chars")
-        .sortWithinPartitions("lang", "source", "n_chars")
+        range_files(df, n_files, "lang", "source", "n_chars")
         .write.mode("overwrite")
         .partitionBy("lang")
     )
@@ -71,10 +73,11 @@ def append_clustered_docs(
     as NEW (source, n_chars)-sorted files — directory pruning stays
     exactly as effective; within-directory skipping degrades only for
     the batch's own files, which are themselves sorted. The scheduled
-    OPTIMIZE rewrite re-merges (maintenance.optimize_warehouse)."""
+    OPTIMIZE rewrite re-merges (maintenance.optimize_warehouse).
+    ``n_files`` applies above one split, as in
+    :func:`write_clustered_docs`."""
     w = (
-        df.repartitionByRange(n_files, "lang", "source", "n_chars")
-        .sortWithinPartitions("lang", "source", "n_chars")
+        range_files(df, n_files, "lang", "source", "n_chars")
         .write.mode("append")
         .partitionBy("lang")
     )

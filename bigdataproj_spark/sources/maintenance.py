@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import one_split
 from .bucketed import (
     append_bucketed_lineitem,
     append_bucketed_orders,
@@ -164,7 +165,7 @@ def _refresh_warehouse_body(
             + [StructField("_change_type", StringType())]
         )
         return (
-            spark.read.schema(schema).parquet(path)
+            one_split(spark.read.schema(schema).parquet(path))
             .filter(F.col("_change_type") == "insert")
             .select(*_FS[tname].fieldNames())
         )

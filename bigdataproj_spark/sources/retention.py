@@ -63,6 +63,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import one_split
 from .bucketed import _layout_paths
 from .state import session_state, warehouse
 
@@ -105,11 +106,21 @@ def apply_tombstones(
 
 
 def _normalize_ids(spark: SparkSession, ids, key: str) -> DataFrame:
+    """The distinct requested keys as one ``key bigint`` column. A key
+    frame goes through the one-split rule. A literal id list is already
+    held by the driver, so it is one partition whatever its length; it
+    goes through Arrow, which makes a local relation Spark can size
+    (so joins against it may broadcast), where a Python row list would
+    make an RDD whose size Spark does not know."""
     if isinstance(ids, DataFrame):
-        return ids.select(F.col(ids.columns[0]).alias(key)).distinct()
-    return spark.createDataFrame(
-        [(int(i),) for i in ids], f"{key} bigint"
-    ).distinct()
+        frame = one_split(ids.select(F.col(ids.columns[0]).alias(key)))
+    else:
+        import pyarrow as pa
+
+        frame = spark.createDataFrame(
+            pa.table({key: pa.array([int(i) for i in ids], pa.int64())})
+        ).coalesce(1)
+    return frame.distinct()
 
 
 def _fresh_keys(

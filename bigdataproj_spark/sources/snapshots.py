@@ -77,6 +77,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import one_split
 from .state import AsOf, WarehouseState, install, session_state, warehouse
 from .txn import repoint_dim_views, undo_files_since
 
@@ -180,7 +181,7 @@ def pinned_parquet(
             memo[key] = df
             return df
         return None
-    df = spark.read.option("basePath", path).parquet(*files)
+    df = one_split(spark.read.option("basePath", path).parquet(*files))
     memo[key] = df
     return df
 
@@ -204,7 +205,7 @@ def versioned_parquet(spark: SparkSession, path: str) -> DataFrame:
     memo = session_state(spark).versioned_scans
     hit = memo.get(path)
     if hit is None:
-        hit = spark.read.parquet(path)
+        hit = one_split(spark.read.parquet(path))
         memo[path] = hit
     return hit
 
@@ -235,7 +236,7 @@ def layout_parquet(spark: SparkSession, path: str) -> DataFrame:
     if s is None:
         s = spark.read.parquet(path).schema
         memo[path] = s
-    return spark.read.schema(s).parquet(path)
+    return one_split(spark.read.schema(s).parquet(path))
 
 
 def evict_pinned_memo(spark: SparkSession) -> int:
@@ -1071,7 +1072,7 @@ def table_changes(
             if path is None:
                 continue
             step = (
-                spark.read.schema(staged_schema).parquet(path)
+                one_split(spark.read.schema(staged_schema).parquet(path))
                 .withColumns(
                     {
                         "_commit_version": F.lit(v).cast("int"),

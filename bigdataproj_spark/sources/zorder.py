@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
+from ..session import range_files
 from .bucketed import _layout_paths
 from .state import deploy_name, warehouse
 
@@ -90,11 +91,16 @@ def write_zordered(
     each file (row groups = sub-segments), drop the helper column.
     ``row_group_bytes`` forces small parquet row groups — used by
     tests to make skipping observable on small fixtures; production
-    leaves the 128 MB default."""
+    leaves the 128 MB default. ``n_files`` is the file count above one
+    split; a smaller input is written as one file on one curve segment
+    (:func:`..session.range_files`)."""
     w = (
-        df.withColumn("__z", zvalue(F.col(col_x).cast("long"), F.col(col_y).cast("long")))
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
+        range_files(
+            df.withColumn(
+                "__z", zvalue(F.col(col_x).cast("long"), F.col(col_y).cast("long"))
+            ),
+            n_files, "__z",
+        )
         .drop("__z")
         .write.mode("overwrite")
     )
@@ -120,13 +126,15 @@ def append_zordered(
     (an ingest batch usually covers a narrow slice); only queries
     straddling both read a few extra row groups. :func:`recluster_zordered`
     is the compaction that restores the globally-optimal layout; a
-    deployment runs it on a schedule, not per batch."""
+    deployment runs it on a schedule, not per batch. ``n_files``
+    applies above one split, as in :func:`write_zordered`."""
     w = (
-        df.withColumn(
-            "__z", zvalue(F.col(col_x).cast("long"), F.col(col_y).cast("long"))
+        range_files(
+            df.withColumn(
+                "__z", zvalue(F.col(col_x).cast("long"), F.col(col_y).cast("long"))
+            ),
+            n_files, "__z",
         )
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("append")
     )

@@ -363,9 +363,10 @@ class CdcConsumer:
         head = self._head()
         if head is None or head <= self.consumed:
             return 0
+        # lazy checkpoint, materialized by the count: one job, not two
         changes = table_changes(
             self.spark, self.sf_dir, self.table, self.consumed, head
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         n = changes.count()
         if n:
             apply_increment(
@@ -586,9 +587,10 @@ class CdcProjectionConsumer:
         head = self._head()
         if head is None or head <= self.consumed:
             return 0
+        # lazy checkpoint, materialized by the count: one job, not two
         changes = table_changes(
             self.spark, self.sf_dir, self.table, self.consumed, head
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         n = changes.count()
         if n:
             self._apply(changes, head)

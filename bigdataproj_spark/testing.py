@@ -7,6 +7,7 @@ runs predict the round gate.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Any
 
 import numpy as np
@@ -86,3 +87,21 @@ def assert_query_matches(spark, oracle_con, q, sf_dir: str) -> None:
     spark_pd = q.build(spark, sf_dir).toPandas()
     oracle_pd = oracle_con.execute(q.oracle).fetchdf()
     compare_frames(spark_pd, oracle_pd, name=q.name)
+
+
+@contextmanager
+def session_conf(spark, **conf: str):
+    """Set runtime SQL settings for the block, then restore each one
+    (or unset it when it was unset), so a test can run the engine
+    under another posture without leaking it into the next test."""
+    before = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

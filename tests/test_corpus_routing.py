@@ -70,6 +70,26 @@ def test_docs_profile_routes_to_cube_and_skips_raw_scan(spark, sf_dir):
     assert "text#" not in plan, plan
 
 
+def test_routed_cube_read_runs_one_job(spark, sf_dir):
+    """A warm routed read of a cube smaller than one file split is one
+    Spark job: the one-split rule (session.one_split) plans the cube
+    scan as a single partition, so the aggregate above it needs no
+    exchange and no separate scan and shuffle stages."""
+    df, chosen = route_corpus(spark, sf_dir, _DOCS_PROFILE)
+    assert chosen == "docs_stats_cube"
+    want = df.toPandas()  # deploys the cube and warms the scan memo
+    sc = spark.sparkContext
+    group = "routed-cube-read-one-job"
+    sc.setJobGroup(group, "warm routed cube read")
+    try:
+        df, _ = route_corpus(spark, sf_dir, _DOCS_PROFILE)
+        got = df.toPandas()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert got.equals(want)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_docs_routed_equals_raw_plan(spark, sf_dir):
     routed, chosen = route_corpus(spark, sf_dir, _DOCS_PROFILE)
     assert chosen == "docs_stats_cube"

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdataproj_spark.engine import Engine
@@ -315,6 +316,117 @@ def test_run_parallel_with_no_thunks_returns_empty():
     from bigdataproj_spark.session import run_parallel
 
     assert run_parallel() == []
+
+
+def test_run_parallel_legs_run_in_the_callers_job_group(spark):
+    """Every leg's jobs carry the caller's job group, so
+    cancelJobGroup and per-statement job accounting reach them."""
+    from bigdataproj_spark.session import run_parallel
+
+    sc = spark.sparkContext
+    group = "run-parallel-legs"
+    sc.setJobGroup(group, "legs inherit the caller's group")
+    try:
+        got = run_parallel(
+            lambda: spark.range(10).count(), lambda: spark.range(20).count()
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert got == [10, 20]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
+def test_run_parallel_failure_names_its_leg_and_keeps_siblings():
+    """The first failed leg's exception re-raises with its type
+    unchanged, noted with its leg index, and a sibling leg's failure
+    is reported on it too."""
+    from bigdataproj_spark.session import run_parallel
+
+    def fine():
+        return 1
+
+    def first():
+        raise KeyError("first leg")
+
+    def second():
+        raise ValueError("second leg")
+
+    with pytest.raises(KeyError) as info:
+        run_parallel(fine, first, second)
+    notes = "\n".join(info.value.__notes__)
+    assert "leg 1 of 3 failed" in notes, notes
+    assert "leg 2 also failed: ValueError: second leg" in notes, notes
+
+
+def test_compression_override_picks_the_codec(monkeypatch):
+    """SPARK_GRAFT_COMPRESSION forces a codec on a local master and
+    "off" forces Spark's defaults on a cluster master; unset, local
+    masters keep Spark's defaults and cluster masters get zstd."""
+    from bigdataproj_spark.session import _engine_conf
+
+    keys = ("spark.io.compression.codec", "spark.sql.parquet.compression.codec")
+    monkeypatch.setenv("SPARK_GRAFT_COMPRESSION", "ZSTD")
+    conf = _engine_conf("local[4]")
+    assert [conf.get(k) for k in keys] == ["zstd", "zstd"]
+    monkeypatch.setenv("SPARK_GRAFT_COMPRESSION", "off")
+    conf = _engine_conf("spark://head:7077")
+    assert not any(k in conf for k in keys)
+    monkeypatch.delenv("SPARK_GRAFT_COMPRESSION")
+    assert not any(k in _engine_conf("local[4]") for k in keys)
+    conf = _engine_conf("spark://head:7077")
+    assert [conf.get(k) for k in keys] == ["zstd", "zstd"]
+
+
+def test_codec_mismatch_on_a_running_session_warns(spark):
+    """getOrCreate on a running session keeps its block codec; asking
+    for another one warns instead of silently running the old one."""
+    import warnings
+
+    from bigdataproj_spark.session import _warn_codec_mismatch
+
+    running = spark.sparkContext.getConf().get(
+        "spark.io.compression.codec", "lz4"
+    )
+    other = "lz4" if running == "zstd" else "zstd"
+    with pytest.warns(UserWarning, match="spark.io.compression.codec"):
+        _warn_codec_mismatch(spark, other)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        _warn_codec_mismatch(spark, running)
+        _warn_codec_mismatch(spark, None)
+
+
+def test_one_split_sizes_a_projection_by_the_scan_under_it(spark, sf_dir):
+    """A key select shrinks Spark's root size estimate by the ratio of
+    row widths, but coalesce(1) would collapse the scan under it too.
+    With the threshold between the two sizes, the projected fixture
+    scan (the DELETE key frame) keeps its partitions; a literal id
+    list is one partition regardless."""
+    from bigdataproj_spark.catalog import table
+    from bigdataproj_spark.session import fits_one_split, one_split
+    from bigdataproj_spark.sources.retention import _normalize_ids
+    from bigdataproj_spark.testing import session_conf
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed()
+
+    docs = table(spark, sf_dir, "documents")
+    keys = docs.select("doc_id")
+    scan_bytes = analyzed(docs).stats().sizeInBytes()
+    assert analyzed(keys).stats().sizeInBytes() <= scan_bytes // 2
+    assert fits_one_split(keys)  # the default 4 MB holds the fixture
+    coalesced = "Repartition 1, false"
+    with session_conf(
+        spark, **{"spark.sql.files.openCostInBytes": str(scan_bytes // 2)}
+    ):
+        assert not fits_one_split(keys)
+        assert one_split(keys) is keys
+        frame = _normalize_ids(spark, keys, "doc_id")
+        assert coalesced not in analyzed(frame).toString()
+        ids = _normalize_ids(spark, [3, 1, 3], "doc_id")
+        assert coalesced in analyzed(ids).toString()
+        assert ids.rdd.getNumPartitions() == 1
+        assert sorted(r.doc_id for r in ids.collect()) == [1, 3]
 
 
 def test_pagerank_on_empty_edge_set_returns_empty_frame(

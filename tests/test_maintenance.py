@@ -23,9 +23,31 @@ from bigdataproj_spark.sources.state import warehouse
 def test_optimize_warehouse_restores_layouts_row_identically(spark, sf_dir, tmp_path):
     """After ingest appends degrade the row-level layouts, the OPTIMIZE
     pass rewrites each from its current content: row sets identical,
-    file counts back to the deploy shape (Z-order: append added files;
-    optimize returns to the 32-file clustered form), the serving memos
-    swung to the new versions, and routed queries keep answering."""
+    file counts back to the deploy shape, the serving memos swung to
+    the new versions, and routed queries keep answering. The fixture
+    is smaller than one split, so at the default threshold each layout
+    is one file (session.range_files): the append added files and
+    optimize compacts the Z-order layout back to one."""
+    pre_files, post_files = _optimize_restores_layouts(spark, sf_dir, tmp_path)
+    assert post_files == 1 < pre_files, (pre_files, post_files)
+
+
+def test_optimize_warehouse_restores_multi_file_layouts(spark, sf_dir, tmp_path):
+    """The same pass with the one-split threshold forced to 1 byte, so
+    the layouts keep their multi-file widths: row sets and routing as
+    above, and optimize returns the Z-order layout to the 32-file
+    clustered form."""
+    from bigdataproj_spark.testing import session_conf
+
+    with session_conf(spark, **{"spark.sql.files.openCostInBytes": "1"}):
+        pre_files, post_files = _optimize_restores_layouts(spark, sf_dir, tmp_path)
+    assert post_files <= 32 < pre_files, (pre_files, post_files)
+
+
+def _optimize_restores_layouts(spark, sf_dir, tmp_path):
+    """Run ingest + OPTIMIZE on a copy of the fixture, assert row
+    identity and routing, and return the Z-order layout's file counts
+    before and after OPTIMIZE."""
     import glob
 
     from bigdataproj_spark.plans.corpus_routing import (
@@ -61,7 +83,6 @@ def test_optimize_warehouse_restores_layouts_row_identically(spark, sf_dir, tmp_
     }
     # files compacted back to the deploy shape on the clustered layout
     post_files = len(glob.glob(done["zorder_lineitem"] + "/*.parquet"))
-    assert post_files <= 32 < pre_files, (pre_files, post_files)
 
     # row identity: every optimized layout holds exactly the full
     # corpus ((orderkey, linenumber) is NOT unique in the synthetic
@@ -105,6 +126,7 @@ def test_optimize_warehouse_restores_layouts_row_identically(spark, sf_dir, tmp_
     assert df.count() == table(spark, sf_dir, "events").filter(
         F.col("ts") >= F.lit("2024-01-25 00:00:00").cast("timestamp")
     ).count()
+    return pre_files, post_files
 
 
 def _copy_tables(spark, sf_dir, out_dir, splits):

@@ -1138,3 +1138,145 @@ def test_cdc_fold_null_group_merges_into_one_row(spark, tmp_path):
         for r in read_derived(spark, tdir).collect()
     }
     assert rows == {None: (7, 2), "en": (3, 1)}
+
+
+_CYCLE_READS = {
+    "docs_profile": (
+        "SELECT lang, source, CAST(SUM(n_chars) AS BIGINT) AS chars, "
+        "COUNT(*) AS n FROM documents GROUP BY lang, source"
+    ),
+    "events_rollup": (
+        "SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type"
+    ),
+    "docs_scan": (
+        "SELECT doc_id, source, n_chars FROM documents "
+        "WHERE lang = 'en' AND n_chars >= 150"
+    ),
+    "events_scan": (
+        "SELECT event_id, user_id, event_type FROM events "
+        "WHERE ts >= TIMESTAMP '2024-01-03 00:00:00' "
+        "AND ts < TIMESTAMP '2024-01-09 00:00:00'"
+    ),
+}
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _dml_cdc_cycle(spark, sf_dir, work, cdc_root) -> dict:
+    """One DML + CDC cycle on a fresh warehouse copy, the shape the
+    benchmark's dml_cdc workload times: deployed cubes and row layouts,
+    a CDC consumer per table, INSERT / DELETE of documents and INSERT
+    of events each followed by a poll and the routed reads, then an AS
+    OF read and a change-feed read. Returns every answer, plus the
+    cube read's plan and the file count of the clustered layout's
+    largest language directory."""
+    from bigdataproj_spark.catalog import TABLES
+    from bigdataproj_spark.engine import Engine
+    from bigdataproj_spark.sources.corpus_cubes import (
+        docs_stats_cube_table,
+        events_hourly_cube_table,
+    )
+    from bigdataproj_spark.sources.dated import dated_events
+    from bigdataproj_spark.sources.docstore import clustered_documents
+    from bigdataproj_spark.sources.snapshots import table_changes
+    from bigdataproj_spark.streaming.cdc import CdcConsumer, CdcProjectionConsumer
+
+    work.mkdir()
+    for t in TABLES:
+        table(spark, sf_dir, t).write.parquet(str(work / f"{t}.parquet"))
+    wd = str(work)
+    docs_stats_cube_table(spark, wd)
+    events_hourly_cube_table(spark, wd)
+    clustered = clustered_documents(spark, wd)
+    dated_events(spark, wd)
+    e = Engine(spark, wd)
+    docs_feed = CdcConsumer(spark, wd, str(cdc_root / "docs"))
+    docs_feed.bootstrap()
+    events_feed = CdcProjectionConsumer(
+        spark, wd, str(cdc_root / "events"), "cycle_events",
+        table="events", keys=("event_type",),
+    )
+    events_feed.bootstrap()
+    out: dict = {
+        "cube_plan": e.sql(_CYCLE_READS["docs_profile"])
+        ._jdf.queryExecution().optimizedPlan().toString(),
+        "lang_dir_files": max(
+            sum(1 for f in os.listdir(os.path.join(clustered, d))
+                if f.endswith(".parquet"))
+            for d in os.listdir(clustered) if d.startswith("lang=")
+        ),
+    }
+
+    def observe(step: str, feed) -> None:
+        out[f"{step}.polled"] = feed.poll()
+        for name, sql in _CYCLE_READS.items():
+            out[f"{step}.{name}"] = _rows(e.sql(sql))
+
+    e.sql(
+        "INSERT INTO documents (doc_id, text, lang, source, n_chars) VALUES "
+        "(900000501, 'one two', 'en', 'src1', 7), "
+        "(900000502, 'trois', 'fr', 'src3', 5), "
+        "(900000503, 'vier', 'de', 'src1', 4)"
+    )
+    observe("insert_documents", docs_feed)
+    e.sql("DELETE FROM documents WHERE doc_id IN (3, 17, 900000502)")
+    observe("delete_documents", docs_feed)
+    e.sql(
+        "INSERT INTO events (event_id, ts, user_id, event_type, value, "
+        "props) VALUES "
+        "(900000601, TIMESTAMP '2024-01-05 10:00:00', 7, 'click', 1.5, "
+        "'{\"k\": 1}'), "
+        "(900000602, TIMESTAMP '2024-01-06 11:30:00', 9, 'view', 2.25, "
+        "'{\"k\": 2}')"
+    )
+    observe("insert_events", events_feed)
+    head = int(e.history().collect()[-1]["version"])
+    out["asof"] = _rows(
+        e.sql(_CYCLE_READS["docs_profile"] + " FOR SYSTEM_VERSION AS OF 1")
+    )
+    out["changes"] = _rows(
+        table_changes(spark, wd, "documents", 0, head).drop("_commit_note")
+    )
+    out["docs_derived"] = _rows(docs_feed.derived())
+    out["events_derived"] = _rows(events_feed.derived())
+    return out
+
+
+def test_dml_cdc_cycle_answers_do_not_depend_on_the_one_split_rule(
+    spark, sf_dir, tmp_path
+):
+    """The one-split rule (session.one_split / range_files) plans a
+    warehouse relation at most ``spark.sql.files.openCostInBytes`` as
+    one partition and writes a small layout as one file per partition
+    directory. With the threshold forced to 1 byte every relation is
+    above it and keeps the multi-partition plans: the cycle must answer
+    identically either way. So must it with broadcast joins off, where
+    single-partition sides meet multi-partition ones in sort-merge
+    joins."""
+    from bigdataproj_spark.testing import session_conf
+
+    def cycle(tag: str, **conf: str) -> dict:
+        with session_conf(spark, **conf):
+            return _dml_cdc_cycle(
+                spark, sf_dir, tmp_path / tag, tmp_path / f"cdc_{tag}"
+            )
+
+    small = cycle("small")
+    forced = cycle("forced", **{"spark.sql.files.openCostInBytes": "1"})
+    no_bcast = cycle(
+        "no_bcast", **{"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    )
+    # the rule fired by default and did not under the forced threshold
+    assert "Repartition 1, false" in small["cube_plan"], small["cube_plan"]
+    assert "Repartition 1, false" not in forced["cube_plan"], forced["cube_plan"]
+    assert small["lang_dir_files"] == 1
+    assert forced["lang_dir_files"] > 1
+    answers = [k for k in small if k not in ("cube_plan", "lang_dir_files")]
+    assert small["insert_documents.polled"] > 0
+    assert small["delete_documents.polled"] > 0
+    assert small["insert_events.polled"] > 0
+    for k in answers:
+        assert forced[k] == small[k], k
+        assert no_bcast[k] == small[k], k
