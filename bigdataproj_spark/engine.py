@@ -623,42 +623,21 @@ class Engine:
     def deploy_projection(
         self, name: str, keys, measures=None, table="lineitem", time_key=None
     ):
-        """S16: materialize a user-declared aggregate projection and
-        register it with the router — from this call on, matching
-        specs AND matching SQL through :meth:`sql` are answered from
-        it (sources/user_projections.py). v2: keys may include
-        part/supplier arm attributes and measures the arm-home money
-        measures — the view then claims exactly the statements
-        declaring those joins. v3: ``table`` may name a CORPUS fact
-        table (documents/events) — keys then mix fact columns and S17
-        dim attributes, and ``time_key=(alias, ts_col)`` declares the
-        optional HOUR-grain time key
-        (sources/corpus_user_projections.py). The same views are
-        declarable as SQL text:
-        ``CREATE MATERIALIZED VIEW name AS SELECT ...`` through
-        :meth:`sql` (plans/ddl.py)."""
-        from .plans.corpus_routing import CORPUS_TABLES
-
-        if table in CORPUS_TABLES:
-            from .sources.corpus_user_projections import (
-                deploy_corpus_projection,
-            )
-
-            return deploy_corpus_projection(
-                self.spark, self.sf_dir, name, table, tuple(keys),
-                tuple(measures) if measures else None,
-                tuple(time_key) if time_key else None,
-            )
-        if time_key is not None:
-            raise ValueError(
-                "time_key applies to corpus-table projections only "
-                "(the lineitem star folds date grains from the cubes)"
-            )
-        from .sources.user_projections import _ALL_MEASURES, deploy_projection
+        """S16: materialize a user-declared aggregate projection over
+        ``table`` — the lineitem star, or a corpus fact table
+        (documents/events) with an optional HOUR-grain
+        ``time_key=(alias, ts_col)`` — and register it with that
+        table's router: from this call on, matching specs AND matching
+        SQL through :meth:`sql` are answered from it. Declarable keys
+        and measures: sources/user_projections.py. Deploying a name
+        replaces the view that held it, over any table. The same views
+        are declarable as SQL text through :meth:`sql` (plans/ddl.py)."""
+        from .sources.user_projections import deploy_projection
 
         return deploy_projection(
             self.spark, self.sf_dir, name, tuple(keys),
-            tuple(measures) if measures else _ALL_MEASURES,
+            tuple(measures) if measures else None, table,
+            tuple(time_key) if time_key else None,
         )
 
     def ingest(
@@ -729,16 +708,16 @@ class Engine:
         return expire_events(self.spark, self.sf_dir, before_ts)
 
     def drop_projection(self, name: str) -> bool:
-        """S16 lifecycle: deregister a user projection — the router
-        stops consulting it on the next statement. Returns False when
-        the name is not deployed."""
+        """S16 lifecycle: deregister a user projection over any table —
+        its router stops consulting it on the next statement. Returns
+        False when the name is not deployed."""
         from .sources.user_projections import drop_projection
 
         return drop_projection(self.spark, self.sf_dir, name)
 
     def projections(self) -> list[dict]:
-        """S16 introspection: the session's user-projection catalog
-        (SHOW MATERIALIZED VIEWS)."""
+        """S16 introspection: the warehouse's user-view catalog, over
+        every table (SHOW MATERIALIZED VIEWS)."""
         from .sources.user_projections import list_projections
 
         return list_projections(self.spark, self.sf_dir)

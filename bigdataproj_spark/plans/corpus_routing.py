@@ -74,7 +74,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions import cents
-from .routing import AggCall, BoolPred, Pred
+from .routing import AggCall, BoolPred, Pred, _StoredMeasure
 
 # ---------------------------------------------------------------------------
 # The spec + semantic model.
@@ -472,14 +472,6 @@ def _rewrite_ts(f, ts_src: str, time_col: str):
 
 
 @dataclass(frozen=True)
-class _StoredM:
-    int_col: str
-    cnt_col: str | None
-    min_col: str | None = None
-    max_col: str | None = None
-
-
-@dataclass(frozen=True)
 class CorpusProjection:
     """One deployed corpus cube: the plain group keys it stores, an
     optional hour-grain time key ``(stored_col, ts_source_col)``, its
@@ -488,7 +480,7 @@ class CorpusProjection:
     name: str
     table: str
     attrs: frozenset[str]
-    measures: dict[str, _StoredM]
+    measures: dict[str, _StoredMeasure]
     count_star_col: str
     open: Callable[[SparkSession, str], DataFrame]
     # (stored hour-grain col, ts source col); the stored grain is hour
@@ -632,9 +624,15 @@ CORPUS_PROJECTIONS: tuple[CorpusProjection, ...] = (
         table="documents",
         attrs=frozenset({"lang", "source"}),
         measures={
-            "chars": _StoredM("chars_i", "cnt_chars", "min_chars_i", "max_chars_i"),
-            "tokens": _StoredM("tokens_i", "cnt_text", "min_tokens_i", "max_tokens_i"),
-            "stopwords": _StoredM("stop_i", "cnt_text", "min_stop_i", "max_stop_i"),
+            "chars": _StoredMeasure(
+                "chars_i", "cnt_chars", "min_chars_i", "max_chars_i"
+            ),
+            "tokens": _StoredMeasure(
+                "tokens_i", "cnt_text", "min_tokens_i", "max_tokens_i"
+            ),
+            "stopwords": _StoredMeasure(
+                "stop_i", "cnt_text", "min_stop_i", "max_stop_i"
+            ),
         },
         count_star_col="cnt",
         open=_open_docs_cube,
@@ -644,7 +642,9 @@ CORPUS_PROJECTIONS: tuple[CorpusProjection, ...] = (
         table="events",
         attrs=frozenset({"event_type"}),
         measures={
-            "value": _StoredM("value_i", "cnt_value", "min_value_i", "max_value_i"),
+            "value": _StoredMeasure(
+                "value_i", "cnt_value", "min_value_i", "max_value_i"
+            ),
         },
         count_star_col="cnt",
         open=_open_events_cube,
@@ -723,13 +723,13 @@ def route_corpus(
     Returns (result, chosen); tests assert on ``chosen``.
 
     Candidate order mirrors routing.route: built-in cubes (measured
-    cost order), then session-deployed USER corpus projections
-    (sources/corpus_user_projections.py — names prefixed "user:"),
-    then the raw plan."""
-    from ..sources.corpus_user_projections import corpus_user_projections
+    cost order), then the USER projections deployed over ``q.table``
+    (sources/user_projections.py — names prefixed "user:"), then the
+    raw plan."""
+    from ..sources.user_projections import user_projections
 
     validate(q)
-    for proj in (*CORPUS_PROJECTIONS, *corpus_user_projections(spark, sf_dir)):
+    for proj in (*CORPUS_PROJECTIONS, *user_projections(spark, sf_dir, q.table)):
         if proj.subsumes(q):
             return proj.build(spark, sf_dir, q), proj.name
     return _raw_plan(spark, sf_dir, q), "raw"

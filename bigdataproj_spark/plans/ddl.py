@@ -68,7 +68,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .routing import DIM_ATTRS, MEASURES, PART_ATTRS, SUPP_ATTRS, AggQuery
+from .routing import AggQuery
 from .sqlfront import UnsupportedSQL, parse_sql
 
 _DDL_RE = re.compile(
@@ -339,77 +339,60 @@ _SHOW_SCHEMA = (
 )
 
 
-def _lower_lineitem_create(parsed) -> tuple[tuple[str, ...], tuple[str, ...]]:
-    """Map a parsed lineitem-star SELECT onto deploy_projection's
-    (keys, measures) declaration, or raise ValueError for any shape
-    the stored-partial contract cannot answer later."""
-    from ..sources.user_projections import _MEASURE_CHAIN, _USER_MEASURES
-
-    spec: AggQuery = parsed.spec
-    if spec.filters:
-        raise ValueError(
-            "materialized view definitions cannot carry a WHERE clause "
-            "(the view stores unfiltered partials; filter at query time)"
-        )
-    if spec.truncs:
-        raise ValueError(
-            "materialized view keys must be plain columns "
-            "(date_trunc keys fold at query time from a finer-grain view)"
-        )
-    if parsed.having or parsed.order or parsed.limit is not None:
-        raise ValueError(
-            "HAVING/ORDER BY/LIMIT are not part of a view definition"
-        )
-    keys = spec.group_by
-    if not keys:
-        raise ValueError("a materialized view needs at least one group key")
+def _declared_measures(spec) -> tuple[str, ...]:
+    """The measures a view definition's aggregates need stored, in
+    first-use order (COUNT(*) partials are always stored), or raise
+    ValueError for an aggregate no additive partial can answer."""
     measures: list[str] = []
     for a in spec.aggs:
-        if a.fn == "count_star":
-            continue  # COUNT(*) partials are always stored
         if a.fn in ("count_distinct", "approx_distinct"):
             raise ValueError(
                 "COUNT(DISTINCT) is not storable as an additive partial; "
                 "declare the distinct column as a group key instead"
             )
-        m = a.measure
+        if a.fn != "count_star" and a.measure not in measures:
+            measures.append(a.measure)
+    return tuple(measures)
+
+
+def _lower_lineitem_create(
+    spec: AggQuery, measures: tuple[str, ...]
+) -> tuple[str, ...]:
+    """The group keys of a lineitem-star view definition, or raise
+    ValueError for any shape the stored-partial contract cannot answer
+    later."""
+    from ..sources.user_projections import _USER_MEASURES, _star_joins
+
+    if spec.truncs:
+        raise ValueError(
+            "materialized view keys must be plain columns "
+            "(date_trunc keys fold at query time from a finer-grain view)"
+        )
+    for m in measures:
         if m not in _USER_MEASURES:
             raise ValueError(
                 f"measure {m!r} is not deployable "
                 f"(deployable: {sorted(_USER_MEASURES)})"
             )
-        if m not in measures:
-            measures.append(m)
+    keys = tuple(spec.group_by)
     # join-set consistency: deploy_projection builds the MINIMAL join
     # set reaching the declared keys/measures; a definition declaring
     # deeper inner joins would change the view's row population
     # (orphan-drop semantics), so it must be refused, not silently
     # shallowed.
-    expected_chain = max(
-        (
-            *(DIM_ATTRS.get(k, 0) for k in keys),
-            *(_MEASURE_CHAIN.get(m, 0) for m in measures),
-        ),
-        default=0,
-    )
+    expected_chain, expected_part, expected_supp = _star_joins(keys, measures)
     if spec.chain is not None and spec.chain != expected_chain:
         raise ValueError(
             f"the definition joins {spec.chain} dimension level(s) but its "
             f"keys/measures only require {expected_chain}; a deeper inner "
             "join changes the view's rows (orphan-drop) and is not declarable"
         )
-    expected_part = any(k in PART_ATTRS for k in keys) or any(
-        MEASURES[m].home == "part" for m in measures
-    )
-    expected_supp = any(k in SUPP_ATTRS for k in keys) or any(
-        MEASURES[m].home == "supp" for m in measures
-    )
     if spec.part != expected_part or spec.supp != expected_supp:
         raise ValueError(
             "the definition declares an arm join its keys/measures do not "
             "use; drop the join or reference one of its columns"
         )
-    return tuple(keys), tuple(measures)
+    return keys
 
 
 def try_ddl(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame | None:
@@ -544,13 +527,10 @@ def try_ddl(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame | None:
         )
     m = _DROP_RE.match(sql)
     if m is not None:
-        from ..sources.corpus_user_projections import drop_corpus_projection
         from ..sources.user_projections import drop_projection
 
         name = m.group("name")
-        dropped = drop_projection(spark, sf_dir, name) or drop_corpus_projection(
-            spark, sf_dir, name
-        )
+        dropped = drop_projection(spark, sf_dir, name)
         if not dropped and not m.group("ie"):
             raise ValueError(f"no materialized view named {name!r}")
         return spark.createDataFrame(
@@ -572,12 +552,9 @@ def _create(
     replace: bool,
     if_not_exists: bool,
 ) -> DataFrame:
-    from ..sources.corpus_user_projections import (
-        _catalog as _corpus_catalog,
-    )
     from ..sources.user_projections import _catalog, deploy_projection
 
-    if name in _catalog(spark, sf_dir) or name in _corpus_catalog(spark, sf_dir):
+    if name in _catalog(spark, sf_dir):
         if if_not_exists:
             return spark.createDataFrame(
                 [(name, "exists (unchanged)")], _STATUS_SCHEMA
@@ -589,51 +566,22 @@ def _create(
             )
     # Parse + validate the NEW definition before touching the old
     # entry: a refused OR REPLACE redefinition must leave the serving
-    # view exactly as it was (deploy replaces its own catalog's entry
-    # atomically; only the OTHER family's stale twin is dropped, and
-    # only after the new view is live).
+    # view exactly as it was (deploy replaces the entry atomically,
+    # whichever table the old view was over).
     try:
         parsed = parse_sql(select)
     except UnsupportedSQL as e:
         raise ValueError(
             f"the view definition is not a declarable aggregate: {e}"
         ) from e
-    from ..sources.corpus_user_projections import drop_corpus_projection
-    from ..sources.user_projections import drop_projection
+    from .corpus_routing import TableAggQuery
 
-    if isinstance(parsed.spec, AggQuery):
-        keys, measures = _lower_lineitem_create(parsed)
-        deploy_projection(spark, sf_dir, name, keys, measures)
-        drop_corpus_projection(spark, sf_dir, name)
-    else:
-        from .corpus_routing import TableAggQuery
-
-        if isinstance(parsed.spec, TableAggQuery):
-            from ..sources.corpus_user_projections import (
-                deploy_corpus_projection,
-            )
-
-            table_name, keys, measures, time_key = _lower_corpus_create(parsed)
-            deploy_corpus_projection(
-                spark, sf_dir, name, table_name, keys, measures, time_key
-            )
-            drop_projection(spark, sf_dir, name)
-        else:
-            raise ValueError(
-                "only grouped aggregates (over the lineitem star or a "
-                "corpus table) are declarable as materialized views"
-            )
-    return spark.createDataFrame([(name, "created")], _STATUS_SCHEMA)
-
-
-def _lower_corpus_create(parsed):
-    """Map a parsed corpus-table SELECT onto
-    deploy_corpus_projection's declaration, or raise ValueError."""
-    from .corpus_routing import CORPUS_TABLES
-
-    spec = parsed.spec
-    t = CORPUS_TABLES[spec.table]
-    if spec.filters:
+    if not isinstance(parsed.spec, (AggQuery, TableAggQuery)):
+        raise ValueError(
+            "only grouped aggregates (over the lineitem star or a "
+            "corpus table) are declarable as materialized views"
+        )
+    if parsed.spec.filters:
         raise ValueError(
             "materialized view definitions cannot carry a WHERE clause "
             "(the view stores unfiltered partials; filter at query time)"
@@ -642,6 +590,21 @@ def _lower_corpus_create(parsed):
         raise ValueError(
             "HAVING/ORDER BY/LIMIT are not part of a view definition"
         )
+    measures = _declared_measures(parsed.spec)
+    if isinstance(parsed.spec, AggQuery):
+        keys = _lower_lineitem_create(parsed.spec, measures)
+        deploy_projection(spark, sf_dir, name, keys, measures)
+    else:
+        keys, time_key = _lower_corpus_create(parsed.spec)
+        deploy_projection(
+            spark, sf_dir, name, keys, measures, parsed.spec.table, time_key
+        )
+    return spark.createDataFrame([(name, "created")], _STATUS_SCHEMA)
+
+
+def _lower_corpus_create(spec) -> tuple[tuple[str, ...], tuple[str, str] | None]:
+    """The (group keys, hour time key) of a corpus-table view
+    definition, or raise ValueError."""
     time_key = None
     if spec.truncs:
         if len(spec.truncs) > 1:
@@ -656,25 +619,7 @@ def _lower_corpus_create(parsed):
     keys = tuple(
         g for g in spec.group_by if time_key is None or g != time_key[0]
     )
-    if not keys and time_key is None:
-        raise ValueError("a materialized view needs at least one group key")
-    measures: list[str] = []
-    for a in spec.aggs:
-        if a.fn == "count_star":
-            continue
-        if a.fn in ("count_distinct", "approx_distinct"):
-            raise ValueError(
-                "COUNT(DISTINCT) is not storable as an additive partial; "
-                "declare the distinct column as a group key instead"
-            )
-        if a.measure not in t.measures:
-            raise ValueError(
-                f"measure {a.measure!r} is not deployable on "
-                f"{spec.table!r} (deployable: {sorted(t.measures)})"
-            )
-        if a.measure not in measures:
-            measures.append(a.measure)
-    return spec.table, keys, tuple(measures), time_key
+    return keys, time_key
 
 
 def _show(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -682,22 +627,12 @@ def _show(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = [
         (
-            u["name"], "lineitem", ",".join(u["keys"]),
-            ",".join(u["measures"]), u["chain"], u["part"], u["supp"],
-            None,
-        )
-        for u in list_projections(spark, sf_dir)
-    ]
-    from ..sources.corpus_user_projections import list_corpus_projections
-
-    rows += [
-        (
             u["name"], u["table"], ",".join(u["keys"]),
-            ",".join(u["measures"]), None, None, None,
+            ",".join(u["measures"]), u["chain"], u["part"], u["supp"],
             f"{u['time_key'][0]}=hour({u['time_key'][1]})"
             if u["time_key"] else None,
         )
-        for u in list_corpus_projections(spark, sf_dir)
+        for u in list_projections(spark, sf_dir)
     ]
     return spark.createDataFrame(rows, _SHOW_SCHEMA)
 

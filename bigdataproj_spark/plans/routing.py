@@ -1280,7 +1280,7 @@ def route(
     projection claims exactly the family the built-ins refuse."""
     from ..sources.user_projections import user_projections
 
-    for proj in (*PROJECTIONS, *user_projections(spark, sf_dir)):
+    for proj in (*PROJECTIONS, *user_projections(spark, sf_dir, "lineitem")):
         if proj.subsumes(q):
             return proj.build(spark, sf_dir, q), proj.name
     spine = _spine_plan(spark, sf_dir, q)

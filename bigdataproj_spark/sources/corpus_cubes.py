@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions import cents
 from ..operators.text import tokens
-from .bucketed import _layout_paths, merge_partial_frames  # noqa: F401 (re-exported)
+from .bucketed import _layout_paths, merge_partial_frames
 from .state import session_state, warehouse
 
 # ---------------------------------------------------------------------------

@@ -412,10 +412,6 @@ def _refresh_warehouse_body(
             )
         finally:
             spark.sparkContext.setJobDescription(None)
-        from .user_projections import refresh_all_projections
-
-        for name, path in refresh_all_projections(spark, sf_dir, lineitem).items():
-            done[f"user:{name}"] = path
     # 3. Corpus tables: dims BEFORE their fact-driven cubes only in
     #    the PUBLISH-visibility sense (the routed dim arm inner-joins
     #    the registry at query time; inside the txn all publishes are
@@ -487,20 +483,22 @@ def _refresh_warehouse_body(
             run_parallel(_leg_events_dim, _leg_events_cube, _leg_dated_events)
         finally:
             spark.sparkContext.setJobDescription(None)
-    # user-declared CORPUS views refresh after the dims and built-in
-    # cubes of their table (same dimension-first ordering as above: a
-    # batch introducing a new source must land in the registry before
-    # the view's delta joins through it)
-    if documents is not None or events is not None:
-        from .corpus_user_projections import refresh_corpus_projections_for
+    # user-declared views refresh after the dims and built-in cubes of
+    # their table (the same dimension-first ordering as above: a batch
+    # introducing a new order or source must land in the bucketed
+    # orders table or the registry before the view's delta joins
+    # through it)
+    from .user_projections import refresh_projections_for
 
-        for tname, delta in (("documents", documents), ("events", events)):
-            if delta is None:
-                continue
-            for name, path in refresh_corpus_projections_for(
-                spark, sf_dir, tname, delta
-            ).items():
-                done[f"user:{name}"] = path
+    for tname, delta in (
+        ("lineitem", lineitem), ("documents", documents), ("events", events)
+    ):
+        if delta is None:
+            continue
+        for name, path in refresh_projections_for(
+            spark, sf_dir, tname, delta
+        ).items():
+            done[f"user:{name}"] = path
     return done
 
 

@@ -168,17 +168,43 @@ def _splice_groups(
     return kept.unionByName(recomputed)
 
 
-def _publish_user_version(
-    spark: SparkSession, sf_dir: str, u, merged: DataFrame
-) -> str:
-    """Publish a rebuilt USER-projection cube as a new version and
-    swing the catalog entry's path — the one publish discipline for
-    both user catalogs (lineitem star + corpus), shared with their
-    refresh paths' version keying."""
-    new_path = warehouse(spark, sf_dir).publish(u.base_path)
-    merged.write.mode("overwrite").parquet(new_path)
-    u.path = new_path
-    return new_path
+def _rebuild_user_groups(
+    spark: SparkSession,
+    sf_dir: str,
+    table_name: str,
+    current,
+    affected_of,
+    done: dict[str, str],
+) -> None:
+    """The affected-group recompute of every refresh-maintained user
+    view over ``table_name``. ``affected_of(view)`` gives the group-key
+    tuples the mutation touched (None skips the view); the view
+    rebuilds exactly those groups from ``current(spark, sf_dir)``, the
+    table's live rows, semi-filtered BEFORE the groupBy via
+    group_filter (O(rows in affected groups), never the corpus),
+    splices them into its stored cube and publishes a new version."""
+    from .user_projections import _maintained
+
+    for name, u in _maintained(spark, sf_dir, table_name):
+        affected = affected_of(u)
+        if affected is None:
+            continue
+        recomputed = u.cube(
+            spark, sf_dir, current(spark, sf_dir), group_filter=affected
+        )
+        stored = spark.read.parquet(u.path)
+        merged = _splice_groups(
+            spark, stored, list(u.group_cols), affected, recomputed
+        )
+        done[f"user:{name}"] = u.publish(spark, sf_dir, merged)
+
+
+def _dead_groups(spark: SparkSession, sf_dir: str, dead: DataFrame):
+    """``affected_of`` for a delete: the groups the dead rows fell in,
+    through each view's own build (dim joins included)."""
+    return lambda u: (
+        u.cube(spark, sf_dir, dead, ()).select(*u.group_cols).distinct()
+    )
 
 
 def _publish_cube(
@@ -251,41 +277,11 @@ def delete_documents(spark: SparkSession, sf_dir: str, doc_ids) -> dict[str, str
                 spark, sf_dir, "docs_stats_cube", merged
             )
 
-        # user corpus projections over documents: same affected-group
-        # recompute, through each view's own build (dim joins included)
-        from .corpus_user_projections import _build_cube, _catalog
-
-        for name, u in list(_catalog(spark, sf_dir).items()):
-            if u.table != "documents" or u.maintained_by == "cdc":
-                # CDC-maintained views fold this delete from the
-                # change feed on their next poll (streaming/cdc.py) —
-                # rebuilding here would make that poll double-apply
-                continue
-            from ..plans.corpus_routing import CORPUS_TABLES
-
-            t = CORPUS_TABLES[u.table]
-            group_cols = list(u.keys) + ([u.time_key[0]] if u.time_key else [])
-            affected = (
-                _build_cube(
-                    spark, sf_dir, deleted, t, u.keys, (), u.time_key, u.dims
-                )
-                .select(*group_cols)
-                .distinct()
-            )
-            # group_filter semi-filters ROWS before the groupBy (not the
-            # cube after), keeping the recompute O(rows in affected
-            # groups) — the documented bound (round-8 ADVICE item 2)
-            remaining_cube = _build_cube(
-                spark, sf_dir,
-                current_documents(spark, sf_dir),
-                t, u.keys, u.measures, u.time_key, u.dims,
-                group_filter=affected,
-            )
-            stored = spark.read.parquet(u.path)
-            merged = _splice_groups(
-                spark, stored, group_cols, affected, remaining_cube
-            )
-            done[f"user:{name}"] = _publish_user_version(spark, sf_dir, u, merged)
+        # user views over documents: same affected-group recompute
+        _rebuild_user_groups(
+            spark, sf_dir, "documents", current_documents,
+            _dead_groups(spark, sf_dir, deleted), done,
+        )
 
         # verbatim views must re-point at the (now tombstone-aware)
         # current relation
@@ -389,31 +385,10 @@ def delete_orders(spark: SparkSession, sf_dir: str, order_keys) -> dict[str, str
         _rebuild("star_date_cube", _STAR_CUBE_KEYS, _star_cube_aggs, True)
         _rebuild("segment_cube", _SEGMENT_CUBE_KEYS, _pricing_cube_aggs, True)
 
-        # user lineitem projections: per-view affected-group recompute
-        from .user_projections import _build_cube as _user_build
-        from .user_projections import _catalog as _user_catalog
-
-        for name, u in list(_user_catalog(spark, sf_dir).items()):
-            dead_cube_keys = (
-                _user_build(
-                    spark, sf_dir, deleted_li, u.keys, (), u.chain,
-                    u.part, u.supp,
-                )
-                .select(*u.keys)
-                .distinct()
-            )
-            # rows semi-filtered BEFORE the groupBy via group_filter —
-            # O(rows in affected groups), never the corpus
-            live_cube = _user_build(
-                spark, sf_dir, current_lineitem(spark, sf_dir),
-                u.keys, u.measures, u.chain, u.part, u.supp,
-                group_filter=dead_cube_keys,
-            )
-            stored = spark.read.parquet(u.path)
-            merged = _splice_groups(
-                spark, stored, list(u.keys), dead_cube_keys, live_cube
-            )
-            done[f"user:{name}"] = _publish_user_version(spark, sf_dir, u, merged)
+        _rebuild_user_groups(
+            spark, sf_dir, "lineitem", current_lineitem,
+            _dead_groups(spark, sf_dir, deleted_li), done,
+        )
 
         ws.ingested.update(("lineitem", "orders"))
         return done
@@ -525,37 +500,32 @@ def reattribute_order_updates(
         spark.sparkContext.setJobDescription(None)
 
     # user lineitem projections touching the order chain (dim-attr
-    # keys or order-home measures both force chain >= 1)
-    from .user_projections import _build_cube as _user_build
-    from .user_projections import _catalog as _user_catalog
+    # keys or order-home measures both force chain >= 1): the groups
+    # the conflicting orders' lineitems fall in under the OLD and the
+    # NEW attributes
+    from .user_projections import _build_cube
 
-    for name, u in list(_user_catalog(spark, sf_dir).items()):
+    def _affected(u):
         if u.chain < 1:
-            continue
-        affected = (
-            _user_build(
+            return None
+        return (
+            _build_cube(
                 spark, sf_dir, li, u.keys, (), u.chain, u.part, u.supp,
                 orders_override=old_orders,
             )
             .select(*u.keys)
             .unionByName(
-                _user_build(
+                _build_cube(
                     spark, sf_dir, li, u.keys, (), u.chain, u.part, u.supp,
                     orders_override=new_orders,
                 ).select(*u.keys)
             )
             .distinct()
         )
-        live_cube = _user_build(
-            spark, sf_dir, current_lineitem(spark, sf_dir),
-            u.keys, u.measures, u.chain, u.part, u.supp,
-            group_filter=affected,
-        )
-        stored = spark.read.parquet(u.path)
-        merged = _splice_groups(
-            spark, stored, list(u.keys), affected, live_cube
-        )
-        done[f"user:{name}"] = _publish_user_version(spark, sf_dir, u, merged)
+
+    _rebuild_user_groups(
+        spark, sf_dir, "lineitem", current_lineitem, _affected, done
+    )
     return done
 
 
@@ -861,7 +831,7 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
     rows (every group may have lost rows — documented cost, on the
     retention cadence, never per query). All-or-nothing under
     WarehouseTxn."""
-    from ..plans.corpus_routing import CORPUS_TABLES, current_events
+    from ..plans.corpus_routing import current_events
     from .txn import WarehouseTxn
 
     raw = before_ts.strip()
@@ -921,25 +891,17 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
 
         # user event views: hour-keyed drop groups exactly; others
         # rebuild whole from the (now watermarked) current relation
-        from .corpus_user_projections import _build_cube, _catalog
+        from .user_projections import _maintained
 
-        for name, u in list(_catalog(spark, sf_dir).items()):
-            if u.table != "events" or u.maintained_by == "cdc":
-                # CDC-maintained views consume the expiry from the
-                # feed on their next poll — same skip as documents
-                continue
+        for name, u in _maintained(spark, sf_dir, "events"):
             if u.time_key is not None:
                 stored = spark.read.parquet(u.path)
                 merged = stored.filter(
                     F.col(u.time_key[0]) >= F.lit(cutoff).cast("timestamp")
                 )
             else:
-                merged = _build_cube(
-                    spark, sf_dir, current_events(spark, sf_dir),
-                    CORPUS_TABLES["events"], u.keys, u.measures,
-                    u.time_key, u.dims,
-                )
-            done[f"user:{name}"] = _publish_user_version(spark, sf_dir, u, merged)
+                merged = u.cube(spark, sf_dir, current_events(spark, sf_dir))
+            done[f"user:{name}"] = u.publish(spark, sf_dir, merged)
 
         ws.ingested.add("events")
         return done

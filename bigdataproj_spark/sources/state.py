@@ -10,8 +10,8 @@ the only module that touches the SparkSession object itself.
 
 - :class:`WarehouseState` — everything keyed by one warehouse (a
   fixture or sandbox directory): the layout entries, tombstones,
-  retention watermarks, the ingested set, mutation epochs, both
-  user-projection catalogs and the publish counters (the *serving*
+  retention watermarks, the ingested set, mutation epochs, the
+  user-view catalog and the publish counters (the *serving*
   fields, which :meth:`WarehouseState.copy` copies), plus its commit
   :class:`History`, which every copy shares.
 - :class:`SessionState` — what really is session-wide: the txn-active
@@ -65,7 +65,6 @@ class WarehouseState:
     ingested: set[str] = field(default_factory=set)
     mutation_epoch: dict[str, int] = field(default_factory=dict)
     user_projections: dict[str, Any] = field(default_factory=dict)
-    corpus_user_projections: dict[str, Any] = field(default_factory=dict)
     history: History = field(default_factory=History)
 
     def copy(self) -> WarehouseState:
@@ -83,9 +82,6 @@ class WarehouseState:
             mutation_epoch=dict(self.mutation_epoch),
             user_projections={
                 n: replace(u) for n, u in self.user_projections.items()
-            },
-            corpus_user_projections={
-                n: replace(u) for n, u in self.corpus_user_projections.items()
             },
         )
 
@@ -109,10 +105,7 @@ class WarehouseState:
                         self.docstore) if p
         ]
         out += self.tombstones.values()
-        out += [
-            u.path for u in (*self.user_projections.values(),
-                             *self.corpus_user_projections.values())
-        ]
+        out += [u.path for u in self.user_projections.values()]
         return out
 
 

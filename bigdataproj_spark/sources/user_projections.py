@@ -12,38 +12,54 @@ see plans/routing.py). :func:`deploy_projection` is that surface:
 
     deploy_projection(spark, sf_dir, "prio_flag",
                       keys=("o_orderpriority", "l_returnflag"))
+    deploy_projection(spark, sf_dir, "user_hour", ("user_id",),
+                      table="events", time_key=("u_hour", "ts"))
 
 materializes the cube (int64 fixed-point sums, non-null counts,
 min/max partials — the SAME stored-state contract as every built-in,
-so answers are bit-identical by construction), registers it in a
-session catalog that :func:`plans.routing.route` consults after the
-built-ins, and from that moment every matching spec AND every matching
-SQL statement through the front door is answered from it — the caller
-of those queries never learns a projection exists.
-:func:`refresh_projection` delta-merges ingest batches into it
-(commutative-monoid merge, rebuild-equal), and
-:func:`sources.maintenance.refresh_warehouse` refreshes every deployed
-user projection alongside the built-ins.
+so answers are bit-identical by construction), registers it in the
+warehouse's one user-view catalog, which the table's router
+(:func:`plans.routing.route` for the lineitem star,
+:func:`plans.corpus_routing.route_corpus` for documents/events)
+consults after its built-ins, and from that moment every matching
+spec AND every matching SQL statement through the front door is
+answered from it — the caller of those queries never learns a
+projection exists. View names are unique across both families:
+deploying a name replaces whatever view held it.
 
-Scope (v2, enforced at deploy): group keys from the lineitem fact,
-the order dimension chain, and the part/supplier arms; measures from
-the five lineitem money measures plus the four arm-home money
-measures (o_totalprice, c_acctbal, p_retailprice, s_acctbal —
-computed post-join with the statement's lineitem-multiplicity
-weighting). The view records WHICH joins its build ran (chain depth +
-arm set) and answers exactly the specs declaring the same set —
-inner-join orphan-drop semantics are part of a query's meaning, and
-the router never assumes FK integrity. Lifecycle: deploy /
-ensure (idempotent) / refresh (delta-merge) / drop (deregister;
-files await scheduled GC) / list. Cardinality is the deployer's
-responsibility exactly as in every warehouse (a cube keyed by a
-near-unique column is a bad view, not a wrong one — the stored row
-count is one ``spark.read.parquet(path).count()`` away).
+Two things are per family — key/measure validation and the cube
+build; the lifecycle is shared: deploy / ensure (idempotent) /
+refresh (delta-merge, commutative-monoid, rebuild-equal) / drop
+(deregister; files await scheduled GC) / list, and
+:func:`sources.maintenance.refresh_warehouse` refreshes every
+refresh-maintained view alongside the built-ins of its table.
 
-At 100 TB: the deploy is one pass over the bucketed fact (derived
-fixed-point columns already materialized at rest) plus the broadcast
-dimension arm; the stored cube is |key-combination|-bounded and the
-refresh is O(|delta| + |cube|).
+- **Lineitem star** (v2): group keys from the lineitem fact, the
+  order dimension chain, and the part/supplier arms; measures from
+  the five lineitem money measures plus the four arm-home money
+  measures (o_totalprice, c_acctbal, p_retailprice, s_acctbal —
+  computed post-join with the statement's lineitem-multiplicity
+  weighting). The view records WHICH joins its build ran (chain
+  depth + arm set) and answers exactly the specs declaring the same
+  set — inner-join orphan-drop semantics are part of a query's
+  meaning, and the router never assumes FK integrity.
+- **Corpus tables** (v3): group keys from the fact's columns and the
+  S17 dimension attributes (the build runs the declared registry join
+  once, at deploy), and optionally ONE hour-grain time key over the
+  fact's timestamp — hour is the finest scale-invariant grain, and
+  every coarser grain and hour-boundary range predicate folds onto it
+  (plans/corpus_routing.py's grain-boundary rules apply verbatim).
+
+Cardinality is the deployer's responsibility exactly as in every
+warehouse (a cube keyed by a near-unique column is a bad view, not a
+wrong one — the stored row count is one
+``spark.read.parquet(path).count()`` away).
+
+At 100 TB: the deploy is one pass over the maintained fact (derived
+fixed-point columns already materialized at rest on the star) plus
+broadcast dimension arms; the stored cube is |key-combination|-bounded
+(hour keys add |hours|, independent of corpus size) and the refresh is
+O(|delta| + |cube|).
 """
 
 from __future__ import annotations
@@ -54,6 +70,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.corpus_routing import (
+    CORPUS_DIMS,
+    CORPUS_TABLES,
+    CorpusProjection,
+    CorpusTable,
+    current_corpus_table,
+)
 from ..plans.routing import (
     DIM_ATTRS,
     LINEITEM_COLS,
@@ -64,8 +87,12 @@ from ..plans.routing import (
     _StoredMeasure,
 )
 from ..catalog import table
-from .bucketed import _layout_paths, _lineitem_with_derived, bucketed_fact_tables
-from .corpus_cubes import merge_partial_frames
+from .bucketed import (
+    _layout_paths,
+    _lineitem_with_derived,
+    bucketed_fact_tables,
+    merge_partial_frames,
+)
 from .state import warehouse
 
 # The bucketed fact's stored derived columns, per routable measure
@@ -88,38 +115,152 @@ _USER_MEASURES = _ALL_MEASURES + _ARM_MEASURES
 _MEASURE_CHAIN = {"order_total": 1, "cust_acctbal": 2}
 
 
-def _int_src(m: str) -> str:
-    """The int64 column a measure's partials aggregate FROM in the
-    cube build: the bucketed fact's at-rest derived column for
-    lineitem measures, a post-join materialized expression otherwise."""
-    return _DERIVED.get(m, f"__{m}_raw_i")
-
-
 @dataclass
 class _UserProjection:
-    """Catalog entry: the router-facing Projection plus the refresh
-    metadata (keys/measures/chain/arms and the current stored path,
-    swung atomically on refresh)."""
+    """Catalog entry: the declaration, the router-facing projection
+    and the current stored path (swung atomically on refresh).
+    ``table`` names the family. A ``"lineitem"`` view's build joins
+    the order chain to depth ``chain`` and the part/supplier arms; a
+    corpus view's build joins the registry ``dims`` and derives the
+    optional hour-grain ``time_key`` (stored alias, ts source col).
+    The other family's build fields stay None.
+
+    ``maintained_by`` (round 12): ``"refresh"`` entries are kept
+    current SYNCHRONOUSLY by the mutation hooks (:func:`_maintained`)
+    and are therefore always servable; ``"cdc"`` entries are
+    maintained ASYNCHRONOUSLY by a change-feed consumer
+    (streaming/cdc.py CdcProjectionConsumer), and the router serves
+    them only while FRESH (no unconsumed commit touches their
+    table)."""
 
     name: str
+    table: str
     keys: tuple[str, ...]
     measures: tuple[str, ...]
-    chain: int
-    path: str  # current stored version (swung atomically on refresh)
-    base_path: str  # immutable deploy path; refresh versions derive from it
-    projection: Projection
-    part: bool = False
-    supp: bool = False
+    projection: Projection | CorpusProjection
+    path: str = ""  # current stored version (swung atomically on refresh)
+    base_path: str = ""  # immutable deploy path; refresh versions derive from it
+    maintained_by: str = "refresh"
+    chain: int | None = None
+    part: bool | None = None
+    supp: bool | None = None
+    dims: tuple[str, ...] | None = None
+    time_key: tuple[str, str] | None = None
+
+    @property
+    def group_cols(self) -> tuple[str, ...]:
+        """The stored cube's group columns: the keys, then the time key."""
+        return self.keys + ((self.time_key[0],) if self.time_key else ())
+
+    def cube(
+        self,
+        spark: SparkSession,
+        sf_dir: str,
+        rows: DataFrame,
+        measures: tuple[str, ...] | None = None,
+        group_filter: DataFrame | None = None,
+    ) -> DataFrame:
+        """This view's partial-aggregate cube over ``rows`` of its fact
+        table, through its family's build: the declared measures, or
+        ``measures`` (``()`` leaves just the groups and COUNT(*))."""
+        measures = self.measures if measures is None else measures
+        if self.table == "lineitem":
+            return _build_cube(
+                spark, sf_dir, rows, self.keys, measures, self.chain,
+                self.part, self.supp, group_filter,
+            )
+        return _build_corpus_cube(
+            spark, sf_dir, rows, CORPUS_TABLES[self.table], self.keys,
+            measures, self.time_key, self.dims, group_filter,
+        )
+
+    def publish(self, spark: SparkSession, sf_dir: str, cube: DataFrame) -> str:
+        """Write ``cube`` as this view's next version and swing the
+        entry to it — the one publish discipline for refreshes and the
+        S19 rebuilds."""
+        new_path = warehouse(spark, sf_dir).publish(self.base_path)
+        cube.write.mode("overwrite").parquet(new_path)
+        self.path = new_path
+        return new_path
 
 
 def _catalog(spark: SparkSession, sf_dir: str) -> dict[str, _UserProjection]:
     return warehouse(spark, sf_dir).user_projections
 
 
-def user_projections(spark: SparkSession, sf_dir: str) -> list[Projection]:
-    """The session's deployed user projections, in deployment order —
-    consulted by plans.routing.route() after the built-in catalog."""
-    return [u.projection for u in _catalog(spark, sf_dir).values()]
+def user_projections(
+    spark: SparkSession, sf_dir: str, table: str
+) -> list[Projection | CorpusProjection]:
+    """The router-facing projections of the views deployed over
+    ``table``, in deployment order — consulted by the table's router
+    after its built-ins.
+
+    CDC-maintained entries are offered only while FRESH: a commit
+    their consumer has not yet polled past that touches their table
+    makes the stored cube stale, and routing must never change an
+    answer — the router falls to the built-ins/raw until the next
+    poll catches up (streaming/cdc.py). Refresh-maintained entries
+    are synchronously current by construction and always offered."""
+    out = []
+    for u in _catalog(spark, sf_dir).values():
+        if u.table != table:
+            continue
+        if u.maintained_by == "cdc":
+            from ..streaming.cdc import cdc_view_fresh
+
+            if not cdc_view_fresh(spark, sf_dir, u.table, u.path):
+                continue
+        out.append(u.projection)
+    return out
+
+
+def _maintained(
+    spark: SparkSession, sf_dir: str, table: str
+) -> list[tuple[str, _UserProjection]]:
+    """The refresh-maintained views over ``table`` — the ones the
+    synchronous mutation hooks (refresh_warehouse, the S19 delete and
+    expiry paths) keep current. A CDC-maintained view is fed by its
+    consumer's poll, which reads the same commit from the feed; a hook
+    refresh or rebuild would make that poll double-apply it."""
+    return [
+        (name, u)
+        for name, u in _catalog(spark, sf_dir).items()
+        if u.table == table and u.maintained_by != "cdc"
+    ]
+
+
+def _merge_cols(u: _UserProjection):
+    """(additive, min, max) stored columns of ``u``'s cube, read off
+    its router-facing measures — the refresh merge's column contract."""
+    sm = u.projection.measures.values()
+    add = tuple(s.int_col for s in sm) + tuple(
+        s.cnt_col for s in sm if s.cnt_col
+    ) + (u.projection.count_star_col,)
+    return add, tuple(s.min_col for s in sm), tuple(s.max_col for s in sm)
+
+
+def _opener(name: str):
+    """The router-facing ``open`` of view ``name``: the installed
+    state's current version (an immutable path)."""
+
+    def _open(s: SparkSession, d: str) -> DataFrame:
+        from .snapshots import versioned_parquet
+
+        return versioned_parquet(s, _catalog(s, d)[name].path)
+
+    return _open
+
+
+# ---------------------------------------------------------------------------
+# Lineitem star: declaration and cube build.
+# ---------------------------------------------------------------------------
+
+
+def _int_src(m: str) -> str:
+    """The int64 column a measure's partials aggregate FROM in the
+    cube build: the bucketed fact's at-rest derived column for
+    lineitem measures, a post-join materialized expression otherwise."""
+    return _DERIVED.get(m, f"__{m}_raw_i")
 
 
 def _partial_aggs(measures: tuple[str, ...]) -> list:
@@ -133,15 +274,6 @@ def _partial_aggs(measures: tuple[str, ...]) -> list:
     aggs += [F.min(_int_src(m)).alias(f"min_{m}_i") for m in measures]
     aggs += [F.max(_int_src(m)).alias(f"max_{m}_i") for m in measures]
     return aggs
-
-
-def _merge_cols(measures: tuple[str, ...]):
-    add = tuple(f"{m}_i" for m in measures) + tuple(
-        f"cnt_{m}" for m in measures if MEASURES[m].source_col
-    ) + ("cnt",)
-    mins = tuple(f"min_{m}_i" for m in measures)
-    maxs = tuple(f"max_{m}_i" for m in measures)
-    return add, mins, maxs
 
 
 def _dim_side(
@@ -199,8 +331,8 @@ def _build_cube(
     group_filter: DataFrame | None = None,
     orders_override: DataFrame | None = None,
 ) -> DataFrame:
-    """The deploy/refresh cube build: fact ⋈ declared arms, arm-home
-    measure ints materialized post-join, one grouped partial
+    """The lineitem deploy/refresh cube build: fact ⋈ declared arms,
+    arm-home measure ints materialized post-join, one grouped partial
     aggregation. Each arm carries only its group keys plus the source
     columns of its home measures.
 
@@ -241,39 +373,11 @@ def _build_cube(
     return li.groupBy(*keys).agg(*_partial_aggs(measures))
 
 
-def deploy_projection(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    keys: tuple[str, ...],
-    measures: tuple[str, ...] = _ALL_MEASURES,
-) -> Projection:
-    """Materialize a user-declared aggregate projection and register
-    it with the router. Group keys may mix lineitem attributes,
-    order-chain dimension attributes, and (v2) part/supplier arm
-    attributes — the chain depth and arm set are the minimal ones
-    reaching every declared key and measure, the same inner-join
-    semantics the built-ins and the raw plans share (and the same
-    rule Projection.subsumes enforces: the view answers exactly the
-    specs declaring that join set). Measures may include the arm-home
-    money measures; declaring one pulls in its home join.
-    Re-deploying a name replaces it. Returns the router-facing
-    Projection."""
-    if not keys:
-        raise ValueError("a projection needs at least one group key")
-    for k in keys:
-        if (
-            k not in LINEITEM_COLS
-            and k not in DIM_ATTRS
-            and k not in PART_ATTRS
-            and k not in SUPP_ATTRS
-        ):
-            raise ValueError(f"unknown projection key {k!r}")
-    for m in measures:
-        if m not in _USER_MEASURES:
-            raise ValueError(
-                f"unknown measure {m!r} (deployable: {sorted(_USER_MEASURES)})"
-            )
+def _star_joins(
+    keys: tuple[str, ...], measures: tuple[str, ...]
+) -> tuple[int, bool, bool]:
+    """(chain depth, part arm, supplier arm): the minimal join set
+    reaching every declared key and measure."""
     chain = max(
         (
             *(DIM_ATTRS.get(k, 0) for k in keys),
@@ -287,29 +391,39 @@ def deploy_projection(
     supp = any(k in SUPP_ATTRS for k in keys) or any(
         MEASURES[m].home == "supp" for m in measures
     )
-    from .retention import apply_tombstones
+    return chain, part, supp
 
-    tag, wh = _layout_paths(sf_dir)
-    li_name, _ = bucketed_fact_tables(spark, sf_dir)
-    cube = _build_cube(
-        spark, sf_dir,
-        apply_tombstones(
-            spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
-        ),
-        keys, measures, chain, part, supp,
-    )
-    path = os.path.join(wh, f"user_proj_{name}_{tag}")
-    cube.write.mode("overwrite").parquet(path)
-    from .snapshots import evict_versioned_scan
 
-    evict_versioned_scan(spark, path)  # redeploy overwrites the base path
-
-    def _open(s: SparkSession, d: str) -> DataFrame:
-        from .snapshots import versioned_parquet
-
-        # the installed state's current version (an immutable path)
-        return versioned_parquet(s, _catalog(s, d)[name].path)
-
+def _star_view(
+    name: str,
+    keys: tuple[str, ...],
+    measures: tuple[str, ...] | None,
+    time_key: tuple[str, str] | None,
+) -> _UserProjection:
+    """Validate a lineitem-star declaration; its build runs the
+    minimal join set (:func:`_star_joins`)."""
+    if time_key is not None:
+        raise ValueError(
+            "time_key applies to corpus-table projections only "
+            "(the lineitem star folds date grains from the cubes)"
+        )
+    if not keys:
+        raise ValueError("a projection needs at least one group key")
+    for k in keys:
+        if (
+            k not in LINEITEM_COLS
+            and k not in DIM_ATTRS
+            and k not in PART_ATTRS
+            and k not in SUPP_ATTRS
+        ):
+            raise ValueError(f"unknown projection key {k!r}")
+    measures = tuple(measures) if measures is not None else _ALL_MEASURES
+    for m in measures:
+        if m not in _USER_MEASURES:
+            raise ValueError(
+                f"unknown measure {m!r} (deployable: {sorted(_USER_MEASURES)})"
+            )
+    chain, part, supp = _star_joins(keys, measures)
     proj = Projection(
         name=f"user:{name}",
         attrs=frozenset(keys),
@@ -323,40 +437,218 @@ def deploy_projection(
             for m in measures
         },
         count_star_col="cnt",
-        open=_open,
+        open=_opener(name),
         chain=chain,
         part=part,
         supp=supp,
     )
-    _catalog(spark, sf_dir)[name] = _UserProjection(
-        name, tuple(keys), tuple(measures), chain, path, path, proj,
-        part=part, supp=supp,
+    return _UserProjection(
+        name, "lineitem", keys, measures, proj,
+        chain=chain, part=part, supp=supp,
     )
-    return proj
+
+
+# ---------------------------------------------------------------------------
+# Corpus tables: declaration and cube build.
+# ---------------------------------------------------------------------------
+
+
+def _corpus_partial_aggs(t: CorpusTable, measures: tuple[str, ...]) -> list:
+    aggs = []
+    for m in measures:
+        cm = t.measures[m]
+        v = cm.raw_int()
+        aggs.append(F.sum(v).alias(f"{m}_i"))
+        aggs.append(F.count(cm.source_col).alias(f"cnt_{m}"))
+        aggs.append(F.min(v).alias(f"min_{m}_i"))
+        aggs.append(F.max(v).alias(f"max_{m}_i"))
+    aggs.append(F.count(F.lit(1)).alias("cnt"))
+    return aggs
+
+
+def _build_corpus_cube(
+    spark: SparkSession,
+    sf_dir: str,
+    fact: DataFrame,
+    t: CorpusTable,
+    keys: tuple[str, ...],
+    measures: tuple[str, ...],
+    time_key: tuple[str, str] | None,
+    dims: tuple[str, ...],
+    group_filter: DataFrame | None = None,
+) -> DataFrame:
+    """The corpus deploy/refresh cube build: fact ⋈ declared registry
+    dims (broadcast — registry-sized at any corpus scale), hour-grain
+    time key materialized, one grouped partial aggregation.
+
+    ``group_filter`` (a DataFrame of group-key tuples) semi-filters the
+    ROWS — after the key columns exist, BEFORE the groupBy — so an
+    affected-group recompute (sources/retention.py) aggregates only the
+    surviving rows of the touched groups, never the corpus. The filter
+    set is delete-sized, so the semi broadcasts."""
+    df = fact
+    for name in dims:
+        d = CORPUS_DIMS[name]
+        dim = d.open(spark, sf_dir)
+        df = df.join(F.broadcast(dim), F.col(d.fact_key) == dim[d.dim_key])
+    group_cols = list(keys)
+    if time_key is not None:
+        alias, src = time_key
+        df = df.withColumn(alias, F.date_trunc("hour", F.col(src)))
+        group_cols.append(alias)
+    if group_filter is not None:
+        df = df.join(F.broadcast(group_filter), group_cols, "semi")
+    return df.groupBy(*group_cols).agg(*_corpus_partial_aggs(t, measures))
+
+
+def _corpus_view(
+    name: str,
+    table_name: str,
+    keys: tuple[str, ...],
+    measures: tuple[str, ...] | None,
+    time_key: tuple[str, str] | None,
+) -> _UserProjection:
+    """Validate a corpus-table declaration (the shared constructor of
+    deployed and CDC-maintained corpus views). Each dim-attribute key
+    pulls its registry join into the build; the stored cube then
+    answers statements declaring that dim and grouping by the
+    attribute."""
+    t = CORPUS_TABLES[table_name]
+    dims_needed: list[str] = []
+    for k in keys:
+        if k in t.columns:
+            continue
+        home = next(
+            (
+                dn
+                for dn, d in CORPUS_DIMS.items()
+                if k in d.attrs and table_name in d.fact_tables
+            ),
+            None,
+        )
+        if home is None:
+            raise ValueError(
+                f"unknown projection key {k!r} on table {table_name!r}"
+            )
+        if home not in dims_needed:
+            dims_needed.append(home)
+    measures = tuple(measures) if measures is not None else tuple(t.measures)
+    for m in measures:
+        if m not in t.measures:
+            raise ValueError(
+                f"unknown measure {m!r} on {table_name!r} "
+                f"(deployable: {sorted(t.measures)})"
+            )
+    if time_key is not None:
+        alias, src = time_key
+        if src not in t.ts_cols:
+            raise ValueError(
+                f"time key source {src!r} is not a timestamp column of "
+                f"{table_name!r}"
+            )
+        if alias in keys:
+            raise ValueError(f"time key alias {alias!r} collides with a key")
+    if not keys and time_key is None:
+        raise ValueError("a projection needs at least one group key")
+    proj = CorpusProjection(
+        name=f"user:{name}",
+        table=table_name,
+        attrs=frozenset(keys),
+        measures={
+            m: _StoredMeasure(f"{m}_i", f"cnt_{m}", f"min_{m}_i", f"max_{m}_i")
+            for m in measures
+        },
+        count_star_col="cnt",
+        open=_opener(name),
+        time_key=time_key,
+    )
+    return _UserProjection(
+        name, table_name, keys, measures, proj,
+        dims=tuple(dims_needed), time_key=time_key,
+    )
+
+
+# ---------------------------------------------------------------------------
+# The lifecycle, shared by both families.
+# ---------------------------------------------------------------------------
+
+
+def deploy_projection(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    keys: tuple[str, ...],
+    measures: tuple[str, ...] | None = None,
+    table: str = "lineitem",
+    time_key: tuple[str, str] | None = None,
+) -> Projection | CorpusProjection:
+    """Materialize a user-declared aggregate projection over ``table``
+    and register it with that table's router. Lineitem-star keys may
+    mix lineitem attributes, order-chain dimension attributes, and
+    (v2) part/supplier arm attributes — the view answers exactly the
+    specs declaring its join set — and measures default to the five
+    lineitem money measures. Corpus keys (``table`` = documents or
+    events) mix fact columns and S17 dim attributes, ``time_key=(alias,
+    ts_col)`` stores an hour-grain time key, and measures default to
+    all of the table's. Deploying a name replaces the view that held
+    it, whichever table that view was over. Returns the router-facing
+    projection."""
+    keys = tuple(keys)
+    if table in CORPUS_TABLES:
+        u = _corpus_view(name, table, keys, measures, time_key)
+        rows = current_corpus_table(spark, sf_dir, table)
+        stem = "user_cproj"
+    elif table == "lineitem":
+        from .retention import apply_tombstones
+
+        u = _star_view(name, keys, measures, time_key)
+        li_name, _ = bucketed_fact_tables(spark, sf_dir)
+        rows = apply_tombstones(
+            spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
+        )
+        stem = "user_proj"
+    else:
+        raise ValueError(
+            f"unknown projection table {table!r} "
+            f"(declarable over lineitem or {sorted(CORPUS_TABLES)})"
+        )
+    tag, wh = _layout_paths(sf_dir)
+    path = os.path.join(wh, f"{stem}_{name}_{tag}")
+    u.cube(spark, sf_dir, rows).write.mode("overwrite").parquet(path)
+    from .snapshots import evict_versioned_scan
+
+    evict_versioned_scan(spark, path)  # redeploy overwrites the base path
+    u.path = u.base_path = path
+    _catalog(spark, sf_dir)[name] = u
+    return u.projection
 
 
 def drop_projection(spark: SparkSession, sf_dir: str, name: str) -> bool:
     """Deregister a user projection: the router stops consulting it
-    immediately; matching SQL falls back to the next candidate (spine
-    or raw) on the very next statement. Returns False when no such
-    projection is deployed. Stored files are left for the warehouse's
-    scheduled GC (a reader planned before the drop may still be
-    scanning them — the same reason every refresh writes new versions
-    instead of deleting)."""
+    immediately; matching SQL falls back to the next candidate (spine,
+    built-in or raw) on the very next statement. Returns False when
+    no such projection is deployed. Stored files are left for the
+    warehouse's scheduled GC (a reader planned before the drop may
+    still be scanning them — the same reason every refresh writes new
+    versions instead of deleting)."""
     return _catalog(spark, sf_dir).pop(name, None) is not None
 
 
 def list_projections(spark: SparkSession, sf_dir: str) -> list[dict]:
-    """The session's user-projection catalog, as plain dicts (the
-    introspection surface: SHOW MATERIALIZED VIEWS)."""
+    """The warehouse's user-view catalog, as plain dicts (the
+    introspection surface: SHOW MATERIALIZED VIEWS); the other
+    family's build fields are None."""
     return [
         {
             "name": u.name,
+            "table": u.table,
             "keys": u.keys,
             "measures": u.measures,
             "chain": u.chain,
             "part": u.part,
             "supp": u.supp,
+            "dims": u.dims,
+            "time_key": u.time_key,
             "path": u.path,
         }
         for u in _catalog(spark, sf_dir).values()
@@ -370,50 +662,49 @@ def ensure_projection(
     keys: tuple[str, ...],
     measures: tuple[str, ...] = _ALL_MEASURES,
 ) -> Projection:
-    """Idempotent deploy: reuse the registered projection when its
-    declaration matches, else (re)deploy."""
+    """Idempotent lineitem-star deploy: reuse the registered
+    projection when its declaration matches, else (re)deploy."""
     u = _catalog(spark, sf_dir).get(name)
-    if u and u.keys == tuple(keys) and u.measures == tuple(measures):
+    if u and (u.table, u.keys, u.measures) == (
+        "lineitem", tuple(keys), tuple(measures)
+    ):
         return u.projection
     return deploy_projection(spark, sf_dir, name, tuple(keys), tuple(measures))
 
 
 def refresh_projection(
-    spark: SparkSession, sf_dir: str, name: str, delta_lineitem: DataFrame
+    spark: SparkSession, sf_dir: str, name: str, delta: DataFrame
 ) -> str:
-    """Delta-merge one ingested lineitem batch into a deployed user
-    projection. Dimension keys resolve through the MAINTAINED bucketed
-    orders table (plus the broadcast base dims), so a batch shipping
-    new orders WITH their lineitems is handled correctly as long as
-    the orders land first — exactly the ordering refresh_warehouse
-    encodes (orders append + denorm upsert before every
-    lineitem-driven refresh). Additive monoid merge == rebuild, same
-    argument as every built-in cube; publishes a new VERSION the
-    catalog swings to atomically."""
+    """Delta-merge one ingested batch of the view's fact table into a
+    deployed user projection. Dimension keys resolve through the
+    MAINTAINED state: the bucketed orders table (plus the broadcast
+    base dims) for the star, the CURRENT registry for a corpus table.
+    So a batch shipping new orders WITH their lineitems, or new
+    sources with their documents, is handled as long as the dimension
+    side lands first — exactly the ordering refresh_warehouse
+    encodes. Additive monoid merge == rebuild, same argument as every
+    built-in cube; publishes a new VERSION the catalog swings to
+    atomically."""
     cat = _catalog(spark, sf_dir)
     if name not in cat:
         raise KeyError(f"no deployed projection {name!r}")
     u = cat[name]
-    delta_cube = _build_cube(
-        spark, sf_dir, _lineitem_with_derived(delta_lineitem),
-        u.keys, u.measures, u.chain, u.part, u.supp,
-    )
-    add, mins, maxs = _merge_cols(u.measures)
+    if u.table == "lineitem":
+        delta = _lineitem_with_derived(delta)  # the star build's int columns
+    add, mins, maxs = _merge_cols(u)
     merged = merge_partial_frames(
-        spark.read.parquet(u.path), delta_cube, u.keys, add, mins, maxs
+        spark.read.parquet(u.path), u.cube(spark, sf_dir, delta),
+        u.group_cols, add, mins, maxs,
     )
-    new_path = warehouse(spark, sf_dir).publish(u.base_path)
-    merged.write.mode("overwrite").parquet(new_path)
-    u.path = new_path
-    return new_path
+    return u.publish(spark, sf_dir, merged)
 
 
-def refresh_all_projections(
-    spark: SparkSession, sf_dir: str, delta_lineitem: DataFrame
+def refresh_projections_for(
+    spark: SparkSession, sf_dir: str, table: str, delta: DataFrame
 ) -> dict[str, str]:
-    """Refresh every deployed user projection for ``sf_dir`` — the
-    hook refresh_warehouse calls after the built-ins."""
+    """Refresh every refresh-maintained view over ``table`` — the hook
+    refresh_warehouse calls after that table's built-ins."""
     return {
-        name: refresh_projection(spark, sf_dir, name, delta_lineitem)
-        for name in list(_catalog(spark, sf_dir))
+        name: refresh_projection(spark, sf_dir, name, delta)
+        for name, _u in _maintained(spark, sf_dir, table)
     }

@@ -42,6 +42,7 @@ so a reader planned against the previous version never loses files.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -420,7 +421,7 @@ class CdcProjectionConsumer:
     default-start resume from the recorded watermark. Keys are the
     fact table's OWN columns (dimension-attribute keys need the
     registry join at fold time — declare a refresh-maintained view
-    via deploy_corpus_projection for those). A consumer whose
+    via deploy_projection for those). A consumer whose
     consumed version was undone by RESTORE cannot continue (its folds
     include undone commits — ``table_changes`` refuses the
     unreachable version); re-bootstrap into a fresh table_dir."""
@@ -444,8 +445,6 @@ class CdcProjectionConsumer:
                 f"unknown corpus table {table!r} "
                 f"(CDC-maintained views cover {sorted(CORPUS_TABLES)})"
             )
-        if not keys:
-            raise ValueError("a CDC-maintained view needs a group key")
         for k in keys:
             if k not in t.columns:
                 raise ValueError(
@@ -453,24 +452,19 @@ class CdcProjectionConsumer:
                     f"columns; {k!r} is not a column of {table!r} — a "
                     "dimension-attribute key needs the registry join at "
                     "fold time; declare a refresh-maintained view instead "
-                    "(deploy_corpus_projection)"
+                    "(deploy_projection)"
                 )
-        measures = (
-            tuple(measures) if measures is not None else tuple(t.measures)
-        )
-        for m in measures:
-            if m not in t.measures:
-                raise ValueError(
-                    f"unknown measure {m!r} on {table!r} "
-                    f"(deployable: {sorted(t.measures)})"
-                )
+        from ..sources.user_projections import _corpus_view
+
         self.spark = spark
         self.sf_dir = sf_dir
         self.table_dir = table_dir
         self.name = name
         self.table = table
         self.keys = tuple(keys)
-        self.measures = measures
+        # the catalog entry every publish registers (it validates the
+        # measures and builds the partials the view stores)
+        self._view = _corpus_view(name, table, self.keys, measures, None)
         self.consumed = _resolve_start(spark, sf_dir, table_dir, from_version)
         # a RESUMED consumer re-registers the existing derived table
         # (a fresh session's catalog starts empty)
@@ -480,37 +474,15 @@ class CdcProjectionConsumer:
 
     # -- catalog ----------------------------------------------------------
     def _register(self, path: str) -> None:
-        from ..plans.corpus_routing import CorpusProjection, _StoredM
-        from ..sources.corpus_user_projections import (
-            _catalog,
-            _CorpusUserProjection,
-        )
+        from ..sources.user_projections import _catalog
 
-        name = self.name
-
-        def _open(s: SparkSession, d: str) -> DataFrame:
-            from ..sources.snapshots import versioned_parquet
-
-            return versioned_parquet(s, _catalog(s, d)[name].path)  # current version
-
-        proj = CorpusProjection(
-            name=f"user:{name}",
-            table=self.table,
-            attrs=frozenset(self.keys),
-            measures={
-                m: _StoredM(f"{m}_i", f"cnt_{m}", f"min_{m}_i", f"max_{m}_i")
-                for m in self.measures
-            },
-            count_star_col="cnt",
-            open=_open,
-        )
-        _catalog(self.spark, self.sf_dir)[name] = _CorpusUserProjection(
-            name, self.table, self.keys, self.measures, None, (),
-            path, self.table_dir, proj, maintained_by="cdc",
+        _catalog(self.spark, self.sf_dir)[self.name] = replace(
+            self._view, path=path, base_path=self.table_dir,
+            maintained_by="cdc",
         )
 
     def _swing(self, new_path: str) -> None:
-        from ..sources.corpus_user_projections import _catalog
+        from ..sources.user_projections import _catalog
 
         u = _catalog(self.spark, self.sf_dir).get(self.name)
         if u is not None and u.maintained_by == "cdc":
@@ -520,11 +492,7 @@ class CdcProjectionConsumer:
 
     # -- build ------------------------------------------------------------
     def _partials(self, df: DataFrame) -> DataFrame:
-        from ..plans.corpus_routing import CORPUS_TABLES
-        from ..sources.corpus_user_projections import _partial_aggs
-
-        t = CORPUS_TABLES[self.table]
-        return df.groupBy(*self.keys).agg(*_partial_aggs(t, self.measures))
+        return self._view.cube(self.spark, self.sf_dir, df)
 
     def _ns(self, lft: str, rgt: str):
         """Null-safe equi condition on the group keys between two
@@ -600,7 +568,7 @@ class CdcProjectionConsumer:
     def _apply(self, changes: DataFrame, head: int) -> None:
         from ..plans.corpus_routing import current_corpus_table
         from ..sources.bucketed import merge_partial_frames
-        from ..sources.corpus_user_projections import _merge_cols
+        from ..sources.user_projections import _merge_cols
 
         keys = list(self.keys)
         stored = self._read_stored()
@@ -625,7 +593,7 @@ class CdcProjectionConsumer:
                 "left_anti",
             )
         delta = self._partials(adds)
-        add_cols, min_cols, max_cols = _merge_cols(self.measures)
+        add_cols, min_cols, max_cols = _merge_cols(self._view)
         merged = merge_partial_frames(
             stored, delta, self.keys, add_cols, min_cols, max_cols
         )

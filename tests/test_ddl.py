@@ -18,11 +18,11 @@ from bigdataproj_spark.engine import Engine
 from bigdataproj_spark.plans.corpus_routing import TableAggQuery, route_corpus
 from bigdataproj_spark.plans.routing import AggCall
 from bigdataproj_spark.plans.sqlfront import route_sql
-from bigdataproj_spark.sources.corpus_user_projections import (
-    deploy_corpus_projection,
-    drop_corpus_projection,
-    list_corpus_projections,
-    refresh_corpus_projection,
+from bigdataproj_spark.sources.user_projections import (
+    deploy_projection,
+    drop_projection,
+    list_projections,
+    refresh_projection,
 )
 
 
@@ -217,9 +217,9 @@ class TestDDLRefusals:
 
 class TestCorpusUserProjections:
     def test_events_user_view_routes_and_matches_raw(self, spark, sf_dir):
-        deploy_corpus_projection(
-            spark, sf_dir, "t_user_prof", "events",
-            ("user_id", "event_type"), ("value",),
+        deploy_projection(
+            spark, sf_dir, "t_user_prof",
+            ("user_id", "event_type"), ("value",), table="events",
         )
         spec = TableAggQuery(
             "events",
@@ -239,7 +239,7 @@ class TestCorpusUserProjections:
 
         want = _raw_plan(spark, sf_dir, spec).toPandas()
         assert df.toPandas().equals(want)
-        drop_corpus_projection(spark, sf_dir, "t_user_prof")
+        drop_projection(spark, sf_dir, "t_user_prof")
         _df, chosen = route_corpus(spark, sf_dir, spec)
         assert chosen == "raw"
 
@@ -247,9 +247,9 @@ class TestCorpusUserProjections:
         """A view keyed by an S17 dim attribute (s_kind) joins the
         registry at DEPLOY; its content equals grouping the raw
         dim-joined rows."""
-        deploy_corpus_projection(
-            spark, sf_dir, "t_kind_view", "documents",
-            ("s_kind", "lang"), ("chars", "tokens"),
+        deploy_projection(
+            spark, sf_dir, "t_kind_view",
+            ("s_kind", "lang"), ("chars", "tokens"), table="documents",
         )
         spec = TableAggQuery(
             "documents",
@@ -265,10 +265,10 @@ class TestCorpusUserProjections:
         # the built-in docs cube claims this statement (it stores the
         # fact key and folds the dim); assert the USER view's direct
         # build agrees with it bit-for-bit
-        cat = list_corpus_projections(spark, sf_dir)
+        cat = list_projections(spark, sf_dir)
         u = next(p for p in cat if p["name"] == "t_kind_view")
         assert u["dims"] == ("sources",)
-        from bigdataproj_spark.sources.corpus_user_projections import (
+        from bigdataproj_spark.sources.user_projections import (
             _catalog,
         )
 
@@ -278,12 +278,13 @@ class TestCorpusUserProjections:
         assert chosen == "docs_stats_cube"  # built-ins stay first
         mine = proj.build(spark, sf_dir, spec).toPandas()
         assert mine.equals(routed.toPandas())
-        drop_corpus_projection(spark, sf_dir, "t_kind_view")
+        drop_projection(spark, sf_dir, "t_kind_view")
 
     def test_hour_time_key_folds_coarser_grains(self, spark, sf_dir):
-        deploy_corpus_projection(
-            spark, sf_dir, "t_user_hour", "events",
-            ("user_id",), ("value",), time_key=("u_hour", "ts"),
+        deploy_projection(
+            spark, sf_dir, "t_user_hour",
+            ("user_id",), ("value",),
+            table="events", time_key=("u_hour", "ts"),
         )
         spec = TableAggQuery(
             "events",
@@ -298,7 +299,7 @@ class TestCorpusUserProjections:
 
         want = _raw_plan(spark, sf_dir, spec).toPandas()
         assert df.toPandas().equals(want)
-        drop_corpus_projection(spark, sf_dir, "t_user_hour")
+        drop_projection(spark, sf_dir, "t_user_hour")
 
     def test_refresh_rebuild_equal(self, spark, sf_dir, tmp_path):
         """Deploy on a base corpus, delta-merge the held-out batch,
@@ -313,34 +314,34 @@ class TestCorpusUserProjections:
         delta = docs.filter(split)
         sf_base = str(base_dir)
 
-        deploy_corpus_projection(
-            spark, sf_base, "t_rb", "documents",
-            ("s_kind", "lang"), ("chars", "stopwords"),
+        deploy_projection(
+            spark, sf_base, "t_rb",
+            ("s_kind", "lang"), ("chars", "stopwords"), table="documents",
         )
         from bigdataproj_spark.sources.corpus_cubes import refresh_sources_dim
 
         refresh_sources_dim(spark, sf_base, delta)
-        refresh_corpus_projection(spark, sf_base, "t_rb", delta)
+        refresh_projection(spark, sf_base, "t_rb", delta)
         got = (
             spark.read.parquet(
                 next(
                     p["path"]
-                    for p in list_corpus_projections(spark, sf_base)
+                    for p in list_projections(spark, sf_base)
                     if p["name"] == "t_rb"
                 )
             )
             .orderBy("s_kind", "lang")
             .toPandas()
         )
-        deploy_corpus_projection(
-            spark, sf_dir, "t_rb_full", "documents",
-            ("s_kind", "lang"), ("chars", "stopwords"),
+        deploy_projection(
+            spark, sf_dir, "t_rb_full",
+            ("s_kind", "lang"), ("chars", "stopwords"), table="documents",
         )
         want = (
             spark.read.parquet(
                 next(
                     p["path"]
-                    for p in list_corpus_projections(spark, sf_dir)
+                    for p in list_projections(spark, sf_dir)
                     if p["name"] == "t_rb_full"
                 )
             )
@@ -348,8 +349,8 @@ class TestCorpusUserProjections:
             .toPandas()
         )
         assert got.equals(want[got.columns.tolist()])
-        drop_corpus_projection(spark, sf_base, "t_rb")
-        drop_corpus_projection(spark, sf_dir, "t_rb_full")
+        drop_projection(spark, sf_base, "t_rb")
+        drop_projection(spark, sf_dir, "t_rb_full")
 
     def test_refresh_warehouse_maintains_corpus_views(
         self, spark, sf_dir, tmp_path
@@ -366,8 +367,9 @@ class TestCorpusUserProjections:
         delta = events.filter(split)
         sf_base = str(base_dir)
 
-        deploy_corpus_projection(
-            spark, sf_base, "t_wh", "events", ("user_id",), ("value",)
+        deploy_projection(
+            spark, sf_base, "t_wh",
+            ("user_id",), ("value",), table="events",
         )
         done = refresh_warehouse(spark, sf_base, events=delta)
         assert "user:t_wh" in done
@@ -379,7 +381,7 @@ class TestCorpusUserProjections:
         assert chosen == "user:t_wh"
         total_n = df.agg(F.sum("n").alias("n")).collect()[0]["n"]
         assert total_n == events.count()
-        drop_corpus_projection(spark, sf_base, "t_wh")
+        drop_projection(spark, sf_base, "t_wh")
 
 
 class TestReviewRegressions:
@@ -437,21 +439,59 @@ class TestReviewRegressions:
             "t_facade_hour", ("user_id",), ("value",),
             table="events", time_key=("u_hour", "ts"),
         )
-        from bigdataproj_spark.sources.corpus_user_projections import (
-            list_corpus_projections,
+        from bigdataproj_spark.sources.user_projections import (
+            list_projections,
         )
 
         u = next(
             p
-            for p in list_corpus_projections(spark, sf_dir)
+            for p in list_projections(spark, sf_dir)
             if p["name"] == "t_facade_hour"
         )
         assert u["time_key"] == ("u_hour", "ts")
-        drop_corpus_projection(spark, sf_dir, "t_facade_hour")
+        assert eng.drop_projection("t_facade_hour")
         with pytest.raises(ValueError, match="corpus-table projections only"):
             eng.deploy_projection(
                 "t_bad", ("l_returnflag",), time_key=("x", "l_shipdate")
             )
+
+    def test_engine_lifecycle_covers_corpus_views(self, eng, spark, sf_dir):
+        """Engine.projections lists a view over a corpus table and
+        Engine.drop_projection deregisters it: the next routed
+        statement falls back."""
+        sel = (
+            "SELECT user_id, event_type, COUNT(*) AS n FROM events "
+            "GROUP BY user_id, event_type ORDER BY user_id, event_type"
+        )
+        eng.deploy_projection(
+            "t_eng_ev", ("user_id", "event_type"), ("value",), table="events"
+        )
+        _df, chosen = route_sql(spark, sf_dir, sel)
+        assert chosen == "user:t_eng_ev"
+        assert "t_eng_ev" in {p["name"] for p in eng.projections()}
+        assert eng.drop_projection("t_eng_ev")
+        assert "t_eng_ev" not in {p["name"] for p in eng.projections()}
+        assert not eng.drop_projection("t_eng_ev")
+        _df, chosen = route_sql(spark, sf_dir, sel)
+        assert chosen != "user:t_eng_ev"
+
+    def test_one_name_is_one_view_across_tables(self, eng):
+        """Deploying a name a lineitem view holds as a corpus view
+        through the Python API replaces it (the DDL path already did):
+        SHOW lists one row, and after DROP none."""
+        eng.deploy_projection("t_twin", ("l_returnflag",))
+        eng.deploy_projection("t_twin", ("event_type",), table="events")
+
+        def rows():
+            return [
+                r
+                for r in eng.sql("SHOW MATERIALIZED VIEWS").collect()
+                if r["name"] == "t_twin"
+            ]
+
+        assert len(rows()) == 1 and rows()[0]["table_name"] == "events"
+        eng.sql("DROP MATERIALIZED VIEW t_twin")
+        assert rows() == []
 
 
 class TestDeleteDML:

@@ -180,10 +180,10 @@ class TestDeleteDocuments:
     def test_user_corpus_view_rebuilds_affected_groups(
         self, spark, sf_dir, tmp_path
     ):
-        from bigdataproj_spark.sources.corpus_user_projections import (
-            deploy_corpus_projection,
-            drop_corpus_projection,
-            list_corpus_projections,
+        from bigdataproj_spark.sources.user_projections import (
+            deploy_projection,
+            drop_projection,
+            list_projections,
         )
 
         work = _copy(spark, sf_dir, tmp_path / "w", ("documents",))
@@ -191,9 +191,9 @@ class TestDeleteDocuments:
             spark, sf_dir, tmp_path / "t",
             {"documents": F.col("doc_id") % 9 != 1},
         )
-        deploy_corpus_projection(
-            spark, work, "t_del_kind", "documents",
-            ("s_kind", "lang"), ("chars",),
+        deploy_projection(
+            spark, work, "t_del_kind",
+            ("s_kind", "lang"), ("chars",), table="documents",
         )
         done = delete_documents(
             spark, work,
@@ -202,14 +202,14 @@ class TestDeleteDocuments:
             .select("doc_id"),
         )
         assert "user:t_del_kind" in done
-        deploy_corpus_projection(
-            spark, truth, "t_del_truth", "documents",
-            ("s_kind", "lang"), ("chars",),
+        deploy_projection(
+            spark, truth, "t_del_truth",
+            ("s_kind", "lang"), ("chars",), table="documents",
         )
         paths = {
             p["name"]: p["path"]
             for d in (work, truth)
-            for p in list_corpus_projections(spark, d)
+            for p in list_projections(spark, d)
         }
         got = (
             spark.read.parquet(paths["t_del_kind"])
@@ -222,8 +222,8 @@ class TestDeleteDocuments:
             .toPandas()
         )
         assert got.equals(want[got.columns.tolist()])
-        drop_corpus_projection(spark, work, "t_del_kind")
-        drop_corpus_projection(spark, truth, "t_del_truth")
+        drop_projection(spark, work, "t_del_kind")
+        drop_projection(spark, truth, "t_del_truth")
 
 
 _STAR_SPEC = AggQuery(
@@ -657,30 +657,32 @@ class TestExpireEvents:
         assert sdf.orderBy("event_id").toPandas().equals(want)
 
     def test_user_views_and_refusals(self, spark, sf_dir, tmp_path):
-        from bigdataproj_spark.sources.corpus_user_projections import (
-            deploy_corpus_projection,
-            drop_corpus_projection,
-            list_corpus_projections,
+        from bigdataproj_spark.sources.user_projections import (
+            deploy_projection,
+            drop_projection,
+            list_projections,
         )
         from bigdataproj_spark.sources.retention import expire_events
 
         work, truth = self._setup(spark, sf_dir, tmp_path)
-        deploy_corpus_projection(
-            spark, work, "t_exp_hour", "events", ("event_type",),
-            ("value",), time_key=("h", "ts"),
+        deploy_projection(
+            spark, work, "t_exp_hour",
+            ("event_type",), ("value",), table="events", time_key=("h", "ts"),
         )
-        deploy_corpus_projection(
-            spark, work, "t_exp_flat", "events", ("user_id",), ("value",)
+        deploy_projection(
+            spark, work, "t_exp_flat",
+            ("user_id",), ("value",), table="events",
         )
         done = expire_events(spark, work, "2024-01-10")
         assert {"user:t_exp_hour", "user:t_exp_flat"} <= set(done)
-        deploy_corpus_projection(
-            spark, truth, "t_exp_truth", "events", ("user_id",), ("value",)
+        deploy_projection(
+            spark, truth, "t_exp_truth",
+            ("user_id",), ("value",), table="events",
         )
         paths = {
             p["name"]: p["path"]
             for d in (work, truth)
-            for p in list_corpus_projections(spark, d)
+            for p in list_projections(spark, d)
         }
         got = (
             spark.read.parquet(paths["t_exp_flat"])
@@ -694,8 +696,8 @@ class TestExpireEvents:
         )
         assert got.equals(want[got.columns.tolist()])
         for n in ("t_exp_hour", "t_exp_flat"):
-            drop_corpus_projection(spark, work, n)
-        drop_corpus_projection(spark, truth, "t_exp_truth")
+            drop_projection(spark, work, n)
+        drop_projection(spark, truth, "t_exp_truth")
         with pytest.raises(ValueError, match="hour-boundary"):
             expire_events(spark, work, "2024-01-10 12:30:00")
 

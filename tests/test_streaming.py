@@ -1009,9 +1009,9 @@ def test_cdc_projection_consumer_replay_equals_one_shot(
     from bigdataproj_spark.catalog import TABLES
     from bigdataproj_spark.engine import Engine
     from bigdataproj_spark.plans.corpus_routing import current_documents
-    from bigdataproj_spark.sources.corpus_user_projections import (
+    from bigdataproj_spark.sources.user_projections import (
         _catalog,
-        corpus_user_projections,
+        user_projections,
     )
     from bigdataproj_spark.streaming.cdc import CdcProjectionConsumer
 
@@ -1033,7 +1033,8 @@ def test_cdc_projection_consumer_replay_equals_one_shot(
 
     def served():
         return {
-            p.name for p in corpus_user_projections(spark, str(work))
+            p.name
+            for p in user_projections(spark, str(work), "documents")
         }
 
     assert {"user:doc_profile", "user:doc_profile_lazy"} <= served()
@@ -1091,7 +1092,7 @@ def test_cdc_projection_consumer_replay_equals_one_shot(
 def test_cdc_projection_consumer_refusals(spark, sf_dir, tmp_path):
     """Declaration guards: dim-attribute keys, unknown measures, and
     unknown tables refuse with worded reasons (a dim key needs the
-    registry join at fold time — that is deploy_corpus_projection's
+    registry join at fold time — that is deploy_projection's
     territory)."""
     import pytest
 
