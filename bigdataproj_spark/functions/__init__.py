@@ -101,20 +101,6 @@ def isum_expr(c: Column, denom: int) -> Column:
     return F.sum(c).cast("double") / denom
 
 
-def imin_expr(c: Column, denom: int) -> Column:
-    """MIN of a pre-scaled int64 fixed-point expression → DOUBLE / denom.
-
-    Exact and monoid-mergeable like isum_expr: scaling to fixed point
-    is monotone, so it commutes with MIN/MAX — min over stored partial
-    mins equals min over the raw rows."""
-    return F.min(c).cast("double") / denom
-
-
-def imax_expr(c: Column, denom: int) -> Column:
-    """MAX twin of :func:`imin_expr`."""
-    return F.max(c).cast("double") / denom
-
-
 def iavg(c: Column | str, scale: int = 100) -> Column:
     """Deterministic AVG on the int64 fixed-point path (see isum)."""
     cc = F.col(c) if isinstance(c, str) else c

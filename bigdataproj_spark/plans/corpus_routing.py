@@ -58,23 +58,42 @@ query-time lookup.
 At 100 TB: both cubes are scale-invariant (|langs|x|sources|,
 |types|x|hours|); the raw fallbacks are one-shuffle scan+aggregate
 plans with fused pre-projections (the q01 shape). Differentially
-fuzzed against DuckDB in tests/test_fuzz_routing.py alongside the
-lineitem families.
+fuzzed against DuckDB and the raw plan in tests/test_corpus_routing.py
+(built-in cubes, the sources dim) and tests/test_user_projections.py
+(user views with an hour time key or a dim-attribute key).
+
+The projection engine itself — :class:`~.routing.Projection` with its
+subsumption test and cube build, the stored-measure descriptor, the
+aggregate-expression builder and the candidate loop — is routing.py's,
+shared with the lineitem star: a corpus cube is a ``Projection`` whose
+``time_key`` carries the hour-grain fold and whose stored fact keys let
+declared dims fold. This module keeps what is per family: the spec,
+the table and dim model, validation, the raw plan and the scan router.
 """
 
 from __future__ import annotations
 
-import dataclasses as _dc
-import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions import cents
-from .routing import AggCall, BoolPred, Pred, _StoredMeasure
+from .routing import (  # noqa: F401 — BoolPred: re-exported with the spec types
+    AggCall,
+    BoolPred,
+    Measure,
+    Pred,
+    Projection,
+    _distinct,
+    _grouped,
+    _route,
+    _row_level,
+    _StoredMeasure,
+    agg_exprs,
+)
 
 # ---------------------------------------------------------------------------
 # The spec + semantic model.
@@ -104,18 +123,6 @@ class TableAggQuery:
         return {g: tm.get(g, g) for g in self.group_by}
 
 
-@dataclass(frozen=True)
-class CMeasure:
-    """A corpus measure: per-row int64 expression (same arithmetic at
-    deploy and query time), divisor back to double (1 = integer
-    measure, sums stay BIGINT), and the COUNT/AVG source column."""
-
-    name: str
-    raw_int: Callable[[], Column]
-    divisor: int
-    source_col: str
-
-
 # Per-row text expressions are defined ONCE, next to the cube deploy
 # (sources/corpus_cubes.py) — the raw plan and the stored partials can
 # never drift because they are literally the same expression.
@@ -134,7 +141,7 @@ class CorpusTable:
 
     name: str
     columns: frozenset[str]
-    measures: dict[str, CMeasure]
+    measures: dict[str, Measure]
     ts_cols: frozenset[str]
 
 
@@ -219,19 +226,14 @@ def current_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/retention.py) subtract here — deleted docs disappear from
     every raw plan the moment the delete commits."""
     from ..sources.retention import apply_tombstones
-
-    from ..sources.snapshots import pinned_parquet
+    from ..sources.snapshots import layout_parquet
     from ..sources.state import warehouse
 
     path = warehouse(spark, sf_dir).docstore
     if path:
         # S22: inside a snapshot read, scan only the pinned commit's
         # files (document batches APPEND into this directory)
-        from ..sources.snapshots import layout_parquet
-
-        df = (pinned_parquet(spark, path) or layout_parquet(spark, path)).select(
-            *_DOC_COLS
-        )
+        df = layout_parquet(spark, path).select(*_DOC_COLS)
     else:
         df = table(spark, sf_dir, "documents")
     return apply_tombstones(spark, sf_dir, "documents", df)
@@ -245,15 +247,12 @@ def current_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the day-partitioned layout the row predicate also prunes whole
     expired-day directories."""
     from ..sources.retention import apply_event_watermark, event_watermark
-
-    from ..sources.snapshots import pinned_parquet
+    from ..sources.snapshots import layout_parquet
     from ..sources.state import warehouse
 
     path = warehouse(spark, sf_dir).dated_events
     if path:
-        from ..sources.snapshots import layout_parquet
-
-        df = pinned_parquet(spark, path) or layout_parquet(spark, path)
+        df = layout_parquet(spark, path)
         wm = event_watermark(spark, sf_dir)
         if wm is not None:
             # the derived day-partition conjunct must apply BEFORE the
@@ -279,9 +278,9 @@ CORPUS_TABLES: dict[str, CorpusTable] = {
         name="documents",
         columns=frozenset({"doc_id", "text", "lang", "source", "n_chars"}),
         measures={
-            "chars": CMeasure("chars", lambda: F.col("n_chars"), 1, "n_chars"),
-            "tokens": CMeasure("tokens", _doc_tokens, 1, "text"),
-            "stopwords": CMeasure("stopwords", _doc_stopwords, 1, "text"),
+            "chars": Measure("chars", lambda: F.col("n_chars"), 1, "n_chars"),
+            "tokens": Measure("tokens", _doc_tokens, 1, "text"),
+            "stopwords": Measure("stopwords", _doc_stopwords, 1, "text"),
         },
         ts_cols=frozenset(),
     ),
@@ -291,7 +290,7 @@ CORPUS_TABLES: dict[str, CorpusTable] = {
             {"event_id", "ts", "user_id", "event_type", "value", "props"}
         ),
         measures={
-            "value": CMeasure("value", lambda: cents("value"), 100, "value"),
+            "value": Measure("value", lambda: cents("value"), 100, "value"),
         },
         ts_cols=frozenset({"ts"}),
     ),
@@ -348,260 +347,8 @@ def validate(q: TableAggQuery) -> CorpusTable:
 
 
 # ---------------------------------------------------------------------------
-# Aggregate output expressions (shared by cube and raw paths).
+# Cube descriptors (the shared routing.Projection).
 # ---------------------------------------------------------------------------
-
-
-def _agg_exprs(
-    q: TableAggQuery,
-    t: CorpusTable,
-    src_int: dict[str, str],
-    src_cnt: dict[str, str],
-    cnt_star: str | None,
-    src_min: dict[str, str] | None = None,
-    src_max: dict[str, str] | None = None,
-    src_sketch: dict[str, str] | None = None,
-) -> list[Column]:
-    """routing._final_agg_exprs generalized to the corpus measure
-    model: divisor-1 measures keep exact BIGINT sums and min/max;
-    money measures divide back to double. ``cnt_star`` names a stored
-    partial-count column on the cube path (counts re-derive as
-    coalesced SUMs there — SQL COUNT over empty input is 0, SUM of no
-    partials is NULL). ``src_sketch`` maps approx_distinct targets to
-    stored HLL sketch columns on the cube path (union-merged, then
-    estimated); the raw path sketches the rows directly — the two
-    agree exactly because HLL union is register-max, so the merged
-    register state equals the single-pass state."""
-    src_min = src_min if src_min is not None else src_int
-    src_max = src_max if src_max is not None else src_int
-    exprs: list[Column] = []
-    for a in q.aggs:
-        if a.fn == "count_distinct":
-            exprs.append(F.countDistinct(F.col(a.measure)).alias(a.alias))
-            continue
-        if a.fn == "approx_distinct":
-            if src_sketch and a.measure in src_sketch:
-                sk = F.hll_union_agg(src_sketch[a.measure])
-            else:
-                sk = F.hll_sketch_agg(F.col(a.measure))
-            exprs.append(F.hll_sketch_estimate(sk).alias(a.alias))
-            continue
-        if a.fn == "count_star":
-            exprs.append(
-                (
-                    F.coalesce(F.sum(cnt_star), F.lit(0).cast("long"))
-                    if cnt_star
-                    else F.count(F.lit(1))
-                ).alias(a.alias)
-            )
-            continue
-        m = t.measures[a.measure]
-        if a.fn == "sum":
-            s = F.sum(F.col(src_int[a.measure]))
-            if m.divisor != 1:
-                s = s.cast("double") / m.divisor
-            exprs.append(s.alias(a.alias))
-        elif a.fn == "min":
-            v = F.min(F.col(src_min[a.measure]))
-            if m.divisor != 1:
-                v = v.cast("double") / m.divisor
-            exprs.append(v.alias(a.alias))
-        elif a.fn == "max":
-            v = F.max(F.col(src_max[a.measure]))
-            if m.divisor != 1:
-                v = v.cast("double") / m.divisor
-            exprs.append(v.alias(a.alias))
-        elif a.fn == "count":
-            exprs.append(
-                (
-                    F.coalesce(F.sum(src_cnt[a.measure]), F.lit(0).cast("long"))
-                    if cnt_star
-                    else F.count(src_cnt[a.measure])
-                ).alias(a.alias)
-            )
-        elif a.fn == "avg":
-            s = F.sum(F.col(src_int[a.measure])).cast("double")
-            if m.divisor != 1:
-                s = s / m.divisor
-            c = F.sum(src_cnt[a.measure]) if cnt_star else F.count(src_cnt[a.measure])
-            exprs.append((s / c).alias(a.alias))
-        else:
-            raise ValueError(f"unsupported aggregate fn {a.fn!r}")
-    return exprs
-
-
-# ---------------------------------------------------------------------------
-# Cube descriptors + subsumption.
-# ---------------------------------------------------------------------------
-
-_HOUR_BOUNDARY = re.compile(r"^\d{4}-\d{2}-\d{2} \d{2}:00:00$")
-# ts ops whose boundary form is a row-set equivalence on the stored
-# hour key (see module docstring); <=/=/between are sub-grain and
-# never fold.
-_TS_FOLD_OPS = frozenset({">=", "<"})
-
-
-def _ts_pred_folds(p: Pred) -> bool:
-    return (
-        p.op in _TS_FOLD_OPS
-        and p.cast == "timestamp"
-        and isinstance(p.value, str)
-        and bool(_HOUR_BOUNDARY.match(p.value))
-    )
-
-
-def _filter_folds(f, attrs: frozenset[str], ts_src: str | None) -> bool:
-    """A predicate tree folds when every leaf is on a stored group key
-    or is an hour-boundary-foldable ts leaf; exactness composes through
-    any boolean structure because each leaf rewrite is a row-set
-    equivalence."""
-    if isinstance(f, BoolPred):
-        return all(_filter_folds(ch, attrs, ts_src) for ch in f.children)
-    if f.col in attrs:
-        return True
-    return f.col == ts_src and _ts_pred_folds(f)
-
-
-def _rewrite_ts(f, ts_src: str, time_col: str):
-    """ts → stored-hour-key rewrite, leaf by leaf through the tree."""
-    if isinstance(f, BoolPred):
-        return BoolPred(f.op, tuple(_rewrite_ts(c, ts_src, time_col) for c in f.children))
-    if f.col == ts_src:
-        return _dc.replace(f, col=time_col)
-    return f
-
-
-@dataclass(frozen=True)
-class CorpusProjection:
-    """One deployed corpus cube: the plain group keys it stores, an
-    optional hour-grain time key ``(stored_col, ts_source_col)``, its
-    stored measure partials, and how to open it."""
-
-    name: str
-    table: str
-    attrs: frozenset[str]
-    measures: dict[str, _StoredMeasure]
-    count_star_col: str
-    open: Callable[[SparkSession, str], DataFrame]
-    # (stored hour-grain col, ts source col); the stored grain is hour
-    # everywhere — finer storage folds strictly more queries while the
-    # row bound stays scale-invariant
-    time_key: tuple[str, str] | None = None
-    # approx_count_distinct support: target column -> stored HLL
-    # sketch partial (mergeable by register-max union, so the cube
-    # answers distinct-count questions without a distinct shuffle)
-    sketches: dict[str, str] | None = None
-
-    def subsumes(self, q: TableAggQuery) -> bool:
-        if q.table != self.table:
-            return False
-        # Declared dim joins fold two ways: when the cube stores the
-        # dim's FACT KEY, the join attaches per-key-constant attributes
-        # onto stored groups (joining groups == joining rows then
-        # grouping, every row of a group shares its key); when the cube
-        # stores a dim ATTRIBUTE itself (user corpus projections built
-        # through the dim join), that attribute is directly available.
-        # Either way the declared join NEVER changes the row population
-        # — the engine keeps every CorpusDim complete and 1:1 — so a
-        # declared dim whose attributes the query doesn't reference
-        # folds vacuously; any referenced-but-unavailable attribute
-        # fails the per-column checks below.
-        dim_attrs: set[str] = set()
-        for name in q.dims:
-            d = CORPUS_DIMS[name]
-            if d.fact_key in self.attrs:
-                dim_attrs |= d.attrs
-        foldable = self.attrs | frozenset(dim_attrs)
-        time_col, ts_src = self.time_key if self.time_key else (None, None)
-        trunc_unit = {a: u for a, u, _c in q.truncs}
-        trunc_src = {a: c for a, _u, c in q.truncs}
-        for g, src in q.group_sources().items():
-            if src in foldable:
-                continue
-            # a time-grain key folds when its source is the cube's ts
-            # AND the requested grain is the stored hour grain or
-            # coarser — a sub-hour grouping (none is currently
-            # parseable, but the check is the stored-grain contract)
-            # must not fold; the raw plan computes it exactly
-            if (
-                g in trunc_src
-                and src == ts_src
-                and trunc_unit[g] in ("hour", "day", "month", "quarter", "year")
-            ):
-                continue
-            return False
-        for f in q.filters:
-            if not _filter_folds(f, foldable, ts_src):
-                return False
-        for a in q.aggs:
-            if a.fn == "count_star":
-                continue
-            if a.fn == "count_distinct":
-                if (a.measure or "") not in foldable:
-                    return False
-                continue
-            if a.fn == "approx_distinct":
-                if (a.measure or "") not in (self.sketches or {}):
-                    return False
-                continue
-            sm = self.measures.get(a.measure or "")
-            if sm is None:
-                return False
-            if a.fn in ("count", "avg") and sm.cnt_col is None:
-                return False
-            if a.fn == "min" and sm.min_col is None:
-                return False
-            if a.fn == "max" and sm.max_col is None:
-                return False
-        return True
-
-    def build(self, spark: SparkSession, sf_dir: str, q: TableAggQuery) -> DataFrame:
-        t = CORPUS_TABLES[q.table]
-        df = self.open(spark, sf_dir)
-        # Declared dim joins attach BROADCAST onto the cube's groups
-        # (|dim| rows is registry-sized at any corpus scale); exact
-        # because dim attrs are constants of the stored fact key. A dim
-        # whose referenced attributes the cube already STORES needs no
-        # join at all (user corpus projections built through the dim).
-        referenced = set(q.group_sources().values())
-        for f in q.filters:
-            referenced |= f.cols()
-        referenced |= {
-            a.measure for a in q.aggs if a.fn == "count_distinct" and a.measure
-        }
-        for name in q.dims:
-            d = CORPUS_DIMS[name]
-            if not ((referenced & d.attrs) - self.attrs):
-                continue
-            dim = d.open(spark, sf_dir)
-            df = df.join(
-                F.broadcast(dim), F.col(d.fact_key) == dim[d.dim_key]
-            )
-        time_col, ts_src = self.time_key if self.time_key else (None, None)
-        # Filters BEFORE truncs (WHERE is pre-projection in SQL); ts
-        # leaves rewrite onto the stored hour key.
-        for p in q.filters:
-            if ts_src is not None:
-                p = _rewrite_ts(p, ts_src, time_col)
-            df = df.filter(p.column())
-        for alias, unit, col in q.truncs:
-            src = time_col if col == ts_src else col
-            # date_trunc(u, hour) == date_trunc(u, ts) for u >= hour;
-            # the hour grain itself is the stored key verbatim
-            df = df.withColumn(alias, F.date_trunc(unit, F.col(src)))
-        if not q.aggs:
-            return df.select(*q.group_by).distinct().orderBy(*q.group_by)
-        int_cols = {m: sm.int_col for m, sm in self.measures.items()}
-        cnt_cols = {m: sm.cnt_col for m, sm in self.measures.items() if sm.cnt_col}
-        min_cols = {m: sm.min_col for m, sm in self.measures.items() if sm.min_col}
-        max_cols = {m: sm.max_col for m, sm in self.measures.items() if sm.max_col}
-        out = df.groupBy(*q.group_by).agg(
-            *_agg_exprs(
-                q, t, int_cols, cnt_cols, self.count_star_col,
-                min_cols, max_cols, self.sketches,
-            )
-        )
-        return out.orderBy(*q.group_by) if q.group_by else out
 
 
 def _open_docs_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -618,33 +365,30 @@ def _open_events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return versioned_parquet(spark, events_hourly_cube_table(spark, sf_dir))
 
 
-CORPUS_PROJECTIONS: tuple[CorpusProjection, ...] = (
-    CorpusProjection(
+_DOC_MEASURES = CORPUS_TABLES["documents"].measures
+CORPUS_PROJECTIONS: tuple[Projection, ...] = (
+    Projection(
         name="docs_stats_cube",
         table="documents",
         attrs=frozenset({"lang", "source"}),
         measures={
-            "chars": _StoredMeasure(
-                "chars_i", "cnt_chars", "min_chars_i", "max_chars_i"
+            "chars": _StoredMeasure.of(_DOC_MEASURES["chars"]),
+            "tokens": _StoredMeasure.of(
+                _DOC_MEASURES["tokens"], cnt_col="cnt_text"
             ),
-            "tokens": _StoredMeasure(
-                "tokens_i", "cnt_text", "min_tokens_i", "max_tokens_i"
-            ),
-            "stopwords": _StoredMeasure(
-                "stop_i", "cnt_text", "min_stop_i", "max_stop_i"
+            "stopwords": _StoredMeasure.of(
+                _DOC_MEASURES["stopwords"], "stop", "cnt_text"
             ),
         },
         count_star_col="cnt",
         open=_open_docs_cube,
     ),
-    CorpusProjection(
+    Projection(
         name="events_hourly_cube",
         table="events",
         attrs=frozenset({"event_type"}),
         measures={
-            "value": _StoredMeasure(
-                "value_i", "cnt_value", "min_value_i", "max_value_i"
-            ),
+            "value": _StoredMeasure.of(CORPUS_TABLES["events"].measures["value"])
         },
         count_star_col="cnt",
         open=_open_events_cube,
@@ -676,7 +420,7 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: TableAggQuery) -> DataFrame:
     for alias, unit, col in q.truncs:
         df = df.withColumn(alias, F.date_trunc(unit, F.col(col)))
     if not q.aggs:
-        return df.select(*q.group_by).distinct().orderBy(*q.group_by)
+        return _distinct(df, q)
     needed = sorted(
         {
             a.measure
@@ -705,10 +449,8 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: TableAggQuery) -> DataFrame:
     pre = df.select(
         *keep, *[t.measures[m].raw_int().alias(int_cols[m]) for m in needed]
     )
-    out = pre.groupBy(*q.group_by).agg(
-        *_agg_exprs(q, t, int_cols, cnt_cols, None)
-    )
-    return out.orderBy(*q.group_by) if q.group_by else out
+    row_level = _row_level(t.measures, int_cols, cnt_cols)
+    return _grouped(pre, q, agg_exprs(q, row_level, None))
 
 
 # ---------------------------------------------------------------------------
@@ -722,17 +464,12 @@ def route_corpus(
     """Answer ``q`` from the subsuming corpus cube, else the raw plan.
     Returns (result, chosen); tests assert on ``chosen``.
 
-    Candidate order mirrors routing.route: built-in cubes (measured
-    cost order), then the USER projections deployed over ``q.table``
-    (sources/user_projections.py — names prefixed "user:"), then the
-    raw plan."""
-    from ..sources.user_projections import user_projections
-
+    The candidate loop is routing's (:func:`~.routing._route`):
+    built-in cubes (measured cost order), then the USER projections
+    deployed over ``q.table`` (names prefixed "user:"), then the raw
+    plan."""
     validate(q)
-    for proj in (*CORPUS_PROJECTIONS, *user_projections(spark, sf_dir, q.table)):
-        if proj.subsumes(q):
-            return proj.build(spark, sf_dir, q), proj.name
-    return _raw_plan(spark, sf_dir, q), "raw"
+    return _route(spark, sf_dir, q, CORPUS_PROJECTIONS, (), _raw_plan)
 
 
 # ---------------------------------------------------------------------------
@@ -786,16 +523,12 @@ def route_corpus_scan(
         for p in q.filters
     )
     from ..sources.retention import apply_tombstones
-
-    from ..sources.snapshots import pinned_parquet
+    from ..sources.snapshots import layout_parquet
 
     if has_ts_range:
         from ..sources.dated import dated_events, day_bounds_filter
 
-        from ..sources.snapshots import layout_parquet
-
-        dep = dated_events(spark, sf_dir)
-        df = pinned_parquet(spark, dep) or layout_parquet(spark, dep)
+        df = layout_parquet(spark, dated_events(spark, sf_dir))
         days = day_bounds_filter(q.filters)
         if days is not None:
             df = df.filter(days)
@@ -817,10 +550,7 @@ def route_corpus_scan(
         # skip via the in-partition range sort's min-max stats.
         from ..sources.docstore import clustered_documents
 
-        from ..sources.snapshots import layout_parquet
-
-        cdp = clustered_documents(spark, sf_dir)
-        df = pinned_parquet(spark, cdp) or layout_parquet(spark, cdp)
+        df = layout_parquet(spark, clustered_documents(spark, sf_dir))
         # S19: deleted docs stay in the clustered bytes until the
         # scheduled OPTIMIZE rewrite; reads subtract
         df = apply_tombstones(spark, sf_dir, "documents", df)

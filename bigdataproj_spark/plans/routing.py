@@ -34,10 +34,18 @@ Subsumption rules (each checked structurally, never by name):
   construction and proven by the same DuckDB oracles the raw queries
   carry.
 
-Candidates are tried cheapest-first (the scale-invariant ~15k-row
-cube, then the per-order rollup star pair, then the raw scan), i.e.
-the router is a rule-based cost order, not a cost model — the right
-trade at this catalog size (3 layouts), revisit if the catalog grows.
+Candidates are tried in a measured cost order (the built-in
+:data:`PROJECTIONS` — pricing, segment and star-date cubes, then the
+per-order rollup star pair — then user views, then the bucketed spine,
+then the raw scan), i.e. the router is a rule-based cost order, not a
+cost model — the right trade at this catalog size (4 built-in
+layouts), revisit if the catalog grows.
+
+The projection engine — :class:`Projection` with its subsumption test
+and build, the stored-measure descriptor, the aggregate-expression
+builder and the candidate loop — is shared with the corpus router
+(plans/corpus_routing.py); the two families differ only in descriptor
+and measure fields (docs/DECISIONS.md).
 
 At 100 TB the win is the round-5 A/B tables (docs/BENCHMARKS.md): raw
 q01 3.1x DuckDB at sf5 vs cube 1.05x/0.55x (sf5/sf10); raw q26
@@ -52,14 +60,18 @@ plan); the fallback shape reads the raw table.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass, field
+import dataclasses
+import itertools
+import re
+from collections.abc import Callable, Iterable, Mapping
+from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions import cents, imax_expr, imin_expr, isum_expr
+from ..functions import cents
 from ..registry import query
 from ..sources.bucketed import (
     _N_BUCKETS,
@@ -88,15 +100,14 @@ def current_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete-sized broadcast set and costs nothing when no delete has
     happened."""
     from ..sources.retention import apply_tombstones
-
-    from ..sources.snapshots import pinned_table
+    from ..sources.snapshots import bucketed_scan
     from ..sources.state import warehouse
 
     names = warehouse(spark, sf_dir).bucketed.get(_N_BUCKETS)
     if names:
         # inside a snapshot read, scan only the pinned commit's files
         # (the bucketed fact APPENDS batches into one directory)
-        df = pinned_table(spark, sf_dir, names[0]) or spark.table(names[0])
+        df = bucketed_scan(spark, sf_dir, names[0])
     else:
         df = table(spark, sf_dir, "lineitem")
     return apply_tombstones(spark, sf_dir, "orders", df, "l_orderkey")
@@ -107,13 +118,12 @@ def current_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     if deployed this session, else the fixture (same contract and
     rationale as :func:`current_lineitem`, tombstones included)."""
     from ..sources.retention import apply_tombstones
-
-    from ..sources.snapshots import pinned_table
+    from ..sources.snapshots import bucketed_scan
     from ..sources.state import warehouse
 
     names = warehouse(spark, sf_dir).bucketed.get(_N_BUCKETS)
     if names:
-        df = pinned_table(spark, sf_dir, names[1]) or spark.table(names[1])
+        df = bucketed_scan(spark, sf_dir, names[1])
     else:
         df = table(spark, sf_dir, "orders")
     return apply_tombstones(spark, sf_dir, "orders", df)
@@ -136,6 +146,13 @@ class Pred:
 
     def cols(self) -> frozenset[str]:
         return frozenset({self.col})
+
+    def leaves(self) -> Iterable[Pred]:
+        yield self
+
+    def rename(self, old: str | None, new: str | None) -> Pred:
+        """This predicate with column ``old`` read as ``new``."""
+        return dataclasses.replace(self, col=new) if self.col == old else self
 
     def column(self) -> Column:
         c = F.col(self.col)
@@ -178,10 +195,14 @@ class BoolPred:
     children: tuple  # of Pred | BoolPred
 
     def cols(self) -> frozenset[str]:
-        out: frozenset[str] = frozenset()
+        return frozenset(leaf.col for leaf in self.leaves())
+
+    def leaves(self) -> Iterable[Pred]:
         for ch in self.children:
-            out |= ch.cols()
-        return out
+            yield from ch.leaves()
+
+    def rename(self, old: str | None, new: str | None) -> BoolPred:
+        return BoolPred(self.op, tuple(ch.rename(old, new) for ch in self.children))
 
     def column(self) -> Column:
         cols = [ch.column() for ch in self.children]
@@ -259,7 +280,14 @@ class AggQuery:
     a part=True spec with no part attribute referenced still joins.
     ``supp`` declares the supplier arm (``lineitem ⋈ supplier ON
     l_suppkey = s_suppkey``, attributes ``SUPP_ATTRS``) identically —
-    all three arms join on independent fact keys and compose."""
+    all three arms join on independent fact keys and compose.
+
+    ``table`` and ``dims`` are constants, not fields: they let the
+    shared projection code (:class:`Projection`) read a star spec the
+    way it reads a corpus ``TableAggQuery``."""
+
+    table: ClassVar[str] = "lineitem"
+    dims: ClassVar[tuple[str, ...]] = ()
 
     filters: tuple  # of Pred | BoolPred, implicitly conjoined
     group_by: tuple[str, ...]
@@ -303,7 +331,7 @@ def _used_cols(q: AggQuery) -> set[str]:
             used.add(a.measure)
         elif a.measure and a.measure in MEASURES:
             src = MEASURES[a.measure].source_col
-            if src and MEASURES[a.measure].home != "lineitem":
+            if src and MEASURES[a.measure].home != "fact":
                 used.add(src)
     return used
 
@@ -336,24 +364,31 @@ def effective_chain(q: AggQuery) -> int:
 
 @dataclass(frozen=True)
 class Measure:
-    """A money measure: its raw int64 fixed-point expression (the SAME
-    arithmetic everywhere — query time in the raw plan, deploy time in
-    the projections), the 10^k divisor back to double, and the source
-    column whose non-null count backs COUNT/AVG (None for derived
-    products, which have no single source column)."""
+    """A measure of a fact table (the lineitem star's here, the corpus
+    tables' in plans/corpus_routing.py): its raw int64 expression (the
+    SAME arithmetic everywhere — query time in the raw plan, deploy time
+    in the projections), the divisor back to the measure's unit (10^k
+    for fixed-point money, read back as DOUBLE; 1 for an integer
+    measure, whose sums stay exact BIGINT), and the source column whose
+    non-null count backs COUNT/AVG (None for derived products, which
+    have no single source column)."""
 
     name: str
     raw_int: Callable[[], Column]
     divisor: int
     source_col: str | None
     # which side of the join provides the measure's input columns:
-    # "lineitem" measures compute in the fused pre-projection below
-    # any partial aggregation; arm measures ("order"/"part"/"supp")
-    # only exist after their join, so they force the row-level plan
-    # and compute post-join. SQL semantics are the JOIN's: an order-
-    # level SUM(o_totalprice) is weighted by lineitem multiplicity,
-    # exactly what the statement says.
-    home: str = "lineitem"
+    # "fact" measures compute in the fused pre-projection below any
+    # partial aggregation; lineitem arm measures ("order"/"part"/
+    # "supp") only exist after their join, so they force the row-level
+    # plan and compute post-join. SQL semantics are the JOIN's: an
+    # order-level SUM(o_totalprice) is weighted by lineitem
+    # multiplicity, exactly what the statement says.
+    home: str = "fact"
+    # the column of the bucketed lineitem layout that stores raw_int()
+    # at rest (sources/bucketed.py _lineitem_with_derived); the spine
+    # plan and the user-view build read it instead of recomputing
+    derived: str | None = None
 
 
 def _rev() -> Column:
@@ -363,11 +398,15 @@ def _rev() -> Column:
 MEASURES: dict[str, Measure] = {
     m.name: m
     for m in (
-        Measure("quantity", lambda: cents("l_quantity"), 100, "l_quantity"),
-        Measure("base_price", lambda: cents("l_extendedprice"), 100, "l_extendedprice"),
-        Measure("discount", lambda: cents("l_discount"), 100, "l_discount"),
-        Measure("revenue", _rev, 10_000, None),
-        Measure("charge", lambda: _rev() * (100 + cents("l_tax")), 1_000_000, None),
+        Measure("quantity", lambda: cents("l_quantity"), 100, "l_quantity",
+                derived="l_qty_i"),
+        Measure("base_price", lambda: cents("l_extendedprice"), 100,
+                "l_extendedprice", derived="l_price_i"),
+        Measure("discount", lambda: cents("l_discount"), 100, "l_discount",
+                derived="l_disc_i"),
+        Measure("revenue", _rev, 10_000, None, derived="l_rev_i"),
+        Measure("charge", lambda: _rev() * (100 + cents("l_tax")), 1_000_000,
+                None, derived="l_charge_i"),
         Measure("order_total", lambda: cents("o_totalprice"), 100,
                 "o_totalprice", home="order"),
         Measure("cust_acctbal", lambda: cents("c_acctbal"), 100,
@@ -423,77 +462,242 @@ SUPP_ATTRS = frozenset({"s_name", "s_acctbal"})
 
 
 # ---------------------------------------------------------------------------
-# Projection descriptors + subsumption.
+# The projection engine, shared with the corpus router
+# (plans/corpus_routing.py): one stored-measure descriptor, one
+# aggregate-expression builder, one projection type with one
+# subsumption test and one build, one candidate loop (:func:`_route`).
+# The two families differ only in descriptor and measure fields
+# (docs/DECISIONS.md).
 # ---------------------------------------------------------------------------
 
 
 @dataclass(frozen=True)
 class _StoredMeasure:
-    int_col: str  # stored int64 partial-sum column
-    cnt_col: str | None  # stored non-null count column (COUNT/AVG support)
-    min_col: str | None = None  # stored int64 partial-min (MIN support)
-    max_col: str | None = None  # stored int64 partial-max (MAX support)
+    """Where the partial states of one measure live: the int64 partial
+    sum, the non-null count (COUNT/AVG support), the int64 partial
+    min/max (MIN/MAX support). A cube stores them per group; a raw plan
+    names the row-level or per-key partial columns it computed."""
+
+    measure: Measure
+    int_col: str
+    cnt_col: str | None
+    min_col: str | None = None
+    max_col: str | None = None
+
+    @classmethod
+    def of(
+        cls, m: Measure, stem: str | None = None, cnt_col: str | None = None
+    ) -> _StoredMeasure:
+        """The standard partial columns of ``m``: ``{stem}_i``,
+        ``min_{stem}_i`` and ``max_{stem}_i`` (stem: the measure's name
+        unless given) and, when ``m`` has a source column, the count
+        ``cnt_col`` (default ``cnt_{name}``). Every user view stores
+        ``of(m)`` (sources/user_projections.py)."""
+        stem = stem or m.name
+        cnt = (cnt_col or f"cnt_{m.name}") if m.source_col else None
+        return cls(m, f"{stem}_i", cnt, f"min_{stem}_i", f"max_{stem}_i")
+
+
+def _row_level(
+    model: Mapping[str, Measure],
+    int_cols: dict[str, str],
+    cnt_cols: dict[str, str | None],
+) -> dict[str, _StoredMeasure]:
+    """A raw plan's row-level aggregate inputs: each measure's sum, min
+    and max read its int column, its count counts its source column."""
+    return {
+        m: _StoredMeasure(model[m], c, cnt_cols.get(m), c, c)
+        for m, c in int_cols.items()
+    }
+
+
+def _unscaled(v: Column, divisor: int) -> Column:
+    """An aggregated int64 partial in its measure's unit: DOUBLE over
+    the divisor, or the exact BIGINT of an integer measure. Scaling to
+    fixed point is monotone, so it commutes with MIN/MAX: the min over
+    stored partial mins equals the min over the raw rows."""
+    return v if divisor == 1 else v.cast("double") / divisor
+
+
+def agg_exprs(
+    q,
+    stored: Mapping[str, _StoredMeasure],
+    cnt_star: str | None,
+    sketches: Mapping[str, str] | None = None,
+) -> list[Column]:
+    """The output aggregate expressions of ``q`` (an :class:`AggQuery`
+    or a corpus ``TableAggQuery``), computed from int64 inputs — the
+    one builder every cube build and raw plan shares. ``stored`` says
+    where each measure's sum/count/min/max inputs live.
+
+    ``cnt_star`` names a partial-count column when the input rows are
+    themselves partial aggregates (a cube, the per-order star partial);
+    counts then re-derive as SUMs of partial counts, coalesced to 0 —
+    SQL COUNT over an empty input is 0 but SUM of no partials is NULL
+    (grouped queries can't hit it; a filtered global aggregate can).
+    Without it, counts are row-level. ``sketches`` maps approx_distinct
+    targets to stored HLL sketch partials, union-merged then estimated;
+    without one the rows are sketched directly — the two agree exactly
+    because HLL union is register-max. COUNT(DISTINCT) computes
+    directly wherever its target survives to the aggregation input (a
+    stored group key, or a partial-aggregation key)."""
+
+    def count(col) -> Column:
+        if cnt_star:
+            return F.coalesce(F.sum(col), F.lit(0).cast("long"))
+        return F.count(col)
+
+    exprs = []
+    for a in q.aggs:
+        if a.fn == "count_distinct":
+            e = F.countDistinct(F.col(a.measure))
+        elif a.fn == "approx_distinct":
+            if sketches and a.measure in sketches:
+                sk = F.hll_union_agg(sketches[a.measure])
+            else:
+                sk = F.hll_sketch_agg(F.col(a.measure))
+            e = F.hll_sketch_estimate(sk)
+        elif a.fn == "count_star":
+            e = count(cnt_star or F.lit(1))
+        elif a.fn in ("sum", "min", "max", "count", "avg"):
+            sm = stored[a.measure]  # type: ignore[index]
+            d = sm.measure.divisor
+            if a.fn == "sum":
+                e = _unscaled(F.sum(sm.int_col), d)
+            elif a.fn == "min":
+                e = _unscaled(F.min(sm.min_col), d)
+            elif a.fn == "max":
+                e = _unscaled(F.max(sm.max_col), d)
+            elif a.fn == "count":
+                e = count(sm.cnt_col)
+            else:
+                s = F.sum(sm.int_col).cast("double")
+                n = F.sum(sm.cnt_col) if cnt_star else F.count(sm.cnt_col)
+                e = (s if d == 1 else s / d) / n
+        else:
+            raise ValueError(f"unsupported aggregate fn {a.fn!r}")
+        exprs.append(e.alias(a.alias))
+    return exprs
+
+
+def _grouped(df: DataFrame, q, exprs: list[Column]) -> DataFrame:
+    """``df`` aggregated by the query's keys, in key order (an empty
+    group_by is a global aggregate: one row, nothing to order)."""
+    out = df.groupBy(*q.group_by).agg(*exprs)
+    return out.orderBy(*q.group_by) if q.group_by else out
+
+
+def _distinct(df: DataFrame, q) -> DataFrame:
+    """The DISTINCT shape (no aggregates): the key combinations."""
+    return df.select(*q.group_by).distinct().orderBy(*q.group_by)
+
+
+# GRAIN-BOUNDARY TIME FOLDING (plans/corpus_routing.py docstring): a
+# ts leaf folds onto a stored hour key when it is a row-set
+# equivalence on it — ``>=``/``<`` an hour-boundary literal; <=, =
+# and between are sub-grain and never fold.
+_HOUR_BOUNDARY = re.compile(r"^\d{4}-\d{2}-\d{2} \d{2}:00:00$")
+_TS_FOLD_OPS = frozenset({">=", "<"})
+# grains a stored hour key re-aggregates exactly:
+# date_trunc(u, date_trunc('hour', ts)) == date_trunc(u, ts)
+_HOUR_OR_COARSER = frozenset({"hour", "day", "month", "quarter", "year"})
+
+
+def _ts_pred_folds(p: Pred) -> bool:
+    return (
+        p.op in _TS_FOLD_OPS
+        and p.cast == "timestamp"
+        and isinstance(p.value, str)
+        and bool(_HOUR_BOUNDARY.match(p.value))
+    )
 
 
 @dataclass(frozen=True)
 class Projection:
-    """One deployed layout the router may answer from: the attributes
-    it stores (grouping/filter domain), its stored measure partials,
-    its COUNT(*) column, and how to open it. ``requires`` (optional)
-    narrows the projection's target query family: it volunteers only
-    when at least one of those attributes appears in the query's
-    grouping or filters. (Catalog ORDER is the other steering tool:
-    earlier projections claim first, so the rollup pair keeps the
-    undated pure-star shapes it measures best on even though the star
-    cube could also answer them.)"""
+    """One deployed cube the router may answer from, over ``table``:
+    the group keys it stores (grouping/filter domain), its stored
+    measure partials, its COUNT(*) column, and how to open it. Catalog
+    ORDER steers among cubes that all subsume a query: earlier claims
+    first. Every difference between the lineitem star and the corpus
+    tables is a field here, a field of the query spec, or a measure
+    field (docs/DECISIONS.md)."""
 
     name: str
+    table: str
     attrs: frozenset[str]
     measures: dict[str, _StoredMeasure]
     count_star_col: str
     open: Callable[[SparkSession, str], DataFrame]
-    requires: frozenset[str] = frozenset()
     # approx_count_distinct support: target column -> stored HLL
     # sketch partial (register-max-mergeable, so the cube answers
     # distinct-count questions with no distinct shuffle)
     sketches: dict[str, str] | None = None
-    # the dimension chain the projection's deploy-time build JOINED:
-    # it answers exactly the queries that declare (or minimally imply)
-    # the same chain — an inner join may drop orphan fact rows, and
-    # the router never assumes FK integrity, so chain-2 and chain-4
-    # specs are different queries even over identical attributes.
-    chain: int = 0
-    # the part/supplier arms the deploy-time build JOINED (round-7:
-    # user projections may store them; every built-in keeps both
-    # False). Same honesty rule as chain: the inner arm join may drop
-    # orphan lineitems, so a projection answers exactly the specs
-    # declaring the SAME arm set — never a superset or subset.
+    # (stored hour-grain col, ts source col): the grain-boundary time
+    # fold. The stored grain is hour everywhere — finer storage folds
+    # strictly more queries while the row bound stays scale-invariant.
+    time_key: tuple[str, str] | None = None
+    # the lineitem dimension chain the deploy-time build JOINED (None:
+    # no star build): the cube answers exactly the queries that declare
+    # (or minimally imply) the same chain — an inner join may drop
+    # orphan fact rows, and the router never assumes FK integrity, so
+    # chain-2 and chain-4 specs are different queries even over
+    # identical attributes. Same honesty rule for the part/supplier
+    # arms: a star cube answers exactly the specs declaring the SAME
+    # arm set — never a superset or subset.
+    chain: int | None = None
     part: bool = False
     supp: bool = False
 
-    def subsumes(self, q: AggQuery) -> bool:
-        if bool(q.part) != self.part or bool(q.supp) != self.supp:
-            # arm semantics must match exactly (inner joins that may
-            # drop orphan lineitems are part of the query's meaning)
+    def _foldable(self, q) -> frozenset[str]:
+        """The attributes this cube answers for ``q``: its stored keys,
+        plus the attributes of every declared corpus dim whose FACT KEY
+        it stores — the join attaches per-key-constant attributes onto
+        stored groups (joining groups == joining rows then grouping).
+        The engine keeps every CorpusDim complete and 1:1, so a
+        declared dim never changes the row population: one whose
+        attributes the query doesn't reference folds vacuously."""
+        if not q.dims:
+            return self.attrs
+        from .corpus_routing import CORPUS_DIMS
+
+        out = set(self.attrs)
+        for name in q.dims:
+            d = CORPUS_DIMS[name]
+            if d.fact_key in self.attrs:
+                out |= d.attrs
+        return frozenset(out)
+
+    def subsumes(self, q) -> bool:
+        if q.table != self.table:
             return False
-        if effective_chain(q) != self.chain:
+        if self.chain is not None and (
+            (bool(q.part), bool(q.supp)) != (self.part, self.supp)
+            or effective_chain(q) != self.chain
+        ):
             return False
+        foldable = self._foldable(q)
+        _time_col, ts_src = self.time_key or (None, None)
+        units = {alias: unit for alias, unit, _c in q.truncs}
         # Trunc aliases resolve to their SOURCE attribute: storing the
-        # finer grain is what makes the coarser grouping derivable.
-        sources = set(q.group_sources().values())
-        filter_cols: set[str] = set()
+        # finer grain is what makes the coarser grouping derivable. A
+        # grain over the ts stored at hour grain folds when it is hour
+        # or coarser; a sub-hour grouping must not (the raw plan
+        # computes it exactly).
+        for g, src in q.group_sources().items():
+            if src not in foldable and not (
+                src == ts_src and units.get(g) in _HOUR_OR_COARSER
+            ):
+                return False
+        # ANY boolean predicate tree folds exactly when every leaf is a
+        # stored group key (constant within each stored group) or an
+        # hour-boundary ts leaf (a row-set equivalence on the stored
+        # hour key) — each leaf rewrite is exact, so it composes.
         for f in q.filters:
-            filter_cols |= f.cols()
-        used = sources | filter_cols
-        if self.requires and not (self.requires & used):
-            return False
-        if not sources <= self.attrs:
-            return False
-        # ANY boolean predicate tree folds exactly as long as every
-        # referenced column is a stored group key (the predicate is
-        # then constant within each stored group).
-        if not filter_cols <= self.attrs:
-            return False
+            for leaf in f.leaves():
+                if leaf.col not in foldable and not (
+                    leaf.col == ts_src and _ts_pred_folds(leaf)
+                ):
+                    return False
         for a in q.aggs:
             if a.fn == "count_star":
                 continue
@@ -501,7 +705,7 @@ class Projection:
                 # folds iff the target is a stored group key: the
                 # distinct value set within any output group over
                 # stored rows equals the set over raw rows
-                if (a.measure or "") not in self.attrs:
+                if (a.measure or "") not in foldable:
                     return False
                 continue
             if a.fn == "approx_distinct":
@@ -522,68 +726,51 @@ class Projection:
                 return False
         return True
 
-    def build(self, spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
+    def build(self, spark: SparkSession, sf_dir: str, q) -> DataFrame:
+        df = self.open(spark, sf_dir)
+        if q.dims:
+            # Declared dims attach BROADCAST onto the cube's groups
+            # (registry-sized at any corpus scale), exact because dim
+            # attrs are constants of the stored fact key; a dim whose
+            # referenced attributes the cube already STORES (a user view
+            # built through the dim) needs no join at all.
+            from .corpus_routing import CORPUS_DIMS
+
+            referenced = set(q.group_sources().values()) | {
+                a.measure for a in q.aggs if a.fn == "count_distinct"
+            }
+            for f in q.filters:
+                referenced |= f.cols()
+            for name in q.dims:
+                d = CORPUS_DIMS[name]
+                if (referenced & d.attrs) - self.attrs:
+                    dim = d.open(spark, sf_dir)
+                    df = df.join(
+                        F.broadcast(dim), F.col(d.fact_key) == dim[d.dim_key]
+                    )
+        time_col, ts_src = self.time_key or (None, None)
         # Filters BEFORE truncs: WHERE is pre-projection in SQL, so a
         # trunc alias that shadows a filtered column must not be
-        # visible to the filter (the raw plan orders the same way).
-        df = self.open(spark, sf_dir)
+        # visible to the filter (the raw plans order the same way). ts
+        # leaves read the stored hour key.
         for p in q.filters:
+            if ts_src is not None:
+                p = p.rename(ts_src, time_col)
             df = df.filter(p.column())
-        df = apply_truncs(df, q)
+        for alias, unit, col in q.truncs:
+            # date_trunc(u, hour) == date_trunc(u, ts) for u >= hour;
+            # the hour grain itself is the stored key verbatim
+            src = time_col if col == ts_src else col
+            df = df.withColumn(alias, F.date_trunc(unit, F.col(src)))
         if not q.aggs:
             # DISTINCT shape: the query's key combinations are a
             # projection of the stored group keys (every raw row maps
             # to exactly one stored group), so distinct-over-stored ≡
-            # distinct-over-raw — ~15k stored rows scanned instead of
-            # the fact table.
-            return df.select(*q.group_by).distinct().orderBy(*q.group_by)
-        exprs = []
-        for a in q.aggs:
-            # COUNT re-derives as a SUM of stored partial counts, whose
-            # value over ZERO input rows is NULL — but SQL COUNT of an
-            # empty input is 0. Grouped queries can't hit this (a group
-            # only exists where rows do); a filtered GLOBAL aggregate
-            # can, so coalesce to 0 exactly like the raw plan's
-            # F.count would return.
-            if a.fn == "count_star":
-                exprs.append(
-                    F.coalesce(F.sum(self.count_star_col), F.lit(0).cast("long"))
-                    .alias(a.alias)
-                )
-                continue
-            if a.fn == "count_distinct":
-                exprs.append(F.countDistinct(F.col(a.measure)).alias(a.alias))
-                continue
-            if a.fn == "approx_distinct":
-                exprs.append(
-                    F.hll_sketch_estimate(
-                        F.hll_union_agg(self.sketches[a.measure])  # type: ignore[index]
-                    ).alias(a.alias)
-                )
-                continue
-            m, sm = MEASURES[a.measure], self.measures[a.measure]  # type: ignore[index]
-            if a.fn == "sum":
-                exprs.append(isum_expr(F.col(sm.int_col), m.divisor).alias(a.alias))
-            elif a.fn == "count":
-                exprs.append(
-                    F.coalesce(F.sum(sm.cnt_col), F.lit(0).cast("long"))
-                    .alias(a.alias)
-                )
-            elif a.fn == "avg":
-                exprs.append(
-                    (isum_expr(F.col(sm.int_col), m.divisor) / F.sum(sm.cnt_col)).alias(
-                        a.alias
-                    )
-                )
-            elif a.fn == "min":
-                exprs.append(imin_expr(F.col(sm.min_col), m.divisor).alias(a.alias))
-            elif a.fn == "max":
-                exprs.append(imax_expr(F.col(sm.max_col), m.divisor).alias(a.alias))
-            else:
-                raise ValueError(f"unsupported aggregate fn {a.fn!r}")
-        out = df.groupBy(*q.group_by).agg(*exprs)
-        # Empty group_by = a global aggregate (one row; nothing to order).
-        return out.orderBy(*q.group_by) if q.group_by else out
+            # distinct-over-raw.
+            return _distinct(df, q)
+        return _grouped(
+            df, q, agg_exprs(q, self.measures, self.count_star_col, self.sketches)
+        )
 
 
 def _open_pricing_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,14 +781,13 @@ def _open_pricing_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _open_order_revenue_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.retention import apply_tombstones
-
-    from ..sources.snapshots import pinned_table
+    from ..sources.snapshots import bucketed_scan
 
     roll_name, den_name = order_revenue_projection(spark, sf_dir)
     # S22: pure-append refreshes make rollup/denorm APPEND layouts
     # (round 9) — inside a snapshot read, scan only the pinned files
-    r = pinned_table(spark, sf_dir, roll_name) or spark.table(roll_name)
-    d = pinned_table(spark, sf_dir, den_name) or spark.table(den_name)
+    r = bucketed_scan(spark, sf_dir, roll_name)
+    d = bucketed_scan(spark, sf_dir, den_name)
     # S19 tombstones subtract on the denorm side (the inner join then
     # drops the dead orders' rollup rows too); the rollup/denorm keep
     # deleted orders' bytes until the scheduled OPTIMIZE rewrite.
@@ -625,27 +811,25 @@ def _open_segment_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return versioned_parquet(spark, segment_cube_table(spark, sf_dir))
 
 
+# The five pricing measures' stored partials, as the three lineitem
+# cubes store them (sources/bucketed.py _pricing_cube_aggs).
+_PRICING_PARTIALS = {
+    "quantity": _StoredMeasure.of(MEASURES["quantity"], "qty", "cnt_qty"),
+    "base_price": _StoredMeasure.of(MEASURES["base_price"], "price", "cnt_price"),
+    "discount": _StoredMeasure.of(MEASURES["discount"], "disc", "cnt_disc"),
+    "revenue": _StoredMeasure.of(MEASURES["revenue"], "rev"),
+    "charge": _StoredMeasure.of(MEASURES["charge"], "charge"),
+}
+
 PROJECTIONS: tuple[Projection, ...] = (
     Projection(
         name="pricing_cube",
+        table="lineitem",
         attrs=frozenset({"l_returnflag", "l_linestatus", "l_shipdate"}),
-        measures={
-            "quantity": _StoredMeasure(
-                "qty_i", "cnt_qty", "min_qty_i", "max_qty_i"
-            ),
-            "base_price": _StoredMeasure(
-                "price_i", "cnt_price", "min_price_i", "max_price_i"
-            ),
-            "discount": _StoredMeasure(
-                "disc_i", "cnt_disc", "min_disc_i", "max_disc_i"
-            ),
-            "revenue": _StoredMeasure("rev_i", None, "min_rev_i", "max_rev_i"),
-            "charge": _StoredMeasure(
-                "charge_i", None, "min_charge_i", "max_charge_i"
-            ),
-        },
+        measures=_PRICING_PARTIALS,
         count_star_col="cnt",
         open=_open_pricing_cube,
+        chain=0,
     ),
     # The segment cube (round 7, the q10 answer): every pricing
     # measure keyed by the LOW-CARDINALITY per-order attributes x the
@@ -656,25 +840,12 @@ PROJECTIONS: tuple[Projection, ...] = (
     # 450 stored rows beat the per-order rollup join unconditionally.
     Projection(
         name="segment_cube",
+        table="lineitem",
         attrs=frozenset(
             {"c_mktsegment", "o_orderpriority", "o_orderstatus",
              "l_returnflag", "l_linestatus"}
         ),
-        measures={
-            "quantity": _StoredMeasure(
-                "qty_i", "cnt_qty", "min_qty_i", "max_qty_i"
-            ),
-            "base_price": _StoredMeasure(
-                "price_i", "cnt_price", "min_price_i", "max_price_i"
-            ),
-            "discount": _StoredMeasure(
-                "disc_i", "cnt_disc", "min_disc_i", "max_disc_i"
-            ),
-            "revenue": _StoredMeasure("rev_i", None, "min_rev_i", "max_rev_i"),
-            "charge": _StoredMeasure(
-                "charge_i", None, "min_charge_i", "max_charge_i"
-            ),
-        },
+        measures=_PRICING_PARTIALS,
         count_star_col="cnt",
         open=_open_segment_cube,
         chain=4,
@@ -692,24 +863,11 @@ PROJECTIONS: tuple[Projection, ...] = (
     # the cube carrying all five measures.
     Projection(
         name="star_date_cube",
+        table="lineitem",
         attrs=frozenset(
             {"r_name", "n_name", "l_returnflag", "l_linestatus", "l_shipdate"}
         ),
-        measures={
-            "quantity": _StoredMeasure(
-                "qty_i", "cnt_qty", "min_qty_i", "max_qty_i"
-            ),
-            "base_price": _StoredMeasure(
-                "price_i", "cnt_price", "min_price_i", "max_price_i"
-            ),
-            "discount": _StoredMeasure(
-                "disc_i", "cnt_disc", "min_disc_i", "max_disc_i"
-            ),
-            "revenue": _StoredMeasure("rev_i", None, "min_rev_i", "max_rev_i"),
-            "charge": _StoredMeasure(
-                "charge_i", None, "min_charge_i", "max_charge_i"
-            ),
-        },
+        measures=_PRICING_PARTIALS,
         count_star_col="cnt",
         open=_open_star_date_cube,
         chain=4,
@@ -725,11 +883,12 @@ PROJECTIONS: tuple[Projection, ...] = (
     # order-date mix (q04's segment-by-order-month family).
     Projection(
         name="order_revenue_star",
+        table="lineitem",
         attrs=frozenset(
             {"r_name", "n_name", "c_mktsegment", "o_orderstatus",
              "o_orderpriority", "o_orderdate"}
         ),
-        measures={"revenue": _StoredMeasure("rev_i", None)},
+        measures={"revenue": _StoredMeasure(MEASURES["revenue"], "rev_i", None)},
         count_star_col="n_items",
         open=_open_order_revenue_star,
         chain=4,
@@ -792,89 +951,6 @@ def _dim_arm(
         r = table(spark, sf_dir, "region")
         dims = dims.join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
     return dims.select("o_orderkey", *attrs)
-
-
-def _final_agg_exprs(
-    q: AggQuery,
-    src_int: dict[str, str],
-    src_cnt: dict[str, str],
-    cnt_star: str | None,
-    src_min: dict[str, str] | None = None,
-    src_max: dict[str, str] | None = None,
-) -> list[Column]:
-    """The output aggregate expressions of ``q``, computed from int64
-    fixed-point inputs. ``src_int``/``src_cnt`` name the column each
-    measure's sum/count reads; ``cnt_star`` names a partial-count
-    column when the input rows are themselves partial aggregates (the
-    star path), else counts are row-level. ``src_min``/``src_max``:
-    where each measure's MIN/MAX input lives — the fused int column on
-    the row-level paths, the per-order partial-min/max column on the
-    partial-agg star path (MIN/MAX commute with the partial)."""
-    src_min = src_min if src_min is not None else src_int
-    src_max = src_max if src_max is not None else src_int
-    exprs = []
-    for a in q.aggs:
-        # COUNT(DISTINCT col) computes directly wherever the target
-        # column survives to the aggregation input — row-level paths
-        # trivially; the partial-agg star path keys its partials by
-        # the target too, so the distinct value set is preserved.
-        if a.fn == "count_distinct":
-            exprs.append(F.countDistinct(F.col(a.measure)).alias(a.alias))
-            continue
-        # approx_distinct computes ROW-LEVEL here (the plans that call
-        # this with approx aggregates are all row-level: _raw_plan
-        # forces the row-level form when one is present); the cube path
-        # union-merges stored sketches in Projection.build instead.
-        if a.fn == "approx_distinct":
-            exprs.append(
-                F.hll_sketch_estimate(
-                    F.hll_sketch_agg(F.col(a.measure))
-                ).alias(a.alias)
-            )
-            continue
-        # Partial-count re-aggregation (the cnt_star branch) must
-        # coalesce to 0 for empty-input GLOBAL aggregates — SQL
-        # COUNT is 0 there, but SUM of no partials is NULL (same
-        # edge as Projection.build; F.count already returns 0).
-        if a.fn == "count_star":
-            exprs.append(
-                (
-                    F.coalesce(F.sum(cnt_star), F.lit(0).cast("long"))
-                    if cnt_star
-                    else F.count(F.lit(1))
-                ).alias(a.alias)
-            )
-            continue
-        m = MEASURES[a.measure]  # type: ignore[index]
-        s = isum_expr(F.col(src_int[a.measure]), m.divisor)
-        if a.fn == "sum":
-            exprs.append(s.alias(a.alias))
-        elif a.fn == "min":
-            exprs.append(
-                imin_expr(F.col(src_min[a.measure]), m.divisor).alias(a.alias)
-            )
-        elif a.fn == "max":
-            exprs.append(
-                imax_expr(F.col(src_max[a.measure]), m.divisor).alias(a.alias)
-            )
-        elif a.fn == "count":
-            exprs.append(
-                (
-                    F.coalesce(F.sum(src_cnt[a.measure]), F.lit(0).cast("long"))
-                    if cnt_star
-                    else F.count(src_cnt[a.measure])
-                ).alias(a.alias)
-            )
-        elif a.fn == "avg":
-            c = (
-                F.sum(src_cnt[a.measure])
-                if cnt_star
-                else F.count(src_cnt[a.measure])
-            )
-            exprs.append((s / c).alias(a.alias))
-        else:
-            raise ValueError(f"unsupported aggregate fn {a.fn!r}")
-    return exprs
 
 
 def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
@@ -995,10 +1071,9 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
         # collapse to one row per (join keys, local keys) — the same
         # shuffle-shrinking idea as the partial aggregation.
         if not join_keys:
-            return li.select(*q.group_by).distinct().orderBy(*q.group_by)
+            return _distinct(li, q)
         pre = li.select(*dict.fromkeys(local_group + join_keys)).distinct()
-        j = _attach_arms(pre)
-        return j.select(*q.group_by).distinct().orderBy(*q.group_by)
+        return _distinct(_attach_arms(pre), q)
 
     needed = sorted(
         {
@@ -1007,8 +1082,8 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
             if a.measure and a.fn not in ("count_distinct", "approx_distinct")
         }
     )
-    li_measures = [m for m in needed if MEASURES[m].home == "lineitem"]
-    arm_measures = [m for m in needed if MEASURES[m].home != "lineitem"]
+    li_measures = [m for m in needed if MEASURES[m].home == "fact"]
+    arm_measures = [m for m in needed if MEASURES[m].home != "fact"]
     for m in arm_measures:
         home = MEASURES[m].home
         if home == "part" and not part:
@@ -1053,7 +1128,7 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
             + sorted(
                 c
                 for m, c in cnt_cols.items()
-                if c and MEASURES[m].home == "lineitem"
+                if c and MEASURES[m].home == "fact"
             )
             + cd_local
         )
@@ -1061,15 +1136,11 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
     pre = li.select(
         *keep, *[MEASURES[m].raw_int().alias(int_cols[m]) for m in li_measures]
     )
+    row_level = _row_level(MEASURES, int_cols, cnt_cols)
 
     if not join_keys:
         # q01 shape: scan → fused projection → one-shuffle aggregate.
-        out = pre.groupBy(*q.group_by).agg(
-            *_final_agg_exprs(
-                q, int_cols, {m: c for m, c in cnt_cols.items() if c}, None
-            )
-        )
-        return out.orderBy(*q.group_by) if q.group_by else out
+        return _grouped(pre, q, agg_exprs(q, row_level, None))
 
     if join_keys != ["l_orderkey"] or arm_measures or approx_cols:
         # ROW-LEVEL arm join: when the partial key includes a
@@ -1083,12 +1154,7 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
         j = _attach_arms(pre)
         for m in arm_measures:
             j = j.withColumn(int_cols[m], MEASURES[m].raw_int())
-        out = j.groupBy(*q.group_by).agg(
-            *_final_agg_exprs(
-                q, int_cols, {m: c for m, c in cnt_cols.items() if c}, None
-            )
-        )
-        return out.orderBy(*q.group_by) if q.group_by else out
+        return _grouped(j, q, agg_exprs(q, row_level, None))
 
     # q26 shape, generalized: partial-aggregate the fact BELOW the
     # joins — keyed by the declared arms' join keys PLUS any
@@ -1109,31 +1175,16 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
         *dict.fromkeys(join_keys + local_group + cd_local)
     ).agg(*partial)
 
-    joined = _attach_arms(agg_l)
-    out = joined.groupBy(*q.group_by).agg(
-        *_final_agg_exprs(
-            q,
-            int_cols,
-            {m: f"__cnt_{m}" for m in cnt_cols},
-            "__cnt_star",
-            {m: f"__min_{m}" for m in min_ms},
-            {m: f"__max_{m}" for m in max_ms},
+    # MIN/MAX commute with the partial: they re-aggregate its per-key
+    # partial min/max columns
+    partials = {
+        m: _StoredMeasure(
+            MEASURES[m], int_cols[m], f"__cnt_{m}" if cnt_cols.get(m) else None,
+            f"__min_{m}", f"__max_{m}",
         )
-    )
-    return out.orderBy(*q.group_by) if q.group_by else out
-
-
-# Stored fixed-point columns of the bucketed fact layout, one per
-# routable measure (written by _lineitem_with_derived with the same
-# arithmetic as MEASURES[*].raw_int() — the derived-column contract
-# q46/q39 already rely on).
-_SPINE_INT_COLS = {
-    "quantity": "l_qty_i",
-    "base_price": "l_price_i",
-    "discount": "l_disc_i",
-    "revenue": "l_rev_i",
-    "charge": "l_charge_i",
-}
+        for m in needed
+    }
+    return _grouped(_attach_arms(agg_l), q, agg_exprs(q, partials, "__cnt_star"))
 
 
 def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | None:
@@ -1193,8 +1244,7 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
     # knob) — the DEPLOY joins already use spill-friendly sort-merge
     # (sources/bucketed.py segment/star cube, user projections).
     from ..sources.retention import apply_tombstones
-
-    from ..sources.snapshots import pinned_table
+    from ..sources.snapshots import bucketed_scan
 
     li_name, _ = bucketed_fact_tables(spark, sf_dir)
     _, den_name = order_revenue_projection(spark, sf_dir)
@@ -1203,16 +1253,14 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
     # S22 pins the append-layout scan inside a snapshot read (the
     # denorm is versioned per refresh — its memo path needs no pin)
     li = apply_tombstones(
-        spark, sf_dir, "orders",
-        pinned_table(spark, sf_dir, li_name) or spark.table(li_name),
+        spark, sf_dir, "orders", bucketed_scan(spark, sf_dir, li_name),
         "l_orderkey",
     )
     for p in local_filters:
         li = li.filter(p.column())
     li = apply_truncs(li, q, LINEITEM_COLS)
     den = apply_tombstones(
-        spark, sf_dir, "orders",
-        pinned_table(spark, sf_dir, den_name) or spark.table(den_name),
+        spark, sf_dir, "orders", bucketed_scan(spark, sf_dir, den_name)
     ).select("o_orderkey", *dim_attrs)
 
     if not q.aggs:
@@ -1223,15 +1271,15 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
         j = pre.join(den.hint("shuffle_hash"), pre.l_orderkey == den.o_orderkey)
         for p in star_filters:
             j = j.filter(p.column())
-        j = apply_truncs(j, q, star_trunc_sources)
-        return j.select(*q.group_by).distinct().orderBy(*q.group_by)
+        return _distinct(apply_truncs(j, q, star_trunc_sources), q)
 
     needed = sorted(
         {a.measure for a in q.aggs if a.measure and a.fn != "count_distinct"}
     )
-    if any(MEASURES[m].home != "lineitem" for m in needed):
+    if any(MEASURES[m].home != "fact" for m in needed):
         return None  # arm-home measures: the row-level raw plan computes them
-    int_cols = {m: _SPINE_INT_COLS[m] for m in needed}
+    # the bucketed fact stores each measure's fixed-point column at rest
+    int_cols = {m: MEASURES[m].derived for m in needed}
     cnt_cols = {
         m: MEASURES[m].source_col
         for m in needed
@@ -1251,12 +1299,7 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
     for p in star_filters:
         j = j.filter(p.column())
     j = apply_truncs(j, q, star_trunc_sources)
-    out = j.groupBy(*q.group_by).agg(
-        *_final_agg_exprs(
-            q, int_cols, {m: c for m, c in cnt_cols.items() if c}, None
-        )
-    )
-    return out.orderBy(*q.group_by) if q.group_by else out
+    return _grouped(j, q, agg_exprs(q, _row_level(MEASURES, int_cols, cnt_cols), None))
 
 
 # ---------------------------------------------------------------------------
@@ -1264,29 +1307,47 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
 # ---------------------------------------------------------------------------
 
 
+def _route(
+    spark: SparkSession,
+    sf_dir: str,
+    q,
+    builtins: Iterable[Projection],
+    fallbacks: tuple[tuple[str, Callable], ...],
+    raw: Callable[[SparkSession, str, object], DataFrame],
+) -> tuple[DataFrame, str]:
+    """The one candidate loop of both routers: ``builtins`` in their
+    catalog order (a measured cost order), then the USER views over
+    ``q.table`` (sources/user_projections.py — names prefixed
+    "user:"), then the family's ``fallbacks`` — ``(name, plan)``
+    pairs tried in order, a plan returning None to pass — then the
+    ``raw`` plan. Built-ins first keeps the measured plans for the
+    shapes they were built for; a user view claims exactly the family
+    the built-ins refuse. The user views are a lazy generator: a view's
+    freshness check runs only once every built-in has refused.
+    Returns (result, chosen)."""
+    from ..sources.user_projections import user_projections
+
+    for proj in itertools.chain(builtins, user_projections(spark, sf_dir, q.table)):
+        if proj.subsumes(q):
+            return proj.build(spark, sf_dir, q), proj.name
+    for name, plan in fallbacks:
+        df = plan(spark, sf_dir, q)
+        if df is not None:
+            return df, name
+    return raw(spark, sf_dir, q), "raw"
+
+
 def route(
     spark: SparkSession, sf_dir: str, q: AggQuery
 ) -> tuple[DataFrame, str]:
     """Answer ``q`` from the cheapest deployed projection that subsumes
-    it, else from the raw-table plan. Returns (result, chosen) where
-    ``chosen`` is the projection name or "raw" — callers that only
-    want the DataFrame ignore the second element; tests assert on it.
-
-    Candidate order: built-in projections (their catalog order is a
-    measured cost order), then session-deployed USER projections
-    (sources/user_projections.py — names prefixed "user:"), then the
-    bucketed spine, then the raw plan. Built-ins first keeps the
-    measured plans for the shapes they were built for; a user
-    projection claims exactly the family the built-ins refuse."""
-    from ..sources.user_projections import user_projections
-
-    for proj in (*PROJECTIONS, *user_projections(spark, sf_dir, "lineitem")):
-        if proj.subsumes(q):
-            return proj.build(spark, sf_dir, q), proj.name
-    spine = _spine_plan(spark, sf_dir, q)
-    if spine is not None:
-        return spine, "bucketed_spine"
-    return _raw_plan(spark, sf_dir, q), "raw"
+    it, else from the bucketed spine, else from the raw-table plan
+    (:func:`_route`). Returns (result, chosen) where ``chosen`` is the
+    projection name, "bucketed_spine" or "raw" — callers that only
+    want the DataFrame ignore the second element; tests assert on it."""
+    return _route(
+        spark, sf_dir, q, PROJECTIONS, (("bucketed_spine", _spine_plan),), _raw_plan
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1502,18 +1563,13 @@ def route_scan(
         for p in q.filters
     )
     from ..sources.retention import apply_tombstones
-
-    from ..sources.snapshots import pinned_parquet
-
     from ..sources.snapshots import layout_parquet
 
     if used <= _ZORDER_COLUMNS and has_key_range:
-        zp = zordered_lineitem(spark, sf_dir)
-        df = pinned_parquet(spark, zp) or layout_parquet(spark, zp)
+        df = layout_parquet(spark, zordered_lineitem(spark, sf_dir))
         chosen = "zorder_lineitem"
     elif used <= LINEITEM_COLS and has_date_range:
-        dp = dated_lineitem(spark, sf_dir)
-        df = pinned_parquet(spark, dp) or layout_parquet(spark, dp)
+        df = layout_parquet(spark, dated_lineitem(spark, sf_dir))
         months = month_bounds_filter(q.filters)
         if months is not None:
             # superset constraint on the partition column — prunes
@@ -1576,8 +1632,7 @@ def r85_routed_star_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue/count partials re-aggregate associatively, and the scan
     reads ~60k scale-invariant rows instead of joining two fact
     tables. The rollup pair correctly refuses this spec (no shipdate
-    stored); the cube volunteers because the query involves its
-    required date attribute."""
+    stored); the star-date cube stores it."""
     df, chosen = route(spark, sf_dir, _ROUTED_STAR_DATE_SPEC)
     assert chosen == "star_date_cube", chosen
     return df

@@ -392,8 +392,8 @@ def _plain_fn(node) -> tuple[str, str] | None:
 # locale conventions differ). Folding safety is per-layout: cubes
 # storing the SOURCE at full resolution (l_shipdate, o_orderdate) fold
 # any grain; the hour-grained events cube refuses sub-hour grains
-# (corpus_routing.CorpusProjection.subsumes) and the raw plan computes
-# them exactly.
+# (routing.Projection.subsumes, through its time_key) and the raw
+# plan computes them exactly.
 _TRUNC_UNITS = frozenset({"year", "quarter", "month", "day", "hour"})
 # columns date_trunc may legally apply to (timestamp-typed); the
 # order-side o_orderdate is gated by the statement's join chain via
@@ -1083,7 +1083,7 @@ def parse_sql(sql: str) -> ParsedSQL:
             m = MEASURES[a.measure]
             # an arm-home measure is only reachable when its table is
             # actually joined (same scoping rule as plain columns)
-            if m.home != "lineitem" and m.source_col not in allowed:
+            if m.home != "fact" and m.source_col not in allowed:
                 raise UnsupportedSQL(
                     f"measure column {m.source_col} is not reachable "
                     "from the statement's joins"

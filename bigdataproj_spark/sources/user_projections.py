@@ -65,15 +65,15 @@ O(|delta| + |cube|).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.corpus_routing import (
     CORPUS_DIMS,
     CORPUS_TABLES,
-    CorpusProjection,
     CorpusTable,
     current_corpus_table,
 )
@@ -83,6 +83,7 @@ from ..plans.routing import (
     MEASURES,
     PART_ATTRS,
     SUPP_ATTRS,
+    Measure,
     Projection,
     _StoredMeasure,
 )
@@ -95,24 +96,14 @@ from .bucketed import (
 )
 from .state import warehouse
 
-# The bucketed fact's stored derived columns, per routable measure
-# (the same write-time contract _SPINE_INT_COLS documents).
-_DERIVED = {
-    "quantity": "l_qty_i",
-    "base_price": "l_price_i",
-    "discount": "l_disc_i",
-    "revenue": "l_rev_i",
-    "charge": "l_charge_i",
-}
-_ALL_MEASURES = tuple(_DERIVED)
-# Round-7 (v2): arm-home measures are declarable too. Each computes
-# post-join from its MEASURES entry (the same cents() arithmetic the
-# row-level plans run); declaring one pulls in the measure's home join
-# exactly like declaring one of that side's group keys.
-_ARM_MEASURES = ("order_total", "cust_acctbal", "part_retail", "supp_acctbal")
-_USER_MEASURES = _ALL_MEASURES + _ARM_MEASURES
-# minimal chain an order-home measure's source column needs
-_MEASURE_CHAIN = {"order_total": 1, "cust_acctbal": 2}
+# The default lineitem measures: the five the bucketed fact stores at
+# rest (Measure.derived). Round-7 (v2): the arm-home measures are
+# declarable too. Each computes post-join from its MEASURES entry (the
+# same cents() arithmetic the row-level plans run); declaring one
+# pulls in the measure's home join exactly like declaring one of that
+# side's group keys.
+_ALL_MEASURES = tuple(n for n, m in MEASURES.items() if m.derived)
+_USER_MEASURES = tuple(MEASURES)
 
 
 @dataclass
@@ -137,7 +128,7 @@ class _UserProjection:
     table: str
     keys: tuple[str, ...]
     measures: tuple[str, ...]
-    projection: Projection | CorpusProjection
+    projection: Projection
     path: str = ""  # current stored version (swung atomically on refresh)
     base_path: str = ""  # immutable deploy path; refresh versions derive from it
     maintained_by: str = "refresh"
@@ -190,18 +181,20 @@ def _catalog(spark: SparkSession, sf_dir: str) -> dict[str, _UserProjection]:
 
 def user_projections(
     spark: SparkSession, sf_dir: str, table: str
-) -> list[Projection | CorpusProjection]:
+) -> Iterator[Projection]:
     """The router-facing projections of the views deployed over
-    ``table``, in deployment order — consulted by the table's router
-    after its built-ins.
+    ``table``, in deployment order — consulted by the router's
+    candidate loop after its built-ins. A generator: nothing here runs
+    until every built-in has refused.
 
     CDC-maintained entries are offered only while FRESH: a commit
     their consumer has not yet polled past that touches their table
     makes the stored cube stale, and routing must never change an
     answer — the router falls to the built-ins/raw until the next
-    poll catches up (streaming/cdc.py). Refresh-maintained entries
-    are synchronously current by construction and always offered."""
-    out = []
+    poll catches up (streaming/cdc.py). The freshness check (a sidecar
+    read plus a ledger scan) runs when the loop reaches the entry.
+    Refresh-maintained entries are synchronously current by
+    construction and always offered."""
     for u in _catalog(spark, sf_dir).values():
         if u.table != table:
             continue
@@ -210,8 +203,7 @@ def user_projections(
 
             if not cdc_view_fresh(spark, sf_dir, u.table, u.path):
                 continue
-        out.append(u.projection)
-    return out
+        yield u.projection
 
 
 def _maintained(
@@ -239,41 +231,80 @@ def _merge_cols(u: _UserProjection):
     return add, tuple(s.min_col for s in sm), tuple(s.max_col for s in sm)
 
 
-def _opener(name: str):
-    """The router-facing ``open`` of view ``name``: the installed
-    state's current version (an immutable path)."""
+def _view_projection(
+    name: str, table: str, keys: tuple[str, ...], measures: Iterable[Measure],
+    **family,
+) -> Projection:
+    """The router-facing projection of user view ``name``: its keys,
+    the standard partial columns of its measures
+    (:meth:`_StoredMeasure.of` — the columns :func:`_partial_aggs`
+    writes), COUNT(*) in ``cnt``, the installed state's current version
+    as its scan, and the family's descriptor fields."""
 
     def _open(s: SparkSession, d: str) -> DataFrame:
         from .snapshots import versioned_parquet
 
         return versioned_parquet(s, _catalog(s, d)[name].path)
 
-    return _open
+    return Projection(
+        name=f"user:{name}",
+        table=table,
+        attrs=frozenset(keys),
+        measures={m.name: _StoredMeasure.of(m) for m in measures},
+        count_star_col="cnt",
+        open=_open,
+        **family,
+    )
+
+
+def _int_src(m: Measure) -> str:
+    """The int64 column a measure's partials aggregate FROM in the
+    cube build: the bucketed fact's at-rest derived column, else a
+    column :func:`_partials` materializes from the measure's
+    expression (post-join for the lineitem arm measures)."""
+    return m.derived or f"__{m.name}_raw_i"
+
+
+def _partial_aggs(measures: Iterable[Measure]) -> list[Column]:
+    """A user view's stored partials of ``measures``, named by
+    :meth:`_StoredMeasure.of` (the router reads the same descriptor),
+    in the order :func:`merge_partial_frames` writes them: sums,
+    counts, COUNT(*), mins, maxes."""
+    stored = [_StoredMeasure.of(m) for m in measures]
+    return (
+        [F.sum(_int_src(s.measure)).alias(s.int_col) for s in stored]
+        + [
+            F.count(s.measure.source_col).alias(s.cnt_col)
+            for s in stored
+            if s.cnt_col
+        ]
+        + [F.count(F.lit(1)).alias("cnt")]
+        + [F.min(_int_src(s.measure)).alias(s.min_col) for s in stored]
+        + [F.max(_int_src(s.measure)).alias(s.max_col) for s in stored]
+    )
+
+
+def _partials(
+    df: DataFrame,
+    group_cols: list[str],
+    measures: Iterable[Measure],
+    group_filter: DataFrame | None,
+) -> DataFrame:
+    """The tail both families' cube builds share: each measure's int64
+    input materialized (unless stored at rest), the optional
+    affected-group semi-filter, one grouped partial aggregation."""
+    measures = list(measures)
+    for m in measures:
+        if m.derived is None:
+            df = df.withColumn(_int_src(m), m.raw_int())
+    if group_filter is not None:
+        df = df.join(F.broadcast(group_filter), group_cols, "semi")
+    return df.groupBy(*group_cols).agg(*_partial_aggs(measures))
 
 
 # ---------------------------------------------------------------------------
 # Lineitem star: declaration and cube build.
 # ---------------------------------------------------------------------------
-
-
-def _int_src(m: str) -> str:
-    """The int64 column a measure's partials aggregate FROM in the
-    cube build: the bucketed fact's at-rest derived column for
-    lineitem measures, a post-join materialized expression otherwise."""
-    return _DERIVED.get(m, f"__{m}_raw_i")
-
-
-def _partial_aggs(measures: tuple[str, ...]) -> list:
-    aggs = [F.sum(_int_src(m)).alias(f"{m}_i") for m in measures]
-    aggs += [
-        F.count(MEASURES[m].source_col).alias(f"cnt_{m}")
-        for m in measures
-        if MEASURES[m].source_col
-    ]
-    aggs.append(F.count(F.lit(1)).alias("cnt"))
-    aggs += [F.min(_int_src(m)).alias(f"min_{m}_i") for m in measures]
-    aggs += [F.max(_int_src(m)).alias(f"max_{m}_i") for m in measures]
-    return aggs
 
 
 def _dim_side(
@@ -365,12 +396,9 @@ def _build_cube(
     if supp:
         su = table(spark, sf_dir, "supplier").select("s_suppkey", *supp_attrs)
         li = li.join(su, F.col("l_suppkey") == su.s_suppkey)
-    for m in measures:
-        if MEASURES[m].home != "lineitem":
-            li = li.withColumn(_int_src(m), MEASURES[m].raw_int())
-    if group_filter is not None:
-        li = li.join(F.broadcast(group_filter), list(keys), "semi")
-    return li.groupBy(*keys).agg(*_partial_aggs(measures))
+    return _partials(
+        li, list(keys), (MEASURES[m] for m in measures), group_filter
+    )
 
 
 def _star_joins(
@@ -381,7 +409,7 @@ def _star_joins(
     chain = max(
         (
             *(DIM_ATTRS.get(k, 0) for k in keys),
-            *(_MEASURE_CHAIN.get(m, 0) for m in measures),
+            *(DIM_ATTRS.get(MEASURES[m].source_col, 0) for m in measures),
         ),
         default=0,
     )
@@ -424,23 +452,9 @@ def _star_view(
                 f"unknown measure {m!r} (deployable: {sorted(_USER_MEASURES)})"
             )
     chain, part, supp = _star_joins(keys, measures)
-    proj = Projection(
-        name=f"user:{name}",
-        attrs=frozenset(keys),
-        measures={
-            m: _StoredMeasure(
-                f"{m}_i",
-                f"cnt_{m}" if MEASURES[m].source_col else None,
-                f"min_{m}_i",
-                f"max_{m}_i",
-            )
-            for m in measures
-        },
-        count_star_col="cnt",
-        open=_opener(name),
-        chain=chain,
-        part=part,
-        supp=supp,
+    proj = _view_projection(
+        name, "lineitem", keys, (MEASURES[m] for m in measures),
+        chain=chain, part=part, supp=supp,
     )
     return _UserProjection(
         name, "lineitem", keys, measures, proj,
@@ -451,19 +465,6 @@ def _star_view(
 # ---------------------------------------------------------------------------
 # Corpus tables: declaration and cube build.
 # ---------------------------------------------------------------------------
-
-
-def _corpus_partial_aggs(t: CorpusTable, measures: tuple[str, ...]) -> list:
-    aggs = []
-    for m in measures:
-        cm = t.measures[m]
-        v = cm.raw_int()
-        aggs.append(F.sum(v).alias(f"{m}_i"))
-        aggs.append(F.count(cm.source_col).alias(f"cnt_{m}"))
-        aggs.append(F.min(v).alias(f"min_{m}_i"))
-        aggs.append(F.max(v).alias(f"max_{m}_i"))
-    aggs.append(F.count(F.lit(1)).alias("cnt"))
-    return aggs
 
 
 def _build_corpus_cube(
@@ -496,9 +497,9 @@ def _build_corpus_cube(
         alias, src = time_key
         df = df.withColumn(alias, F.date_trunc("hour", F.col(src)))
         group_cols.append(alias)
-    if group_filter is not None:
-        df = df.join(F.broadcast(group_filter), group_cols, "semi")
-    return df.groupBy(*group_cols).agg(*_corpus_partial_aggs(t, measures))
+    return _partials(
+        df, group_cols, (t.measures[m] for m in measures), group_filter
+    )
 
 
 def _corpus_view(
@@ -550,16 +551,8 @@ def _corpus_view(
             raise ValueError(f"time key alias {alias!r} collides with a key")
     if not keys and time_key is None:
         raise ValueError("a projection needs at least one group key")
-    proj = CorpusProjection(
-        name=f"user:{name}",
-        table=table_name,
-        attrs=frozenset(keys),
-        measures={
-            m: _StoredMeasure(f"{m}_i", f"cnt_{m}", f"min_{m}_i", f"max_{m}_i")
-            for m in measures
-        },
-        count_star_col="cnt",
-        open=_opener(name),
+    proj = _view_projection(
+        name, table_name, keys, (t.measures[m] for m in measures),
         time_key=time_key,
     )
     return _UserProjection(
@@ -581,7 +574,7 @@ def deploy_projection(
     measures: tuple[str, ...] | None = None,
     table: str = "lineitem",
     time_key: tuple[str, str] | None = None,
-) -> Projection | CorpusProjection:
+) -> Projection:
     """Materialize a user-declared aggregate projection over ``table``
     and register it with that table's router. Lineitem-star keys may
     mix lineitem attributes, order-chain dimension attributes, and

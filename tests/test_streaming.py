@@ -1114,6 +1114,53 @@ def test_cdc_projection_consumer_refusals(spark, sf_dir, tmp_path):
         )
 
 
+def test_builtin_answers_skip_cdc_view_freshness_checks(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The router offers user views only after every built-in refuses,
+    so a statement a built-in cube answers never pays a CDC view's
+    freshness check (a sidecar read plus a ledger scan). A statement
+    only the CDC view answers checks it once and routes to it."""
+    from bigdataproj_spark.catalog import TABLES
+    from bigdataproj_spark.plans.corpus_routing import (
+        AggCall,
+        TableAggQuery,
+        route_corpus,
+    )
+    from bigdataproj_spark.streaming import cdc
+
+    work = tmp_path / "wh"
+    work.mkdir()
+    for t in TABLES:
+        table(spark, sf_dir, t).write.parquet(str(work / f"{t}.parquet"))
+    wd = str(work)
+    cdc.CdcProjectionConsumer(
+        spark, wd, str(tmp_path / "cdc"), "lazy_events",
+        table="events", keys=("event_type", "user_id"),
+    ).bootstrap()
+    checks = []
+    fresh = cdc.cdc_view_fresh
+
+    def counted(*args):
+        checks.append(args)
+        return fresh(*args)
+
+    monkeypatch.setattr(cdc, "cdc_view_fresh", counted)
+    by_type = TableAggQuery(
+        "events", (), ("event_type",), (AggCall("count_star", None, "n"),)
+    )
+    for _ in range(3):
+        _df, chosen = route_corpus(spark, wd, by_type)
+        assert chosen == "events_hourly_cube"
+    assert checks == []
+    by_user = TableAggQuery(
+        "events", (), ("user_id",), (AggCall("sum", "value", "v"),)
+    )
+    _df, chosen = route_corpus(spark, wd, by_user)
+    assert chosen == "user:lazy_events"
+    assert len(checks) == 1
+
+
 def test_cdc_fold_null_group_merges_into_one_row(spark, tmp_path):
     """Round-11 self-review regression: the increment merge must be
     NULL-safe on the group key — groupBy folds NULL group values into

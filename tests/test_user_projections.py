@@ -482,3 +482,160 @@ def test_random_arm_spec_against_user_view_matches_duckdb(
     compare_frames(
         df.toPandas(), _arm_oracle.execute(sql).fetchdf(), f"arm-view-fuzz {sql}"
     )
+
+
+# ---------------------------------------------------------------------------
+# Corpus views: an events view with an hour time key and a documents
+# view keyed on a sources dim attribute, differentially fuzzed against
+# the corpus raw plan. This drives the time-key fold (hour-boundary ts
+# leaves, trunc grains over the stored hour) and the dim-attribute key
+# path of the shared Projection.subsumes/build.
+# ---------------------------------------------------------------------------
+
+from hypothesis import example  # noqa: E402
+
+from bigdataproj_spark.plans.corpus_routing import (  # noqa: E402
+    BoolPred,
+    TableAggQuery,
+    _raw_plan as _corpus_raw_plan,
+    route_corpus,
+)
+
+_CV_EV_FILTERS = [
+    None,
+    Pred("event_type", "=", "click"),
+    Pred("ts", ">=", "2024-01-08 00:00:00", cast="timestamp"),  # folds
+    Pred("ts", "<", "2024-01-25 00:00:00", cast="timestamp"),  # folds
+    Pred("ts", "<=", "2024-01-25 00:00:00", cast="timestamp"),  # sub-grain
+    Pred("ts", ">=", "2024-01-08 06:30:00", cast="timestamp"),  # off-boundary
+    BoolPred(
+        "or",
+        (
+            Pred("user_id", "<", 40),
+            Pred("ts", "<", "2024-01-04 00:00:00", cast="timestamp"),
+        ),
+    ),
+    Pred("value", ">=", 100.0),  # filters rows, not groups
+]
+_CV_EV_AGGS = [
+    AggCall("sum", "value", "a_sum"),
+    AggCall("avg", "value", "a_avg"),
+    AggCall("min", "value", "a_min"),
+    AggCall("max", "value", "a_max"),
+    AggCall("count", "value", "a_cnt"),
+    AggCall("count_star", None, "a_n"),
+    AggCall("count_distinct", "event_type", "a_cd_type"),
+    AggCall("count_distinct", "user_id", "a_cd_user"),
+]
+_CV_DOC_GROUPS = [(), ("s_tier",), ("n_chars",), ("s_tier", "n_chars"),
+                  ("lang", "s_tier")]
+_CV_DOC_FILTERS = [
+    None,
+    Pred("s_tier", "=", "curated"),
+    Pred("n_chars", ">=", 150),  # a stored key of the view only
+    BoolPred("or", (Pred("s_tier", "=", "crawl"), Pred("n_chars", "<", 100))),
+    Pred("lang", "=", "en"),  # stored by neither the view nor with n_chars
+]
+_CV_DOC_AGGS = [
+    AggCall("sum", "chars", "a_sum_chars"),
+    AggCall("avg", "chars", "a_avg_chars"),
+    AggCall("sum", "tokens", "a_sum_toks"),
+    AggCall("max", "tokens", "a_max_toks"),
+    AggCall("min", "stopwords", "a_min_stop"),
+    AggCall("count_star", None, "a_n"),
+    AggCall("count_distinct", "s_tier", "a_cd_tier"),
+    AggCall("count_distinct", "s_kind", "a_cd_kind"),
+]
+
+_cv_ev_specs = st.fixed_dictionaries(
+    {
+        "table": st.just("events"),
+        "groups": st.sets(st.sampled_from(["user_id", "event_type"])),
+        "trunc": st.sampled_from([None, "hour", "day", "month", "quarter", "year"]),
+        "filt": st.sampled_from(range(len(_CV_EV_FILTERS))),
+        "aggs": st.sets(st.sampled_from(range(len(_CV_EV_AGGS))), max_size=3),
+    }
+)
+_cv_doc_specs = st.fixed_dictionaries(
+    {
+        "table": st.just("documents"),
+        "groups": st.sampled_from(range(len(_CV_DOC_GROUPS))),
+        "filt": st.sampled_from(range(len(_CV_DOC_FILTERS))),
+        "aggs": st.sets(st.sampled_from(range(len(_CV_DOC_AGGS))), max_size=3),
+    }
+)
+
+
+def _cv_spec(p) -> TableAggQuery:
+    if p["table"] == "events":
+        groups = sorted(p["groups"])
+        truncs = ()
+        if p["trunc"]:
+            groups.append("g_time")
+            truncs = (("g_time", p["trunc"], "ts"),)
+        f, pool, dims = _CV_EV_FILTERS[p["filt"]], _CV_EV_AGGS, ()
+    else:
+        groups = list(_CV_DOC_GROUPS[p["groups"]])
+        truncs = ()
+        f, pool, dims = _CV_DOC_FILTERS[p["filt"]], _CV_DOC_AGGS, ("sources",)
+    aggs = tuple(pool[i] for i in sorted(p["aggs"]))
+    if not groups and not aggs:
+        aggs = (AggCall("count_star", None, "a_n"),)
+    return TableAggQuery(
+        p["table"], (f,) if f else (), tuple(groups), aggs, truncs, dims
+    )
+
+
+@pytest.fixture(scope="module")
+def _corpus_views(spark, sf_dir):
+    from bigdataproj_spark.sources.user_projections import deploy_projection
+
+    deploy_projection(
+        spark, sf_dir, "fz_ev_hour", ("user_id", "event_type"),
+        table="events", time_key=("u_hour", "ts"),
+    )
+    deploy_projection(
+        spark, sf_dir, "fz_doc_tier", ("s_tier", "n_chars"), table="documents"
+    )
+    yield
+    for name in ("fz_ev_hour", "fz_doc_tier"):
+        _catalog(spark, sf_dir).pop(name, None)
+
+
+@given(p=st.one_of(_cv_ev_specs, _cv_doc_specs))
+# user_id grouping over a folding hour-boundary filter and a day grain:
+# only the events view stores user_id
+@example(p={"table": "events", "groups": {"user_id"}, "trunc": "day",
+            "filt": 2, "aggs": {0, 1, 7}, "expect_user": True})
+# a boolean tree mixing a stored key and a ts leaf, hour grain
+@example(p={"table": "events", "groups": {"user_id", "event_type"},
+            "trunc": "hour", "filt": 6, "aggs": {2, 3, 4}, "expect_user": True})
+# a quarter grain with the other foldable boundary operator
+@example(p={"table": "events", "groups": {"user_id"}, "trunc": "quarter",
+            "filt": 3, "aggs": {5, 6}, "expect_user": True})
+# the dim attribute as a stored key: n_chars is stored by the view only
+@example(p={"table": "documents", "groups": 3, "filt": 1,
+            "aggs": {0, 1, 6}, "expect_user": True})
+@example(p={"table": "documents", "groups": 1, "filt": 2,
+            "aggs": {2, 3, 4}, "expect_user": True})
+@settings(
+    max_examples=20 * _FUZZ_SCALE,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_random_spec_against_corpus_user_views_matches_raw(
+    spark, sf_dir, _corpus_views, p
+):
+    """With an hour-keyed events view and a dim-keyed documents view
+    deployed, route_corpus() must equal the corpus raw plan on any
+    drawn spec — whichever cube, view or raw plan answers. The
+    examples pin draws only a user view can answer."""
+    spec = _cv_spec(p)
+    routed, chosen = route_corpus(spark, sf_dir, spec)
+    if p.get("expect_user"):
+        assert chosen.startswith("user:"), (chosen, spec)
+    compare_frames(
+        routed.toPandas(),
+        _corpus_raw_plan(spark, sf_dir, spec).toPandas(),
+        f"corpus-view-fuzz[{chosen}] {spec}",
+    )
