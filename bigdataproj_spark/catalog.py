@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from .schemas import FIXTURE_SCHEMAS
+from .session import relation_bytes, split_bytes
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -117,6 +118,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanos-conversion projection costs dozens of Py4J round trips per
     table, which dominates sub-second queries' wall clock. The memo
     lives on the session object and dies with it.
+
+    A table no bigger than one split is read as one partition
+    (``session.one_split``). The memo keeps the read's size and both
+    plans, and compares the size with the threshold on every call, so
+    a session that lowers ``spark.sql.files.openCostInBytes`` gets the
+    split read back from the memo.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -124,9 +131,15 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from .sources.state import session_state
 
     cache = session_state(spark).tables
-    cached = cache.get((sf_dir, name))
-    if cached is not None:
-        return cached
+    hit = cache.get((sf_dir, name))
+    if hit is None:
+        out = _read_fixture(spark, sf_dir, name)
+        hit = cache[(sf_dir, name)] = (out, relation_bytes(out), out.coalesce(1))
+    out, size, single = hit
+    return single if size <= split_bytes(spark) else out
+
+
+def _read_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     # TIMESTAMP(NANOS) parquet columns arrive as INT64 nanos (see
     # session.py nanosAsLong); truncate to µs timestamps, matching
@@ -150,9 +163,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             cols.append(F.col(f_read.name).cast("timestamp").alias(f_read.name))
         else:
             cols.append(F.col(f_read.name))
-    out = df.select(*cols)
-    cache[(sf_dir, name)] = out
-    return out
+    return df.select(*cols)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

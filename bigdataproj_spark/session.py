@@ -110,25 +110,35 @@ def run_parallel(*thunks) -> list:
     return [f.result() for f in futures]
 
 
-def fits_one_split(df: DataFrame) -> bool:
-    """True when ``df`` and everything it reads are no bigger than
-    Spark's minimum file split.
-
-    The sizes are Spark's own estimates, the analyzed plan's
-    ``sizeInBytes`` (the listed file bytes for a scan, the figure
-    broadcast decisions use), taken at the root AND summed over the
-    leaves: a projection scales the root estimate down by the ratio of
-    row widths, but ``coalesce(1)`` also collapses the scan under it
-    into one task, so a narrow select over a large file must not fit.
-    The minimum split is ``spark.sql.files.openCostInBytes`` (4 MB by
-    default), below which Spark never cuts a file split. A plan Spark
-    cannot size (an RDD, a Python data source) reports Long.MaxValue
-    and never fits."""
+def relation_bytes(df: DataFrame) -> int:
+    """Spark's own estimate of what ``df`` reads and returns, for the
+    one-split rule: the analyzed plan's ``sizeInBytes`` (the listed
+    file bytes for a scan, the figure broadcast decisions use), taken
+    at the root AND summed over the leaves, whichever is larger. A
+    projection scales the root estimate down by the ratio of row
+    widths, but ``coalesce(1)`` also collapses the scan under it into
+    one task, so a narrow select over a large file must not fit. A
+    plan Spark cannot size (an RDD, a Python data source) reports
+    Long.MaxValue."""
     plan = df._jdf.queryExecution().analyzed()
     leaves = plan.collectLeaves()
     read = sum(leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size()))
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    return max(plan.stats().sizeInBytes(), read) <= conf.filesOpenCostInBytes()
+    return max(plan.stats().sizeInBytes(), read)
+
+
+def split_bytes(spark: SparkSession) -> int:
+    """The one-split threshold: ``spark.sql.files.openCostInBytes``
+    (4 MB by default), below which Spark never cuts a file split.
+    Read per call, so a session that lowers it (to 1 byte, turning
+    the rule off) is obeyed by memoized reads too."""
+    return spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+
+
+def fits_one_split(df: DataFrame) -> bool:
+    """True when ``df`` and everything it reads are no bigger than
+    Spark's minimum file split (:func:`relation_bytes` at most
+    :func:`split_bytes`)."""
+    return relation_bytes(df) <= split_bytes(df.sparkSession)
 
 
 def one_split(df: DataFrame) -> DataFrame:
@@ -136,13 +146,17 @@ def one_split(df: DataFrame) -> DataFrame:
     :func:`fits_one_split` is planned as ONE partition
     (``coalesce(1)``: no shuffle, no sampling job). Aggregates, sorts
     and windows above it need no exchange, since a single partition
-    satisfies every distribution, so a routed read of a small cube runs
-    one job of one task instead of a scan stage, a shuffle and a
-    result stage over a handful of tiny files. Larger relations come
-    back unchanged and keep their plans. Fixture tables (external
-    inputs) and bucketed catalog tables (whose bucket spec must
-    survive) do not go through it. docs/DECISIONS.md records the
-    threshold and the exemptions."""
+    satisfies every distribution, and a join whose every side is one
+    partition stays in it (the session sets
+    ``spark.sql.maxSinglePartitionBytes`` to Long.MaxValue, see
+    :func:`_engine_conf`), so a routed read of a small cube runs one
+    job of one task instead of a scan stage, a shuffle and a result
+    stage over a handful of tiny files. Larger relations come back
+    unchanged and keep their plans. Fixture reads
+    (``catalog.table``) and the live bucketed tables
+    (``snapshots.bucketed_scan``) apply it through memos that keep
+    the size and compare it with the threshold per call.
+    docs/DECISIONS.md records the threshold and why."""
     return df.coalesce(1) if fits_one_split(df) else df
 
 
@@ -320,6 +334,16 @@ def _engine_conf(resolved_master: str) -> dict[str, str]:
         # Dimension tables (region/nation/customer/supplier/part at test
         # scale; anything < threshold at cluster scale) broadcast.
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+        # A join whose every input is ONE partition (one_split) stays in
+        # it. Spark re-shuffles every side once a side's estimate
+        # exceeds this bound (128 MB by default), and without column
+        # statistics it estimates a join as the PRODUCT of its sides:
+        # a star join of KB-sized relations is "estimated" at
+        # terabytes, so every join above the first shuffled. Inputs
+        # are one partition because they are below one split, so no
+        # size bound is kept; docs/DECISIONS.md names the case that
+        # would reopen this (a large single-partition input).
+        "spark.sql.maxSinglePartitionBytes": str(2**63 - 1),
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",

@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 
 from ..session import one_split
 from .bucketed import _layout_paths
+from .snapshots import versioned_parquet
 from .state import session_state, warehouse
 
 # base table -> tombstone key column
@@ -81,8 +82,6 @@ def tombstone_df(
     path = warehouse(spark, sf_dir).tombstones.get(table_name)
     if not path:
         return None
-    from .snapshots import versioned_parquet
-
     return versioned_parquet(spark, path)
 
 
@@ -192,7 +191,7 @@ def _rebuild_user_groups(
         recomputed = u.cube(
             spark, sf_dir, current(spark, sf_dir), group_filter=affected
         )
-        stored = spark.read.parquet(u.path)
+        stored = versioned_parquet(spark, u.path)
         merged = _splice_groups(
             spark, stored, list(u.group_cols), affected, recomputed
         )
@@ -261,7 +260,7 @@ def delete_documents(spark: SparkSession, sf_dir: str, doc_ids) -> dict[str, str
         if "docs_stats_cube" in memo:
             from .corpus_cubes import DOCS_CUBE_KEYS, _docs_cube_aggs
 
-            stored = spark.read.parquet(memo["docs_stats_cube"])
+            stored = versioned_parquet(spark, memo["docs_stats_cube"])
             affected = deleted.select(*DOCS_CUBE_KEYS).distinct()
             remaining = (
                 current_documents(spark, sf_dir)  # tombstones now applied
@@ -348,7 +347,7 @@ def delete_orders(spark: SparkSession, sf_dir: str, order_keys) -> dict[str, str
             delta path."""
             if memo_key not in memo:
                 return
-            stored = spark.read.parquet(memo[memo_key])
+            stored = versioned_parquet(spark, memo[memo_key])
             dead = deleted_li
             live = current_lineitem(spark, sf_dir)  # tombstones applied
             if with_denorm:
@@ -454,8 +453,6 @@ def reattribute_order_updates(
     def _rebuild(memo_key: str, cube_keys: tuple[str, ...], aggs):
         if memo_key not in memo:
             return
-        from .snapshots import versioned_parquet
-
         spark.sparkContext.setJobDescription(f"reattribute: {memo_key}")
         # versioned_parquet: the stored cube path is immutable once
         # published and already memoized by the routed read path
@@ -881,7 +878,7 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
 
         # hourly cube: stored-key filter == rebuild (hour boundary)
         if "events_hourly_cube" in ws.projections:
-            stored = spark.read.parquet(ws.projections["events_hourly_cube"])
+            stored = versioned_parquet(spark, ws.projections["events_hourly_cube"])
             kept = stored.filter(
                 F.col("event_hour") >= F.lit(cutoff).cast("timestamp")
             )
@@ -895,7 +892,7 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
 
         for name, u in _maintained(spark, sf_dir, "events"):
             if u.time_key is not None:
-                stored = spark.read.parquet(u.path)
+                stored = versioned_parquet(spark, u.path)
                 merged = stored.filter(
                     F.col(u.time_key[0]) >= F.lit(cutoff).cast("timestamp")
                 )

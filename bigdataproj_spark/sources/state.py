@@ -132,10 +132,14 @@ class SessionState:
     fact_view_epoch: dict[str, tuple[str, int]] = field(default_factory=dict)
     views_for: str | None = None
     # scan caches: versioned path -> DataFrame, append-layout path ->
-    # schema, (path, pinned file set) -> DataFrame
+    # schema, (path, pinned file set) -> DataFrame, bucketed table
+    # name -> (lineitem and orders mutation epochs, size in bytes)
     versioned_scans: dict[str, Any] = field(default_factory=dict)
     layout_schemas: dict[str, Any] = field(default_factory=dict)
     pinned_scans: dict[tuple[str, frozenset], Any] = field(default_factory=dict)
+    bucketed_sizes: dict[str, tuple[tuple[int, int], int]] = field(
+        default_factory=dict
+    )
     conf_done: bool = False
     tables: dict[tuple[str, str], Any] = field(default_factory=dict)
     sandboxes: dict[tuple, str] = field(default_factory=dict)
@@ -163,8 +167,10 @@ def install(spark: SparkSession, state: WarehouseState) -> None:
     An install outside an AS OF pin makes a copied state LIVE (txn
     rollback, RESTORE): its publish counters are behind paths that were
     written since the copy, so a later publish can reuse a path whose
-    files the caller is about to remove — the versioned-scan and
-    layout-schema caches drop here, the one place they ever drop.
+    files the caller is about to remove, and its mutation epochs are
+    behind appends the caller is about to undo — the versioned-scan,
+    layout-schema and bucketed-size caches drop here, the one place
+    they ever drop.
     Installs under the pin (AS OF entry, and the exit that re-installs
     the live object itself) keep them: nothing publishes inside a
     read-only snapshot read, so the live caches survive the block."""
@@ -173,6 +179,7 @@ def install(spark: SparkSession, state: WarehouseState) -> None:
     if s.as_of is None:
         s.versioned_scans.clear()
         s.layout_schemas.clear()
+        s.bucketed_sizes.clear()
 
 
 def deploy_name(spark: SparkSession, sf_dir: str, base: str) -> str:

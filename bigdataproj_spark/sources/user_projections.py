@@ -685,8 +685,10 @@ def refresh_projection(
     if u.table == "lineitem":
         delta = _lineitem_with_derived(delta)  # the star build's int columns
     add, mins, maxs = _merge_cols(u)
+    from .snapshots import versioned_parquet
+
     merged = merge_partial_frames(
-        spark.read.parquet(u.path), u.cube(spark, sf_dir, delta),
+        versioned_parquet(spark, u.path), u.cube(spark, sf_dir, delta),
         u.group_cols, add, mins, maxs,
     )
     return u.publish(spark, sf_dir, merged)

@@ -31,6 +31,38 @@ def eng(spark, sf_dir):
     return Engine(spark, sf_dir)
 
 
+def _own_warehouse(sf_dir, tmp_path) -> str:
+    """A warehouse of the test's own over a copy of the fixture files.
+    User views are tried in deployment order, so on the shared
+    warehouse a view another test left deployed (the registry's q13
+    leaves ``user_spend_profile`` on (user_id, event_type)) takes the
+    route from a view the test deploys after it."""
+    import shutil
+
+    from bigdataproj_spark.catalog import TABLES
+
+    work = tmp_path / "own"
+    work.mkdir()
+    for t in TABLES:
+        shutil.copyfile(f"{sf_dir}/{t}.parquet", work / f"{t}.parquet")
+    return str(work)
+
+
+# (user_id, event_type) over events: the keys of q13's view
+_EVENTS_PROFILE = TableAggQuery(
+    "events",
+    (),
+    ("user_id", "event_type"),
+    (
+        AggCall("sum", "value", "total"),
+        AggCall("avg", "value", "avg_v"),
+        AggCall("min", "value", "min_v"),
+        AggCall("max", "value", "max_v"),
+        AggCall("count_star", None, "n"),
+    ),
+)
+
+
 from bigdataproj_spark.plans.sqlfront import SUM_SQL  # noqa: E402
 
 _SEL = f"""
@@ -215,33 +247,76 @@ class TestDDLRefusals:
             )
 
 
+def _assert_own_events_view_routes(spark, own):
+    """A (user_id, event_type) events view deployed on ``own`` takes
+    the route, answers as the raw plan does, and gives the route back
+    to the raw plan when dropped."""
+    deploy_projection(
+        spark, own, "t_user_prof",
+        ("user_id", "event_type"), ("value",), table="events",
+    )
+    df, chosen = route_corpus(spark, own, _EVENTS_PROFILE)
+    assert chosen == "user:t_user_prof"
+    from bigdataproj_spark.plans.corpus_routing import _raw_plan
+
+    want = _raw_plan(spark, own, _EVENTS_PROFILE).toPandas()
+    assert df.toPandas().equals(want)
+    drop_projection(spark, own, "t_user_prof")
+    _df, chosen = route_corpus(spark, own, _EVENTS_PROFILE)
+    assert chosen == "raw"
+
+
+def _assert_engine_lifecycle(spark, own):
+    """Engine.projections lists a view over a corpus table and
+    Engine.drop_projection deregisters it: the next routed statement
+    falls back."""
+    eng = Engine(spark, own)
+    sel = (
+        "SELECT user_id, event_type, COUNT(*) AS n FROM events "
+        "GROUP BY user_id, event_type ORDER BY user_id, event_type"
+    )
+    eng.deploy_projection(
+        "t_eng_ev", ("user_id", "event_type"), ("value",), table="events"
+    )
+    _df, chosen = route_sql(spark, own, sel)
+    assert chosen == "user:t_eng_ev"
+    assert "t_eng_ev" in {p["name"] for p in eng.projections()}
+    assert eng.drop_projection("t_eng_ev")
+    assert "t_eng_ev" not in {p["name"] for p in eng.projections()}
+    assert not eng.drop_projection("t_eng_ev")
+    _df, chosen = route_sql(spark, own, sel)
+    assert chosen != "user:t_eng_ev"
+
+
 class TestCorpusUserProjections:
-    def test_events_user_view_routes_and_matches_raw(self, spark, sf_dir):
+    def test_events_user_view_routes_and_matches_raw(
+        self, spark, sf_dir, tmp_path
+    ):
+        _assert_own_events_view_routes(spark, _own_warehouse(sf_dir, tmp_path))
+
+    def test_view_left_by_registry_query_keeps_its_route(
+        self, spark, sf_dir, tmp_path
+    ):
+        """The order that failed: the registry's q13 runs first and
+        leaves ``user_spend_profile`` deployed on the shared warehouse,
+        where a later view on the same keys loses the route to it.
+        The tests that assert their own view's route deploy it on a
+        warehouse of their own, where the route is theirs."""
+        from bigdataproj_spark.registry import load_all
+
+        load_all()["q13_corpus_user_view_sql"].build(spark, sf_dir)
         deploy_projection(
-            spark, sf_dir, "t_user_prof",
+            spark, sf_dir, "t_late_prof",
             ("user_id", "event_type"), ("value",), table="events",
         )
-        spec = TableAggQuery(
-            "events",
-            (),
-            ("user_id", "event_type"),
-            (
-                AggCall("sum", "value", "total"),
-                AggCall("avg", "value", "avg_v"),
-                AggCall("min", "value", "min_v"),
-                AggCall("max", "value", "max_v"),
-                AggCall("count_star", None, "n"),
-            ),
-        )
-        df, chosen = route_corpus(spark, sf_dir, spec)
-        assert chosen == "user:t_user_prof"
-        from bigdataproj_spark.plans.corpus_routing import _raw_plan
-
-        want = _raw_plan(spark, sf_dir, spec).toPandas()
-        assert df.toPandas().equals(want)
-        drop_projection(spark, sf_dir, "t_user_prof")
-        _df, chosen = route_corpus(spark, sf_dir, spec)
-        assert chosen == "raw"
+        try:
+            _df, chosen = route_corpus(spark, sf_dir, _EVENTS_PROFILE)
+        finally:
+            drop_projection(spark, sf_dir, "t_late_prof")
+        assert chosen == "user:user_spend_profile", chosen
+        own = _own_warehouse(sf_dir, tmp_path)
+        _assert_own_events_view_routes(spark, own)
+        _assert_engine_lifecycle(spark, own)
 
     def test_dim_attr_keys_build_through_registry_join(self, spark, sf_dir):
         """A view keyed by an S17 dim attribute (s_kind) joins the
@@ -455,25 +530,8 @@ class TestReviewRegressions:
                 "t_bad", ("l_returnflag",), time_key=("x", "l_shipdate")
             )
 
-    def test_engine_lifecycle_covers_corpus_views(self, eng, spark, sf_dir):
-        """Engine.projections lists a view over a corpus table and
-        Engine.drop_projection deregisters it: the next routed
-        statement falls back."""
-        sel = (
-            "SELECT user_id, event_type, COUNT(*) AS n FROM events "
-            "GROUP BY user_id, event_type ORDER BY user_id, event_type"
-        )
-        eng.deploy_projection(
-            "t_eng_ev", ("user_id", "event_type"), ("value",), table="events"
-        )
-        _df, chosen = route_sql(spark, sf_dir, sel)
-        assert chosen == "user:t_eng_ev"
-        assert "t_eng_ev" in {p["name"] for p in eng.projections()}
-        assert eng.drop_projection("t_eng_ev")
-        assert "t_eng_ev" not in {p["name"] for p in eng.projections()}
-        assert not eng.drop_projection("t_eng_ev")
-        _df, chosen = route_sql(spark, sf_dir, sel)
-        assert chosen != "user:t_eng_ev"
+    def test_engine_lifecycle_covers_corpus_views(self, spark, sf_dir, tmp_path):
+        _assert_engine_lifecycle(spark, _own_warehouse(sf_dir, tmp_path))
 
     def test_one_name_is_one_view_across_tables(self, eng):
         """Deploying a name a lineitem view holds as a corpus view

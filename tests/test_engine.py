@@ -421,6 +421,8 @@ def test_one_split_sizes_a_projection_by_the_scan_under_it(spark, sf_dir):
     ):
         assert not fits_one_split(keys)
         assert one_split(keys) is keys
+        # the fixture read is split again under this threshold too
+        keys = table(spark, sf_dir, "documents").select("doc_id")
         frame = _normalize_ids(spark, keys, "doc_id")
         assert coalesced not in analyzed(frame).toString()
         ids = _normalize_ids(spark, [3, 1, 3], "doc_id")

@@ -15,6 +15,9 @@ from bigdataproj_spark.operators.mixing import (
     r40_training_order,
 )
 from bigdataproj_spark.plans import physical_plan as plan_of
+from bigdataproj_spark.testing import session_conf
+
+_RULE_OFF = {"spark.sql.files.openCostInBytes": "1"}  # one-split rule off
 
 
 def test_mixing_budget_semantics(spark, sf_dir):
@@ -91,22 +94,36 @@ def test_training_order_salt_stability(spark, sf_dir):
 
 def test_mixing_plan_has_no_join(spark, sf_dir):
     """r08 is scan -> window -> filter: no join operator anywhere, and
-    exactly one exchange (the window's hash partition on source)."""
+    exactly one exchange (the window's hash partition on source). The
+    fixture is below one split, so by default the scan is one
+    partition and the window needs no exchange (session.one_split);
+    the split form is asserted with the rule off."""
+    with session_conf(spark, **_RULE_OFF):
+        p = plan_of(r37_domain_mixing(spark, sf_dir))
+        assert "Join" not in p
+        # one data exchange for the window + the final presentation sort's
+        # range exchange; nothing else
+        assert p.count("Exchange hashpartitioning") == 1
     p = plan_of(r37_domain_mixing(spark, sf_dir))
     assert "Join" not in p
-    # one data exchange for the window + the final presentation sort's
-    # range exchange; nothing else
-    assert p.count("Exchange hashpartitioning") == 1
+    assert "Exchange" not in p
 
 
 def test_training_order_plan_is_one_hash_shuffle(spark, sf_dir):
     """r09 must not contain a single-partition window (the global
     ROW_NUMBER anti-pattern) — the window partitions on the shard
-    hash."""
+    hash. Below one split (the default at fixture scale) the scan is
+    already one partition and the window partitions it without an
+    exchange."""
+    with session_conf(spark, **_RULE_OFF):
+        p = plan_of(r40_training_order(spark, sf_dir))
+        assert "Join" not in p
+        assert p.count("Exchange hashpartitioning") == 1
+        assert "Exchange SinglePartition" not in p
     p = plan_of(r40_training_order(spark, sf_dir))
     assert "Join" not in p
-    assert p.count("Exchange hashpartitioning") == 1
-    assert "Exchange SinglePartition" not in p
+    assert "Exchange" not in p
+    assert "Window" in p and "[_w0" in p.split("Window", 1)[1], p
 
 
 def test_dsir_resample_prefers_target_like_docs(spark, sf_dir):

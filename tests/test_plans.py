@@ -24,6 +24,7 @@ from bigdataproj_spark.plans import (
     read_schema_of,
 )
 from bigdataproj_spark.registry import load_all
+from bigdataproj_spark.testing import session_conf
 
 
 def test_filter_pushdown_to_parquet(spark, sf_dir):
@@ -310,10 +311,18 @@ def test_pricing_summary_single_exchange(spark, sf_dir):
     """q01's round-4 fused form: scan → partial agg → ONE 6-row hash
     exchange → final agg. A second hash exchange means the fused
     pre-projection regressed into per-aggregate expression re-derivation
-    or an extra shuffle stage."""
+    or an extra shuffle stage. The fixture is below one split, so by
+    default the scan is one partition and the aggregate needs no
+    exchange at all (session.one_split); the split form is asserted
+    with the rule off."""
+    with session_conf(spark, **{"spark.sql.files.openCostInBytes": "1"}):
+        df = load_all()["q01_pricing_summary"].build(spark, sf_dir)
+        plan = plan_of(df)
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert has_pushed_filter(df, "LessThanOrEqual(l_shipdate"), plan
     df = load_all()["q01_pricing_summary"].build(spark, sf_dir)
     plan = plan_of(df)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Exchange" not in plan, plan
     assert has_pushed_filter(df, "LessThanOrEqual(l_shipdate"), plan
 
 
@@ -356,19 +365,28 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
     old = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+
+    def join():
         li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
         o = (
             table(spark, sf_dir, "orders")
             .filter(F.col("o_totalprice") > 400000)
             .select("o_orderkey")
         )
-        j = li.join(o, li.l_orderkey == o.o_orderkey)
-        plan = plan_of(j)
-        assert "might_contain" in plan, plan
-        assert "bloom_filter_agg" in plan, plan
+        return li.join(o, li.l_orderkey == o.o_orderkey)
+
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        with session_conf(spark, **{"spark.sql.files.openCostInBytes": "1"}):
+            j = join()
+            plan = plan_of(j)
+            assert "might_contain" in plan, plan
+            assert "bloom_filter_agg" in plan, plan
+        # below one split both sides are one partition: the join
+        # shuffles nothing, so there is nothing for a filter to prune
+        plan = plan_of(join())
+        assert "Exchange" not in plan, plan
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
