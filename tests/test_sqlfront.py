@@ -653,3 +653,302 @@ def test_random_over_statement_falls_back_and_matches(spark, sf_dir, oracle, p):
     got = eng.sql(sql).toPandas()
     want = oracle.execute(sql).fetchdf()
     compare_frames(got, want, f"over-fuzz {sql}")
+
+
+# ---------------------------------------------------------------------------
+# (5) Characterization table: statement -> lowered spec, or refusal.
+# Driver-only (no Spark). It pins the lowering of both families: every
+# aggregate spelling, the FROM shapes, trunc gating and the clause
+# refusals, so a change to the lowering cannot move a statement
+# between "routed as this spec" and "run verbatim" unnoticed.
+# ---------------------------------------------------------------------------
+
+from bigdataproj_spark.plans.corpus_routing import (  # noqa: E402
+    TableAggQuery,
+    TableScanQuery,
+)
+from bigdataproj_spark.plans.sqlfront import (  # noqa: E402
+    CNT_SRC,
+    CORPUS_AVG_SQL,
+    CORPUS_MAX_SQL,
+    CORPUS_MIN_SQL,
+    CORPUS_SUM_SQL,
+    MAX_SQL,
+    MIN_SQL,
+)
+
+_STAR = (
+    "lineitem JOIN orders ON l_orderkey = o_orderkey"
+    " JOIN customer ON o_custkey = c_custkey"
+    " JOIN nation ON c_nationkey = n_nationkey"
+    " JOIN region ON n_regionkey = r_regionkey"
+)
+# the full chain plus both arms: every lineitem measure is reachable
+_ARMS = (
+    _STAR + " JOIN part ON l_partkey = p_partkey"
+    " JOIN supplier ON l_suppkey = s_suppkey"
+)
+_REFUSED = UnsupportedSQL
+_N = (AggCall("count_star", None, "n"),)
+_FNS = ("sum", "avg", "count", "min", "max")
+
+
+def _star_agg(fn: str, measure: str) -> AggQuery:
+    return AggQuery(
+        (), (), (AggCall(fn, measure, "x"),), chain=4, part=True, supp=True
+    )
+
+
+def _corpus_agg(table: str, fn: str, measure: str) -> TableAggQuery:
+    return TableAggQuery(table, (), (), (AggCall(fn, measure, "x"),))
+
+
+_SPELLINGS = [
+    # canonical DECIMAL forms of every lineitem measure
+    *[
+        (f"SELECT {sql[m]} AS x FROM {_ARMS}", _star_agg(fn, m))
+        for m in SUM_SQL
+        for fn, sql in (("sum", SUM_SQL), ("min", MIN_SQL), ("max", MAX_SQL))
+    ],
+    # canonical AVG: the canonical SUM over COUNT of the source column
+    *[
+        (f"SELECT {SUM_SQL[m]} / COUNT({c}) AS x FROM {_ARMS}", _star_agg("avg", m))
+        for m, c in CNT_SRC.items()
+    ],
+    # derived measures have no source column, so no quotient is their AVG
+    *[
+        (f"SELECT {SUM_SQL[m]} / COUNT(l_quantity) AS x FROM {_ARMS}", _REFUSED)
+        for m in ("revenue", "charge")
+    ],
+    (f"SELECT {SUM_SQL['quantity']} / COUNT(l_discount) AS x FROM lineitem", _REFUSED),
+    # plain one-column spellings, and the plain SUM/COUNT quotient
+    *[
+        (f"SELECT {fn.upper()}({c}) AS x FROM {_ARMS}", _star_agg(fn, m))
+        for m, c in CNT_SRC.items()
+        for fn in _FNS
+    ],
+    *[
+        (f"SELECT SUM({c}) / COUNT({c}) AS x FROM {_ARMS}", _star_agg("avg", m))
+        for m, c in CNT_SRC.items()
+    ],
+    (
+        "select sum(L_QUANTITY) / count(lineitem.l_quantity) as x from lineitem",
+        AggQuery((), (), (AggCall("avg", "quantity", "x"),)),
+    ),
+    ("SELECT SUM(l_quantity) FROM lineitem", _REFUSED),  # no alias
+    ("SELECT COUNT(l_returnflag) AS x FROM lineitem", _REFUSED),  # not a measure
+    # an arm measure needs its join
+    ("SELECT SUM(o_totalprice) AS t FROM lineitem", _REFUSED),
+    (
+        "SELECT SUM(p_retailprice) AS t FROM lineitem"
+        " JOIN orders ON l_orderkey = o_orderkey",
+        _REFUSED,
+    ),
+    # canonical forms of every corpus measure (AVG spelled as one snippet)
+    *[
+        (f"SELECT {sql[t][m]} AS x FROM {t}", _corpus_agg(t, fn, m))
+        for t in CORPUS_SUM_SQL
+        for m in CORPUS_SUM_SQL[t]
+        for fn, sql in (
+            ("sum", CORPUS_SUM_SQL),
+            ("min", CORPUS_MIN_SQL),
+            ("max", CORPUS_MAX_SQL),
+            ("avg", CORPUS_AVG_SQL),
+        )
+    ],
+    *[
+        (f"SELECT {fn.upper()}({c}) AS x FROM {t}", _corpus_agg(t, fn, m))
+        for t, c, m in (("documents", "n_chars", "chars"), ("events", "value", "value"))
+        for fn in _FNS
+    ],
+    # the plain quotient is not a corpus AVG spelling
+    ("SELECT SUM(value) / COUNT(value) AS x FROM events", _REFUSED),
+    ("SELECT SUM(n_chars) / COUNT(n_chars) AS x FROM documents", _REFUSED),
+]
+
+_SHAPES = [
+    # trunc gating: o_orderdate needs the order join
+    (
+        "SELECT date_trunc('month', o_orderdate) AS m, COUNT(*) AS n"
+        " FROM lineitem GROUP BY m",
+        _REFUSED,
+    ),
+    (
+        "SELECT date_trunc('month', o_orderdate) AS m, COUNT(*) AS n FROM lineitem"
+        " JOIN orders ON l_orderkey = o_orderkey GROUP BY m",
+        AggQuery((), ("m",), _N, (("m", "month", "o_orderdate"),)),
+    ),
+    (
+        "SELECT date_trunc('week', l_shipdate) AS w, COUNT(*) AS n"
+        " FROM lineitem GROUP BY w",
+        _REFUSED,
+    ),
+    (
+        "SELECT date_trunc('hour', ts) AS h, COUNT(*) AS n FROM events GROUP BY h",
+        TableAggQuery("events", (), ("h",), _N, (("h", "hour", "ts"),)),
+    ),
+    (
+        "SELECT date_trunc('month', ts) AS m, COUNT(*) AS n FROM lineitem GROUP BY m",
+        _REFUSED,
+    ),
+    (
+        "SELECT date_trunc('month', n_chars) AS m, COUNT(*) AS n"
+        " FROM documents GROUP BY m",
+        _REFUSED,
+    ),
+    (
+        "SELECT date_trunc('day', ts) AS d, COUNT(*) AS n FROM events"
+        " GROUP BY date_trunc('month', ts)",
+        _REFUSED,
+    ),
+    ("SELECT date_trunc('day', l_shipdate) AS d FROM lineitem", _REFUSED),
+    ("SELECT date_trunc('day', ts) AS d FROM events", _REFUSED),
+    # HAVING on a scan, and on an aggregate
+    ("SELECT l_orderkey FROM lineitem HAVING COUNT(*) > 0", _REFUSED),
+    (
+        "SELECT l_returnflag, COUNT(*) AS n FROM lineitem"
+        " GROUP BY l_returnflag HAVING COUNT(*) > 5",
+        AggQuery((), ("l_returnflag",), _N),
+    ),
+    (
+        "SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang HAVING COUNT(*) > 5",
+        TableAggQuery("documents", (), ("lang",), _N),
+    ),
+    # dimension joins, single and doubled
+    (
+        f"SELECT n_name, COUNT(*) AS n FROM {_STAR} GROUP BY n_name",
+        AggQuery((), ("n_name",), _N, chain=4),
+    ),
+    (
+        "SELECT p_brand, s_name, COUNT(*) AS n FROM lineitem"
+        " JOIN part ON l_partkey = p_partkey JOIN supplier ON l_suppkey = s_suppkey"
+        " GROUP BY p_brand, s_name",
+        AggQuery((), ("p_brand", "s_name"), _N, part=True, supp=True),
+    ),
+    (
+        "SELECT o_orderstatus, COUNT(*) AS n FROM lineitem"
+        " JOIN orders ON l_orderkey = o_orderkey"
+        " JOIN orders o2 ON l_orderkey = o2.o_orderkey GROUP BY o_orderstatus",
+        AggQuery((), ("o_orderstatus",), _N),
+    ),
+    (
+        "SELECT e_category, COUNT(*) AS n FROM events"
+        " JOIN event_types ON event_type = et_id GROUP BY e_category",
+        TableAggQuery("events", (), ("e_category",), _N, dims=("event_types",)),
+    ),
+    (
+        "SELECT s_kind, COUNT(*) AS n FROM documents JOIN sources ON source = src_id"
+        " JOIN sources s2 ON source = s2.src_id GROUP BY s_kind",
+        TableAggQuery("documents", (), ("s_kind",), _N, dims=("sources",)),
+    ),
+    (
+        "SELECT s_kind, COUNT(*) AS n FROM documents JOIN sources ON source = src_id"
+        " JOIN event_types ON source = et_id GROUP BY s_kind",
+        _REFUSED,
+    ),
+    (
+        "SELECT s_kind, COUNT(*) AS n FROM documents"
+        " JOIN sources ON lang = src_id GROUP BY s_kind",
+        _REFUSED,
+    ),
+    ("SELECT s_kind, COUNT(*) AS n FROM documents GROUP BY s_kind", _REFUSED),
+    # a lineitem-corpus join, and two corpus facts
+    ("SELECT COUNT(*) AS n FROM lineitem JOIN documents ON l_orderkey = doc_id", _REFUSED),
+    ("SELECT COUNT(*) AS n FROM documents JOIN events ON doc_id = event_id", _REFUSED),
+    ("SELECT l_orderkey FROM lineitem, orders WHERE l_orderkey = o_orderkey", _REFUSED),
+    ("SELECT 1 AS one", _REFUSED),
+    # DISTINCT
+    (
+        "SELECT DISTINCT o_orderstatus FROM lineitem"
+        " JOIN orders ON l_orderkey = o_orderkey",
+        AggQuery((), ("o_orderstatus",), ()),
+    ),
+    (
+        "SELECT DISTINCT lang, source FROM documents",
+        TableAggQuery("documents", (), ("lang", "source"), ()),
+    ),
+    ("SELECT DISTINCT nosuch FROM documents", _REFUSED),
+    ("SELECT DISTINCT nosuch FROM lineitem", AggQuery((), ("nosuch",), ())),
+    (
+        "SELECT DISTINCT o_orderstatus FROM lineitem",
+        AggQuery((), ("o_orderstatus",), (), chain=0),
+    ),
+    ("SELECT DISTINCT l_returnflag FROM lineitem GROUP BY l_returnflag", _REFUSED),
+    ("SELECT DISTINCT l_returnflag, COUNT(*) AS n FROM lineitem", _REFUSED),
+    # COUNT(DISTINCT) targets
+    (
+        "SELECT COUNT(DISTINCT o_orderstatus) AS n FROM lineitem"
+        " JOIN orders ON l_orderkey = o_orderkey",
+        AggQuery((), (), (AggCall("count_distinct", "o_orderstatus", "n"),)),
+    ),
+    ("SELECT COUNT(DISTINCT o_custkey) AS n FROM lineitem", _REFUSED),
+    (
+        "SELECT COUNT(DISTINCT user_id) AS n FROM events",
+        TableAggQuery("events", (), (), (AggCall("count_distinct", "user_id", "n"),)),
+    ),
+    ("SELECT COUNT(DISTINCT nosuch) AS n FROM events", _REFUSED),
+    # select-list and GROUP BY consistency
+    (
+        "SELECT COUNT(*) AS n, SUM(l_quantity) AS q FROM lineitem",
+        AggQuery((), (), (*_N, AggCall("sum", "quantity", "q"))),
+    ),
+    ("SELECT nosuch, COUNT(*) AS n FROM lineitem GROUP BY nosuch", _REFUSED),
+    ("SELECT lang, COUNT(*) AS n, COUNT(*) AS n FROM documents GROUP BY lang", _REFUSED),
+    ("SELECT l_returnflag, COUNT(*) AS n FROM lineitem", _REFUSED),
+    (
+        "SELECT l_returnflag, l_linestatus, COUNT(*) AS n FROM lineitem"
+        " GROUP BY l_returnflag",
+        _REFUSED,
+    ),
+    (
+        "SELECT l_returnflag, COUNT(*) AS n FROM lineitem"
+        " GROUP BY l_returnflag, l_linestatus",
+        _REFUSED,
+    ),
+    ("SELECT lang AS l, COUNT(*) AS n FROM documents GROUP BY lang", _REFUSED),
+    (
+        "SELECT lang, COUNT(*) AS n FROM documents GROUP BY date_trunc('day', ts)",
+        _REFUSED,
+    ),
+    (
+        "SELECT l_returnflag, rank() OVER (ORDER BY l_quantity) AS r FROM lineitem",
+        _REFUSED,
+    ),
+    # scans
+    (
+        "SELECT l_orderkey, l_quantity FROM lineitem WHERE l_quantity > 10"
+        " ORDER BY l_orderkey DESC LIMIT 5",
+        ScanQuery(("l_orderkey", "l_quantity"), (Pred("l_quantity", ">", 10),)),
+    ),
+    (
+        "SELECT doc_id, lang FROM documents WHERE lang IN ('en', 'de') ORDER BY doc_id",
+        TableScanQuery(
+            "documents", ("doc_id", "lang"), (Pred("lang", "in", ("en", "de")),)
+        ),
+    ),
+    (
+        "SELECT event_id, ts FROM events WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'",
+        TableScanQuery(
+            "events",
+            ("event_id", "ts"),
+            (Pred("ts", ">=", "2024-01-10 00:00:00", cast="timestamp"),),
+        ),
+    ),
+    ("SELECT nosuch FROM lineitem", _REFUSED),
+    ("SELECT l_orderkey FROM lineitem JOIN orders ON l_orderkey = o_orderkey", _REFUSED),
+    ("SELECT doc_id FROM documents JOIN sources ON source = src_id", _REFUSED),
+    ("SELECT lang FROM documents ORDER BY doc_id", _REFUSED),
+]
+
+
+@pytest.mark.parametrize(
+    "sql,want",
+    _SPELLINGS + _SHAPES,
+    ids=[f"row{i:03d}" for i in range(len(_SPELLINGS) + len(_SHAPES))],
+)
+def test_lowering_table(sql, want):
+    if want is _REFUSED:
+        with pytest.raises(UnsupportedSQL):
+            parse_sql(sql)
+    else:
+        assert parse_sql(sql).spec == want, sql
