@@ -597,13 +597,9 @@ class Engine:
         (documents/events) from the cheapest deployed projection that
         subsumes it, else the raw plan — the engine's materialized-view
         matching front door. The caller never names a layout."""
-        from .plans.corpus_routing import TableAggQuery, route_corpus
-        from .plans.routing import route
+        from .plans.sqlfront import route_spec
 
-        if isinstance(spec, TableAggQuery):
-            df, _ = route_corpus(self.spark, self.sf_dir, spec)
-        else:
-            df, _ = route(self.spark, self.sf_dir, spec)
+        df, _ = route_spec(self.spark, self.sf_dir, spec)
         return df
 
     def scan(self, spec) -> DataFrame:
@@ -611,13 +607,9 @@ class Engine:
         (lineitem) or :class:`~bigdataproj_spark.plans.corpus_routing.TableScanQuery`
         (corpus tables) from the best-covering layout (Z-order /
         date-partitioned for range predicates), else the raw table."""
-        from .plans.corpus_routing import TableScanQuery, route_corpus_scan
-        from .plans.routing import route_scan
+        from .plans.sqlfront import route_spec
 
-        if isinstance(spec, TableScanQuery):
-            df, _ = route_corpus_scan(self.spark, self.sf_dir, spec)
-        else:
-            df, _ = route_scan(self.spark, self.sf_dir, spec)
+        df, _ = route_spec(self.spark, self.sf_dir, spec)
         return df
 
     def deploy_projection(

@@ -23,19 +23,37 @@ so whitespace, case, table-qualification, and alias spelling cannot
 produce a false positive, and an expression that LOOKS like revenue but
 isn't (say, a different cast width) simply doesn't match and falls back.
 
-Recognized family (everything else → ``UnsupportedSQL`` → spark.sql):
+Recognized family (everything else → ``UnsupportedSQL`` → spark.sql).
+One lowering (:func:`parse_sql`) serves two fact-table families; the
+FROM clause picks the family and yields its description as data
+(:class:`_Family`: columns, timestamp columns, measures, canonical
+spellings, plain column→measure map, spec constructors), so the
+clause grammar below is the same for both:
 
-- grouped aggregates over ``lineitem`` alone, any PREFIX of the
+- FROM, the lineitem star → :class:`~.routing.AggQuery` /
+  :class:`~.routing.ScanQuery`: ``lineitem`` alone, any PREFIX of the
   canonical order chain (lineitem⋈orders⋈customer⋈nation⋈region on
   the TPC-H keys, validated structurally as the set of join
   equalities — join DEPTH is semantically load-bearing, see
   routing.AggQuery.chain), and/or the part and supplier arms
   (⋈part on l_partkey, ⋈supplier on l_suppkey), all composable;
-- aggregates: the canonical DECIMAL sum/avg/min/max formulations of
-  the five routing measures, plus plain ``SUM/AVG/COUNT/MIN/MAX(col)``
-  over the raw measure columns, ``COUNT(*)``, and ``COUNT(DISTINCT
-  col)`` over any reachable attribute. MIN/MAX re-derive from the
-  cubes' stored int64 min/max partials (fixed-point scaling is
+- FROM, the corpus tables → :class:`~.corpus_routing.TableAggQuery` /
+  :class:`~.corpus_routing.TableScanQuery`: ``documents`` or
+  ``events`` alone, or INNER-joined to their declared dims on the
+  canonical edges (``JOIN sources ON source = src_id``, ``JOIN
+  event_types ON event_type = et_id``), each dim widening the
+  referencable columns by its attributes; one fact table per
+  statement;
+- aggregates: the canonical sum/avg/min/max formulations of each
+  family's measures — for lineitem the exact-DECIMAL forms of the
+  routing measures, with AVG as the canonical or plain SUM over
+  ``COUNT(source_col)``; for the corpus tables the ``CORPUS_*_SQL``
+  forms, AVG spelled as one snippet — plus plain
+  ``SUM/AVG/COUNT/MIN/MAX(col)`` over the raw measure columns,
+  ``COUNT(*)``, and ``COUNT(DISTINCT col)`` over any reachable
+  attribute. A measure whose source column the joins do not reach
+  (an arm measure without its arm) refuses. MIN/MAX re-derive from
+  the cubes' stored int64 min/max partials (fixed-point scaling is
   monotone, so it commutes with MIN/MAX — the partials are monoids
   like the sums, and double as per-group zone maps). Plain double
   forms are answered with the engine's exact fixed-point arithmetic —
@@ -43,7 +61,8 @@ Recognized family (everything else → ``UnsupportedSQL`` → spark.sql):
   (documented semantics: the engine's SQL dialect computes
   decimal-exact money);
 - SELECT DISTINCT / GROUP BY without aggregates (the DISTINCT shape:
-  key combinations are a projection of stored group keys);
+  key combinations are a projection of stored group keys); every
+  selected column must be one the FROM clause reaches;
 - WHERE: a conjunction of ``col <op> literal`` / ``BETWEEN`` / ``IN``
   / ``!=`` predicates and arbitrary AND/OR/NOT trees of them
   (TIMESTAMP/DATE literal casts preserved; a boolean tree folds on a
@@ -51,23 +70,32 @@ Recognized family (everything else → ``UnsupportedSQL`` → spark.sql):
   key — the tree is then constant within each stored group);
 - derived time-grain grouping: ``GROUP BY date_trunc('hour'|'day'|
   'month'|'quarter'|'year', <timestamp col>)`` (by expression or select
-  alias) — a coarser grain folds exactly onto any cube storing the
-  source at finer (or full) resolution because coarse groups are
-  unions of whole stored groups and every measure is a monoid; 'week'
-  is excluded (Spark/DuckDB truncation conventions differ);
+  alias) over the family's timestamp columns — ``l_shipdate``, and
+  ``o_orderdate`` when orders is joined; ``ts`` on events, whose hour
+  grain is the events cube's stored key — a coarser grain folds
+  exactly onto any cube storing the source at finer (or full)
+  resolution because coarse groups are unions of whole stored groups
+  and every measure is a monoid; 'week' is excluded (Spark/DuckDB
+  truncation conventions differ);
 - GLOBAL aggregates (no GROUP BY) — the cube's best case: COUNT(*) or
   SUM over the entire fact table re-aggregates a scale-invariant
   projection down to one row;
 - HAVING over select-list aggregates: matched structurally to the
   output column and applied as a post-aggregation filter — fold-safe
   on every path because it compares FINAL re-aggregated values;
-- ORDER BY any output columns (asc or desc) and LIMIT, applied on top
-  of the routed plan — so ``ORDER BY revenue DESC LIMIT 10`` (the
-  top-k warehouse shape) routes onto the cube too;
-- projection+filter scans over lineitem (no aggregates): routed through
-  :func:`route_scan` so a range predicate on a Z-order curve key is
-  answered from the clustered layout and a shipdate range from the
-  ship-month-partitioned layout (derived partition pruning), with any
+- ORDER BY any output columns (asc or desc, NULLs placed as Spark
+  places them by default; an explicit NULLS FIRST/LAST against that
+  placement refuses) and LIMIT, applied on top of the routed plan —
+  so ``ORDER BY revenue DESC LIMIT 10`` (the top-k warehouse shape)
+  routes onto the cube too;
+- projection+filter scans (no aggregates, no joins): routed through
+  the family's scan router — on lineitem :func:`route_scan`, so a
+  range predicate on a Z-order curve key is answered from the
+  clustered layout and a shipdate range from the
+  ship-month-partitioned layout (derived partition pruning); on the
+  corpus tables :func:`route_corpus_scan`, so an events ``ts`` range
+  opens only the day directories it touches and a documents
+  ``lang``/``source`` predicate reads the clustered layout — with any
   ORDER BY applied on top.
 
 At 100 TB this is the difference between "the 15k-row cube answer
@@ -85,6 +113,7 @@ from __future__ import annotations
 
 import dataclasses as _dc
 import json
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -106,6 +135,7 @@ from .routing import (
     AggCall,
     AggQuery,
     BoolPred,
+    Measure,
     Pred,
     ScanQuery,
     minimal_chain,
@@ -154,17 +184,13 @@ SUM_SQL = {m: f"CAST(SUM({e}) AS DOUBLE)" for m, e in _DECIMAL_EXPR.items()}
 MIN_SQL = {m: f"CAST(MIN({e}) AS DOUBLE)" for m, e in _DECIMAL_EXPR.items()}
 MAX_SQL = {m: f"CAST(MAX({e}) AS DOUBLE)" for m, e in _DECIMAL_EXPR.items()}
 
-# Plain-column measure spellings (SUM(l_quantity), AVG(l_discount), …).
-COL_MEASURE: dict[str, str] = {
-    "l_quantity": "quantity",
-    "l_extendedprice": "base_price",
-    "l_discount": "discount",
-    "o_totalprice": "order_total",
-    "c_acctbal": "cust_acctbal",
-    "p_retailprice": "part_retail",
-    "s_acctbal": "supp_acctbal",
+# Each measure's source column (the COUNT/AVG input), and the inverse:
+# the plain-column measure spellings (SUM(l_quantity), AVG(l_discount),
+# …). Derived measures (revenue, charge) have no source column.
+CNT_SRC: dict[str, str] = {
+    m: meas.source_col for m, meas in MEASURES.items() if meas.source_col
 }
-CNT_SRC: dict[str, str] = {m: c for c, m in COL_MEASURE.items()}
+COL_MEASURE: dict[str, str] = {c: m for m, c in CNT_SRC.items()}
 
 # ---------------------------------------------------------------------------
 # Corpus-table measure spellings (S15): the canonical SQL forms of the
@@ -350,33 +376,19 @@ def _key(node) -> str:
     return json.dumps(_norm(node), sort_keys=True)
 
 
-_CANON_AGG: dict[str, tuple[str, str]] = {}  # AST key -> (fn, measure)
-
-
-def _canon_aggs() -> dict[str, tuple[str, str]]:
-    """Normalized ASTs of the canonical aggregate formulations (parsed
-    once; parsing our own snippet through the same parser makes the
-    match immune to serializer details)."""
-    if not _CANON_AGG:
-        for fn, table in (("sum", SUM_SQL), ("min", MIN_SQL), ("max", MAX_SQL)):
-            for measure, sql in table.items():
-                item = _ast(f"SELECT {sql} FROM lineitem")["select_list"][0]
-                _CANON_AGG[_key(item)] = (fn, measure)
-    return _CANON_AGG
-
-
 def _colref(node) -> str | None:
     if isinstance(node, dict) and node.get("class") == "COLUMN_REF":
         return node["column_names"][-1].lower()
     return None
 
 
-def _plain_fn(node) -> tuple[str, str] | None:
-    """(function_name, column) for a vanilla one-column aggregate call
-    with no DISTINCT/FILTER/ORDER decoration, else None."""
+def _plain_fn(node, distinct: bool = False) -> tuple[str, str] | None:
+    """(function_name, column) for a one-column aggregate call with no
+    FILTER/ORDER decoration whose DISTINCT flag is ``distinct``, else
+    None."""
     if not (isinstance(node, dict) and node.get("class") == "FUNCTION"):
         return None
-    if node.get("distinct") or node.get("filter") is not None:
+    if bool(node.get("distinct")) != distinct or node.get("filter") is not None:
         return None
     if node.get("order_bys", {}).get("orders"):
         return None
@@ -395,19 +407,19 @@ def _plain_fn(node) -> tuple[str, str] | None:
 # (routing.Projection.subsumes, through its time_key) and the raw
 # plan computes them exactly.
 _TRUNC_UNITS = frozenset({"year", "quarter", "month", "day", "hour"})
-# columns date_trunc may legally apply to (timestamp-typed); the
-# order-side o_orderdate is gated by the statement's join chain via
-# the caller's `allowed` set like every other dimension attribute
+# lineitem-star columns date_trunc may legally apply to (timestamp-
+# typed); the order-side o_orderdate is gated by the statement's join
+# chain through the family's `allowed` set like every other dimension
+# attribute
 _TS_COLS = frozenset({"l_shipdate", "o_orderdate"})
 
 
-def _match_trunc(node, ts_cols: frozenset[str] = _TS_COLS) -> tuple[str, str] | None:
+def _match_trunc(node, ts_cols: frozenset[str]) -> tuple[str, str] | None:
     """(unit, source_col) for a ``date_trunc('unit', col)`` call over a
     supported unit and timestamp column, else None. Units are those
     whose truncation semantics are identical between Spark and DuckDB
     (week differs: ISO vs locale conventions — excluded). ``ts_cols``
-    is the caller's table-specific legal source set (the lineitem-star
-    set by default; corpus tables pass their own)."""
+    is the family's legal source set (:attr:`_Family.ts_cols`)."""
     if not (isinstance(node, dict) and node.get("class") == "FUNCTION"):
         return None
     if node.get("function_name", "").lower() != "date_trunc":
@@ -440,67 +452,49 @@ def _is_count_star(node) -> bool:
     )
 
 
-def _match_sum(node) -> str | None:
-    """Measure computed by ``node`` as a SUM, canonical or plain (the
-    AVG numerator check needs specifically a sum)."""
-    hit = _canon_aggs().get(_key(node))
-    if hit and hit[0] == "sum":
-        return hit[1]
-    pf = _plain_fn(node)
-    if pf and pf[0] == "sum" and pf[1] in COL_MEASURE:
-        return COL_MEASURE[pf[1]]
-    return None
+_CANON: dict[str, dict[str, tuple[str, str]]] = {}  # family -> AST key -> (fn, measure)
 
 
-def _match_agg(item: dict) -> AggCall | None:
-    """Lower one select-list item to an AggCall (alias required), or
-    None if it is not an aggregate expression at all (the caller then
-    checks whether it is a grouping column)."""
+def _canon(fam: _Family) -> dict[str, tuple[str, str]]:
+    """Normalized ASTs of the family's canonical aggregate spellings,
+    parsed once per family (parsing our own snippet through the same
+    parser makes the match immune to serializer details)."""
+    canon = _CANON.get(fam.key)
+    if canon is None:
+        canon = _CANON[fam.key] = {
+            _key(_ast(f"SELECT {sql} FROM {fam.key}")["select_list"][0]): (fn, m)
+            for fn, m, sql in fam.spellings
+        }
+    return canon
+
+
+def _match_agg(item: dict, key: str, fam: _Family) -> AggCall | None:
+    """Lower one select-list item (``key`` its normalized AST) to an
+    AggCall aliased as written, or None if it is not an aggregate
+    expression at all (the caller then checks whether it is a grouping
+    column): a canonical spelling of one of the family's measures,
+    ``COUNT(*)``, ``COUNT(DISTINCT col)``, or a plain one-column
+    SUM/AVG/COUNT/MIN/MAX over a column of the family's
+    ``col_measure`` map."""
     alias = item.get("alias", "")
-    hit = _canon_aggs().get(_key(item))
+    hit = _canon(fam).get(key)
     if hit:
-        return AggCall(hit[0], hit[1], alias) if alias else None
+        return AggCall(hit[0], hit[1], alias)
     if _is_count_star(item):
-        return AggCall("count_star", None, alias) if alias else None
+        return AggCall("count_star", None, alias)
     # COUNT(DISTINCT col): the target is a raw COLUMN, not a measure —
     # it folds on any projection that stores the column as a group key
     # (the distinct value set over stored groups equals the set over
-    # raw rows). Target-column validation against the statement's
-    # allowed set happens in parse_sql (needs the join chain).
-    if (
-        isinstance(item, dict)
-        and item.get("class") == "FUNCTION"
-        and item.get("function_name", "").lower() == "count"
-        and item.get("distinct")
-        and item.get("filter") is None
-        and not item.get("order_bys", {}).get("orders")
-        and len(item.get("children", [])) == 1
-    ):
-        col = _colref(item["children"][0])
-        if col:
-            return AggCall("count_distinct", col, alias) if alias else None
+    # raw rows). parse_sql checks the target against the family's
+    # allowed set (it needs the joins).
+    pf = _plain_fn(item, distinct=True)
+    if pf and pf[0] == "count":
+        return AggCall("count_distinct", pf[1], alias)
     pf = _plain_fn(item)
-    if pf:
-        fn, col = pf
-        if fn in ("count", "avg", "sum", "min", "max") and col in COL_MEASURE:
-            return AggCall(fn, COL_MEASURE[col], alias) if alias else None
-    # canonical avg: <sum form> / COUNT(source_col)
-    if (
-        isinstance(item, dict)
-        and item.get("class") == "FUNCTION"
-        and item.get("function_name") == "/"
-        and len(item.get("children", [])) == 2
-    ):
-        num, den = item["children"]
-        m = _match_sum(num)
-        pf = _plain_fn(den)
-        if (
-            m is not None
-            and pf is not None
-            and pf[0] == "count"
-            and MEASURES[m].source_col == pf[1]
-        ):
-            return AggCall("avg", m, alias) if alias else None
+    if pf and pf[0] in ("count", "avg", "sum", "min", "max"):
+        m = fam.col_measure.get(pf[1])
+        if m is not None:
+            return AggCall(pf[0], m, alias)
     return None
 
 
@@ -583,90 +577,222 @@ def _parse_filter(node: dict):
     raise UnsupportedSQL(f"unsupported predicate {cls}/{typ}")
 
 
+def _conjuncts(node) -> list[dict]:
+    """The top-level AND conjuncts of a WHERE or HAVING clause (none
+    when the clause is absent)."""
+    if node is None:
+        return []
+    if isinstance(node, dict) and node.get("type") == "CONJUNCTION_AND":
+        return [c for child in node["children"] for c in _conjuncts(child)]
+    return [node]
+
+
 def _parse_where(node) -> tuple:
     """Top-level conjuncts of the WHERE clause, each a Pred/BoolPred.
     The top AND is flattened (the router treats the filter tuple as a
     conjunction); any nested boolean structure is preserved."""
-    if node is None:
-        return ()
-    preds: list = []
+    return tuple(_parse_filter(n) for n in _conjuncts(node))
 
-    def walk(n):
-        if isinstance(n, dict) and n.get("type") == "CONJUNCTION_AND":
-            for c in n["children"]:
-                walk(c)
-        else:
-            preds.append(_parse_filter(n))
 
-    walk(node)
-    return tuple(preds)
+def _join_graph(node: dict) -> tuple[set[str], set[frozenset[str]]]:
+    """(base tables, join edges) of a FROM clause: one base table, or
+    a tree of ``INNER JOIN … ON a = b`` over base tables, each edge the
+    unordered pair of joined column names. UnsupportedSQL for any other
+    shape. The families recognize their joins on these two SETS, never
+    on text, so any paren/ordering DuckDB normalizes away is
+    irrelevant."""
+    t = node.get("type")
+    if t == "BASE_TABLE":
+        return {node.get("table_name", "").lower()}, set()
+    if t != "JOIN":
+        raise UnsupportedSQL(f"unsupported FROM node {t}")
+    if node.get("join_type") != "INNER" or node.get("using_columns"):
+        raise UnsupportedSQL("only INNER ... ON joins route")
+    cond = node.get("condition")
+    if not (
+        isinstance(cond, dict)
+        and cond.get("type") == "COMPARE_EQUAL"
+        and _colref(cond.get("left"))
+        and _colref(cond.get("right"))
+    ):
+        raise UnsupportedSQL("non-equi join condition")
+    left_tables, left_edges = _join_graph(node["left"])
+    right_tables, right_edges = _join_graph(node["right"])
+    edge = frozenset({_colref(cond["left"]), _colref(cond["right"])})
+    return left_tables | right_tables, left_edges | right_edges | {edge}
 
+
+# ---------------------------------------------------------------------------
+# Family descriptions: everything the one lowering (:func:`parse_sql`)
+# needs to know about the fact table a FROM clause names, as data.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Family:
+    """The statement's fact-table family, as its FROM clause joins it:
+
+    - ``key``: the fact table; it keys the canonical-spelling cache;
+    - ``allowed``: the referencable columns, the fact's own plus the
+      attributes of every joined dimension;
+    - ``ts_cols``: the columns a ``date_trunc`` key may apply to;
+    - ``measures``: name → :class:`~.routing.Measure`; a measure whose
+      ``source_col`` is outside ``allowed`` (an arm measure without
+      its join) refuses;
+    - ``spellings``: ``(fn, measure, sql)`` canonical aggregate
+      spellings, matched structurally;
+    - ``col_measure``: plain column → measure, for the one-column
+      SUM/AVG/COUNT/MIN/MAX spellings;
+    - ``joined``: the FROM clause joins a dimension (row-level scans
+      over joins have no layout and refuse);
+    - ``agg(filters, groups, aggs, truncs)`` and ``scan(columns,
+      filters)``: the spec constructors, which add whatever the family
+      declares beyond them (the chain depth and arms of an
+      :class:`AggQuery`, the table and dims of a
+      :class:`TableAggQuery`)."""
+
+    key: str
+    allowed: frozenset[str]
+    ts_cols: frozenset[str]
+    measures: dict[str, Measure]
+    spellings: tuple[tuple[str, str, str], ...]
+    col_measure: dict[str, str]
+    joined: bool
+    agg: Callable[[tuple, tuple, tuple, tuple], object]
+    scan: Callable[[tuple, tuple], object]
+
+
+# lineitem: the canonical SUM/MIN/MAX of every measure, and AVG as the
+# SUM (canonical or plain) over COUNT of the measure's source column
+_STAR_SPELLINGS = (
+    *(
+        (fn, m, sql[m])
+        for fn, sql in (("sum", SUM_SQL), ("min", MIN_SQL), ("max", MAX_SQL))
+        for m in MEASURES
+    ),
+    *(
+        ("avg", m, f"{num} / COUNT({src})")
+        for m, src in CNT_SRC.items()
+        for num in (SUM_SQL[m], f"SUM({src})")
+    ),
+)
+# corpus tables: the canonical forms as spelled, AVG as one snippet
+_CORPUS_SPELLINGS = {
+    t: tuple(
+        (fn, m, sql[t][m])
+        for fn, sql in (
+            ("sum", CORPUS_SUM_SQL),
+            ("min", CORPUS_MIN_SQL),
+            ("max", CORPUS_MAX_SQL),
+            ("avg", CORPUS_AVG_SQL),
+        )
+        for m in sql[t]
+    )
+    for t in CORPUS_TABLES
+}
 
 _PART_EDGE = frozenset({"l_partkey", "p_partkey"})
 _SUPP_EDGE = frozenset({"l_suppkey", "s_suppkey"})
 
 
-def _parse_from(node: dict) -> tuple[int, bool, bool]:
-    """(chain depth, part joined, supplier joined) for the FROM
-    clause: bare lineitem, a prefix of the canonical order chain, the
-    part arm (``JOIN part ON l_partkey = p_partkey``), the supplier
-    arm (``JOIN supplier ON l_suppkey = s_suppkey``), or any
-    combination; UnsupportedSQL for any other shape."""
-    if node.get("type") == "BASE_TABLE":
-        if node.get("table_name", "").lower() != "lineitem":
-            raise UnsupportedSQL(f"unroutable table {node.get('table_name')}")
-        return 0, False, False
-    tables: set[str] = set()
-    edges: set[frozenset[str]] = set()
-
-    def walk(n):
-        t = n.get("type")
-        if t == "BASE_TABLE":
-            tables.add(n.get("table_name", "").lower())
-            return
-        if t != "JOIN":
-            raise UnsupportedSQL(f"unsupported FROM node {t}")
-        if n.get("join_type") != "INNER" or n.get("using_columns"):
-            raise UnsupportedSQL("only canonical INNER ... ON chain joins route")
-        cond = n.get("condition")
-        if not (
-            isinstance(cond, dict)
-            and cond.get("type") == "COMPARE_EQUAL"
-            and _colref(cond.get("left"))
-            and _colref(cond.get("right"))
-        ):
-            raise UnsupportedSQL("non-equi join condition")
-        edges.add(frozenset({_colref(cond["left"]), _colref(cond["right"])}))
-        walk(n["left"])
-        walk(n["right"])
-
-    walk(node)
+def _star_family(tables: set[str], edges: set[frozenset[str]]) -> _Family:
+    """The lineitem star: bare lineitem, a prefix of the canonical
+    order chain, the part arm (``JOIN part ON l_partkey = p_partkey``),
+    the supplier arm (``JOIN supplier ON l_suppkey = s_suppkey``), or
+    any combination; UnsupportedSQL for any other join graph."""
     part = "part" in tables and _PART_EDGE in edges
     if part:
-        tables = tables - {"part"}
-        edges = edges - {_PART_EDGE}
+        tables, edges = tables - {"part"}, edges - {_PART_EDGE}
     supp = "supplier" in tables and _SUPP_EDGE in edges
     if supp:
-        tables = tables - {"supplier"}
-        edges = edges - {_SUPP_EDGE}
-    for depth in range(0, len(_CHAIN_TABLES) + 1):
-        want_tables = {"lineitem", *_CHAIN_TABLES[:depth]}
-        want_edges = set(_CHAIN_EDGES[:depth])
-        if tables == want_tables and edges == want_edges:
-            if depth == 0 and not part and not supp:
-                break  # a bare JOIN node with no edges cannot occur
-            return depth, part, supp
-    raise UnsupportedSQL(
-        f"join graph is not a prefix of the canonical chain "
-        f"(tables={sorted(tables)})"
+        tables, edges = tables - {"supplier"}, edges - {_SUPP_EDGE}
+    for chain in range(0, len(_CHAIN_TABLES) + 1):
+        if (
+            tables == {"lineitem", *_CHAIN_TABLES[:chain]}
+            and edges == set(_CHAIN_EDGES[:chain])
+        ):
+            break
+    else:
+        raise UnsupportedSQL(
+            f"join graph is not a prefix of the canonical chain "
+            f"(tables={sorted(tables)})"
+        )
+    allowed = _LINEITEM_COLS | {a for a, d in DIM_ATTRS.items() if d <= chain}
+    if part:
+        allowed |= PART_ATTRS
+    if supp:
+        allowed |= SUPP_ATTRS
+
+    def agg(filters, groups, aggs, truncs) -> AggQuery:
+        # The part and supplier joins are declared, attributes or not,
+        # and so is a chain DEEPER than the attributes require: inner
+        # joins may drop orphan fact rows (FK integrity is never
+        # assumed). A minimal chain stays None so specs compare
+        # structurally wherever they came from.
+        spec = AggQuery(filters, groups, aggs, truncs, part=part, supp=supp)
+        if minimal_chain(spec) != chain:
+            spec = _dc.replace(spec, chain=chain)
+        return spec
+
+    return _Family(
+        "lineitem", allowed, _TS_COLS, MEASURES, _STAR_SPELLINGS, COL_MEASURE,
+        bool(chain or part or supp), agg, ScanQuery,
     )
+
+
+def _corpus_family(
+    fact: str, tables: set[str], edges: set[frozenset[str]]
+) -> _Family:
+    """A corpus fact table, bare or INNER-joined to declared dims on
+    their canonical edges (``JOIN sources ON source = src_id``), each
+    dim widening the referencable columns by its attrs; UnsupportedSQL
+    on any other join graph."""
+    model = CORPUS_TABLES[fact]
+    dims: list[str] = []
+    edges = set(edges)
+    for name in sorted(tables - {fact}):
+        d = CORPUS_DIMS.get(name)
+        if d is None or fact not in d.fact_tables:
+            raise UnsupportedSQL(f"unroutable join table {name}")
+        edge = frozenset({d.fact_key, d.dim_key})
+        if edge not in edges:
+            raise UnsupportedSQL(f"dim {name} joined off its canonical edge")
+        edges.discard(edge)
+        dims.append(name)
+    if edges:
+        raise UnsupportedSQL("unexpected join edges")
+    return _Family(
+        fact,
+        model.columns.union(*(CORPUS_DIMS[n].attrs for n in dims)),
+        model.ts_cols,
+        model.measures,
+        _CORPUS_SPELLINGS[fact],
+        CORPUS_COL_MEASURE[fact],
+        bool(dims),
+        lambda f, g, a, t: TableAggQuery(fact, f, g, a, t, tuple(dims)),
+        lambda c, f: TableScanQuery(fact, c, f),
+    )
+
+
+def _family(from_node: dict) -> _Family:
+    """Recognize the FROM clause: a corpus fact table (documents or
+    events, optionally with its dims) if one is named, else the
+    lineitem star."""
+    tables, edges = _join_graph(from_node)
+    facts = tables & CORPUS_TABLES.keys()
+    if len(facts) > 1:
+        raise UnsupportedSQL("more than one corpus fact table")
+    if facts:
+        return _corpus_family(facts.pop(), tables, edges)
+    return _star_family(tables, edges)
 
 
 def _modifiers(
     node: dict,
 ) -> tuple[tuple[tuple[str, bool], ...], int | None, bool]:
     """((col, ascending), …) ORDER BY terms, the LIMIT, and whether
-    the statement is SELECT DISTINCT."""
+    the statement is SELECT DISTINCT. An explicit NULLS FIRST/LAST is
+    kept only where it is Spark's default for the direction."""
     orders: list[tuple[str, bool]] = []
     limit: int | None = None
     distinct = False
@@ -685,6 +811,14 @@ def _modifiers(
                     asc = False
                 else:
                     raise UnsupportedSQL(f"unsupported sort direction {ot}")
+                # the routed sort places NULLs as Spark does by default
+                # (first ascending, last descending); the other
+                # placement runs verbatim, which honours it
+                if o.get("null_order", "ORDER_DEFAULT") not in (
+                    "ORDER_DEFAULT",
+                    "NULLS_FIRST" if asc else "NULLS_LAST",
+                ):
+                    raise UnsupportedSQL("NULLS FIRST/LAST against Spark's default")
                 col = _colref(o.get("expression"))
                 if col is None:
                     raise UnsupportedSQL("ORDER BY over a non-column expression")
@@ -708,15 +842,8 @@ def _parse_having(node, agg_alias_by_key: dict[str, str]) -> tuple[Pred, ...]:
     a plain filter on that output column (identified structurally, so
     ``HAVING COUNT(*) > 5`` finds the select list's ``COUNT(*) AS c``
     whatever it was aliased)."""
-    if node is None:
-        return ()
     preds: list[Pred] = []
-
-    def walk(n):
-        if isinstance(n, dict) and n.get("type") == "CONJUNCTION_AND":
-            for c in n["children"]:
-                walk(c)
-            return
+    for n in _conjuncts(node):
         if not (isinstance(n, dict) and n.get("type") in _CMP_OPS):
             raise UnsupportedSQL("unsupported HAVING predicate")
         alias = agg_alias_by_key.get(_key(n.get("left")))
@@ -726,254 +853,7 @@ def _parse_having(node, agg_alias_by_key: dict[str, str]) -> tuple[Pred, ...]:
             )
         value, cast = _parse_constant(n["right"])
         preds.append(Pred(alias, _CMP_OPS[n["type"]], value, cast=cast))
-
-    walk(node)
     return tuple(preds)
-
-
-_CORPUS_CANON: dict[str, dict[str, tuple[str, str]]] = {}
-
-
-def _corpus_canon(tname: str) -> dict[str, tuple[str, str]]:
-    """Normalized ASTs of the corpus tables' canonical aggregate
-    formulations (parsed once per table, like :func:`_canon_aggs`)."""
-    if tname not in _CORPUS_CANON:
-        canon: dict[str, tuple[str, str]] = {}
-        for fn, tbl in (
-            ("sum", CORPUS_SUM_SQL),
-            ("min", CORPUS_MIN_SQL),
-            ("max", CORPUS_MAX_SQL),
-            ("avg", CORPUS_AVG_SQL),
-        ):
-            for measure, sql in tbl[tname].items():
-                item = _ast(f"SELECT {sql} FROM {tname}")["select_list"][0]
-                canon[_key(item)] = (fn, measure)
-        _CORPUS_CANON[tname] = canon
-    return _CORPUS_CANON[tname]
-
-
-def _match_corpus_agg(item: dict, tname: str) -> AggCall | None:
-    """Corpus twin of :func:`_match_agg`: canonical forms (incl. the
-    full AVG quotient as one snippet), COUNT(*), COUNT(DISTINCT col),
-    and plain one-column spellings over the table's measure columns."""
-    alias = item.get("alias", "")
-    hit = _corpus_canon(tname).get(_key(item))
-    if hit:
-        return AggCall(hit[0], hit[1], alias) if alias else None
-    if _is_count_star(item):
-        return AggCall("count_star", None, alias) if alias else None
-    if (
-        isinstance(item, dict)
-        and item.get("class") == "FUNCTION"
-        and item.get("function_name", "").lower() == "count"
-        and item.get("distinct")
-        and item.get("filter") is None
-        and not item.get("order_bys", {}).get("orders")
-        and len(item.get("children", [])) == 1
-    ):
-        col = _colref(item["children"][0])
-        if col:
-            return AggCall("count_distinct", col, alias) if alias else None
-    pf = _plain_fn(item)
-    if pf:
-        fn, col = pf
-        col_measure = CORPUS_COL_MEASURE[tname]
-        if fn in ("count", "avg", "sum", "min", "max") and col in col_measure:
-            return AggCall(fn, col_measure[col], alias) if alias else None
-    return None
-
-
-def _corpus_base_tables(n: dict, acc: set[str]) -> set[str]:
-    """All BASE_TABLE names under a FROM node (tolerant walk: used to
-    DECIDE corpus-vs-lineitem dispatch, never to validate shape)."""
-    t = n.get("type")
-    if t == "BASE_TABLE":
-        acc.add(n.get("table_name", "").lower())
-    elif t == "JOIN":
-        _corpus_base_tables(n.get("left", {}), acc)
-        _corpus_base_tables(n.get("right", {}), acc)
-    return acc
-
-
-def _parse_corpus_dims(from_node: dict, tname: str) -> tuple[str, ...]:
-    """Validate a corpus FROM clause: the bare fact table, or the fact
-    INNER-joined to declared dims on their canonical edges (``JOIN
-    sources ON source = src_id``) — the corpus twin of
-    :func:`_parse_from`'s chain/arm recognition. Returns the declared
-    dim names; raises UnsupportedSQL on any other join shape."""
-    if from_node.get("type") == "BASE_TABLE":
-        return ()
-    tables: set[str] = set()
-    edges: set[frozenset[str]] = set()
-
-    def walk(n):
-        t = n.get("type")
-        if t == "BASE_TABLE":
-            tables.add(n.get("table_name", "").lower())
-            return
-        if t != "JOIN":
-            raise UnsupportedSQL(f"unsupported FROM node {t}")
-        if n.get("join_type") != "INNER" or n.get("using_columns"):
-            raise UnsupportedSQL("only INNER ... ON dim joins route")
-        cond = n.get("condition")
-        if not (
-            isinstance(cond, dict)
-            and cond.get("type") == "COMPARE_EQUAL"
-            and _colref(cond.get("left"))
-            and _colref(cond.get("right"))
-        ):
-            raise UnsupportedSQL("non-equi dim join condition")
-        edges.add(frozenset({_colref(cond["left"]), _colref(cond["right"])}))
-        walk(n["left"])
-        walk(n["right"])
-
-    walk(from_node)
-    if tname not in tables:
-        raise UnsupportedSQL("corpus join without the fact table")
-    tables.discard(tname)
-    dims: list[str] = []
-    for name in sorted(tables):
-        d = CORPUS_DIMS.get(name)
-        if d is None or tname not in d.fact_tables:
-            raise UnsupportedSQL(f"unroutable join table {name}")
-        edge = frozenset({d.fact_key, d.dim_key})
-        if edge not in edges:
-            raise UnsupportedSQL(f"dim {name} joined off its canonical edge")
-        edges.discard(edge)
-        dims.append(name)
-    if edges:
-        raise UnsupportedSQL("unexpected join edges")
-    return tuple(dims)
-
-
-def _parse_corpus(node: dict, tname: str) -> "ParsedSQL":
-    """Lower a corpus-table SELECT onto :class:`TableAggQuery`.
-    The same clause grammar as the lineitem path (WHERE trees, HAVING,
-    ORDER BY/LIMIT, SELECT DISTINCT, date_trunc grouping) plus the
-    corpus star's declared DIM joins (round-7: ``JOIN sources ON
-    source = src_id`` widens the referencable columns by the dim's
-    attrs). Scans (no grouping, no aggregates) lower onto
-    :class:`TableScanQuery` so an events time-range scan is answered
-    from the day-partitioned layout with derived directory pruning."""
-    model = CORPUS_TABLES[tname]
-    dims = _parse_corpus_dims(node["from_table"], tname)
-    order, limit, distinct = _modifiers(node)
-    filters = _parse_where(node.get("where_clause"))
-    allowed = model.columns
-    for name in dims:
-        allowed = allowed | CORPUS_DIMS[name].attrs
-    for p in filters:
-        bad = p.cols() - allowed
-        if bad:
-            raise UnsupportedSQL(f"filter on unknown column {sorted(bad)[0]}")
-
-    group_nodes = node.get("group_expressions", [])
-    sets = node.get("group_sets", [])
-    if group_nodes and sets != [list(range(len(group_nodes)))]:
-        raise UnsupportedSQL("GROUPING SETS/ROLLUP/CUBE are not routable")
-
-    out: list[str] = []
-    aggs: list[AggCall] = []
-    seen_groups: list[str] = []
-    truncs: dict[str, tuple[str, str]] = {}
-    agg_alias_by_key: dict[str, str] = {}
-    for item in node["select_list"]:
-        if isinstance(item, dict) and item.get("class") == "WINDOW":
-            raise UnsupportedSQL(
-                "window functions (OVER clause) are not routable"
-            )
-        call = _match_corpus_agg(item, tname)
-        if call is not None:
-            if not call.alias:
-                raise UnsupportedSQL("aggregate without an alias")
-            aggs.append(call)
-            out.append(call.alias)
-            agg_alias_by_key[_key(item)] = call.alias
-            continue
-        tr = _match_trunc(item, model.ts_cols)
-        if tr is not None:
-            alias = item.get("alias", "")
-            if not alias:
-                raise UnsupportedSQL("date_trunc key without an alias")
-            truncs[alias] = tr
-            out.append(alias)
-            seen_groups.append(alias)
-            continue
-        col = _colref(item)
-        if col is None:
-            raise UnsupportedSQL("select item is neither group column nor aggregate")
-        if item.get("alias"):
-            raise UnsupportedSQL("aliased group columns are not routable")
-        if col not in allowed:
-            raise UnsupportedSQL(f"unknown column {col} on {tname}")
-        out.append(col)
-        seen_groups.append(col)
-    if len(set(out)) != len(out):
-        raise UnsupportedSQL("duplicate output column names")
-    for a in aggs:
-        if a.fn == "count_distinct" and a.measure not in allowed:
-            raise UnsupportedSQL(f"COUNT(DISTINCT) over unknown column {a.measure}")
-
-    groups: list[str] = []
-    if distinct:
-        if aggs:
-            raise UnsupportedSQL("DISTINCT over aggregates is not routable")
-        if group_nodes:
-            raise UnsupportedSQL("DISTINCT combined with GROUP BY is not routable")
-        groups = list(seen_groups)
-    for g in group_nodes:
-        col = _colref(g)
-        if col is not None:
-            if col in truncs or col in allowed:
-                groups.append(col)
-                continue
-            raise UnsupportedSQL(f"GROUP BY over unknown column {col}")
-        tr = _match_trunc(g, model.ts_cols)
-        if tr is not None:
-            alias = next((a for a, t in truncs.items() if t == tr), None)
-            if alias is None:
-                raise UnsupportedSQL("grouped date_trunc key is not selected")
-            groups.append(alias)
-            continue
-        raise UnsupportedSQL("GROUP BY over a non-routable expression")
-
-    if not groups and not aggs:
-        # Row-level corpus scan: routed through route_corpus_scan so an
-        # events ts-range opens only the day directories it touches.
-        # HAVING without grouping/aggregates is invalid SQL — refuse
-        # BEFORE the scan branch returns (round-6 ADVICE, low: it was
-        # silently discarded here while the lineitem path raised), so
-        # the verbatim fallback surfaces spark.sql's own error.
-        if node.get("having") is not None:
-            raise UnsupportedSQL("HAVING on a row-level scan")
-        if dims:
-            # row-level dim-join scans have no clustered layout story
-            # yet; refuse → Engine.sql answers verbatim (correct)
-            raise UnsupportedSQL("row-level scan over a dim join")
-        if truncs:
-            raise UnsupportedSQL("scan over derived time-grain columns")
-        if not ({c for c, _ in order} <= set(out)):
-            raise UnsupportedSQL("scan ORDER BY must use selected columns")
-        return ParsedSQL(
-            TableScanQuery(tname, tuple(out), filters), tuple(out), order, (), limit
-        )
-    for col in seen_groups:
-        if col not in groups:
-            raise UnsupportedSQL(f"bare column {col} is not a grouping key")
-    if sorted(seen_groups) != sorted(groups):
-        raise UnsupportedSQL("every grouping key must be selected exactly once")
-    having = _parse_having(node.get("having"), agg_alias_by_key)
-    if not ({c for c, _ in order} <= set(out)):
-        raise UnsupportedSQL("ORDER BY must use output columns")
-    spec = TableAggQuery(
-        tname,
-        filters,
-        tuple(groups),
-        tuple(aggs),
-        tuple((a, u, c) for a, (u, c) in truncs.items()),
-        dims,
-    )
-    return ParsedSQL(spec, tuple(out), order, having, limit)
 
 
 # ---------------------------------------------------------------------------
@@ -998,7 +878,11 @@ class ParsedSQL:
 
 def parse_sql(sql: str) -> ParsedSQL:
     """Lower a SQL string to the router's spec language, or raise
-    :class:`UnsupportedSQL`. Pure driver-side analysis — no Spark."""
+    :class:`UnsupportedSQL`. Pure driver-side analysis — no Spark.
+
+    One lowering serves every family: the FROM clause yields a
+    :class:`_Family` (columns, measures, spellings, spec constructors)
+    and the clause grammar below reads only that description."""
     node = _ast(sql)
     if node.get("qualify") or node.get("sample"):
         raise UnsupportedSQL("QUALIFY/SAMPLE are not routable")
@@ -1006,26 +890,11 @@ def parse_sql(sql: str) -> ParsedSQL:
         raise UnsupportedSQL("CTEs are not routable")
     if node.get("aggregate_handling") != "STANDARD_HANDLING":
         raise UnsupportedSQL("non-standard aggregate handling")
-    from_node = node["from_table"]
-    corpus_in_from = _corpus_base_tables(from_node, set()) & set(CORPUS_TABLES)
-    if corpus_in_from:
-        # S15: corpus families (documents/events, optionally joined to
-        # declared dims) lower onto TableAggQuery and route through
-        # the corpus catalog.
-        if len(corpus_in_from) != 1:
-            raise UnsupportedSQL("more than one corpus fact table")
-        return _parse_corpus(node, next(iter(corpus_in_from)))
+    fam = _family(node["from_table"])
     order, limit, distinct = _modifiers(node)
-
-    chain, part, supp = _parse_from(node["from_table"])
     filters = _parse_where(node.get("where_clause"))
-    allowed = _LINEITEM_COLS | {a for a, d in DIM_ATTRS.items() if d <= chain}
-    if part:
-        allowed = allowed | PART_ATTRS
-    if supp:
-        allowed = allowed | SUPP_ATTRS
     for p in filters:
-        bad = p.cols() - allowed
+        bad = p.cols() - fam.allowed
         if bad:
             raise UnsupportedSQL(f"filter on unknown column {sorted(bad)[0]}")
 
@@ -1044,7 +913,8 @@ def parse_sql(sql: str) -> ParsedSQL:
             raise UnsupportedSQL(
                 "window functions (OVER clause) are not routable"
             )
-        call = _match_agg(item)
+        key = _key(item)
+        call = _match_agg(item, key, fam)
         if call is not None:
             if not call.alias:
                 raise UnsupportedSQL("aggregate without an alias")
@@ -1052,14 +922,14 @@ def parse_sql(sql: str) -> ParsedSQL:
             out.append(call.alias)
             # HAVING matches the aggregate EXPRESSION; map its
             # normalized form (alias stripped by _norm) to the alias.
-            agg_alias_by_key[_key(item)] = call.alias
+            agg_alias_by_key[key] = call.alias
             continue
-        tr = _match_trunc(item)
+        tr = _match_trunc(item, fam.ts_cols)
         if tr is not None:
             alias = item.get("alias", "")
             if not alias:
                 raise UnsupportedSQL("date_trunc key without an alias")
-            if tr[1] not in allowed:
+            if tr[1] not in fam.allowed:
                 raise UnsupportedSQL(f"date_trunc over unknown column {tr[1]}")
             truncs[alias] = tr
             out.append(alias)
@@ -1070,22 +940,25 @@ def parse_sql(sql: str) -> ParsedSQL:
             raise UnsupportedSQL("select item is neither group column nor aggregate")
         if item.get("alias"):
             raise UnsupportedSQL("aliased group columns are not routable")
+        if col not in fam.allowed:
+            raise UnsupportedSQL(f"unknown column {col} on {fam.key}")
         out.append(col)
         seen_groups.append(col)
     if len(set(out)) != len(out):
         raise UnsupportedSQL("duplicate output column names")
     for a in aggs:
-        if a.fn == "count_distinct" and a.measure not in allowed:
-            raise UnsupportedSQL(
-                f"COUNT(DISTINCT) over unknown column {a.measure}"
-            )
-        if a.fn != "count_star" and a.measure in MEASURES:
-            m = MEASURES[a.measure]
+        if a.fn == "count_distinct":
+            if a.measure not in fam.allowed:
+                raise UnsupportedSQL(
+                    f"COUNT(DISTINCT) over unknown column {a.measure}"
+                )
+        elif a.fn != "count_star":
             # an arm-home measure is only reachable when its table is
             # actually joined (same scoping rule as plain columns)
-            if m.home != "fact" and m.source_col not in allowed:
+            src = fam.measures[a.measure].source_col
+            if src is not None and src not in fam.allowed:
                 raise UnsupportedSQL(
-                    f"measure column {m.source_col} is not reachable "
+                    f"measure column {src} is not reachable "
                     "from the statement's joins"
                 )
 
@@ -1103,11 +976,11 @@ def parse_sql(sql: str) -> ParsedSQL:
     for g in group_nodes:
         col = _colref(g)
         if col is not None:
-            if col in truncs or col in allowed:
+            if col in truncs or col in fam.allowed:
                 groups.append(col)
                 continue
             raise UnsupportedSQL(f"GROUP BY over unknown column {col}")
-        tr = _match_trunc(g)
+        tr = _match_trunc(g, fam.ts_cols)
         if tr is not None:
             alias = next((a for a, t in truncs.items() if t == tr), None)
             if alias is None:
@@ -1115,56 +988,59 @@ def parse_sql(sql: str) -> ParsedSQL:
             groups.append(alias)
             continue
         raise UnsupportedSQL("GROUP BY over a non-routable expression")
-
-    if groups or aggs:
-        # Aggregating/DISTINCT form: every bare select column must be a
-        # grouping key (in the scan form below, bare columns are the
-        # projection).
-        for col in seen_groups:
-            if col not in groups:
-                raise UnsupportedSQL(f"bare column {col} is not a grouping key")
-    having = _parse_having(node.get("having"), agg_alias_by_key)
+    if not ({c for c, _ in order} <= set(out)):
+        raise UnsupportedSQL("ORDER BY must use output columns")
 
     if not groups and not aggs:
-        # Pure projection+filter scan over lineitem.
-        if chain or part or supp:
+        # Row-level projection+filter scan, routed through the family's
+        # scan router so a range on a clustering key reads the clustered
+        # layout. HAVING without grouping or aggregates is invalid SQL:
+        # refuse it, and the verbatim fallback surfaces spark.sql's own
+        # error.
+        if node.get("having") is not None:
+            raise UnsupportedSQL("HAVING on a row-level scan")
+        if fam.joined:
             raise UnsupportedSQL("row-level scans over joins are not routable")
-        if not (set(out) <= _LINEITEM_COLS):
-            raise UnsupportedSQL("scan selects columns outside lineitem")
-        if not ({c for c, _ in order} <= set(out)):
-            raise UnsupportedSQL("scan ORDER BY must use selected columns")
-        return ParsedSQL(
-            ScanQuery(tuple(out), filters), tuple(out), order, (), limit
-        )
+        if truncs:
+            raise UnsupportedSQL("scan over derived time-grain columns")
+        return ParsedSQL(fam.scan(tuple(out), filters), tuple(out), order, (), limit)
 
     # Grouped — or, with no GROUP BY, a GLOBAL — aggregate; aggs may
     # be empty (the DISTINCT / GROUP-BY-without-aggregates shape). The
     # global form is the cube's best case: COUNT(*)/SUM over the whole
-    # fact re-aggregates a scale-invariant projection to ONE row.
+    # fact re-aggregates a scale-invariant projection to ONE row. Every
+    # bare select column must be a grouping key (in the scan form
+    # above, bare columns are the projection).
+    for col in seen_groups:
+        if col not in groups:
+            raise UnsupportedSQL(f"bare column {col} is not a grouping key")
     if sorted(seen_groups) != sorted(groups):
         raise UnsupportedSQL("every grouping key must be selected exactly once")
-    if not ({c for c, _ in order} <= set(out)):
-        raise UnsupportedSQL("ORDER BY must use output columns")
-    spec = AggQuery(
+    having = _parse_having(node.get("having"), agg_alias_by_key)
+    spec = fam.agg(
         filters,
         tuple(groups),
         tuple(aggs),
         tuple((a, u, c) for a, (u, c) in truncs.items()),
     )
-    if minimal_chain(spec) != chain:
-        # The statement joins DEEPER than its attributes require —
-        # semantically meaningful (inner joins may drop orphan fact
-        # rows; FK integrity is never assumed), so the declared depth
-        # rides along. When minimal, chain stays None so specs compare
-        # structurally wherever they came from.
-        spec = _dc.replace(spec, chain=chain)
-    if part:
-        # the part join is declared, attributes or not (same
-        # orphan-dropping argument as the chain)
-        spec = _dc.replace(spec, part=True)
-    if supp:
-        spec = _dc.replace(spec, supp=True)
     return ParsedSQL(spec, tuple(out), order, having, limit)
+
+
+# One router per spec type: the SQL front door and Engine.aggregate /
+# Engine.scan dispatch through this table (:func:`route_spec`).
+_ROUTERS = {
+    AggQuery: route,
+    ScanQuery: route_scan,
+    TableAggQuery: route_corpus,
+    TableScanQuery: route_corpus_scan,
+}
+
+
+def route_spec(spark: SparkSession, sf_dir: str, spec) -> tuple[DataFrame, str]:
+    """Answer any router spec through its family's router. Returns
+    (result, chosen); a spec the router cannot plan raises its
+    ValueError."""
+    return _ROUTERS[type(spec)](spark, sf_dir, spec)
 
 
 def route_sql(
@@ -1182,26 +1058,13 @@ def route_sql(
     from pyspark.sql import functions as F
 
     parsed = parse_sql(sql)
-    if isinstance(parsed.spec, ScanQuery):
-        df, chosen = route_scan(spark, sf_dir, parsed.spec)
-    elif isinstance(parsed.spec, TableScanQuery):
-        try:
-            df, chosen = route_corpus_scan(spark, sf_dir, parsed.spec)
-        except ValueError as e:
-            raise UnsupportedSQL(str(e)) from e
-    elif isinstance(parsed.spec, TableAggQuery):
-        try:
-            df, chosen = route_corpus(spark, sf_dir, parsed.spec)
-        except ValueError as e:
-            raise UnsupportedSQL(str(e)) from e
-    else:
-        try:
-            df, chosen = route(spark, sf_dir, parsed.spec)
-        except ValueError as e:
-            # shapes the spec language parses but no plan expresses:
-            # a predicate mixing lineitem and dimension columns, an
-            # unknown grouping attribute, a contradictory chain depth
-            raise UnsupportedSQL(str(e)) from e
+    try:
+        df, chosen = route_spec(spark, sf_dir, parsed.spec)
+    except ValueError as e:
+        # shapes the spec language parses but no plan expresses: a
+        # predicate mixing lineitem and dimension columns, a
+        # contradictory chain depth, a dim key missing on its table
+        raise UnsupportedSQL(str(e)) from e
     df = df.select(*parsed.columns)
     for p in parsed.having:
         df = df.filter(p.column())

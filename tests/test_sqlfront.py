@@ -868,11 +868,9 @@ _SHAPES = [
         TableAggQuery("documents", (), ("lang", "source"), ()),
     ),
     ("SELECT DISTINCT nosuch FROM documents", _REFUSED),
-    ("SELECT DISTINCT nosuch FROM lineitem", AggQuery((), ("nosuch",), ())),
-    (
-        "SELECT DISTINCT o_orderstatus FROM lineitem",
-        AggQuery((), ("o_orderstatus",), (), chain=0),
-    ),
+    # a DISTINCT key must be a column the FROM clause reaches
+    ("SELECT DISTINCT nosuch FROM lineitem", _REFUSED),
+    ("SELECT DISTINCT o_orderstatus FROM lineitem", _REFUSED),
     ("SELECT DISTINCT l_returnflag FROM lineitem GROUP BY l_returnflag", _REFUSED),
     ("SELECT DISTINCT l_returnflag, COUNT(*) AS n FROM lineitem", _REFUSED),
     # COUNT(DISTINCT) targets
@@ -952,3 +950,59 @@ def test_lowering_table(sql, want):
             parse_sql(sql)
     else:
         assert parse_sql(sql).spec == want, sql
+
+
+@pytest.mark.parametrize(
+    "term,want",
+    [
+        ("lang", (("lang", True),)),
+        ("lang DESC", (("lang", False),)),
+        # Spark's own placement (first ascending, last descending) is
+        # what the routed sort applies, so the explicit form routes
+        ("lang NULLS FIRST", (("lang", True),)),
+        ("lang ASC NULLS FIRST", (("lang", True),)),
+        ("lang DESC NULLS LAST", (("lang", False),)),
+        # the other placement cannot be expressed by the routed sort
+        ("lang DESC NULLS FIRST", _REFUSED),
+        ("lang ASC NULLS LAST", _REFUSED),
+        ("lang NULLS LAST", _REFUSED),
+    ],
+)
+def test_explicit_null_order(term, want):
+    sql = f"SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang ORDER BY {term} LIMIT 2"
+    if want is _REFUSED:
+        with pytest.raises(UnsupportedSQL, match="NULLS"):
+            parse_sql(sql)
+    else:
+        assert parse_sql(sql).order == want
+
+
+def test_explicit_null_order_matches_verbatim(spark, sf_dir, tmp_path):
+    """Over a column holding a NULL (inserted here), Engine.sql returns
+    the verbatim rows for every placement: the one the routed sort
+    cannot express runs verbatim, the others route."""
+    from bigdataproj_spark.catalog import TABLES
+    from bigdataproj_spark.catalog import table as _table
+
+    for t in TABLES:
+        _table(spark, sf_dir, t).write.parquet(str(tmp_path / f"{t}.parquet"))
+    eng = Engine(spark, str(tmp_path))
+    eng.sql(
+        "INSERT INTO documents (doc_id, text, lang, source, n_chars)"
+        " VALUES (900000001, 'abc', NULL, 'src91', 3)"
+    )
+    for term, routed in (
+        ("lang DESC NULLS FIRST", False),
+        ("lang ASC NULLS LAST", False),
+        ("lang DESC NULLS LAST", True),
+        ("lang", True),
+    ):
+        sql = (
+            "SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang"
+            f" ORDER BY {term} LIMIT 2"
+        )
+        chosen, _plan = eng.explain_sql(sql)
+        assert chosen.startswith("spark.sql: ") != routed, (term, chosen)
+        got = [tuple(r) for r in eng.sql(sql).collect()]
+        want = [tuple(r) for r in eng.sql(sql, routed=False).collect()]
+        assert got == want, (term, got, want)
