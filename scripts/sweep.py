@@ -8,8 +8,10 @@ Usage: python scripts/sweep.py <tag> --out-dir DIR --prefix NAME [--sf-dir SF]
               (jobs read ``<prefix>:<query>`` in the UI and event log)
   --sf-dir    fixture directory (default: $SPARK_GRAFT_SF_DIR)
 
-Output: {name: {"sec": s, "tags": [...]}}, failures recorded as
-{"sec": null, "err": ...}. Single timed pass per query (triage, not the
+Output: {name: {"sec": s, "tags": [...], "chosen": [...]}}, failures
+recorded as {"sec": null, "err": ...}; ``chosen`` lists the layout each
+router call of the query picked (a projection name, "bucketed_spine"
+or "raw"), read off the routers' one candidate loop. Single timed pass per query (triage, not the
 bench protocol); the bench's numbers stay authoritative.
 """
 
@@ -41,14 +43,35 @@ spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
     "overwrite"
 ).save()
 
+queries = load_all()
+
+# Record every routing decision: wrap the one candidate loop in each
+# module that imported it.
+import bigdataproj_spark.plans.routing as _routing  # noqa: E402
+
+_route = _routing._route
+_chosen: list[str] = []
+
+
+def _recording_route(*a, **k):
+    df, chosen = _route(*a, **k)
+    _chosen.append(chosen)
+    return df, chosen
+
+
+for _mod in list(sys.modules.values()):
+    if getattr(_mod, "_route", None) is _route:
+        _mod._route = _recording_route
+
 out = {}
-for name, q in sorted(load_all().items()):
+for name, q in sorted(queries.items()):
+    _chosen.clear()
     spark.sparkContext.setJobDescription(f"{args.prefix}:{name}")
     t0 = time.perf_counter()
     try:
         q.build(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
         dt = round(time.perf_counter() - t0, 3)
-        out[name] = {"sec": dt, "tags": list(q.tags)}
+        out[name] = {"sec": dt, "tags": list(q.tags), "chosen": list(_chosen)}
         print(f"{dt:8.3f}  {name}")
     except Exception as e:  # record, keep sweeping
         out[name] = {"sec": None, "err": str(e)[:200], "tags": list(q.tags)}
