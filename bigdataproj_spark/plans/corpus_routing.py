@@ -1,9 +1,9 @@
 """S15 (engine extension): projection auto-routing for the CORPUS fact
 tables — ``documents`` and ``events`` join the router's catalog.
 
-plans/routing.py routes the lineitem star; this module generalizes the
-same contract to single-table fact families declared as data
-(:class:`CorpusTable`): a :class:`TableAggQuery` spec is answered from
+plans/routing.py routes the lineitem star and declares every fact
+table's model; this module serves the corpus tables with the same
+contract: a :class:`TableAggQuery` spec is answered from
 a deployed cube when the cube SUBSUMES it, else from the raw-table
 plan — bit-identically by construction, because the cube stores the
 SAME per-row expressions (sources/corpus_cubes.py) the raw plan
@@ -62,288 +62,47 @@ fuzzed against DuckDB and the raw plan in tests/test_corpus_routing.py
 (built-in cubes, the sources dim) and tests/test_user_projections.py
 (user views with an hour time key or a dim-attribute key).
 
-The projection engine itself — :class:`~.routing.Projection` with its
-subsumption test and cube build, the stored-measure descriptor, the
-aggregate-expression builder and the candidate loop — is routing.py's,
-shared with the lineitem star: a corpus cube is a ``Projection`` whose
-``time_key`` carries the hour-grain fold and whose stored fact keys let
-declared dims fold. This module keeps what is per family: the spec,
-the table and dim model, validation, the raw plan and the scan router.
+Everything but the cubes is routing.py's, shared with the lineitem
+star: the table model (documents and events are
+:class:`~.routing.FactTable` s whose registry arms are row-preserving),
+:func:`~.routing.validate`, the raw plan and the candidate loop. A
+corpus cube is a :class:`~.routing.Projection` whose ``time_key``
+carries the hour-grain fold and whose stored fact keys let declared
+registry arms fold. This module keeps the corpus cubes, their router
+and the corpus scan router.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions import cents
-from .routing import (  # noqa: F401 — BoolPred: re-exported with the spec types
+from .routing import (  # noqa: F401 — re-exported with the spec types and the model
+    FACT_TABLES,
     AggCall,
     BoolPred,
-    Measure,
     Pred,
     Projection,
-    _distinct,
-    _grouped,
-    _route,
-    _row_level,
+    TableAggQuery,
+    TableScanQuery,
+    _RANGE_OPS,
     _StoredMeasure,
-    agg_exprs,
+    _raw_plan,
+    _route,
+    current_documents,
+    current_events,
+    validate,
 )
 
-# ---------------------------------------------------------------------------
-# The spec + semantic model.
-# ---------------------------------------------------------------------------
-
-
-@dataclass(frozen=True)
-class TableAggQuery:
-    """A grouped/global aggregate (or DISTINCT shape when ``aggs`` is
-    empty) over ONE corpus fact table. ``truncs`` declares derived
-    time-grain keys exactly like AggQuery. ``dims`` declares joined
-    DIMENSION tables by name (round-7: the corpus family's star arm,
-    mirroring AggQuery's chain/part/supp declarations) — each is an
-    engine-maintained registry keyed 1:1-and-complete on a fact
-    column, so the declared inner join is row-preserving and its
-    attributes are per-group constants of the fact's join key."""
-
-    table: str
-    filters: tuple  # of Pred | BoolPred, implicitly conjoined
-    group_by: tuple[str, ...]
-    aggs: tuple[AggCall, ...]
-    truncs: tuple[tuple[str, str, str], ...] = ()
-    dims: tuple[str, ...] = ()
-
-    def group_sources(self) -> dict[str, str]:
-        tm = {alias: col for alias, _unit, col in self.truncs}
-        return {g: tm.get(g, g) for g in self.group_by}
-
-
-# Per-row text expressions are defined ONCE, next to the cube deploy
-# (sources/corpus_cubes.py) — the raw plan and the stored partials can
-# never drift because they are literally the same expression.
-from ..sources.corpus_cubes import (  # noqa: E402
-    doc_stopword_count as _doc_stopwords,
-    doc_token_count as _doc_tokens,
-)
-
-
-@dataclass(frozen=True)
-class CorpusTable:
-    """One routable corpus fact table, declared as data: its actual
-    column set (unknown references refuse at parse time, never an
-    AnalysisException at plan time), its measures, and which timestamp
-    columns may source date_trunc grouping keys."""
-
-    name: str
-    columns: frozenset[str]
-    measures: dict[str, Measure]
-    ts_cols: frozenset[str]
-
-
-@dataclass(frozen=True)
-class CorpusDim:
-    """A declarable dimension table for the corpus star: joined INNER
-    on ``fact_key == dim_key``. The engine maintains the dim COMPLETE
-    over the corpus's key values (sources/corpus_cubes.py
-    refresh_sources_dim), so the inner join is row-preserving; and the
-    dim key is unique by construction (one registry row per value), so
-    the join is 1:1 — together these make the declared join a pure
-    attribute attachment, exact on both the row-level and the
-    cube-grouped path (every row of a fact group shares its key, so
-    joining groups == joining rows then grouping)."""
-
-    name: str
-    fact_tables: frozenset[str]
-    fact_key: str
-    dim_key: str
-    attrs: frozenset[str]
-    open: Callable[[SparkSession, str], DataFrame]
-    # column order of the registry table — the engine's dim-view
-    # bookkeeping uses it to tell its own registration apart from a
-    # user view that took over the name (Engine._ensure_dim_views)
-    view_cols: tuple[str, ...] = ()
-
-
-def _open_sources_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.corpus_cubes import sources_dim_table
-    from ..sources.snapshots import versioned_parquet
-
-    return versioned_parquet(spark, sources_dim_table(spark, sf_dir))
-
-
-def _open_event_types_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.corpus_cubes import event_types_dim_table
-    from ..sources.snapshots import versioned_parquet
-
-    return versioned_parquet(spark, event_types_dim_table(spark, sf_dir))
-
-
-CORPUS_DIMS: dict[str, CorpusDim] = {
-    "sources": CorpusDim(
-        name="sources",
-        fact_tables=frozenset({"documents"}),
-        fact_key="source",
-        dim_key="src_id",
-        attrs=frozenset({"s_kind", "s_tier"}),
-        open=_open_sources_dim,
-        view_cols=("src_id", "s_kind", "s_tier"),
-    ),
-    # the events star's registry arm: the hourly cube stores
-    # event_type, so taxonomy groupings fold onto it the same way
-    # sources attrs fold onto the docs cube
-    "event_types": CorpusDim(
-        name="event_types",
-        fact_tables=frozenset({"events"}),
-        fact_key="event_type",
-        dim_key="et_id",
-        attrs=frozenset({"e_category"}),
-        open=_open_event_types_dim,
-        view_cols=("et_id", "e_category"),
-    ),
-}
-
-
-# Canonical column orders of the corpus facts (the maintained row-
-# level layouts reorder columns — hive partition columns read back
-# last — so CURRENT-relation reads re-project to the fixture order).
-_DOC_COLS = ("doc_id", "text", "lang", "source", "n_chars")
-_EVENT_COLS = ("event_id", "ts", "user_id", "event_type", "value", "props")
-
-
-def current_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CURRENT documents relation: the maintained clustered layout
-    once deployed this session (refresh_warehouse appends document
-    batches THERE; the fixture parquet is immutable), else the
-    fixture — the corpus twin of plans.routing.current_lineitem
-    (round-7 review finding: without this, a cube- or clustered-routed
-    answer described base+delta while the raw fallback described base
-    only). Never triggers a layout deploy. Document TOMBSTONES (S19,
-    sources/retention.py) subtract here — deleted docs disappear from
-    every raw plan the moment the delete commits."""
-    from ..sources.retention import apply_tombstones
-    from ..sources.snapshots import layout_parquet
-    from ..sources.state import warehouse
-
-    path = warehouse(spark, sf_dir).docstore
-    if path:
-        # S22: inside a snapshot read, scan only the pinned commit's
-        # files (document batches APPEND into this directory)
-        df = layout_parquet(spark, path).select(*_DOC_COLS)
-    else:
-        df = table(spark, sf_dir, "documents")
-    return apply_tombstones(spark, sf_dir, "documents", df)
-
-
-def current_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CURRENT events relation — maintained day-partitioned layout
-    if deployed this session, else the fixture (same contract as
-    :func:`current_documents`). The S19b retention WATERMARK
-    subtracts expired rows (sources/retention.py expire_events) — on
-    the day-partitioned layout the row predicate also prunes whole
-    expired-day directories."""
-    from ..sources.retention import apply_event_watermark, event_watermark
-    from ..sources.snapshots import layout_parquet
-    from ..sources.state import warehouse
-
-    path = warehouse(spark, sf_dir).dated_events
-    if path:
-        df = layout_parquet(spark, path)
-        wm = event_watermark(spark, sf_dir)
-        if wm is not None:
-            # the derived day-partition conjunct must apply BEFORE the
-            # projection drops event_day_p — Spark prunes hive
-            # directories from partition-column predicates only
-            df = df.filter(F.col("event_day_p") >= wm[:10])
-        df = df.select(*_EVENT_COLS)
-    else:
-        df = table(spark, sf_dir, "events")
-    return apply_event_watermark(spark, sf_dir, df)
+# The fact tables this router serves, and their registry arms.
+CORPUS_TABLES = {n: t for n, t in FACT_TABLES.items() if t.agg_spec is TableAggQuery}
+CORPUS_DIMS = {a.name: a for t in CORPUS_TABLES.values() for a in t.arms.values()}
 
 
 def current_corpus_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "documents":
-        return current_documents(spark, sf_dir)
-    if name == "events":
-        return current_events(spark, sf_dir)
-    return table(spark, sf_dir, name)
-
-
-CORPUS_TABLES: dict[str, CorpusTable] = {
-    "documents": CorpusTable(
-        name="documents",
-        columns=frozenset({"doc_id", "text", "lang", "source", "n_chars"}),
-        measures={
-            "chars": Measure("chars", lambda: F.col("n_chars"), 1, "n_chars"),
-            "tokens": Measure("tokens", _doc_tokens, 1, "text"),
-            "stopwords": Measure("stopwords", _doc_stopwords, 1, "text"),
-        },
-        ts_cols=frozenset(),
-    ),
-    "events": CorpusTable(
-        name="events",
-        columns=frozenset(
-            {"event_id", "ts", "user_id", "event_type", "value", "props"}
-        ),
-        measures={
-            "value": Measure("value", lambda: cents("value"), 100, "value"),
-        },
-        ts_cols=frozenset({"ts"}),
-    ),
-}
-
-
-def _used_cols(q: TableAggQuery) -> set[str]:
-    used = set(q.group_sources().values())
-    for f in q.filters:
-        used |= f.cols()
-    for a in q.aggs:
-        if a.fn in ("count_distinct", "approx_distinct") and a.measure:
-            used.add(a.measure)
-    return used
-
-
-def validate(q: TableAggQuery) -> CorpusTable:
-    """Structural validation against the declared table model; raises
-    ValueError (the router's refusal currency) on anything outside it.
-    Declared dims widen the referencable column set by their attrs —
-    a dim attribute referenced WITHOUT its declared join refuses here,
-    same as routing.py's arm rules."""
-    t = CORPUS_TABLES.get(q.table)
-    if t is None:
-        raise ValueError(f"unknown corpus table {q.table!r}")
-    dim_attrs: set[str] = set()
-    for name in q.dims:
-        d = CORPUS_DIMS.get(name)
-        if d is None:
-            raise ValueError(f"unknown corpus dim {name!r}")
-        if q.table not in d.fact_tables:
-            raise ValueError(f"dim {name!r} does not join table {q.table!r}")
-        if d.fact_key not in t.columns:
-            raise ValueError(f"dim {name!r} key missing on {q.table!r}")
-        dim_attrs |= d.attrs
-    trunc_aliases = {a for a, _u, _c in q.truncs}
-    for alias, unit, col in q.truncs:
-        if col not in t.ts_cols:
-            raise ValueError(f"date_trunc over non-timestamp column {col!r}")
-        if unit not in ("hour", "day", "month", "quarter", "year"):
-            raise ValueError(f"unsupported trunc unit {unit!r}")
-    for c in _used_cols(q):
-        if c not in t.columns and c not in dim_attrs:
-            raise ValueError(f"unknown column {c!r} on table {q.table!r}")
-    for g in q.group_by:
-        if g not in trunc_aliases and g not in t.columns and g not in dim_attrs:
-            raise ValueError(f"unknown grouping attribute {g!r}")
-    for a in q.aggs:
-        if a.fn in ("count_star", "count_distinct", "approx_distinct"):
-            continue
-        if a.measure not in t.measures:
-            raise ValueError(f"unknown measure {a.measure!r} on {q.table!r}")
-    return t
+    t = CORPUS_TABLES.get(name)
+    return t.current(spark, sf_dir) if t else table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -399,61 +158,6 @@ CORPUS_PROJECTIONS: tuple[Projection, ...] = (
 
 
 # ---------------------------------------------------------------------------
-# The raw fallback: scan → fused pre-projection → one-shuffle aggregate
-# (the q01 shape, per table).
-# ---------------------------------------------------------------------------
-
-
-def _raw_plan(spark: SparkSession, sf_dir: str, q: TableAggQuery) -> DataFrame:
-    t = validate(q)
-    df = current_corpus_table(spark, sf_dir, q.table)
-    # Declared dim joins: broadcast attribute attachment, applied
-    # whether or not the attrs are used (the SQL the spec mirrors
-    # declares the join; the engine-maintained dim is complete, so
-    # the inner join is row-preserving either way).
-    for name in q.dims:
-        d = CORPUS_DIMS[name]
-        dim = d.open(spark, sf_dir)
-        df = df.join(F.broadcast(dim), F.col(d.fact_key) == dim[d.dim_key])
-    for p in q.filters:
-        df = df.filter(p.column())
-    for alias, unit, col in q.truncs:
-        df = df.withColumn(alias, F.date_trunc(unit, F.col(col)))
-    if not q.aggs:
-        return _distinct(df, q)
-    needed = sorted(
-        {
-            a.measure
-            for a in q.aggs
-            if a.measure and a.fn not in ("count_distinct", "approx_distinct")
-        }
-    )
-    int_cols = {m: f"__{m}_i" for m in needed}
-    cnt_cols = {
-        m: t.measures[m].source_col
-        for m in needed
-        if any(a.fn in ("count", "avg") and a.measure == m for a in q.aggs)
-    }
-    cd_cols = sorted(
-        {
-            a.measure
-            for a in q.aggs
-            if a.fn in ("count_distinct", "approx_distinct")
-        }
-    )
-    keep = list(
-        dict.fromkeys(
-            list(q.group_by) + sorted(cnt_cols.values()) + cd_cols
-        )
-    )
-    pre = df.select(
-        *keep, *[t.measures[m].raw_int().alias(int_cols[m]) for m in needed]
-    )
-    row_level = _row_level(t.measures, int_cols, cnt_cols)
-    return _grouped(pre, q, agg_exprs(q, row_level, None))
-
-
-# ---------------------------------------------------------------------------
 # The router.
 # ---------------------------------------------------------------------------
 
@@ -465,11 +169,10 @@ def route_corpus(
     Returns (result, chosen); tests assert on ``chosen``.
 
     The candidate loop is routing's (:func:`~.routing._route`):
-    built-in cubes (measured cost order), then the USER projections
-    deployed over ``q.table`` (names prefixed "user:"), then the raw
-    plan."""
-    validate(q)
-    return _route(spark, sf_dir, q, CORPUS_PROJECTIONS, (), _raw_plan)
+    validation, built-in cubes (measured cost order), then the USER
+    projections deployed over ``q.table`` (names prefixed "user:"),
+    then the raw plan."""
+    return _route(spark, sf_dir, q, CORPUS_PROJECTIONS, ())
 
 
 # ---------------------------------------------------------------------------
@@ -478,22 +181,6 @@ def route_corpus(
 # written continuously and queried in short windows — "yesterday's
 # errors" should open one directory out of the corpus's thousands).
 # ---------------------------------------------------------------------------
-
-
-@dataclass(frozen=True)
-class TableScanQuery:
-    """A projection+filter query over corpus-table rows (no
-    aggregation). The router picks the physical LAYOUT; content is
-    identical whichever layout answers. Filters may be Pred or
-    BoolPred trees (applied row-level either way); only TOP-LEVEL
-    plain Preds participate in layout selection and bound derivation."""
-
-    table: str
-    columns: tuple[str, ...]
-    filters: tuple  # of Pred | BoolPred, implicitly conjoined
-
-
-_RANGE_OPS = frozenset({"<=", "<", ">=", ">", "=", "between", "in"})
 
 
 def route_corpus_scan(
@@ -505,15 +192,7 @@ def route_corpus_scan(
     superset constraint, so a derivation bug can only over-read; the
     exact row filters run after), else the raw table. Mirrors
     routing.route_scan for the corpus tables."""
-    t = CORPUS_TABLES.get(q.table)
-    if t is None:
-        raise ValueError(f"unknown corpus table {q.table!r}")
-    used = set(q.columns)
-    for p in q.filters:
-        used |= p.cols()
-    bad = used - t.columns
-    if bad:
-        raise ValueError(f"unknown column {sorted(bad)[0]!r} on {q.table!r}")
+    validate(q)
     has_ts_range = q.table == "events" and any(
         isinstance(p, Pred) and p.col == "ts" and p.op in _RANGE_OPS
         for p in q.filters

@@ -68,7 +68,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .routing import AggQuery
+from .routing import LINEITEM, AggQuery
 from .sqlfront import UnsupportedSQL, parse_sql
 
 _DDL_RE = re.compile(
@@ -361,7 +361,7 @@ def _lower_lineitem_create(
     """The group keys of a lineitem-star view definition, or raise
     ValueError for any shape the stored-partial contract cannot answer
     later."""
-    from ..sources.user_projections import _USER_MEASURES, _star_joins
+    from ..sources.user_projections import _USER_MEASURES, view_arms
 
     if spec.truncs:
         raise ValueError(
@@ -375,22 +375,18 @@ def _lower_lineitem_create(
                 f"(deployable: {sorted(_USER_MEASURES)})"
             )
     keys = tuple(spec.group_by)
-    # join-set consistency: deploy_projection builds the MINIMAL join
+    # join-set consistency: deploy_projection builds the MINIMAL arm
     # set reaching the declared keys/measures; a definition declaring
-    # deeper inner joins would change the view's row population
+    # more inner joins would change the view's row population
     # (orphan-drop semantics), so it must be refused, not silently
     # shallowed.
-    expected_chain, expected_part, expected_supp = _star_joins(keys, measures)
-    if spec.chain is not None and spec.chain != expected_chain:
+    unused = set(spec.arms()) - set(view_arms(LINEITEM, keys, measures))
+    if unused:
         raise ValueError(
-            f"the definition joins {spec.chain} dimension level(s) but its "
-            f"keys/measures only require {expected_chain}; a deeper inner "
-            "join changes the view's rows (orphan-drop) and is not declarable"
-        )
-    if spec.part != expected_part or spec.supp != expected_supp:
-        raise ValueError(
-            "the definition declares an arm join its keys/measures do not "
-            "use; drop the join or reference one of its columns"
+            f"the definition declares an arm join ({', '.join(sorted(unused))}) "
+            "its keys/measures do not use; an unused inner join changes the "
+            "view's rows (orphan-drop) and is not declarable — drop the join "
+            "or reference one of its columns"
         )
     return keys
 

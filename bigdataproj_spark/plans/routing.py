@@ -1,5 +1,5 @@
 """S13 (engine extension): projection auto-routing — materialized-view
-matching for aggregate queries over the lineitem star.
+matching for aggregate queries over every fact table.
 
 Round 5 closed the q01/q26 performance gap AT REST: the pricing cube
 (sources/bucketed.py pricing_cube_table) answers shipdate-cutoff
@@ -18,6 +18,20 @@ warehouse answer (aggregate rewriting over materialized views,
 Goldstein & Larson, "Optimizing queries using materialized views",
 SIGMOD 2001 — see PAPERS.md).
 
+THE TABLE MODEL. Every routable fact table — the lineitem star and
+the corpus tables documents/events — is one :class:`FactTable`: its
+columns, measures, timestamp columns, current relation and
+:class:`Arm` s. An arm is a dimension table joined INNER on its
+parent's key (the fact, or another arm: orders → customer → nation →
+region), with the attributes it exposes, how it opens, its join
+strategy as data, and whether it is ROW-PRESERVING (the engine's
+complete 1:1 registries, which fold onto any cube storing their fact
+key). A spec declares its arm set through one method (``arms()``);
+everything else reads the model: one :func:`validate` at the entry of
+both routers, one raw plan (:func:`_raw_plan`), one arm-join builder
+(:func:`join_arms`) for the raw plan, the spine and the user-view
+build, and the SQL front door's FROM recognizer (plans/sqlfront.py).
+
 Subsumption rules (each checked structurally, never by name):
 - every grouping attribute is stored by the projection (cube group
   keys, or attributes a bucketed companion table provides);
@@ -32,20 +46,18 @@ Subsumption rules (each checked structurally, never by name):
   fixed-point arithmetic the raw plan runs (functions.cents), just
   executed at deploy time, so the answer is bit-identical by
   construction and proven by the same DuckDB oracles the raw queries
-  carry.
+  carry;
+- the arms a query declares that are not row-preserving equal the
+  arms the projection's build joined: an inner join may drop orphan
+  fact rows, and the router never assumes FK integrity.
 
 Candidates are tried in a measured cost order (the built-in
 :data:`PROJECTIONS` — pricing, segment and star-date cubes, then the
 per-order rollup star pair — then user views, then the bucketed spine,
 then the raw scan), i.e. the router is a rule-based cost order, not a
 cost model — the right trade at this catalog size (4 built-in
-layouts), revisit if the catalog grows.
-
-The projection engine — :class:`Projection` with its subsumption test
-and build, the stored-measure descriptor, the aggregate-expression
-builder and the candidate loop — is shared with the corpus router
-(plans/corpus_routing.py); the two families differ only in descriptor
-and measure fields (docs/DECISIONS.md).
+layouts), revisit if the catalog grows. plans/corpus_routing.py holds
+the corpus cubes, their router and their scan router.
 
 At 100 TB the win is the round-5 A/B tables (docs/BENCHMARKS.md): raw
 q01 3.1x DuckDB at sf5 vs cube 1.05x/0.55x (sf5/sf10); raw q26
@@ -77,6 +89,15 @@ from ..sources.bucketed import (
     _N_BUCKETS,
     order_revenue_projection,
     pricing_cube_table,
+)
+# Per-row text expressions are defined ONCE, next to the cube deploy
+# (sources/corpus_cubes.py) — the raw plan and the stored partials can
+# never drift because they are literally the same expression.
+from ..sources.corpus_cubes import (
+    doc_stopword_count,
+    doc_token_count,
+    event_types_dim_table,
+    sources_dim_table,
 )
 
 
@@ -128,8 +149,65 @@ def current_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = table(spark, sf_dir, "orders")
     return apply_tombstones(spark, sf_dir, "orders", df)
 
+
+# Canonical column orders of the corpus facts (the maintained row-
+# level layouts reorder columns — hive partition columns read back
+# last — so CURRENT-relation reads re-project to the fixture order).
+_DOC_COLS = ("doc_id", "text", "lang", "source", "n_chars")
+_EVENT_COLS = ("event_id", "ts", "user_id", "event_type", "value", "props")
+
+
+def current_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The CURRENT documents relation: the maintained clustered layout
+    once deployed this session (refresh_warehouse appends document
+    batches THERE; the fixture parquet is immutable), else the
+    fixture — the corpus twin of :func:`current_lineitem` (round-7
+    review finding: without this, a cube- or clustered-routed answer
+    described base+delta while the raw fallback described base only).
+    Never triggers a layout deploy. Document TOMBSTONES (S19,
+    sources/retention.py) subtract here — deleted docs disappear from
+    every raw plan the moment the delete commits."""
+    from ..sources.retention import apply_tombstones
+    from ..sources.snapshots import layout_parquet
+    from ..sources.state import warehouse
+
+    path = warehouse(spark, sf_dir).docstore
+    if path:
+        # S22: inside a snapshot read, scan only the pinned commit's
+        # files (document batches APPEND into this directory)
+        df = layout_parquet(spark, path).select(*_DOC_COLS)
+    else:
+        df = table(spark, sf_dir, "documents")
+    return apply_tombstones(spark, sf_dir, "documents", df)
+
+
+def current_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The CURRENT events relation — maintained day-partitioned layout
+    if deployed this session, else the fixture (same contract as
+    :func:`current_documents`). The S19b retention WATERMARK
+    subtracts expired rows (sources/retention.py expire_events) — on
+    the day-partitioned layout the row predicate also prunes whole
+    expired-day directories."""
+    from ..sources.retention import apply_event_watermark, event_watermark
+    from ..sources.snapshots import layout_parquet
+    from ..sources.state import warehouse
+
+    path = warehouse(spark, sf_dir).dated_events
+    if path:
+        df = layout_parquet(spark, path)
+        wm = event_watermark(spark, sf_dir)
+        if wm is not None:
+            # the derived day-partition conjunct must apply BEFORE the
+            # projection drops event_day_p — Spark prunes hive
+            # directories from partition-column predicates only
+            df = df.filter(F.col("event_day_p") >= wm[:10])
+        df = df.select(*_EVENT_COLS)
+    else:
+        df = table(spark, sf_dir, "events")
+    return apply_event_watermark(spark, sf_dir, df)
+
 # ---------------------------------------------------------------------------
-# The logical query spec.
+# The logical query specs.
 # ---------------------------------------------------------------------------
 
 
@@ -239,10 +317,10 @@ class AggCall:
 class AggQuery:
     """A grouped-aggregate query over the lineitem star, in logical
     form. ``group_by``/filter columns may be lineitem-local attributes
-    or star-reachable dimension attributes (any key of ``DIM_ATTRS``);
-    the router (or the raw fallback) supplies whatever joins the
-    attributes need. Results are ordered by the grouping key (the
-    engine's §2.4 total-order contract).
+    or attributes of the arms the spec declares; the router (or the
+    raw fallback) supplies whatever joins they need. Results are
+    ordered by the grouping key (the engine's §2.4 total-order
+    contract).
 
     ``truncs`` declares derived time-grain grouping keys: each
     ``(alias, unit, source_col)`` computes ``date_trunc(unit,
@@ -259,35 +337,21 @@ class AggQuery:
     every raw row maps to exactly one stored group (DISTINCT over raw
     rows ≡ DISTINCT over the projection of stored group keys).
 
-    ``chain`` declares how far down the dimension chain (orders →
-    customer → nation → region) the query JOINS: 0 = bare lineitem,
-    4 = the full star. ``None`` means "the minimal chain that reaches
-    every referenced dimension attribute" — the common case. An
-    EXPLICIT chain deeper than the minimal one is semantically
-    meaningful: each inner join may drop fact rows with no matching
-    dimension row, and the router never assumes foreign-key integrity,
-    so ``SUM(revenue)`` over the declared 5-table join is a different
-    query than over bare lineitem. The SQL front door sets it from the
-    statement's actual join list (normalized to None when minimal, so
-    specs compare structurally).
-
-    ``part`` declares the SECOND dimension arm: ``lineitem ⋈ part ON
-    l_partkey = p_partkey``. It composes with any chain depth (the two
-    arms join on independent keys). Part attributes (``PART_ATTRS``)
-    become legal grouping/filter/COUNT(DISTINCT) columns when True;
-    like the chain, the inner join itself is semantically load-bearing
-    (drops lineitems with no matching part — never assumed away), so
-    a part=True spec with no part attribute referenced still joins.
-    ``supp`` declares the supplier arm (``lineitem ⋈ supplier ON
-    l_suppkey = s_suppkey``, attributes ``SUPP_ATTRS``) identically —
-    all three arms join on independent fact keys and compose.
-
-    ``table`` and ``dims`` are constants, not fields: they let the
-    shared projection code (:class:`Projection`) read a star spec the
-    way it reads a corpus ``TableAggQuery``."""
+    ``chain``, ``part`` and ``supp`` declare the arm set
+    (:meth:`arms`): ``chain`` counts how far down the order chain
+    (orders → customer → nation → region) the query JOINS, ``None``
+    meaning "the minimal chain that reaches every referenced
+    attribute" — the common case; ``part``/``supp`` declare the part
+    and supplier arms. A declared join is semantically meaningful
+    whether or not its attributes are used: each inner join may drop
+    fact rows with no matching dimension row, and the router never
+    assumes foreign-key integrity, so ``SUM(revenue)`` over the
+    declared 5-table join is a different query than over bare
+    lineitem. The SQL front door sets the fields from the statement's
+    actual join list (:meth:`of`; a minimal chain stays None, so
+    specs compare structurally)."""
 
     table: ClassVar[str] = "lineitem"
-    dims: ClassVar[tuple[str, ...]] = ()
 
     filters: tuple  # of Pred | BoolPred, implicitly conjoined
     group_by: tuple[str, ...]
@@ -303,92 +367,262 @@ class AggQuery:
         tm = {alias: col for alias, _unit, col in self.truncs}
         return {g: tm.get(g, g) for g in self.group_by}
 
+    def arms(self) -> tuple[str, ...]:
+        """The declared arm set, in model order."""
+        chain = minimal_chain(self) if self.chain is None else self.chain
+        return star_arms(chain, self.part, self.supp)
+
+    @staticmethod
+    def arm_fields(arms: Iterable[str]) -> dict:
+        """The spec fields that declare ``arms``."""
+        arms = set(arms)
+        return {
+            "chain": len(arms & set(_CHAIN)),
+            "part": "part" in arms,
+            "supp": "supplier" in arms,
+        }
+
+    @classmethod
+    def of(cls, table: str, arms, filters, group_by, aggs, truncs) -> AggQuery:
+        """The spec joining ``arms``, its chain normalized to None when
+        minimal."""
+        fields = cls.arm_fields(arms)
+        chain = fields.pop("chain")
+        spec = cls(filters, group_by, aggs, truncs, **fields)
+        return spec if minimal_chain(spec) == chain else dataclasses.replace(spec, chain=chain)
+
+
+@dataclass(frozen=True)
+class TableAggQuery:
+    """A grouped/global aggregate (or DISTINCT shape when ``aggs`` is
+    empty) over ONE corpus fact table. ``truncs`` declares derived
+    time-grain keys exactly like AggQuery. ``dims`` declares the arm
+    set: each a row-preserving registry arm of ``table``, so the
+    declared inner join attaches per-group constants of the fact's
+    join key."""
+
+    table: str
+    filters: tuple  # of Pred | BoolPred, implicitly conjoined
+    group_by: tuple[str, ...]
+    aggs: tuple[AggCall, ...]
+    truncs: tuple[tuple[str, str, str], ...] = ()
+    dims: tuple[str, ...] = ()
+
+    def group_sources(self) -> dict[str, str]:
+        tm = {alias: col for alias, _unit, col in self.truncs}
+        return {g: tm.get(g, g) for g in self.group_by}
+
+    def arms(self) -> tuple[str, ...]:
+        return self.dims
+
+    @staticmethod
+    def arm_fields(arms: Iterable[str]) -> dict:
+        return {"dims": tuple(arms)}
+
+    @classmethod
+    def of(cls, table: str, arms, filters, group_by, aggs, truncs) -> TableAggQuery:
+        return cls(table, filters, group_by, aggs, truncs, **cls.arm_fields(arms))
+
+
+@dataclass(frozen=True)
+class ScanQuery:
+    """A projection+filter query over lineitem rows (no aggregation).
+    The router picks the physical LAYOUT to scan; content is identical
+    whichever layout answers (clustering is sort order, not content).
+    Like every scan spec it validates as a spec whose projected
+    columns are its keys, with no arms, truncs or aggregates."""
+
+    table: ClassVar[str] = "lineitem"
+    truncs: ClassVar[tuple] = ()
+    aggs: ClassVar[tuple] = ()
+
+    columns: tuple[str, ...]
+    filters: tuple[Pred, ...]
+
+    def group_sources(self) -> dict[str, str]:
+        return {c: c for c in self.columns}
+
+    def arms(self) -> tuple[str, ...]:
+        return ()
+
+    @classmethod
+    def of(cls, table: str, columns, filters) -> ScanQuery:
+        return cls(columns, filters)
+
+
+@dataclass(frozen=True)
+class TableScanQuery:
+    """A projection+filter query over corpus-table rows (no
+    aggregation). The router picks the physical LAYOUT; content is
+    identical whichever layout answers. Filters may be Pred or
+    BoolPred trees (applied row-level either way); only TOP-LEVEL
+    plain Preds participate in layout selection and bound derivation."""
+
+    truncs: ClassVar[tuple] = ()
+    aggs: ClassVar[tuple] = ()
+
+    table: str
+    columns: tuple[str, ...]
+    filters: tuple  # of Pred | BoolPred, implicitly conjoined
+
+    group_sources = ScanQuery.group_sources
+    arms = ScanQuery.arms
+
+    @classmethod
+    def of(cls, table: str, columns, filters) -> TableScanQuery:
+        return cls(table, columns, filters)
+
 
 def apply_truncs(
-    df: DataFrame, q: AggQuery, sources: frozenset[str] | None = None
+    df: DataFrame, q, sources: frozenset[str] | None = None
 ) -> DataFrame:
     """Materialize the query's derived time-grain keys — all of them,
-    or (on the raw star path, where lineitem-sourced keys must exist
-    BELOW the partial aggregation and order-sourced keys only exist
-    after the dimension join) just those whose source is in
-    ``sources``."""
+    or (on the raw path, where fact-sourced keys must exist BELOW the
+    partial aggregation and arm-sourced keys only exist after the arm
+    join) just those whose source is in ``sources``."""
     for alias, unit, col in q.truncs:
         if sources is None or col in sources:
             df = df.withColumn(alias, F.date_trunc(unit, F.col(col)))
     return df
 
 
-def _used_cols(q: AggQuery) -> set[str]:
-    """Every base-table column the query touches: grouping sources
-    (through trunc aliases), all filter columns, and COUNT(DISTINCT)
-    target columns (the one aggregate whose input is an attribute, so
-    it participates in chain/coverage reasoning like a group key)."""
+def _used_cols(q) -> set[str]:
+    """Every column the query touches: grouping sources (through
+    trunc aliases), all filter columns, COUNT(DISTINCT)/approx targets
+    (the aggregates whose input is an attribute, so they take part in
+    reach and coverage reasoning like a group key), and each
+    aggregated measure's source column."""
+    t = FACT_TABLES.get(q.table)
     used = set(q.group_sources().values())
     for f in q.filters:
         used |= f.cols()
     for a in q.aggs:
-        if a.fn in ("count_distinct", "approx_distinct") and a.measure:
-            used.add(a.measure)
-        elif a.measure and a.measure in MEASURES:
-            src = MEASURES[a.measure].source_col
-            if src and MEASURES[a.measure].home != "fact":
-                used.add(src)
+        if a.fn in ("count_distinct", "approx_distinct"):
+            if a.measure:
+                used.add(a.measure)
+        elif t and a.measure in t.measures and t.measures[a.measure].source_col:
+            used.add(t.measures[a.measure].source_col)
     return used
 
 
 def minimal_chain(q: AggQuery) -> int:
-    """The shallowest dimension chain that reaches every referenced
-    attribute (0 when the query is lineitem-local)."""
+    """The shallowest order chain that reaches every referenced
+    attribute (0 when the query needs no order-chain arm)."""
     return max((DIM_ATTRS.get(c, 0) for c in _used_cols(q)), default=0)
 
 
-def effective_chain(q: AggQuery) -> int:
-    """The chain the query's PLAN must join: the declared chain, or
-    the minimal one when undeclared. A declared chain shallower than
-    an attribute it references is a contradiction."""
-    need = minimal_chain(q)
-    if q.chain is None:
-        return need
-    if q.chain < need:
-        raise ValueError(
-            f"declared join chain {q.chain} cannot reach all referenced "
-            f"dimension attributes (need {need})"
-        )
-    return q.chain
-
-
 # ---------------------------------------------------------------------------
-# The semantic model: measures of the lineitem fact.
+# The table model: measures, fact tables and their arms.
 # ---------------------------------------------------------------------------
 
 
 @dataclass(frozen=True)
 class Measure:
-    """A measure of a fact table (the lineitem star's here, the corpus
-    tables' in plans/corpus_routing.py): its raw int64 expression (the
-    SAME arithmetic everywhere — query time in the raw plan, deploy time
-    in the projections), the divisor back to the measure's unit (10^k
-    for fixed-point money, read back as DOUBLE; 1 for an integer
-    measure, whose sums stay exact BIGINT), and the source column whose
-    non-null count backs COUNT/AVG (None for derived products, which
-    have no single source column)."""
+    """A measure of a fact table: its raw int64 expression (the SAME
+    arithmetic everywhere — query time in the raw plan, deploy time in
+    the projections), the divisor back to the measure's unit (10^k for
+    fixed-point money, read back as DOUBLE; 1 for an integer measure,
+    whose sums stay exact BIGINT), and the source column whose non-null
+    count backs COUNT/AVG (None for derived products, which have no
+    single source column). A measure whose source column lives on an
+    arm only exists after that arm's join, so it forces the row-level
+    plan and computes post-join; SQL semantics are the JOIN's (an
+    order-level SUM(o_totalprice) is weighted by lineitem
+    multiplicity, exactly what the statement says)."""
 
     name: str
     raw_int: Callable[[], Column]
     divisor: int
     source_col: str | None
-    # which side of the join provides the measure's input columns:
-    # "fact" measures compute in the fused pre-projection below any
-    # partial aggregation; lineitem arm measures ("order"/"part"/
-    # "supp") only exist after their join, so they force the row-level
-    # plan and compute post-join. SQL semantics are the JOIN's: an
-    # order-level SUM(o_totalprice) is weighted by lineitem
-    # multiplicity, exactly what the statement says.
-    home: str = "fact"
     # the column of the bucketed lineitem layout that stores raw_int()
     # at rest (sources/bucketed.py _lineitem_with_derived); the spine
     # plan and the user-view build read it instead of recomputing
     derived: str | None = None
+
+
+@dataclass(frozen=True)
+class Arm:
+    """A dimension table of a fact table's model, joined INNER on
+    ``parent``'s ``parent_key`` == its ``dim_key``; ``parent`` is the
+    fact or another arm. ``attrs`` are the columns it exposes (its
+    join keys are not among them) and ``open`` reads it.
+
+    ``strategy`` is the query-time join strategy as data: "broadcast"
+    (registry- or KB-sized sides), "shuffle_hash" (the orders arm:
+    bucket-aligned with the fact, its per-task hash side is one
+    bucket), or None (Catalyst/AQE decide: the part and supplier arms
+    flip between broadcast and shuffle with scale).
+
+    ``row_preserving`` marks the engine's complete 1:1 registries
+    (sources/corpus_cubes.py keeps them complete over the fact's key
+    values, one row per key): their inner join neither drops nor
+    duplicates fact rows, so a cube storing the fact key answers their
+    attributes by joining its groups. Every other arm must match the
+    cube's build exactly. ``view_cols`` is a registry's column order,
+    which the engine's dim-view bookkeeping compares
+    (Engine._ensure_dim_views)."""
+
+    name: str
+    parent: str
+    parent_key: str
+    dim_key: str
+    attrs: frozenset[str]
+    open: Callable[[SparkSession, str], DataFrame]
+    strategy: str | None = None
+    row_preserving: bool = False
+    view_cols: tuple[str, ...] = ()
+
+    @property
+    def fact_key(self) -> str:
+        """The fact column a registry arm joins on (its parent is the
+        fact)."""
+        return self.parent_key
+
+
+@dataclass(frozen=True)
+class FactTable:
+    """One routable fact table, declared as data: its actual column set
+    (unknown references refuse in :func:`validate`, never an
+    AnalysisException at plan time), its measures, the timestamp
+    columns (its own or its arms') that may source date_trunc keys, its
+    arms in model order (parents before children), its CURRENT
+    relation, and the spec types the SQL front door builds for it."""
+
+    name: str
+    columns: frozenset[str]
+    measures: dict[str, Measure]
+    ts_cols: frozenset[str]
+    arms: dict[str, Arm]
+    current: Callable[[SparkSession, str], DataFrame]
+    agg_spec: type
+    scan_spec: type
+
+    def owner(self, col: str) -> Arm | None:
+        """The arm exposing ``col`` (None for a fact column)."""
+        return next((a for a in self.arms.values() if col in a.attrs), None)
+
+    def lineage(self, name: str) -> tuple[str, ...]:
+        """The arms from the fact down to arm ``name``, in join order."""
+        out = [name]
+        while self.arms[out[0]].parent != self.name:
+            out.insert(0, self.arms[out[0]].parent)
+        return tuple(out)
+
+    def home(self, col: str) -> str | None:
+        """The top-level arm whose join carries ``col`` (None for a
+        fact column)."""
+        a = self.owner(col)
+        return self.lineage(a.name)[0] if a else None
+
+    def reach(self, cols: Iterable[str]) -> tuple[str, ...]:
+        """The arms, in model order, a plan joins to reach every column
+        of ``cols``: each column's arm and that arm's ancestors."""
+        need = {n for c in cols if (a := self.owner(c)) for n in self.lineage(a.name)}
+        return tuple(n for n in self.arms if n in need)
+
+    def local(self, m: Measure) -> bool:
+        """Whether ``m`` computes from fact columns alone."""
+        return m.source_col is None or m.source_col in self.columns
 
 
 def _rev() -> Column:
@@ -407,58 +641,248 @@ MEASURES: dict[str, Measure] = {
         Measure("revenue", _rev, 10_000, None, derived="l_rev_i"),
         Measure("charge", lambda: _rev() * (100 + cents("l_tax")), 1_000_000,
                 None, derived="l_charge_i"),
-        Measure("order_total", lambda: cents("o_totalprice"), 100,
-                "o_totalprice", home="order"),
-        Measure("cust_acctbal", lambda: cents("c_acctbal"), 100,
-                "c_acctbal", home="order"),
-        Measure("part_retail", lambda: cents("p_retailprice"), 100,
-                "p_retailprice", home="part"),
-        Measure("supp_acctbal", lambda: cents("s_acctbal"), 100,
-                "s_acctbal", home="supp"),
+        Measure("order_total", lambda: cents("o_totalprice"), 100, "o_totalprice"),
+        Measure("cust_acctbal", lambda: cents("c_acctbal"), 100, "c_acctbal"),
+        Measure("part_retail", lambda: cents("p_retailprice"), 100, "p_retailprice"),
+        Measure("supp_acctbal", lambda: cents("s_acctbal"), 100, "s_acctbal"),
     )
 }
 
-# Columns of the lineitem fact itself (grouping/filter domain of the
-# chain-0 shapes; the SQL front door shares this set). This is the
-# corpus's ACTUAL schema — listing columns the table doesn't have
-# would let a spec parse and then die with an AnalysisException at
-# plan time instead of the clean UnsupportedSQL/ValueError refusal.
-LINEITEM_COLS = frozenset(
-    {
-        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-        "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
-        "l_linestatus", "l_shipdate",
-    }
+
+def _opener(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    return lambda spark, sf_dir: table(spark, sf_dir, name)
+
+
+def _open_registry(deploy: Callable[[SparkSession, str], str]):
+    """An engine registry's opener: its current deployed version."""
+
+    def _open(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ..sources.snapshots import versioned_parquet
+
+        return versioned_parquet(spark, deploy(spark, sf_dir))
+
+    return _open
+
+
+LINEITEM = FactTable(
+    name="lineitem",
+    # the fixture's ACTUAL schema — listing columns the table doesn't
+    # have would let a spec validate and then die with an
+    # AnalysisException at plan time
+    columns=frozenset(
+        {
+            "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+            "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
+            "l_linestatus", "l_shipdate",
+        }
+    ),
+    measures=MEASURES,
+    ts_cols=frozenset({"l_shipdate", "o_orderdate"}),
+    arms={
+        a.name: a
+        for a in (
+            # orders come from the MAINTAINED relation so post-ingest
+            # raw plans see the corpus the projections describe
+            Arm("orders", "lineitem", "l_orderkey", "o_orderkey",
+                frozenset({"o_orderstatus", "o_orderpriority", "o_orderdate",
+                           "o_totalprice"}),
+                current_orders, "shuffle_hash"),
+            # customer/nation/region broadcast: each orders of magnitude
+            # smaller than the fact side
+            Arm("customer", "orders", "o_custkey", "c_custkey",
+                frozenset({"c_mktsegment", "c_acctbal"}), _opener("customer"),
+                "broadcast"),
+            Arm("nation", "customer", "c_nationkey", "n_nationkey",
+                frozenset({"n_name"}), _opener("nation"), "broadcast"),
+            Arm("region", "nation", "n_regionkey", "r_regionkey",
+                frozenset({"r_name"}), _opener("region"), "broadcast"),
+            # no hint on part/supplier: AQE picks broadcast while the
+            # (filtered) side fits and shuffles past that — measured at
+            # sf5 on the part arm: broadcast 0.96 s / shuffle 1.44 s for
+            # the row-level form, and the right choice flips with scale
+            Arm("part", "lineitem", "l_partkey", "p_partkey",
+                frozenset({"p_name", "p_brand", "p_type", "p_size",
+                           "p_retailprice"}),
+                _opener("part")),
+            # s_nationkey is deliberately NOT exposed: a supplier→nation
+            # arm would make n_name reachable by two join paths
+            # (customer-nation vs supplier-nation) with different
+            # semantics — an ambiguity the matcher must not paper over
+            Arm("supplier", "lineitem", "l_suppkey", "s_suppkey",
+                frozenset({"s_name", "s_acctbal"}), _opener("supplier")),
+        )
+    },
+    current=current_lineitem,
+    agg_spec=AggQuery,
+    scan_spec=ScanQuery,
 )
 
-# Attributes that live on the dimension arm, keyed by the minimal
-# chain depth that reaches them (1 = orders, 2 = customer, 3 = nation,
-# 4 = region). Using one in group_by/filters makes the raw fallback
-# join the chain at least that deep.
-DIM_ATTRS: dict[str, int] = {
-    "o_orderstatus": 1,
-    "o_orderpriority": 1,
-    "o_orderdate": 1,
-    "o_totalprice": 1,
-    "c_mktsegment": 2,
-    "c_acctbal": 2,
-    "n_name": 3,
-    "r_name": 4,
+FACT_TABLES: dict[str, FactTable] = {
+    t.name: t
+    for t in (
+        LINEITEM,
+        FactTable(
+            name="documents",
+            columns=frozenset(_DOC_COLS),
+            measures={
+                m.name: m
+                for m in (
+                    Measure("chars", lambda: F.col("n_chars"), 1, "n_chars"),
+                    Measure("tokens", doc_token_count, 1, "text"),
+                    Measure("stopwords", doc_stopword_count, 1, "text"),
+                )
+            },
+            ts_cols=frozenset(),
+            arms={
+                "sources": Arm(
+                    "sources", "documents", "source", "src_id",
+                    frozenset({"s_kind", "s_tier"}),
+                    _open_registry(sources_dim_table),
+                    "broadcast", row_preserving=True,
+                    view_cols=("src_id", "s_kind", "s_tier"),
+                ),
+            },
+            current=current_documents,
+            agg_spec=TableAggQuery,
+            scan_spec=TableScanQuery,
+        ),
+        FactTable(
+            name="events",
+            columns=frozenset(_EVENT_COLS),
+            measures={"value": Measure("value", lambda: cents("value"), 100, "value")},
+            ts_cols=frozenset({"ts"}),
+            # the events star's registry arm: the hourly cube stores
+            # event_type, so taxonomy groupings fold onto it the same
+            # way sources attrs fold onto the docs cube
+            arms={
+                "event_types": Arm(
+                    "event_types", "events", "event_type", "et_id",
+                    frozenset({"e_category"}),
+                    _open_registry(event_types_dim_table),
+                    "broadcast", row_preserving=True,
+                    view_cols=("et_id", "e_category"),
+                ),
+            },
+            current=current_events,
+            agg_spec=TableAggQuery,
+            scan_spec=TableScanQuery,
+        ),
+    )
 }
-STAR_ATTRS = frozenset(DIM_ATTRS)
 
-# Attributes of the part arm (lineitem ⋈ part on l_partkey); usable
-# in group_by/filters/COUNT(DISTINCT) when the spec declares part=True.
-PART_ATTRS = frozenset(
-    {"p_name", "p_brand", "p_type", "p_size", "p_retailprice"}
-)
+# The order chain, as AggQuery.chain counts it.
+_CHAIN = LINEITEM.lineage("region")
 
-# Attributes of the supplier arm (lineitem ⋈ supplier on l_suppkey).
-# s_nationkey is deliberately NOT exposed: extending this arm to
-# nation would make n_name reachable by two different join paths
-# (customer-nation vs supplier-nation) with different semantics — an
-# ambiguity the structural matcher must not paper over.
-SUPP_ATTRS = frozenset({"s_name", "s_acctbal"})
+
+def star_arms(chain: int, part: bool = False, supp: bool = False) -> tuple[str, ...]:
+    """The lineitem arm set of a chain depth and the part/supplier
+    flags, in model order."""
+    return _CHAIN[:chain] + ("part",) * part + ("supplier",) * supp
+
+
+# Names derived from the model, for callers that read the lineitem
+# star's column sets: the fact's columns, each order-chain attribute
+# keyed by the chain depth that reaches it, the part and supplier
+# attributes.
+LINEITEM_COLS = LINEITEM.columns
+DIM_ATTRS: dict[str, int] = {
+    c: len(LINEITEM.lineage(n)) for n in _CHAIN for c in LINEITEM.arms[n].attrs
+}
+PART_ATTRS = LINEITEM.arms["part"].attrs
+SUPP_ATTRS = LINEITEM.arms["supplier"].attrs
+
+# Units whose truncation Spark and DuckDB agree on ('week' differs:
+# ISO vs locale conventions), all hour or coarser — so a stored hour
+# key re-aggregates every one exactly:
+# date_trunc(u, date_trunc('hour', ts)) == date_trunc(u, ts).
+TRUNC_UNITS = frozenset({"hour", "day", "month", "quarter", "year"})
+# plain range predicates: the conjuncts the scan routers choose
+# clustered layouts from
+_RANGE_OPS = frozenset({"<=", "<", ">=", ">", "=", "between", "in"})
+
+
+def validate(q) -> FactTable:
+    """Structural validation of any spec against its table's model;
+    raises ValueError (the router's refusal currency) on anything
+    outside it: an unknown table, arm or measure, a trunc over a
+    non-timestamp column or an unsupported unit, a column the table
+    and its declared arms do not have. Called once, at each router's
+    entry."""
+    t = FACT_TABLES.get(q.table)
+    if t is None:
+        raise ValueError(f"unknown corpus table {q.table!r}")
+    arms = q.arms()
+    for name in arms:
+        if name not in t.arms:
+            raise ValueError(f"dim {name!r} does not join table {q.table!r}")
+    for _alias, unit, col in q.truncs:
+        if col not in t.ts_cols:
+            raise ValueError(f"date_trunc over non-timestamp column {col!r}")
+        if unit not in TRUNC_UNITS:
+            raise ValueError(f"unsupported trunc unit {unit!r}")
+    reachable = t.columns.union(*(t.arms[n].attrs for n in arms))
+    for c in sorted(_used_cols(q) - reachable):
+        a = t.owner(c)
+        if a is None:
+            raise ValueError(f"unknown column {c!r} on table {q.table!r}")
+        raise ValueError(
+            f"column {c!r} is unknown without the {a.name} join, which "
+            "the declared joins cannot reach"
+        )
+    for a in q.aggs:
+        if a.fn not in ("count_star", "count_distinct", "approx_distinct") and (
+            a.measure not in t.measures
+        ):
+            raise ValueError(f"unknown measure {a.measure!r} on {q.table!r}")
+    return t
+
+
+def _hinted(df: DataFrame, strategy: str | None, hash_hints: bool) -> DataFrame:
+    if strategy == "broadcast":
+        return F.broadcast(df)
+    if strategy == "shuffle_hash" and hash_hints:
+        return df.hint("shuffle_hash")
+    return df
+
+
+def join_arms(
+    spark: SparkSession,
+    sf_dir: str,
+    df: DataFrame,
+    t: FactTable,
+    arms: Iterable[str],
+    cols: Iterable[str],
+    opened: Mapping[str, DataFrame] | None = None,
+    hash_hints: bool = True,
+) -> DataFrame:
+    """``df`` (rows carrying the fact's join keys) INNER-joined to each
+    declared top-level arm of ``t``, in model order. Each arm's side
+    is the arm (``opened`` overrides its frame) with its declared
+    descendants joined onto it in model order, projected to its key
+    and the columns of ``cols`` its subtree carries; every join uses
+    the joined arm's strategy. ``hash_hints=False`` drops the
+    shuffle_hash hint: a per-task hash relation cannot spill, so the
+    deploy and refresh builds join sort-merge (measured on the segment
+    cube at sf20 — sources/bucketed.py)."""
+    arms = set(arms)
+    cols = list(cols)
+    opened = opened or {}
+    for a in t.arms.values():
+        if a.parent != t.name or a.name not in arms:
+            continue
+        side = opened[a.name] if a.name in opened else a.open(spark, sf_dir)
+        for d in t.arms.values():
+            if d is not a and d.name in arms and t.lineage(d.name)[0] == a.name:
+                dim = d.open(spark, sf_dir)
+                side = side.join(
+                    _hinted(dim, d.strategy, hash_hints),
+                    F.col(d.parent_key) == dim[d.dim_key],
+                )
+        side = side.select(a.dim_key, *[c for c in cols if t.home(c) == a.name])
+        df = df.join(
+            _hinted(side, a.strategy, hash_hints), F.col(a.parent_key) == side[a.dim_key]
+        )
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -598,9 +1022,6 @@ def _distinct(df: DataFrame, q) -> DataFrame:
 # and between are sub-grain and never fold.
 _HOUR_BOUNDARY = re.compile(r"^\d{4}-\d{2}-\d{2} \d{2}:00:00$")
 _TS_FOLD_OPS = frozenset({">=", "<"})
-# grains a stored hour key re-aggregates exactly:
-# date_trunc(u, date_trunc('hour', ts)) == date_trunc(u, ts)
-_HOUR_OR_COARSER = frozenset({"hour", "day", "month", "quarter", "year"})
 
 
 def _ts_pred_folds(p: Pred) -> bool:
@@ -612,15 +1033,21 @@ def _ts_pred_folds(p: Pred) -> bool:
     )
 
 
+def _joined(t: FactTable, arms: Iterable[str]) -> frozenset[str]:
+    """The arms of ``arms`` that may change the row population (every
+    arm but the row-preserving registries)."""
+    return frozenset(n for n in arms if not t.arms[n].row_preserving)
+
+
 @dataclass(frozen=True)
 class Projection:
     """One deployed cube the router may answer from, over ``table``:
     the group keys it stores (grouping/filter domain), its stored
     measure partials, its COUNT(*) column, and how to open it. Catalog
     ORDER steers among cubes that all subsume a query: earlier claims
-    first. Every difference between the lineitem star and the corpus
-    tables is a field here, a field of the query spec, or a measure
-    field (docs/DECISIONS.md)."""
+    first. Every difference between fact tables is a field here, a
+    field of the query spec, a measure field or the table model
+    (docs/DECISIONS.md)."""
 
     name: str
     table: str
@@ -636,46 +1063,36 @@ class Projection:
     # fold. The stored grain is hour everywhere — finer storage folds
     # strictly more queries while the row bound stays scale-invariant.
     time_key: tuple[str, str] | None = None
-    # the lineitem dimension chain the deploy-time build JOINED (None:
-    # no star build): the cube answers exactly the queries that declare
-    # (or minimally imply) the same chain — an inner join may drop
+    # the arms the deploy-time build JOINED: the cube answers exactly
+    # the queries declaring (or minimally implying) the same arms
+    # outside the row-preserving registries — an inner join may drop
     # orphan fact rows, and the router never assumes FK integrity, so
     # chain-2 and chain-4 specs are different queries even over
-    # identical attributes. Same honesty rule for the part/supplier
-    # arms: a star cube answers exactly the specs declaring the SAME
-    # arm set — never a superset or subset.
-    chain: int | None = None
-    part: bool = False
-    supp: bool = False
+    # identical attributes
+    arms: tuple[str, ...] = ()
 
-    def _foldable(self, q) -> frozenset[str]:
-        """The attributes this cube answers for ``q``: its stored keys,
-        plus the attributes of every declared corpus dim whose FACT KEY
-        it stores — the join attaches per-key-constant attributes onto
-        stored groups (joining groups == joining rows then grouping).
-        The engine keeps every CorpusDim complete and 1:1, so a
-        declared dim never changes the row population: one whose
+    def _foldable(self, t: FactTable, arms: tuple[str, ...]) -> frozenset[str]:
+        """The attributes this cube answers for a query declaring
+        ``arms``: its stored keys, plus the attributes of every
+        declared row-preserving arm whose FACT KEY it stores — the join
+        attaches per-key-constant attributes onto stored groups
+        (joining groups == joining rows then grouping); one whose
         attributes the query doesn't reference folds vacuously."""
-        if not q.dims:
-            return self.attrs
-        from .corpus_routing import CORPUS_DIMS
-
         out = set(self.attrs)
-        for name in q.dims:
-            d = CORPUS_DIMS[name]
-            if d.fact_key in self.attrs:
-                out |= d.attrs
+        for name in arms:
+            a = t.arms[name]
+            if a.row_preserving and a.parent_key in self.attrs:
+                out |= a.attrs
         return frozenset(out)
 
     def subsumes(self, q) -> bool:
         if q.table != self.table:
             return False
-        if self.chain is not None and (
-            (bool(q.part), bool(q.supp)) != (self.part, self.supp)
-            or effective_chain(q) != self.chain
-        ):
+        t = FACT_TABLES[q.table]
+        arms = q.arms()
+        if _joined(t, arms) != _joined(t, self.arms):
             return False
-        foldable = self._foldable(q)
+        foldable = self._foldable(t, arms)
         _time_col, ts_src = self.time_key or (None, None)
         units = {alias: unit for alias, unit, _c in q.truncs}
         # Trunc aliases resolve to their SOURCE attribute: storing the
@@ -685,7 +1102,7 @@ class Projection:
         # computes it exactly).
         for g, src in q.group_sources().items():
             if src not in foldable and not (
-                src == ts_src and units.get(g) in _HOUR_OR_COARSER
+                src == ts_src and units.get(g) in TRUNC_UNITS
             ):
                 return False
         # ANY boolean predicate tree folds exactly when every leaf is a
@@ -728,26 +1145,23 @@ class Projection:
 
     def build(self, spark: SparkSession, sf_dir: str, q) -> DataFrame:
         df = self.open(spark, sf_dir)
-        if q.dims:
-            # Declared dims attach BROADCAST onto the cube's groups
-            # (registry-sized at any corpus scale), exact because dim
-            # attrs are constants of the stored fact key; a dim whose
-            # referenced attributes the cube already STORES (a user view
-            # built through the dim) needs no join at all.
-            from .corpus_routing import CORPUS_DIMS
-
-            referenced = set(q.group_sources().values()) | {
-                a.measure for a in q.aggs if a.fn == "count_distinct"
-            }
-            for f in q.filters:
-                referenced |= f.cols()
-            for name in q.dims:
-                d = CORPUS_DIMS[name]
-                if (referenced & d.attrs) - self.attrs:
-                    dim = d.open(spark, sf_dir)
-                    df = df.join(
-                        F.broadcast(dim), F.col(d.fact_key) == dim[d.dim_key]
-                    )
+        # Declared row-preserving arms attach onto the cube's groups
+        # (registry-sized at any corpus scale), exact because their
+        # attrs are constants of the stored fact key; one whose
+        # referenced attributes the cube already STORES (a user view
+        # built through it) needs no join at all.
+        t = FACT_TABLES[q.table]
+        referenced = sorted(
+            set(q.group_sources().values())
+            | {a.measure for a in q.aggs if a.fn == "count_distinct"}
+            | {c for f in q.filters for c in f.cols()}
+        )
+        attach = [
+            n for n in q.arms()
+            if t.arms[n].row_preserving
+            and (set(referenced) & t.arms[n].attrs) - self.attrs
+        ]
+        df = join_arms(spark, sf_dir, df, t, attach, referenced)
         time_col, ts_src = self.time_key or (None, None)
         # Filters BEFORE truncs: WHERE is pre-projection in SQL, so a
         # trunc alias that shadows a filtered column must not be
@@ -829,7 +1243,6 @@ PROJECTIONS: tuple[Projection, ...] = (
         measures=_PRICING_PARTIALS,
         count_star_col="cnt",
         open=_open_pricing_cube,
-        chain=0,
     ),
     # The segment cube (round 7, the q10 answer): every pricing
     # measure keyed by the LOW-CARDINALITY per-order attributes x the
@@ -848,7 +1261,7 @@ PROJECTIONS: tuple[Projection, ...] = (
         measures=_PRICING_PARTIALS,
         count_star_col="cnt",
         open=_open_segment_cube,
-        chain=4,
+        arms=_CHAIN,
     ),
     # The star cube: every pricing measure (sums, counts, min/max
     # partials) keyed by (region, nation, returnflag, linestatus,
@@ -870,7 +1283,7 @@ PROJECTIONS: tuple[Projection, ...] = (
         measures=_PRICING_PARTIALS,
         count_star_col="cnt",
         open=_open_star_date_cube,
-        chain=4,
+        arms=_CHAIN,
         sketches={"l_suppkey": "supp_hll", "l_partkey": "part_hll"},
     ),
     # The rollup⋈denorm pair answers any FULL-chain star query over
@@ -891,188 +1304,100 @@ PROJECTIONS: tuple[Projection, ...] = (
         measures={"revenue": _StoredMeasure(MEASURES["revenue"], "rev_i", None)},
         count_star_col="n_items",
         open=_open_order_revenue_star,
-        chain=4,
+        arms=_CHAIN,
     ),
 )
 
 
 # ---------------------------------------------------------------------------
 # The raw fallback: the optimized plans q01/q26 established, built
-# generically from the same spec.
+# generically from the spec and its table's model.
 # ---------------------------------------------------------------------------
 
-
-def _split_filters(q: AggQuery) -> tuple[list, list, list]:
-    """Partition the conjuncts into lineitem-local, order-chain-side,
-    and part-side. A conjunct MIXING domains (e.g. ``l_quantity > 5 OR
-    r_name = 'ASIA'``) varies per lineitem row within an order, so it
-    can fold neither before the partial aggregation (needs the join)
-    nor after it (needs row-level values) — the partial-agg-below-join
-    plan cannot express it, and the router refuses rather than
-    silently joining row-level (callers fall back to spark.sql)."""
-    local, star, part, supp = [], [], [], []
-    for f in q.filters:
-        cols = f.cols()
-        if cols <= LINEITEM_COLS:
-            local.append(f)
-        elif cols <= STAR_ATTRS:
-            star.append(f)
-        elif cols <= PART_ATTRS:
-            part.append(f)
-        elif cols <= SUPP_ATTRS:
-            supp.append(f)
-        else:
-            raise ValueError(
-                "a predicate mixing columns of different tables is not "
-                "expressible in the partial-agg-below-join plan"
-            )
-    return local, star, part, supp
+_MIXED = (
+    "a predicate mixing columns of different tables is not expressible "
+    "in the partial-agg-below-join plan"
+)
 
 
-def _dim_arm(
-    spark: SparkSession, sf_dir: str, chain: int, attrs: list[str]
-) -> DataFrame:
-    """The dimension side of the star, joined ``chain`` tables deep
-    and projected to the order key plus the attributes the query
-    actually uses. customer/nation/region broadcast (each orders of
-    magnitude smaller than the fact side; at extreme scale customer
-    would graduate to a bucketed layout like orders — the denorm
-    projection already embodies that posture). Orders come from the
-    MAINTAINED relation so post-ingest raw plans see the same corpus
-    the projections describe."""
-    dims = current_orders(spark, sf_dir)
-    if chain >= 2:
-        c = table(spark, sf_dir, "customer")
-        dims = dims.join(F.broadcast(c), dims.o_custkey == c.c_custkey)
-    if chain >= 3:
-        n = table(spark, sf_dir, "nation")
-        dims = dims.join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
-    if chain >= 4:
-        r = table(spark, sf_dir, "region")
-        dims = dims.join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
-    return dims.select("o_orderkey", *attrs)
-
-
-def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
-    chain = effective_chain(q)
-    part, supp = q.part, q.supp
-    li = current_lineitem(spark, sf_dir)
-    local_filters, star_filters, part_filters, supp_filters = _split_filters(q)
-    for p in local_filters:
-        li = li.filter(p.column())
-    # Lineitem-sourced time-grain keys materialize below the partial
-    # aggregation; order-sourced ones (o_orderdate) only exist after
-    # the dimension join and are applied there.
-    li = apply_truncs(li, q, LINEITEM_COLS)
-    star_trunc_sources = frozenset(
-        {col for _a, _u, col in q.truncs if col not in LINEITEM_COLS}
-    )
-
-    sources = q.group_sources()
-    star_group = [g for g in q.group_by if sources[g] in DIM_ATTRS]
-    part_group = [g for g in q.group_by if sources[g] in PART_ATTRS]
-    supp_group = [g for g in q.group_by if sources[g] in SUPP_ATTRS]
-    local_group = [
-        g
-        for g in q.group_by
-        if sources[g] not in DIM_ATTRS
-        and sources[g] not in PART_ATTRS
-        and sources[g] not in SUPP_ATTRS
+def _split(
+    t: FactTable, q, local_cols: frozenset[str]
+) -> tuple[list, list, list, list[str], list[str], list[str]]:
+    """How ``q`` falls on the fact frame (``local_cols``) and the arms
+    joined onto it later: (fact-local conjuncts, single-arm conjuncts
+    in arm order, conjuncts MIXING tables, fact-side group keys,
+    fact-side distinct targets, the arm columns the joins must carry —
+    sorted). A mixed conjunct (e.g. ``l_quantity > 5 OR p_size < 5``)
+    varies per fact row, so it applies after the joins on a row-level
+    plan and cannot fold into a partial aggregate below them."""
+    homes = [
+        {None if c in local_cols else t.home(c) for c in f.cols()} for f in q.filters
     ]
-    for g in local_group:
-        if sources[g] not in LINEITEM_COLS and g not in {a for a, _u, _c in q.truncs}:
-            raise ValueError(f"unknown grouping attribute {g!r}")
-    # COUNT(DISTINCT) and approx_distinct targets: attribute inputs
-    # that must survive to the aggregation — fact-side ones ride the
-    # partial key / fused projection, dimension and part-side ones ride
-    # their joins. approx targets additionally force the ROW-LEVEL plan
-    # (their sketch is computed over raw rows; the cube path is where
-    # pre-aggregated sketches live).
-    approx_cols = sorted(
-        {a.measure for a in q.aggs if a.fn == "approx_distinct"}
-    )
+    local = [f for f, h in zip(q.filters, homes) if h == {None}]
+    on_arm = [
+        f for a in t.arms for f, h in zip(q.filters, homes) if h == {a}
+    ]
+    mixed = [f for f, h in zip(q.filters, homes) if len(h) > 1]
+    sources = q.group_sources()
+    local_group = [g for g in q.group_by if sources[g] in local_cols]
     cd_cols = sorted(
-        {a.measure for a in q.aggs if a.fn == "count_distinct"}
-        | set(approx_cols)
+        {a.measure for a in q.aggs if a.fn in ("count_distinct", "approx_distinct")}
     )
-    cd_local = [c for c in cd_cols if c in LINEITEM_COLS]
-    cd_star = [c for c in cd_cols if c in DIM_ATTRS]
-    cd_part = [c for c in cd_cols if c in PART_ATTRS]
-    cd_supp = [c for c in cd_cols if c in SUPP_ATTRS]
-    for c in cd_cols:
-        if (
-            c not in LINEITEM_COLS
-            and c not in DIM_ATTRS
-            and c not in PART_ATTRS
-            and c not in SUPP_ATTRS
-        ):
-            raise ValueError(f"unknown COUNT(DISTINCT) column {c!r}")
-    if not part and (part_group or part_filters or cd_part):
-        raise ValueError("part attributes referenced without the part join")
-    if not supp and (supp_group or supp_filters or cd_supp):
-        raise ValueError(
-            "supplier attributes referenced without the supplier join"
-        )
-    # Attributes each arm's join must carry: grouping sources, that
-    # side's filter columns, trunc sources, distinct targets.
-    dim_attrs = sorted(
-        ({sources[g] for g in star_group} | set(star_trunc_sources))
-        | {c for f in star_filters for c in f.cols()}
-        | set(cd_star)
+    cd_local = [c for c in cd_cols if c in local_cols]
+    carried = sorted(_used_cols(q) - local_cols)
+    return local, on_arm, mixed, local_group, cd_local, carried
+
+
+def _raw_plan(spark: SparkSession, sf_dir: str, q) -> DataFrame:
+    """The raw-table plan of any fact table's spec: fact-local filters
+    and time-grain keys, then the fused pre-projection (each fact
+    measure's fixed-point expression computed once per row — q01's
+    measured win), then one of three shapes — no arms: the q01 shape;
+    one shuffle-hash arm (the order chain) and no arm measure or
+    sketch: the partial aggregate below the join; otherwise the
+    row-level arm joins.
+
+    Row-preserving arms (the registries) join first: each adds per-row
+    constants of the fact key and keeps the row set, so the plan reads
+    their attributes as fact columns."""
+    t = FACT_TABLES[q.table]
+    declared = q.arms()
+    rp = [n for n in declared if t.arms[n].row_preserving]
+    arms = [n for n in declared if n not in rp]
+    local_cols = t.columns.union(*(t.arms[n].attrs for n in rp))
+    local_filters, arm_filters, mixed, local_group, cd_local, carried = _split(
+        t, q, local_cols
     )
-    part_attrs = sorted(
-        {sources[g] for g in part_group}
-        | {c for f in part_filters for c in f.cols()}
-        | set(cd_part)
+    df = join_arms(
+        spark, sf_dir, t.current(spark, sf_dir), t, rp,
+        sorted(_used_cols(q) & local_cols),
     )
-    supp_attrs = sorted(
-        {sources[g] for g in supp_group}
-        | {c for f in supp_filters for c in f.cols()}
-        | set(cd_supp)
-    )
-    # the partial aggregation keys on each declared arm's join key
-    join_keys = (
-        (["l_orderkey"] if chain else [])
-        + (["l_partkey"] if part else [])
-        + (["l_suppkey"] if supp else [])
-    )
+    for p in local_filters:
+        df = df.filter(p.column())
+    # Fact-sourced time-grain keys materialize below the partial
+    # aggregation; arm-sourced ones (o_orderdate) only exist after the
+    # arm join and are applied there.
+    df = apply_truncs(df, q, local_cols)
+    top = [a for a in t.arms.values() if a.parent == t.name and a.name in arms]
+    join_keys = [a.parent_key for a in top]
+    # the fact columns a mixed conjunct reads ride to its filter
+    mixed_cols = sorted({c for f in mixed for c in f.cols()} & local_cols)
 
     def _attach_arms(df: DataFrame) -> DataFrame:
-        """Join the declared arms onto per-key partial rows, apply the
-        arm-side filters, and materialize order-sourced trunc keys."""
-        if chain:
-            dims = _dim_arm(spark, sf_dir, chain, dim_attrs)
-            df = df.join(
-                dims.hint("shuffle_hash"), F.col("l_orderkey") == dims.o_orderkey
-            )
-        if part:
-            # no join hint: Catalyst/AQE picks broadcast while the
-            # (filtered) part side fits and shuffles past that —
-            # measured at sf5: broadcast 0.96 s / shuffle 1.44 s for
-            # the row-level form, and the right choice flips with
-            # scale, which is exactly what AQE decides at runtime
-            pa = table(spark, sf_dir, "part").select("p_partkey", *part_attrs)
-            df = df.join(pa, F.col("l_partkey") == pa.p_partkey)
-        if supp:
-            su = table(spark, sf_dir, "supplier").select(
-                "s_suppkey", *supp_attrs
-            )
-            df = df.join(su, F.col("l_suppkey") == su.s_suppkey)
-        for pr in star_filters:
-            df = df.filter(pr.column())
-        for pr in part_filters:
-            df = df.filter(pr.column())
-        for pr in supp_filters:
-            df = df.filter(pr.column())
-        return apply_truncs(df, q, star_trunc_sources)
+        """Join the declared arms, apply the arm-side and mixed
+        conjuncts, and materialize arm-sourced trunc keys."""
+        df = join_arms(spark, sf_dir, df, t, arms, carried)
+        for p in arm_filters + mixed:
+            df = df.filter(p.column())
+        return apply_truncs(df, q, frozenset(carried))
 
     if not q.aggs:
         # DISTINCT shape. Below the joins the distinct key combinations
         # collapse to one row per (join keys, local keys) — the same
         # shuffle-shrinking idea as the partial aggregation.
         if not join_keys:
-            return _distinct(li, q)
-        pre = li.select(*dict.fromkeys(local_group + join_keys)).distinct()
+            return _distinct(df, q)
+        pre = df.select(*dict.fromkeys(local_group + join_keys + mixed_cols)).distinct()
         return _distinct(_attach_arms(pre), q)
 
     needed = sorted(
@@ -1082,87 +1407,65 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
             if a.measure and a.fn not in ("count_distinct", "approx_distinct")
         }
     )
-    li_measures = [m for m in needed if MEASURES[m].home == "fact"]
-    arm_measures = [m for m in needed if MEASURES[m].home != "fact"]
-    for m in arm_measures:
-        home = MEASURES[m].home
-        if home == "part" and not part:
-            raise ValueError(f"measure {m!r} needs the part join")
-        if home == "supp" and not supp:
-            raise ValueError(f"measure {m!r} needs the supplier join")
-        # order-home measures: chain reach already enforced through
-        # effective_chain (the source column rides _used_cols)
-    # arm measure sources ride their arm's attribute projection
-    dim_attrs = sorted(
-        set(dim_attrs)
-        | {MEASURES[m].source_col for m in arm_measures if MEASURES[m].home == "order"}
-    )
-    part_attrs = sorted(
-        set(part_attrs)
-        | {MEASURES[m].source_col for m in arm_measures if MEASURES[m].home == "part"}
-    )
-    supp_attrs = sorted(
-        set(supp_attrs)
-        | {MEASURES[m].source_col for m in arm_measures if MEASURES[m].home == "supp"}
-    )
+    fact_ms = [m for m in needed if t.measures[m].source_col not in carried]
+    arm_ms = [m for m in needed if m not in fact_ms]
     int_cols = {m: f"__{m}_i" for m in needed}
     cnt_cols = {
-        m: MEASURES[m].source_col
+        m: t.measures[m].source_col
         for m in needed
         if any(a.fn in ("count", "avg") and a.measure == m for a in q.aggs)
     }
-    min_ms = sorted({a.measure for a in q.aggs if a.fn == "min"})
-    max_ms = sorted({a.measure for a in q.aggs if a.fn == "max"})
-
-    # Fused pre-projection: each lineitem measure's fixed-point
-    # expression is computed once per row (q01's measured win), plus
-    # the grouping columns and any count-source / distinct-target
-    # columns. Arm-home measures only exist after their join and
-    # compute there.
-    # dict.fromkeys: order-stable dedup (a grouping column may double
-    # as a COUNT source column; selecting it twice would be an error)
-    keep = list(
-        dict.fromkeys(
-            local_group
-            + join_keys
-            + sorted(
-                c
-                for m, c in cnt_cols.items()
-                if c and MEASURES[m].home == "fact"
-            )
-            + cd_local
-        )
+    # Fused pre-projection: the grouping columns, the join keys, any
+    # count-source / distinct-target columns, and each fact measure's
+    # int64 expression. Arm measures only exist after their join and
+    # compute there. dict.fromkeys: order-stable dedup (a grouping
+    # column may double as a COUNT source column).
+    keep = dict.fromkeys(
+        local_group
+        + join_keys
+        + sorted(c for m, c in cnt_cols.items() if c and m in fact_ms)
+        + cd_local
+        + mixed_cols
     )
-    pre = li.select(
-        *keep, *[MEASURES[m].raw_int().alias(int_cols[m]) for m in li_measures]
+    pre = df.select(
+        *keep, *[t.measures[m].raw_int().alias(int_cols[m]) for m in fact_ms]
     )
-    row_level = _row_level(MEASURES, int_cols, cnt_cols)
+    row_level = _row_level(t.measures, int_cols, cnt_cols)
 
     if not join_keys:
         # q01 shape: scan → fused projection → one-shuffle aggregate.
         return _grouped(pre, q, agg_exprs(q, row_level, None))
 
-    if join_keys != ["l_orderkey"] or arm_measures or approx_cols:
-        # ROW-LEVEL arm join: when the partial key includes a
-        # high-cardinality arm key (l_partkey ~ N/4 distinct values,
-        # l_suppkey dense), pre-aggregation barely shrinks the fact
-        # and its hash table costs more than the slimmer shuffle
-        # saves — measured at sf5 on the part arm: 1.44 s row-level
-        # vs 2.54 s partial (docs/BENCHMARKS.md). The l_orderkey-only
-        # partial below keeps its measured q26 win (4:1 fan-in, slim
-        # per-order rows crossing the shuffle).
+    if (
+        len(top) != 1
+        or top[0].strategy != "shuffle_hash"
+        or arm_ms
+        or any(a.fn == "approx_distinct" for a in q.aggs)
+    ):
+        # ROW-LEVEL arm joins: a broadcast arm never shuffles the fact,
+        # and when the partial key includes a high-cardinality arm key
+        # (l_partkey ~ N/4 distinct values, l_suppkey dense),
+        # pre-aggregation barely shrinks the fact and its hash table
+        # costs more than the slimmer shuffle saves — measured at sf5
+        # on the part arm: 1.44 s row-level vs 2.54 s partial
+        # (docs/BENCHMARKS.md). Sketch targets are sketched over raw
+        # rows. The order-chain partial below keeps its measured q26
+        # win (4:1 fan-in, slim per-order rows crossing the shuffle).
         j = _attach_arms(pre)
-        for m in arm_measures:
-            j = j.withColumn(int_cols[m], MEASURES[m].raw_int())
+        for m in arm_ms:
+            j = j.withColumn(int_cols[m], t.measures[m].raw_int())
         return _grouped(j, q, agg_exprs(q, row_level, None))
 
+    if mixed:
+        raise ValueError(_MIXED)
     # q26 shape, generalized: partial-aggregate the fact BELOW the
-    # joins — keyed by the declared arms' join keys PLUS any
-    # lineitem-local grouping attributes, so mixed groupings fold too
-    # (every measure partial is a commutative monoid, so aggregating
-    # first by the finer key and re-aggregating above the joins is
-    # exact) — then join each declared arm with slim partial rows
-    # crossing the shuffles.
+    # join — keyed by the arm's join key PLUS any fact-side grouping
+    # attributes, so mixed groupings fold too (every measure partial
+    # is a commutative monoid, so aggregating first by the finer key
+    # and re-aggregating above the join is exact) — then join the arm
+    # with slim partial rows crossing the shuffle.
+    min_ms = sorted({a.measure for a in q.aggs if a.fn == "min"})
+    max_ms = sorted({a.measure for a in q.aggs if a.fn == "max"})
     partial = [F.sum(int_cols[m]).alias(int_cols[m]) for m in needed]
     partial += [F.count(c).alias(f"__cnt_{m}") for m, c in cnt_cols.items() if c]
     partial += [F.min(int_cols[m]).alias(f"__min_{m}") for m in min_ms]
@@ -1170,7 +1473,7 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
     partial.append(F.count(F.lit(1)).alias("__cnt_star"))
     # fact-side COUNT(DISTINCT) targets join the partial KEY: every
     # distinct (keys, locals, target) combo survives the partial, so
-    # the distinct value set above the joins is exact
+    # the distinct value set above the join is exact
     agg_l = pre.groupBy(
         *dict.fromkeys(join_keys + local_group + cd_local)
     ).agg(*partial)
@@ -1179,7 +1482,7 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
     # partial min/max columns
     partials = {
         m: _StoredMeasure(
-            MEASURES[m], int_cols[m], f"__cnt_{m}" if cnt_cols.get(m) else None,
+            t.measures[m], int_cols[m], f"__cnt_{m}" if cnt_cols.get(m) else None,
             f"__min_{m}", f"__max_{m}",
         )
         for m in needed
@@ -1200,29 +1503,18 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
     (mixed fact+dimension groupings: measured 1.3 s vs 5.1 s at sf5,
     docs/BENCHMARKS.md round 6). Applicability is exact, not
     heuristic: the denorm was built with the INNER 4-table chain, so
-    it answers chain-4 queries only (same orphan-dropping semantics),
-    and only when every dimension attribute used is stored on it."""
-    if q.part or q.supp or effective_chain(q) != 4:
-        return None
-    if any(a.fn == "approx_distinct" for a in q.aggs):
+    it answers specs declaring exactly that chain (same
+    orphan-dropping semantics), and only when every arm column used
+    is stored on it. The denorm stands in for the whole order chain
+    in the one arm-join builder."""
+    t = LINEITEM
+    if q.arms() != _CHAIN or any(a.fn == "approx_distinct" for a in q.aggs):
         return None  # sketch shapes: cube or the row-level raw plan
-    local_filters, star_filters, _pf, _sf = _split_filters(q)
-    sources = q.group_sources()
-    star_trunc_sources = frozenset(
-        {col for _a, _u, col in q.truncs if col not in LINEITEM_COLS}
+    local_filters, arm_filters, mixed, local_group, cd_local, carried = _split(
+        t, q, t.columns
     )
-    star_group = [g for g in q.group_by if sources[g] in DIM_ATTRS]
-    local_group = [g for g in q.group_by if sources[g] not in DIM_ATTRS]
-    cd_cols = sorted({a.measure for a in q.aggs if a.fn == "count_distinct"})
-    cd_local = [c for c in cd_cols if c in LINEITEM_COLS]
-    cd_star = [c for c in cd_cols if c in DIM_ATTRS]
-    if any(c not in LINEITEM_COLS and c not in DIM_ATTRS for c in cd_cols):
-        return None  # unknown target: let the raw plan raise its error
-    dim_attrs = sorted(
-        {sources[g] for g in star_group}
-        | set(star_trunc_sources)
-        | {c for f in star_filters for c in f.cols()}
-        | set(cd_star)
+    needed = sorted(
+        {a.measure for a in q.aggs if a.measure and a.fn != "count_distinct"}
     )
     from ..sources.bucketed import (
         DENORM_ATTRS,
@@ -1230,15 +1522,17 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
         order_revenue_projection,
     )
 
-    if not set(dim_attrs) <= set(DENORM_ATTRS):
+    if (
+        mixed
+        or not set(carried) <= set(DENORM_ATTRS)
+        # arm-home measures: the row-level raw plan computes them
+        or not all(t.local(t.measures[m]) for m in needed)
+    ):
         return None
-    for g in local_group:
-        if sources[g] not in LINEITEM_COLS and g not in {a for a, _u, _c in q.truncs}:
-            raise ValueError(f"unknown grouping attribute {g!r}")
 
-    # QUERY-time spine keeps the shuffle_hash hint below: measured
-    # faster than sort-merge at bench scales, and the per-task hash
-    # side is one bucket of the (filtered, projected) denorm. The
+    # QUERY-time spine keeps the orders arm's shuffle_hash hint:
+    # measured faster than sort-merge at bench scales, and the per-task
+    # hash side is one bucket of the (filtered, projected) denorm. The
     # scale rule: this holds while |orders|/n_buckets rows fit a
     # task; past that, raise the bucket count at deploy (the layout
     # knob) — the DEPLOY joins already use spill-friendly sort-merge
@@ -1258,48 +1552,40 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
     )
     for p in local_filters:
         li = li.filter(p.column())
-    li = apply_truncs(li, q, LINEITEM_COLS)
+    li = apply_truncs(li, q, t.columns)
     den = apply_tombstones(
         spark, sf_dir, "orders", bucketed_scan(spark, sf_dir, den_name)
-    ).select("o_orderkey", *dim_attrs)
+    )
+
+    def _attach(df: DataFrame) -> DataFrame:
+        j = join_arms(spark, sf_dir, df, t, ("orders",), carried, {"orders": den})
+        for p in arm_filters:
+            j = j.filter(p.column())
+        return apply_truncs(j, q, frozenset(carried))
 
     if not q.aggs:
         # DISTINCT shape: pre-distinct by (order, local keys) is
         # exchange-free too (bucket partitioning on the order key
         # already clusters the finer key).
         pre = li.select(*dict.fromkeys(local_group + ["l_orderkey"])).distinct()
-        j = pre.join(den.hint("shuffle_hash"), pre.l_orderkey == den.o_orderkey)
-        for p in star_filters:
-            j = j.filter(p.column())
-        return _distinct(apply_truncs(j, q, star_trunc_sources), q)
+        return _distinct(_attach(pre), q)
 
-    needed = sorted(
-        {a.measure for a in q.aggs if a.measure and a.fn != "count_distinct"}
-    )
-    if any(MEASURES[m].home != "fact" for m in needed):
-        return None  # arm-home measures: the row-level raw plan computes them
     # the bucketed fact stores each measure's fixed-point column at rest
-    int_cols = {m: MEASURES[m].derived for m in needed}
+    int_cols = {m: t.measures[m].derived for m in needed}
     cnt_cols = {
-        m: MEASURES[m].source_col
+        m: t.measures[m].source_col
         for m in needed
         if any(a.fn in ("count", "avg") and a.measure == m for a in q.aggs)
     }
-    keep = list(
-        dict.fromkeys(
-            local_group
-            + ["l_orderkey"]
-            + sorted(c for c in cnt_cols.values() if c)
-            + cd_local
-            + [int_cols[m] for m in needed]
-        )
+    keep = dict.fromkeys(
+        local_group
+        + ["l_orderkey"]
+        + sorted(c for c in cnt_cols.values() if c)
+        + cd_local
+        + [int_cols[m] for m in needed]
     )
-    pre = li.select(*keep)
-    j = pre.join(den.hint("shuffle_hash"), pre.l_orderkey == den.o_orderkey)
-    for p in star_filters:
-        j = j.filter(p.column())
-    j = apply_truncs(j, q, star_trunc_sources)
-    return _grouped(j, q, agg_exprs(q, _row_level(MEASURES, int_cols, cnt_cols), None))
+    j = _attach(li.select(*keep))
+    return _grouped(j, q, agg_exprs(q, _row_level(t.measures, int_cols, cnt_cols), None))
 
 
 # ---------------------------------------------------------------------------
@@ -1313,20 +1599,20 @@ def _route(
     q,
     builtins: Iterable[Projection],
     fallbacks: tuple[tuple[str, Callable], ...],
-    raw: Callable[[SparkSession, str, object], DataFrame],
 ) -> tuple[DataFrame, str]:
-    """The one candidate loop of both routers: ``builtins`` in their
-    catalog order (a measured cost order), then the USER views over
-    ``q.table`` (sources/user_projections.py — names prefixed
-    "user:"), then the family's ``fallbacks`` — ``(name, plan)``
-    pairs tried in order, a plan returning None to pass — then the
-    ``raw`` plan. Built-ins first keeps the measured plans for the
-    shapes they were built for; a user view claims exactly the family
-    the built-ins refuse. The user views are a lazy generator: a view's
-    freshness check runs only once every built-in has refused.
+    """The one candidate loop of both routers: :func:`validate`, then
+    ``builtins`` in their catalog order (a measured cost order), then
+    the USER views over ``q.table`` (sources/user_projections.py —
+    names prefixed "user:"), then the family's ``fallbacks`` —
+    ``(name, plan)`` pairs tried in order, a plan returning None to
+    pass — then the raw plan. Built-ins first keeps the measured plans
+    for the shapes they were built for; a user view claims exactly the
+    family the built-ins refuse. The user views are a lazy generator: a
+    view's freshness check runs only once every built-in has refused.
     Returns (result, chosen)."""
     from ..sources.user_projections import user_projections
 
+    validate(q)
     for proj in itertools.chain(builtins, user_projections(spark, sf_dir, q.table)):
         if proj.subsumes(q):
             return proj.build(spark, sf_dir, q), proj.name
@@ -1334,7 +1620,7 @@ def _route(
         df = plan(spark, sf_dir, q)
         if df is not None:
             return df, name
-    return raw(spark, sf_dir, q), "raw"
+    return _raw_plan(spark, sf_dir, q), "raw"
 
 
 def route(
@@ -1345,9 +1631,7 @@ def route(
     (:func:`_route`). Returns (result, chosen) where ``chosen`` is the
     projection name, "bucketed_spine" or "raw" — callers that only
     want the DataFrame ignore the second element; tests assert on it."""
-    return _route(
-        spark, sf_dir, q, PROJECTIONS, (("bucketed_spine", _spine_plan),), _raw_plan
-    )
+    return _route(spark, sf_dir, q, PROJECTIONS, (("bucketed_spine", _spine_plan),))
 
 
 # ---------------------------------------------------------------------------
@@ -1505,17 +1789,6 @@ def q07_routed_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@dataclass(frozen=True)
-class ScanQuery:
-    """A projection+filter query over lineitem rows (no aggregation).
-    The router picks the physical LAYOUT to scan; content is identical
-    whichever layout answers (clustering is sort order, not content).
-    """
-
-    columns: tuple[str, ...]
-    filters: tuple[Pred, ...]
-
-
 # Columns the deployed Z-order lineitem layout stores, and the curve
 # keys whose range predicates it accelerates (sources/zorder.py
 # zordered_lineitem). Kept declarative so subsumption stays structural.
@@ -1524,7 +1797,6 @@ _ZORDER_COLUMNS = frozenset(
      "l_quantity", "l_extendedprice"}
 )
 _ZORDER_KEYS = frozenset({"l_partkey", "l_suppkey"})
-_RANGE_OPS = frozenset({"<=", "<", ">=", ">", "=", "between", "in"})
 
 
 def route_scan(
@@ -1547,6 +1819,7 @@ def route_scan(
     from ..sources.dated import dated_lineitem, month_bounds_filter
     from ..sources.zorder import zordered_lineitem
 
+    validate(q)
     used = set(q.columns)
     for p in q.filters:
         used |= p.cols()

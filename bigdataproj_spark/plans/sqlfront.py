@@ -24,26 +24,25 @@ produce a false positive, and an expression that LOOKS like revenue but
 isn't (say, a different cast width) simply doesn't match and falls back.
 
 Recognized family (everything else → ``UnsupportedSQL`` → spark.sql).
-One lowering (:func:`parse_sql`) serves two fact-table families; the
-FROM clause picks the family and yields its description as data
-(:class:`_Family`: columns, timestamp columns, measures, canonical
-spellings, plain column→measure map, spec constructors), so the
-clause grammar below is the same for both:
+One lowering (:func:`parse_sql`) serves every fact table; the FROM
+clause is recognized against the table model (routing.FACT_TABLES)
+and yields its description as data (:class:`_Family`: columns,
+timestamp columns, measures, canonical spellings, plain column→measure
+map, spec constructors), so the clause grammar below is the same for
+all of them:
 
-- FROM, the lineitem star → :class:`~.routing.AggQuery` /
-  :class:`~.routing.ScanQuery`: ``lineitem`` alone, any PREFIX of the
-  canonical order chain (lineitem⋈orders⋈customer⋈nation⋈region on
-  the TPC-H keys, validated structurally as the set of join
-  equalities — join DEPTH is semantically load-bearing, see
-  routing.AggQuery.chain), and/or the part and supplier arms
-  (⋈part on l_partkey, ⋈supplier on l_suppkey), all composable;
-- FROM, the corpus tables → :class:`~.corpus_routing.TableAggQuery` /
-  :class:`~.corpus_routing.TableScanQuery`: ``documents`` or
-  ``events`` alone, or INNER-joined to their declared dims on the
-  canonical edges (``JOIN sources ON source = src_id``, ``JOIN
-  event_types ON event_type = et_id``), each dim widening the
-  referencable columns by its attributes; one fact table per
-  statement;
+- FROM: one fact table, alone or INNER-joined to arms of its model on
+  each arm's own edge, every arm's parent joined too (validated
+  structurally as the table and edge SETS, never as text). For ``lineitem`` that is any PREFIX
+  of the order chain (lineitem⋈orders⋈customer⋈nation⋈region on the
+  TPC-H keys — join DEPTH is semantically load-bearing, see
+  routing.AggQuery) and/or the part and supplier arms, lowering to
+  :class:`~.routing.AggQuery` / :class:`~.routing.ScanQuery`; for
+  ``documents`` or ``events`` their registry arms (``JOIN sources ON
+  source = src_id``, ``JOIN event_types ON event_type = et_id``),
+  lowering to :class:`~.routing.TableAggQuery` /
+  :class:`~.routing.TableScanQuery`. Each arm widens the referencable
+  columns by its attributes;
 - aggregates: the canonical sum/avg/min/max formulations of each
   family's measures — for lineitem the exact-DECIMAL forms of the
   routing measures, with AVG as the canonical or plain SUM over
@@ -111,34 +110,25 @@ the routed answer must match DuckDB running the same SQL on raw tables.
 
 from __future__ import annotations
 
-import dataclasses as _dc
 import json
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .corpus_routing import (
-    CORPUS_DIMS,
-    CORPUS_TABLES,
-    TableAggQuery,
-    TableScanQuery,
-    route_corpus,
-    route_corpus_scan,
-)
+from .corpus_routing import route_corpus, route_corpus_scan
 from .routing import (
-    DIM_ATTRS,
-    PART_ATTRS,
-    SUPP_ATTRS,
-    LINEITEM_COLS as _LINEITEM_COLS,
+    FACT_TABLES,
     MEASURES,
+    TRUNC_UNITS,
     AggCall,
     AggQuery,
     BoolPred,
     Measure,
     Pred,
     ScanQuery,
-    minimal_chain,
+    TableAggQuery,
+    TableScanQuery,
     route,
     route_scan,
 )
@@ -256,18 +246,6 @@ CORPUS_COL_MEASURE: dict[str, dict[str, str]] = {
     "documents": {"n_chars": "chars"},
     "events": {"value": "value"},
 }
-
-# The dimension chain in join order; a statement's FROM clause must be
-# lineitem alone or a PREFIX of this chain joined on exactly these
-# keys (any paren/ordering DuckDB normalizes away — matching is on the
-# table SET and edge SET, never on text).
-_CHAIN_TABLES = ("orders", "customer", "nation", "region")
-_CHAIN_EDGES = (
-    frozenset({"l_orderkey", "o_orderkey"}),
-    frozenset({"o_custkey", "c_custkey"}),
-    frozenset({"c_nationkey", "n_nationkey"}),
-    frozenset({"n_regionkey", "r_regionkey"}),
-)
 
 _CMP_OPS = {
     "COMPARE_LESSTHANOREQUALTO": "<=",
@@ -399,27 +377,13 @@ def _plain_fn(node, distinct: bool = False) -> tuple[str, str] | None:
     return (node["function_name"].lower(), col) if col else None
 
 
-# hour included (the standard streaming rollup grain): Spark and
-# DuckDB truncate hours identically; 'week' stays excluded (ISO vs
-# locale conventions differ). Folding safety is per-layout: cubes
-# storing the SOURCE at full resolution (l_shipdate, o_orderdate) fold
-# any grain; the hour-grained events cube refuses sub-hour grains
-# (routing.Projection.subsumes, through its time_key) and the raw
-# plan computes them exactly.
-_TRUNC_UNITS = frozenset({"year", "quarter", "month", "day", "hour"})
-# lineitem-star columns date_trunc may legally apply to (timestamp-
-# typed); the order-side o_orderdate is gated by the statement's join
-# chain through the family's `allowed` set like every other dimension
-# attribute
-_TS_COLS = frozenset({"l_shipdate", "o_orderdate"})
-
-
 def _match_trunc(node, ts_cols: frozenset[str]) -> tuple[str, str] | None:
     """(unit, source_col) for a ``date_trunc('unit', col)`` call over a
-    supported unit and timestamp column, else None. Units are those
-    whose truncation semantics are identical between Spark and DuckDB
-    (week differs: ISO vs locale conventions — excluded). ``ts_cols``
-    is the family's legal source set (:attr:`_Family.ts_cols`)."""
+    supported unit (routing.TRUNC_UNITS) and timestamp column, else
+    None. ``ts_cols`` is the family's legal source set
+    (:attr:`_Family.ts_cols`); an arm's timestamp column is further
+    gated by the statement's joins through the family's ``allowed``
+    set like every other arm attribute."""
     if not (isinstance(node, dict) and node.get("class") == "FUNCTION"):
         return None
     if node.get("function_name", "").lower() != "date_trunc":
@@ -436,7 +400,7 @@ def _match_trunc(node, ts_cols: frozenset[str]) -> tuple[str, str] | None:
         return None
     unit = str(c0["value"]["value"]).lower()
     col = _colref(ch[1])
-    if unit not in _TRUNC_UNITS or col not in ts_cols:
+    if unit not in TRUNC_UNITS or col not in ts_cols:
         return None
     return unit, col
 
@@ -646,10 +610,8 @@ class _Family:
     - ``joined``: the FROM clause joins a dimension (row-level scans
       over joins have no layout and refuse);
     - ``agg(filters, groups, aggs, truncs)`` and ``scan(columns,
-      filters)``: the spec constructors, which add whatever the family
-      declares beyond them (the chain depth and arms of an
-      :class:`AggQuery`, the table and dims of a
-      :class:`TableAggQuery`)."""
+      filters)``: the spec constructors, which add the table and the
+      joined arms in the spec's own fields (``of``)."""
 
     key: str
     allowed: frozenset[str]
@@ -662,129 +624,72 @@ class _Family:
     scan: Callable[[tuple, tuple], object]
 
 
-# lineitem: the canonical SUM/MIN/MAX of every measure, and AVG as the
-# SUM (canonical or plain) over COUNT of the measure's source column
-_STAR_SPELLINGS = (
-    *(
-        (fn, m, sql[m])
-        for fn, sql in (("sum", SUM_SQL), ("min", MIN_SQL), ("max", MAX_SQL))
-        for m in MEASURES
+# Each fact table's canonical aggregate spellings and plain
+# column→measure map. lineitem: the canonical SUM/MIN/MAX of every
+# measure, and AVG as the SUM (canonical or plain) over COUNT of the
+# measure's source column; the corpus tables: the canonical forms as
+# spelled, AVG as one snippet.
+_SPELLINGS: dict[str, tuple[tuple[str, str, str], ...]] = {
+    "lineitem": (
+        *(
+            (fn, m, sql[m])
+            for fn, sql in (("sum", SUM_SQL), ("min", MIN_SQL), ("max", MAX_SQL))
+            for m in MEASURES
+        ),
+        *(
+            ("avg", m, f"{num} / COUNT({src})")
+            for m, src in CNT_SRC.items()
+            for num in (SUM_SQL[m], f"SUM({src})")
+        ),
     ),
-    *(
-        ("avg", m, f"{num} / COUNT({src})")
-        for m, src in CNT_SRC.items()
-        for num in (SUM_SQL[m], f"SUM({src})")
-    ),
-)
-# corpus tables: the canonical forms as spelled, AVG as one snippet
-_CORPUS_SPELLINGS = {
-    t: tuple(
-        (fn, m, sql[t][m])
-        for fn, sql in (
-            ("sum", CORPUS_SUM_SQL),
-            ("min", CORPUS_MIN_SQL),
-            ("max", CORPUS_MAX_SQL),
-            ("avg", CORPUS_AVG_SQL),
+    **{
+        t: tuple(
+            (fn, m, sql[t][m])
+            for fn, sql in (
+                ("sum", CORPUS_SUM_SQL),
+                ("min", CORPUS_MIN_SQL),
+                ("max", CORPUS_MAX_SQL),
+                ("avg", CORPUS_AVG_SQL),
+            )
+            for m in sql[t]
         )
-        for m in sql[t]
-    )
-    for t in CORPUS_TABLES
+        for t in CORPUS_SUM_SQL
+    },
 }
-
-_PART_EDGE = frozenset({"l_partkey", "p_partkey"})
-_SUPP_EDGE = frozenset({"l_suppkey", "s_suppkey"})
-
-
-def _star_family(tables: set[str], edges: set[frozenset[str]]) -> _Family:
-    """The lineitem star: bare lineitem, a prefix of the canonical
-    order chain, the part arm (``JOIN part ON l_partkey = p_partkey``),
-    the supplier arm (``JOIN supplier ON l_suppkey = s_suppkey``), or
-    any combination; UnsupportedSQL for any other join graph."""
-    part = "part" in tables and _PART_EDGE in edges
-    if part:
-        tables, edges = tables - {"part"}, edges - {_PART_EDGE}
-    supp = "supplier" in tables and _SUPP_EDGE in edges
-    if supp:
-        tables, edges = tables - {"supplier"}, edges - {_SUPP_EDGE}
-    for chain in range(0, len(_CHAIN_TABLES) + 1):
-        if (
-            tables == {"lineitem", *_CHAIN_TABLES[:chain]}
-            and edges == set(_CHAIN_EDGES[:chain])
-        ):
-            break
-    else:
-        raise UnsupportedSQL(
-            f"join graph is not a prefix of the canonical chain "
-            f"(tables={sorted(tables)})"
-        )
-    allowed = _LINEITEM_COLS | {a for a, d in DIM_ATTRS.items() if d <= chain}
-    if part:
-        allowed |= PART_ATTRS
-    if supp:
-        allowed |= SUPP_ATTRS
-
-    def agg(filters, groups, aggs, truncs) -> AggQuery:
-        # The part and supplier joins are declared, attributes or not,
-        # and so is a chain DEEPER than the attributes require: inner
-        # joins may drop orphan fact rows (FK integrity is never
-        # assumed). A minimal chain stays None so specs compare
-        # structurally wherever they came from.
-        spec = AggQuery(filters, groups, aggs, truncs, part=part, supp=supp)
-        if minimal_chain(spec) != chain:
-            spec = _dc.replace(spec, chain=chain)
-        return spec
-
-    return _Family(
-        "lineitem", allowed, _TS_COLS, MEASURES, _STAR_SPELLINGS, COL_MEASURE,
-        bool(chain or part or supp), agg, ScanQuery,
-    )
-
-
-def _corpus_family(
-    fact: str, tables: set[str], edges: set[frozenset[str]]
-) -> _Family:
-    """A corpus fact table, bare or INNER-joined to declared dims on
-    their canonical edges (``JOIN sources ON source = src_id``), each
-    dim widening the referencable columns by its attrs; UnsupportedSQL
-    on any other join graph."""
-    model = CORPUS_TABLES[fact]
-    dims: list[str] = []
-    edges = set(edges)
-    for name in sorted(tables - {fact}):
-        d = CORPUS_DIMS.get(name)
-        if d is None or fact not in d.fact_tables:
-            raise UnsupportedSQL(f"unroutable join table {name}")
-        edge = frozenset({d.fact_key, d.dim_key})
-        if edge not in edges:
-            raise UnsupportedSQL(f"dim {name} joined off its canonical edge")
-        edges.discard(edge)
-        dims.append(name)
-    if edges:
-        raise UnsupportedSQL("unexpected join edges")
-    return _Family(
-        fact,
-        model.columns.union(*(CORPUS_DIMS[n].attrs for n in dims)),
-        model.ts_cols,
-        model.measures,
-        _CORPUS_SPELLINGS[fact],
-        CORPUS_COL_MEASURE[fact],
-        bool(dims),
-        lambda f, g, a, t: TableAggQuery(fact, f, g, a, t, tuple(dims)),
-        lambda c, f: TableScanQuery(fact, c, f),
-    )
+_COL_MEASURE = {"lineitem": COL_MEASURE, **CORPUS_COL_MEASURE}
 
 
 def _family(from_node: dict) -> _Family:
-    """Recognize the FROM clause: a corpus fact table (documents or
-    events, optionally with its dims) if one is named, else the
-    lineitem star."""
+    """Recognize the FROM clause against the table model: exactly one
+    fact table, each other table one of its arms joined INNER on the
+    arm's own edge (``parent_key = dim_key``) with its parent joined
+    too — for lineitem a prefix of the order chain and/or the part and
+    supplier arms, for a corpus table its registry arms. UnsupportedSQL
+    on any other join graph."""
     tables, edges = _join_graph(from_node)
-    facts = tables & CORPUS_TABLES.keys()
-    if len(facts) > 1:
-        raise UnsupportedSQL("more than one corpus fact table")
-    if facts:
-        return _corpus_family(facts.pop(), tables, edges)
-    return _star_family(tables, edges)
+    facts = tables & FACT_TABLES.keys()
+    if len(facts) != 1:
+        raise UnsupportedSQL(f"FROM must name one fact table (tables={sorted(tables)})")
+    t = FACT_TABLES[facts.pop()]
+    arms = [a for a in t.arms.values() if a.name in tables]
+    if len(arms) != len(tables) - 1:
+        raise UnsupportedSQL(f"unroutable join table in {sorted(tables)}")
+    if edges != {frozenset({a.parent_key, a.dim_key}) for a in arms}:
+        raise UnsupportedSQL("join edges are not the model's arm edges")
+    if any(a.parent not in tables for a in arms):
+        raise UnsupportedSQL("an arm is joined without its parent")
+    names = tuple(a.name for a in arms)
+    return _Family(
+        t.name,
+        t.columns.union(*(a.attrs for a in arms)),
+        t.ts_cols,
+        t.measures,
+        _SPELLINGS[t.name],
+        _COL_MEASURE[t.name],
+        bool(arms),
+        lambda f, g, a, tr: t.agg_spec.of(t.name, names, f, g, a, tr),
+        lambda c, f: t.scan_spec.of(t.name, c, f),
+    )
 
 
 def _modifiers(

@@ -500,22 +500,15 @@ def reattribute_order_updates(
     # keys or order-home measures both force chain >= 1): the groups
     # the conflicting orders' lineitems fall in under the OLD and the
     # NEW attributes
-    from .user_projections import _build_cube
-
     def _affected(u):
-        if u.chain < 1:
+        if "orders" not in u.arms:
             return None
         return (
-            _build_cube(
-                spark, sf_dir, li, u.keys, (), u.chain, u.part, u.supp,
-                orders_override=old_orders,
-            )
+            u.cube(spark, sf_dir, li, (), opened={"orders": old_orders})
             .select(*u.keys)
             .unionByName(
-                _build_cube(
-                    spark, sf_dir, li, u.keys, (), u.chain, u.part, u.supp,
-                    orders_override=new_orders,
-                ).select(*u.keys)
+                u.cube(spark, sf_dir, li, (), opened={"orders": new_orders})
+                .select(*u.keys)
             )
             .distinct()
         )

@@ -27,27 +27,30 @@ answered from it — the caller of those queries never learns a
 projection exists. View names are unique across both families:
 deploying a name replaces whatever view held it.
 
-Two things are per family — key/measure validation and the cube
-build; the lifecycle is shared: deploy / ensure (idempotent) /
-refresh (delta-merge, commutative-monoid, rebuild-equal) / drop
-(deregister; files await scheduled GC) / list, and
-:func:`sources.maintenance.refresh_warehouse` refreshes every
+One declaration (:func:`_declare`) and one cube build
+(:func:`_build`) serve both families, reading the table model
+(plans/routing.py FACT_TABLES): a key is a fact column or an
+attribute of one of the table's arms, and the build joins the minimal
+arm set reaching every key and measure source column through the one
+arm-join builder (routing.join_arms). The lifecycle is shared too:
+deploy / ensure (idempotent) / refresh (delta-merge, commutative-monoid,
+rebuild-equal) / drop (deregister; files await scheduled GC) / list,
+and :func:`sources.maintenance.refresh_warehouse` refreshes every
 refresh-maintained view alongside the built-ins of its table.
 
-- **Lineitem star** (v2): group keys from the lineitem fact, the
-  order dimension chain, and the part/supplier arms; measures from
-  the five lineitem money measures plus the four arm-home money
-  measures (o_totalprice, c_acctbal, p_retailprice, s_acctbal —
-  computed post-join with the statement's lineitem-multiplicity
-  weighting). The view records WHICH joins its build ran (chain
-  depth + arm set) and answers exactly the specs declaring the same
-  set — inner-join orphan-drop semantics are part of a query's
-  meaning, and the router never assumes FK integrity.
-- **Corpus tables** (v3): group keys from the fact's columns and the
-  S17 dimension attributes (the build runs the declared registry join
-  once, at deploy), and optionally ONE hour-grain time key over the
-  fact's timestamp — hour is the finest scale-invariant grain, and
-  every coarser grain and hour-boundary range predicate folds onto it
+- **Lineitem star**: keys from the fact, the order chain and the
+  part/supplier arms; measures from the five lineitem money measures
+  plus the four arm measures (o_totalprice, c_acctbal, p_retailprice,
+  s_acctbal — computed post-join with the statement's
+  lineitem-multiplicity weighting). The view records WHICH arms its
+  build joined and answers exactly the specs declaring the same set —
+  inner-join orphan-drop semantics are part of a query's meaning, and
+  the router never assumes FK integrity.
+- **Corpus tables**: keys from the fact's columns and its registry
+  arms' attributes (the build runs the registry join once, at deploy),
+  and optionally ONE hour-grain time key over the fact's timestamp —
+  hour is the finest scale-invariant grain, and every coarser grain
+  and hour-boundary range predicate folds onto it
   (plans/corpus_routing.py's grain-boundary rules apply verbatim).
 
 Cardinality is the deployer's responsibility exactly as in every
@@ -71,23 +74,18 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.corpus_routing import (
-    CORPUS_DIMS,
-    CORPUS_TABLES,
-    CorpusTable,
-    current_corpus_table,
-)
+from ..plans.corpus_routing import CORPUS_TABLES, current_corpus_table
 from ..plans.routing import (
-    DIM_ATTRS,
-    LINEITEM_COLS,
+    FACT_TABLES,
+    LINEITEM,
     MEASURES,
-    PART_ATTRS,
-    SUPP_ATTRS,
+    FactTable,
     Measure,
     Projection,
     _StoredMeasure,
+    join_arms,
+    star_arms,
 )
-from ..catalog import table
 from .bucketed import (
     _layout_paths,
     _lineitem_with_derived,
@@ -96,25 +94,21 @@ from .bucketed import (
 )
 from .state import warehouse
 
-# The default lineitem measures: the five the bucketed fact stores at
-# rest (Measure.derived). Round-7 (v2): the arm-home measures are
-# declarable too. Each computes post-join from its MEASURES entry (the
-# same cents() arithmetic the row-level plans run); declaring one
-# pulls in the measure's home join exactly like declaring one of that
-# side's group keys.
-_ALL_MEASURES = tuple(n for n, m in MEASURES.items() if m.derived)
+# A view's default measures are its table's fact-local ones (for the
+# star: the five the bucketed fact stores at rest). The arm measures
+# are declarable too; each computes post-join from its MEASURES entry
+# (the same cents() arithmetic the row-level plans run), and declaring
+# one pulls in its arm exactly like declaring one of its keys.
+_ALL_MEASURES = tuple(n for n, m in MEASURES.items() if LINEITEM.local(m))
 _USER_MEASURES = tuple(MEASURES)
 
 
 @dataclass
 class _UserProjection:
     """Catalog entry: the declaration, the router-facing projection
-    and the current stored path (swung atomically on refresh).
-    ``table`` names the family. A ``"lineitem"`` view's build joins
-    the order chain to depth ``chain`` and the part/supplier arms; a
-    corpus view's build joins the registry ``dims`` and derives the
-    optional hour-grain ``time_key`` (stored alias, ts source col).
-    The other family's build fields stay None.
+    and the current stored path (swung atomically on refresh). The
+    build joins ``arms`` of ``table``'s model and derives the optional
+    hour-grain ``time_key`` (stored alias, ts source col).
 
     ``maintained_by`` (round 12): ``"refresh"`` entries are kept
     current SYNCHRONOUSLY by the mutation hooks (:func:`_maintained`)
@@ -132,16 +126,18 @@ class _UserProjection:
     path: str = ""  # current stored version (swung atomically on refresh)
     base_path: str = ""  # immutable deploy path; refresh versions derive from it
     maintained_by: str = "refresh"
-    chain: int | None = None
-    part: bool | None = None
-    supp: bool | None = None
-    dims: tuple[str, ...] | None = None
+    arms: tuple[str, ...] = ()
     time_key: tuple[str, str] | None = None
 
     @property
     def group_cols(self) -> tuple[str, ...]:
         """The stored cube's group columns: the keys, then the time key."""
         return self.keys + ((self.time_key[0],) if self.time_key else ())
+
+    @property
+    def chain(self) -> int:
+        """The order-chain depth a lineitem view's build joined."""
+        return LINEITEM.agg_spec.arm_fields(self.arms)["chain"]
 
     def cube(
         self,
@@ -150,19 +146,16 @@ class _UserProjection:
         rows: DataFrame,
         measures: tuple[str, ...] | None = None,
         group_filter: DataFrame | None = None,
+        opened: dict[str, DataFrame] | None = None,
     ) -> DataFrame:
         """This view's partial-aggregate cube over ``rows`` of its fact
-        table, through its family's build: the declared measures, or
-        ``measures`` (``()`` leaves just the groups and COUNT(*))."""
-        measures = self.measures if measures is None else measures
-        if self.table == "lineitem":
-            return _build_cube(
-                spark, sf_dir, rows, self.keys, measures, self.chain,
-                self.part, self.supp, group_filter,
-            )
-        return _build_corpus_cube(
-            spark, sf_dir, rows, CORPUS_TABLES[self.table], self.keys,
-            measures, self.time_key, self.dims, group_filter,
+        table: the declared measures, or ``measures`` (``()`` leaves
+        just the groups and COUNT(*)); ``opened`` overrides arm frames
+        (:func:`_build`)."""
+        return _build(
+            spark, sf_dir, rows, FACT_TABLES[self.table], self.keys,
+            self.measures if measures is None else measures, self.arms,
+            self.time_key, group_filter, opened,
         )
 
     def publish(self, spark: SparkSession, sf_dir: str, cube: DataFrame) -> str:
@@ -233,13 +226,13 @@ def _merge_cols(u: _UserProjection):
 
 def _view_projection(
     name: str, table: str, keys: tuple[str, ...], measures: Iterable[Measure],
-    **family,
+    arms: tuple[str, ...], time_key: tuple[str, str] | None,
 ) -> Projection:
     """The router-facing projection of user view ``name``: its keys,
     the standard partial columns of its measures
     (:meth:`_StoredMeasure.of` — the columns :func:`_partial_aggs`
     writes), COUNT(*) in ``cnt``, the installed state's current version
-    as its scan, and the family's descriptor fields."""
+    as its scan, its build's arms and its time key."""
 
     def _open(s: SparkSession, d: str) -> DataFrame:
         from .snapshots import versioned_parquet
@@ -253,7 +246,8 @@ def _view_projection(
         measures={m.name: _StoredMeasure.of(m) for m in measures},
         count_star_col="cnt",
         open=_open,
-        **family,
+        arms=arms,
+        time_key=time_key,
     )
 
 
@@ -303,51 +297,62 @@ def _partials(
 
 
 # ---------------------------------------------------------------------------
-# Lineitem star: declaration and cube build.
+# The one declaration and the one cube build.
 # ---------------------------------------------------------------------------
 
+# Arms whose deploy-side frame is not the query-time one: the build
+# and refresh read the MAINTAINED bucketed orders table (refresh_
+# warehouse appends ingest batches to it — the raw fixture parquet is
+# immutable, so reading it would silently drop newly ingested orders'
+# lineitems on refresh), deliberately NOT tombstone-filtered (S19): the
+# fact side of every build/refresh/delete computation is, and order
+# deletes cascade, so a surviving lineitem's order is always alive —
+# while the DELETE path needs this side to still resolve the DELETED
+# rows' attributes when computing which groups to rebuild
+# (sources/retention.py delete_orders).
+_DEPLOY_OPEN = {
+    "orders": lambda spark, sf_dir: spark.table(bucketed_fact_tables(spark, sf_dir)[1]),
+}
 
-def _dim_side(
+
+def _build(
     spark: SparkSession,
     sf_dir: str,
-    chain: int,
-    attrs: list[str],
-    orders_df: DataFrame | None = None,
+    rows: DataFrame,
+    t: FactTable,
+    keys: tuple[str, ...],
+    measures: tuple[str, ...],
+    arms: tuple[str, ...],
+    time_key: tuple[str, str] | None = None,
+    group_filter: DataFrame | None = None,
+    opened: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
-    """The dimension side of a user projection's build/refresh: the
-    MAINTAINED bucketed orders table (refresh_warehouse appends ingest
-    batches to it — the raw fixture parquet is immutable, so reading
-    it here would silently drop newly ingested orders' lineitems from
-    every chain>=1 user projection on refresh), joined to the
-    broadcast customer/nation/region base dims exactly like the denorm
-    refresh does.
+    """The deploy/refresh cube build of both families: fact ⋈ the
+    view's arms (each carrying only the keys and measure source
+    columns it holds; ``opened`` overrides an arm's frame — the order-
+    UPDATE reattribution passes the PRE-update orders so the OLD group
+    attribution can still be computed after the upsert), arm measure
+    ints materialized post-join, the hour-grain time key derived, one
+    grouped partial aggregation.
 
-    Deliberately NOT tombstone-filtered (S19): the lineitem side of
-    every build/refresh/delete computation is, and order deletes
-    cascade, so a surviving lineitem's order is always alive — while
-    the DELETE path needs this side to still resolve the DELETED
-    rows' dimension attributes when computing which groups to
-    rebuild (sources/retention.py delete_orders).
-
-    ``orders_df`` overrides the orders side: the order-UPDATE
-    reattribution (sources/retention.py reattribute_order_updates)
-    passes the PRE-update rows of the conflicting orders so the OLD
-    group attribution can still be computed after the upsert."""
-    if orders_df is not None:
-        dims = orders_df
-    else:
-        _, od_name = bucketed_fact_tables(spark, sf_dir)
-        dims = spark.table(od_name)
-    if chain >= 2:
-        c = table(spark, sf_dir, "customer")
-        dims = dims.join(F.broadcast(c), dims.o_custkey == c.c_custkey)
-    if chain >= 3:
-        n = table(spark, sf_dir, "nation")
-        dims = dims.join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
-    if chain >= 4:
-        r = table(spark, sf_dir, "region")
-        dims = dims.join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
-    return dims.select("o_orderkey", *attrs)
+    ``group_filter`` (a DataFrame of group-key tuples) semi-filters the
+    ROWS — after the arm joins make every key column available, BEFORE
+    the groupBy — so an affected-group recompute aggregates only the
+    surviving rows of the touched groups (delete-sized set, broadcast
+    semi), never the corpus (sources/retention.py)."""
+    ms = [t.measures[m] for m in measures]
+    opened = {
+        **{n: f(spark, sf_dir) for n, f in _DEPLOY_OPEN.items() if n in arms},
+        **(opened or {}),
+    }
+    cols = sorted(set(keys) | {m.source_col for m in ms if m.source_col})
+    df = join_arms(spark, sf_dir, rows, t, arms, cols, opened, hash_hints=False)
+    group_cols = list(keys)
+    if time_key is not None:
+        alias, src = time_key
+        df = df.withColumn(alias, F.date_trunc("hour", F.col(src)))
+        group_cols.append(alias)
+    return _partials(df, group_cols, ms, group_filter)
 
 
 def _build_cube(
@@ -362,178 +367,52 @@ def _build_cube(
     group_filter: DataFrame | None = None,
     orders_override: DataFrame | None = None,
 ) -> DataFrame:
-    """The lineitem deploy/refresh cube build: fact ⋈ declared arms,
-    arm-home measure ints materialized post-join, one grouped partial
-    aggregation. Each arm carries only its group keys plus the source
-    columns of its home measures.
-
-    ``group_filter`` (a DataFrame of group-key tuples) semi-filters the
-    ROWS — after the arm joins make every key column available, BEFORE
-    the groupBy — so an affected-group recompute aggregates only the
-    surviving rows of the touched groups (delete-sized set, broadcast
-    semi), never the corpus (sources/retention.py)."""
-
-    def _srcs(home: str) -> set[str]:
-        return {
-            MEASURES[m].source_col
-            for m in measures
-            if MEASURES[m].home == home and MEASURES[m].source_col
-        }
-
-    dim_attrs = sorted({k for k in keys if k in DIM_ATTRS} | _srcs("order"))
-    part_attrs = sorted({k for k in keys if k in PART_ATTRS} | _srcs("part"))
-    supp_attrs = sorted({k for k in keys if k in SUPP_ATTRS} | _srcs("supp"))
-    if chain:
-        # no shuffle_hash hint on the DEPLOY/refresh join: a per-task
-        # hash relation cannot spill and OOMs at scale (measured on
-        # the segment cube at sf20 — sources/bucketed.py); sort-merge
-        # over the bucket-aligned orders side spills gracefully
-        dims = _dim_side(spark, sf_dir, chain, dim_attrs, orders_override)
-        li = li.join(dims, li.l_orderkey == dims.o_orderkey)
-    if part:
-        pa = table(spark, sf_dir, "part").select("p_partkey", *part_attrs)
-        li = li.join(pa, F.col("l_partkey") == pa.p_partkey)
-    if supp:
-        su = table(spark, sf_dir, "supplier").select("s_suppkey", *supp_attrs)
-        li = li.join(su, F.col("l_suppkey") == su.s_suppkey)
-    return _partials(
-        li, list(keys), (MEASURES[m] for m in measures), group_filter
+    """The lineitem cube build (:func:`_build`) of the arms a chain
+    depth and the part/supplier flags declare; ``orders_override``
+    stands in for the orders arm's frame."""
+    opened = None if orders_override is None else {"orders": orders_override}
+    return _build(
+        spark, sf_dir, li, LINEITEM, keys, measures, star_arms(chain, part, supp),
+        None, group_filter, opened,
     )
 
 
-def _star_joins(
-    keys: tuple[str, ...], measures: tuple[str, ...]
-) -> tuple[int, bool, bool]:
-    """(chain depth, part arm, supplier arm): the minimal join set
-    reaching every declared key and measure."""
-    chain = max(
-        (
-            *(DIM_ATTRS.get(k, 0) for k in keys),
-            *(DIM_ATTRS.get(MEASURES[m].source_col, 0) for m in measures),
-        ),
-        default=0,
-    )
-    part = any(k in PART_ATTRS for k in keys) or any(
-        MEASURES[m].home == "part" for m in measures
-    )
-    supp = any(k in SUPP_ATTRS for k in keys) or any(
-        MEASURES[m].home == "supp" for m in measures
-    )
-    return chain, part, supp
+def view_arms(t: FactTable, keys: Iterable[str], measures: Iterable[str]) -> tuple[str, ...]:
+    """The arms a view's build joins: the minimal set reaching every
+    key and measure source column."""
+    return t.reach([*keys, *(t.measures[m].source_col for m in measures)])
 
 
-def _star_view(
-    name: str,
-    keys: tuple[str, ...],
-    measures: tuple[str, ...] | None,
-    time_key: tuple[str, str] | None,
-) -> _UserProjection:
-    """Validate a lineitem-star declaration; its build runs the
-    minimal join set (:func:`_star_joins`)."""
-    if time_key is not None:
-        raise ValueError(
-            "time_key applies to corpus-table projections only "
-            "(the lineitem star folds date grains from the cubes)"
-        )
-    if not keys:
-        raise ValueError("a projection needs at least one group key")
-    for k in keys:
-        if (
-            k not in LINEITEM_COLS
-            and k not in DIM_ATTRS
-            and k not in PART_ATTRS
-            and k not in SUPP_ATTRS
-        ):
-            raise ValueError(f"unknown projection key {k!r}")
-    measures = tuple(measures) if measures is not None else _ALL_MEASURES
-    for m in measures:
-        if m not in _USER_MEASURES:
-            raise ValueError(
-                f"unknown measure {m!r} (deployable: {sorted(_USER_MEASURES)})"
-            )
-    chain, part, supp = _star_joins(keys, measures)
-    proj = _view_projection(
-        name, "lineitem", keys, (MEASURES[m] for m in measures),
-        chain=chain, part=part, supp=supp,
-    )
-    return _UserProjection(
-        name, "lineitem", keys, measures, proj,
-        chain=chain, part=part, supp=supp,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Corpus tables: declaration and cube build.
-# ---------------------------------------------------------------------------
-
-
-def _build_corpus_cube(
-    spark: SparkSession,
-    sf_dir: str,
-    fact: DataFrame,
-    t: CorpusTable,
-    keys: tuple[str, ...],
-    measures: tuple[str, ...],
-    time_key: tuple[str, str] | None,
-    dims: tuple[str, ...],
-    group_filter: DataFrame | None = None,
-) -> DataFrame:
-    """The corpus deploy/refresh cube build: fact ⋈ declared registry
-    dims (broadcast — registry-sized at any corpus scale), hour-grain
-    time key materialized, one grouped partial aggregation.
-
-    ``group_filter`` (a DataFrame of group-key tuples) semi-filters the
-    ROWS — after the key columns exist, BEFORE the groupBy — so an
-    affected-group recompute (sources/retention.py) aggregates only the
-    surviving rows of the touched groups, never the corpus. The filter
-    set is delete-sized, so the semi broadcasts."""
-    df = fact
-    for name in dims:
-        d = CORPUS_DIMS[name]
-        dim = d.open(spark, sf_dir)
-        df = df.join(F.broadcast(dim), F.col(d.fact_key) == dim[d.dim_key])
-    group_cols = list(keys)
-    if time_key is not None:
-        alias, src = time_key
-        df = df.withColumn(alias, F.date_trunc("hour", F.col(src)))
-        group_cols.append(alias)
-    return _partials(
-        df, group_cols, (t.measures[m] for m in measures), group_filter
-    )
-
-
-def _corpus_view(
+def _declare(
     name: str,
     table_name: str,
     keys: tuple[str, ...],
     measures: tuple[str, ...] | None,
     time_key: tuple[str, str] | None,
 ) -> _UserProjection:
-    """Validate a corpus-table declaration (the shared constructor of
-    deployed and CDC-maintained corpus views). Each dim-attribute key
-    pulls its registry join into the build; the stored cube then
-    answers statements declaring that dim and grouping by the
-    attribute."""
-    t = CORPUS_TABLES[table_name]
-    dims_needed: list[str] = []
-    for k in keys:
-        if k in t.columns:
-            continue
-        home = next(
-            (
-                dn
-                for dn, d in CORPUS_DIMS.items()
-                if k in d.attrs and table_name in d.fact_tables
-            ),
-            None,
+    """Validate a view declaration over any fact table (the shared
+    constructor of deployed and CDC-maintained views). Each arm
+    attribute key or arm measure pulls its arm (and the arm's parents)
+    into the build; the stored cube then answers the statements
+    declaring those arms."""
+    t = FACT_TABLES.get(table_name)
+    if t is None:
+        raise ValueError(
+            f"unknown projection table {table_name!r} "
+            f"(declarable over {sorted(FACT_TABLES)})"
         )
-        if home is None:
+    if time_key is not None and table_name not in CORPUS_TABLES:
+        raise ValueError(
+            "time_key applies to corpus-table projections only "
+            "(the lineitem star folds date grains from the cubes)"
+        )
+    for k in keys:
+        if k not in t.columns and t.owner(k) is None:
             raise ValueError(
                 f"unknown projection key {k!r} on table {table_name!r}"
             )
-        if home not in dims_needed:
-            dims_needed.append(home)
-    measures = tuple(measures) if measures is not None else tuple(t.measures)
+    if measures is None:
+        measures = tuple(n for n, m in t.measures.items() if t.local(m))
     for m in measures:
         if m not in t.measures:
             raise ValueError(
@@ -551,13 +430,13 @@ def _corpus_view(
             raise ValueError(f"time key alias {alias!r} collides with a key")
     if not keys and time_key is None:
         raise ValueError("a projection needs at least one group key")
+    measures = tuple(measures)
+    arms = view_arms(t, keys, measures)
     proj = _view_projection(
-        name, table_name, keys, (t.measures[m] for m in measures),
-        time_key=time_key,
+        name, table_name, keys, (t.measures[m] for m in measures), arms, time_key
     )
     return _UserProjection(
-        name, table_name, keys, measures, proj,
-        dims=tuple(dims_needed), time_key=time_key,
+        name, table_name, keys, measures, proj, arms=arms, time_key=time_key
     )
 
 
@@ -587,24 +466,18 @@ def deploy_projection(
     it, whichever table that view was over. Returns the router-facing
     projection."""
     keys = tuple(keys)
+    u = _declare(name, table, keys, measures, time_key)
     if table in CORPUS_TABLES:
-        u = _corpus_view(name, table, keys, measures, time_key)
         rows = current_corpus_table(spark, sf_dir, table)
         stem = "user_cproj"
-    elif table == "lineitem":
+    else:
         from .retention import apply_tombstones
 
-        u = _star_view(name, keys, measures, time_key)
         li_name, _ = bucketed_fact_tables(spark, sf_dir)
         rows = apply_tombstones(
             spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
         )
         stem = "user_proj"
-    else:
-        raise ValueError(
-            f"unknown projection table {table!r} "
-            f"(declarable over lineitem or {sorted(CORPUS_TABLES)})"
-        )
     tag, wh = _layout_paths(sf_dir)
     path = os.path.join(wh, f"{stem}_{name}_{tag}")
     u.cube(spark, sf_dir, rows).write.mode("overwrite").parquet(path)
@@ -629,18 +502,21 @@ def drop_projection(spark: SparkSession, sf_dir: str, name: str) -> bool:
 
 def list_projections(spark: SparkSession, sf_dir: str) -> list[dict]:
     """The warehouse's user-view catalog, as plain dicts (the
-    introspection surface: SHOW MATERIALIZED VIEWS); the other
-    family's build fields are None."""
+    introspection surface: SHOW MATERIALIZED VIEWS): the build's arms
+    in the fields the table's spec declares them with (``chain``/
+    ``part``/``supp`` for the star, ``dims`` for a corpus table); the
+    other fields are None."""
     return [
         {
             "name": u.name,
             "table": u.table,
             "keys": u.keys,
             "measures": u.measures,
-            "chain": u.chain,
-            "part": u.part,
-            "supp": u.supp,
-            "dims": u.dims,
+            "chain": None,
+            "part": None,
+            "supp": None,
+            "dims": None,
+            **FACT_TABLES[u.table].agg_spec.arm_fields(u.arms),
             "time_key": u.time_key,
             "path": u.path,
         }

@@ -454,7 +454,7 @@ class CdcProjectionConsumer:
                     "fold time; declare a refresh-maintained view instead "
                     "(deploy_projection)"
                 )
-        from ..sources.user_projections import _corpus_view
+        from ..sources.user_projections import _declare
 
         self.spark = spark
         self.sf_dir = sf_dir
@@ -464,7 +464,7 @@ class CdcProjectionConsumer:
         self.keys = tuple(keys)
         # the catalog entry every publish registers (it validates the
         # measures and builds the partials the view stores)
-        self._view = _corpus_view(name, table, self.keys, measures, None)
+        self._view = _declare(name, table, self.keys, measures, None)
         self.consumed = _resolve_start(spark, sf_dir, table_dir, from_version)
         # a RESUMED consumer re-registers the existing derived table
         # (a fresh session's catalog starts empty)

@@ -49,18 +49,18 @@ queries = load_all()
 # module that imported it.
 import bigdataproj_spark.plans.routing as _routing  # noqa: E402
 
-_route = _routing._route
+_loop = _routing._route
 _chosen: list[str] = []
 
 
 def _recording_route(*a, **k):
-    df, chosen = _route(*a, **k)
+    df, chosen = _loop(*a, **k)
     _chosen.append(chosen)
     return df, chosen
 
 
 for _mod in list(sys.modules.values()):
-    if getattr(_mod, "_route", None) is _route:
+    if getattr(_mod, "_route", None) is _loop:
         _mod._route = _recording_route
 
 out = {}
