@@ -33,7 +33,8 @@ all of them:
 
 - FROM: one fact table, alone or INNER-joined to arms of its model on
   each arm's own edge, every arm's parent joined too (validated
-  structurally as the table and edge SETS, never as text). For ``lineitem`` that is any PREFIX
+  structurally as the table and edge SETS, never as text; a
+  schema-qualified name refuses). For ``lineitem`` that is any PREFIX
   of the order chain (lineitem⋈orders⋈customer⋈nation⋈region on the
   TPC-H keys — join DEPTH is semantically load-bearing, see
   routing.AggQuery) and/or the part and supplier arms, lowering to
@@ -562,11 +563,14 @@ def _join_graph(node: dict) -> tuple[set[str], set[frozenset[str]]]:
     """(base tables, join edges) of a FROM clause: one base table, or
     a tree of ``INNER JOIN … ON a = b`` over base tables, each edge the
     unordered pair of joined column names. UnsupportedSQL for any other
-    shape. The families recognize their joins on these two SETS, never
-    on text, so any paren/ordering DuckDB normalizes away is
-    irrelevant."""
+    shape, and for a schema- or catalog-qualified table name. The
+    families recognize their joins on these two SETS, never on text, so
+    any paren/ordering DuckDB normalizes away is irrelevant."""
     t = node.get("type")
     if t == "BASE_TABLE":
+        if node.get("schema_name") or node.get("catalog_name"):
+            # the model names the warehouse's own tables only
+            raise UnsupportedSQL("qualified table names are not routable")
         return {node.get("table_name", "").lower()}, set()
     if t != "JOIN":
         raise UnsupportedSQL(f"unsupported FROM node {t}")

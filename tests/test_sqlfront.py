@@ -937,11 +937,8 @@ _SHAPES = [
     ("SELECT doc_id FROM documents JOIN sources ON source = src_id", _REFUSED),
     ("SELECT lang FROM documents ORDER BY doc_id", _REFUSED),
     # a schema-qualified table name
-    ("SELECT COUNT(*) AS n FROM other_db.lineitem", AggQuery((), (), _N)),
-    (
-        "SELECT lang, COUNT(*) AS n FROM other_db.documents GROUP BY lang",
-        TableAggQuery("documents", (), ("lang",), _N),
-    ),
+    ("SELECT COUNT(*) AS n FROM other_db.lineitem", _REFUSED),
+    ("SELECT lang, COUNT(*) AS n FROM other_db.documents GROUP BY lang", _REFUSED),
 ]
 
 
