@@ -408,9 +408,7 @@ class TableAggQuery:
     truncs: tuple[tuple[str, str, str], ...] = ()
     dims: tuple[str, ...] = ()
 
-    def group_sources(self) -> dict[str, str]:
-        tm = {alias: col for alias, _unit, col in self.truncs}
-        return {g: tm.get(g, g) for g in self.group_by}
+    group_sources = AggQuery.group_sources
 
     def arms(self) -> tuple[str, ...]:
         return self.dims
