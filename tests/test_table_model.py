@@ -256,6 +256,27 @@ _ROWS = [
     ),
     ("li_scan_raw", ScanQuery(("l_orderkey", "l_tax"), ()), "raw"),
     (
+        "li_scan_zorder_key_and_date",
+        ScanQuery(
+            ("l_partkey", "l_shipdate"),
+            (Pred("l_partkey", "<", 50), _ts("l_shipdate", ">=", _DAY)),
+        ),
+        "dated_lineitem",
+    ),
+    (
+        "li_scan_zorder_key_unstored_column",
+        ScanQuery(("l_partkey", "l_tax"), (Pred("l_partkey", "<", 50),)),
+        "raw",
+    ),
+    (
+        "li_scan_zorder_key_in_or",
+        ScanQuery(
+            ("l_partkey", "l_quantity"),
+            (BoolPred("or", (Pred("l_partkey", "<", 50), Pred("l_quantity", ">", 40))),),
+        ),
+        "raw",
+    ),
+    (
         "li_scan_unknown_column",
         ScanQuery(("nosuch",), ()),
         ("ValueError", "unknown column 'nosuch'"),
@@ -404,6 +425,35 @@ _ROWS = [
         "clustered_documents",
     ),
     ("docs_scan_raw", TableScanQuery("documents", ("doc_id", "n_chars"), ()), "raw"),
+    (
+        "docs_scan_source_range",
+        TableScanQuery(
+            "documents", ("doc_id", "source"), (Pred("source", "in", ("src1", "src2")),)
+        ),
+        "clustered_documents",
+    ),
+    (
+        "docs_scan_n_chars_range",
+        TableScanQuery("documents", ("doc_id", "n_chars"), (Pred("n_chars", ">=", 150),)),
+        "raw",
+    ),
+    (
+        "events_scan_ts_in_or",
+        TableScanQuery(
+            "events",
+            ("event_id", "ts"),
+            (
+                BoolPred(
+                    "or",
+                    (
+                        _ts("ts", ">=", "2024-01-10 00:00:00"),
+                        Pred("event_type", "=", "click"),
+                    ),
+                ),
+            ),
+        ),
+        "raw",
+    ),
     (
         "corpus_scan_unknown_column",
         TableScanQuery("events", ("nosuch",), ()),
