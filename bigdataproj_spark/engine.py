@@ -325,7 +325,7 @@ class Engine:
         filtered copy — is ceded, never clobbered. Canonicalized plan
         hashes are stable across lookups, so an untouched engine view
         always matches its own record."""
-        from .plans.corpus_routing import current_documents, current_events
+        from .plans.routing import current_documents, current_events
         from .plans.routing import current_lineitem, current_orders
         from .schemas import FIXTURE_SCHEMAS
 
@@ -408,7 +408,7 @@ class Engine:
         statements fall back to the word-boundary regex."""
         import re as _re
 
-        from .plans.corpus_routing import CORPUS_DIMS
+        from .plans.routing import CORPUS_DIMS
         from .plans.sqlfront import mentioned_tables
 
         referenced = mentioned_tables(query)
@@ -593,21 +593,24 @@ class Engine:
     # -- S13: routed queries ------------------------------------------------
     def aggregate(self, spec) -> DataFrame:
         """Answer a logical :class:`~bigdataproj_spark.plans.routing.AggQuery`
-        (lineitem star) or :class:`~bigdataproj_spark.plans.corpus_routing.TableAggQuery`
-        (documents/events) from the cheapest deployed projection that
-        subsumes it, else the raw plan — the engine's materialized-view
-        matching front door. The caller never names a layout."""
-        from .plans.sqlfront import route_spec
+        (lineitem star) or :class:`~bigdataproj_spark.plans.routing.TableAggQuery`
+        (documents/events) through :func:`~bigdataproj_spark.plans.routing.route`:
+        the cheapest deployed projection that subsumes it, else the raw
+        plan — the engine's materialized-view matching front door. The
+        caller never names a layout."""
+        from .plans.routing import route_spec
 
         df, _ = route_spec(self.spark, self.sf_dir, spec)
         return df
 
     def scan(self, spec) -> DataFrame:
         """Answer a :class:`~bigdataproj_spark.plans.routing.ScanQuery`
-        (lineitem) or :class:`~bigdataproj_spark.plans.corpus_routing.TableScanQuery`
-        (corpus tables) from the best-covering layout (Z-order /
-        date-partitioned for range predicates), else the raw table."""
-        from .plans.sqlfront import route_spec
+        (lineitem) or :class:`~bigdataproj_spark.plans.routing.TableScanQuery`
+        (corpus tables) through
+        :func:`~bigdataproj_spark.plans.routing.route_scan`: the first
+        clustered layout its range predicates select (Z-order, date- or
+        day-partitioned, lang-clustered), else the raw table."""
+        from .plans.routing import route_spec
 
         df, _ = route_spec(self.spark, self.sf_dir, spec)
         return df

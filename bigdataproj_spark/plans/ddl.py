@@ -570,7 +570,7 @@ def _create(
         raise ValueError(
             f"the view definition is not a declarable aggregate: {e}"
         ) from e
-    from .corpus_routing import TableAggQuery
+    from .routing import TableAggQuery
 
     if not isinstance(parsed.spec, (AggQuery, TableAggQuery)):
         raise ValueError(
@@ -1532,7 +1532,7 @@ def _merge(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
 
         cur = current_orders(spark, sf_dir)
     else:
-        from .corpus_routing import current_documents
+        from .routing import current_documents
 
         cur = current_documents(spark, sf_dir)
     # one stored-KEY scan intersected against the broadcast batch:
@@ -2216,7 +2216,7 @@ def _delete(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
         schema = FIXTURE_SCHEMAS[table_name]
         pred = _parse_where(m.group("where"), schema, table_name)
         if table_name == "documents":
-            from .corpus_routing import current_documents
+            from .routing import current_documents
 
             ids = current_documents(spark, sf_dir).filter(pred).select("doc_id")
             done = delete_documents(spark, sf_dir, ids)

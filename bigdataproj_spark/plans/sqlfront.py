@@ -89,14 +89,13 @@ all of them:
   so ``ORDER BY revenue DESC LIMIT 10`` (the top-k warehouse shape)
   routes onto the cube too;
 - projection+filter scans (no aggregates, no joins): routed through
-  the family's scan router — on lineitem :func:`route_scan`, so a
-  range predicate on a Z-order curve key is answered from the
-  clustered layout and a shipdate range from the
-  ship-month-partitioned layout (derived partition pruning); on the
-  corpus tables :func:`route_corpus_scan`, so an events ``ts`` range
-  opens only the day directories it touches and a documents
-  ``lang``/``source`` predicate reads the clustered layout — with any
-  ORDER BY applied on top.
+  the one scan router (:func:`~.routing.route_scan`), so a range
+  predicate on a Z-order curve key is answered from the clustered
+  layout, a shipdate range from the ship-month-partitioned layout
+  (derived partition pruning), an events ``ts`` range opens only the
+  day directories it touches and a documents ``lang``/``source``
+  predicate reads the clustered layout — with any ORDER BY applied on
+  top.
 
 At 100 TB this is the difference between "the 15k-row cube answer
 exists" and "SELECT ... FROM lineitem GROUP BY ... gets it": the user
@@ -117,7 +116,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .corpus_routing import route_corpus, route_corpus_scan
 from .routing import (
     FACT_TABLES,
     MEASURES,
@@ -130,8 +128,7 @@ from .routing import (
     ScanQuery,
     TableAggQuery,
     TableScanQuery,
-    route,
-    route_scan,
+    route_spec,
 )
 
 
@@ -302,11 +299,22 @@ def _ast(sql: str) -> dict:
     return node
 
 
+def _own_table(n: dict) -> bool:
+    """Whether parse node ``n`` is an unqualified BASE_TABLE: a table
+    of the warehouse itself. A schema- or catalog-qualified name names
+    another database's table, which the engine never routes and never
+    stands a view in for."""
+    return n.get("type") == "BASE_TABLE" and not (
+        n.get("schema_name") or n.get("catalog_name")
+    )
+
+
 def mentioned_tables(sql: str) -> frozenset[str] | None:
-    """The set of base-table names a statement actually REFERENCES
-    (from DuckDB's parse tree — every BASE_TABLE node anywhere in the
-    statement, including joins and subqueries), or None when the
-    statement does not parse as a single SELECT. Engine._ensure_dim_views
+    """The set of the warehouse's base-table names a statement actually
+    REFERENCES (from DuckDB's parse tree — every unqualified BASE_TABLE
+    node anywhere in the statement, including joins and subqueries), or
+    None when the statement does not parse as a single SELECT.
+    Engine._ensure_dim_views
     uses this so a string literal or column alias that merely CONTAINS
     a dim's name never triggers a dim deploy (round-7 ADVICE); the
     regex fallback only applies to statements DuckDB cannot parse."""
@@ -318,7 +326,7 @@ def mentioned_tables(sql: str) -> frozenset[str] | None:
 
     def _walk(n) -> None:
         if isinstance(n, dict):
-            if n.get("type") == "BASE_TABLE" and n.get("table_name"):
+            if _own_table(n) and n.get("table_name"):
                 names.add(str(n["table_name"]).lower())
             for v in n.values():
                 _walk(v)
@@ -568,7 +576,7 @@ def _join_graph(node: dict) -> tuple[set[str], set[frozenset[str]]]:
     any paren/ordering DuckDB normalizes away is irrelevant."""
     t = node.get("type")
     if t == "BASE_TABLE":
-        if node.get("schema_name") or node.get("catalog_name"):
+        if not _own_table(node):
             # the model names the warehouse's own tables only
             raise UnsupportedSQL("qualified table names are not routable")
         return {node.get("table_name", "").lower()}, set()
@@ -933,23 +941,6 @@ def parse_sql(sql: str) -> ParsedSQL:
         tuple((a, u, c) for a, (u, c) in truncs.items()),
     )
     return ParsedSQL(spec, tuple(out), order, having, limit)
-
-
-# One router per spec type: the SQL front door and Engine.aggregate /
-# Engine.scan dispatch through this table (:func:`route_spec`).
-_ROUTERS = {
-    AggQuery: route,
-    ScanQuery: route_scan,
-    TableAggQuery: route_corpus,
-    TableScanQuery: route_corpus_scan,
-}
-
-
-def route_spec(spark: SparkSession, sf_dir: str, spec) -> tuple[DataFrame, str]:
-    """Answer any router spec through its family's router. Returns
-    (result, chosen); a spec the router cannot plan raises its
-    ValueError."""
-    return _ROUTERS[type(spec)](spark, sf_dir, spec)
 
 
 def route_sql(
@@ -1358,7 +1349,7 @@ ORDER BY lang, source
 
 @query("r164_sql_docs_profile", oracle=_SQL_DOCS_PROFILE, tags=("S15", "E1", "A1", "text"))
 def r164_sql_docs_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus router's flagship (S15): a text-profile statement
+    """The documents cube's flagship (S15): a text-profile statement
     whose token-count aggregates spell out the engine's whitespace
     tokenizer — a full-corpus regex pass if run raw — answered from
     the (lang, source) doc-stats cube, where that pass already ran
@@ -1387,12 +1378,12 @@ ORDER BY event_day, event_type
 
 @query("r165_sql_events_rollup", oracle=_SQL_EVENTS_ROLLUP, tags=("S15", "E1", "A1", "ST1"))
 def r165_sql_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series SQL through the corpus router (S15): a per-day
+    """Time-series SQL through the router (S15): a per-day
     per-type event rollup with a GRAIN-BOUNDARY time-range predicate,
     answered from the (event_type, hour) cube — the day grouping
     re-aggregates stored hour groups exactly, and ``ts >= midnight``
     (an hour boundary) is a row-set equivalence on the stored key
-    (corpus_routing module docstring spells out why >=/< fold and
+    (plans/routing.py module docstring spells out why >=/< fold and
     <=/=/BETWEEN must not). The type filter folds on the other group
     key, and the value partials re-aggregate in the same int64
     fixed-point arithmetic the DECIMAL(18,2) oracle form computes.

@@ -22,7 +22,8 @@ deployed layouts that make that generalization earn its keep:
   (day/month/quarter/year) re-aggregates exactly (hour groups are
   whole subsets of coarser groups; all partials are commutative
   monoids) and hour-boundary time-range predicates fold exactly
-  (plans/corpus_routing.py spells out the boundary rule).
+  (the plans/routing.py module docstring spells out the boundary
+  rule).
 
 Both cubes store the SAME partial-state shapes as the lineitem cubes
 (int64 fixed-point sums, non-null counts, min/max partials — see
@@ -77,7 +78,7 @@ _EVENTS_SKETCH_COLS = ("users_hll",)
 def doc_token_count() -> Column:
     """Per-doc whitespace-token count — THE per-row expression shared
     by the cube deploy/refresh AND the router's raw query plan
-    (plans/corpus_routing.py imports it), so the two can never drift:
+    (plans/routing.py imports it), so the two can never drift:
     the routed answer is bit-identical to the raw plan because it is
     literally the same expression, executed at deploy instead of per
     query. Oracle twin: ``len(list_filter(string_split_regex(
@@ -190,7 +191,7 @@ def _refresh_dim_view(spark, sf_dir: str, name: str, new_path: str) -> None:
     ours = session_state(spark).dim_views
     if ours.get(name) != sf_dir:
         return
-    from ..plans.corpus_routing import CORPUS_DIMS
+    from ..plans.routing import CORPUS_DIMS
 
     d = CORPUS_DIMS.get(name)
     if (
@@ -334,7 +335,7 @@ def docs_stats_cube_table(spark: SparkSession, sf_dir: str) -> str:
         # current_documents is tombstone-aware (S19) and reads the
         # maintained clustered layout when deployed — a deploy after a
         # delete or an ingest describes the CURRENT corpus either way
-        from ..plans.corpus_routing import current_documents
+        from ..plans.routing import current_documents
 
         return (
             current_documents(spark, sf_dir)
@@ -357,7 +358,7 @@ def events_hourly_cube_table(spark: SparkSession, sf_dir: str) -> str:
         # current_events is watermark-aware (S19b) and reads the
         # maintained layout when deployed — a deploy after an expiry
         # or an ingest describes the CURRENT corpus either way
-        from ..plans.corpus_routing import current_events
+        from ..plans.routing import current_events
 
         e = current_events(spark, sf_dir)
         return (

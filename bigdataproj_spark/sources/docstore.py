@@ -1,7 +1,7 @@
 """Round 7 (S15, closing r6-VERDICT item 3): clustered at-rest layout
 for DOCUMENTS row-level scans.
 
-`route_corpus_scan` gave the events table the S14 treatment (day
+The scan router gave the events table the S14 treatment (day
 directories); documents scans still read the raw fixture parquet. The
 canonical row-level document queries are corpus slices — "the English
 docs from these sources", "the short docs of one language" — so the

@@ -46,7 +46,7 @@ from .bucketed import (
 from .corpus_cubes import refresh_docs_cube, refresh_events_cube
 from .dated import append_dated, append_dated_events, dated_events, dated_lineitem
 from .state import session_state, warehouse
-from .zorder import _ZORDER_COLS, append_zordered, zordered_lineitem
+from .zorder import ZORDER_COLS, ZORDER_KEYS, append_zordered, zordered_lineitem
 
 
 def refresh_warehouse(
@@ -387,9 +387,7 @@ def _refresh_warehouse_body(
 
             def _leg_zorder() -> None:
                 zp = zordered_lineitem(spark, sf_dir)
-                append_zordered(
-                    shared.select(*_ZORDER_COLS), zp, "l_partkey", "l_suppkey"
-                )
+                append_zordered(shared.select(*ZORDER_COLS), zp, *ZORDER_KEYS)
                 done["zorder_lineitem"] = zp
 
             def _leg_dated() -> None:
@@ -617,7 +615,7 @@ def optimize_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             apply_tombstones(
                 spark, sf_dir, "orders", spark.read.parquet(zp), "l_orderkey"
             ),
-            new_z, "l_partkey", "l_suppkey",
+            new_z, *ZORDER_KEYS,
         )
         ws.zorder = new_z
         done["zorder_lineitem"] = new_z

@@ -229,7 +229,7 @@ def delete_documents(spark: SparkSession, sf_dir: str, doc_ids) -> dict[str, str
     verbatim views re-point. Returns {layout: new path} for the
     layouts that were republished. All-or-nothing under WarehouseTxn."""
     from ..catalog import bump_mutation_epoch
-    from ..plans.corpus_routing import current_documents
+    from ..plans.routing import current_documents
     from .txn import WarehouseTxn
 
     ids = _normalize_ids(spark, doc_ids, "doc_id")
@@ -782,7 +782,7 @@ def q09_sql_delete_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
 # opened), with the hour-grain cubes REBUILT-BY-FILTER exactly
 # (the cutoff is required to sit on an hour boundary, so dropping
 # stored hour groups < T is a row-set equivalence — the same
-# grain-boundary argument plans/corpus_routing.py makes for time
+# grain-boundary argument plans/routing.py makes for time
 # predicates). The scheduled OPTIMIZE rewrite physically drops the
 # expired rows (whole day directories on the dated layout).
 # ---------------------------------------------------------------------------
@@ -821,7 +821,7 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
     rows (every group may have lost rows — documented cost, on the
     retention cadence, never per query). All-or-nothing under
     WarehouseTxn."""
-    from ..plans.corpus_routing import current_events
+    from ..plans.routing import current_events
     from .txn import WarehouseTxn
 
     raw = before_ts.strip()

@@ -499,7 +499,7 @@ def _repoint_views(
     directions. Mirrors Engine._ensure_current_views' relation choices,
     minus the takeover checks (the caller resolved ownership first)."""
     from ..catalog import table
-    from ..plans.corpus_routing import current_documents, current_events
+    from ..plans.routing import current_documents, current_events
     from ..plans.routing import current_lineitem, current_orders
     from ..schemas import FIXTURE_SCHEMAS
 
@@ -1018,7 +1018,7 @@ def table_changes(
     from pyspark.sql import functions as F
     from pyspark.sql.types import IntegerType, StringType, StructField
 
-    from ..plans.corpus_routing import current_documents, current_events
+    from ..plans.routing import current_documents, current_events
     from ..plans.routing import current_lineitem, current_orders
     from ..schemas import FIXTURE_SCHEMAS
     from .retention import TOMBSTONE_KEYS

@@ -82,7 +82,7 @@ def listing(sf_dir: str) -> frozenset[str]:
 def repoint_dim_views(spark: SparkSession, sf_dir: str) -> None:
     """Re-register the engine-owned dim temp views of ``sf_dir`` from
     its installed state."""
-    from ..plans.corpus_routing import CORPUS_DIMS
+    from ..plans.routing import CORPUS_DIMS
 
     for name, owner in list(session_state(spark).dim_views.items()):
         d = CORPUS_DIMS.get(name)

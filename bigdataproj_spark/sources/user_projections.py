@@ -18,10 +18,9 @@ see plans/routing.py). :func:`deploy_projection` is that surface:
 materializes the cube (int64 fixed-point sums, non-null counts,
 min/max partials — the SAME stored-state contract as every built-in,
 so answers are bit-identical by construction), registers it in the
-warehouse's one user-view catalog, which the table's router
-(:func:`plans.routing.route` for the lineitem star,
-:func:`plans.corpus_routing.route_corpus` for documents/events)
-consults after its built-ins, and from that moment every matching
+warehouse's one user-view catalog, which the router
+(:func:`plans.routing.route`, for every fact table) consults after
+its built-ins, and from that moment every matching
 spec AND every matching SQL statement through the front door is
 answered from it — the caller of those queries never learns a
 projection exists. View names are unique across both families:
@@ -51,7 +50,7 @@ refresh-maintained view alongside the built-ins of its table.
   and optionally ONE hour-grain time key over the fact's timestamp —
   hour is the finest scale-invariant grain, and every coarser grain
   and hour-boundary range predicate folds onto it
-  (plans/corpus_routing.py's grain-boundary rules apply verbatim).
+  (the grain-boundary rules of plans/routing.py apply verbatim).
 
 Cardinality is the deployer's responsibility exactly as in every
 warehouse (a cube keyed by a near-unique column is a bad view, not a
@@ -74,7 +73,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.corpus_routing import CORPUS_TABLES, current_corpus_table
+from ..plans.routing import CORPUS_TABLES, current_corpus_table
 from ..plans.routing import (
     FACT_TABLES,
     LINEITEM,

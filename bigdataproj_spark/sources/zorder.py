@@ -166,12 +166,15 @@ def recluster_zordered(
     return out
 
 
-# The column set the deployed Z-order lineitem layout stores (shared
-# with the maintenance appender so delta batches project identically).
-_ZORDER_COLS = (
+# The column set the deployed Z-order lineitem layout stores and its
+# two curve keys — read by the maintenance appender, so delta batches
+# project and cluster identically, and by the scan router's layout
+# record (plans/routing.py SCAN_LAYOUTS).
+ZORDER_COLS = (
     "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
     "l_quantity", "l_extendedprice",
 )
+ZORDER_KEYS = ("l_partkey", "l_suppkey")
 
 
 def zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
@@ -184,10 +187,9 @@ def zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
     tag, wh = _layout_paths(sf_dir)
     path = deploy_name(spark, sf_dir, os.path.join(wh, f"lineitem_zorder_{tag}"))
     write_zordered(
-        table(spark, sf_dir, "lineitem").select(*_ZORDER_COLS),
+        table(spark, sf_dir, "lineitem").select(*ZORDER_COLS),
         path,
-        "l_partkey",
-        "l_suppkey",
+        *ZORDER_KEYS,
     )
     ws.zorder = path
     return path

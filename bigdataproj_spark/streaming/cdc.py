@@ -345,7 +345,7 @@ class CdcConsumer:
         if head is not None:
             self.consumed = head
         if df is None:
-            from ..plans.corpus_routing import current_corpus_table
+            from ..plans.routing import current_corpus_table
 
             df = current_corpus_table(self.spark, self.sf_dir, self.table)
         return bootstrap(
@@ -393,7 +393,7 @@ class CdcProjectionConsumer:
     in the S16 catalog, stored in the engine's standard partial-state
     contract (exact int64 sums, per-measure non-null counts, min/max
     partials, COUNT(*) — the same columns every built-in cube stores),
-    so ``route_corpus``/``Engine.sql`` answer matching statements from
+    so ``route``/``Engine.sql`` answer matching statements from
     it exactly as from any deployed materialized view. This is "a user
     view maintained BY the feed": refresh-maintained views pay their
     delta merge inside every mutation; this one decouples — mutations
@@ -437,7 +437,7 @@ class CdcProjectionConsumer:
         measures: tuple[str, ...] | None = None,
         from_version: int | None = None,
     ):
-        from ..plans.corpus_routing import CORPUS_TABLES
+        from ..plans.routing import CORPUS_TABLES
 
         t = CORPUS_TABLES.get(table)
         if t is None:
@@ -508,7 +508,7 @@ class CdcProjectionConsumer:
     def bootstrap(self) -> str:
         """Seed the view from the CURRENT state, watermarked at the
         current ledger head, and register it in the S16 catalog."""
-        from ..plans.corpus_routing import current_corpus_table
+        from ..plans.routing import current_corpus_table
 
         head = self._head()
         if head is not None:
@@ -566,7 +566,7 @@ class CdcProjectionConsumer:
         return n
 
     def _apply(self, changes: DataFrame, head: int) -> None:
-        from ..plans.corpus_routing import current_corpus_table
+        from ..plans.routing import current_corpus_table
         from ..sources.bucketed import merge_partial_frames
         from ..sources.user_projections import _merge_cols
 
@@ -762,7 +762,7 @@ def r178_cdc_consumer_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import TABLES
     from ..engine import Engine
-    from ..plans.corpus_routing import current_documents
+    from ..plans.routing import current_documents
     from ..sources.retention import _demo_corpus
 
     demo = _demo_corpus(spark, sf_dir, TABLES, demo="cdc_consumer")

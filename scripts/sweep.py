@@ -10,9 +10,11 @@ Usage: python scripts/sweep.py <tag> --out-dir DIR --prefix NAME [--sf-dir SF]
 
 Output: {name: {"sec": s, "tags": [...], "chosen": [...]}}, failures
 recorded as {"sec": null, "err": ...}; ``chosen`` lists the layout each
-router call of the query picked (a projection name, "bucketed_spine"
-or "raw"), read off the routers' one candidate loop. Single timed pass per query (triage, not the
-bench protocol); the bench's numbers stay authoritative.
+router call of the query picked (a projection name, a scan layout,
+"bucketed_spine" or "raw"), read off the aggregate router ``route`` and
+the scan router ``route_scan`` of plans/routing.py. Single timed pass
+per query (triage, not the bench protocol); the bench's numbers stay
+authoritative.
 """
 
 import argparse
@@ -45,23 +47,26 @@ spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
 
 queries = load_all()
 
-# Record every routing decision: wrap the one candidate loop in each
-# module that imported it.
+# Record every routing decision: every routed query reaches the two
+# routers through plans/routing.py's own globals (its registry queries
+# and route_spec, the dispatcher behind the SQL front door and the
+# Engine), so wrapping them there sees every call.
 import bigdataproj_spark.plans.routing as _routing  # noqa: E402
 
-_loop = _routing._route
 _chosen: list[str] = []
 
 
-def _recording_route(*a, **k):
-    df, chosen = _loop(*a, **k)
-    _chosen.append(chosen)
-    return df, chosen
+def _recording(router):
+    def _wrapped(*a, **k):
+        df, chosen = router(*a, **k)
+        _chosen.append(chosen)
+        return df, chosen
+
+    return _wrapped
 
 
-for _mod in list(sys.modules.values()):
-    if getattr(_mod, "_route", None) is _loop:
-        _mod._route = _recording_route
+_routing.route = _recording(_routing.route)
+_routing.route_scan = _recording(_routing.route_scan)
 
 out = {}
 for name, q in sorted(queries.items()):

@@ -17,14 +17,14 @@ from pyspark.sql import functions as F
 
 from bigdataproj_spark.catalog import table
 from bigdataproj_spark.plans import physical_plan as plan_of
-from bigdataproj_spark.plans.corpus_routing import (
+from bigdataproj_spark.plans.routing import (
     CORPUS_TABLES,
     AggCall,
     BoolPred,
     Pred,
     TableAggQuery,
     _raw_plan,
-    route_corpus,
+    route,
 )
 from bigdataproj_spark.plans.sqlfront import (
     CORPUS_AVG_SQL,
@@ -59,7 +59,7 @@ _DOCS_PROFILE = TableAggQuery(
 
 
 def test_docs_profile_routes_to_cube_and_skips_raw_scan(spark, sf_dir):
-    df, chosen = route_corpus(spark, sf_dir, _DOCS_PROFILE)
+    df, chosen = route(spark, sf_dir, _DOCS_PROFILE)
     assert chosen == "docs_stats_cube"
     plan = plan_of(df)
     # the scan reads stored partials out of the warehouse, and touches
@@ -75,14 +75,14 @@ def test_routed_cube_read_runs_one_job(spark, sf_dir):
     Spark job: the one-split rule (session.one_split) plans the cube
     scan as a single partition, so the aggregate above it needs no
     exchange and no separate scan and shuffle stages."""
-    df, chosen = route_corpus(spark, sf_dir, _DOCS_PROFILE)
+    df, chosen = route(spark, sf_dir, _DOCS_PROFILE)
     assert chosen == "docs_stats_cube"
     want = df.toPandas()  # deploys the cube and warms the scan memo
     sc = spark.sparkContext
     group = "routed-cube-read-one-job"
     sc.setJobGroup(group, "warm routed cube read")
     try:
-        df, _ = route_corpus(spark, sf_dir, _DOCS_PROFILE)
+        df, _ = route(spark, sf_dir, _DOCS_PROFILE)
         got = df.toPandas()
     finally:
         sc._jsc.clearJobGroup()
@@ -91,7 +91,7 @@ def test_routed_cube_read_runs_one_job(spark, sf_dir):
 
 
 def test_docs_routed_equals_raw_plan(spark, sf_dir):
-    routed, chosen = route_corpus(spark, sf_dir, _DOCS_PROFILE)
+    routed, chosen = route(spark, sf_dir, _DOCS_PROFILE)
     assert chosen == "docs_stats_cube"
     raw = _raw_plan(spark, sf_dir, _DOCS_PROFILE)
     assert routed.toPandas().equals(raw.toPandas())
@@ -104,7 +104,7 @@ def test_docs_non_key_filter_falls_back_to_raw(spark, sf_dir):
         group_by=("lang",),
         aggs=(AggCall("sum", "chars", "total_chars"),),
     )
-    df, chosen = route_corpus(spark, sf_dir, q)
+    df, chosen = route(spark, sf_dir, q)
     assert chosen == "raw"
     # the raw plan reads the CURRENT documents relation: the fixture,
     # or the maintained clustered layout once a prior test deployed it
@@ -116,14 +116,14 @@ def test_docs_count_distinct_fold_vs_raw(spark, sf_dir):
     folds = TableAggQuery(
         "documents", (), ("lang",), (AggCall("count_distinct", "source", "n_src"),)
     )
-    _, chosen = route_corpus(spark, sf_dir, folds)
+    _, chosen = route(spark, sf_dir, folds)
     assert chosen == "docs_stats_cube"
     # doc_id is not a stored group key: its distinct set is not
     # derivable from the cube, so the spec must run raw
     raw = TableAggQuery(
         "documents", (), ("lang",), (AggCall("count_distinct", "doc_id", "n_doc"),)
     )
-    _, chosen = route_corpus(spark, sf_dir, raw)
+    _, chosen = route(spark, sf_dir, raw)
     assert chosen == "raw"
 
 
@@ -156,7 +156,7 @@ def test_events_grain_boundary_fold_rules(spark, sf_dir):
     ]
     for pred, want in cases:
         q = mk(pred)
-        df, chosen = route_corpus(spark, sf_dir, q)
+        df, chosen = route(spark, sf_dir, q)
         assert chosen == want, (pred, chosen)
         raw = _raw_plan(spark, sf_dir, q)
         assert df.toPandas().equals(raw.toPandas()), pred
@@ -184,7 +184,7 @@ def test_events_boolean_tree_with_ts_leaf_folds(spark, sf_dir):
         ("event_type",),
         (AggCall("avg", "value", "avg_value"), AggCall("count_star", None, "n")),
     )
-    df, chosen = route_corpus(spark, sf_dir, q)
+    df, chosen = route(spark, sf_dir, q)
     assert chosen == "events_hourly_cube"
     assert df.toPandas().equals(_raw_plan(spark, sf_dir, q).toPandas())
 
@@ -196,7 +196,7 @@ def test_events_trunc_grains_fold_onto_hour_cube(spark, sf_dir):
             (AggCall("max", "value", "max_value"), AggCall("count_star", None, "n")),
             truncs=(("g", unit, "ts"),),
         )
-        df, chosen = route_corpus(spark, sf_dir, q)
+        df, chosen = route(spark, sf_dir, q)
         assert chosen == "events_hourly_cube", unit
         assert df.toPandas().equals(_raw_plan(spark, sf_dir, q).toPandas()), unit
 
@@ -234,7 +234,7 @@ def test_approx_distinct_folds_on_sketch_partials(spark, sf_dir):
             AggCall("count_star", None, "n"),
         ),
     )
-    df, chosen = route_corpus(spark, sf_dir, q)
+    df, chosen = route(spark, sf_dir, q)
     assert chosen == "events_hourly_cube"
     got = df.toPandas()
     raw = _raw_plan(spark, sf_dir, q).toPandas()
@@ -257,7 +257,7 @@ def test_approx_distinct_folds_on_sketch_partials(spark, sf_dir):
         "events", (), ("event_type",),
         (AggCall("approx_distinct", "event_id", "a"),),
     )
-    _, chosen = route_corpus(spark, sf_dir, q2)
+    _, chosen = route(spark, sf_dir, q2)
     assert chosen == "raw"
 
 
@@ -269,20 +269,20 @@ def test_events_user_grouping_falls_back_to_raw(spark, sf_dir):
     q = TableAggQuery(
         "events", (), ("user_id",), (AggCall("sum", "value", "total"),)
     )
-    _, chosen = route_corpus(spark, sf_dir, q)
+    _, chosen = route(spark, sf_dir, q)
     assert chosen == "raw" or chosen.startswith("user:"), chosen
     # a grouping no stored view covers (event_id is near-unique and
     # never a view key) must still fall back raw unconditionally
     q2 = TableAggQuery(
         "events", (), ("event_id",), (AggCall("sum", "value", "total"),)
     )
-    _, chosen2 = route_corpus(spark, sf_dir, q2)
+    _, chosen2 = route(spark, sf_dir, q2)
     assert chosen2 == "raw"
 
 
 def test_corpus_distinct_and_global_shapes(spark, sf_dir, oracle):
     distinct = TableAggQuery("documents", (), ("lang", "source"), ())
-    df, chosen = route_corpus(spark, sf_dir, distinct)
+    df, chosen = route(spark, sf_dir, distinct)
     assert chosen == "docs_stats_cube"
     want = oracle.execute(
         "SELECT DISTINCT lang, source FROM documents ORDER BY lang, source"
@@ -294,7 +294,7 @@ def test_corpus_distinct_and_global_shapes(spark, sf_dir, oracle):
         (),
         (AggCall("sum", "value", "total"), AggCall("count_star", None, "n")),
     )
-    df, chosen = route_corpus(spark, sf_dir, glob)
+    df, chosen = route(spark, sf_dir, glob)
     assert chosen == "events_hourly_cube"
     want = oracle.execute(
         "SELECT CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total,"
@@ -305,18 +305,18 @@ def test_corpus_distinct_and_global_shapes(spark, sf_dir, oracle):
 
 def test_corpus_validation_refusals(spark, sf_dir):
     with pytest.raises(ValueError, match="unknown column"):
-        route_corpus(
+        route(
             spark, sf_dir,
             TableAggQuery("documents", (Pred("bogus", "=", 1),), ("lang",),
                           (AggCall("count_star", None, "n"),)),
         )
     with pytest.raises(ValueError, match="unknown corpus table"):
-        route_corpus(
+        route(
             spark, sf_dir,
             TableAggQuery("tweets", (), ("lang",), (AggCall("count_star", None, "n"),)),
         )
     with pytest.raises(ValueError, match="non-timestamp"):
-        route_corpus(
+        route(
             spark, sf_dir,
             TableAggQuery("documents", (), ("g",), (AggCall("count_star", None, "n"),),
                           truncs=(("g", "month", "lang"),)),
@@ -346,9 +346,9 @@ def test_events_scan_routes_to_dated_layout_and_prunes(spark, sf_dir, oracle):
     layout: identical rows to the raw-table filter, the derived
     partition filter reaches the scan node, and the scan materializes
     only the kept days' rows (metric-asserted, like tests/test_dated.py)."""
-    from bigdataproj_spark.plans.corpus_routing import (
+    from bigdataproj_spark.plans.routing import (
         TableScanQuery,
-        route_corpus_scan,
+        route_scan,
     )
 
     q = TableScanQuery(
@@ -360,7 +360,7 @@ def test_events_scan_routes_to_dated_layout_and_prunes(spark, sf_dir, oracle):
                  cast="timestamp"),
         ),
     )
-    df, chosen = route_corpus_scan(spark, sf_dir, q)
+    df, chosen = route_scan(spark, sf_dir, q)
     assert chosen == "dated_events"
     plan = plan_of(df)
     assert "PartitionFilters" in plan and "event_day_p" in plan, plan
@@ -380,13 +380,13 @@ def test_events_scan_routes_to_dated_layout_and_prunes(spark, sf_dir, oracle):
 
 
 def test_scan_without_ts_range_routes_raw(spark, sf_dir):
-    from bigdataproj_spark.plans.corpus_routing import (
+    from bigdataproj_spark.plans.routing import (
         TableScanQuery,
-        route_corpus_scan,
+        route_scan,
     )
 
     # value-only filter: no time range, nothing to prune on
-    _, chosen = route_corpus_scan(
+    _, chosen = route_scan(
         spark, sf_dir,
         TableScanQuery("events", ("event_id", "value"),
                        (Pred("value", ">=", 400.0),)),
@@ -394,7 +394,7 @@ def test_scan_without_ts_range_routes_raw(spark, sf_dir):
     assert chosen == "raw"
     # a documents scan with NO cluster-key predicate (n_chars alone is
     # the tertiary sort, not a prune axis) reads the raw table
-    _, chosen = route_corpus_scan(
+    _, chosen = route_scan(
         spark, sf_dir,
         TableScanQuery("documents", ("doc_id", "lang"),
                        (Pred("n_chars", ">=", 200),)),
@@ -513,7 +513,7 @@ def test_engine_aggregate_dispatches_corpus_specs(spark, sf_dir):
 
     eng = Engine(spark, sf_dir)
     got = eng.aggregate(_DOCS_PROFILE).toPandas()
-    want, chosen = route_corpus(spark, sf_dir, _DOCS_PROFILE)
+    want, chosen = route(spark, sf_dir, _DOCS_PROFILE)
     assert chosen == "docs_stats_cube"
     assert got.equals(want.toPandas())
 
@@ -664,7 +664,7 @@ def _corpus_sql(
     head = "SELECT DISTINCT" if not q.aggs else "SELECT"
     from_clause = q.table
     for name in q.dims:
-        from bigdataproj_spark.plans.corpus_routing import CORPUS_DIMS
+        from bigdataproj_spark.plans.routing import CORPUS_DIMS
 
         d = CORPUS_DIMS[name]
         from_clause += f" JOIN {name} ON {d.fact_key} = {d.dim_key}"
@@ -825,7 +825,7 @@ ev_scan_specs = st.fixed_dictionaries(
 
 
 def _ev_scan_spec(p):
-    from bigdataproj_spark.plans.corpus_routing import TableScanQuery
+    from bigdataproj_spark.plans.routing import TableScanQuery
 
     filters = []
     if p["ts_pred"]:
@@ -850,7 +850,7 @@ def test_random_events_scan_routes_and_matches_duckdb(spark, sf_dir, _ora, p):
     protects: the dated-layout answer must be row-identical to DuckDB
     over raw parquet for every drawn predicate set, through both the
     spec and the SQL entry, with the same layout choice."""
-    from bigdataproj_spark.plans.corpus_routing import route_corpus_scan
+    from bigdataproj_spark.plans.routing import route_scan
 
     spec = _ev_scan_spec(p)
     conds = [_cond_sql(f) for f in spec.filters]
@@ -863,7 +863,7 @@ def test_random_events_scan_routes_and_matches_duckdb(spark, sf_dir, _ora, p):
     sql_df, sql_chosen = route_sql(spark, sf_dir, sql)
     want = _ora.execute(sql).fetchdf()
     compare_frames(sql_df.toPandas(), want, f"ev-scan-fuzz[{sql_chosen}] {sql}")
-    df, chosen = route_corpus_scan(spark, sf_dir, spec)
+    df, chosen = route_scan(spark, sf_dir, spec)
     assert chosen == sql_chosen, (chosen, sql_chosen, sql)
     expected = "dated_events" if p["ts_pred"] else "raw"
     assert chosen == expected, (chosen, sql)
@@ -901,7 +901,7 @@ def test_random_approx_spec_routed_equals_raw(spark, sf_dir, filt, type_key, tru
         ),
         truncs,
     )
-    routed, chosen = route_corpus(spark, sf_dir, spec)
+    routed, chosen = route(spark, sf_dir, spec)
     assert routed.toPandas().equals(_raw_plan(spark, sf_dir, spec).toPandas()), (
         chosen, spec,
     )
@@ -914,7 +914,7 @@ def test_random_approx_spec_routed_equals_raw(spark, sf_dir, filt, type_key, tru
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_random_corpus_spec_routes_and_matches_duckdb(spark, sf_dir, _ora, p):
-    """route_corpus(), the raw plan, and the generated SQL must agree
+    """route(), the raw plan, and the generated SQL must agree
     on any drawn corpus spec — whichever cube (or none) answers."""
     spec = _doc_spec(p) if "groups" in p else _ev_spec(p)
     # post-aggregation extras (HAVING needs a COUNT(*) in the select
@@ -933,7 +933,7 @@ def test_random_corpus_spec_routes_and_matches_duckdb(spark, sf_dir, _ora, p):
     sql_df, sql_chosen = route_sql(spark, sf_dir, sql)
     want = _ora.execute(sql).fetchdf()
     compare_frames(sql_df.toPandas(), want, f"corpus-fuzz[{sql_chosen}] {sql}")
-    routed, chosen = route_corpus(spark, sf_dir, spec)
+    routed, chosen = route(spark, sf_dir, spec)
     assert chosen == sql_chosen, (chosen, sql_chosen, sql)
     if chosen != "raw":
         raw = _raw_plan(spark, sf_dir, spec).toPandas()
@@ -962,7 +962,7 @@ def test_sources_dim_folds_onto_cube_and_equals_raw(spark, sf_dir):
         ),
         dims=("sources",),
     )
-    df, chosen = route_corpus(spark, sf_dir, q)
+    df, chosen = route(spark, sf_dir, q)
     assert chosen == "docs_stats_cube"
     plan = plan_of(df)
     assert "documents.parquet" not in plan, plan
@@ -981,7 +981,7 @@ def test_sources_dim_fold_refuse_table(spark, sf_dir):
         (AggCall("count_distinct", "s_kind", "n_kinds"),),
         dims=("sources",),
     )
-    _, chosen = route_corpus(spark, sf_dir, cd)
+    _, chosen = route(spark, sf_dir, cd)
     assert chosen == "docs_stats_cube"
 
     rowlevel = TableAggQuery(
@@ -989,18 +989,18 @@ def test_sources_dim_fold_refuse_table(spark, sf_dir):
         (AggCall("sum", "chars", "total_chars"),),
         dims=("sources",),
     )
-    df, chosen = route_corpus(spark, sf_dir, rowlevel)
+    df, chosen = route(spark, sf_dir, rowlevel)
     assert chosen == "raw"
     assert df.toPandas().equals(_raw_plan(spark, sf_dir, rowlevel).toPandas())
 
     with pytest.raises(ValueError, match="unknown"):
-        route_corpus(
+        route(
             spark, sf_dir,
             TableAggQuery("documents", (), ("s_kind",),
                           (AggCall("count_star", None, "n"),)),
         )
     with pytest.raises(ValueError, match="does not join"):
-        route_corpus(
+        route(
             spark, sf_dir,
             TableAggQuery("events", (), ("event_type",),
                           (AggCall("count_star", None, "n"),),
@@ -1180,7 +1180,7 @@ def test_random_dim_spec_routes_and_matches_duckdb(spark, sf_dir, _ora_dims, p):
     sql_df, sql_chosen = route_sql(spark, sf_dir, sql)
     want = _ora_dims.execute(sql).fetchdf()
     compare_frames(sql_df.toPandas(), want, f"dim-fuzz[{sql_chosen}] {sql}")
-    routed, chosen = route_corpus(spark, sf_dir, spec)
+    routed, chosen = route(spark, sf_dir, spec)
     assert chosen == sql_chosen, (chosen, sql_chosen, sql)
     if chosen != "raw":
         raw = _raw_plan(spark, sf_dir, spec).toPandas()
@@ -1203,14 +1203,14 @@ def test_event_types_dim_folds_onto_hour_cube(spark, sf_dir):
         truncs=(("g_day", "day", "ts"),),
         dims=("event_types",),
     )
-    df, chosen = route_corpus(spark, sf_dir, q)
+    df, chosen = route(spark, sf_dir, q)
     assert chosen == "events_hourly_cube"
     plan = plan_of(df)
     assert "events.parquet" not in plan, plan
     assert df.toPandas().equals(_raw_plan(spark, sf_dir, q).toPandas())
 
     with pytest.raises(ValueError, match="does not join"):
-        route_corpus(
+        route(
             spark, sf_dir,
             TableAggQuery("documents", (), ("e_category",),
                           (AggCall("count_star", None, "n"),),
@@ -1273,9 +1273,9 @@ def test_corpus_raw_paths_see_ingested_corpus(spark, sf_dir, tmp_path):
     after refresh_warehouse ingests document/event deltas, the RAW
     aggregate fallback and the raw scan branch must describe the same
     base+delta corpus the cubes and clustered layouts describe."""
-    from bigdataproj_spark.plans.corpus_routing import (
+    from bigdataproj_spark.plans.routing import (
         TableScanQuery,
-        route_corpus_scan,
+        route_scan,
     )
     from bigdataproj_spark.sources.maintenance import refresh_warehouse
 
@@ -1301,7 +1301,7 @@ def test_corpus_raw_paths_see_ingested_corpus(spark, sf_dir, tmp_path):
         "documents", (Pred("n_chars", ">=", 0),), ("lang",),
         (AggCall("count_star", None, "n"),),
     )
-    df, chosen = route_corpus(spark, sf_base, agg)
+    df, chosen = route(spark, sf_base, agg)
     assert chosen == "raw"
     got = {r.lang: r.n for r in df.collect()}
     want = {
@@ -1312,6 +1312,6 @@ def test_corpus_raw_paths_see_ingested_corpus(spark, sf_dir, tmp_path):
 
     # raw scan branch (no prune key): same contract on events
     scan = TableScanQuery("events", ("event_id",), (Pred("value", ">=", 0.0),))
-    df, chosen = route_corpus_scan(spark, sf_base, scan)
+    df, chosen = route_scan(spark, sf_base, scan)
     assert chosen == "raw"
     assert df.count() == ev.filter(F.col("value") >= 0.0).count()

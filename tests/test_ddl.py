@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from bigdataproj_spark.catalog import table
 from bigdataproj_spark.engine import Engine
-from bigdataproj_spark.plans.corpus_routing import TableAggQuery, route_corpus
+from bigdataproj_spark.plans.routing import TableAggQuery, route
 from bigdataproj_spark.plans.routing import AggCall
 from bigdataproj_spark.plans.sqlfront import route_sql
 from bigdataproj_spark.sources.user_projections import (
@@ -255,14 +255,14 @@ def _assert_own_events_view_routes(spark, own):
         spark, own, "t_user_prof",
         ("user_id", "event_type"), ("value",), table="events",
     )
-    df, chosen = route_corpus(spark, own, _EVENTS_PROFILE)
+    df, chosen = route(spark, own, _EVENTS_PROFILE)
     assert chosen == "user:t_user_prof"
-    from bigdataproj_spark.plans.corpus_routing import _raw_plan
+    from bigdataproj_spark.plans.routing import _raw_plan
 
     want = _raw_plan(spark, own, _EVENTS_PROFILE).toPandas()
     assert df.toPandas().equals(want)
     drop_projection(spark, own, "t_user_prof")
-    _df, chosen = route_corpus(spark, own, _EVENTS_PROFILE)
+    _df, chosen = route(spark, own, _EVENTS_PROFILE)
     assert chosen == "raw"
 
 
@@ -310,7 +310,7 @@ class TestCorpusUserProjections:
             ("user_id", "event_type"), ("value",), table="events",
         )
         try:
-            _df, chosen = route_corpus(spark, sf_dir, _EVENTS_PROFILE)
+            _df, chosen = route(spark, sf_dir, _EVENTS_PROFILE)
         finally:
             drop_projection(spark, sf_dir, "t_late_prof")
         assert chosen == "user:user_spend_profile", chosen
@@ -349,7 +349,7 @@ class TestCorpusUserProjections:
 
         proj = _catalog(spark, sf_dir)["t_kind_view"].projection
         assert proj.subsumes(spec)
-        routed, chosen = route_corpus(spark, sf_dir, spec)
+        routed, chosen = route(spark, sf_dir, spec)
         assert chosen == "docs_stats_cube"  # built-ins stay first
         mine = proj.build(spark, sf_dir, spec).toPandas()
         assert mine.equals(routed.toPandas())
@@ -368,9 +368,9 @@ class TestCorpusUserProjections:
             (AggCall("sum", "value", "total"), AggCall("count_star", None, "n")),
             truncs=(("m", "month", "ts"),),
         )
-        df, chosen = route_corpus(spark, sf_dir, spec)
+        df, chosen = route(spark, sf_dir, spec)
         assert chosen == "user:t_user_hour"
-        from bigdataproj_spark.plans.corpus_routing import _raw_plan
+        from bigdataproj_spark.plans.routing import _raw_plan
 
         want = _raw_plan(spark, sf_dir, spec).toPandas()
         assert df.toPandas().equals(want)
@@ -452,7 +452,7 @@ class TestCorpusUserProjections:
             "events", (), ("user_id",),
             (AggCall("sum", "value", "total"), AggCall("count_star", None, "n")),
         )
-        df, chosen = route_corpus(spark, sf_base, spec)
+        df, chosen = route(spark, sf_base, spec)
         assert chosen == "user:t_wh"
         total_n = df.agg(F.sum("n").alias("n")).collect()[0]["n"]
         assert total_n == events.count()

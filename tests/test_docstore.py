@@ -10,10 +10,10 @@ import os
 from pyspark.sql import functions as F
 
 from bigdataproj_spark.catalog import table
-from bigdataproj_spark.plans.corpus_routing import (
+from bigdataproj_spark.plans.routing import (
     Pred,
     TableScanQuery,
-    route_corpus_scan,
+    route_scan,
 )
 from bigdataproj_spark.sources.docstore import (
     append_clustered_docs,
@@ -57,7 +57,7 @@ def test_route_corpus_scan_picks_clustered_docs_and_matches(spark, sf_dir):
         ("doc_id", "source", "n_chars"),
         (Pred("lang", "=", "en"), Pred("n_chars", ">=", 150)),
     )
-    df, chosen = route_corpus_scan(spark, sf_dir, q)
+    df, chosen = route_scan(spark, sf_dir, q)
     assert chosen == "clustered_documents"
     want = (
         table(spark, sf_dir, "documents")

@@ -50,11 +50,12 @@ def _optimize_restores_layouts(spark, sf_dir, tmp_path):
     before and after OPTIMIZE."""
     import glob
 
-    from bigdataproj_spark.plans.corpus_routing import (
+    from bigdataproj_spark.plans.routing import (
+        Pred,
+        ScanQuery,
         TableScanQuery,
-        route_corpus_scan,
+        route_scan,
     )
-    from bigdataproj_spark.plans.routing import Pred, ScanQuery, route_scan
     from bigdataproj_spark.sources.maintenance import optimize_warehouse
 
     base_dir = tmp_path / "base"
@@ -115,7 +116,7 @@ def _optimize_restores_layouts(spark, sf_dir, tmp_path):
     )
     assert chosen == "zorder_lineitem"
     assert df.count() == full_li.filter(F.col("l_partkey") <= 40).count()
-    df, chosen = route_corpus_scan(
+    df, chosen = route_scan(
         spark, sf_base,
         TableScanQuery(
             "events", ("event_id", "ts"),

@@ -14,17 +14,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdataproj_spark.catalog import table
-from bigdataproj_spark.plans.corpus_routing import (
-    TableAggQuery,
-    TableScanQuery,
-    route_corpus,
-    route_corpus_scan,
-)
 from bigdataproj_spark.plans.routing import (
     AggCall,
     AggQuery,
     Pred,
     ScanQuery,
+    TableAggQuery,
+    TableScanQuery,
     route,
     route_scan,
 )
@@ -115,7 +111,7 @@ class TestDeleteDocuments:
             "documents", (), ("lang",),
             (AggCall("count_star", None, "n"),),
         )
-        df, chosen = route_corpus(spark, work, spec)
+        df, chosen = route(spark, work, spec)
         want = (
             survivors.groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -124,7 +120,7 @@ class TestDeleteDocuments:
         )
         assert df.toPandas().equals(want)
         # clustered scan
-        sdf, schosen = route_corpus_scan(
+        sdf, schosen = route_scan(
             spark, work,
             TableScanQuery(
                 "documents", ("doc_id", "lang"),
@@ -591,16 +587,16 @@ class TestExpireEvents:
             "events", (), ("event_type",),
             (AggCall("sum", "value", "total"), AggCall("count_star", None, "n")),
         )
-        dfw, cw = route_corpus(spark, work, spec)
-        dft, _ = route_corpus(spark, truth, spec)
+        dfw, cw = route(spark, work, spec)
+        dft, _ = route(spark, truth, spec)
         assert cw == "events_hourly_cube"
         assert dfw.toPandas().equals(dft.toPandas())
         raw_spec = TableAggQuery(
             "events", (), ("user_id",),
             (AggCall("count_star", None, "n"),),
         )
-        dfr, _cr = route_corpus(spark, work, raw_spec)
-        dfrt, _ = route_corpus(spark, truth, raw_spec)
+        dfr, _cr = route(spark, work, raw_spec)
+        dfrt, _ = route(spark, truth, raw_spec)
         assert dfr.toPandas().equals(dfrt.toPandas())
 
     def test_dated_scan_subtracts_and_late_ingest_is_dropped(
@@ -635,12 +631,12 @@ class TestExpireEvents:
             "events", (), ("event_type",),
             (AggCall("sum", "value", "total"), AggCall("count_star", None, "n")),
         )
-        dfw, cw = route_corpus(spark, work, spec)
+        dfw, cw = route(spark, work, spec)
         assert cw == "events_hourly_cube"
-        dft, _ = route_corpus(spark, truth, spec)
+        dft, _ = route(spark, truth, spec)
         assert dfw.toPandas().equals(dft.toPandas())
         # day-partitioned scan subtracts too
-        sdf, schosen = route_corpus_scan(
+        sdf, schosen = route_scan(
             spark, work,
             TableScanQuery(
                 "events", ("event_id", "ts"),

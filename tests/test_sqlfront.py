@@ -663,7 +663,7 @@ def test_random_over_statement_falls_back_and_matches(spark, sf_dir, oracle, p):
 # between "routed as this spec" and "run verbatim" unnoticed.
 # ---------------------------------------------------------------------------
 
-from bigdataproj_spark.plans.corpus_routing import (  # noqa: E402
+from bigdataproj_spark.plans.routing import (  # noqa: E402
     TableAggQuery,
     TableScanQuery,
 )
@@ -1009,3 +1009,27 @@ def test_explicit_null_order_matches_verbatim(spark, sf_dir, tmp_path):
         got = [tuple(r) for r in eng.sql(sql).collect()]
         want = [tuple(r) for r in eng.sql(sql, routed=False).collect()]
         assert got == want, (term, got, want)
+
+
+def test_qualified_dim_name_is_not_the_engines(spark, sf_dir, tmp_path):
+    """A schema-qualified ``sources`` names another database's table:
+    it is not among the statement's warehouse tables, and the verbatim
+    fallback neither deploys nor registers the engine's ``sources``
+    view for it (the statement then fails as Spark fails it)."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from bigdataproj_spark.catalog import TABLES
+    from bigdataproj_spark.plans.sqlfront import mentioned_tables
+    from bigdataproj_spark.sources.state import session_state
+
+    sql = "SELECT s_kind FROM other_db.sources"
+    assert mentioned_tables(sql) == frozenset()
+    for t in TABLES:
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    existed = spark.catalog.tableExists("sources")
+    with pytest.raises(AnalysisException):
+        Engine(spark, str(tmp_path)).sql(sql)
+    assert session_state(spark).dim_views.get("sources") != str(tmp_path)
+    assert spark.catalog.tableExists("sources") == existed

@@ -657,11 +657,11 @@ def test_streamed_warehouse_ingest_respects_retention_watermark(
     INSIDE foreachBatch, so the hourly cube and every row-level read
     describe exactly the surviving events: streamed replay == one-shot
     build over the post-TTL corpus."""
-    from bigdataproj_spark.plans.corpus_routing import (
+    from bigdataproj_spark.plans.routing import (
         AggCall,
         TableAggQuery,
         current_events,
-        route_corpus,
+        route,
     )
     from bigdataproj_spark.sources.corpus_cubes import events_hourly_cube_table
     from bigdataproj_spark.sources.maintenance import refresh_warehouse
@@ -720,7 +720,7 @@ def test_streamed_warehouse_ingest_respects_retention_watermark(
         table="events", filters=(), group_by=("event_type",),
         aggs=(AggCall("count_star", None, "n"),),
     )
-    df, chosen = route_corpus(spark, sf_base, spec)
+    df, chosen = route(spark, sf_base, spec)
     assert chosen == "events_hourly_cube", chosen
     got = {r["event_type"]: r["n"] for r in df.collect()}
     want = {
@@ -741,7 +741,7 @@ def test_streamed_erasure_requests_equal_one_shot_delete(
     delete of the union — tombstone sets, cube groups, and routed
     answers all converge, and redelivered id batches no-op (the
     tombstone set already covers them)."""
-    from bigdataproj_spark.plans.corpus_routing import current_documents
+    from bigdataproj_spark.plans.routing import current_documents
     from bigdataproj_spark.sources.corpus_cubes import docs_stats_cube_table
     from bigdataproj_spark.sources.retention import delete_documents
     from bigdataproj_spark.streaming.replay import _drive_stream
@@ -792,10 +792,10 @@ def test_streamed_erasure_requests_equal_one_shot_delete(
         spark.createDataFrame(all_ids, "doc_id long"),
     )
 
-    from bigdataproj_spark.plans.corpus_routing import (
+    from bigdataproj_spark.plans.routing import (
         AggCall,
         TableAggQuery,
-        route_corpus,
+        route,
     )
 
     spec = TableAggQuery(
@@ -805,7 +805,7 @@ def test_streamed_erasure_requests_equal_one_shot_delete(
     )
     frames = {}
     for name, d in dirs.items():
-        df, chosen = route_corpus(spark, d, spec)
+        df, chosen = route(spark, d, spec)
         assert chosen == "docs_stats_cube", (name, chosen)
         frames[name] = df.orderBy("lang", "source").toPandas()
         assert current_documents(spark, d).count() == (
@@ -825,7 +825,7 @@ def test_cdc_consumer_replay_equals_one_shot(spark, sf_dir, tmp_path):
     caught-up consumer's re-poll is a no-op."""
     from bigdataproj_spark.catalog import TABLES
     from bigdataproj_spark.engine import Engine
-    from bigdataproj_spark.plans.corpus_routing import current_documents
+    from bigdataproj_spark.plans.routing import current_documents
     from bigdataproj_spark.streaming.cdc import (
         CdcConsumer,
         bootstrap,
@@ -902,7 +902,7 @@ def test_cdc_watermark_resume_atomic_publish_and_stale_dir(
 
     from bigdataproj_spark.catalog import TABLES
     from bigdataproj_spark.engine import Engine
-    from bigdataproj_spark.plans.corpus_routing import current_documents
+    from bigdataproj_spark.plans.routing import current_documents
     from bigdataproj_spark.sources.bucketed import _layout_paths
     from bigdataproj_spark.streaming.cdc import (
         CdcConsumer,
@@ -1008,7 +1008,7 @@ def test_cdc_projection_consumer_replay_equals_one_shot(
     (its path moves only when the consumer polls)."""
     from bigdataproj_spark.catalog import TABLES
     from bigdataproj_spark.engine import Engine
-    from bigdataproj_spark.plans.corpus_routing import current_documents
+    from bigdataproj_spark.plans.routing import current_documents
     from bigdataproj_spark.sources.user_projections import (
         _catalog,
         user_projections,
@@ -1122,10 +1122,10 @@ def test_builtin_answers_skip_cdc_view_freshness_checks(
     freshness check (a sidecar read plus a ledger scan). A statement
     only the CDC view answers checks it once and routes to it."""
     from bigdataproj_spark.catalog import TABLES
-    from bigdataproj_spark.plans.corpus_routing import (
+    from bigdataproj_spark.plans.routing import (
         AggCall,
         TableAggQuery,
-        route_corpus,
+        route,
     )
     from bigdataproj_spark.streaming import cdc
 
@@ -1150,13 +1150,13 @@ def test_builtin_answers_skip_cdc_view_freshness_checks(
         "events", (), ("event_type",), (AggCall("count_star", None, "n"),)
     )
     for _ in range(3):
-        _df, chosen = route_corpus(spark, wd, by_type)
+        _df, chosen = route(spark, wd, by_type)
         assert chosen == "events_hourly_cube"
     assert checks == []
     by_user = TableAggQuery(
         "events", (), ("user_id",), (AggCall("sum", "value", "v"),)
     )
-    _df, chosen = route_corpus(spark, wd, by_user)
+    _df, chosen = route(spark, wd, by_user)
     assert chosen == "user:lazy_events"
     assert len(checks) == 1
 

@@ -12,8 +12,17 @@ import shutil
 import pytest
 
 from bigdataproj_spark.catalog import TABLES
-from bigdataproj_spark.plans.corpus_routing import TableAggQuery, TableScanQuery
-from bigdataproj_spark.plans.routing import AggCall, AggQuery, BoolPred, Pred, ScanQuery
+from bigdataproj_spark.plans.routing import (
+    AggCall,
+    AggQuery,
+    BoolPred,
+    Pred,
+    ScanQuery,
+    TableAggQuery,
+    TableScanQuery,
+    route,
+    route_scan,
+)
 from bigdataproj_spark.plans.sqlfront import SUM_SQL, UnsupportedSQL, route_spec, route_sql
 from bigdataproj_spark.testing import compare_frames
 
@@ -470,16 +479,29 @@ def private_sf(tmp_path_factory, sf_dir):
     return str(d)
 
 
-@pytest.mark.parametrize("spec,want", [r[1:] for r in _ROWS], ids=[r[0] for r in _ROWS])
-def test_route_table(spark, private_sf, spec, want):
+def _check(router, spark, sf, spec, want):
     try:
-        _df, chosen = route_spec(spark, private_sf, spec)
+        _df, chosen = router(spark, sf, spec)
     except Exception as e:  # noqa: BLE001 - the refusal is the row's outcome
         got = (type(e).__name__, str(e))
         assert isinstance(want, tuple), got
         assert got[0] == want[0] and want[1] in got[1], got
     else:
         assert chosen == want, chosen
+
+
+@pytest.mark.parametrize("spec,want", [r[1:] for r in _ROWS], ids=[r[0] for r in _ROWS])
+def test_route_table(spark, private_sf, spec, want):
+    _check(route_spec, spark, private_sf, spec, want)
+
+
+@pytest.mark.parametrize("spec,want", [r[1:] for r in _ROWS], ids=[r[0] for r in _ROWS])
+def test_route_table_one_entry_per_shape(spark, private_sf, spec, want):
+    """The same rows through the two routers called directly: ``route``
+    answers every aggregate spec and ``route_scan`` every scan spec,
+    whatever the fact table."""
+    router = route_scan if isinstance(spec, (ScanQuery, TableScanQuery)) else route
+    _check(router, spark, private_sf, spec, want)
 
 
 _MIXED_SQL = (

@@ -494,11 +494,10 @@ def test_random_arm_spec_against_user_view_matches_duckdb(
 
 from hypothesis import example  # noqa: E402
 
-from bigdataproj_spark.plans.corpus_routing import (  # noqa: E402
+from bigdataproj_spark.plans.routing import (  # noqa: E402
     BoolPred,
     TableAggQuery,
     _raw_plan as _corpus_raw_plan,
-    route_corpus,
 )
 
 _CV_EV_FILTERS = [
@@ -627,11 +626,11 @@ def test_random_spec_against_corpus_user_views_matches_raw(
     spark, sf_dir, _corpus_views, p
 ):
     """With an hour-keyed events view and a dim-keyed documents view
-    deployed, route_corpus() must equal the corpus raw plan on any
+    deployed, route() must equal the corpus raw plan on any
     drawn spec — whichever cube, view or raw plan answers. The
     examples pin draws only a user view can answer."""
     spec = _cv_spec(p)
-    routed, chosen = route_corpus(spark, sf_dir, spec)
+    routed, chosen = route(spark, sf_dir, spec)
     if p.get("expect_user"):
         assert chosen.startswith("user:"), (chosen, spec)
     compare_frames(
