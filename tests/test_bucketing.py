@@ -150,6 +150,68 @@ def test_incremental_rollup_refresh_equals_rebuild(spark, sf_dir):
         warehouse(spark, sf_dir).projections["order_revenue"] = base
 
 
+_PRICING_PARTIAL_DTYPES = [
+    ("qty_i", "bigint"), ("price_i", "bigint"), ("disc_i", "bigint"),
+    ("rev_i", "bigint"), ("charge_i", "bigint"),
+    ("cnt_qty", "bigint"), ("cnt_price", "bigint"), ("cnt_disc", "bigint"),
+    ("cnt", "bigint"),
+    ("min_qty_i", "bigint"), ("min_price_i", "bigint"), ("min_disc_i", "bigint"),
+    ("min_rev_i", "bigint"), ("min_charge_i", "bigint"),
+    ("max_qty_i", "bigint"), ("max_price_i", "bigint"), ("max_disc_i", "bigint"),
+    ("max_rev_i", "bigint"), ("max_charge_i", "bigint"),
+]
+
+
+def test_builtin_cube_schemas_are_pinned(spark, sf_dir):
+    """The stored schema of every built-in cube — column names, types
+    and order — is a contract: the router reads these columns by name,
+    q46_bucketed_pricing reads the pricing cube's directly, and a
+    deployed cube's refresh merges delta partials onto it by name."""
+    from bigdataproj_spark.sources.bucketed import (
+        pricing_cube_table,
+        segment_cube_table,
+        star_date_cube_table,
+    )
+    from bigdataproj_spark.sources.corpus_cubes import (
+        docs_stats_cube_table,
+        events_hourly_cube_table,
+    )
+
+    def dtypes(deploy):
+        return spark.read.parquet(deploy(spark, sf_dir)).dtypes
+
+    assert dtypes(pricing_cube_table) == [
+        ("l_returnflag", "string"), ("l_linestatus", "string"),
+        ("l_shipdate", "timestamp"), *_PRICING_PARTIAL_DTYPES,
+    ]
+    assert dtypes(star_date_cube_table) == [
+        ("r_name", "string"), ("n_name", "string"),
+        ("l_returnflag", "string"), ("l_linestatus", "string"),
+        ("l_shipdate", "timestamp"), *_PRICING_PARTIAL_DTYPES,
+        ("supp_hll", "binary"), ("part_hll", "binary"),
+    ]
+    assert dtypes(segment_cube_table) == [
+        ("c_mktsegment", "string"), ("o_orderpriority", "string"),
+        ("o_orderstatus", "string"), ("l_returnflag", "string"),
+        ("l_linestatus", "string"), *_PRICING_PARTIAL_DTYPES,
+    ]
+    assert dtypes(docs_stats_cube_table) == [
+        ("lang", "string"), ("source", "string"),
+        ("chars_i", "bigint"), ("tokens_i", "bigint"), ("stop_i", "bigint"),
+        ("cnt_chars", "bigint"), ("cnt_text", "bigint"), ("cnt", "bigint"),
+        ("min_chars_i", "bigint"), ("min_tokens_i", "bigint"),
+        ("min_stop_i", "bigint"),
+        ("max_chars_i", "bigint"), ("max_tokens_i", "bigint"),
+        ("max_stop_i", "bigint"),
+    ]
+    assert dtypes(events_hourly_cube_table) == [
+        ("event_type", "string"), ("event_hour", "timestamp"),
+        ("value_i", "bigint"), ("cnt_value", "bigint"), ("cnt", "bigint"),
+        ("min_value_i", "bigint"), ("max_value_i", "bigint"),
+        ("users_hll", "binary"),
+    ]
+
+
 def test_incremental_cube_refresh_equals_rebuild(spark, sf_dir):
     """Delta-merge maintenance of the pricing cube must equal a
     from-scratch rebuild bit-for-bit: every cube measure (int64 sums
