@@ -134,8 +134,10 @@ from ..sources.corpus_cubes import (
     doc_stopword_count,
     doc_token_count,
     docs_stats_cube_table,
+    event_types_dim_frame,
     event_types_dim_table,
     events_hourly_cube_table,
+    sources_dim_frame,
     sources_dim_table,
 )
 from ..sources.dated import (
@@ -605,7 +607,9 @@ class Arm:
     attributes by joining its groups. Every other arm must match the
     cube's build exactly. ``view_cols`` is a registry's column order,
     which the engine's dim-view bookkeeping compares
-    (Engine._ensure_dim_views)."""
+    (Engine._ensure_dim_views), and ``derive`` derives a registry's rows
+    from a frame of its parent fact (sources/corpus_cubes.py deploys
+    and refreshes every registry through it)."""
 
     name: str
     parent: str
@@ -616,6 +620,7 @@ class Arm:
     strategy: str | None = None
     row_preserving: bool = False
     view_cols: tuple[str, ...] = ()
+    derive: Callable[[DataFrame], DataFrame] | None = None
 
     @property
     def fact_key(self) -> str:
@@ -786,6 +791,7 @@ FACT_TABLES: dict[str, FactTable] = {
                     _open_versioned(sources_dim_table),
                     "broadcast", row_preserving=True,
                     view_cols=("src_id", "s_kind", "s_tier"),
+                    derive=sources_dim_frame,
                 ),
             },
             current=current_documents,
@@ -807,6 +813,7 @@ FACT_TABLES: dict[str, FactTable] = {
                     _open_versioned(event_types_dim_table),
                     "broadcast", row_preserving=True,
                     view_cols=("et_id", "e_category"),
+                    derive=event_types_dim_frame,
                 ),
             },
             current=current_events,
@@ -1021,7 +1028,7 @@ def join_arms(
     the joined arm's strategy. ``hash_hints=False`` drops the
     shuffle_hash hint: a per-task hash relation cannot spill, so the
     deploy and refresh builds join sort-merge (measured on the segment
-    cube at sf20 — sources/bucketed.py)."""
+    cube at sf20 — sources/user_projections.py _keyed)."""
     arms = set(arms)
     cols = list(cols)
     opened = opened or {}
@@ -1362,68 +1369,157 @@ def _open_order_revenue_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.join(d.hint("shuffle_hash"), r.l_orderkey == d.o_orderkey)
 
 
-# The five pricing measures' stored partials, as the three lineitem
-# cubes store them (sources/bucketed.py _pricing_cube_aggs).
-_PRICING_PARTIALS = {
-    "quantity": _StoredMeasure.of(MEASURES["quantity"], "qty", "cnt_qty"),
-    "base_price": _StoredMeasure.of(MEASURES["base_price"], "price", "cnt_price"),
-    "discount": _StoredMeasure.of(MEASURES["discount"], "disc", "cnt_disc"),
-    "revenue": _StoredMeasure.of(MEASURES["revenue"], "rev"),
-    "charge": _StoredMeasure.of(MEASURES["charge"], "charge"),
-}
+@dataclass(frozen=True)
+class View:
+    """One declared aggregate view over a fact table — a built-in cube
+    (:data:`BUILTIN_VIEWS`) or a user view (sources/user_projections.py)
+    — and everything its one build, refresh, affected-group recompute
+    and expiry read (sources/user_projections.py): the group keys in
+    stored column order, the stored measure partials, the COUNT(*)
+    column, the HLL sketch partials (target column -> stored column),
+    the optional hour-grain time key (stored column, ts source) and the
+    arms the build joins.
 
+    The stored columns are the keys, the time key, each measure's
+    int64 sum, its non-null counts (de-duplicated by name: measures
+    over one source column share one), COUNT(*), the mins, the maxes
+    and the sketches, in that order. Every one is a commutative monoid
+    under the refresh merge (+ for sums and counts, least/greatest for
+    min/max, register-max union for sketches), so a delta merge equals
+    a rebuild: bit for bit for the numeric partials, and at the
+    estimate level for sketches, whose merged register state equals
+    the single-pass state while the serialized sparse form may differ
+    (the rebuild-equal tests compare sketch columns by estimate)."""
+
+    name: str
+    table: str
+    keys: tuple[str, ...]
+    measures: tuple[_StoredMeasure, ...]
+    count_star_col: str = "cnt"
+    sketches: dict[str, str] = dataclasses.field(default_factory=dict)
+    time_key: tuple[str, str] | None = None
+    arms: tuple[str, ...] = ()
+
+    @property
+    def group_cols(self) -> tuple[str, ...]:
+        """The stored cube's group columns: the keys, then the time key."""
+        return self.keys + ((self.time_key[0],) if self.time_key else ())
+
+    def projection(
+        self, name: str, open: Callable[[SparkSession, str], DataFrame]
+    ) -> Projection:
+        """The router-facing projection of this view, read through
+        ``open``."""
+        return Projection(
+            name=name,
+            table=self.table,
+            attrs=frozenset(self.keys),
+            measures={s.measure.name: s for s in self.measures},
+            count_star_col=self.count_star_col,
+            open=open,
+            sketches=dict(self.sketches) or None,
+            time_key=self.time_key,
+            arms=self.arms,
+        )
+
+
+# The built-in cubes. Their stored stems predate the user views'
+# ``_StoredMeasure.of`` defaults (``qty_i``/``cnt_qty`` where a user
+# view stores ``quantity_i``/``cnt_quantity``; the docs cube's tokens
+# and stopwords share ``cnt_text``): q46_bucketed_pricing and the
+# tests read these names, so the declarations spell them out.
+_PRICING_PARTIALS = (
+    _StoredMeasure.of(MEASURES["quantity"], "qty", "cnt_qty"),
+    _StoredMeasure.of(MEASURES["base_price"], "price", "cnt_price"),
+    _StoredMeasure.of(MEASURES["discount"], "disc", "cnt_disc"),
+    _StoredMeasure.of(MEASURES["revenue"], "rev"),
+    _StoredMeasure.of(MEASURES["charge"], "charge"),
+)
 _DOC_MEASURES = CORPUS_TABLES["documents"].measures
+BUILTIN_VIEWS: dict[str, View] = {
+    v.name: v
+    for v in (
+        # The pricing cube: the lineitem money partials by (returnflag,
+        # linestatus, shipdate) — ~15k rows at EVERY corpus scale, and
+        # any shipdate-cutoff pricing query folds it exactly (the
+        # cutoff is on a key). Per-column non-null counts keep AVG
+        # denominators COUNT(col)-exact on NULL money fields. The raw
+        # q01 reads 30M rows at sf5 to produce 6; the cube reads 15k.
+        View(
+            "pricing_cube", "lineitem",
+            ("l_returnflag", "l_linestatus", "l_shipdate"), _PRICING_PARTIALS,
+        ),
+        # The segment cube (round 7, the q10 answer): the per-order
+        # attributes with fixed domains (|segments|=5, |priorities|=5,
+        # |statuses|=3) by the lineitem flags — 5x5x3x3x2 = 450 rows at
+        # EVERY corpus scale. o_orderdate, the one per-order attribute
+        # that grows toward the order count, stays out; dated segment
+        # shapes keep the spine.
+        View(
+            "segment_cube", "lineitem",
+            ("c_mktsegment", "o_orderpriority", "o_orderstatus",
+             "l_returnflag", "l_linestatus"),
+            _PRICING_PARTIALS, arms=_CHAIN,
+        ),
+        # The star cube: region/nation by the pricing key set — bounded
+        # at |nations| x |flags| x |statuses| x |days| ≈ 375k rows
+        # (nation determines region). Per-order keys would multiply
+        # that toward the order count, so those shapes stay on the
+        # rollup⋈denorm pair or the spine. Its HLL partials answer
+        # "distinct suppliers/parts per region/period" with no
+        # distinct shuffle.
+        View(
+            "star_date_cube", "lineitem",
+            ("r_name", "n_name", "l_returnflag", "l_linestatus", "l_shipdate"),
+            _PRICING_PARTIALS,
+            sketches={"l_suppkey": "supp_hll", "l_partkey": "part_hll"},
+            arms=_CHAIN,
+        ),
+        # The doc-stats cube: |langs| x |sources| rows at any scale; the
+        # full-corpus tokenizer pass runs once, at deploy.
+        View(
+            "docs_stats_cube", "documents", ("lang", "source"),
+            (
+                _StoredMeasure.of(_DOC_MEASURES["chars"]),
+                _StoredMeasure.of(_DOC_MEASURES["tokens"], cnt_col="cnt_text"),
+                _StoredMeasure.of(_DOC_MEASURES["stopwords"], "stop", "cnt_text"),
+            ),
+        ),
+        # The hourly event rollup: |types| x |hours| rows — hour is the
+        # finest grain whose row bound stays independent of corpus
+        # size, and every coarser grain and hour-boundary predicate
+        # folds onto it. Its HLL partials answer distinct users.
+        View(
+            "events_hourly_cube", "events", ("event_type",),
+            (_StoredMeasure.of(CORPUS_TABLES["events"].measures["value"]),),
+            sketches={"user_id": "users_hll"},
+            time_key=("event_hour", "ts"),
+        ),
+    )
+}
+# Derived names, for readers of the built-ins' stored columns.
+_STAR_CUBE_KEYS = BUILTIN_VIEWS["star_date_cube"].keys
+_STAR_SKETCH_COLS = tuple(BUILTIN_VIEWS["star_date_cube"].sketches.values())
+_SEGMENT_CUBE_KEYS = BUILTIN_VIEWS["segment_cube"].keys
+DOCS_CUBE_KEYS = BUILTIN_VIEWS["docs_stats_cube"].group_cols
+EVENTS_CUBE_KEYS = BUILTIN_VIEWS["events_hourly_cube"].group_cols
+
+
+def _cube(name: str, deploy: Callable[[SparkSession, str], str]) -> Projection:
+    return BUILTIN_VIEWS[name].projection(name, _open_versioned(deploy))
+
+
 PROJECTIONS: tuple[Projection, ...] = (
-    Projection(
-        name="pricing_cube",
-        table="lineitem",
-        attrs=frozenset({"l_returnflag", "l_linestatus", "l_shipdate"}),
-        measures=_PRICING_PARTIALS,
-        count_star_col="cnt",
-        open=_open_versioned(pricing_cube_table),
-    ),
-    # The segment cube (round 7, the q10 answer): every pricing
-    # measure keyed by the LOW-CARDINALITY per-order attributes x the
-    # lineitem flags — 450 rows at EVERY corpus scale (each key has a
-    # fixed domain; o_orderdate, the one per-order attribute that
-    # grows, is deliberately NOT stored — dated segment shapes keep
-    # the spine). Listed before the rollup pair: when both subsume,
-    # 450 stored rows beat the per-order rollup join unconditionally.
-    Projection(
-        name="segment_cube",
-        table="lineitem",
-        attrs=frozenset(
-            {"c_mktsegment", "o_orderpriority", "o_orderstatus",
-             "l_returnflag", "l_linestatus"}
-        ),
-        measures=_PRICING_PARTIALS,
-        count_star_col="cnt",
-        open=_open_versioned(segment_cube_table),
-        arms=_CHAIN,
-    ),
-    # The star cube: every pricing measure (sums, counts, min/max
-    # partials) keyed by (region, nation, returnflag, linestatus,
-    # shipdate) — ~375k rows at ANY corpus scale. It answers the
-    # time-sliced star family, MIXED fact+dimension groupings, star
-    # min/max/avg shapes, and — round 8, A/B-remeasured — the UNDATED
-    # pure-star shapes too: re-aggregating ≤375k scale-invariant rows
-    # beats the rollup⋈denorm pair's order-grain join (0.195 s vs
-    # 0.671 s at sf5, 3.4x; the pair scales with |orders| while the
-    # cube is flat), so the cube now sits BEFORE the pair and claims
-    # every shape its key set covers. The round-5 ordering predated
-    # the cube carrying all five measures.
-    Projection(
-        name="star_date_cube",
-        table="lineitem",
-        attrs=frozenset(
-            {"r_name", "n_name", "l_returnflag", "l_linestatus", "l_shipdate"}
-        ),
-        measures=_PRICING_PARTIALS,
-        count_star_col="cnt",
-        open=_open_versioned(star_date_cube_table),
-        arms=_CHAIN,
-        sketches={"l_suppkey": "supp_hll", "l_partkey": "part_hll"},
-    ),
+    _cube("pricing_cube", pricing_cube_table),
+    # Listed before the rollup pair: when both subsume, 450 stored
+    # rows beat the per-order rollup join unconditionally.
+    _cube("segment_cube", segment_cube_table),
+    # Round 8, A/B-remeasured: re-aggregating ≤375k scale-invariant
+    # rows beats the rollup⋈denorm pair's order-grain join even on the
+    # UNDATED pure-star shapes (0.195 s vs 0.671 s at sf5, 3.4x; the
+    # pair scales with |orders| while the cube is flat), so the star
+    # cube sits BEFORE the pair and claims every shape its keys cover.
+    _cube("star_date_cube", star_date_cube_table),
     # The rollup⋈denorm pair answers any FULL-chain star query over
     # the attributes the denorm stores (region/nation names plus the
     # order- and customer-level attributes, sources/bucketed.py
@@ -1444,37 +1540,11 @@ PROJECTIONS: tuple[Projection, ...] = (
         open=_open_order_revenue_star,
         arms=_CHAIN,
     ),
-    # The corpus cubes (sources/corpus_cubes.py): scale-invariant
-    # (|langs|x|sources|, |types|x|hours|). The docs cube's token and
-    # stopword partials skip the tokenizer pass at query time; the
-    # hourly cube's time key carries the grain-boundary fold and its
-    # HLL partials answer distinct users.
-    Projection(
-        name="docs_stats_cube",
-        table="documents",
-        attrs=frozenset({"lang", "source"}),
-        measures={
-            "chars": _StoredMeasure.of(_DOC_MEASURES["chars"]),
-            "tokens": _StoredMeasure.of(_DOC_MEASURES["tokens"], cnt_col="cnt_text"),
-            "stopwords": _StoredMeasure.of(
-                _DOC_MEASURES["stopwords"], "stop", "cnt_text"
-            ),
-        },
-        count_star_col="cnt",
-        open=_open_versioned(docs_stats_cube_table),
-    ),
-    Projection(
-        name="events_hourly_cube",
-        table="events",
-        attrs=frozenset({"event_type"}),
-        measures={
-            "value": _StoredMeasure.of(CORPUS_TABLES["events"].measures["value"])
-        },
-        count_star_col="cnt",
-        open=_open_versioned(events_hourly_cube_table),
-        time_key=("event_hour", "ts"),
-        sketches={"user_id": "users_hll"},
-    ),
+    # The corpus cubes: the docs cube's token and stopword partials
+    # skip the tokenizer pass at query time; the hourly cube's time key
+    # carries the grain-boundary fold.
+    _cube("docs_stats_cube", docs_stats_cube_table),
+    _cube("events_hourly_cube", events_hourly_cube_table),
 )
 
 

@@ -219,16 +219,6 @@ def _lineitem_with_derived(li: DataFrame) -> DataFrame:
     )
 
 
-# Denorm attributes the SHARED per-batch delta frame attaches (round
-# 13): every order-side column any lineitem-driven cube delta needs.
-# ``o_orderkey`` doubles as the denorm-matched indicator under the
-# frame's LEFT join (NULL == the rows the per-leg INNER joins dropped).
-_DELTA_DENORM_COLS = (
-    "o_orderkey", "r_name", "n_name",
-    "c_mktsegment", "o_orderpriority", "o_orderstatus",
-)
-
-
 def build_delta_frame(
     spark: SparkSession, sf_dir: str, delta_lineitem: DataFrame
 ) -> DataFrame:
@@ -331,6 +321,11 @@ DENORM_ATTRS = (
     "o_orderpriority",
     "o_orderdate",
 )
+# The denorm columns the SHARED per-batch delta frame attaches (round
+# 13): every order-side column a view the denorm covers can read.
+# ``o_orderkey`` doubles as the denorm-matched indicator under the
+# frame's LEFT join (NULL == the rows the per-leg INNER joins dropped).
+_DELTA_DENORM_COLS = ("o_orderkey", *DENORM_ATTRS)
 
 
 def denorm_join(spark: SparkSession, sf_dir: str, orders_df: DataFrame) -> DataFrame:
@@ -549,375 +544,21 @@ def refresh_orders_denorm(
 
 
 def pricing_cube_table(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy the pricing-summary aggregate projection (memoized): the
-    lineitem money sums cubed by (returnflag, linestatus, shipdate).
+    from .user_projections import deploy_builtin
 
-    The group key bounds the cube at |flags| x |statuses| x |days| —
-    ~15k rows at EVERY corpus scale — while any shipdate-cutoff
-    pricing query folds it exactly: the filter predicate is on a
-    group-by key, and int64 sums re-aggregate associatively. Per-money-
-    column non-null counts are stored so AVG denominators match
-    COUNT(col) semantics bit-for-bit even on corpora with NULL money
-    fields. This is the at-rest answer to q01's scan floor: the raw
-    query reads 30M rows to produce 6; the cube reads 15k.
-    """
-    tag, wh = _layout_paths(sf_dir)
-    cube_name = f"lineitem_pricing_cube_{tag}"
-    ws = warehouse(spark, sf_dir)
-    if "pricing_cube" in ws.projections:
-        return ws.projections["pricing_cube"]
-    from .retention import apply_tombstones
-
-    li_name, _ = bucketed_fact_tables(spark, sf_dir)
-    cube = (
-        apply_tombstones(
-            spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
-        )
-        .groupBy("l_returnflag", "l_linestatus", "l_shipdate")
-        .agg(*_pricing_cube_aggs())
-    )
-    path = os.path.join(wh, cube_name)
-    cube.write.mode("overwrite").parquet(path)
-    ws.projections["pricing_cube"] = path
-    return path
-
-
-# The cube's stored partial states — one place, used identically by the
-# initial deploy and the delta refresh so the two can never drift.
-# Sums and counts merge by +; per-group int64 MIN/MAX partials (added
-# round 6 for MIN/MAX routing) merge by least/greatest — all
-# commutative monoids, so delta-merge == rebuild bit-for-bit. The
-# min/max columns double as per-group zone maps.
-_CUBE_SUM_COLS = ("qty_i", "price_i", "disc_i", "rev_i", "charge_i")
-_CUBE_CNT_COLS = ("cnt_qty", "cnt_price", "cnt_disc", "cnt")
-_CUBE_MIN_COLS = tuple(f"min_{c}" for c in _CUBE_SUM_COLS)
-_CUBE_MAX_COLS = tuple(f"max_{c}" for c in _CUBE_SUM_COLS)
-
-
-def _pricing_cube_aggs() -> list:
-    src = {
-        "qty_i": "l_qty_i",
-        "price_i": "l_price_i",
-        "disc_i": "l_disc_i",
-        "rev_i": "l_rev_i",
-        "charge_i": "l_charge_i",
-    }
-    aggs = [F.sum(src[c]).alias(c) for c in _CUBE_SUM_COLS]
-    aggs += [
-        F.count("l_quantity").alias("cnt_qty"),
-        F.count("l_extendedprice").alias("cnt_price"),
-        F.count("l_discount").alias("cnt_disc"),
-        F.count(F.lit(1)).alias("cnt"),
-    ]
-    aggs += [F.min(src[c]).alias(f"min_{c}") for c in _CUBE_SUM_COLS]
-    aggs += [F.max(src[c]).alias(f"max_{c}") for c in _CUBE_SUM_COLS]
-    return aggs
-
-
-# Sketch partials stored by the STAR cube (the star shapes are where
-# "distinct suppliers/parts per region/period" lives): datasketches
-# HLL sketches are commutative monoids under register-max union, so
-# approx distinct counts re-aggregate from the cube with no distinct
-# shuffle, and the merged register state equals the single-pass state
-# (estimates agree exactly; serialized sparse form may differ — the
-# rebuild-equal tests compare sketch columns at the estimate level).
-_STAR_SKETCH_COLS = ("supp_hll", "part_hll")
-
-
-def _star_cube_aggs() -> list:
-    return _pricing_cube_aggs() + [
-        F.hll_sketch_agg("l_suppkey").alias("supp_hll"),
-        F.hll_sketch_agg("l_partkey").alias("part_hll"),
-    ]
-
-
-# The star cube's group keys: the full lineitem pricing key set PLUS
-# the region/nation names. Row bound is |nations| x |flags| x
-# |statuses| x |days| ≈ 375k at EVERY corpus scale (nation determines
-# region) — adding per-order attributes (mktsegment, priority) would
-# multiply that toward the order count, so those shapes stay on the
-# rollup⋈denorm pair or the bucketed spine instead.
-_STAR_CUBE_KEYS = ("r_name", "n_name", "l_returnflag", "l_linestatus", "l_shipdate")
+    return deploy_builtin(spark, sf_dir, "pricing_cube")
 
 
 def star_date_cube_table(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy the star aggregate projection (memoized): ALL pricing
-    measures (int64 sums, non-null counts, min/max partials — the
-    same stored-partial contract as the pricing cube) cubed by
-    (region, nation, returnflag, linestatus, shipdate).
+    from .user_projections import deploy_builtin
 
-    Bounded at ~375k rows at EVERY corpus scale — it answers the
-    time-sliced star family ("revenue per region/nation over a date
-    range"), MIXED fact+dimension groupings (revenue by returnflag x
-    region), and star min/max/avg shapes the rollup pair's
-    revenue-only storage cannot. A date or group-key predicate lands
-    on a cube key so it folds exactly, and every partial re-aggregates
-    associatively. Built from the bucketed lineitem (derived money
-    columns already materialized) joined through the dimension-
-    denormalized orders table, so the deploy itself is the
-    exchange-free spine join plus one bounded aggregation."""
-    tag, wh = _layout_paths(sf_dir)
-    cube_name = f"star_date_cube_{tag}"
-    ws = warehouse(spark, sf_dir)
-    if "star_date_cube" in ws.projections:
-        return ws.projections["star_date_cube"]
-    from .retention import apply_tombstones
-
-    li_name, _ = bucketed_fact_tables(spark, sf_dir)
-    _, den_name = order_revenue_projection(spark, sf_dir)
-    li = apply_tombstones(
-        spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
-    )
-    den = spark.table(den_name).select("o_orderkey", "r_name", "n_name")
-    # no shuffle_hash hint on deploy joins: sort-merge spills
-    # gracefully where a per-task hash relation can OOM at scale
-    # (the segment cube hit exactly that at sf20; same rationale
-    # in segment_cube_table)
-    cube = (
-        li.join(den, li.l_orderkey == den.o_orderkey)
-        .groupBy(*_STAR_CUBE_KEYS)
-        .agg(*_star_cube_aggs())
-    )
-    path = os.path.join(wh, cube_name)
-    cube.write.mode("overwrite").parquet(path)
-    ws.projections["star_date_cube"] = path
-    return path
-
-
-# The segment cube's group keys (round 7, the q10 answer): the q10
-# family groups LOW-CARDINALITY per-order attributes against the
-# lineitem flags — and every such attribute has a fixed domain
-# (|segments|=5, |priorities|=5, |statuses|=3), so cubing them is
-# bounded at 5x5x3x3x2 = 450 rows at EVERY corpus scale. The round-6
-# premise ("cubing per-order attributes grows toward the order
-# count") holds only for o_orderdate — which therefore stays OUT of
-# this key set; dated segment shapes keep the spine.
-_SEGMENT_CUBE_KEYS = (
-    "c_mktsegment", "o_orderpriority", "o_orderstatus",
-    "l_returnflag", "l_linestatus",
-)
+    return deploy_builtin(spark, sf_dir, "star_date_cube")
 
 
 def segment_cube_table(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy the per-order-attribute segment cube (memoized): ALL
-    pricing measures cubed by (mktsegment, priority, orderstatus,
-    returnflag, linestatus) over the full chain-4 star join — the
-    materialized answer to the q10 family, which until round 7 was
-    the last routed >2x shape (the zero-exchange spine still had to
-    SCAN the fact per query; 450 stored rows don't). Built from the
-    bucketed spine like the star cube, so the deploy is exchange-free
-    plus one bounded aggregation."""
-    tag, wh = _layout_paths(sf_dir)
-    cube_name = f"segment_cube_{tag}"
-    ws = warehouse(spark, sf_dir)
-    if "segment_cube" in ws.projections:
-        return ws.projections["segment_cube"]
-    from .retention import apply_tombstones
+    from .user_projections import deploy_builtin
 
-    li_name, _ = bucketed_fact_tables(spark, sf_dir)
-    _, den_name = order_revenue_projection(spark, sf_dir)
-    li = apply_tombstones(
-        spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
-    )
-    den = spark.table(den_name).select(
-        "o_orderkey", "c_mktsegment", "o_orderpriority", "o_orderstatus"
-    )
-    # NO shuffle_hash hint on the DEPLOY join: a hash relation must
-    # fit per task and dies with "can't acquire memory" when it
-    # doesn't (measured at sf20 — 120M lineitems, 30M denorm rows);
-    # sort-merge over the bucket-aligned sorted tables spills
-    # gracefully, and a one-shot deploy pays the sort once. The
-    # QUERY-time spine keeps the hint where it is measured faster.
-    cube = (
-        li.join(den, li.l_orderkey == den.o_orderkey)
-        .groupBy(*_SEGMENT_CUBE_KEYS)
-        .agg(*_pricing_cube_aggs())
-    )
-    path = os.path.join(wh, cube_name)
-    cube.write.mode("overwrite").parquet(path)
-    ws.projections["segment_cube"] = path
-    return path
-
-
-def refresh_segment_cube(
-    spark: SparkSession,
-    sf_dir: str,
-    delta_lineitem: DataFrame,
-    prejoined: DataFrame | None = None,
-) -> str:
-    """Incrementally maintain the segment cube for one ingested
-    lineitem batch — the star-cube refresh shape verbatim (delta joins
-    the stored denorm INNER, additive monoid merge == rebuild; same
-    denorm-first ordering contract). ``prejoined`` (round 13): the
-    shared checkpointed delta frame; its denorm-matched rows
-    (o_orderkey IS NOT NULL under the LEFT join) are exactly this
-    INNER join's rows."""
-    stored_path = segment_cube_table(spark, sf_dir)
-    keys = list(_SEGMENT_CUBE_KEYS)
-    if prejoined is not None:
-        joined = prejoined.filter(F.col("o_orderkey").isNotNull())
-    else:
-        _, den_name = order_revenue_projection(spark, sf_dir)
-        li = _lineitem_with_derived(delta_lineitem)
-        den = spark.table(den_name).select(
-            "o_orderkey", "c_mktsegment", "o_orderpriority", "o_orderstatus"
-        )
-        joined = li.join(den, li.l_orderkey == den.o_orderkey)
-    delta_cube = joined.groupBy(*keys).agg(*_pricing_cube_aggs())
-    # versioned_parquet, not read.parquet (round 13): the stored cube
-    # path is immutable once published — the routed read path already
-    # memoizes this exact path, so the refresh re-running file listing
-    # + schema inference per merge was pure fixed cost (guide §6)
-    from .snapshots import versioned_parquet
-
-    merged = _merge_cube_frames(
-        versioned_parquet(spark, stored_path), delta_cube, keys
-    )
-    ws = warehouse(spark, sf_dir)
-    new_path = ws.publish(stored_path)
-    merged.write.mode("overwrite").parquet(new_path)
-    ws.projections["segment_cube"] = new_path
-    return new_path
-
-
-def merge_partial_frames(
-    stored: DataFrame,
-    delta: DataFrame,
-    keys: tuple[str, ...],
-    add_cols: tuple[str, ...],
-    min_cols: tuple[str, ...],
-    max_cols: tuple[str, ...],
-    sketch_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """THE merge identity every cube refresh shares, with the column
-    contract passed in: full-outer on the (null-safe) group key, + for
-    sums and counts, least/greatest for min/max partials, register-max
-    ``hll_union`` for sketch partials (all skip/propagate NULLs —
-    exactly the identity a group present on only one side needs).
-    Every stored column is a commutative monoid, so delta-merge ==
-    rebuild (bit-for-bit for the numeric partials; estimate-identical
-    for sketches, whose serialized sparse form may differ). Defined
-    ONCE here so the lineitem cubes, the corpus cubes, and the user
-    projections can never drift on the merge semantics."""
-    s, d = stored.alias("s"), delta.alias("d")
-    cond = [F.col(f"s.{k}").eqNullSafe(F.col(f"d.{k}")) for k in keys]
-    return s.join(d, cond, "full_outer").select(
-        *[F.coalesce(F.col(f"s.{k}"), F.col(f"d.{k}")).alias(k) for k in keys],
-        *[
-            (
-                F.coalesce(F.col(f"s.{m}"), F.lit(0))
-                + F.coalesce(F.col(f"d.{m}"), F.lit(0))
-            ).alias(m)
-            for m in add_cols
-        ],
-        *[F.least(F.col(f"s.{m}"), F.col(f"d.{m}")).alias(m) for m in min_cols],
-        *[F.greatest(F.col(f"s.{m}"), F.col(f"d.{m}")).alias(m) for m in max_cols],
-        *[
-            F.when(F.col(f"s.{m}").isNull(), F.col(f"d.{m}"))
-            .when(F.col(f"d.{m}").isNull(), F.col(f"s.{m}"))
-            .otherwise(F.hll_union(F.col(f"s.{m}"), F.col(f"d.{m}")))
-            .alias(m)
-            for m in sketch_cols
-        ],
-    )
-
-
-def _merge_cube_frames(stored, delta, keys: list[str], sketch_cols=()):
-    """The pricing-partial instance of :func:`merge_partial_frames`."""
-    return merge_partial_frames(
-        stored, delta, tuple(keys),
-        (*_CUBE_SUM_COLS, *_CUBE_CNT_COLS),
-        _CUBE_MIN_COLS, _CUBE_MAX_COLS, tuple(sketch_cols),
-    )
-
-
-def refresh_pricing_cube(
-    spark: SparkSession,
-    sf_dir: str,
-    delta_lineitem: DataFrame,
-    prejoined: DataFrame | None = None,
-) -> str:
-    """Incrementally maintain the pricing cube for one ingested
-    lineitem batch: cube the DELTA with the same group keys and
-    measures, merge additively into the stored cube (full-outer on the
-    3-part group key; every measure — int64 sums AND the non-null
-    counts — is a commutative monoid, so delta-merge == rebuild
-    bit-for-bit), and publish a new VERSION the memo swings to
-    atomically. Refresh cost is O(|delta| + |cube|), and the cube is
-    ~15k rows at ANY corpus scale — so maintenance stays constant-cost
-    while the corpus grows. Proven rebuild-equal in
-    tests/test_bucketing.py."""
-    tag, wh = _layout_paths(sf_dir)
-    stored_path = pricing_cube_table(spark, sf_dir)
-    keys = ["l_returnflag", "l_linestatus", "l_shipdate"]
-    # ``prejoined`` (round 13): the shared delta frame — ALL rows (its
-    # LEFT join preserves every delta row), extra denorm columns
-    # ignored by the grouping, so the delta cube is value-identical.
-    delta_src = (
-        prejoined
-        if prejoined is not None
-        else _lineitem_with_derived(delta_lineitem)
-    )
-    delta_cube = delta_src.groupBy(*keys).agg(*_pricing_cube_aggs())
-    from .snapshots import versioned_parquet
-
-    merged = _merge_cube_frames(
-        versioned_parquet(spark, stored_path), delta_cube, keys
-    )
-    ws = warehouse(spark, sf_dir)
-    new_path = ws.publish(stored_path)
-    merged.write.mode("overwrite").parquet(new_path)
-    ws.projections["pricing_cube"] = new_path
-    return new_path
-
-
-def refresh_star_date_cube(
-    spark: SparkSession,
-    sf_dir: str,
-    delta_lineitem: DataFrame,
-    prejoined: DataFrame | None = None,
-) -> str:
-    """Incrementally maintain the star-by-date cube for one ingested
-    lineitem batch: pre-aggregate the DELTA per (order, shipdate),
-    resolve region/nation through the stored denorm (the denorm is
-    bucketed on the order key, so only the small delta side shuffles),
-    cube the result, and merge additively into the stored cube —
-    full-outer on the 3-part group key, both measures (int64 revenue
-    sum, count) commutative monoids, so delta-merge == rebuild
-    bit-for-bit. New VERSION published via the memo swing, same atomic
-    pattern as the other projections.
-
-    ORDERING: a batch that also introduces new ORDERS must refresh the
-    denorm first (:func:`refresh_orders_denorm`) — the cube delta joins
-    the denorm INNER, exactly like the deploy build, so a lineitem
-    whose order is missing from the denorm is dropped from the cube on
-    both the refresh and the rebuild path (consistent, but only the
-    ingest order above gives the intended result). Cost is
-    O(|delta| + |cube|); the cube is ~375k rows at ANY corpus scale."""
-    tag, wh = _layout_paths(sf_dir)
-    stored_path = star_date_cube_table(spark, sf_dir)
-    keys = list(_STAR_CUBE_KEYS)
-    # ``prejoined`` (round 13): shared delta frame; denorm-matched rows
-    # == this INNER join (see refresh_segment_cube).
-    if prejoined is not None:
-        joined = prejoined.filter(F.col("o_orderkey").isNotNull())
-    else:
-        _, den_name = order_revenue_projection(spark, sf_dir)
-        li = _lineitem_with_derived(delta_lineitem)
-        den = spark.table(den_name).select("o_orderkey", "r_name", "n_name")
-        joined = li.join(den, li.l_orderkey == den.o_orderkey)
-    delta_cube = joined.groupBy(*keys).agg(*_star_cube_aggs())
-    from .snapshots import versioned_parquet
-
-    merged = _merge_cube_frames(
-        versioned_parquet(spark, stored_path), delta_cube, keys,
-        _STAR_SKETCH_COLS,
-    )
-    ws = warehouse(spark, sf_dir)
-    new_path = ws.publish(stored_path)
-    merged.write.mode("overwrite").parquet(new_path)
-    ws.projections["star_date_cube"] = new_path
-    return new_path
+    return deploy_builtin(spark, sf_dir, "segment_cube")
 
 
 # Same result contract as q26_star_join_revenue (operators/joins.py) —

@@ -1,10 +1,11 @@
-"""S15 (engine extension): aggregate projections for the CORPUS fact
-tables — the doc-stats cube over ``documents`` and the hourly event
-rollup over ``events``.
+"""S15 (engine extension): the corpus side of the at-rest catalog —
+the per-row text expressions the docs cube stores, the registry arms
+(the sources and event-types dims) and the deploy names of the two
+corpus cubes.
 
-Round 6 generalized projection routing (plans/routing.py) and the SQL
-front door (plans/sqlfront.py) past the lineitem star; these are the
-deployed layouts that make that generalization earn its keep:
+The cubes themselves are declared views (plans/routing.py
+BUILTIN_VIEWS) built, refreshed and recomputed by the one view
+lifecycle (sources/user_projections.py):
 
 - ``docs_stats_cube_table``: per-(lang, source) partials of the text
   corpus — row counts, char sums, and TOKEN-COUNT sums with min/max
@@ -25,12 +26,6 @@ deployed layouts that make that generalization earn its keep:
   (the plans/routing.py module docstring spells out the boundary
   rule).
 
-Both cubes store the SAME partial-state shapes as the lineitem cubes
-(int64 fixed-point sums, non-null counts, min/max partials — see
-sources/bucketed.py) and both refresh incrementally by additive merge,
-proven rebuild-equal in tests/test_corpus_routing.py. Maintenance cost
-is O(|delta| + |cube|) with the cube size independent of corpus scale.
-
 Reference parity: the reference keeps its enriched records in a
 pre-indexed store and answers queries from the index, never the raw
 feed (reference README.md:102-104); these cubes are that posture for
@@ -45,34 +40,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions import cents
 from ..operators.text import tokens
-from .bucketed import _layout_paths, merge_partial_frames
+from .bucketed import _layout_paths
 from .state import session_state, warehouse
-
-# ---------------------------------------------------------------------------
-# Stored-partial column contracts (one place per cube; deploy and
-# refresh share these so the two can never drift).
-# ---------------------------------------------------------------------------
-
-DOCS_CUBE_KEYS = ("lang", "source")
-_DOCS_ADD_COLS = ("chars_i", "tokens_i", "stop_i", "cnt_chars", "cnt_text", "cnt")
-_DOCS_MIN_COLS = ("min_chars_i", "min_tokens_i", "min_stop_i")
-_DOCS_MAX_COLS = ("max_chars_i", "max_tokens_i", "max_stop_i")
-
-EVENTS_CUBE_KEYS = ("event_type", "event_hour")
-_EVENTS_ADD_COLS = ("value_i", "cnt_value", "cnt")
-_EVENTS_MIN_COLS = ("min_value_i",)
-_EVENTS_MAX_COLS = ("max_value_i",)
-# Mergeable DISTINCT-COUNT partials: a datasketches HLL sketch is a
-# commutative monoid under register-max union, so the cube can answer
-# approx_count_distinct(user_id) per group WITHOUT a distinct shuffle
-# over the corpus — the Druid/Pinot sketch-rollup pattern. Merge
-# equality is LOGICAL: union-of-sub-sketches has the same register
-# state (and therefore the same estimate) as the single-pass sketch,
-# but the serialized bytes can differ in sparse mode — rebuild-equal
-# tests compare sketch columns at the estimate level.
-_EVENTS_SKETCH_COLS = ("users_hll",)
 
 
 def doc_token_count() -> Column:
@@ -109,8 +79,6 @@ def doc_stopword_count() -> Column:
 # territory forever.
 # ---------------------------------------------------------------------------
 
-SOURCES_DIM_COLS = ("src_id", "s_kind", "s_tier")
-
 # The dim as a DuckDB CTE body over the registered `documents` view —
 # the oracle-side twin of sources_dim_frame.
 SOURCES_DIM_SQL = """\
@@ -135,46 +103,6 @@ def sources_dim_frame(docs: DataFrame) -> DataFrame:
         .alias("s_kind"),
         F.when(num % 2 == 0, "curated").otherwise("crawl").alias("s_tier"),
     )
-
-
-def sources_dim_table(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy (memoized) the sources dim table and return its path."""
-
-    def build() -> DataFrame:
-        return sources_dim_frame(table(spark, sf_dir, "documents"))
-
-    return _deploy_cube(spark, sf_dir, "sources_dim", "sources_dim", build)
-
-
-def refresh_sources_dim(
-    spark: SparkSession, sf_dir: str, delta_docs: DataFrame
-) -> str:
-    """Keep the source registry COMPLETE under ingest: derive the
-    delta's dim rows, anti-join against the stored registry, and
-    publish a new version only when genuinely new sources appeared
-    (the common no-new-source batch is a no-op). Completeness is the
-    dim's correctness invariant — the routed plans inner-join it, so
-    a missing source would silently drop that source's rows from
-    every dim-arm answer."""
-    stored_path = sources_dim_table(spark, sf_dir)
-    # versioned_parquet (round 13): dim versions are immutable once
-    # published and the routed read path memoizes these same paths —
-    # per-refresh listing + schema inference was pure fixed cost
-    from .snapshots import versioned_parquet
-
-    stored = versioned_parquet(spark, stored_path)
-    fresh = sources_dim_frame(delta_docs).join(
-        F.broadcast(stored.select("src_id")), "src_id", "left_anti"
-    )
-    if not fresh.take(1):
-        return stored_path
-    merged = stored.unionByName(fresh)
-    ws = warehouse(spark, sf_dir)
-    new_path = ws.publish(stored_path)
-    merged.write.mode("overwrite").parquet(new_path)
-    ws.projections["sources_dim"] = new_path
-    _refresh_dim_view(spark, sf_dir, "sources", new_path)
-    return new_path
 
 
 def _refresh_dim_view(spark, sf_dir: str, name: str, new_path: str) -> None:
@@ -213,8 +141,6 @@ def _refresh_dim_view(spark, sf_dir: str, name: str, new_path: str) -> None:
 # dim. |event types| is registry-sized at any corpus scale.
 # ---------------------------------------------------------------------------
 
-EVENT_TYPES_DIM_COLS = ("et_id", "e_category")
-
 EVENT_TYPES_DIM_SQL = """\
 SELECT event_type AS et_id,
        CASE event_type
@@ -240,198 +166,71 @@ def event_types_dim_frame(events: DataFrame) -> DataFrame:
     )
 
 
-def event_types_dim_table(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy (memoized) the event-types dim table; returns its path."""
+def registry_table(spark: SparkSession, sf_dir: str, arm: str) -> str:
+    """Deploy (memoized) the registry of corpus arm ``arm`` — derived
+    from its fact's fixture rows by the arm's ``derive`` — and return
+    its path. Its state entry is ``{arm}_dim``."""
+    from ..plans.routing import CORPUS_DIMS
 
-    def build() -> DataFrame:
-        return event_types_dim_frame(table(spark, sf_dir, "events"))
+    a = CORPUS_DIMS[arm]
+    ws = warehouse(spark, sf_dir)
+    key = f"{arm}_dim"
+    if key not in ws.projections:
+        tag, wh = _layout_paths(sf_dir)
+        path = os.path.join(wh, f"{key}_{tag}")
+        a.derive(table(spark, sf_dir, a.parent)).write.mode("overwrite").parquet(path)
+        ws.projections[key] = path
+    return ws.projections[key]
 
-    return _deploy_cube(
-        spark, sf_dir, "event_types_dim", "event_types_dim", build
-    )
 
-
-def refresh_event_types_dim(
-    spark: SparkSession, sf_dir: str, delta_events: DataFrame
+def refresh_registry(
+    spark: SparkSession, sf_dir: str, arm: str, delta: DataFrame
 ) -> str:
-    """Keep the taxonomy COMPLETE under ingest — same contract and
-    no-op-on-redelivery shape as :func:`refresh_sources_dim`."""
-    stored_path = event_types_dim_table(spark, sf_dir)
+    """Keep a registry COMPLETE under ingest: derive the delta's
+    registry rows, anti-join against the stored registry, and publish
+    a new version only when genuinely new keys appeared (the common
+    no-new-key batch and a redelivered batch are no-ops).
+    Completeness is the registry's correctness invariant — the routed
+    plans inner-join it, so a missing key would silently drop that
+    key's rows from every arm answer."""
+    from ..plans.routing import CORPUS_DIMS
+
+    # versioned_parquet (round 13): registry versions are immutable
+    # once published and the routed read path memoizes these same
+    # paths — per-refresh listing + schema inference was pure fixed cost
     from .snapshots import versioned_parquet
 
+    a = CORPUS_DIMS[arm]
+    stored_path = registry_table(spark, sf_dir, arm)
     stored = versioned_parquet(spark, stored_path)
-    fresh = event_types_dim_frame(delta_events).join(
-        F.broadcast(stored.select("et_id")), "et_id", "left_anti"
+    fresh = a.derive(delta).join(
+        F.broadcast(stored.select(a.dim_key)), a.dim_key, "left_anti"
     )
     if not fresh.take(1):
         return stored_path
-    merged = stored.unionByName(fresh)
-    ws = warehouse(spark, sf_dir)
+    ws, key = warehouse(spark, sf_dir), f"{arm}_dim"
     new_path = ws.publish(stored_path)
-    merged.write.mode("overwrite").parquet(new_path)
-    ws.projections["event_types_dim"] = new_path
-    _refresh_dim_view(spark, sf_dir, "event_types", new_path)
+    stored.unionByName(fresh).write.mode("overwrite").parquet(new_path)
+    ws.projections[key] = new_path
+    _refresh_dim_view(spark, sf_dir, arm, new_path)
     return new_path
 
 
-def _docs_cube_aggs() -> list:
-    """The doc-stats partials: the shared per-row text expressions
-    materialized at deploy time."""
-    tok = doc_token_count()
-    stop = doc_stopword_count()
-    chars = F.col("n_chars")
-    return [
-        F.sum(chars).alias("chars_i"),
-        F.sum(tok).alias("tokens_i"),
-        F.sum(stop).alias("stop_i"),
-        F.count("n_chars").alias("cnt_chars"),
-        F.count("text").alias("cnt_text"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.min(chars).alias("min_chars_i"),
-        F.min(tok).alias("min_tokens_i"),
-        F.min(stop).alias("min_stop_i"),
-        F.max(chars).alias("max_chars_i"),
-        F.max(tok).alias("max_tokens_i"),
-        F.max(stop).alias("max_stop_i"),
-    ]
+def sources_dim_table(spark: SparkSession, sf_dir: str) -> str:
+    return registry_table(spark, sf_dir, "sources")
 
 
-def _events_cube_aggs() -> list:
-    """The event-rollup partials: ``value`` in int64 hundredths (the
-    same fixed-point discipline as the money columns — cents() is
-    exact on the fixture's 2-decimal values and bit-equal to the
-    ``CAST(value AS DECIMAL(18,2))`` oracle form)."""
-    v = cents("value")
-    return [
-        F.sum(v).alias("value_i"),
-        F.count("value").alias("cnt_value"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.min(v).alias("min_value_i"),
-        F.max(v).alias("max_value_i"),
-        F.hll_sketch_agg("user_id").alias("users_hll"),
-    ]
-
-
-def _deploy_cube(
-    spark: SparkSession, sf_dir: str, memo_key: str, name: str, build
-) -> str:
-    ws = warehouse(spark, sf_dir)
-    if memo_key in ws.projections:
-        return ws.projections[memo_key]
-    tag, wh = _layout_paths(sf_dir)
-    path = os.path.join(wh, f"{name}_{tag}")
-    build().write.mode("overwrite").parquet(path)
-    ws.projections[memo_key] = path
-    return path
+def event_types_dim_table(spark: SparkSession, sf_dir: str) -> str:
+    return registry_table(spark, sf_dir, "event_types")
 
 
 def docs_stats_cube_table(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy the doc-stats aggregate projection (memoized): char and
-    token-count partials cubed by (lang, source). Bounded at
-    |langs| x |sources| rows at EVERY corpus scale; the full-corpus
-    tokenizer pass happens here, once, instead of per query."""
+    from .user_projections import deploy_builtin
 
-    def build() -> DataFrame:
-        # current_documents is tombstone-aware (S19) and reads the
-        # maintained clustered layout when deployed — a deploy after a
-        # delete or an ingest describes the CURRENT corpus either way
-        from ..plans.routing import current_documents
-
-        return (
-            current_documents(spark, sf_dir)
-            .groupBy(*DOCS_CUBE_KEYS)
-            .agg(*_docs_cube_aggs())
-        )
-
-    return _deploy_cube(spark, sf_dir, "docs_stats_cube", "docs_stats_cube", build)
+    return deploy_builtin(spark, sf_dir, "docs_stats_cube")
 
 
 def events_hourly_cube_table(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy the hourly event rollup (memoized): value partials cubed
-    by (event_type, hour). Bounded at |types| x |hours| rows — the
-    natural unit a streaming foreachBatch maintainer appends at, and
-    the finest grain whose row bound stays independent of corpus
-    size (finer storage folds strictly more queries: every coarser
-    grain and every hour-boundary predicate)."""
+    from .user_projections import deploy_builtin
 
-    def build() -> DataFrame:
-        # current_events is watermark-aware (S19b) and reads the
-        # maintained layout when deployed — a deploy after an expiry
-        # or an ingest describes the CURRENT corpus either way
-        from ..plans.routing import current_events
-
-        e = current_events(spark, sf_dir)
-        return (
-            e.withColumn("event_hour", F.date_trunc("hour", F.col("ts")))
-            .groupBy(*EVENTS_CUBE_KEYS)
-            .agg(*_events_cube_aggs())
-        )
-
-    return _deploy_cube(
-        spark, sf_dir, "events_hourly_cube", "events_hourly_cube", build
-    )
-
-
-def _refresh_cube(
-    spark: SparkSession,
-    sf_dir: str,
-    memo_key: str,
-    stored_path: str,
-    delta_cube: DataFrame,
-    keys: tuple[str, ...],
-    add_cols: tuple[str, ...],
-    min_cols: tuple[str, ...],
-    max_cols: tuple[str, ...],
-    sketch_cols: tuple[str, ...] = (),
-) -> str:
-    """Merge a delta cube into the stored one and publish a new
-    VERSION the memo swings to atomically (readers through the memo
-    see the old version until the new one is fully written — the same
-    pattern as every other projection refresh)."""
-    from .snapshots import versioned_parquet
-
-    merged = merge_partial_frames(
-        versioned_parquet(spark, stored_path), delta_cube, keys,
-        add_cols, min_cols, max_cols, sketch_cols,
-    )
-    ws = warehouse(spark, sf_dir)
-    new_path = ws.publish(stored_path)
-    merged.write.mode("overwrite").parquet(new_path)
-    ws.projections[memo_key] = new_path
-    return new_path
-
-
-def refresh_docs_cube(
-    spark: SparkSession, sf_dir: str, delta_docs: DataFrame
-) -> str:
-    """Incrementally maintain the doc-stats cube for one ingested
-    document batch: tokenize and cube the DELTA only (the expensive
-    regex pass runs over |delta| rows, never the corpus), merge
-    additively, publish a new version. Proven rebuild-equal in
-    tests/test_corpus_routing.py."""
-    stored = docs_stats_cube_table(spark, sf_dir)
-    delta_cube = delta_docs.groupBy(*DOCS_CUBE_KEYS).agg(*_docs_cube_aggs())
-    return _refresh_cube(
-        spark, sf_dir, "docs_stats_cube", stored, delta_cube,
-        DOCS_CUBE_KEYS, _DOCS_ADD_COLS, _DOCS_MIN_COLS, _DOCS_MAX_COLS,
-    )
-
-
-def refresh_events_cube(
-    spark: SparkSession, sf_dir: str, delta_events: DataFrame
-) -> str:
-    """Incrementally maintain the hourly event rollup for one ingested
-    event batch — the foreachBatch-shaped maintenance step of a
-    streaming ingest loop. Proven rebuild-equal in
-    tests/test_corpus_routing.py."""
-    stored = events_hourly_cube_table(spark, sf_dir)
-    delta_cube = (
-        delta_events.withColumn("event_hour", F.date_trunc("hour", F.col("ts")))
-        .groupBy(*EVENTS_CUBE_KEYS)
-        .agg(*_events_cube_aggs())
-    )
-    return _refresh_cube(
-        spark, sf_dir, "events_hourly_cube", stored, delta_cube,
-        EVENTS_CUBE_KEYS, _EVENTS_ADD_COLS, _EVENTS_MIN_COLS,
-        _EVENTS_MAX_COLS, _EVENTS_SKETCH_COLS,
-    )
+    return deploy_builtin(spark, sf_dir, "events_hourly_cube")

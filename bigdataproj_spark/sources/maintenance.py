@@ -16,8 +16,8 @@ the star-date cube resolves region/nation through the stored denorm,
 so a batch carrying both new orders and their lineitems must upsert
 the denorm first or the cube delta would drop the new orders' rows
 (consistently on both refresh and rebuild paths, but not what the
-ingest meant — see refresh_star_date_cube's ORDERING note, which this
-function encodes so callers don't have to).
+ingest meant — see the ORDERING note of user_projections._denorm_covers,
+which this function encodes so callers don't have to).
 
 Cost shape at 100 TB: every cube refresh is O(|delta| + |cube|) with
 scale-invariant cubes; the row-level layouts take appends (new
@@ -33,19 +33,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.routing import BUILTIN_VIEWS
 from ..session import one_split
 from .bucketed import (
     append_bucketed_lineitem,
     append_bucketed_orders,
     refresh_order_revenue_rollup,
     refresh_orders_denorm,
-    refresh_pricing_cube,
-    refresh_segment_cube,
-    refresh_star_date_cube,
 )
-from .corpus_cubes import refresh_docs_cube, refresh_events_cube
+from .corpus_cubes import refresh_registry
 from .dated import append_dated, append_dated_events, dated_events, dated_lineitem
 from .state import session_state, warehouse
+from .user_projections import deploy_builtin, refresh_projection, refresh_projections_for
 from .zorder import ZORDER_COLS, ZORDER_KEYS, append_zordered, zordered_lineitem
 
 
@@ -320,12 +319,7 @@ def _refresh_warehouse_body(
         #     finally (r12-ADVICE: a failing leg must not leave its
         #     label on later jobs).
         from ..session import run_parallel
-        from .bucketed import (
-            build_delta_frame,
-            pricing_cube_table,
-            segment_cube_table,
-            star_date_cube_table,
-        )
+        from .bucketed import build_delta_frame
 
         def _labeled(label: str, fn):
             def leg():
@@ -334,14 +328,12 @@ def _refresh_warehouse_body(
 
             return leg
 
-        deploys = []
-        for memo_key, deploy in (
-            ("pricing_cube", pricing_cube_table),
-            ("star_date_cube", star_date_cube_table),
-            ("segment_cube", segment_cube_table),
-        ):
-            if memo_key not in ws.projections:
-                deploys.append(_labeled(f"deploy: {memo_key}", lambda d=deploy: d(spark, sf_dir)))
+        cubes = [n for n, v in BUILTIN_VIEWS.items() if v.table == "lineitem"]
+        deploys = [
+            _labeled(f"deploy: {n}", lambda n=n: deploy_builtin(spark, sf_dir, n))
+            for n in cubes
+            if n not in ws.projections
+        ]
         if ws.zorder is None:
             deploys.append(_labeled("deploy: zorder", lambda: zordered_lineitem(spark, sf_dir)))
         if ws.dated is None:
@@ -365,20 +357,13 @@ def _refresh_warehouse_body(
                 )
                 done["order_revenue_rollup"] = roll
 
-            def _leg_pricing() -> None:
-                done["pricing_cube"] = refresh_pricing_cube(
-                    spark, sf_dir, lineitem, prejoined=shared
-                )
+            def _leg_cube(name: str):
+                def leg() -> None:
+                    done[name] = refresh_projection(
+                        spark, sf_dir, name, lineitem, prejoined=shared
+                    )
 
-            def _leg_star() -> None:
-                done["star_date_cube"] = refresh_star_date_cube(
-                    spark, sf_dir, lineitem, prejoined=shared
-                )
-
-            def _leg_segment() -> None:
-                done["segment_cube"] = refresh_segment_cube(
-                    spark, sf_dir, lineitem, prejoined=shared
-                )
+                return _labeled(f"refresh: {name}", leg)
 
             def _leg_bucketed() -> None:
                 done["bucketed_lineitem"] = append_bucketed_lineitem(
@@ -400,9 +385,7 @@ def _refresh_warehouse_body(
                 done["dated_lineitem"] = dp
 
             run_parallel(
-                _labeled("refresh: star date cube", _leg_star),
-                _labeled("refresh: pricing cube", _leg_pricing),
-                _labeled("refresh: segment cube", _leg_segment),
+                *map(_leg_cube, cubes),
                 _labeled("refresh: order rollup", _leg_rollup),
                 _labeled("refresh: bucketed append", _leg_bucketed),
                 _labeled("refresh: zorder append", _leg_zorder),
@@ -423,20 +406,18 @@ def _refresh_warehouse_body(
     #    writing to.
     if documents is not None:
         from ..session import run_parallel
-        from .corpus_cubes import docs_stats_cube_table, refresh_sources_dim
         from .docstore import append_clustered_docs, clustered_documents
 
-        if "docs_stats_cube" not in ws.projections:
-            docs_stats_cube_table(spark, sf_dir)
+        deploy_builtin(spark, sf_dir, "docs_stats_cube")
 
         def _leg_sources_dim() -> None:
             spark.sparkContext.setJobDescription("refresh: sources dim")
-            done["sources_dim"] = refresh_sources_dim(spark, sf_dir, documents)
+            done["sources_dim"] = refresh_registry(spark, sf_dir, "sources", documents)
 
         def _leg_docs_cube() -> None:
             spark.sparkContext.setJobDescription("refresh: docs cube")
-            done["docs_stats_cube"] = refresh_docs_cube(
-                spark, sf_dir, documents
+            done["docs_stats_cube"] = refresh_projection(
+                spark, sf_dir, "docs_stats_cube", documents
             )
 
         def _leg_docstore() -> None:
@@ -451,24 +432,19 @@ def _refresh_warehouse_body(
             spark.sparkContext.setJobDescription(None)
     if events is not None:
         from ..session import run_parallel
-        from .corpus_cubes import (
-            events_hourly_cube_table,
-            refresh_event_types_dim,
-        )
 
-        if "events_hourly_cube" not in ws.projections:
-            events_hourly_cube_table(spark, sf_dir)
+        deploy_builtin(spark, sf_dir, "events_hourly_cube")
 
         def _leg_events_dim() -> None:
             spark.sparkContext.setJobDescription("refresh: event types dim")
-            done["event_types_dim"] = refresh_event_types_dim(
-                spark, sf_dir, events
+            done["event_types_dim"] = refresh_registry(
+                spark, sf_dir, "event_types", events
             )
 
         def _leg_events_cube() -> None:
             spark.sparkContext.setJobDescription("refresh: events cube")
-            done["events_hourly_cube"] = refresh_events_cube(
-                spark, sf_dir, events
+            done["events_hourly_cube"] = refresh_projection(
+                spark, sf_dir, "events_hourly_cube", events
             )
 
         def _leg_dated_events() -> None:
@@ -486,15 +462,13 @@ def _refresh_warehouse_body(
     # introducing a new order or source must land in the bucketed
     # orders table or the registry before the view's delta joins
     # through it)
-    from .user_projections import refresh_projections_for
-
     for tname, delta in (
         ("lineitem", lineitem), ("documents", documents), ("events", events)
     ):
         if delta is None:
             continue
         for name, path in refresh_projections_for(
-            spark, sf_dir, tname, delta
+            spark, sf_dir, tname, delta, shared if tname == "lineitem" else None
         ).items():
             done[f"user:{name}"] = path
     return done

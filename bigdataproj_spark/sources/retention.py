@@ -63,10 +63,11 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import one_split
+from ..session import one_split, run_parallel
 from .bucketed import _layout_paths
 from .snapshots import versioned_parquet
 from .state import session_state, warehouse
+from .user_projections import _build, _keyed, _publish_cube, deployed_views
 
 # base table -> tombstone key column
 TOMBSTONE_KEYS = {"documents": "doc_id", "orders": "o_orderkey"}
@@ -167,7 +168,7 @@ def _splice_groups(
     return kept.unionByName(recomputed)
 
 
-def _rebuild_user_groups(
+def _recompute_groups(
     spark: SparkSession,
     sf_dir: str,
     table_name: str,
@@ -175,45 +176,48 @@ def _rebuild_user_groups(
     affected_of,
     done: dict[str, str],
 ) -> None:
-    """The affected-group recompute of every refresh-maintained user
-    view over ``table_name``. ``affected_of(view)`` gives the group-key
-    tuples the mutation touched (None skips the view); the view
-    rebuilds exactly those groups from ``current(spark, sf_dir)``, the
-    table's live rows, semi-filtered BEFORE the groupBy via
-    group_filter (O(rows in affected groups), never the corpus),
-    splices them into its stored cube and publishes a new version."""
-    from .user_projections import _maintained
+    """THE affected-group recompute of every view over ``table_name``
+    the mutation hooks maintain — its deployed built-ins and its
+    refresh-maintained user views alike. ``affected_of(view)`` gives
+    the group-key tuples the mutation touched (None skips the view);
+    the view rebuilds exactly those groups from ``current(spark,
+    sf_dir)``, the table's live rows, semi-filtered BEFORE the groupBy
+    (O(rows in affected groups), never the corpus), splices them into
+    its stored cube and publishes a new version. The views read
+    settled state and publish disjoint outputs, so they recompute in
+    parallel (run_parallel awaits every leg before any raise)."""
 
-    for name, u in _maintained(spark, sf_dir, table_name):
-        affected = affected_of(u)
-        if affected is None:
-            continue
-        recomputed = u.cube(
-            spark, sf_dir, current(spark, sf_dir), group_filter=affected
-        )
-        stored = versioned_parquet(spark, u.path)
-        merged = _splice_groups(
-            spark, stored, list(u.group_cols), affected, recomputed
-        )
-        done[f"user:{name}"] = u.publish(spark, sf_dir, merged)
+    def leg(e):
+        def run() -> None:
+            affected = affected_of(e.view)
+            if affected is None:
+                return
+            spark.sparkContext.setJobDescription(f"recompute: {e.key}")
+            recomputed = _build(
+                spark, sf_dir, current(spark, sf_dir), e.view, group_filter=affected
+            )
+            # versioned_parquet: the stored cube path is immutable once
+            # published and already memoized by the routed read path
+            merged = _splice_groups(
+                spark, versioned_parquet(spark, e.path), list(e.view.group_cols),
+                affected, recomputed,
+            )
+            done[e.key] = _publish_cube(spark, sf_dir, e, merged)
+
+        return run
+
+    try:
+        run_parallel(*map(leg, deployed_views(spark, sf_dir, table_name)))
+    finally:
+        spark.sparkContext.setJobDescription(None)
 
 
 def _dead_groups(spark: SparkSession, sf_dir: str, dead: DataFrame):
     """``affected_of`` for a delete: the groups the dead rows fell in,
-    through each view's own build (dim joins included)."""
-    return lambda u: (
-        u.cube(spark, sf_dir, dead, ()).select(*u.group_cols).distinct()
+    through each view's own arm joins."""
+    return lambda v: (
+        _keyed(spark, sf_dir, dead, v).select(*v.group_cols).distinct()
     )
-
-
-def _publish_cube(
-    spark: SparkSession, sf_dir: str, name: str, merged: DataFrame
-) -> str:
-    ws = warehouse(spark, sf_dir)
-    new_path = ws.publish(ws.projections[name])
-    merged.write.mode("overwrite").parquet(new_path)
-    ws.projections[name] = new_path
-    return new_path
 
 
 # ---------------------------------------------------------------------------
@@ -253,38 +257,16 @@ def delete_documents(spark: SparkSession, sf_dir: str, doc_ids) -> dict[str, str
         _publish_tombstones(spark, sf_dir, "documents", fresh)
         bump_mutation_epoch(spark, sf_dir, "documents")
         done: dict[str, str] = {}
-        ws = warehouse(spark, sf_dir)
-        memo = ws.projections
-
-        # built-in doc-stats cube: affected (lang, source) groups
-        if "docs_stats_cube" in memo:
-            from .corpus_cubes import DOCS_CUBE_KEYS, _docs_cube_aggs
-
-            stored = versioned_parquet(spark, memo["docs_stats_cube"])
-            affected = deleted.select(*DOCS_CUBE_KEYS).distinct()
-            remaining = (
-                current_documents(spark, sf_dir)  # tombstones now applied
-                .join(affected, list(DOCS_CUBE_KEYS), "semi")
-            )
-            recomputed = remaining.groupBy(*DOCS_CUBE_KEYS).agg(
-                *_docs_cube_aggs()
-            )
-            merged = _splice_groups(
-                spark, stored, list(DOCS_CUBE_KEYS), affected, recomputed
-            )
-            done["docs_stats_cube"] = _publish_cube(
-                spark, sf_dir, "docs_stats_cube", merged
-            )
-
-        # user views over documents: same affected-group recompute
-        _rebuild_user_groups(
+        # the documents views' affected groups rebuild from the
+        # (now tombstone-filtered) current relation
+        _recompute_groups(
             spark, sf_dir, "documents", current_documents,
             _dead_groups(spark, sf_dir, deleted), done,
         )
 
         # verbatim views must re-point at the (now tombstone-aware)
         # current relation
-        ws.ingested.add("documents")
+        warehouse(spark, sf_dir).ingested.add("documents")
         return done
 
 
@@ -336,60 +318,12 @@ def delete_orders(spark: SparkSession, sf_dir: str, order_keys) -> dict[str, str
         _publish_tombstones(spark, sf_dir, "orders", fresh)
         bump_mutation_epoch(spark, sf_dir, "orders", "lineitem")
         done: dict[str, str] = {}
-        ws = warehouse(spark, sf_dir)
-        memo = ws.projections
-
-        def _rebuild(memo_key: str, keys: tuple[str, ...], aggs, with_denorm):
-            """Affected-group recompute for one lineitem cube. The
-            deleted rows come from the bucketed fact (derived int
-            columns at rest); star-keyed cubes resolve their per-order
-            attributes through the stored denorm, same as the refresh
-            delta path."""
-            if memo_key not in memo:
-                return
-            stored = versioned_parquet(spark, memo[memo_key])
-            dead = deleted_li
-            live = current_lineitem(spark, sf_dir)  # tombstones applied
-            if with_denorm:
-                from .bucketed import order_revenue_projection
-
-                _roll, den_name = order_revenue_projection(spark, sf_dir)
-                den = spark.table(den_name)
-                dead = dead.join(den, dead.l_orderkey == den.o_orderkey)
-                live = live.join(den, live.l_orderkey == den.o_orderkey)
-            affected = dead.select(*keys).distinct()
-            recomputed = (
-                live.join(affected, list(keys), "semi")
-                .groupBy(*keys)
-                .agg(*aggs())
-            )
-            merged = _splice_groups(
-                spark, stored, list(keys), affected, recomputed
-            )
-            done[memo_key] = _publish_cube(spark, sf_dir, memo_key, merged)
-
-        from .bucketed import (
-            _SEGMENT_CUBE_KEYS,
-            _STAR_CUBE_KEYS,
-            _pricing_cube_aggs,
-            _star_cube_aggs,
-        )
-
-        _rebuild(
-            "pricing_cube",
-            ("l_returnflag", "l_linestatus", "l_shipdate"),
-            _pricing_cube_aggs,
-            with_denorm=False,
-        )
-        _rebuild("star_date_cube", _STAR_CUBE_KEYS, _star_cube_aggs, True)
-        _rebuild("segment_cube", _SEGMENT_CUBE_KEYS, _pricing_cube_aggs, True)
-
-        _rebuild_user_groups(
+        _recompute_groups(
             spark, sf_dir, "lineitem", current_lineitem,
             _dead_groups(spark, sf_dir, deleted_li), done,
         )
 
-        ws.ingested.update(("lineitem", "orders"))
+        warehouse(spark, sf_dir).ingested.update(("lineitem", "orders"))
         return done
 
 
@@ -422,15 +356,7 @@ def reattribute_order_updates(
     before the upsert, pinned); ``new_orders`` the delta's rows for
     the same keys. Runs inside the caller's WarehouseTxn."""
     from ..plans.routing import current_lineitem
-    from .bucketed import (
-        _SEGMENT_CUBE_KEYS,
-        _STAR_CUBE_KEYS,
-        _pricing_cube_aggs,
-        _star_cube_aggs,
-        order_revenue_projection,
-    )
 
-    memo = warehouse(spark, sf_dir).projections
     keys = old_orders.select("o_orderkey")
     li = (
         current_lineitem(spark, sf_dir)
@@ -445,75 +371,22 @@ def reattribute_order_updates(
     if not li.take(1):
         return done  # childless orders: no cube row derives from them
 
-    from .bucketed import denorm_join
-
-    old_den = denorm_join(spark, sf_dir, old_orders)
-    new_den = denorm_join(spark, sf_dir, new_orders)
-
-    def _rebuild(memo_key: str, cube_keys: tuple[str, ...], aggs):
-        if memo_key not in memo:
-            return
-        spark.sparkContext.setJobDescription(f"reattribute: {memo_key}")
-        # versioned_parquet: the stored cube path is immutable once
-        # published and already memoized by the routed read path
-        stored = versioned_parquet(spark, memo[memo_key])
-        affected = (
-            li.join(old_den, li.l_orderkey == old_den.o_orderkey)
-            .select(*cube_keys)
-            .unionByName(
-                li.join(new_den, li.l_orderkey == new_den.o_orderkey)
-                .select(*cube_keys)
-            )
-            .distinct()
-        )
-        _roll, den_name = order_revenue_projection(spark, sf_dir)
-        den = spark.table(den_name)  # post-upsert: NEW attribution
-        live = current_lineitem(spark, sf_dir)
-        recomputed = (
-            live.join(den, live.l_orderkey == den.o_orderkey)
-            .join(F.broadcast(affected), list(cube_keys), "semi")
-            .groupBy(*cube_keys)
-            .agg(*aggs())
-        )
-        merged = _splice_groups(
-            spark, stored, list(cube_keys), affected, recomputed
-        )
-        done[memo_key] = _publish_cube(spark, sf_dir, memo_key, merged)
-
-    # Round 13 (guide §2.6): the two cube rebuilds read only settled
-    # state (the checkpointed affected lineitems, the post-upsert
-    # denorm, their own stored cube versions) and publish disjoint
-    # cubes — overlap them; run_parallel awaits both before any raise.
-    from ..session import run_parallel
-
-    try:
-        run_parallel(
-            lambda: _rebuild("star_date_cube", _STAR_CUBE_KEYS, _star_cube_aggs),
-            lambda: _rebuild(
-                "segment_cube", _SEGMENT_CUBE_KEYS, _pricing_cube_aggs
-            ),
-        )
-    finally:
-        spark.sparkContext.setJobDescription(None)
-
-    # user lineitem projections touching the order chain (dim-attr
-    # keys or order-home measures both force chain >= 1): the groups
-    # the conflicting orders' lineitems fall in under the OLD and the
-    # NEW attributes
-    def _affected(u):
-        if "orders" not in u.arms:
+    # the views joining the order chain: the groups the conflicting
+    # orders' lineitems fall in under the OLD and the NEW attributes
+    def _affected(v):
+        if "orders" not in v.arms:
             return None
         return (
-            u.cube(spark, sf_dir, li, (), opened={"orders": old_orders})
-            .select(*u.keys)
+            _keyed(spark, sf_dir, li, v, opened={"orders": old_orders})
+            .select(*v.group_cols)
             .unionByName(
-                u.cube(spark, sf_dir, li, (), opened={"orders": new_orders})
-                .select(*u.keys)
+                _keyed(spark, sf_dir, li, v, opened={"orders": new_orders})
+                .select(*v.group_cols)
             )
             .distinct()
         )
 
-    _rebuild_user_groups(
+    _recompute_groups(
         spark, sf_dir, "lineitem", current_lineitem, _affected, done
     )
     return done
@@ -869,29 +742,17 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
         bump_mutation_epoch(spark, sf_dir, "events")
         done: dict[str, str] = {}
 
-        # hourly cube: stored-key filter == rebuild (hour boundary)
-        if "events_hourly_cube" in ws.projections:
-            stored = versioned_parquet(spark, ws.projections["events_hourly_cube"])
-            kept = stored.filter(
-                F.col("event_hour") >= F.lit(cutoff).cast("timestamp")
-            )
-            done["events_hourly_cube"] = _publish_cube(
-                spark, sf_dir, "events_hourly_cube", kept
-            )
-
-        # user event views: hour-keyed drop groups exactly; others
-        # rebuild whole from the (now watermarked) current relation
-        from .user_projections import _maintained
-
-        for name, u in _maintained(spark, sf_dir, "events"):
-            if u.time_key is not None:
-                stored = versioned_parquet(spark, u.path)
-                merged = stored.filter(
-                    F.col(u.time_key[0]) >= F.lit(cutoff).cast("timestamp")
+        # hour-keyed views drop their expired groups by a stored-key
+        # filter (== rebuild: the cutoff is on an hour boundary); the
+        # others rebuild whole from the (now watermarked) relation
+        for e in deployed_views(spark, sf_dir, "events"):
+            if e.view.time_key is not None:
+                merged = versioned_parquet(spark, e.path).filter(
+                    F.col(e.view.time_key[0]) >= F.lit(cutoff).cast("timestamp")
                 )
             else:
-                merged = u.cube(spark, sf_dir, current_events(spark, sf_dir))
-            done[f"user:{name}"] = u.publish(spark, sf_dir, merged)
+                merged = _build(spark, sf_dir, current_events(spark, sf_dir), e.view)
+            done[e.key] = _publish_cube(spark, sf_dir, e, merged)
 
         ws.ingested.add("events")
         return done

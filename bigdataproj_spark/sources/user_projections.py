@@ -1,14 +1,16 @@
-"""S16 (engine extension): USER-DECLARED projections — the router's
-catalog becomes data.
+"""S16 (engine extension): DECLARED views — the router's catalog is
+data, and every cube, built-in or user-declared, runs one lifecycle.
 
-Every projection the router serves so far (pricing cube, rollup pair,
-star-date cube, the corpus cubes) is a built-in: its group keys and
-stored partials were chosen by the engine's authors and registered in
-code. A warehouse team's actual workflow is the other way around —
-they look at THEIR query mix, declare the aggregate view it needs, and
-expect the optimizer to start using it (CREATE MATERIALIZED VIEW +
-automatic rewrite; same Goldstein-Larson matching the built-ins use,
-see plans/routing.py). :func:`deploy_projection` is that surface:
+A view is one :class:`plans.routing.View` declaration: its keys, its
+stored measure partials, its COUNT(*) column, its sketches, its time
+key and its arms. The five built-in cubes are entries of
+``routing.BUILTIN_VIEWS`` (their paths live in the warehouse state's
+``projections`` under their names); a user view is declared at run
+time — a warehouse team looks at its query mix, declares the
+aggregate view it needs, and expects the optimizer to start using it
+(CREATE MATERIALIZED VIEW + automatic rewrite; the same
+Goldstein-Larson matching the built-ins use, see plans/routing.py).
+:func:`deploy_projection` is that surface:
 
     deploy_projection(spark, sf_dir, "prio_flag",
                       keys=("o_orderpriority", "l_returnflag"))
@@ -23,19 +25,23 @@ warehouse's one user-view catalog, which the router
 its built-ins, and from that moment every matching
 spec AND every matching SQL statement through the front door is
 answered from it — the caller of those queries never learns a
-projection exists. View names are unique across both families:
-deploying a name replaces whatever view held it.
+projection exists. View names are unique across both families and
+the built-ins: deploying a name replaces whatever view held it, and a
+built-in's name is refused.
 
-One declaration (:func:`_declare`) and one cube build
-(:func:`_build`) serve both families, reading the table model
-(plans/routing.py FACT_TABLES): a key is a fact column or an
-attribute of one of the table's arms, and the build joins the minimal
-arm set reaching every key and measure source column through the one
-arm-join builder (routing.join_arms). The lifecycle is shared too:
-deploy / ensure (idempotent) / refresh (delta-merge, commutative-monoid,
-rebuild-equal) / drop (deregister; files await scheduled GC) / list,
-and :func:`sources.maintenance.refresh_warehouse` refreshes every
-refresh-maintained view alongside the built-ins of its table.
+One build (:func:`_build`) reads only the declaration and the table
+model (plans/routing.py FACT_TABLES): a key is a fact column or an
+attribute of one of the table's arms, and the build joins the view's
+arms through the one arm-join builder (routing.join_arms) — or the
+stored denorm, where it stands in for the order chain
+(:func:`_denorm_covers`). One lifecycle serves every view: deploy
+(:func:`deploy_builtin` memoized for the built-ins,
+:func:`deploy_projection` for user views), the one refresh
+(:func:`refresh_projection`: delta cube, :func:`merge_partial_frames`,
+publish, swing), the affected-group recompute and the expiry filter
+(sources/retention.py), drop and list.
+:func:`sources.maintenance.refresh_warehouse` refreshes the built-ins
+from its pool and every refresh-maintained user view after it.
 
 - **Lineitem star**: keys from the fact, the order chain and the
   part/supplier arms; measures from the five lineitem money measures
@@ -73,23 +79,26 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.routing import CORPUS_TABLES, current_corpus_table
 from ..plans.routing import (
+    BUILTIN_VIEWS,
+    CORPUS_TABLES,
     FACT_TABLES,
     LINEITEM,
     MEASURES,
     FactTable,
-    Measure,
     Projection,
+    View,
     _StoredMeasure,
+    current_corpus_table,
     join_arms,
     star_arms,
 )
 from .bucketed import (
+    DENORM_ATTRS,
     _layout_paths,
     _lineitem_with_derived,
     bucketed_fact_tables,
-    merge_partial_frames,
+    order_revenue_projection,
 )
 from .state import warehouse
 
@@ -103,71 +112,47 @@ _USER_MEASURES = tuple(MEASURES)
 
 
 @dataclass
-class _UserProjection:
-    """Catalog entry: the declaration, the router-facing projection
-    and the current stored path (swung atomically on refresh). The
-    build joins ``arms`` of ``table``'s model and derives the optional
-    hour-grain ``time_key`` (stored alias, ts source col).
+class _Deployed:
+    """A deployed view: its declaration, its current stored version
+    (swung atomically on every publish) and the deploy path its
+    versions derive from. ``projection`` is a user view's router-facing
+    projection; a built-in's is in routing.PROJECTIONS, and its entry
+    here is transient — its path lives in the warehouse state's
+    ``projections`` under its name.
 
-    ``maintained_by`` (round 12): ``"refresh"`` entries are kept
-    current SYNCHRONOUSLY by the mutation hooks (:func:`_maintained`)
-    and are therefore always servable; ``"cdc"`` entries are
-    maintained ASYNCHRONOUSLY by a change-feed consumer
-    (streaming/cdc.py CdcProjectionConsumer), and the router serves
-    them only while FRESH (no unconsumed commit touches their
-    table)."""
+    ``maintained_by`` (round 12): ``"refresh"`` views are kept current
+    SYNCHRONOUSLY by the mutation hooks (:func:`deployed_views`) and
+    are therefore always servable; ``"cdc"`` user views are maintained
+    ASYNCHRONOUSLY by a change-feed consumer (streaming/cdc.py
+    CdcProjectionConsumer), and the router serves them only while
+    FRESH (no unconsumed commit touches their table)."""
 
-    name: str
-    table: str
-    keys: tuple[str, ...]
-    measures: tuple[str, ...]
-    projection: Projection
-    path: str = ""  # current stored version (swung atomically on refresh)
-    base_path: str = ""  # immutable deploy path; refresh versions derive from it
+    view: View
+    path: str = ""
+    base_path: str = ""
+    projection: Projection | None = None
     maintained_by: str = "refresh"
-    arms: tuple[str, ...] = ()
-    time_key: tuple[str, str] | None = None
 
     @property
-    def group_cols(self) -> tuple[str, ...]:
-        """The stored cube's group columns: the keys, then the time key."""
-        return self.keys + ((self.time_key[0],) if self.time_key else ())
+    def key(self) -> str:
+        """The view's name as the router and the mutation hooks report it."""
+        return self.projection.name if self.projection else self.view.name
+
+    @property
+    def keys(self) -> tuple[str, ...]:
+        return self.view.keys
+
+    @property
+    def measures(self) -> tuple[str, ...]:
+        return tuple(s.measure.name for s in self.view.measures)
 
     @property
     def chain(self) -> int:
         """The order-chain depth a lineitem view's build joined."""
-        return LINEITEM.agg_spec.arm_fields(self.arms)["chain"]
-
-    def cube(
-        self,
-        spark: SparkSession,
-        sf_dir: str,
-        rows: DataFrame,
-        measures: tuple[str, ...] | None = None,
-        group_filter: DataFrame | None = None,
-        opened: dict[str, DataFrame] | None = None,
-    ) -> DataFrame:
-        """This view's partial-aggregate cube over ``rows`` of its fact
-        table: the declared measures, or ``measures`` (``()`` leaves
-        just the groups and COUNT(*)); ``opened`` overrides arm frames
-        (:func:`_build`)."""
-        return _build(
-            spark, sf_dir, rows, FACT_TABLES[self.table], self.keys,
-            self.measures if measures is None else measures, self.arms,
-            self.time_key, group_filter, opened,
-        )
-
-    def publish(self, spark: SparkSession, sf_dir: str, cube: DataFrame) -> str:
-        """Write ``cube`` as this view's next version and swing the
-        entry to it — the one publish discipline for refreshes and the
-        S19 rebuilds."""
-        new_path = warehouse(spark, sf_dir).publish(self.base_path)
-        cube.write.mode("overwrite").parquet(new_path)
-        self.path = new_path
-        return new_path
+        return LINEITEM.agg_spec.arm_fields(self.view.arms)["chain"]
 
 
-def _catalog(spark: SparkSession, sf_dir: str) -> dict[str, _UserProjection]:
+def _catalog(spark: SparkSession, sf_dir: str) -> dict[str, _Deployed]:
     return warehouse(spark, sf_dir).user_projections
 
 
@@ -188,116 +173,119 @@ def user_projections(
     Refresh-maintained entries are synchronously current by
     construction and always offered."""
     for u in _catalog(spark, sf_dir).values():
-        if u.table != table:
+        if u.view.table != table:
             continue
         if u.maintained_by == "cdc":
             from ..streaming.cdc import cdc_view_fresh
 
-            if not cdc_view_fresh(spark, sf_dir, u.table, u.path):
+            if not cdc_view_fresh(spark, sf_dir, u.view.table, u.path):
                 continue
         yield u.projection
 
 
-def _maintained(
-    spark: SparkSession, sf_dir: str, table: str
-) -> list[tuple[str, _UserProjection]]:
-    """The refresh-maintained views over ``table`` — the ones the
-    synchronous mutation hooks (refresh_warehouse, the S19 delete and
-    expiry paths) keep current. A CDC-maintained view is fed by its
-    consumer's poll, which reads the same commit from the feed; a hook
-    refresh or rebuild would make that poll double-apply it."""
+def _base_path(sf_dir: str, stem: str) -> str:
+    tag, wh = _layout_paths(sf_dir)
+    return os.path.join(wh, f"{stem}_{tag}")
+
+
+def _builtin(spark: SparkSession, sf_dir: str, name: str) -> _Deployed:
+    """The entry of built-in ``name``, deployed first if it is not."""
+    return _Deployed(
+        BUILTIN_VIEWS[name], deploy_builtin(spark, sf_dir, name),
+        _base_path(sf_dir, name),
+    )
+
+
+def deployed_views(spark: SparkSession, sf_dir: str, table: str) -> list[_Deployed]:
+    """The views over ``table`` the synchronous mutation hooks
+    (refresh_warehouse, the S19 delete and expiry paths) keep current:
+    its deployed built-ins, then its refresh-maintained user views. A
+    CDC-maintained view is fed by its consumer's poll, which reads the
+    same commit from the feed; a hook refresh or rebuild would make
+    that poll double-apply it."""
+    ws = warehouse(spark, sf_dir)
     return [
-        (name, u)
-        for name, u in _catalog(spark, sf_dir).items()
-        if u.table == table and u.maintained_by != "cdc"
+        _builtin(spark, sf_dir, n)
+        for n, v in BUILTIN_VIEWS.items()
+        if v.table == table and n in ws.projections
+    ] + [
+        u for u in ws.user_projections.values()
+        if u.view.table == table and u.maintained_by != "cdc"
     ]
 
 
-def _merge_cols(u: _UserProjection):
-    """(additive, min, max) stored columns of ``u``'s cube, read off
-    its router-facing measures — the refresh merge's column contract."""
-    sm = u.projection.measures.values()
-    add = tuple(s.int_col for s in sm) + tuple(
-        s.cnt_col for s in sm if s.cnt_col
-    ) + (u.projection.count_star_col,)
-    return add, tuple(s.min_col for s in sm), tuple(s.max_col for s in sm)
+# ---------------------------------------------------------------------------
+# The one build and the one merge.
+# ---------------------------------------------------------------------------
 
 
-def _view_projection(
-    name: str, table: str, keys: tuple[str, ...], measures: Iterable[Measure],
-    arms: tuple[str, ...], time_key: tuple[str, str] | None,
-) -> Projection:
-    """The router-facing projection of user view ``name``: its keys,
-    the standard partial columns of its measures
-    (:meth:`_StoredMeasure.of` — the columns :func:`_partial_aggs`
-    writes), COUNT(*) in ``cnt``, the installed state's current version
-    as its scan, its build's arms and its time key."""
+def _partial_aggs(v: View) -> list[Column]:
+    """``v``'s stored partials, in stored column order (:class:`View`):
+    each measure aggregates its at-rest derived column when the
+    bucketed fact stores one, else its int64 expression (post-join for
+    the lineitem arm measures)."""
 
-    def _open(s: SparkSession, d: str) -> DataFrame:
-        from .snapshots import versioned_parquet
-
-        return versioned_parquet(s, _catalog(s, d)[name].path)
-
-    return Projection(
-        name=f"user:{name}",
-        table=table,
-        attrs=frozenset(keys),
-        measures={m.name: _StoredMeasure.of(m) for m in measures},
-        count_star_col="cnt",
-        open=_open,
-        arms=arms,
-        time_key=time_key,
-    )
-
-
-def _int_src(m: Measure) -> str:
-    """The int64 column a measure's partials aggregate FROM in the
-    cube build: the bucketed fact's at-rest derived column, else a
-    column :func:`_partials` materializes from the measure's
-    expression (post-join for the lineitem arm measures)."""
-    return m.derived or f"__{m.name}_raw_i"
-
-
-def _partial_aggs(measures: Iterable[Measure]) -> list[Column]:
-    """A user view's stored partials of ``measures``, named by
-    :meth:`_StoredMeasure.of` (the router reads the same descriptor),
-    in the order :func:`merge_partial_frames` writes them: sums,
-    counts, COUNT(*), mins, maxes."""
-    stored = [_StoredMeasure.of(m) for m in measures]
+    sm = v.measures
+    src = [F.col(s.measure.derived) if s.measure.derived else s.measure.raw_int() for s in sm]
+    counts = {s.cnt_col: s.measure.source_col for s in sm if s.cnt_col}
     return (
-        [F.sum(_int_src(s.measure)).alias(s.int_col) for s in stored]
-        + [
-            F.count(s.measure.source_col).alias(s.cnt_col)
-            for s in stored
-            if s.cnt_col
-        ]
-        + [F.count(F.lit(1)).alias("cnt")]
-        + [F.min(_int_src(s.measure)).alias(s.min_col) for s in stored]
-        + [F.max(_int_src(s.measure)).alias(s.max_col) for s in stored]
+        [F.sum(c).alias(s.int_col) for s, c in zip(sm, src)]
+        + [F.count(c).alias(n) for n, c in counts.items()]
+        + [F.count(F.lit(1)).alias(v.count_star_col)]
+        + [F.min(c).alias(s.min_col) for s, c in zip(sm, src)]
+        + [F.max(c).alias(s.max_col) for s, c in zip(sm, src)]
+        + [F.hll_sketch_agg(c).alias(n) for c, n in v.sketches.items()]
     )
 
 
-def _partials(
-    df: DataFrame,
-    group_cols: list[str],
-    measures: Iterable[Measure],
-    group_filter: DataFrame | None,
+def merge_partial_frames(v: View, stored: DataFrame, delta: DataFrame) -> DataFrame:
+    """THE merge identity of every view refresh: full-outer on the
+    (null-safe) group key, + for sums and counts, least/greatest for
+    min/max partials, register-max ``hll_union`` for sketch partials
+    (all skip/propagate NULLs — exactly the identity a group present
+    on only one side needs). Every stored column is a commutative
+    monoid, so delta-merge == rebuild (:class:`View`)."""
+    sm = v.measures
+    add = (
+        *[s.int_col for s in sm],
+        *dict.fromkeys(s.cnt_col for s in sm if s.cnt_col),
+        v.count_star_col,
+    )
+    s, d = stored.alias("s"), delta.alias("d")
+    cond = [F.col(f"s.{k}").eqNullSafe(F.col(f"d.{k}")) for k in v.group_cols]
+    return s.join(d, cond, "full_outer").select(
+        *[F.coalesce(F.col(f"s.{k}"), F.col(f"d.{k}")).alias(k) for k in v.group_cols],
+        *[
+            (
+                F.coalesce(F.col(f"s.{m}"), F.lit(0))
+                + F.coalesce(F.col(f"d.{m}"), F.lit(0))
+            ).alias(m)
+            for m in add
+        ],
+        *[F.least(F.col(f"s.{x.min_col}"), F.col(f"d.{x.min_col}")).alias(x.min_col) for x in sm],
+        *[F.greatest(F.col(f"s.{x.max_col}"), F.col(f"d.{x.max_col}")).alias(x.max_col) for x in sm],
+        *[
+            F.when(F.col(f"s.{m}").isNull(), F.col(f"d.{m}"))
+            .when(F.col(f"d.{m}").isNull(), F.col(f"s.{m}"))
+            .otherwise(F.hll_union(F.col(f"s.{m}"), F.col(f"d.{m}")))
+            .alias(m)
+            for m in v.sketches.values()
+        ],
+    )
+
+
+def merge_delta(
+    spark: SparkSession,
+    sf_dir: str,
+    v: View,
+    stored: DataFrame,
+    rows: DataFrame,
+    joined: bool = False,
 ) -> DataFrame:
-    """The tail both families' cube builds share: each measure's int64
-    input materialized (unless stored at rest), the optional
-    affected-group semi-filter, one grouped partial aggregation."""
-    measures = list(measures)
-    for m in measures:
-        if m.derived is None:
-            df = df.withColumn(_int_src(m), m.raw_int())
-    if group_filter is not None:
-        df = df.join(F.broadcast(group_filter), group_cols, "semi")
-    return df.groupBy(*group_cols).agg(*_partial_aggs(measures))
+    """``stored`` with the cube of ``rows`` merged in — the delta step
+    of the one refresh and of the CDC consumer's poll."""
+    return merge_partial_frames(v, stored, _build(spark, sf_dir, rows, v, joined=joined))
 
-
-# ---------------------------------------------------------------------------
-# The one declaration and the one cube build.
-# ---------------------------------------------------------------------------
 
 # Arms whose deploy-side frame is not the query-time one: the build
 # and refresh read the MAINTAINED bucketed orders table (refresh_
@@ -314,44 +302,93 @@ _DEPLOY_OPEN = {
 }
 
 
+def _read_cols(v: View) -> list[str]:
+    """The fact and arm columns ``v``'s build reads: keys (in stored
+    order), measure source columns, sketch targets."""
+    src = [s.measure.source_col for s in v.measures if s.measure.source_col]
+    return list(dict.fromkeys((*v.keys, *src, *v.sketches)))
+
+
+def _denorm_covers(v: View) -> bool:
+    """Whether the stored denorm stands in for ``v``'s order chain: the
+    view joins exactly orders→customer→nation→region and reads only
+    fact columns and DENORM_ATTRS. The denorm IS that inner join per
+    order (sources/bucketed.py denorm_join, kept current by the orders
+    refresh), so joining it equals joining the four arms — and it is
+    bucketed on the order key, so the deploy join is exchange-free on
+    the fact spine. ORDERING: a batch that also introduces new ORDERS
+    must refresh the denorm first (refresh_warehouse does) — a
+    lineitem whose order is missing from the denorm drops out of the
+    build, on the refresh and the rebuild path alike."""
+    return (
+        v.table == "lineitem"
+        and v.arms == star_arms(4)
+        and all(c in LINEITEM.columns or c in DENORM_ATTRS for c in _read_cols(v))
+    )
+
+
+def _keyed(
+    spark: SparkSession,
+    sf_dir: str,
+    rows: DataFrame,
+    v: View,
+    opened: dict[str, DataFrame] | None = None,
+    joined: bool = False,
+) -> DataFrame:
+    """``rows`` of ``v``'s fact table with every group column
+    attached: ``v``'s arms joined (each carrying only the columns the
+    build reads; ``opened`` overrides an arm's frame — the order-UPDATE
+    reattribution passes the PRE-update orders so the OLD group
+    attribution can still be computed after the upsert), or the stored
+    denorm where it covers the arms; then the hour-grain time key.
+    ``joined``: the rows already carry the denorm's columns (the
+    refresh's shared delta frame, sources/bucketed.py
+    build_delta_frame). No shuffle_hash hints: a per-task hash
+    relation cannot spill, and sort-merge over the bucket-aligned
+    tables does (a hash build died with "can't acquire memory" on the
+    segment cube deploy at sf20 — 120M lineitems, 30M denorm rows); a
+    one-shot deploy pays the sort once."""
+    t = FACT_TABLES[v.table]
+    cols = _read_cols(v)
+    if joined:
+        df = rows
+    elif opened is None and _denorm_covers(v):
+        _roll, den_name = order_revenue_projection(spark, sf_dir)
+        den = spark.table(den_name).select(
+            "o_orderkey", *[c for c in cols if c in DENORM_ATTRS]
+        )
+        df = rows.join(den, rows.l_orderkey == den.o_orderkey)
+    else:
+        opened = {
+            **{n: f(spark, sf_dir) for n, f in _DEPLOY_OPEN.items() if n in v.arms},
+            **(opened or {}),
+        }
+        df = join_arms(spark, sf_dir, rows, t, v.arms, cols, opened, hash_hints=False)
+    if v.time_key is not None:
+        alias, src = v.time_key
+        df = df.withColumn(alias, F.date_trunc("hour", F.col(src)))
+    return df
+
+
 def _build(
     spark: SparkSession,
     sf_dir: str,
     rows: DataFrame,
-    t: FactTable,
-    keys: tuple[str, ...],
-    measures: tuple[str, ...],
-    arms: tuple[str, ...],
-    time_key: tuple[str, str] | None = None,
+    v: View,
     group_filter: DataFrame | None = None,
-    opened: dict[str, DataFrame] | None = None,
+    joined: bool = False,
 ) -> DataFrame:
-    """The deploy/refresh cube build of both families: fact ⋈ the
-    view's arms (each carrying only the keys and measure source
-    columns it holds; ``opened`` overrides an arm's frame — the order-
-    UPDATE reattribution passes the PRE-update orders so the OLD group
-    attribution can still be computed after the upsert), arm measure
-    ints materialized post-join, the hour-grain time key derived, one
-    grouped partial aggregation.
-
-    ``group_filter`` (a DataFrame of group-key tuples) semi-filters the
-    ROWS — after the arm joins make every key column available, BEFORE
-    the groupBy — so an affected-group recompute aggregates only the
-    surviving rows of the touched groups (delete-sized set, broadcast
-    semi), never the corpus (sources/retention.py)."""
-    ms = [t.measures[m] for m in measures]
-    opened = {
-        **{n: f(spark, sf_dir) for n, f in _DEPLOY_OPEN.items() if n in arms},
-        **(opened or {}),
-    }
-    cols = sorted(set(keys) | {m.source_col for m in ms if m.source_col})
-    df = join_arms(spark, sf_dir, rows, t, arms, cols, opened, hash_hints=False)
-    group_cols = list(keys)
-    if time_key is not None:
-        alias, src = time_key
-        df = df.withColumn(alias, F.date_trunc("hour", F.col(src)))
-        group_cols.append(alias)
-    return _partials(df, group_cols, ms, group_filter)
+    """THE cube build of every view: ``v``'s partials of ``rows``
+    (:func:`_keyed`). ``group_filter`` (a DataFrame of group-key
+    tuples) semi-filters the ROWS — after the arm joins make every key
+    column available, BEFORE the groupBy — so an affected-group
+    recompute aggregates only the surviving rows of the touched groups
+    (delete-sized set, broadcast semi), never the corpus
+    (sources/retention.py)."""
+    df = _keyed(spark, sf_dir, rows, v, joined=joined)
+    if group_filter is not None:
+        df = df.join(F.broadcast(group_filter), list(v.group_cols), "semi")
+    return df.groupBy(*v.group_cols).agg(*_partial_aggs(v))
 
 
 def _build_cube(
@@ -363,17 +400,44 @@ def _build_cube(
     chain: int,
     part: bool = False,
     supp: bool = False,
-    group_filter: DataFrame | None = None,
-    orders_override: DataFrame | None = None,
 ) -> DataFrame:
-    """The lineitem cube build (:func:`_build`) of the arms a chain
-    depth and the part/supplier flags declare; ``orders_override``
-    stands in for the orders arm's frame."""
-    opened = None if orders_override is None else {"orders": orders_override}
-    return _build(
-        spark, sf_dir, li, LINEITEM, keys, measures, star_arms(chain, part, supp),
-        None, group_filter, opened,
-    )
+    """The lineitem cube of a view declaring ``keys`` and ``measures``
+    over the arms a chain depth and the part/supplier flags declare."""
+    ms = tuple(_StoredMeasure.of(MEASURES[m]) for m in measures)
+    v = View("", "lineitem", tuple(keys), ms, arms=star_arms(chain, part, supp))
+    return _build(spark, sf_dir, li, v)
+
+
+def _deploy(spark: SparkSession, sf_dir: str, v: View, path: str) -> None:
+    """Write ``v``'s cube over its table's current rows at ``path``."""
+    if v.table in CORPUS_TABLES:
+        rows = current_corpus_table(spark, sf_dir, v.table)
+    else:
+        from .retention import apply_tombstones
+
+        li_name, _ = bucketed_fact_tables(spark, sf_dir)
+        rows = apply_tombstones(
+            spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
+        )
+    _build(spark, sf_dir, rows, v).write.mode("overwrite").parquet(path)
+    from .snapshots import evict_versioned_scan
+
+    evict_versioned_scan(spark, path)  # a redeploy overwrites the base path
+
+
+def _publish_cube(
+    spark: SparkSession, sf_dir: str, e: _Deployed, cube: DataFrame
+) -> str:
+    """Write ``cube`` as ``e``'s next version and swing ``e`` to it — the
+    one publish of the refresh, the affected-group recompute and the
+    expiry filter."""
+    ws = warehouse(spark, sf_dir)
+    new_path = ws.publish(e.base_path)
+    cube.write.mode("overwrite").parquet(new_path)
+    e.path = new_path
+    if e.projection is None:
+        ws.projections[e.view.name] = new_path
+    return new_path
 
 
 def view_arms(t: FactTable, keys: Iterable[str], measures: Iterable[str]) -> tuple[str, ...]:
@@ -388,12 +452,15 @@ def _declare(
     keys: tuple[str, ...],
     measures: tuple[str, ...] | None,
     time_key: tuple[str, str] | None,
-) -> _UserProjection:
-    """Validate a view declaration over any fact table (the shared
+) -> _Deployed:
+    """Validate a user view declaration over any fact table (the shared
     constructor of deployed and CDC-maintained views). Each arm
     attribute key or arm measure pulls its arm (and the arm's parents)
     into the build; the stored cube then answers the statements
-    declaring those arms."""
+    declaring those arms. The view stores ``_StoredMeasure.of`` each
+    measure and COUNT(*) in ``cnt``."""
+    if name in BUILTIN_VIEWS:
+        raise ValueError(f"{name!r} names a built-in cube")
     t = FACT_TABLES.get(table_name)
     if t is None:
         raise ValueError(
@@ -429,19 +496,34 @@ def _declare(
             raise ValueError(f"time key alias {alias!r} collides with a key")
     if not keys and time_key is None:
         raise ValueError("a projection needs at least one group key")
-    measures = tuple(measures)
-    arms = view_arms(t, keys, measures)
-    proj = _view_projection(
-        name, table_name, keys, (t.measures[m] for m in measures), arms, time_key
+    view = View(
+        name, table_name, keys,
+        tuple(_StoredMeasure.of(t.measures[m]) for m in measures),
+        time_key=time_key, arms=view_arms(t, keys, measures),
     )
-    return _UserProjection(
-        name, table_name, keys, measures, proj, arms=arms, time_key=time_key
-    )
+
+    def _open(s: SparkSession, d: str) -> DataFrame:
+        from .snapshots import versioned_parquet
+
+        return versioned_parquet(s, _catalog(s, d)[name].path)
+
+    return _Deployed(view, projection=view.projection(f"user:{name}", _open))
 
 
 # ---------------------------------------------------------------------------
-# The lifecycle, shared by both families.
+# The lifecycle, shared by the built-ins and the user views.
 # ---------------------------------------------------------------------------
+
+
+def deploy_builtin(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Deploy built-in cube ``name`` (memoized per warehouse) and
+    return its current path."""
+    ws = warehouse(spark, sf_dir)
+    if name not in ws.projections:
+        path = _base_path(sf_dir, name)
+        _deploy(spark, sf_dir, BUILTIN_VIEWS[name], path)
+        ws.projections[name] = path
+    return ws.projections[name]
 
 
 def deploy_projection(
@@ -464,26 +546,9 @@ def deploy_projection(
     all of the table's. Deploying a name replaces the view that held
     it, whichever table that view was over. Returns the router-facing
     projection."""
-    keys = tuple(keys)
-    u = _declare(name, table, keys, measures, time_key)
-    if table in CORPUS_TABLES:
-        rows = current_corpus_table(spark, sf_dir, table)
-        stem = "user_cproj"
-    else:
-        from .retention import apply_tombstones
-
-        li_name, _ = bucketed_fact_tables(spark, sf_dir)
-        rows = apply_tombstones(
-            spark, sf_dir, "orders", spark.table(li_name), "l_orderkey"
-        )
-        stem = "user_proj"
-    tag, wh = _layout_paths(sf_dir)
-    path = os.path.join(wh, f"{stem}_{name}_{tag}")
-    u.cube(spark, sf_dir, rows).write.mode("overwrite").parquet(path)
-    from .snapshots import evict_versioned_scan
-
-    evict_versioned_scan(spark, path)  # redeploy overwrites the base path
-    u.path = u.base_path = path
+    u = _declare(name, table, tuple(keys), measures, time_key)
+    u.path = u.base_path = _base_path(sf_dir, f"user_proj_{name}")
+    _deploy(spark, sf_dir, u.view, u.path)
     _catalog(spark, sf_dir)[name] = u
     return u.projection
 
@@ -507,16 +572,16 @@ def list_projections(spark: SparkSession, sf_dir: str) -> list[dict]:
     other fields are None."""
     return [
         {
-            "name": u.name,
-            "table": u.table,
+            "name": u.view.name,
+            "table": u.view.table,
             "keys": u.keys,
             "measures": u.measures,
             "chain": None,
             "part": None,
             "supp": None,
             "dims": None,
-            **FACT_TABLES[u.table].agg_spec.arm_fields(u.arms),
-            "time_key": u.time_key,
+            **FACT_TABLES[u.view.table].agg_spec.arm_fields(u.view.arms),
+            "time_key": u.view.time_key,
             "path": u.path,
         }
         for u in _catalog(spark, sf_dir).values()
@@ -533,7 +598,7 @@ def ensure_projection(
     """Idempotent lineitem-star deploy: reuse the registered
     projection when its declaration matches, else (re)deploy."""
     u = _catalog(spark, sf_dir).get(name)
-    if u and (u.table, u.keys, u.measures) == (
+    if u and (u.view.table, u.keys, u.measures) == (
         "lineitem", tuple(keys), tuple(measures)
     ):
         return u.projection
@@ -541,40 +606,67 @@ def ensure_projection(
 
 
 def refresh_projection(
-    spark: SparkSession, sf_dir: str, name: str, delta: DataFrame
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    delta: DataFrame,
+    prejoined: DataFrame | None = None,
 ) -> str:
-    """Delta-merge one ingested batch of the view's fact table into a
-    deployed user projection. Dimension keys resolve through the
-    MAINTAINED state: the bucketed orders table (plus the broadcast
-    base dims) for the star, the CURRENT registry for a corpus table.
-    So a batch shipping new orders WITH their lineitems, or new
-    sources with their documents, is handled as long as the dimension
-    side lands first — exactly the ordering refresh_warehouse
-    encodes. Additive monoid merge == rebuild, same argument as every
-    built-in cube; publishes a new VERSION the catalog swings to
-    atomically."""
-    cat = _catalog(spark, sf_dir)
-    if name not in cat:
+    """THE refresh of every view — built-in ``name`` (deployed over the
+    base corpus first if it is not) or deployed user view ``name``:
+    cube one ingested batch of the view's fact table, merge it into
+    the stored cube (:func:`merge_partial_frames`; additive monoid
+    merge == rebuild) and publish a new VERSION the view swings to
+    atomically. Cost is O(|delta| + |cube|).
+
+    Arm keys resolve through the MAINTAINED state: the bucketed orders
+    table or the stored denorm (plus the broadcast base dims) for the
+    star, the CURRENT registry for a corpus table. So a batch shipping
+    new orders WITH their lineitems, or new sources with their
+    documents, is handled as long as the dimension side lands first —
+    exactly the ordering refresh_warehouse encodes. ``prejoined`` is
+    refresh_warehouse's shared lineitem delta frame
+    (sources/bucketed.py build_delta_frame): a view with no arms reads
+    all of its rows, a view the denorm covers its denorm-matched rows
+    (which equal the INNER join, the denorm being unique per order),
+    and any other view joins its arms from the delta."""
+    if name in BUILTIN_VIEWS:
+        e = _builtin(spark, sf_dir, name)
+    elif name in _catalog(spark, sf_dir):
+        e = _catalog(spark, sf_dir)[name]
+    else:
         raise KeyError(f"no deployed projection {name!r}")
-    u = cat[name]
-    if u.table == "lineitem":
-        delta = _lineitem_with_derived(delta)  # the star build's int columns
-    add, mins, maxs = _merge_cols(u)
+    v = e.view
+    rows, joined = delta, False
+    if v.table == "lineitem":
+        if prejoined is not None and not v.arms:
+            rows = prejoined
+        elif prejoined is not None and _denorm_covers(v):
+            rows, joined = prejoined.filter(F.col("o_orderkey").isNotNull()), True
+        else:
+            rows = _lineitem_with_derived(delta)
     from .snapshots import versioned_parquet
 
-    merged = merge_partial_frames(
-        versioned_parquet(spark, u.path), u.cube(spark, sf_dir, delta),
-        u.group_cols, add, mins, maxs,
+    # versioned_parquet, not read.parquet (round 13): the stored path is
+    # immutable once published and the routed read path already
+    # memoizes it
+    merged = merge_delta(
+        spark, sf_dir, v, versioned_parquet(spark, e.path), rows, joined
     )
-    return u.publish(spark, sf_dir, merged)
+    return _publish_cube(spark, sf_dir, e, merged)
 
 
 def refresh_projections_for(
-    spark: SparkSession, sf_dir: str, table: str, delta: DataFrame
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    delta: DataFrame,
+    prejoined: DataFrame | None = None,
 ) -> dict[str, str]:
-    """Refresh every refresh-maintained view over ``table`` — the hook
-    refresh_warehouse calls after that table's built-ins."""
+    """Refresh every refresh-maintained user view over ``table`` — the
+    hook refresh_warehouse calls after that table's built-ins."""
     return {
-        name: refresh_projection(spark, sf_dir, name, delta)
-        for name, _u in _maintained(spark, sf_dir, table)
+        name: refresh_projection(spark, sf_dir, name, delta, prejoined)
+        for name, u in _catalog(spark, sf_dir).items()
+        if u.view.table == table and u.maintained_by != "cdc"
     }

@@ -492,7 +492,9 @@ class CdcProjectionConsumer:
 
     # -- build ------------------------------------------------------------
     def _partials(self, df: DataFrame) -> DataFrame:
-        return self._view.cube(self.spark, self.sf_dir, df)
+        from ..sources.user_projections import _build
+
+        return _build(self.spark, self.sf_dir, df, self._view.view)
 
     def _ns(self, lft: str, rgt: str):
         """Null-safe equi condition on the group keys between two
@@ -567,8 +569,7 @@ class CdcProjectionConsumer:
 
     def _apply(self, changes: DataFrame, head: int) -> None:
         from ..plans.routing import current_corpus_table
-        from ..sources.bucketed import merge_partial_frames
-        from ..sources.user_projections import _merge_cols
+        from ..sources.user_projections import merge_delta
 
         keys = list(self.keys)
         stored = self._read_stored()
@@ -592,11 +593,7 @@ class CdcProjectionConsumer:
                 F.broadcast(affected.alias("r")), self._ns("a", "r"),
                 "left_anti",
             )
-        delta = self._partials(adds)
-        add_cols, min_cols, max_cols = _merge_cols(self._view)
-        merged = merge_partial_frames(
-            stored, delta, self.keys, add_cols, min_cols, max_cols
-        )
+        merged = merge_delta(self.spark, self.sf_dir, self._view.view, stored, adds)
         if have_affected:
             fact = current_corpus_table(self.spark, self.sf_dir, self.table)
             recomputed = self._partials(

@@ -150,6 +150,36 @@ def test_incremental_rollup_refresh_equals_rebuild(spark, sf_dir):
         warehouse(spark, sf_dir).projections["order_revenue"] = base
 
 
+# The pricing cubes' stored partials, written out by hand so the
+# rebuild side of the refresh-equals-rebuild checks stays independent
+# of the engine's one view build.
+def _pricing_cube_aggs() -> list:
+    src = {
+        "qty_i": "l_qty_i",
+        "price_i": "l_price_i",
+        "disc_i": "l_disc_i",
+        "rev_i": "l_rev_i",
+        "charge_i": "l_charge_i",
+    }
+    aggs = [F.sum(src[c]).alias(c) for c in src]
+    aggs += [
+        F.count("l_quantity").alias("cnt_qty"),
+        F.count("l_extendedprice").alias("cnt_price"),
+        F.count("l_discount").alias("cnt_disc"),
+        F.count(F.lit(1)).alias("cnt"),
+    ]
+    aggs += [F.min(src[c]).alias(f"min_{c}") for c in src]
+    aggs += [F.max(src[c]).alias(f"max_{c}") for c in src]
+    return aggs
+
+
+def _star_cube_aggs() -> list:
+    return _pricing_cube_aggs() + [
+        F.hll_sketch_agg("l_suppkey").alias("supp_hll"),
+        F.hll_sketch_agg("l_partkey").alias("part_hll"),
+    ]
+
+
 _PRICING_PARTIAL_DTYPES = [
     ("qty_i", "bigint"), ("price_i", "bigint"), ("disc_i", "bigint"),
     ("rev_i", "bigint"), ("charge_i", "bigint"),
@@ -226,8 +256,8 @@ def test_incremental_cube_refresh_equals_rebuild(spark, sf_dir):
     from bigdataproj_spark.sources.bucketed import (
         _lineitem_with_derived,
         pricing_cube_table,
-        refresh_pricing_cube,
     )
+    from bigdataproj_spark.sources.user_projections import refresh_projection
 
     base = pricing_cube_table(spark, sf_dir)
     li = table(spark, sf_dir, "lineitem")
@@ -240,9 +270,7 @@ def test_incremental_cube_refresh_equals_rebuild(spark, sf_dir):
     )
     keys = ["l_returnflag", "l_linestatus", "l_shipdate"]
     try:
-        from bigdataproj_spark.sources.bucketed import _pricing_cube_aggs
-
-        new_path = refresh_pricing_cube(spark, sf_dir, delta)
+        new_path = refresh_projection(spark, sf_dir, "pricing_cube", delta)
         # the from-scratch rebuild over base+delta, via the SAME agg
         # list the deploy uses (incl. the round-6 min/max partials)
         expected = (
@@ -327,9 +355,9 @@ def test_incremental_star_date_cube_refresh_equals_rebuild(spark, sf_dir):
     from bigdataproj_spark.sources.bucketed import (
         _lineitem_with_derived,
         order_revenue_projection,
-        refresh_star_date_cube,
         star_date_cube_table,
     )
+    from bigdataproj_spark.sources.user_projections import refresh_projection
 
     base = star_date_cube_table(spark, sf_dir)
     li = table(spark, sf_dir, "lineitem")
@@ -340,10 +368,9 @@ def test_incremental_star_date_cube_refresh_equals_rebuild(spark, sf_dir):
             F.col("l_linenumber") % 2 == 0, F.col("l_shipdate")
         ).otherwise(F.col("l_shipdate") + F.expr("INTERVAL 5000 DAYS")),
     )
-    from bigdataproj_spark.sources.bucketed import (
+    from bigdataproj_spark.plans.routing import (
         _STAR_CUBE_KEYS,
         _STAR_SKETCH_COLS,
-        _star_cube_aggs,
     )
 
     keys = list(_STAR_CUBE_KEYS)
@@ -357,7 +384,7 @@ def test_incremental_star_date_cube_refresh_equals_rebuild(spark, sf_dir):
         return df
 
     try:
-        new_path = refresh_star_date_cube(spark, sf_dir, delta)
+        new_path = refresh_projection(spark, sf_dir, "star_date_cube", delta)
         # from-scratch rebuild over base+delta through the same denorm
         _, den_name = order_revenue_projection(spark, sf_dir)
         den = spark.table(den_name).select("o_orderkey", "r_name", "n_name")
@@ -386,10 +413,8 @@ def test_stream_ingest_maintains_pricing_cube(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from bigdataproj_spark.catalog import table
-    from bigdataproj_spark.sources.bucketed import (
-        pricing_cube_table,
-        refresh_pricing_cube,
-    )
+    from bigdataproj_spark.sources.bucketed import pricing_cube_table
+    from bigdataproj_spark.sources.user_projections import refresh_projection
 
     li = table(spark, sf_dir, "lineitem")
     # Split the corpus: 60% is the "deployed" base, 40% streams in as
@@ -411,10 +436,8 @@ def test_stream_ingest_maintains_pricing_cube(spark, sf_dir, tmp_path):
         table(spark, sf_dir, t).write.parquet(str(base_dir / f"{t}.parquet"))
     sf_base = str(base_dir)
     pricing_cube_table(spark, sf_base)  # deploy over the base corpus
-    from bigdataproj_spark.sources.bucketed import (
-        refresh_star_date_cube,
-        star_date_cube_table,
-    )
+    from bigdataproj_spark.sources.bucketed import star_date_cube_table
+    from bigdataproj_spark.sources.user_projections import refresh_projection
 
     star_date_cube_table(spark, sf_base)  # star cube deploys over the base too
 
@@ -428,8 +451,8 @@ def test_stream_ingest_maintains_pricing_cube(spark, sf_dir, tmp_path):
         if batch_df.count():
             # both projections maintain from the same micro-batch (no
             # new ORDERS stream in, so the denorm needs no refresh)
-            refresh_pricing_cube(spark, sf_base, batch_df)
-            refresh_star_date_cube(spark, sf_base, batch_df)
+            refresh_projection(spark, sf_base, "pricing_cube", batch_df)
+            refresh_projection(spark, sf_base, "star_date_cube", batch_df)
 
     q = (
         stream.writeStream.foreachBatch(refresh)
@@ -466,7 +489,7 @@ def test_stream_ingest_maintains_pricing_cube(spark, sf_dir, tmp_path):
 
     # the star cube maintained through the same micro-batches equals
     # the one-shot cube of the full corpus too
-    from bigdataproj_spark.sources.bucketed import (
+    from bigdataproj_spark.plans.routing import (
         _STAR_CUBE_KEYS,
         _STAR_SKETCH_COLS,
     )

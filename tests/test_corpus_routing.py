@@ -16,6 +16,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdataproj_spark.catalog import table
+from bigdataproj_spark.functions import cents
 from bigdataproj_spark.plans import physical_plan as plan_of
 from bigdataproj_spark.plans.routing import (
     CORPUS_TABLES,
@@ -35,6 +36,7 @@ from bigdataproj_spark.plans.sqlfront import (
     parse_sql,
     route_sql,
 )
+from bigdataproj_spark.sources.corpus_cubes import doc_stopword_count, doc_token_count
 from bigdataproj_spark.sources.state import warehouse
 from bigdataproj_spark.testing import compare_frames
 
@@ -420,13 +422,45 @@ def test_corpus_sql_parse_shapes():
 # ---------------------------------------------------------------------------
 
 
+# The corpus cubes' stored partials, written out by hand so the
+# rebuild side of the refresh-equals-rebuild checks stays independent
+# of the engine's one view build.
+def _docs_cube_aggs() -> list:
+    tok = doc_token_count()
+    stop = doc_stopword_count()
+    chars = F.col("n_chars")
+    return [
+        F.sum(chars).alias("chars_i"),
+        F.sum(tok).alias("tokens_i"),
+        F.sum(stop).alias("stop_i"),
+        F.count("n_chars").alias("cnt_chars"),
+        F.count("text").alias("cnt_text"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.min(chars).alias("min_chars_i"),
+        F.min(tok).alias("min_tokens_i"),
+        F.min(stop).alias("min_stop_i"),
+        F.max(chars).alias("max_chars_i"),
+        F.max(tok).alias("max_tokens_i"),
+        F.max(stop).alias("max_stop_i"),
+    ]
+
+
+def _events_cube_aggs() -> list:
+    v = cents("value")
+    return [
+        F.sum(v).alias("value_i"),
+        F.count("value").alias("cnt_value"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.min(v).alias("min_value_i"),
+        F.max(v).alias("max_value_i"),
+        F.hll_sketch_agg("user_id").alias("users_hll"),
+    ]
+
+
 def test_docs_cube_refresh_equals_rebuild(spark, sf_dir):
-    from bigdataproj_spark.sources.corpus_cubes import (
-        DOCS_CUBE_KEYS,
-        _docs_cube_aggs,
-        docs_stats_cube_table,
-        refresh_docs_cube,
-    )
+    from bigdataproj_spark.sources.corpus_cubes import docs_stats_cube_table
+    from bigdataproj_spark.plans.routing import DOCS_CUBE_KEYS
+    from bigdataproj_spark.sources.user_projections import refresh_projection
 
     base = docs_stats_cube_table(spark, sf_dir)
     docs = table(spark, sf_dir, "documents")
@@ -437,7 +471,7 @@ def test_docs_cube_refresh_equals_rebuild(spark, sf_dir):
     )
     keys = list(DOCS_CUBE_KEYS)
     try:
-        new_path = refresh_docs_cube(spark, sf_dir, delta)
+        new_path = refresh_projection(spark, sf_dir, "docs_stats_cube", delta)
         expected = (
             docs.unionByName(delta)
             .groupBy(*keys)
@@ -454,12 +488,9 @@ def test_docs_cube_refresh_equals_rebuild(spark, sf_dir):
 
 
 def test_events_cube_refresh_equals_rebuild(spark, sf_dir):
-    from bigdataproj_spark.sources.corpus_cubes import (
-        EVENTS_CUBE_KEYS,
-        _events_cube_aggs,
-        events_hourly_cube_table,
-        refresh_events_cube,
-    )
+    from bigdataproj_spark.sources.corpus_cubes import events_hourly_cube_table
+    from bigdataproj_spark.plans.routing import EVENTS_CUBE_KEYS
+    from bigdataproj_spark.sources.user_projections import refresh_projection
 
     base = events_hourly_cube_table(spark, sf_dir)
     ev = table(spark, sf_dir, "events")
@@ -479,7 +510,7 @@ def test_events_cube_refresh_equals_rebuild(spark, sf_dir):
         return df.withColumn("users_hll", F.hll_sketch_estimate("users_hll"))
 
     try:
-        new_path = refresh_events_cube(spark, sf_dir, delta)
+        new_path = refresh_projection(spark, sf_dir, "events_hourly_cube", delta)
         expected = est(
             ev.unionByName(delta)
             .withColumn("event_hour", F.date_trunc("hour", F.col("ts")))
@@ -527,11 +558,9 @@ def test_stream_ingest_maintains_events_cube_end_to_end(spark, sf_dir, tmp_path)
     cube, matching DuckDB over the full raw corpus. That chain
     (stream → incremental maintenance → routed SQL → oracle) is the
     reference's ingest-then-query-the-index posture for event data."""
-    from bigdataproj_spark.sources.corpus_cubes import (
-        EVENTS_CUBE_KEYS,
-        events_hourly_cube_table,
-        refresh_events_cube,
-    )
+    from bigdataproj_spark.sources.corpus_cubes import events_hourly_cube_table
+    from bigdataproj_spark.plans.routing import EVENTS_CUBE_KEYS
+    from bigdataproj_spark.sources.user_projections import refresh_projection
 
     ev = table(spark, sf_dir, "events")
     base = ev.filter(F.col("event_id") % 5 < 3)
@@ -555,7 +584,7 @@ def test_stream_ingest_maintains_events_cube_end_to_end(spark, sf_dir, tmp_path)
 
     def refresh(batch_df, batch_id):
         if batch_df.count():
-            refresh_events_cube(spark, sf_base, batch_df)
+            refresh_projection(spark, sf_base, "events_hourly_cube", batch_df)
 
     q = (
         stream.writeStream.foreachBatch(refresh)
@@ -1034,8 +1063,8 @@ def test_sources_dim_refresh_keeps_registry_complete(spark, sf_dir, tmp_path):
     registry, with the canonical derived attributes; a re-delivered
     batch is a no-op (no new version)."""
     from bigdataproj_spark.sources.corpus_cubes import (
-        refresh_sources_dim,
         sources_dim_table,
+        refresh_registry,
     )
 
     docs = table(spark, sf_dir, "documents")
@@ -1048,7 +1077,7 @@ def test_sources_dim_refresh_keeps_registry_complete(spark, sf_dir, tmp_path):
     assert spark.read.parquet(p0).filter("src_id = 'src7'").count() == 0
 
     delta = docs.filter(F.col("source") == "src7")
-    p1 = refresh_sources_dim(spark, sf_base, delta)
+    p1 = refresh_registry(spark, sf_base, "sources", delta)
     assert p1 != p0
     assert sources_dim_table(spark, sf_base) == p1  # memo swung
     row = spark.read.parquet(p1).filter("src_id = 'src7'").collect()
@@ -1056,7 +1085,7 @@ def test_sources_dim_refresh_keeps_registry_complete(spark, sf_dir, tmp_path):
     assert len(row) == 1
     assert row[0].s_kind == "forum" and row[0].s_tier == "crawl"
     # redelivery: same sources, no new version
-    assert refresh_sources_dim(spark, sf_base, delta) == p1
+    assert refresh_registry(spark, sf_base, "sources", delta) == p1
 
 
 def test_between_half_open_rewrite_counterexample(spark, sf_dir):
@@ -1221,7 +1250,7 @@ def test_event_types_dim_folds_onto_hour_cube(spark, sf_dir):
 def test_event_types_dim_refresh_keeps_registry_complete(spark, sf_dir, tmp_path):
     from bigdataproj_spark.sources.corpus_cubes import (
         event_types_dim_table,
-        refresh_event_types_dim,
+        refresh_registry,
     )
 
     ev = table(spark, sf_dir, "events")
@@ -1233,11 +1262,11 @@ def test_event_types_dim_refresh_keeps_registry_complete(spark, sf_dir, tmp_path
     p0 = event_types_dim_table(spark, sf_base)
     assert spark.read.parquet(p0).filter("et_id = 'purchase'").count() == 0
     delta = ev.filter(F.col("event_type") == "purchase")
-    p1 = refresh_event_types_dim(spark, sf_base, delta)
+    p1 = refresh_registry(spark, sf_base, "event_types", delta)
     assert p1 != p0 and event_types_dim_table(spark, sf_base) == p1
     row = spark.read.parquet(p1).filter("et_id = 'purchase'").collect()
     assert len(row) == 1 and row[0].e_category == "commerce"
-    assert refresh_event_types_dim(spark, sf_base, delta) == p1  # no-op
+    assert refresh_registry(spark, sf_base, "event_types", delta) == p1  # no-op
 
 
 def test_refused_dim_statement_answers_verbatim(spark, sf_dir):

@@ -393,9 +393,9 @@ class TestCorpusUserProjections:
             spark, sf_base, "t_rb",
             ("s_kind", "lang"), ("chars", "stopwords"), table="documents",
         )
-        from bigdataproj_spark.sources.corpus_cubes import refresh_sources_dim
+        from bigdataproj_spark.sources.corpus_cubes import refresh_registry
 
-        refresh_sources_dim(spark, sf_base, delta)
+        refresh_registry(spark, sf_base, "sources", delta)
         refresh_projection(spark, sf_base, "t_rb", delta)
         got = (
             spark.read.parquet(

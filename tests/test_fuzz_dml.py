@@ -1001,13 +1001,14 @@ def test_scan_memo_never_serves_stale(
             # redelivery below REUSES the rolled-back version path
             # (the round-12 path-reuse hazard, reproduced on purpose:
             # neutering txn.py's memo clear makes this op fail).
-            real_refresh = maint_mod.refresh_events_cube
+            real_refresh = maint_mod.refresh_projection
 
-            def boom(*a, **kw):
-                out = real_refresh(*a, **kw)
+            def boom(spark_, sf_dir_, name, *a, **kw):
+                out = real_refresh(spark_, sf_dir_, name, *a, **kw)
+                if name != "events_hourly_cube":
+                    return out
                 eng.sql(_EVENTS_ROLLUP).toPandas()
                 raise RuntimeError("injected memo-fuzz crash")
-                return out
 
             stmt = (
                 "INSERT INTO events (event_id, ts, user_id, "
@@ -1016,7 +1017,7 @@ def test_scan_memo_never_serves_stale(
                 "7, 'click', 1.5, '{}')"
             )
             next_event_id += 1
-            monkeypatch.setattr(maint_mod, "refresh_events_cube", boom)
+            monkeypatch.setattr(maint_mod, "refresh_projection", boom)
             with _pytest.raises(RuntimeError, match="memo-fuzz crash"):
                 eng.sql(stmt)
             monkeypatch.undo()

@@ -147,16 +147,18 @@ def _copy_tables(spark, sf_dir, out_dir, splits):
 
 def test_refresh_warehouse_mixed_batch_equals_full_deploy(spark, sf_dir, tmp_path):
     from bigdataproj_spark.sources.bucketed import (
-        _STAR_CUBE_KEYS,
         bucketed_fact_tables,
         pricing_cube_table,
         star_date_cube_table,
     )
+    from bigdataproj_spark.plans.routing import _STAR_CUBE_KEYS
     from bigdataproj_spark.sources.corpus_cubes import (
-        DOCS_CUBE_KEYS,
-        EVENTS_CUBE_KEYS,
         docs_stats_cube_table,
         events_hourly_cube_table,
+    )
+    from bigdataproj_spark.plans.routing import (
+        DOCS_CUBE_KEYS,
+        EVENTS_CUBE_KEYS,
     )
 
     base_dir = tmp_path / "base"
@@ -205,7 +207,7 @@ def test_refresh_warehouse_mixed_batch_equals_full_deploy(spark, sf_dir, tmp_pat
     # the star cube is the ordering-sensitive one: new orders' rows
     # must appear under their region/nation (sketch partials compare
     # at the estimate level, like every sketch rebuild check)
-    from bigdataproj_spark.sources.bucketed import _STAR_SKETCH_COLS
+    from bigdataproj_spark.plans.routing import _STAR_SKETCH_COLS
 
     def est_star(df):
         for c in _STAR_SKETCH_COLS:
@@ -217,10 +219,8 @@ def test_refresh_warehouse_mixed_batch_equals_full_deploy(spark, sf_dir, tmp_pat
         est_star(spark.read.parquet(star_date_cube_table(spark, sf_dir))),
         list(_STAR_CUBE_KEYS),
     )
-    from bigdataproj_spark.sources.bucketed import (
-        _SEGMENT_CUBE_KEYS,
-        segment_cube_table,
-    )
+    from bigdataproj_spark.sources.bucketed import segment_cube_table
+    from bigdataproj_spark.plans.routing import _SEGMENT_CUBE_KEYS
 
     frames_equal(
         spark.read.parquet(segment_cube_table(spark, sf_base)),
@@ -438,13 +438,11 @@ def test_refresh_warehouse_failure_rolls_back_every_layout(
         bucketed_fact_tables,
         pricing_cube_table,
         segment_cube_table,
-        _SEGMENT_CUBE_KEYS,
     )
+    from bigdataproj_spark.plans.routing import _SEGMENT_CUBE_KEYS
     from bigdataproj_spark.sources.txn import _walk_files
-    from bigdataproj_spark.sources.corpus_cubes import (
-        DOCS_CUBE_KEYS,
-        docs_stats_cube_table,
-    )
+    from bigdataproj_spark.sources.corpus_cubes import docs_stats_cube_table
+    from bigdataproj_spark.plans.routing import DOCS_CUBE_KEYS
     from bigdataproj_spark.sources.zorder import zordered_lineitem
 
     base_dir = tmp_path / "base"
@@ -500,10 +498,15 @@ def test_refresh_warehouse_failure_rolls_back_every_layout(
     # so by then the order/lineitem cubes have all swung, the bucketed
     # appends have committed, and the corpus docs layouts refreshed —
     # the maximal rollback surface
-    def boom(*a, **kw):
-        raise RuntimeError("injected mid-sequence crash")
+    real_refresh = maint_mod.refresh_projection
 
-    monkeypatch.setattr(maint_mod, "refresh_events_cube", boom)
+    def boom(spark_, sf_dir_, name, *a, **kw):
+        out = real_refresh(spark_, sf_dir_, name, *a, **kw)
+        if name == "events_hourly_cube":
+            raise RuntimeError("injected mid-sequence crash")
+        return out
+
+    monkeypatch.setattr(maint_mod, "refresh_projection", boom)
     with _pytest.raises(RuntimeError, match="injected mid-sequence"):
         refresh_warehouse(spark, sf_base, **b2)
 
@@ -1066,12 +1069,12 @@ def test_shared_delta_frame_matches_per_leg_formulations(spark, sf_dir):
     drops the orphan on both paths)."""
     from bigdataproj_spark.sources.bucketed import (
         _DELTA_DENORM_COLS,
-        _SEGMENT_CUBE_KEYS,
         _lineitem_with_derived,
-        _pricing_cube_aggs,
         build_delta_frame,
         order_revenue_projection,
     )
+    from bigdataproj_spark.plans.routing import BUILTIN_VIEWS, _SEGMENT_CUBE_KEYS
+    from bigdataproj_spark.sources.user_projections import _partial_aggs
 
     _roll, den_name = order_revenue_projection(spark, sf_dir)
     li = table(spark, sf_dir, "lineitem")
@@ -1099,12 +1102,12 @@ def test_shared_delta_frame_matches_per_leg_formulations(spark, sf_dir):
     inner = (
         lid.join(den, lid.l_orderkey == den.o_orderkey)
         .groupBy(*_SEGMENT_CUBE_KEYS)
-        .agg(*_pricing_cube_aggs())
+        .agg(*_partial_aggs(BUILTIN_VIEWS["segment_cube"]))
     )
     via_shared = (
         shared.filter(F.col("o_orderkey").isNotNull())
         .groupBy(*_SEGMENT_CUBE_KEYS)
-        .agg(*_pricing_cube_aggs())
+        .agg(*_partial_aggs(BUILTIN_VIEWS["segment_cube"]))
     )
     assert via_shared.exceptAll(inner).count() == 0
     assert inner.exceptAll(via_shared).count() == 0

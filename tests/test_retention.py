@@ -55,10 +55,8 @@ class TestDeleteDocuments:
     def test_cube_splice_equals_fresh_deploy_on_reduced_corpus(
         self, spark, sf_dir, tmp_path
     ):
-        from bigdataproj_spark.sources.corpus_cubes import (
-            DOCS_CUBE_KEYS,
-            docs_stats_cube_table,
-        )
+        from bigdataproj_spark.sources.corpus_cubes import docs_stats_cube_table
+        from bigdataproj_spark.plans.routing import DOCS_CUBE_KEYS
 
         work = _copy(spark, sf_dir, tmp_path / "w", ("documents",))
         truth = _reduced(
@@ -145,10 +143,8 @@ class TestDeleteDocuments:
     ):
         """A cube deployed AFTER the delete (not deployed at delete
         time) must be built from surviving rows only."""
-        from bigdataproj_spark.sources.corpus_cubes import (
-            DOCS_CUBE_KEYS,
-            docs_stats_cube_table,
-        )
+        from bigdataproj_spark.sources.corpus_cubes import docs_stats_cube_table
+        from bigdataproj_spark.plans.routing import DOCS_CUBE_KEYS
 
         work = _copy(spark, sf_dir, tmp_path / "w", ("documents",))
         truth = _reduced(
@@ -255,9 +251,11 @@ class TestDeleteOrders:
         self, spark, sf_dir, tmp_path
     ):
         from bigdataproj_spark.sources.bucketed import (
-            _STAR_CUBE_KEYS,
             pricing_cube_table,
             star_date_cube_table,
+        )
+        from bigdataproj_spark.plans.routing import (
+            _STAR_CUBE_KEYS,
             _STAR_SKETCH_COLS,
         )
 
@@ -555,10 +553,8 @@ class TestExpireEvents:
         return work, truth
 
     def test_cube_and_raw_equal_reduced_corpus(self, spark, sf_dir, tmp_path):
-        from bigdataproj_spark.sources.corpus_cubes import (
-            EVENTS_CUBE_KEYS,
-            events_hourly_cube_table,
-        )
+        from bigdataproj_spark.sources.corpus_cubes import events_hourly_cube_table
+        from bigdataproj_spark.plans.routing import EVENTS_CUBE_KEYS
         from bigdataproj_spark.sources.retention import expire_events
 
         work, truth = self._setup(spark, sf_dir, tmp_path)

@@ -118,19 +118,29 @@ def test_unsupported_aggregate_falls_back_to_raw():
 
 
 def test_ungrouped_attribute_falls_back():
-    """Grouping by an attribute the projection does not store (raw
-    orderkey on the cube; shipdate on the star pair) must not match."""
-    cube, seg_cube, star, date_cube = PROJECTIONS[:4]
-    assert not cube.subsumes(
-        AggQuery((), ("l_orderkey",), (AggCall("count_star", None, "n"),))
-    )
-    assert not star.subsumes(
-        AggQuery((), ("l_shipdate",), (AggCall("count_star", None, "n"),))
-    )
-    # the date cube stores shipdate but not the pricing flags
-    assert not date_cube.subsumes(
-        AggQuery((), ("l_returnflag",), (AggCall("count_star", None, "n"),))
-    )
+    """Grouping by an attribute a projection does not store must not
+    match, while a stored attribute over the same arms does: the raw
+    order key on the pricing cube, the order date on the star cube, the
+    ship date and the pricing flags on the rollup⋈denorm pair. Each
+    spec declares its cube's arm set, so only the attribute decides."""
+    by_name = {p.name: p for p in PROJECTIONS}
+
+    def count_by(p, col):
+        n = (AggCall("count_star", None, "n"),)
+        return AggQuery.of("lineitem", p.arms, (), (col,), n, ())
+
+    cube = by_name["pricing_cube"]
+    assert not cube.subsumes(count_by(cube, "l_orderkey"))
+    assert cube.subsumes(count_by(cube, "l_returnflag"))
+    star = by_name["star_date_cube"]
+    assert not star.subsumes(count_by(star, "o_orderdate"))
+    assert star.subsumes(count_by(star, "l_shipdate"))
+    pair = by_name["order_revenue_star"]
+    assert not pair.subsumes(count_by(pair, "l_shipdate"))
+    assert not pair.subsumes(count_by(pair, "l_returnflag"))
+    assert pair.subsumes(count_by(pair, "o_orderdate"))
+    for p in (star, pair):
+        assert p.subsumes(count_by(p, "r_name"))
 
 
 def test_star_filter_routes_and_matches_raw(spark, sf_dir):

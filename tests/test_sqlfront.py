@@ -457,10 +457,8 @@ def test_routed_answer_tracks_incremental_refresh(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from bigdataproj_spark.catalog import table
-    from bigdataproj_spark.sources.bucketed import (
-        pricing_cube_table,
-        refresh_pricing_cube,
-    )
+    from bigdataproj_spark.sources.bucketed import pricing_cube_table
+    from bigdataproj_spark.sources.user_projections import refresh_projection
 
     sql = (
         f"SELECT l_returnflag, l_linestatus, {SUM_SQL['quantity']} AS sum_qty,"
@@ -479,7 +477,7 @@ def test_routed_answer_tracks_incremental_refresh(spark, sf_dir):
         ),
     )
     try:
-        refresh_pricing_cube(spark, sf_dir, delta)
+        refresh_projection(spark, sf_dir, "pricing_cube", delta)
         df, chosen = route_sql(spark, sf_dir, sql)
         assert chosen == "pricing_cube"
         con = duckdb.connect()

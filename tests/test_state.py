@@ -27,6 +27,36 @@ def test_only_the_state_module_touches_the_session_object():
     assert not offenders, "\n".join(offenders)
 
 
+# The writes into WarehouseState.projections made outside the view
+# lifecycle (sources/user_projections.py): the rollup⋈denorm pair and
+# the registries, as (module, key expression).
+_NON_VIEW_ENTRIES = {
+    ("sources/bucketed.py", '"order_revenue"'),
+    ("sources/maintenance.py", '"order_revenue"'),
+    ("sources/corpus_cubes.py", "key"),
+}
+
+
+def test_one_lifecycle_maintains_every_view():
+    """Every view, built-in or user-declared, refreshes through one
+    merge (``merge_partial_frames`` has one caller) and publishes
+    through the one lifecycle: no other module writes a cube path into
+    the state's projections. A hand-rolled cube refresh or deploy
+    elsewhere fails here."""
+    lifecycle = _PKG / "sources" / "user_projections.py"
+    merges, writes = [], []
+    for p in sorted(_PKG.rglob("*.py")):
+        rel = str(p.relative_to(_PKG))
+        for n, line in enumerate(p.read_text().splitlines(), 1):
+            if re.search(r"(?<!def )\bmerge_partial_frames\(", line):
+                merges.append(f"{rel}:{n}")
+            w = re.search(r"\.projections\[([^\]]+)\]\s*=(?!=)", line)
+            if w and p != lifecycle and (rel, w.group(1)) not in _NON_VIEW_ENTRIES:
+                writes.append(f"{rel}:{n}: {line.strip()}")
+    assert len(merges) == 1, merges
+    assert not writes, "\n".join(writes)
+
+
 def test_copy_is_independent_and_shares_history():
     ws = WarehouseState("/w")
     ws.projections["cube"] = "/w/cube"
