@@ -192,7 +192,7 @@ def _recompute_groups(
             affected = affected_of(e.view)
             if affected is None:
                 return
-            spark.sparkContext.setJobDescription(f"recompute: {e.key}")
+            spark.sparkContext.setJobDescription(f"recompute: {e.label}")
             recomputed = _build(
                 spark, sf_dir, current(spark, sf_dir), e.view, group_filter=affected
             )
@@ -202,7 +202,7 @@ def _recompute_groups(
                 spark, versioned_parquet(spark, e.path), list(e.view.group_cols),
                 affected, recomputed,
             )
-            done[e.key] = _publish_cube(spark, sf_dir, e, merged)
+            done[e.label] = _publish_cube(spark, sf_dir, e, merged)
 
         return run
 
@@ -752,7 +752,7 @@ def expire_events(spark: SparkSession, sf_dir: str, before_ts: str) -> dict[str,
                 )
             else:
                 merged = _build(spark, sf_dir, current_events(spark, sf_dir), e.view)
-            done[e.key] = _publish_cube(spark, sf_dir, e, merged)
+            done[e.label] = _publish_cube(spark, sf_dir, e, merged)
 
         ws.ingested.add("events")
         return done

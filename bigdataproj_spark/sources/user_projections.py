@@ -134,7 +134,7 @@ class _Deployed:
     maintained_by: str = "refresh"
 
     @property
-    def key(self) -> str:
+    def label(self) -> str:
         """The view's name as the router and the mutation hooks report it."""
         return self.projection.name if self.projection else self.view.name
 
