@@ -145,6 +145,94 @@ def _copy_tables(spark, sf_dir, out_dir, splits):
     return deltas
 
 
+_LINEITEM_DTYPES = [
+    ("l_orderkey", "bigint"), ("l_partkey", "bigint"), ("l_suppkey", "bigint"),
+    ("l_linenumber", "int"), ("l_quantity", "double"),
+    ("l_extendedprice", "double"), ("l_discount", "double"), ("l_tax", "double"),
+    ("l_returnflag", "string"), ("l_linestatus", "string"),
+    ("l_shipdate", "timestamp"),
+]
+# (dtypes as read back, hive partition column) of each clustered layout
+_CLUSTERED_LAYOUTS = {
+    "zorder_lineitem": ([
+        ("l_orderkey", "bigint"), ("l_linenumber", "int"),
+        ("l_partkey", "bigint"), ("l_suppkey", "bigint"),
+        ("l_quantity", "double"), ("l_extendedprice", "double"),
+    ], None),
+    "dated_lineitem": ([*_LINEITEM_DTYPES, ("ship_month", "string")], "ship_month"),
+    "dated_events": ([
+        ("event_id", "bigint"), ("ts", "timestamp"), ("user_id", "bigint"),
+        ("event_type", "string"), ("value", "double"), ("props", "string"),
+        ("event_day_p", "date"),
+    ], "event_day_p"),
+    "clustered_documents": ([
+        ("doc_id", "bigint"), ("text", "string"), ("source", "string"),
+        ("n_chars", "bigint"), ("lang", "string"),
+    ], "lang"),
+}
+
+
+def test_row_level_layout_schemas_are_pinned(spark, sf_dir, tmp_path):
+    """The stored schema of every row-level layout is a contract: the
+    clustered layouts' columns, types, order and hive partition column
+    after deploy and after OPTIMIZE (which rewrites from the read-back,
+    so a partition column it failed to re-derive or drop would show
+    here), and the column lists of the bucketed fact tables and the
+    rollup/denorm pair. An orders delete makes OPTIMIZE rewrite every
+    one of them."""
+    import glob
+    import os
+
+    from bigdataproj_spark.sources.bucketed import (
+        bucketed_fact_tables,
+        order_revenue_projection,
+    )
+    from bigdataproj_spark.sources.dated import dated_events, dated_lineitem
+    from bigdataproj_spark.sources.docstore import clustered_documents
+    from bigdataproj_spark.sources.maintenance import optimize_warehouse
+    from bigdataproj_spark.sources.retention import delete_orders
+    from bigdataproj_spark.sources.zorder import zordered_lineitem
+
+    _copy_tables(spark, sf_dir, tmp_path, {})
+    sf_base = str(tmp_path)
+
+    def clustered(path):
+        parts = {os.path.basename(d).split("=")[0] for d in glob.glob(path + "/*=*")}
+        assert len(parts) <= 1, parts
+        return spark.read.parquet(path).dtypes, next(iter(parts), None)
+
+    def tables(names):
+        return [spark.table(n).columns for n in names]
+
+    deployed = {
+        "zorder_lineitem": zordered_lineitem(spark, sf_base),
+        "dated_lineitem": dated_lineitem(spark, sf_base),
+        "dated_events": dated_events(spark, sf_base),
+        "clustered_documents": clustered_documents(spark, sf_base),
+    }
+    assert {k: clustered(p) for k, p in deployed.items()} == _CLUSTERED_LAYOUTS
+    derived = ["l_qty_i", "l_price_i", "l_disc_i", "l_tax_i", "l_rev_i", "l_charge_i"]
+    expected = [
+        [c for c, _ in _LINEITEM_DTYPES] + derived,
+        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+         "o_orderdate", "o_orderpriority"],
+        ["l_orderkey", "rev_i", "n_items"],
+        ["o_orderkey", "r_name", "n_name", "c_mktsegment", "o_orderstatus",
+         "o_orderpriority", "o_orderdate"],
+    ]
+    spine = [*bucketed_fact_tables(spark, sf_base), *order_revenue_projection(spark, sf_base)]
+    assert tables(spine) == expected
+
+    dead = table(spark, sf_base, "orders").first().o_orderkey
+    delete_orders(spark, sf_base, [dead])
+    done = optimize_warehouse(spark, sf_base)
+    assert {k: clustered(done[k]) for k in deployed} == _CLUSTERED_LAYOUTS
+    rewritten = [*bucketed_fact_tables(spark, sf_base), *order_revenue_projection(spark, sf_base)]
+    assert tables(rewritten) == expected
+    assert not {*deployed.values(), *spine} & {*done.values()}
+    assert set(rewritten) <= set(done.values())
+
+
 def test_refresh_warehouse_mixed_batch_equals_full_deploy(spark, sf_dir, tmp_path):
     from bigdataproj_spark.sources.bucketed import (
         bucketed_fact_tables,
