@@ -10,7 +10,11 @@ well-defined rounding otherwise.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import functools
+import operator
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,6 +33,25 @@ def assert_bounded_model(rows, bound: int, what: str) -> None:
             f"bound is {bound}; refusing the unbounded driver-side "
             "materialization (fixture or model constant mis-sized)"
         )
+
+
+def keys_match(keys: Iterable[str], left: str, right: str) -> Column:
+    """The null-safe equi condition on the group ``keys`` between two
+    aliased frames. Every join on group keys uses it: groupBy folds
+    NULL key values into one group, while a USING join or ``==`` never
+    pairs NULL keys — a NULL group would read as absent on one side (a
+    stale NULL row surviving a splice, a merge splitting it in two)."""
+    return functools.reduce(
+        operator.and_,
+        (F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}")) for k in keys),
+    )
+
+
+def key_join(df: DataFrame, groups: DataFrame, keys: Iterable[str], how: str) -> DataFrame:
+    """``df`` semi- or anti-joined (``how``) with the group-key tuples
+    ``groups`` on :func:`keys_match` — the rows of ``df`` in (or not
+    in) those groups, NULL groups included."""
+    return df.alias("_k").join(groups.alias("_g"), keys_match(keys, "_k", "_g"), how)
 
 
 def dec(c: Column | str, precision: int = 12, scale: int = 2) -> Column:

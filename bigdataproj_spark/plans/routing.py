@@ -109,6 +109,7 @@ from __future__ import annotations
 
 import dataclasses
 import itertools
+import os
 import re
 from collections.abc import Callable, Iterable, Mapping
 from dataclasses import dataclass
@@ -120,8 +121,9 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions import cents
 from ..registry import query
+from ..schemas import FIXTURE_SCHEMAS
 from ..sources.bucketed import (
-    _N_BUCKETS,
+    _layout_paths,
     order_revenue_projection,
     pricing_cube_table,
     segment_cube_table,
@@ -141,13 +143,17 @@ from ..sources.corpus_cubes import (
     sources_dim_table,
 )
 from ..sources.dated import (
-    dated_events,
-    dated_lineitem,
+    append_dated,
+    append_dated_events,
     day_bounds_filter,
     month_bounds_filter,
+    write_dated,
+    write_dated_events,
 )
-from ..sources.docstore import clustered_documents
-from ..sources.zorder import ZORDER_COLS, ZORDER_KEYS, zordered_lineitem
+from ..sources.docstore import append_clustered_docs, write_clustered_docs
+from ..sources.state import deploy_name, warehouse
+from ..sources import zorder
+from ..sources.zorder import ZORDER_COLS, ZORDER_KEYS
 
 
 def current_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,13 +177,12 @@ def current_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     happened."""
     from ..sources.retention import apply_tombstones
     from ..sources.snapshots import bucketed_scan
-    from ..sources.state import warehouse
 
-    names = warehouse(spark, sf_dir).bucketed.get(_N_BUCKETS)
-    if names:
+    name = warehouse(spark, sf_dir).layouts.get("bucketed_lineitem")
+    if name:
         # inside a snapshot read, scan only the pinned commit's files
         # (the bucketed fact APPENDS batches into one directory)
-        df = bucketed_scan(spark, sf_dir, names[0])
+        df = bucketed_scan(spark, sf_dir, name)
     else:
         df = table(spark, sf_dir, "lineitem")
     return apply_tombstones(spark, sf_dir, "orders", df, "l_orderkey")
@@ -189,11 +194,10 @@ def current_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     rationale as :func:`current_lineitem`, tombstones included)."""
     from ..sources.retention import apply_tombstones
     from ..sources.snapshots import bucketed_scan
-    from ..sources.state import warehouse
 
-    names = warehouse(spark, sf_dir).bucketed.get(_N_BUCKETS)
-    if names:
-        df = bucketed_scan(spark, sf_dir, names[1])
+    name = warehouse(spark, sf_dir).layouts.get("bucketed_orders")
+    if name:
+        df = bucketed_scan(spark, sf_dir, name)
     else:
         df = table(spark, sf_dir, "orders")
     return apply_tombstones(spark, sf_dir, "orders", df)
@@ -218,9 +222,8 @@ def current_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     every raw plan the moment the delete commits."""
     from ..sources.retention import apply_tombstones
     from ..sources.snapshots import layout_parquet
-    from ..sources.state import warehouse
 
-    path = warehouse(spark, sf_dir).docstore
+    path = warehouse(spark, sf_dir).layouts.get("clustered_documents")
     if path:
         # S22: inside a snapshot read, scan only the pinned commit's
         # files (document batches APPEND into this directory)
@@ -239,9 +242,8 @@ def current_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     expired-day directories."""
     from ..sources.retention import apply_event_watermark, event_watermark
     from ..sources.snapshots import layout_parquet
-    from ..sources.state import warehouse
 
-    path = warehouse(spark, sf_dir).dated_events
+    path = warehouse(spark, sf_dir).layouts.get("dated_events")
     if path:
         df = layout_parquet(spark, path)
         wm = event_watermark(spark, sf_dir)
@@ -867,32 +869,48 @@ _RANGE_OPS = frozenset({"<=", "<", ">=", ">", "=", "between", "in"})
 class ScanLayout:
     """A clustered row-level layout of a fact table, declared as data:
     the table's rows in another physical order and partitioning, so the
-    rows are identical whichever layout answers a scan. A scan spec
-    selects it when every column it uses is stored (``columns``; None:
-    every column of the table) and one of its TOP-LEVEL conjuncts is a
-    plain range predicate on a ``keys`` column — a disjunction
-    containing one is not guaranteed selective.
+    rows are identical whichever layout answers a scan. One record
+    drives the layout's whole life — the router's choice, deploy,
+    ingest append, OPTIMIZE rewrite — and its serving path lives under
+    ``name`` in :attr:`WarehouseState.layouts`.
 
-    ``deploy`` deploys the layout (memoized) and returns its path.
+    Routing: a scan spec selects it when every column it uses is
+    stored (``cols``; None: every column of the table) and one of its
+    TOP-LEVEL conjuncts is a plain range predicate on a ``keys`` column
+    — a disjunction containing one is not guaranteed selective.
     ``bounds`` derives a superset constraint on the partition column
     from the spec's predicates: it prunes directories, and a derivation
     bug can only over-read, because the exact row filters run after.
     ``subtract`` removes the rows the layout still stores but the table
     no longer holds (tombstoned keys until the scheduled OPTIMIZE
-    rewrite, expired events); it applies after the bounds conjunct."""
+    rewrite, expired events); it applies after the bounds conjunct.
+
+    Storage: ``write`` clusters a frame of the stored columns into a
+    new directory and ``append`` adds an ingest batch to a deployed
+    one; ``stem`` names the directory (``<warehouse>/<stem>_<tag>``)
+    and ``part`` is the hive partition column (None: unpartitioned)."""
 
     name: str
     table: str
-    columns: frozenset[str] | None
+    cols: tuple[str, ...] | None
     keys: frozenset[str]
-    deploy: Callable[[SparkSession, str], str]
+    stem: str
+    part: str | None
+    write: Callable[[DataFrame, str], None]
+    append: Callable[[DataFrame, str], None]
     subtract: Callable[[SparkSession, str, DataFrame], DataFrame]
     bounds: Callable[[tuple], Column | None] | None = None
+    # OPTIMIZE rewrites a clustered layout whenever it is deployed
+    rewrite_under: ClassVar[str | None] = None
+
+    @property
+    def stored_cols(self) -> tuple[str, ...]:
+        return self.cols or tuple(FIXTURE_SCHEMAS[self.table].fieldNames())
 
     def serves(self, q) -> bool:
         return (
             q.table == self.table
-            and (self.columns is None or _used_cols(q) <= self.columns)
+            and (self.cols is None or _used_cols(q) <= set(self.cols))
             and any(
                 isinstance(p, Pred) and p.col in self.keys and p.op in _RANGE_OPS
                 for p in q.filters
@@ -908,6 +926,37 @@ class ScanLayout:
             df = df.filter(prune)
         return self.subtract(spark, sf_dir, df)
 
+    def base(self, sf_dir: str) -> str:
+        tag, wh = _layout_paths(sf_dir)
+        return os.path.join(wh, f"{self.stem}_{tag}")
+
+    def deploy(self, spark: SparkSession, sf_dir: str) -> str:
+        """Deploy the layout from the table's fixture (memoized per
+        warehouse; the ``_asof`` twin inside an AS OF read) and return
+        its path."""
+        ws = warehouse(spark, sf_dir)
+        if self.name not in ws.layouts:
+            path = deploy_name(spark, sf_dir, self.base(sf_dir))
+            df = table(spark, sf_dir, self.table)
+            self.write(df.select(*self.cols) if self.cols else df, path)
+            ws.layouts[self.name] = path
+        return ws.layouts[self.name]
+
+    def refresh(self, spark: SparkSession, sf_dir: str, delta: DataFrame) -> str:
+        """Append an ingest batch of the table to the deployed layout."""
+        path = self.deploy(spark, sf_dir)
+        self.append(delta.select(*self.stored_cols), path)
+        return path
+
+    def rewrite(self, spark: SparkSession, sf_dir: str, stored: str, new: str) -> None:
+        """OPTIMIZE: re-cluster the layout's current content, minus the
+        rows :attr:`subtract` removes, into ``new``. A partition column
+        the writer derives is dropped from the read-back first."""
+        df = spark.read.parquet(stored)
+        if self.part and self.part not in self.stored_cols:
+            df = df.drop(self.part)
+        self.write(self.subtract(spark, sf_dir, df), new)
+
 
 def _tombstoned(table_name: str, key_col: str | None = None):
     """A layout's subtraction of ``table_name``'s tombstoned keys (S19)."""
@@ -922,16 +971,15 @@ def _tombstoned(table_name: str, key_col: str | None = None):
 
 def _unexpired(spark: SparkSession, sf_dir: str, df: DataFrame) -> DataFrame:
     """The S19b watermark on the day-partitioned events: expired rows
-    subtract, and the derived day-partition conjunct prunes whole
-    expired directories."""
-    from ..sources.retention import event_watermark
+    subtract, and where the read still carries the day-partition
+    column, a derived conjunct on it prunes whole expired
+    directories."""
+    from ..sources.retention import apply_event_watermark, event_watermark
 
     wm = event_watermark(spark, sf_dir)
-    if wm is None:
-        return df
-    return df.filter(
-        (F.col("event_day_p") >= wm[:10]) & (F.col("ts") >= F.lit(wm).cast("timestamp"))
-    )
+    if wm is not None and "event_day_p" in df.columns:
+        df = df.filter(F.col("event_day_p") >= wm[:10])
+    return apply_event_watermark(spark, sf_dir, df)
 
 
 # The scan router's catalog, in precedence order.
@@ -939,21 +987,26 @@ SCAN_LAYOUTS: tuple[ScanLayout, ...] = (
     # S12: row-group skipping on BOTH curve keys — 250x fewer rows
     # materialized at sf5 (tests/test_zorder.py)
     ScanLayout(
-        "zorder_lineitem", "lineitem", frozenset(ZORDER_COLS), frozenset(ZORDER_KEYS),
-        zordered_lineitem, _tombstoned("orders", "l_orderkey"),
+        "zorder_lineitem", "lineitem", ZORDER_COLS, frozenset(ZORDER_KEYS),
+        "lineitem_zorder", None,
+        lambda df, p: zorder.write_zordered(df, p, *ZORDER_KEYS),
+        lambda df, p: zorder.append_zordered(df, p, *ZORDER_KEYS),
+        _tombstoned("orders", "l_orderkey"),
     ),
     # S14: time-slice scans prune ship-month directories, then skip
     # shipdate row groups inside kept months (tests/test_dated.py)
     ScanLayout(
         "dated_lineitem", "lineitem", None, frozenset({"l_shipdate"}),
-        dated_lineitem, _tombstoned("orders", "l_orderkey"), month_bounds_filter,
+        "lineitem_dated", "ship_month", write_dated, append_dated,
+        _tombstoned("orders", "l_orderkey"), month_bounds_filter,
     ),
     # the S14 treatment at DAY grain: an event log is written
     # continuously and queried in short windows, so "yesterday's
     # errors" opens one directory out of the corpus's thousands
     ScanLayout(
         "dated_events", "events", None, frozenset({"ts"}),
-        dated_events, _unexpired, day_bounds_filter,
+        "events_dated", "event_day_p", write_dated_events, append_dated_events,
+        _unexpired, day_bounds_filter,
     ),
     # S18: lang is a REAL hive partition column, so the plain row
     # filter prunes directories by itself (no derived bounds);
@@ -961,9 +1014,11 @@ SCAN_LAYOUTS: tuple[ScanLayout, ...] = (
     # min-max stats
     ScanLayout(
         "clustered_documents", "documents", None, frozenset({"lang", "source"}),
-        clustered_documents, _tombstoned("documents"),
+        "documents_clustered", "lang", write_clustered_docs, append_clustered_docs,
+        _tombstoned("documents"),
     ),
 )
+SCAN_LAYOUT = {lay.name: lay for lay in SCAN_LAYOUTS}
 
 
 def validate(q) -> FactTable:

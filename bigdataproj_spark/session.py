@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import os
 import warnings
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,25 +53,37 @@ def _default_shuffle_partitions(master: str) -> str:
     return "200"  # Spark's own cluster default; deployments override
 
 
-def run_parallel(*thunks) -> list:
+def _pool_cap(session: SparkSession | None) -> int:
+    """The most legs :func:`run_parallel` runs at once: the session's
+    ``defaultParallelism`` (its core count on a local master), else
+    the host's CPU count."""
+    if session is not None:
+        return session.sparkContext.defaultParallelism
+    return os.cpu_count() or 1
+
+
+def run_parallel(*legs: tuple[str, Callable[[], Any]]) -> list:
     """Run independent Spark actions from a small thread pool (guide
     §2.6: a later job's tasks back-fill executors freed by an earlier
     job's tail; locally the fixed per-job latencies overlap). THE
     engine-wide discipline for maintenance-side parallelism (round 13,
-    factored out of the round-12 refresh pool):
+    factored out of the round-12 refresh pool). Each leg is a
+    ``(label, thunk)`` pair:
 
     - callers only submit thunks whose reads are SETTLED state and
       whose writes are disjoint outputs/memo keys;
     - every thunk is AWAITED before any exception re-raises, so a
       surrounding WarehouseTxn rollback can never race a still-running
       writer's files;
-    - each leg starts with the caller's job group, description and
-      tags (``inheritable_thread_target``), so ``cancelJobGroup`` and
-      per-statement job accounting see the legs' jobs; a leg may
-      relabel its own jobs, since each leg gets its own copy of the
-      caller's local properties (a lone thunk runs inline on the
-      caller's thread, so callers that label legs reset the label
-      afterwards);
+    - each leg starts with the caller's job group and tags
+      (``inheritable_thread_target``), so ``cancelJobGroup`` and
+      per-statement job accounting see the legs' jobs, and its jobs
+      carry its label as their description; the caller's description
+      is restored once, after every leg (a lone leg runs inline on the
+      caller's thread);
+    - at most :func:`_pool_cap` legs run at once, so a pool submitting
+      one leg per deployed view stays bounded by the cores, not by the
+      view catalog;
     - a failure re-raises the FIRST failed leg's exception, type
       unchanged, with notes naming that leg and every sibling leg
       that failed too.
@@ -81,30 +95,47 @@ def run_parallel(*thunks) -> list:
     from pyspark.errors import PySparkRuntimeError
     from pyspark.util import inheritable_thread_target
 
-    if len(thunks) <= 1:
-        return [t() for t in thunks]
     try:
         # the default session when this thread has no active one: a
         # leg's own thread (a nested run_parallel) has none
         session = SparkSession.active()
-    except PySparkRuntimeError:  # no session at all: nothing to inherit
+    except PySparkRuntimeError:  # no session at all: nothing to label
         session = None
-    if session is not None:
+    sc = session.sparkContext if session is not None else None
+    prior = sc.getLocalProperty("spark.job.description") if sc else None
+
+    def labeled(label: str, thunk: Callable[[], Any]) -> Callable[[], Any]:
+        def leg():
+            if sc is not None:
+                sc.setJobDescription(label)
+            return thunk()
+
         # one wrap per leg: a wrap clones the caller's properties once,
         # and legs sharing a clone would see each other's relabels
-        thunks = tuple(inheritable_thread_target(session)(t) for t in thunks)
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        # .exception() BLOCKS until the thunk finishes — all of them
-        # settle before any raise below
-        errs = [f.exception() for f in futures]
+        return leg if session is None else inheritable_thread_target(session)(leg)
+
+    try:
+        if len(legs) <= 1:
+            return [labeled(*leg)() for leg in legs]
+        workers = min(len(legs), _pool_cap(session))
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futures = [pool.submit(labeled(*leg)) for leg in legs]
+            # .exception() BLOCKS until the thunk finishes — all of
+            # them settle before any raise below
+            errs = [f.exception() for f in futures]
+    finally:
+        if sc is not None:
+            sc.setJobDescription(prior)
     failed = [(i, e) for i, e in enumerate(errs) if e is not None]
     if failed:
         i, first = failed[0]
-        first.add_note(f"run_parallel: leg {i} of {len(thunks)} failed")
+        first.add_note(
+            f"run_parallel: leg {i} of {len(legs)} failed: {legs[i][0]}"
+        )
         for j, e in failed[1:]:
             first.add_note(
-                f"run_parallel: leg {j} also failed: {type(e).__name__}: {e}"
+                f"run_parallel: leg {j} also failed ({legs[j][0]}): "
+                f"{type(e).__name__}: {e}"
             )
         raise first
     return [f.result() for f in futures]

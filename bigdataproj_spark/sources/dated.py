@@ -26,18 +26,42 @@ not the user, picks the layout).
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
 from ..session import range_files
-from .bucketed import _layout_paths
-from .state import deploy_name, warehouse
 
 _MONTH_FMT = "yyyy-MM"
+
+
+def _write_by_time(
+    df: DataFrame,
+    path: str,
+    ts_col: str,
+    part: str,
+    fmt: str,
+    n_files: int,
+    row_group_bytes: int | None,
+    mode: str,
+) -> None:
+    """The one time-partitioned writer behind the dated layouts: derive
+    the hive partition column ``part`` as ``ts_col`` formatted by
+    ``fmt``, range-sort by (part, ts_col) into ``n_files`` files above
+    one split, and write partitioned by ``part`` (``mode``: overwrite
+    or append)."""
+    w = (
+        range_files(
+            df.withColumn(part, F.date_format(F.col(ts_col), fmt)),
+            n_files, part, ts_col,
+        )
+        .write.mode(mode)
+        .partitionBy(part)
+    )
+    if row_group_bytes:
+        w = w.option("parquet.block.size", str(row_group_bytes))
+    w.parquet(path)
 
 
 def write_dated(
@@ -56,19 +80,8 @@ def write_dated(
     128 MB default. ``n_files`` is the file count above one split; a
     smaller input is written as one file per month directory
     (:func:`..session.range_files`)."""
-    w = (
-        range_files(
-            df.withColumn(
-                "ship_month", F.date_format(F.col("l_shipdate"), _MONTH_FMT)
-            ),
-            n_files, "ship_month", "l_shipdate",
-        )
-        .write.mode("overwrite")
-        .partitionBy("ship_month")
-    )
-    if row_group_bytes:
-        w = w.option("parquet.block.size", str(row_group_bytes))
-    w.parquet(path)
+    _write_by_time(df, path, "l_shipdate", "ship_month", _MONTH_FMT, n_files,
+                   row_group_bytes, "overwrite")
 
 
 def append_dated(
@@ -89,32 +102,16 @@ def append_dated(
     a schedule, not per batch — same posture as
     :func:`..zorder.recluster_zordered`. ``n_files`` applies above one
     split, as in :func:`write_dated`."""
-    w = (
-        range_files(
-            df.withColumn(
-                "ship_month", F.date_format(F.col("l_shipdate"), _MONTH_FMT)
-            ),
-            n_files, "ship_month", "l_shipdate",
-        )
-        .write.mode("append")
-        .partitionBy("ship_month")
-    )
-    if row_group_bytes:
-        w = w.option("parquet.block.size", str(row_group_bytes))
-    w.parquet(path)
+    _write_by_time(df, path, "l_shipdate", "ship_month", _MONTH_FMT, n_files,
+                   row_group_bytes, "append")
 
 
 def dated_lineitem(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy (memoized per session+fixture) the full-width lineitem
-    layout partitioned by ship month, and return its path."""
-    ws = warehouse(spark, sf_dir)
-    if ws.dated is not None:
-        return ws.dated
-    tag, wh = _layout_paths(sf_dir)
-    path = deploy_name(spark, sf_dir, os.path.join(wh, f"lineitem_dated_{tag}"))
-    write_dated(table(spark, sf_dir, "lineitem"), path)
-    ws.dated = path
-    return path
+    """Deploy (memoized per warehouse) the full-width lineitem layout
+    partitioned by ship month, and return its path."""
+    from ..plans.routing import SCAN_LAYOUT
+
+    return SCAN_LAYOUT["dated_lineitem"].deploy(spark, sf_dir)
 
 
 # A date-or-timestamp literal's leading date fields, PADDING-TOLERANT:
@@ -214,17 +211,8 @@ def write_dated_events(
     range-sorted by exact ``ts`` within each partition — the day-grain
     twin of :func:`write_dated` (same file-count and row-group knobs;
     ``n_files`` applies above one split, one file per day below it)."""
-    w = (
-        range_files(
-            df.withColumn("event_day_p", F.date_format(F.col("ts"), _DAY_FMT)),
-            n_files, "event_day_p", "ts",
-        )
-        .write.mode("overwrite")
-        .partitionBy("event_day_p")
-    )
-    if row_group_bytes:
-        w = w.option("parquet.block.size", str(row_group_bytes))
-    w.parquet(path)
+    _write_by_time(df, path, "ts", "event_day_p", _DAY_FMT, n_files,
+                   row_group_bytes, "overwrite")
 
 
 def append_dated_events(
@@ -238,30 +226,16 @@ def append_dated_events(
     directory as new ts-sorted files); same append-friendliness
     argument as :func:`append_dated`, and ``n_files`` applies above one
     split."""
-    w = (
-        range_files(
-            df.withColumn("event_day_p", F.date_format(F.col("ts"), _DAY_FMT)),
-            n_files, "event_day_p", "ts",
-        )
-        .write.mode("append")
-        .partitionBy("event_day_p")
-    )
-    if row_group_bytes:
-        w = w.option("parquet.block.size", str(row_group_bytes))
-    w.parquet(path)
+    _write_by_time(df, path, "ts", "event_day_p", _DAY_FMT, n_files,
+                   row_group_bytes, "append")
 
 
 def dated_events(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy (memoized per session+fixture) the events layout
-    partitioned by event day, and return its path."""
-    ws = warehouse(spark, sf_dir)
-    if ws.dated_events is not None:
-        return ws.dated_events
-    tag, wh = _layout_paths(sf_dir)
-    path = deploy_name(spark, sf_dir, os.path.join(wh, f"events_dated_{tag}"))
-    write_dated_events(table(spark, sf_dir, "events"), path)
-    ws.dated_events = path
-    return path
+    """Deploy (memoized per warehouse) the events layout partitioned by
+    event day, and return its path."""
+    from ..plans.routing import SCAN_LAYOUT
+
+    return SCAN_LAYOUT["dated_events"].deploy(spark, sf_dir)
 
 
 def day_bounds_filter(preds) -> Column | None:

@@ -31,14 +31,9 @@ the engine, not the user, picks the layout).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import table
 from ..session import range_files
-from .bucketed import _layout_paths
-from .state import deploy_name, warehouse
 
 
 def write_clustered_docs(
@@ -87,13 +82,8 @@ def append_clustered_docs(
 
 
 def clustered_documents(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy (memoized per session+fixture) the clustered documents
-    layout and return its path."""
-    ws = warehouse(spark, sf_dir)
-    if ws.docstore is not None:
-        return ws.docstore
-    tag, wh = _layout_paths(sf_dir)
-    path = deploy_name(spark, sf_dir, os.path.join(wh, f"documents_clustered_{tag}"))
-    write_clustered_docs(table(spark, sf_dir, "documents"), path)
-    ws.docstore = path
-    return path
+    """Deploy (memoized per warehouse) the clustered documents layout
+    and return its path."""
+    from ..plans.routing import SCAN_LAYOUT
+
+    return SCAN_LAYOUT["clustered_documents"].deploy(spark, sf_dir)

@@ -63,6 +63,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import key_join
 from ..session import one_split, run_parallel
 from .bucketed import _layout_paths
 from .snapshots import versioned_parquet
@@ -163,9 +164,9 @@ def _splice_groups(
 ) -> DataFrame:
     """stored − affected groups + recomputed affected groups (a group
     whose rows all died simply disappears — recomputed has no row for
-    it, matching a from-scratch build)."""
-    kept = stored.join(affected, keys, "left_anti")
-    return kept.unionByName(recomputed)
+    it, matching a from-scratch build; a NULL group key is a group like
+    any other)."""
+    return key_join(stored, affected, keys, "left_anti").unionByName(recomputed)
 
 
 def _recompute_groups(
@@ -192,7 +193,6 @@ def _recompute_groups(
             affected = affected_of(e.view)
             if affected is None:
                 return
-            spark.sparkContext.setJobDescription(f"recompute: {e.label}")
             recomputed = _build(
                 spark, sf_dir, current(spark, sf_dir), e.view, group_filter=affected
             )
@@ -204,12 +204,9 @@ def _recompute_groups(
             )
             done[e.label] = _publish_cube(spark, sf_dir, e, merged)
 
-        return run
+        return f"recompute: {e.label}", run
 
-    try:
-        run_parallel(*map(leg, deployed_views(spark, sf_dir, table_name)))
-    finally:
-        spark.sparkContext.setJobDescription(None)
+    run_parallel(*map(leg, deployed_views(spark, sf_dir, table_name)))
 
 
 def _dead_groups(spark: SparkSession, sf_dir: str, dead: DataFrame):

@@ -1018,6 +1018,7 @@ def table_changes(
     from pyspark.sql import functions as F
     from pyspark.sql.types import IntegerType, StringType, StructField
 
+    from ..functions import keys_match
     from ..plans.routing import current_documents, current_events
     from ..plans.routing import current_lineitem, current_orders
     from ..schemas import FIXTURE_SCHEMAS
@@ -1141,12 +1142,8 @@ def table_changes(
         # self-review, confirmed by live experiment; this is what the
         # 'NULLs compare equal' bag semantics in the docstring MEANS)
         a, b = a_cnt.alias("a"), b_cnt.alias("b")
-        cond = None
-        for c in cols:
-            eq = F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
-            cond = eq if cond is None else (cond & eq)
         changed = (
-            a.join(b, cond, "full_outer")
+            a.join(b, keys_match(cols, "a", "b"), "full_outer")
             .select(
                 *[
                     F.coalesce(F.col(f"a.{c}"), F.col(f"b.{c}")).alias(c)

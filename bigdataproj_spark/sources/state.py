@@ -9,11 +9,13 @@ state and installing a copy — this module owns both steps, and it is
 the only module that touches the SparkSession object itself.
 
 - :class:`WarehouseState` — everything keyed by one warehouse (a
-  fixture or sandbox directory): the layout entries, tombstones,
-  retention watermarks, the ingested set, mutation epochs, the
-  user-view catalog and the publish counters (the *serving*
-  fields, which :meth:`WarehouseState.copy` copies), plus its commit
-  :class:`History`, which every copy shares.
+  fixture or sandbox directory): the built-in cube and registry
+  entries (``projections``), the row-level layouts' serving paths and
+  table names (``layouts``, one entry per declared layout record),
+  tombstones, retention watermarks, the ingested set, mutation
+  epochs, the user-view catalog and the publish counters (the
+  *serving* fields, which :meth:`WarehouseState.copy` copies), plus
+  its commit :class:`History`, which every copy shares.
 - :class:`SessionState` — what really is session-wide: the txn-active
   flag, the AS OF pin, the temp-view ownership ledgers (temp views are
   session-global names), the scan caches, and the catalog's conf flag
@@ -50,16 +52,14 @@ class History:
 @dataclass
 class WarehouseState:
     sf_dir: str
-    # built-in projections: name -> path, or a (rollup, denorm) name pair
-    projections: dict[str, Any] = field(default_factory=dict)
+    # built-in cubes and registries: name -> path
+    projections: dict[str, str] = field(default_factory=dict)
+    # row-level layouts: name -> path, or table name for the bucketed
+    # tables (plans/routing.py SCAN_LAYOUTS, sources/bucketed.py
+    # BUCKETED_TABLES)
+    layouts: dict[str, str] = field(default_factory=dict)
     # publish counters, keyed by base path/name + separator
     versions: dict[str, int] = field(default_factory=dict)
-    # bucket count -> (lineitem table, orders table)
-    bucketed: dict[int, tuple[str, str]] = field(default_factory=dict)
-    zorder: str | None = None
-    dated: str | None = None
-    dated_events: str | None = None
-    docstore: str | None = None
     tombstones: dict[str, str] = field(default_factory=dict)  # table -> path
     watermarks: dict[str, str] = field(default_factory=dict)  # table -> cutoff
     ingested: set[str] = field(default_factory=set)
@@ -74,8 +74,8 @@ class WarehouseState:
         return replace(
             self,
             projections=dict(self.projections),
+            layouts=dict(self.layouts),
             versions=dict(self.versions),
-            bucketed=dict(self.bucketed),
             tombstones=dict(self.tombstones),
             watermarks=dict(self.watermarks),
             ingested=set(self.ingested),
@@ -97,16 +97,12 @@ class WarehouseState:
     def live_paths(self) -> list[str]:
         """Every path or table name this state serves from — VACUUM's
         live set (a table name's location is ``<warehouse>/<name>``)."""
-        out: list[str] = []
-        for v in (*self.projections.values(), *self.bucketed.values()):
-            out.extend(v if isinstance(v, tuple) else (v,))
-        out += [
-            p for p in (self.zorder, self.dated, self.dated_events,
-                        self.docstore) if p
+        return [
+            *self.projections.values(),
+            *self.layouts.values(),
+            *self.tombstones.values(),
+            *(u.path for u in self.user_projections.values()),
         ]
-        out += self.tombstones.values()
-        out += [u.path for u in self.user_projections.values()]
-        return out
 
 
 class AsOf(NamedTuple):

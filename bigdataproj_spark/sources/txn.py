@@ -116,12 +116,14 @@ def undo_files_since(
                     os.rmdir(dirpath)
                 except OSError:
                     pass
-    for names in warehouse(spark, sf_dir).bucketed.values():
-        for name in names:
-            try:
-                spark.catalog.refreshTable(name)
-            except Exception:
-                pass
+    from .bucketed import BUCKETED_TABLES
+
+    layouts = warehouse(spark, sf_dir).layouts
+    for b in BUCKETED_TABLES:
+        try:
+            spark.catalog.refreshTable(layouts[b.name])
+        except Exception:
+            pass
     repoint_dim_views(spark, sf_dir)
 
 

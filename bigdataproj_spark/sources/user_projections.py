@@ -79,6 +79,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import key_join, keys_match
 from ..plans.routing import (
     BUILTIN_VIEWS,
     CORPUS_TABLES,
@@ -252,8 +253,7 @@ def merge_partial_frames(v: View, stored: DataFrame, delta: DataFrame) -> DataFr
         v.count_star_col,
     )
     s, d = stored.alias("s"), delta.alias("d")
-    cond = [F.col(f"s.{k}").eqNullSafe(F.col(f"d.{k}")) for k in v.group_cols]
-    return s.join(d, cond, "full_outer").select(
+    return s.join(d, keys_match(v.group_cols, "s", "d"), "full_outer").select(
         *[F.coalesce(F.col(f"s.{k}"), F.col(f"d.{k}")).alias(k) for k in v.group_cols],
         *[
             (
@@ -384,10 +384,10 @@ def _build(
     column available, BEFORE the groupBy — so an affected-group
     recompute aggregates only the surviving rows of the touched groups
     (delete-sized set, broadcast semi), never the corpus
-    (sources/retention.py)."""
+    (sources/retention.py); a NULL group key is a group like any other."""
     df = _keyed(spark, sf_dir, rows, v, joined=joined)
     if group_filter is not None:
-        df = df.join(F.broadcast(group_filter), list(v.group_cols), "semi")
+        df = key_join(df, F.broadcast(group_filter), v.group_cols, "semi")
     return df.groupBy(*v.group_cols).agg(*_partial_aggs(v))
 
 

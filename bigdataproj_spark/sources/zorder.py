@@ -25,16 +25,11 @@ layout is transparent to readers and the oracle (same rows, any order).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
 from ..registry import query
 from ..session import range_files
-from .bucketed import _layout_paths
-from .state import deploy_name, warehouse
 
 _Z_BITS = 31  # interleaved bits per column; 2^31 covers key domains
 # far past any TPC-H scale (l_partkey ~2M at sf10, ~200M at sf1000);
@@ -178,21 +173,12 @@ ZORDER_KEYS = ("l_partkey", "l_suppkey")
 
 
 def zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
-    """Deploy (memoized per session+fixture) the lineitem layout
-    Z-ordered on (l_partkey, l_suppkey) — the two-supplier-dimension
-    query columns — and return its path."""
-    ws = warehouse(spark, sf_dir)
-    if ws.zorder is not None:
-        return ws.zorder
-    tag, wh = _layout_paths(sf_dir)
-    path = deploy_name(spark, sf_dir, os.path.join(wh, f"lineitem_zorder_{tag}"))
-    write_zordered(
-        table(spark, sf_dir, "lineitem").select(*ZORDER_COLS),
-        path,
-        *ZORDER_KEYS,
-    )
-    ws.zorder = path
-    return path
+    """Deploy (memoized per warehouse) the lineitem layout Z-ordered on
+    (l_partkey, l_suppkey) — the two-supplier-dimension query columns
+    — and return its path."""
+    from ..plans.routing import SCAN_LAYOUT
+
+    return SCAN_LAYOUT["zorder_lineitem"].deploy(spark, sf_dir)
 
 
 # The layout is a physical property: the answer equals the same filter

@@ -47,6 +47,8 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import key_join, keys_match
+
 # The derived table maintained here is a grouped (SUM, COUNT)
 # aggregate — the shape of every cube in this engine — parameterized
 # by group/measure column so any fact table's feed can drive one
@@ -245,18 +247,14 @@ def apply_increment(
             F.col("d_n").alias("n"),
         )
     else:
-        # eqNullSafe, not a USING join: a NULL group value is one
+        # null-safe, not a USING join: a NULL group value is one
         # group to groupBy (profile_from_state folds it into one row),
         # so the merge must match it too — a plain full_outer never
         # matches NULL keys and would split the NULL group into
         # duplicate stored/increment rows (round-11 self-review,
         # confirmed by live experiment)
         s, i = stored.alias("s"), inc.alias("i")
-        merged = s.join(
-            i,
-            F.col(f"s.{group_col}").eqNullSafe(F.col(f"i.{group_col}")),
-            "full_outer",
-        ).select(
+        merged = s.join(i, keys_match([group_col], "s", "i"), "full_outer").select(
             F.coalesce(
                 F.col(f"s.{group_col}"), F.col(f"i.{group_col}")
             ).alias(group_col),
@@ -496,17 +494,6 @@ class CdcProjectionConsumer:
 
         return _build(self.spark, self.sf_dir, df, self._view.view)
 
-    def _ns(self, lft: str, rgt: str):
-        """Null-safe equi condition on the group keys between two
-        aliased frames — groupBy folds NULL key values into one group,
-        so every key join here must pair them too (the round-11
-        eqNullSafe discipline)."""
-        cond = None
-        for k in self.keys:
-            eq = F.col(f"{lft}.{k}").eqNullSafe(F.col(f"{rgt}.{k}"))
-            cond = eq if cond is None else (cond & eq)
-        return cond
-
     def bootstrap(self) -> str:
         """Seed the view from the CURRENT state, watermarked at the
         current ledger head, and register it in the S16 catalog."""
@@ -589,30 +576,19 @@ class CdcProjectionConsumer:
             )
             # adds landing in a drop-touched group are covered by that
             # group's recompute — folding them too would double-count
-            adds = adds.alias("a").join(
-                F.broadcast(affected.alias("r")), self._ns("a", "r"),
-                "left_anti",
-            )
+            adds = key_join(adds, F.broadcast(affected), keys, "left_anti")
         merged = merge_delta(self.spark, self.sf_dir, self._view.view, stored, adds)
         if have_affected:
             fact = current_corpus_table(self.spark, self.sf_dir, self.table)
             recomputed = self._partials(
-                fact.alias("f").join(
-                    F.broadcast(affected.alias("r")), self._ns("f", "r"),
-                    "semi",
-                )
+                key_join(fact, F.broadcast(affected), keys, "semi")
             )
             # splice: drop-touched groups replaced wholesale (a group
             # with no surviving rows simply has no recomputed row —
             # matching a from-scratch build)
-            merged = (
-                merged.alias("m")
-                .join(
-                    F.broadcast(affected.alias("r")), self._ns("m", "r"),
-                    "left_anti",
-                )
-                .unionByName(recomputed)
-            )
+            merged = key_join(
+                merged, F.broadcast(affected), keys, "left_anti"
+            ).unionByName(recomputed)
         new_path = _publish(merged, self.table_dir, consumed=head)
         self._swing(new_path)
 

@@ -147,7 +147,9 @@ def test_incremental_rollup_refresh_equals_rebuild(spark, sf_dir):
         # the synthetic delta is NOT fixture data: point the shared
         # session's memo back at the base projection so later tests
         # (e.g. the q39 oracle row) see the fixture-derived layout
-        warehouse(spark, sf_dir).projections["order_revenue"] = base
+        warehouse(spark, sf_dir).layouts.update(
+            order_revenue_rollup=base[0], orders_denorm=base[1]
+        )
 
 
 # The pricing cubes' stored partials, written out by hand so the
@@ -339,7 +341,9 @@ def test_incremental_denorm_refresh_equals_rebuild(spark, sf_dir):
         assert got.equals(expected[got.columns.tolist()])
         assert order_revenue_projection(spark, sf_dir)[1] == new_name
     finally:
-        warehouse(spark, sf_dir).projections["order_revenue"] = base
+        warehouse(spark, sf_dir).layouts.update(
+            order_revenue_rollup=base[0], orders_denorm=base[1]
+        )
 
 
 def test_incremental_star_date_cube_refresh_equals_rebuild(spark, sf_dir):

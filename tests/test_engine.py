@@ -318,6 +318,49 @@ def test_run_parallel_with_no_thunks_returns_empty():
     assert run_parallel() == []
 
 
+def test_run_parallel_is_bounded_by_the_pool_cap(spark, monkeypatch):
+    """At most the cap's number of legs run at once, results come back
+    in order, each leg's jobs carry its label, the caller's description
+    is restored once, and a failure note names the leg."""
+    import threading
+    import time
+
+    from bigdataproj_spark import session as sess
+
+    monkeypatch.setattr(sess, "_pool_cap", lambda _session: 2)
+    lock, running, peak = threading.Lock(), [0], [0]
+    sc = spark.sparkContext
+
+    def leg(i):
+        def run():
+            with lock:
+                running[0] += 1
+                peak[0] = max(peak[0], running[0])
+            time.sleep(0.05)
+            label = sc.getLocalProperty("spark.job.description")
+            with lock:
+                running[0] -= 1
+            return i, label
+
+        return f"leg-{i}", run
+
+    sc.setJobDescription("caller")
+    try:
+        got = sess.run_parallel(*map(leg, range(5)))
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert got == [(i, f"leg-{i}") for i in range(5)]
+    assert peak[0] == 2
+
+    def boom():
+        raise KeyError("boom")
+
+    with pytest.raises(KeyError) as info:
+        sess.run_parallel(leg(0), leg(1), ("the failing leg", boom), leg(3), leg(4))
+    assert "leg 2 of 5 failed: the failing leg" in "\n".join(info.value.__notes__)
+
+
 def test_run_parallel_legs_run_in_the_callers_job_group(spark):
     """Every leg's jobs carry the caller's job group, so
     cancelJobGroup and per-statement job accounting reach them."""
@@ -328,7 +371,8 @@ def test_run_parallel_legs_run_in_the_callers_job_group(spark):
     sc.setJobGroup(group, "legs inherit the caller's group")
     try:
         got = run_parallel(
-            lambda: spark.range(10).count(), lambda: spark.range(20).count()
+            ("ten", lambda: spark.range(10).count()),
+            ("twenty", lambda: spark.range(20).count()),
         )
     finally:
         sc._jsc.clearJobGroup()
@@ -352,10 +396,10 @@ def test_run_parallel_failure_names_its_leg_and_keeps_siblings():
         raise ValueError("second leg")
 
     with pytest.raises(KeyError) as info:
-        run_parallel(fine, first, second)
+        run_parallel(("fine", fine), ("first", first), ("second", second))
     notes = "\n".join(info.value.__notes__)
-    assert "leg 1 of 3 failed" in notes, notes
-    assert "leg 2 also failed: ValueError: second leg" in notes, notes
+    assert "leg 1 of 3 failed: first" in notes, notes
+    assert "leg 2 also failed (second): ValueError: second leg" in notes, notes
 
 
 def test_compression_override_picks_the_codec(monkeypatch):

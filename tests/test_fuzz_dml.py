@@ -100,10 +100,14 @@ def test_dml_sequence_matches_duckdb_model(spark, sf_dir, tmp_path, seed):
             k = rng.randint(1, 5)
             rows = []
             for _ in range(k):
+                # a NULL lang or source is one more group key value:
+                # every cube merge and affected-group splice must pair
+                # it like any other
+                lang = "NULL" if rng.random() < 0.2 else f"'{rng.choice(_LANGS)}'"
+                source = "NULL" if rng.random() < 0.2 else f"'src{rng.randint(1, 30)}'"
                 rows.append(
                     f"({next_doc_id}, 'fuzz doc {next_doc_id}', "
-                    f"'{rng.choice(_LANGS)}', 'src{rng.randint(1, 30)}', "
-                    f"{rng.randint(1, 500)})"
+                    f"{lang}, {source}, {rng.randint(1, 500)})"
                 )
                 next_doc_id += 1
             stmt = (
@@ -178,6 +182,64 @@ def test_dml_sequence_matches_duckdb_model(spark, sf_dir, tmp_path, seed):
     routed = eng.sql(_PROFILE).toPandas()
     verbatim = eng.sql(_PROFILE, routed=False).toPandas()
     assert routed.equals(verbatim)
+
+
+def test_null_order_group_follows_order_delete_and_update(spark, sf_dir, tmp_path):
+    """A user view keyed on an order column that an INSERT can leave
+    NULL: the order delete's affected-group recompute and the order
+    update's reattribution must each treat the NULL group like any
+    other, so the routed answer matches the DuckDB model after every
+    statement."""
+    work = tmp_path / "w"
+    work.mkdir()
+    for t in TABLES:
+        table(spark, sf_dir, t).write.parquet(str(work / f"{t}.parquet"))
+    eng = Engine(spark, str(work))
+    con = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        con.execute(
+            f"CREATE TABLE {t} AS SELECT * FROM "
+            f"read_parquet('{work}/{t}.parquet/*.parquet', "
+            "hive_partitioning=false)"
+        )
+    eng.sql(
+        "CREATE MATERIALIZED VIEW t_prio AS SELECT o_orderpriority, "
+        "COUNT(*) AS n FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
+        "GROUP BY o_orderpriority"
+    )
+    profile = (
+        "SELECT o_orderpriority, COUNT(*) AS n FROM lineitem "
+        "JOIN orders ON l_orderkey = o_orderkey GROUP BY o_orderpriority"
+    )
+    from bigdataproj_spark.plans.sqlfront import route_sql
+
+    def both(stmt, *model):
+        eng.sql(stmt)
+        for m in model or (stmt,):
+            con.execute(m)
+        assert route_sql(spark, str(work), profile)[1] == "user:t_prio"
+        _check(eng, con, profile, stmt)
+
+    both(
+        "INSERT INTO orders VALUES "
+        "(900000201, 1, 'O', 10.0, TIMESTAMP '1996-01-01 00:00:00', NULL), "
+        "(900000202, 1, 'O', 10.0, TIMESTAMP '1996-01-01 00:00:00', NULL)"
+    )
+    li = ", 1, 1, 1.0, 100.0, 0.0, 0.0, 'N', 'O', TIMESTAMP '1996-01-02 00:00:00')"
+    both(
+        "INSERT INTO lineitem VALUES "
+        f"(900000201, 1{li}, (900000202, 1{li}, (900000202, 2{li}"
+    )
+    both(
+        "DELETE FROM orders WHERE o_orderkey IN (900000201)",
+        "DELETE FROM lineitem WHERE l_orderkey IN (900000201)",
+        "DELETE FROM orders WHERE o_orderkey IN (900000201)",
+    )
+    both(
+        "UPDATE orders SET o_orderpriority = '9-SET' "
+        "WHERE o_orderkey IN (900000202)"
+    )
+    eng.sql("DROP MATERIALIZED VIEW t_prio")
 
 
 _SEGMENT_PROFILE = (

@@ -229,6 +229,31 @@ _STAR_SPEC = AggQuery(
 )
 
 
+def test_delete_recomputes_the_null_group(spark, sf_dir, tmp_path):
+    """A NULL group key is one group: deleting one of two NULL-lang
+    documents recomputes that group on the docs cube, so the routed
+    answer equals the verbatim one instead of keeping the stale
+    pre-delete row."""
+    from bigdataproj_spark.catalog import TABLES
+    from bigdataproj_spark.engine import Engine
+    from bigdataproj_spark.plans.sqlfront import route_sql
+
+    e = Engine(spark, _copy(spark, sf_dir, tmp_path / "w", TABLES))
+    e.sql(
+        "INSERT INTO documents VALUES (900000101, 'abc', NULL, 'src1', 3), "
+        "(900000102, 'abcd', NULL, 'src1', 4)"
+    )
+    e.sql("DELETE FROM documents WHERE doc_id = 900000101")
+    q = "SELECT lang, COUNT(*) AS n, SUM(n_chars) AS s FROM documents GROUP BY lang"
+    assert route_sql(spark, e.sf_dir, q)[1] == "docs_stats_cube"
+
+    def null_group(routed):
+        return [tuple(r) for r in e.sql(q, routed=routed).collect() if r.lang is None]
+
+    assert null_group(False) == [(None, 1, 4)]
+    assert null_group(True) == [(None, 1, 4)]
+
+
 class TestDeleteOrders:
     def _setup(self, spark, sf_dir, tmp_path, mod, rem):
         tables = (

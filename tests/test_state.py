@@ -28,12 +28,16 @@ def test_only_the_state_module_touches_the_session_object():
 
 
 # The writes into WarehouseState.projections made outside the view
-# lifecycle (sources/user_projections.py): the rollup⋈denorm pair and
-# the registries, as (module, key expression).
+# lifecycle (sources/user_projections.py): the registries, as (module,
+# key expression).
 _NON_VIEW_ENTRIES = {
-    ("sources/bucketed.py", '"order_revenue"'),
-    ("sources/maintenance.py", '"order_revenue"'),
     ("sources/corpus_cubes.py", "key"),
+}
+# The layout lifecycle: the modules that may write
+# WarehouseState.layouts — the ScanLayout records' deploy (routing),
+# the bucketed tables' deploys and upserts, and the OPTIMIZE loop.
+_LAYOUT_LIFECYCLE = {
+    "plans/routing.py", "sources/bucketed.py", "sources/maintenance.py",
 }
 
 
@@ -55,6 +59,19 @@ def test_one_lifecycle_maintains_every_view():
                 writes.append(f"{rel}:{n}: {line.strip()}")
     assert len(merges) == 1, merges
     assert not writes, "\n".join(writes)
+
+
+def test_only_the_layout_lifecycle_writes_layouts():
+    """Every row-level layout's serving entry is written by its record's
+    lifecycle: a hand-rolled deploy, append or rewrite elsewhere that
+    swings ``ws.layouts`` fails here."""
+    write = re.compile(r"\.layouts(\[[^\]]+\]\s*=(?!=)|\.(update|setdefault|pop)\()")
+    writers = {
+        str(p.relative_to(_PKG))
+        for p in _PKG.rglob("*.py")
+        if write.search(p.read_text())
+    }
+    assert writers == _LAYOUT_LIFECYCLE, writers
 
 
 def test_copy_is_independent_and_shares_history():
@@ -82,9 +99,12 @@ def test_publish_counts_per_base_and_separator():
 
 def test_live_paths_cover_every_serving_field():
     ws = WarehouseState("/w")
-    ws.projections.update(cube="/w/c", order_revenue=("roll", "den"))
-    ws.bucketed[8] = ("li", "od")
-    ws.zorder, ws.docstore = "/w/z", "/w/d"
+    ws.projections.update(cube="/w/c")
+    ws.layouts.update(
+        order_revenue_rollup="roll", orders_denorm="den",
+        bucketed_lineitem="li", bucketed_orders="od",
+        zorder_lineitem="/w/z", clustered_documents="/w/d",
+    )
     ws.tombstones["orders"] = "/w/t"
     assert sorted(ws.live_paths()) == sorted(
         ["/w/c", "roll", "den", "li", "od", "/w/z", "/w/d", "/w/t"]
