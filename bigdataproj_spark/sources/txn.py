@@ -101,7 +101,7 @@ def undo_files_since(
     appends, committer temp dirs) and the directories left empty,
     refresh the restored bucketed tables' cached listings, and re-point
     the warehouse's engine-owned dim views."""
-    from .bucketed import _layout_paths
+    from .bucketed import BUCKETED_TABLES, _layout_paths
 
     _tag, wh = _layout_paths(sf_dir)
     if os.path.isdir(wh):
@@ -116,12 +116,10 @@ def undo_files_since(
                     os.rmdir(dirpath)
                 except OSError:
                     pass
-    from .bucketed import BUCKETED_TABLES
-
     layouts = warehouse(spark, sf_dir).layouts
-    for b in BUCKETED_TABLES:
+    for name in [layouts[b.name] for b in BUCKETED_TABLES if b.name in layouts]:
         try:
-            spark.catalog.refreshTable(layouts[b.name])
+            spark.catalog.refreshTable(name)
         except Exception:
             pass
     repoint_dim_views(spark, sf_dir)
