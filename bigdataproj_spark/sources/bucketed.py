@@ -47,6 +47,7 @@ import re
 import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,14 +122,27 @@ class BucketedTable:
         tag, _wh = _layout_paths(sf_dir)
         return f"{self.stem}_{tag}_{_N_BUCKETS}"
 
+    def write(self, sf_dir: str, df: DataFrame, name: str) -> None:
+        _tag, wh = _layout_paths(sf_dir)
+        write_bucketed(df, name, os.path.join(wh, name), self.key)
+
+    def publish(self, spark: SparkSession, sf_dir: str, df: DataFrame) -> str:
+        """Write ``df`` as the table's next version ``<base>_v<n>`` —
+        numbered from the base name, so a refreshed version's name
+        never grows — and swing its serving entry to it."""
+        ws = warehouse(spark, sf_dir)
+        name = ws.publish(self.base(sf_dir))
+        self.write(sf_dir, df, name)
+        ws.layouts[self.name] = name
+        return name
+
     def rewrite(self, spark: SparkSession, sf_dir: str, stored: str, new: str) -> None:
         """OPTIMIZE: rewrite the table's current content minus the
         tombstoned orders, one sorted file per bucket, as ``new``."""
         from .retention import apply_tombstones
 
-        _tag, wh = _layout_paths(sf_dir)
         df = apply_tombstones(spark, sf_dir, "orders", spark.table(stored), self.key)
-        write_bucketed(df, new, os.path.join(wh, new), self.key)
+        self.write(sf_dir, df, new)
 
 
 # The lineitem/orders facts and the per-order rollup/denorm pair built
@@ -229,16 +243,10 @@ def append_bucketed_orders(
             .saveAsTable(od_name)
         )
         return od_name
-    _tag, wh = _layout_paths(sf_dir)
     kept = stored.join(delta_keys, "o_orderkey", "left_anti")
-    merged = kept.unionByName(delta_orders)
-    # versions key on the BASE table name (od_name is already a
-    # versioned name after a prior upsert)
-    ws = warehouse(spark, sf_dir)
-    new_name = ws.publish(BUCKETED_TABLE["bucketed_orders"].base(sf_dir))
-    write_bucketed(merged, new_name, os.path.join(wh, new_name), "o_orderkey")
-    ws.layouts["bucketed_orders"] = new_name
-    return new_name
+    return BUCKETED_TABLE["bucketed_orders"].publish(
+        spark, sf_dir, kept.unionByName(delta_orders)
+    )
 
 
 def _lineitem_with_derived(li: DataFrame) -> DataFrame:
@@ -337,12 +345,11 @@ def _deploy_pair(
     table names."""
     ws = warehouse(spark, sf_dir)
     if not set(pair) <= ws.layouts.keys():
-        _tag, wh = _layout_paths(sf_dir)
-        names = [deploy_name(spark, sf_dir, BUCKETED_TABLE[n].base(sf_dir)) for n in pair]
+        tables = [BUCKETED_TABLE[n] for n in pair]
+        names = [deploy_name(spark, sf_dir, b.base(sf_dir)) for b in tables]
         run_parallel(*(
-            (f"deploy: {n}", lambda df=df, name=name, key=BUCKETED_TABLE[n].key:
-                write_bucketed(df, name, os.path.join(wh, name), key))
-            for n, name, df in zip(pair, names, frames())
+            (f"deploy: {b.name}", partial(b.write, sf_dir, df, name))
+            for b, name, df in zip(tables, names, frames())
         ))
         ws.layouts.update(zip(pair, names))
     return ws.layouts[pair[0]], ws.layouts[pair[1]]
@@ -460,7 +467,6 @@ def refresh_order_revenue_rollup(
     identically (group key instead of order key); proven equivalent
     to a from-scratch rebuild in tests/test_bucketing.py.
     """
-    tag, wh = _layout_paths(sf_dir)
     roll_name, den_name = order_revenue_projection(spark, sf_dir)
     # ``prejoined`` (round 13): the shared checkpointed delta frame —
     # grouping ignores its extra denorm columns, so the delta rollup is
@@ -507,11 +513,7 @@ def refresh_order_revenue_rollup(
             + F.coalesce(F.col("d.n_items"), F.lit(0))
         ).alias("n_items"),
     )
-    ws = warehouse(spark, sf_dir)
-    new_name = ws.publish(roll_name)
-    write_bucketed(merged, new_name, os.path.join(wh, new_name), "l_orderkey")
-    ws.layouts["order_revenue_rollup"] = new_name
-    return new_name, den_name
+    return BUCKETED_TABLE["order_revenue_rollup"].publish(spark, sf_dir, merged), den_name
 
 
 def refresh_orders_denorm(
@@ -537,7 +539,6 @@ def refresh_orders_denorm(
     no stored pre-image). ``has_update=None`` probes; refresh_warehouse
     passes its conflict-detection answer. Proven upsert-equal to a
     from-scratch rebuild in tests/test_bucketing.py."""
-    tag, wh = _layout_paths(sf_dir)
     roll_name, den_name = order_revenue_projection(spark, sf_dir)
     delta_denorm = denorm_join(spark, sf_dir, delta_orders)
     stored = spark.table(den_name)
@@ -568,11 +569,7 @@ def refresh_orders_denorm(
         delta_orders.select("o_orderkey").distinct(), "o_orderkey", "left_anti"
     )
     merged = kept.unionByName(delta_denorm)
-    ws = warehouse(spark, sf_dir)
-    new_name = ws.publish(den_name)
-    write_bucketed(merged, new_name, os.path.join(wh, new_name), "o_orderkey")
-    ws.layouts["orders_denorm"] = new_name
-    return roll_name, new_name
+    return roll_name, BUCKETED_TABLE["orders_denorm"].publish(spark, sf_dir, merged)
 
 
 def pricing_cube_table(spark: SparkSession, sf_dir: str) -> str:

@@ -346,6 +346,35 @@ def test_incremental_denorm_refresh_equals_rebuild(spark, sf_dir):
         )
 
 
+def test_refreshed_versions_are_numbered_from_the_base_name(spark, sf_dir):
+    """A merge refresh of an already refreshed rollup or denorm table
+    publishes ``<base>_v<n>``: the version name does not grow by one
+    suffix per refresh (which would overrun the file-name limit of a
+    long-lived warehouse)."""
+    from bigdataproj_spark.sources.bucketed import (
+        BUCKETED_TABLE,
+        order_revenue_projection,
+        refresh_order_revenue_rollup,
+        refresh_orders_denorm,
+    )
+
+    base = order_revenue_projection(spark, sf_dir)
+    # redelivered existing rows: both refreshes take the merge path
+    li = table(spark, sf_dir, "lineitem").limit(2)
+    o = table(spark, sf_dir, "orders").limit(2)
+    try:
+        for _ in range(2):
+            roll, _ = refresh_order_revenue_rollup(spark, sf_dir, li)
+            _, den = refresh_orders_denorm(spark, sf_dir, o, has_update=True)
+        for name, key in ((roll, "order_revenue_rollup"), (den, "orders_denorm")):
+            stem, n = name.rsplit("_v", 1)
+            assert (stem, n.isdigit()) == (BUCKETED_TABLE[key].base(sf_dir), True)
+    finally:
+        warehouse(spark, sf_dir).layouts.update(
+            order_revenue_rollup=base[0], orders_denorm=base[1]
+        )
+
+
 def test_incremental_star_date_cube_refresh_equals_rebuild(spark, sf_dir):
     """Delta-merge maintenance of the star-by-date cube must equal a
     from-scratch rebuild bit-for-bit. Delta rows reuse existing
